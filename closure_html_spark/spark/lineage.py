@@ -146,7 +146,9 @@ def run_extraction_with_lineage(spark: SparkSession, pages: DataFrame,
                  .filter(F.col("bucket").isin(group))
                  .groupBy("bucket")
                  .agg(F.count(F.lit(1)).alias("output_count"),
-                      F.sum("n_warns").alias("warn_count"))
+                      # a failed doc carries n_warns = -1: not a warning
+                      F.sum(F.when(F.col("n_warns") >= 0, F.col("n_warns")))
+                      .alias("warn_count"))
                  .collect())
         # input counts scan only the pruned url column, never the html
         inputs = {r["bucket"]: r["c"] for r in

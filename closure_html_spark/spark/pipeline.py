@@ -101,9 +101,6 @@ def _doc_links_base(doc, want_anchors: bool = True) \
     return out, anchors, base
 
 
-def _doc_links(doc) -> list[str]:
-    return _doc_links_base(doc)[0]
-
 EXTRACT_RESULT_COLS = ", ".join(f"{k} {v}" for k, v in RESULT_COL_DDL.items())
 
 # main_text reassembled JVM-side from kept spans: the text bytes cross the

@@ -115,3 +115,24 @@ def test_resume_cleans_partial_bucket_output(spark, pages, tmp_path_factory):
     final = spark.read.parquet(f"{out}/extracted")
     assert final.count() == n_full
     assert final.select("url").distinct().count() == n_full
+
+
+def test_lineage_failed_doc_does_not_lower_warn_count(spark, tmp_path_factory):
+    """A failed document carries n_warns = -1 (null html: bytes(None)
+    raises, so the row is marked error:TypeError).  The manifest's
+    warn_count sums only the real warnings of the other documents."""
+    out = str(tmp_path_factory.mktemp("lineage_failed"))
+    rows = [("https://a.example/soup",
+             bytearray(b"<table><td>x<ul>soup</table></p></b>")),
+            ("https://a.example/null", None)]
+    df = spark.createDataFrame(rows, "url string, html binary")
+    run_extraction_with_lineage(spark, df, out, n_buckets=1)
+    ext = {r["url"]: r for r in
+           spark.read.parquet(f"{out}/extracted").collect()}
+    assert ext["https://a.example/null"]["charset"] == "error:TypeError"
+    assert ext["https://a.example/null"]["n_warns"] == -1
+    warns = ext["https://a.example/soup"]["n_warns"]
+    assert warns > 0
+    (man,) = spark.read.parquet(f"{out}/_lineage").collect()
+    assert (man["input_count"], man["output_count"]) == (2, 2)
+    assert man["warn_count"] == warns

@@ -277,3 +277,36 @@ def test_out_batch_rows_coalescing_identical(spark):
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", cap)
     assert [tuple(r) for r in a] == [tuple(r) for r in b]
     assert len(a) == 64
+
+
+def test_worker_keeps_stat_checked_invalidate_caches(spark):
+    """A worker that has run an extract_pages task carries the package's
+    stat-checked zipimporter.invalidate_caches into its later tasks, so
+    PySpark's per-task importlib.invalidate_caches() no longer re-parses
+    pyspark.zip's directory.  The probe itself never imports the package:
+    it only reports what an earlier task on the same worker installed."""
+    rows = [(f"u{i}", bytearray(f"<p>doc {i}</p>".encode()))
+            for i in range(8)]
+    df = spark.createDataFrame(rows, "url string, html binary") \
+        .repartition(4)
+    assert extract_pages(df).count() == 8
+
+    def probe(batches):
+        import sys
+        import zipimport
+
+        import pyarrow as pa
+        for _ in batches:
+            pass
+        fn = zipimport.zipimporter.invalidate_caches
+        yield pa.RecordBatch.from_pydict({
+            "reused": ["closure_html_spark" in sys.modules],
+            "impl": [f"{fn.__module__}.{fn.__qualname__}"]})
+
+    got = (spark.range(4).repartition(4)
+           .mapInArrow(probe, "reused boolean, impl string")
+           .collect())
+    reused = [r for r in got if r["reused"]]
+    assert reused, f"no probe task ran on a reused worker: {got}"
+    assert {r["impl"] for r in reused} == \
+        {"closure_html_spark.zipcache.invalidate_caches"}
