@@ -148,12 +148,10 @@ def run_extraction(n_threads: int) -> dict:
     # new session pays JIT/codegen warmup that a long-running production
     # job amortizes away, and this VM's throttle can still clip one run --
     # a third repeat keeps the recorded leg in the linear region
-    obr = os.environ.get("SPARK_GRAFT_OUT_BATCH_ROWS")
-    obr = int(obr) if obr else None
     walls = []
     for _ in range(3):
         t0 = time.time()
-        ext = extract_pages(pages, id_cols=("url",), out_batch_rows=obr)
+        ext = extract_pages(pages, id_cols=("url",))
         ext.agg(F.sum(F.length("extracted_text")),
                 F.sum(F.size("spans")), F.sum("n_nodes")).collect()
         walls.append(round(time.time() - t0, 3))

@@ -119,7 +119,7 @@ def resize_media(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
     (width/height 0, missing n_frames, NULL fields) must not kill the
     whole Arrow batch/stage -- data errors emit a marker row with
     err='error:TypeName: msg' and NULL outputs, matching the
-    extract_pages never-kill-the-batch convention (pipeline.py:230)."""
+    extract_pages never-kill-the-batch convention (pipeline._parsed_docs)."""
     import numpy as np
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

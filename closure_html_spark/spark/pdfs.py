@@ -78,7 +78,7 @@ def pdf_extract_pages(df: DataFrame,
             texts, n_streams, errors = [], [], []
             for raw in raws:
                 # staged locals + single append (same invariant as
-                # pipeline._extract_pages_arrow)
+                # pipeline.extract_pages)
                 try:
                     res = extract_pdf_text(bytes(raw) if raw is not None
                                            else b"")

@@ -1,10 +1,14 @@
 """The extraction pipeline: pages -> (url, extracted_text, spans, ...).
 
-Spark shape (SURVEY.md §3.1 "Spark version"): a single narrow stage --
-scan -> iterator-style mapInPandas (Arrow-batched, no per-row Python
-marshalling at the row level; the parser itself is the per-document state
-machine) -> result columns.  No shuffle is introduced by extraction itself;
-repartitioning for skew is the caller's choice (see lineage.py).
+Spark shape (SURVEY.md §3.1 "Spark version"): a single narrow stage per
+document family -- scan -> iterator-style mapInArrow (Arrow-batched, no
+per-row Python marshalling at the row level; the parser itself is the
+per-document state machine) -> result columns assembled as pyarrow
+arrays.  Every stage runs its per-document work through one loop,
+_parsed_docs, which applies the byte cap, the charset seeding and the
+never-kill-the-batch error handling.  No shuffle is introduced by
+extraction itself; repartitioning for skew is the caller's choice (see
+lineage.py).
 
 DTD tables are loaded once per executor process from the packaged dtd.json
 (module-level cache in closure_html_spark.dtd) -- the broadcast-variable
@@ -13,9 +17,6 @@ equivalent for static build artifacts shipped via --py-files.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -101,8 +102,6 @@ def _doc_links_base(doc, want_anchors: bool = True) \
     return out, anchors, base
 
 
-EXTRACT_RESULT_COLS = ", ".join(f"{k} {v}" for k, v in RESULT_COL_DDL.items())
-
 # main_text reassembled JVM-side from kept spans: the text bytes cross the
 # Python->Arrow boundary once (extracted_text), not twice
 _MAIN_TEXT_EXPR = (
@@ -111,26 +110,82 @@ _MAIN_TEXT_EXPR = (
 )
 
 
-def _extract_schema(df: DataFrame, id_cols: tuple[str, ...]) -> str:
-    id_fields = []
-    for name, dtype in df.dtypes:
-        if name in id_cols:
-            id_fields.append(f"{name} {dtype}")
-    return ", ".join(id_fields) + ", " + EXTRACT_RESULT_COLS
-
-
 MAX_DOC_BYTES_DEFAULT = 64 * 1024 * 1024  # 64 MiB
+
+# extract_pages' row for a document whose processing raised, in the order
+# its work() returns: title, extracted_text, spans, links, anchors, base,
+# n_nodes, n_warns, warn_levels
+_ERROR_ROW = ("", "", (), (), (), None, 0, -1, (0, 0, 0, 0, 0))
+
+
+def _parsed_docs(batch, default_charset: str, work,
+                 max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT):
+    """The per-document loop of every parse stage: yields exactly one
+    (idx, result, charset) per row of the Arrow `batch`, in order, where
+    result is `work(text)` on the row's decoded `html`.
+
+    bytes(), the byte cap, decode_html and `work` run inside one try, so
+    one bad document never kills the batch: on an exception result is
+    None and charset is 'error:<Type>'.  A document past `max_doc_bytes`
+    is decoded and worked from its prefix and marked 'error:oversize'.
+    If the batch has a `content_type` column, its charset parameter seeds
+    the decoder (a <meta> charset still overrides it, charset.py)."""
+    htmls = batch.column("html").to_pylist()
+    cts = (batch.column("content_type").to_pylist()
+           if "content_type" in batch.schema.names else None)
+    for idx, raw in enumerate(htmls):
+        try:
+            raw_b = bytes(raw)
+            oversize = max_doc_bytes is not None and len(raw_b) > max_doc_bytes
+            if oversize:
+                raw_b = raw_b[:max_doc_bytes]
+            text, cs = decode_html(raw_b, default_charset,
+                                   cts[idx] if cts is not None else None)
+            result = work(text)
+        except Exception as exc:  # never kill the batch for one doc
+            yield idx, None, f"error:{type(exc).__name__}"
+            continue
+        yield idx, result, "error:oversize" if oversize else cs
+
+
+def _stage_schema(df: DataFrame, id_cols: tuple[str, ...], result_ddl: str):
+    """(id column names in input order, output DDL, its Arrow schema) of
+    a stage that passes `id_cols` through ahead of `result_ddl`.  The
+    Arrow schema is resolved on the driver (it needs the JVM DDL parser)
+    and captured by the stage function."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    ids = [name for name, _ in df.dtypes if name in id_cols]
+    ddl = ", ".join([f"{n} {t}" for n, t in df.dtypes if n in id_cols]
+                    + [result_ddl])
+    return ids, ddl, to_arrow_schema(StructType.fromDDL(ddl))
+
+
+def _out_batch(batch, ids: list[str], arrays: list, arrow_schema, take=None):
+    """The output batch: the id columns of `batch` (zero-copy, or gathered
+    C++-side by the `take` indices for exploded stages), then `arrays`."""
+    import pyarrow as pa
+    id_arrays = [batch.column(c) if take is None
+                 else batch.column(c).take(take) for c in ids]
+    out = pa.RecordBatch.from_arrays(id_arrays + arrays,
+                                     names=arrow_schema.names)
+    # nested field names differ only cosmetically (item vs element); the
+    # cast is metadata-level, buffers are shared
+    return out.cast(arrow_schema, safe=False)
 
 
 def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                   default_charset: str = "utf-8",
-                  engine: str = "arrow",
                   columns: tuple[str, ...] | None = None,
-                  packed_spans: bool = False,
-                  out_batch_rows: int | None = None,
                   max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
                   ) -> DataFrame:
     """Parse + extract every page.  Keeps `id_cols` as passthrough keys.
+
+    One mapInArrow stage assembling the output columns directly as
+    pyarrow buffers: strings go Python->Arrow once, spans/warn_levels are
+    built as ListArrays from flat primitive arrays (no per-span dict
+    objects), and id columns pass through zero-copy from the input batch.
 
     max_doc_bytes: per-document byte cap (default 64 MiB, None disables).
     The session's Arrow batch caps bound the BATCH, but one pathological
@@ -141,20 +196,13 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     cap and parsed normally (the reference's own buffered xstream reads
     never require whole-document lookahead), with the row marked
     charset='error:oversize' and one level-5 parse warning counted --
-    monitoring queries see exactly how many docs were clipped.
+    monitoring queries see exactly how many docs were clipped.  A page
+    whose processing raises yields one row with charset='error:<Type>',
+    n_warns=-1 and empty payloads.
 
     If the input has a `content_type` column (WARC-style HTTP header), its
     charset parameter seeds the decoder; a <meta> charset still overrides
     it, mirroring the reference's mid-stream decoder switch (charset.py).
-
-    engine="arrow" (default) runs the stage as mapInArrow, assembling the
-    output columns directly as pyarrow buffers: strings go Python->Arrow
-    once, spans/warn_levels are built as ListArrays from flat primitive
-    arrays (no per-span dict objects), and id columns pass through
-    zero-copy from the input batch.  engine="pandas" keeps the round-2
-    mapInPandas path (object-dtype pandas -> Arrow re-conversion per
-    column) as the A/B baseline; results are identical
-    (tests/test_spark_pipeline_edge.py).
 
     columns: optional subset of RESULT_COL_DDL keys -- the metadata-now /
     text-lazily split.  Column pruning cannot reach inside a Python map
@@ -163,139 +211,11 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     columns=("warn_levels",) skips building the text payload entirely
     (and skips the span scorer when no text column is requested).
     main_text is only attached when extracted_text AND spans are present.
-    Requires engine="arrow".  columns=None builds _DEFAULT_COLS, which
-    EXCLUDES links/base: they need a second full-DOM walk (the span
-    scorer's walk starts at BODY and cannot see HEAD, where BASE lives),
-    so only frontier consumers passing columns=("links", "base") pay it.
-    The pandas engine, kept as the value-parity baseline, always emits
-    every column.
-
-    packed_spans=True (arrow only, SCALE.md frontier #2 prototype) replaces
-    the `spans` list-of-struct column with `spans_packed binary`: all spans
-    of a doc packed little-endian as (int32 start, int32 end, float64
-    score, int32 keep) = 20 B/span, built by one numpy tobytes() per batch
-    -- one Arrow child buffer instead of four + offsets.  The consumer
-    decodes with closure_html_spark.spark.pipeline.unpack_spans (numpy) or
-    reads span COUNT as length(spans_packed)/20 JVM-side.  main_text is
-    not attached (it needs the struct form).
-
-    out_batch_rows (arrow only, SCALE.md frontier #2 lever): coalesce
-    OUTPUT batches to at least this many rows before yielding -- fewer,
-    larger Arrow IPC messages to the JVM (input batch sizing is capped by
-    session.py's row+byte bounds and is not affected; peak worker memory
-    grows by the buffered output columns, which are ~1x input text)."""
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-    if columns is not None and engine != "arrow":
-        raise ValueError("columns= projection requires engine='arrow'")
-    if packed_spans and engine != "arrow":
-        raise ValueError("packed_spans requires engine='arrow'")
-    if out_batch_rows is not None and engine != "arrow":
-        raise ValueError("out_batch_rows requires engine='arrow'")
-    if engine == "arrow":
-        return _extract_pages_arrow(df, id_cols, default_charset, columns,
-                                    packed_spans, out_batch_rows,
-                                    max_doc_bytes)
-    schema = _extract_schema(df, id_cols)
-    has_ct = "content_type" in df.columns
-    cols = list(id_cols) + ["html"] + (["content_type"] if has_ct else [])
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        dtd = load_dtd()
-        for pdf in batches:
-            out = {c: pdf[c] for c in id_cols}
-            titles, texts, spans_col, links_col, base_col = [], [], [], [], []
-            anchors_col = []
-            n_nodes, n_warns, warn_levels, charsets = [], [], [], []
-            cts = pdf["content_type"] if has_ct else None
-            for idx, raw in enumerate(pdf["html"]):
-                # stage every per-doc value in locals, append once below:
-                # an exception anywhere in the try can never leave the
-                # column lists at different lengths (round-4 verdict #3)
-                try:
-                    raw_b = bytes(raw)
-                    oversize = (max_doc_bytes is not None
-                                and len(raw_b) > max_doc_bytes)
-                    if oversize:
-                        raw_b = raw_b[:max_doc_bytes]
-                    text, cs = decode_html(
-                        raw_b, default_charset,
-                        cts.iloc[idx] if cts is not None else None)
-                    doc = parse_html(dtd, text)
-                    res = extract_main_content(doc, dtd)
-                    title_v = res["title"]
-                    text_v = res["extracted_text"]
-                    spans_v = [
-                        {"start": s, "end": e, "score": sc, "keep": k}
-                        for s, e, sc, k in res["spans"]]
-                    links_v, anchors_v, base_v = _doc_links_base(doc)
-                    nn, nw = len(doc.name), len(doc.warnings)
-                    # parse-warn levels 1-5 (sgml-parse.lisp:285-292) as
-                    # per-doc counters -> aggregable corpus metrics
-                    lv = [0, 0, 0, 0, 0]
-                    for level, _ in doc.warnings:
-                        if 1 <= level <= 5:
-                            lv[level - 1] += 1
-                    if oversize:
-                        cs = "error:oversize"
-                        lv[4] += 1
-                        nw += 1
-                except Exception as exc:  # never kill the batch for one doc
-                    title_v = text_v = ""
-                    spans_v, links_v, anchors_v, base_v = [], [], [], None
-                    nn, nw = 0, -1
-                    lv = [0, 0, 0, 0, 0]
-                    cs = f"error:{type(exc).__name__}"
-                titles.append(title_v)
-                texts.append(text_v)
-                spans_col.append(spans_v)
-                links_col.append(links_v)
-                anchors_col.append(anchors_v)
-                base_col.append(base_v)
-                n_nodes.append(nn)
-                n_warns.append(nw)
-                warn_levels.append(lv)
-                charsets.append(cs)
-            out.update(title=titles, extracted_text=texts,
-                       spans=spans_col, links=links_col,
-                       anchors=anchors_col, base=base_col,
-                       n_nodes=n_nodes,
-                       n_warns=n_warns, warn_levels=warn_levels,
-                       charset=charsets)
-            yield pd.DataFrame(out)
-
-    return (df.select(*cols).mapInPandas(fn, schema)
-            .withColumn("main_text", F.expr(_MAIN_TEXT_EXPR)))
-
-
-_SPAN_PACK_DTYPE = [("start", "<i4"), ("end", "<i4"), ("score", "<f8"),
-                    ("keep", "<i4")]  # 20 B per span, little-endian
-
-
-def unpack_spans(buf: bytes) -> list[tuple[int, int, float, bool]]:
-    """Decode one spans_packed value back to (start, end, score, keep)
-    tuples (numpy structured-array view, zero parsing loop)."""
-    import numpy as np
-    rec = np.frombuffer(buf, dtype=_SPAN_PACK_DTYPE)
-    return [(int(r["start"]), int(r["end"]), float(r["score"]),
-             bool(r["keep"])) for r in rec]
-
-
-def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
-                         default_charset: str,
-                         columns: tuple[str, ...] | None = None,
-                         packed_spans: bool = False,
-                         out_batch_rows: int | None = None,
-                         max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
-                         ) -> DataFrame:
-    """mapInArrow body of extract_pages: output-column materialization is
-    the stage's dominant cost after the round-2 parser fusion (~3x parse
-    CPU, SCALE.md frontier #1), and most of it was pandas object-dtype
-    round-tripping.  Here every result column is assembled once, directly
-    in Arrow layout; a `columns` subset skips unrequested payloads."""
+    columns=None builds _DEFAULT_COLS, which EXCLUDES links/base: they
+    need a second full-DOM walk (the span scorer's walk starts at BODY
+    and cannot see HEAD, where BASE lives), so only frontier consumers
+    passing columns=("links", "base") pay it."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     if columns is None:
         wanted = _DEFAULT_COLS
@@ -306,31 +226,41 @@ def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
         wanted = tuple(k for k in RESULT_COL_DDL if k in columns)
     # the span scorer only runs when some text-derived column is requested
     need_extract = bool({"title", "extracted_text", "spans"} & set(wanted))
-    pack = packed_spans and "spans" in wanted
+    need_anchors = "anchors" in wanted
+    need_links = bool({"links", "anchors", "base"} & set(wanted))
 
-    # id columns in the order the input declares them, then result subset
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    id_ddl = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-
-    def _ddl(k):
-        if k == "spans" and pack:
-            return "spans_packed binary"
-        return f"{k} {RESULT_COL_DDL[k]}"
-
-    schema = id_ddl + ", " + ", ".join(_ddl(k) for k in wanted)
-    # resolved on the driver (needs the JVM DDL parser); captured by fn
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, ", ".join(f"{k} {RESULT_COL_DDL[k]}" for k in wanted))
     has_ct = "content_type" in df.columns
     cols = ids + ["html"] + (["content_type"] if has_ct else [])
     i32 = pa.int32()
 
-    def _fn_per_batch(batches):
+    def fn(batches):
         dtd = load_dtd()
+
+        def work(text):
+            doc = parse_html(dtd, text)
+            if need_extract:
+                res = extract_main_content(doc, dtd, with_main_text=False)
+                title_v, text_v = res["title"], res["extracted_text"]
+                spans_v = res["spans"]
+            else:
+                title_v = text_v = ""
+                spans_v = ()
+            links_v, anchors_v, base_v = (
+                _doc_links_base(doc, want_anchors=need_anchors)
+                if need_links else ((), (), None))
+            # parse-warn levels 1-5 (sgml-parse.lisp:285-292) as per-doc
+            # counters -> aggregable corpus metrics
+            lv = [0, 0, 0, 0, 0]
+            for level, _ in doc.warnings:
+                if 1 <= level <= 5:
+                    lv[level - 1] += 1
+            return (title_v, text_v, spans_v, links_v, anchors_v, base_v,
+                    len(doc.name), len(doc.warnings), lv)
+
         for batch in batches:
-            htmls = batch.column("html").to_pylist()
-            cts = (batch.column("content_type").to_pylist()
-                   if has_ct else None)
-            n = len(htmls)
+            n = batch.num_rows
             titles, texts, charsets = [], [], []
             n_nodes, n_warns = [], []
             # spans + warn_levels + links as flat child arrays + offsets:
@@ -341,57 +271,13 @@ def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
             lk_off, lk_flat, an_flat = [0], [], []
             bases = []
             wl_flat = []
-            need_links = "links" in wanted
-            need_anchors = "anchors" in wanted
-            need_base = "base" in wanted
-            for idx in range(n):
-                # stage every per-doc value in locals inside the try and
-                # append in ONE block after it: the flat-array + offsets
-                # layout is only sound if every column advances exactly
-                # once per doc, and an exception raised between appends
-                # would shift every later row in the batch (round-4
-                # verdict #3) -- structurally impossible this way
-                try:
-                    raw_b = bytes(htmls[idx])
-                    oversize = (max_doc_bytes is not None
-                                and len(raw_b) > max_doc_bytes)
-                    if oversize:
-                        raw_b = raw_b[:max_doc_bytes]
-                    text, cs = decode_html(
-                        raw_b, default_charset,
-                        cts[idx] if cts is not None else None)
-                    doc = parse_html(dtd, text)
-                    if need_extract:
-                        res = extract_main_content(doc, dtd,
-                                                   with_main_text=False)
-                        title_v = res["title"]
-                        text_v = res["extracted_text"]
-                        spans_v = res["spans"]
-                    else:
-                        title_v = text_v = ""
-                        spans_v = ()
-                    if need_links or need_anchors or need_base:
-                        links_v, anchors_v, base_v = _doc_links_base(
-                            doc, want_anchors=need_anchors)
-                    else:
-                        links_v, anchors_v, base_v = (), (), None
-                    nn, nw = len(doc.name), len(doc.warnings)
-                    lv = (0, 0, 0, 0, 0)
-                    if nw or oversize:
-                        lv = [0, 0, 0, 0, 0]
-                        for level, _ in doc.warnings:
-                            if 1 <= level <= 5:
-                                lv[level - 1] += 1
-                    if oversize:
-                        cs = "error:oversize"
-                        lv[4] += 1
-                        nw += 1
-                except Exception as exc:  # never kill the batch for one doc
-                    title_v = text_v = ""
-                    spans_v, links_v, anchors_v, base_v = (), (), (), None
-                    nn, nw = 0, -1
-                    lv = (0, 0, 0, 0, 0)
-                    cs = f"error:{type(exc).__name__}"
+            for _, row, cs in _parsed_docs(batch, default_charset, work,
+                                           max_doc_bytes):
+                (title_v, text_v, spans_v, links_v, anchors_v, base_v,
+                 nn, nw, lv) = row or _ERROR_ROW
+                if cs == "error:oversize":
+                    lv[4] += 1
+                    nw += 1
                 titles.append(title_v)
                 texts.append(text_v)
                 for s, e, sc, k in spans_v:
@@ -413,31 +299,7 @@ def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
                 built["title"] = pa.array(titles, pa.string())
             if "extracted_text" in wanted:
                 built["extracted_text"] = pa.array(texts, pa.string())
-            if "spans" in wanted and pack:
-                import numpy as np
-                rec = np.empty(len(sp_start), dtype=_SPAN_PACK_DTYPE)
-                rec["start"] = sp_start
-                rec["end"] = sp_end
-                rec["score"] = sp_score
-                rec["keep"] = sp_keep
-                # one value buffer + scaled offsets: a BinaryArray built
-                # from raw buffers, no per-doc bytes objects.  Offsets are
-                # computed in int64 and checked before the int32 cast --
-                # silent wrap past ~107M spans/batch would corrupt every
-                # row (unreachable under the session's batch caps, but the
-                # caps are config, not law)
-                off = np.asarray(sp_off, dtype=np.int64) * rec.itemsize
-                if off[-1] > np.iinfo(np.int32).max:
-                    raise OverflowError(
-                        f"packed-spans batch needs {off[-1]} offset bytes; "
-                        "int32 BinaryArray offsets overflow -- lower the "
-                        "Arrow batch size")
-                off = off.astype(np.int32)
-                built["spans"] = pa.Array.from_buffers(
-                    pa.binary(), n,
-                    [None, pa.py_buffer(off.tobytes()),
-                     pa.py_buffer(rec.tobytes())])
-            elif "spans" in wanted:
+            if "spans" in wanted:
                 built["spans"] = pa.ListArray.from_arrays(
                     pa.array(sp_off, i32),
                     pa.StructArray.from_arrays(
@@ -465,38 +327,11 @@ def _extract_pages_arrow(df: DataFrame, id_cols: tuple[str, ...],
                     pa.array(wl_flat, i32))
             if "charset" in wanted:
                 built["charset"] = pa.array(charsets, pa.string())
-            arrays = ([batch.column(c) for c in ids] +  # zero-copy ids
-                      [built[k] for k in wanted])
-            out = pa.RecordBatch.from_arrays(arrays,
-                                             names=arrow_schema.names)
-            # nested field names differ only cosmetically (item vs
-            # element); cast is metadata-level, buffers are shared
-            yield out.cast(arrow_schema, safe=False)
-
-    if out_batch_rows is None:
-        fn = _fn_per_batch
-    else:
-        def fn(batches):
-            def combine(bufs):
-                if len(bufs) == 1:
-                    return bufs[0]
-                merged = pa.Table.from_batches(bufs).combine_chunks() \
-                    .to_batches()
-                assert len(merged) == 1
-                return merged[0]
-
-            buf, rows = [], 0
-            for b in _fn_per_batch(batches):
-                buf.append(b)
-                rows += b.num_rows
-                if rows >= out_batch_rows:
-                    yield combine(buf)
-                    buf, rows = [], 0
-            if buf:
-                yield combine(buf)
+            yield _out_batch(batch, ids, [built[k] for k in wanted],
+                             arrow_schema)
 
     result = df.select(*cols).mapInArrow(fn, schema)
-    if "extracted_text" in wanted and "spans" in wanted and not pack:
+    if "extracted_text" in wanted and "spans" in wanted:
         result = result.withColumn("main_text", F.expr(_MAIN_TEXT_EXPR))
     return result
 
@@ -506,144 +341,92 @@ def serialize_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     """Parse + re-serialize every page to canonical escaped HTML
     (the reference's clean-html round trip, doc/examples.xml:60-77).
     mapInArrow: html_out is the largest string column in the system
-    (~1x input), so it goes Python->Arrow exactly once; ids zero-copy."""
+    (~1x input), so it goes Python->Arrow exactly once; ids zero-copy.
+    A document whose processing raises yields html_out=''."""
     import pyarrow as pa
 
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", html_out string"
-    cols = ids + ["html"]
+    ids, schema, arrow_schema = _stage_schema(df, id_cols,
+                                              "html_out string")
 
     def fn(batches):
         dtd = load_dtd()
-        for batch in batches:
-            outs = []
-            for raw in batch.column("html").to_pylist():
-                try:
-                    text, _ = decode_html(bytes(raw), default_charset)
-                    outs.append(serialize_doc(parse_html(dtd, text), dtd))
-                except Exception:
-                    outs.append("")
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in ids]
-                + [pa.array(outs, pa.string())],
-                names=ids + ["html_out"])
 
-    return df.select(*cols).mapInArrow(fn, schema)
+        def work(text):
+            return serialize_doc(parse_html(dtd, text), dtd)
+
+        for batch in batches:
+            outs = [out if out is not None else ""
+                    for _, out, _ in _parsed_docs(batch, default_charset,
+                                                  work)]
+            yield _out_batch(batch, ids, [pa.array(outs, pa.string())],
+                             arrow_schema)
+
+    return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
 def nodes_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-             default_charset: str = "utf-8",
-             engine: str = "arrow") -> DataFrame:
+             default_charset: str = "utf-8") -> DataFrame:
     """Exploded `nodes` table: one row per DOM node -- the relational query
     surface over parsed documents (SURVEY.md §2.8 / FIXTURES.md §2).
 
-    engine="arrow" (default) assembles the per-node columns as flat
-    primitive lists -> pyarrow arrays in one pass (attrs as a MapArray
-    from flat key/value child arrays + offsets), and replicates the id
-    columns with a C++-side take() gather -- no per-node Python dicts, no
-    pandas object columns (round-3 verdict wrong #2: a 50 KB page explodes
-    to ~10^3 nodes; building each as a dict dominated the stage).
-    engine="pandas" keeps the round-2 path as the value-parity baseline
-    (tests/test_spark_pipeline_edge.py::test_nodes_of_engines_identical)."""
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = (id_fields + ", node_id int, parent_id int, depth int, "
-              "name string, attrs map<string,string>, text string")
-    cols = list(id_cols) + ["html"]
+    The per-node columns are assembled as flat primitive lists -> pyarrow
+    arrays in one pass (attrs as a MapArray from flat key/value child
+    arrays + offsets), and the id columns are replicated with a C++-side
+    take() gather -- no per-node Python dicts (round-3 verdict wrong #2: a
+    50 KB page explodes to ~10^3 nodes; building each as a dict dominated
+    the stage).  A document whose processing raises contributes zero
+    rows."""
+    import pyarrow as pa
 
-    if engine == "arrow":
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, "node_id int, parent_id int, depth int, name string, "
+        "attrs map<string,string>, text string")
+    i32 = pa.int32()
 
-        ids = [name for name, _ in df.dtypes if name in id_cols]
-        arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-        i32 = pa.int32()
-
-        def afn(batches):
-            dtd = load_dtd()
-            for batch in batches:
-                htmls = batch.column("html").to_pylist()
-                row_idx = []          # input-row index per output node row
-                node_id, parent_id, depth_c = [], [], []
-                name_c, text_c = [], []
-                at_off, at_k, at_v = [0], [], []
-                for idx in range(len(htmls)):
-                    try:
-                        text, _ = decode_html(bytes(htmls[idx]),
-                                              default_charset)
-                        doc = parse_html(dtd, text)
-                    except Exception:
-                        continue
-                    # renumber pre-order from the post-mortem root
-                    remap = {}
-                    for n, d in doc.walk():
-                        remap[n] = len(remap)
-                    for n, d in doc.walk():
-                        row_idx.append(idx)
-                        node_id.append(remap[n])
-                        p = doc.parent[n]
-                        parent_id.append(remap.get(p, -1))
-                        depth_c.append(d)
-                        name_c.append(doc.name[n])
-                        # dict round-trip dedups repeated attr names (last
-                        # wins) -- matches the pandas path and Spark's
-                        # map-key uniqueness requirement
-                        ad = dict(doc.attrs[n]) if doc.attrs[n] else {}
-                        at_k.extend(ad.keys())
-                        at_v.extend(ad.values())
-                        at_off.append(len(at_k))
-                        text_c.append(doc.text[n])
-                take = pa.array(row_idx, i32)
-                out = pa.RecordBatch.from_arrays(
-                    [batch.column(c).take(take) for c in ids] + [
-                        pa.array(node_id, i32), pa.array(parent_id, i32),
-                        pa.array(depth_c, i32),
-                        pa.array(name_c, pa.string()),
-                        pa.MapArray.from_arrays(
-                            pa.array(at_off, i32),
-                            pa.array(at_k, pa.string()),
-                            pa.array(at_v, pa.string())),
-                        pa.array(text_c, pa.string())],
-                    names=arrow_schema.names)
-                yield out.cast(arrow_schema, safe=False)
-
-        return df.select(*cols).mapInArrow(afn, schema)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches):
         dtd = load_dtd()
-        for pdf in batches:
-            rows = {c: [] for c in cols[:-1]}
-            node_id, parent_id, depth_c, name_c, attrs_c, text_c = \
-                [], [], [], [], [], []
-            for idx in range(len(pdf)):
-                raw = pdf["html"].iloc[idx]
-                try:
-                    text, _ = decode_html(bytes(raw), default_charset)
-                    doc = parse_html(dtd, text)
-                except Exception:
+
+        def work(text):
+            return parse_html(dtd, text)
+
+        for batch in batches:
+            row_idx = []          # input-row index per output node row
+            node_id, parent_id, depth_c = [], [], []
+            name_c, text_c = [], []
+            at_off, at_k, at_v = [0], [], []
+            for idx, doc, _ in _parsed_docs(batch, default_charset, work):
+                if doc is None:
                     continue
                 # renumber pre-order from the post-mortem root
                 remap = {}
                 for n, d in doc.walk():
                     remap[n] = len(remap)
                 for n, d in doc.walk():
-                    for c in id_cols:
-                        rows[c].append(pdf[c].iloc[idx])
+                    row_idx.append(idx)
                     node_id.append(remap[n])
                     p = doc.parent[n]
                     parent_id.append(remap.get(p, -1))
                     depth_c.append(d)
                     name_c.append(doc.name[n])
-                    attrs_c.append(dict(doc.attrs[n]) if doc.attrs[n] else {})
+                    # dict round-trip dedups repeated attr names (last
+                    # wins) -- Spark's map-key uniqueness requirement
+                    ad = dict(doc.attrs[n]) if doc.attrs[n] else {}
+                    at_k.extend(ad.keys())
+                    at_v.extend(ad.values())
+                    at_off.append(len(at_k))
                     text_c.append(doc.text[n])
-            rows.update(node_id=node_id, parent_id=parent_id, depth=depth_c,
-                        name=name_c, attrs=attrs_c, text=text_c)
-            yield pd.DataFrame(rows)
+            yield _out_batch(batch, ids, [
+                pa.array(node_id, i32), pa.array(parent_id, i32),
+                pa.array(depth_c, i32),
+                pa.array(name_c, pa.string()),
+                pa.MapArray.from_arrays(
+                    pa.array(at_off, i32),
+                    pa.array(at_k, pa.string()),
+                    pa.array(at_v, pa.string())),
+                pa.array(text_c, pa.string())],
+                arrow_schema, take=pa.array(row_idx, i32))
 
-    return df.select(*cols).mapInPandas(fn, schema)
+    return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
 def with_url_bucket(df: DataFrame, num_buckets: int = 1024) -> DataFrame:
@@ -654,155 +437,99 @@ def with_url_bucket(df: DataFrame, num_buckets: int = 1024) -> DataFrame:
 
 
 def tokens_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8",
-              engine: str = "arrow") -> DataFrame:
+              default_charset: str = "utf-8") -> DataFrame:
     """Exploded `tokens` table (FIXTURES.md §2): the raw lexer output, one
     row per token -- the debugging/inspection surface for the tokenizer.
+    Same flat-array + MapArray + take() assembly as nodes_of (no
+    per-token Python dicts); a document whose processing raises
+    contributes zero rows."""
+    import pyarrow as pa
 
-    engine="arrow" (default) uses the same flat-array + MapArray + take()
-    assembly as nodes_of (no per-token Python dicts); engine="pandas"
-    keeps the original path as the value-parity baseline."""
     from ..parser.tokenizer import Tokenizer
-    if engine not in ("arrow", "pandas"):
-        raise ValueError(f"engine must be 'arrow' or 'pandas', got {engine!r}")
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = (id_fields + ", pos int, kind string, name string, "
-              "attrs map<string,string>, text string")
-    cols = list(id_cols) + ["html"]
 
-    if engine == "arrow":
-        import pyarrow as pa
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, "pos int, kind string, name string, "
+        "attrs map<string,string>, text string")
+    i32 = pa.int32()
 
-        ids = [name for name, _ in df.dtypes if name in id_cols]
-        arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
-        i32 = pa.int32()
-
-        def afn(batches):
-            dtd = load_dtd()
-            for batch in batches:
-                htmls = batch.column("html").to_pylist()
-                row_idx = []
-                pos_c, kind_c, name_c, text_c = [], [], [], []
-                at_off, at_k, at_v = [0], [], []
-                for idx in range(len(htmls)):
-                    try:
-                        text, _ = decode_html(bytes(htmls[idx]),
-                                              default_charset)
-                        toks = list(Tokenizer(text, dtd.entities).tokens())
-                    except Exception:
-                        continue
-                    for pos, tok in enumerate(toks):
-                        row_idx.append(idx)
-                        pos_c.append(pos)
-                        kind = tok[0]
-                        kind_c.append(kind)
-                        if kind in ("start", "empty"):
-                            name_c.append(tok[1])
-                            # dict round-trip dedups repeated attr names
-                            # (last wins), matching the pandas path and
-                            # Spark's map-key uniqueness requirement
-                            ad = {(a[0] if isinstance(a, tuple) else a):
-                                  (a[1] if isinstance(a, tuple) else "")
-                                  for a in tok[2]}
-                            at_k.extend(ad.keys())
-                            at_v.extend(ad.values())
-                            text_c.append(None)
-                        elif kind == "end":
-                            name_c.append(tok[1])
-                            text_c.append(None)
-                        elif kind == "eof":
-                            name_c.append(None)
-                            text_c.append(None)
-                        else:  # pcdata/comment/define/pi
-                            name_c.append(None)
-                            text_c.append(tok[1])
-                        at_off.append(len(at_k))
-                take = pa.array(row_idx, i32)
-                out = pa.RecordBatch.from_arrays(
-                    [batch.column(c).take(take) for c in ids] + [
-                        pa.array(pos_c, i32),
-                        pa.array(kind_c, pa.string()),
-                        pa.array(name_c, pa.string()),
-                        pa.MapArray.from_arrays(
-                            pa.array(at_off, i32),
-                            pa.array(at_k, pa.string()),
-                            pa.array(at_v, pa.string())),
-                        pa.array(text_c, pa.string())],
-                    names=arrow_schema.names)
-                yield out.cast(arrow_schema, safe=False)
-
-        return df.select(*cols).mapInArrow(afn, schema)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def fn(batches):
         dtd = load_dtd()
-        for pdf in batches:
-            rows = {c: [] for c in cols[:-1]}
-            pos_c, kind_c, name_c, attrs_c, text_c = [], [], [], [], []
-            for idx in range(len(pdf)):
-                try:
-                    text, _ = decode_html(bytes(pdf["html"].iloc[idx]),
-                                          default_charset)
-                    tk = Tokenizer(text, dtd.entities)
-                    toks = list(tk.tokens())
-                except Exception:
+
+        def work(text):
+            return list(Tokenizer(text, dtd.entities).tokens())
+
+        for batch in batches:
+            row_idx = []
+            pos_c, kind_c, name_c, text_c = [], [], [], []
+            at_off, at_k, at_v = [0], [], []
+            for idx, toks, _ in _parsed_docs(batch, default_charset, work):
+                if toks is None:
                     continue
                 for pos, tok in enumerate(toks):
-                    for c in id_cols:
-                        rows[c].append(pdf[c].iloc[idx])
+                    row_idx.append(idx)
                     pos_c.append(pos)
                     kind = tok[0]
                     kind_c.append(kind)
                     if kind in ("start", "empty"):
                         name_c.append(tok[1])
-                        attrs_c.append(
-                            {(a[0] if isinstance(a, tuple) else a):
-                             (a[1] if isinstance(a, tuple) else "")
-                             for a in tok[2]})
+                        # dict round-trip dedups repeated attr names (last
+                        # wins) -- Spark's map-key uniqueness requirement
+                        ad = {(a[0] if isinstance(a, tuple) else a):
+                              (a[1] if isinstance(a, tuple) else "")
+                              for a in tok[2]}
+                        at_k.extend(ad.keys())
+                        at_v.extend(ad.values())
                         text_c.append(None)
                     elif kind == "end":
                         name_c.append(tok[1])
-                        attrs_c.append({})
                         text_c.append(None)
                     elif kind == "eof":
                         name_c.append(None)
-                        attrs_c.append({})
                         text_c.append(None)
                     else:  # pcdata/comment/define/pi
                         name_c.append(None)
-                        attrs_c.append({})
                         text_c.append(tok[1])
-            rows.update(pos=pos_c, kind=kind_c, name=name_c, attrs=attrs_c,
-                        text=text_c)
-            yield pd.DataFrame(rows)
+                    at_off.append(len(at_k))
+            yield _out_batch(batch, ids, [
+                pa.array(pos_c, i32),
+                pa.array(kind_c, pa.string()),
+                pa.array(name_c, pa.string()),
+                pa.MapArray.from_arrays(
+                    pa.array(at_off, i32),
+                    pa.array(at_k, pa.string()),
+                    pa.array(at_v, pa.string())),
+                pa.array(text_c, pa.string())],
+                arrow_schema, take=pa.array(row_idx, i32))
 
-    return df.select(*cols).mapInPandas(fn, schema)
+    return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
 def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                  default_charset: str = "utf-8") -> DataFrame:
     """Parse NETSCAPE-Bookmark-file-1 payloads (the reference's second
     catalog DTD) into (folder_path, link_title, href) rows -- demonstrates
-    the multi-DTD parse surface (`sgml-parse dtd input`)."""
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", folder string, link_title string, href string"
-    cols = list(id_cols) + ["html"]
+    the multi-DTD parse surface (`sgml-parse dtd input`).  Same take()
+    id replication as nodes_of; a document whose processing raises
+    contributes zero rows."""
+    import pyarrow as pa
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..dtd import PCDATA
-        from ..parser.pda import sgml_parse
+    from ..dtd import PCDATA
+
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, "folder string, link_title string, href string")
+
+    def fn(batches):
         dtd = load_dtd("netscape-bookmark")
-        for pdf in batches:
-            rows = {c: [] for c in cols[:-1]}
-            folder_c, title_c, href_c = [], [], []
-            for idx in range(len(pdf)):
-                try:
-                    text, _ = decode_html(bytes(pdf["html"].iloc[idx]),
-                                          default_charset)
-                    doc = sgml_parse(dtd, text)
-                except Exception:
+
+        def work(text):
+            return sgml_parse(dtd, text)
+
+        for batch in batches:
+            row_idx, folder_c, title_c, href_c = [], [], [], []
+            for idx, doc, _ in _parsed_docs(batch, default_charset, work):
+                if doc is None:
                     continue
+
                 # folder = concatenated H3 headings on the DL ancestor path
                 def text_of(n):
                     return "".join(doc.text[c] or "" for c in doc.children[n]
@@ -814,8 +541,7 @@ def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                     if nm == "A":
                         href = next((v for k, v in (doc.attrs[n] or ())
                                      if k == "HREF"), None)
-                        for c in id_cols:
-                            rows[c].append(pdf[c].iloc[idx])
+                        row_idx.append(idx)
                         folder_c.append(folder)
                         title_c.append(text_of(n))
                         href_c.append(href)
@@ -827,10 +553,13 @@ def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                             folder = (folder + "/" + text_of(h3)).lstrip("/")
                     for c in reversed(doc.children[n]):
                         stack.append((c, folder))
-            rows.update(folder=folder_c, link_title=title_c, href=href_c)
-            yield pd.DataFrame(rows)
+            yield _out_batch(batch, ids, [
+                pa.array(folder_c, pa.string()),
+                pa.array(title_c, pa.string()),
+                pa.array(href_c, pa.string())],
+                arrow_schema, take=pa.array(row_idx, pa.int32()))
 
-    return df.select(*cols).mapInPandas(fn, schema)
+    return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
 # --- structured extraction stages (round 7) ----------------------------------
@@ -844,49 +573,39 @@ def tables_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     malformed document contributes zero rows rather than killing the
     batch (the extract_pages never-kill-the-batch convention)."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     from ..extract import tables_of_doc
 
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = (id_fields + ", table_idx int, row_idx int, col_idx int, "
-              "tag string, cell string")
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, "table_idx int, row_idx int, col_idx int, "
+        "tag string, cell string")
     i32 = pa.int32()
 
-    def afn(batches):
+    def fn(batches):
         dtd = load_dtd()
+
+        def work(text):
+            return tables_of_doc(parse_html(dtd, text))
+
         for batch in batches:
-            htmls = batch.column("html").to_pylist()
             row_idx = []
             t_c, r_c, c_c, tag_c, cell_c = [], [], [], [], []
-            for idx in range(len(htmls)):
-                try:
-                    text, _ = decode_html(bytes(htmls[idx]), default_charset)
-                    doc = parse_html(dtd, text)
-                    rows = tables_of_doc(doc)
-                except Exception:
-                    continue
-                for (t, r, c, tag, cell) in rows:
+            for idx, rows, _ in _parsed_docs(batch, default_charset, work):
+                for (t, r, c, tag, cell) in rows or ():
                     row_idx.append(idx)
                     t_c.append(t)
                     r_c.append(r)
                     c_c.append(c)
                     tag_c.append(tag)
                     cell_c.append(cell)
-            take = pa.array(row_idx, i32)
-            out = pa.RecordBatch.from_arrays(
-                [batch.column(c).take(take) for c in ids] + [
-                    pa.array(t_c, i32), pa.array(r_c, i32),
-                    pa.array(c_c, i32),
-                    pa.array(tag_c, pa.string()),
-                    pa.array(cell_c, pa.string())],
-                names=arrow_schema.names)
-            yield out.cast(arrow_schema, safe=False)
+            yield _out_batch(batch, ids, [
+                pa.array(t_c, i32), pa.array(r_c, i32),
+                pa.array(c_c, i32),
+                pa.array(tag_c, pa.string()),
+                pa.array(cell_c, pa.string())],
+                arrow_schema, take=pa.array(row_idx, i32))
 
-    return df.select(*(list(id_cols) + ["html"])).mapInArrow(afn, schema)
+    return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
 _META_FIELDS = ("title", "description", "og_title", "canonical", "h1")
@@ -899,77 +618,62 @@ def metadata_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     (a malformed document yields the all-'' row, so ingest accounting
     stays 1:1), assembled as flat string arrays in one mapInArrow pass."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     from ..extract import metadata_of_doc
 
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", " + ", ".join(f"{f} string"
-                                          for f in _META_FIELDS)
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, ", ".join(f"{f} string" for f in _META_FIELDS))
 
-    def afn(batches):
+    def fn(batches):
         dtd = load_dtd()
         empty = {f: "" for f in _META_FIELDS}
+
+        def work(text):
+            return metadata_of_doc(parse_html(dtd, text))
+
         for batch in batches:
-            htmls = batch.column("html").to_pylist()
             cols = {f: [] for f in _META_FIELDS}
-            for idx in range(len(htmls)):
-                try:
-                    text, _ = decode_html(bytes(htmls[idx]), default_charset)
-                    md = metadata_of_doc(parse_html(dtd, text))
-                except Exception:
-                    md = empty
+            for _, md, _ in _parsed_docs(batch, default_charset, work):
+                md = md or empty
                 for f in _META_FIELDS:
                     cols[f].append(md[f])
-            out = pa.RecordBatch.from_arrays(
-                [batch.column(c) for c in ids] + [
-                    pa.array(cols[f], pa.string()) for f in _META_FIELDS],
-                names=arrow_schema.names)
-            yield out.cast(arrow_schema, safe=False)
+            yield _out_batch(batch, ids, [
+                pa.array(cols[f], pa.string()) for f in _META_FIELDS],
+                arrow_schema)
 
-    return df.select(*(list(id_cols) + ["html"])).mapInArrow(afn, schema)
+    return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
 def jsonld_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
               default_charset: str = "utf-8") -> DataFrame:
     """One row per <script type=application/ld+json> block: (ld_idx,
     json) with the payload verbatim.  Schema-aware parsing stays JVM-side
-    -- compose with F.from_json, never a Python json.loads stage."""
+    -- compose with F.from_json, never a Python json.loads stage.  A
+    document whose processing raises contributes zero rows."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     from ..extract import jsonld_of_doc
 
-    id_fields = ", ".join(f"{n} {t}" for n, t in df.dtypes if n in id_cols)
-    schema = id_fields + ", ld_idx int, json string"
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ids, schema, arrow_schema = _stage_schema(df, id_cols,
+                                              "ld_idx int, json string")
     i32 = pa.int32()
 
-    def afn(batches):
+    def fn(batches):
         dtd = load_dtd()
+
+        def work(text):
+            return jsonld_of_doc(parse_html(dtd, text))
+
         for batch in batches:
-            htmls = batch.column("html").to_pylist()
             row_idx, idx_c, json_c = [], [], []
-            for idx in range(len(htmls)):
-                try:
-                    text, _ = decode_html(bytes(htmls[idx]), default_charset)
-                    payloads = jsonld_of_doc(parse_html(dtd, text))
-                except Exception:
-                    continue
-                for i, payload in enumerate(payloads):
+            for idx, payloads, _ in _parsed_docs(batch, default_charset,
+                                                 work):
+                for i, payload in enumerate(payloads or ()):
                     row_idx.append(idx)
                     idx_c.append(i)
                     json_c.append(payload)
-            take = pa.array(row_idx, i32)
-            out = pa.RecordBatch.from_arrays(
-                [batch.column(c).take(take) for c in ids] + [
-                    pa.array(idx_c, i32), pa.array(json_c, pa.string())],
-                names=arrow_schema.names)
-            yield out.cast(arrow_schema, safe=False)
+            yield _out_batch(batch, ids, [
+                pa.array(idx_c, i32), pa.array(json_c, pa.string())],
+                arrow_schema, take=pa.array(row_idx, i32))
 
-    return df.select(*(list(id_cols) + ["html"])).mapInArrow(afn, schema)
+    return df.select(*ids, "html").mapInArrow(fn, schema)

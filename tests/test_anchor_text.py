@@ -2,7 +2,10 @@
 extract stage and the inbound anchor aggregation built on them."""
 
 import __spark_entry__ as entry
-from closure_html_spark.spark.pipeline import extract_pages
+from closure_html_spark.dtd import load_dtd
+from closure_html_spark.parser.charset import decode_html
+from closure_html_spark.parser.pda import parse_html
+from closure_html_spark.spark.pipeline import _doc_links_base, extract_pages
 
 SF = "/root/testdata/sf0.001"
 
@@ -24,10 +27,10 @@ def test_anchors_parallel_to_links(spark):
                       columns=("links", "anchors")).collect()[0]
     assert list(r.links) == ["/", "/about", "/e"]
     assert list(r.anchors) == ["home", "about", ""]
-    p = extract_pages(df, engine="pandas") \
-        .select("links", "anchors").collect()[0]
-    assert list(p.links) == list(r.links)
-    assert list(p.anchors) == list(r.anchors)
+    # equal to the in-process walk over the same parse
+    doc = parse_html(load_dtd(), decode_html(_HTML)[0])
+    links, anchors, _ = _doc_links_base(doc)
+    assert (list(r.links), list(r.anchors)) == (links, anchors)
 
 
 def test_anchor_text_plan(spark):

@@ -1,11 +1,25 @@
 """Pipeline edge cases: oversized documents must flow through the Arrow
 batch machinery without blowing a worker (SURVEY.md §4 physical risk;
-batches are bounded by rows AND bytes in session.py)."""
+batches are bounded by rows AND bytes in session.py).
 
+Spark output is compared against an in-process reference built from the
+library calls each stage runs (perfbench/htmlwork.references builds the
+same one): decode_html -> parse_html -> extract_main_content(with
+main_text) -> _doc_links_base, doc.walk() renumbering, and the raw
+Tokenizer stream."""
+
+import pytest
 from pyspark.sql import functions as F
 
+from closure_html_spark.dtd import load_dtd
+from closure_html_spark.extract import extract_main_content
+from closure_html_spark.parser.charset import decode_html
+from closure_html_spark.parser.pda import parse_html
+from closure_html_spark.parser.tokenizer import Tokenizer
+from closure_html_spark.spark import pipeline
 from closure_html_spark.spark.pipeline import (
     RESULT_COL_DDL,
+    _doc_links_base,
     extract_pages,
     nodes_of,
 )
@@ -13,25 +27,87 @@ from closure_html_spark.spark.pipeline import (
 ALL_COLS = tuple(RESULT_COL_DDL)
 
 
+def _reference_row(raw, content_type=None) -> dict:
+    """One extract_pages row (every column plus main_text) computed in
+    process: main_text is Python's, so comparing it pins the JVM-side
+    reassembly from extracted_text + spans."""
+    dtd = load_dtd()
+    text, cs = decode_html(bytes(raw), "utf-8", content_type)
+    doc = parse_html(dtd, text)
+    res = extract_main_content(doc, dtd, with_main_text=True)
+    links, anchors, base = _doc_links_base(doc)
+    lv = [sum(1 for level, _ in doc.warnings if level == k)
+          for k in range(1, 6)]
+    return {"title": res["title"], "extracted_text": res["extracted_text"],
+            "spans": [tuple(s) for s in res["spans"]], "links": links,
+            "anchors": anchors, "base": base, "n_nodes": len(doc.name),
+            "n_warns": len(doc.warnings), "warn_levels": lv, "charset": cs,
+            "main_text": res["main_text"]}
+
+
+def _as_dict(row) -> dict:
+    d = row.asDict()
+    d["spans"] = [tuple(s) for s in d["spans"]]
+    return d
+
+
+def _reference_nodes(url, raw) -> list:
+    """nodes_of's rows for one document: pre-order renumbering from the
+    post-mortem root, attrs deduped last-wins."""
+    doc = parse_html(load_dtd(), decode_html(bytes(raw), "utf-8")[0])
+    remap = {n: i for i, (n, _) in enumerate(doc.walk())}
+    return [(url, remap[n], remap.get(doc.parent[n], -1), d, doc.name[n],
+             tuple(sorted(dict(doc.attrs[n] or ()).items())), doc.text[n])
+            for n, d in doc.walk()]
+
+
+def _reference_tokens(url, raw) -> list:
+    """tokens_of's rows for one document: the raw lexer stream, attrs
+    deduped last-wins, a bare attribute mapped to ''."""
+    text = decode_html(bytes(raw), "utf-8")[0]
+    out = []
+    for pos, tok in enumerate(Tokenizer(text, load_dtd().entities).tokens()):
+        kind, name, attrs, txt = tok[0], None, (), None
+        if kind in ("start", "empty"):
+            name = tok[1]
+            attrs = tuple(sorted(
+                {(a[0] if isinstance(a, tuple) else a):
+                 (a[1] if isinstance(a, tuple) else "")
+                 for a in tok[2]}.items()))
+        elif kind == "end":
+            name = tok[1]
+        elif kind != "eof":
+            txt = tok[1]
+        out.append((url, pos, kind, name, attrs, txt))
+    return out
+
+
 def test_arrow_engine_identical_to_pandas(spark):
-    """engine='arrow' (mapInArrow, direct pyarrow column assembly -- the
-    default) must be value-identical to the round-2 mapInPandas baseline,
-    including the error row path and content_type handling.  The arrow
-    side requests every column explicitly (links/base left the default
-    set); the pandas baseline always emits all of them."""
+    """Every extract_pages column, main_text included, equals the
+    in-process reference row, including content_type charset seeding
+    (u1 is latin-1 bytes labelled only by its header)."""
     rows = [("u0", bytearray(b"<html><body><p>a &amp; b</p></body></html>"),
              "text/html; charset=utf-8"),
             ("u1", bytearray("<p>caf\xe9".encode("latin-1")),
              "text/html; charset=latin-1"),
             ("u2", bytearray(b""), None),
-            ("u3", bytearray(b"<table><td>x<ul>soup"), None)]
+            ("u3", bytearray(b"<table><td>x<ul>soup"), None),
+            ("u4", bytearray(
+                ("<html><body><div id=nav><a href=/>home</a></div><p>"
+                 + "Caf\xe9 article text, long enough to keep. " * 6
+                 + "</p><p>Second &amp; final paragraph.</p>"
+                 "<div class=footer>f</div></body></html>").encode()), None)]
     df = spark.createDataFrame(
         rows, "url string, html binary, content_type string")
-    a = extract_pages(df, engine="arrow", columns=ALL_COLS) \
-        .orderBy("url").collect()
-    p = extract_pages(df, engine="pandas").orderBy("url").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in p]
-    assert a[1]["extracted_text"] == "caf\xe9"
+    got = {r["url"]: _as_dict(r)
+           for r in extract_pages(df, columns=ALL_COLS).collect()}
+    assert set(got) == {url for url, _, _ in rows}
+    for url, raw, ct in rows:
+        assert got[url] == {"url": url, **_reference_row(raw, ct)}, url
+    assert got["u1"]["extracted_text"] == "caf\xe9"
+    # main_text rebuilt JVM-side from kept spans, non-ASCII included
+    assert got["u4"]["main_text"].startswith("Caf\xe9 article text")
+    assert got["u4"]["main_text"] != got["u4"]["extracted_text"]
 
 
 def test_columns_projection_matches_full(spark):
@@ -56,7 +132,8 @@ def test_columns_projection_matches_full(spark):
 def test_links_column(spark):
     """The `links` result column: HREFs of <A> nodes in document order --
     A without HREF contributes nothing, duplicates and orderings are
-    preserved, error rows yield [], and both engines agree."""
+    preserved, error rows yield [], and the values equal the in-process
+    reference's."""
     rows = [
         ("u0", bytearray(b'<html><body>'
                          b'<a href="/z">z</a><a name="anchor">no href</a>'
@@ -72,9 +149,7 @@ def test_links_column(spark):
     assert a["u0"] == ["/z", "/a", "/z"]   # document order, dups kept
     assert a["u1"] == []
     assert a["u2"] == []                   # empty/error doc -> []
-    p = {r["url"]: r["links"]
-         for r in extract_pages(df, engine="pandas").collect()}
-    assert p == a
+    assert a == {url: _reference_row(raw)["links"] for url, raw, _ in rows}
     # links-only projection skips the text build but returns the same value
     proj = extract_pages(df, columns=("links",))
     assert set(proj.columns) == {"url", "links"}
@@ -87,7 +162,7 @@ def test_links_column(spark):
 def test_base_column(spark):
     """The `base` result column: href of the first BASE node (the
     reference's own fixture pins BASE in HEAD, test.lisp:5-18); absent
-    base -> null; first BASE wins; both engines agree."""
+    base -> null; first BASE wins; equal to the in-process reference."""
     rows = [
         ("u0", bytearray(b'<html><head><base href="https://cdn.example/a/">'
                          b'</head><body><a href=x.html>x</a></body></html>')),
@@ -101,9 +176,7 @@ def test_base_column(spark):
     assert a["u0"] == "https://cdn.example/a/"
     assert a["u1"] == "/one"
     assert a["u2"] is None
-    p = {r["url"]: r["base"]
-         for r in extract_pages(df, engine="pandas").collect()}
-    assert p == a
+    assert a == {url: _reference_row(raw)["base"] for url, raw in rows}
 
 
 def test_error_row_mid_batch_alignment(spark):
@@ -126,16 +199,67 @@ def test_error_row_mid_batch_alignment(spark):
     assert got["u2"]["extracted_text"] == "third ok"
     assert not got["u0"]["charset"].startswith("error:")
     assert not got["u2"]["charset"].startswith("error:")
-    # pandas baseline path behaves identically
-    gp = {r["url"]: r for r in extract_pages(df, engine="pandas").collect()}
-    assert gp["u1"]["charset"].startswith("error:")
-    assert gp["u2"]["extracted_text"] == "third ok"
+    assert got["u1"]["charset"] == "error:TypeError"
+    # every column of the neighbours equals the in-process reference
+    for url, raw in (rows[0], rows[2]):
+        assert _as_dict(got[url]) == {"url": url, **_reference_row(raw)}
+
+
+_STAGE_DOCS = [
+    ("u0", bytearray(
+        b'<html><head><title>First</title><meta name=description content=d0>'
+        b'<script type="application/ld+json">{"n": 0}</script></head><body>'
+        b'<h1>One</h1><table><tr><td>a<td>b</table>'
+        b'<dl><dt><h3>F</h3><dl><dt><a href="/a">A</a></dl></dl>'
+        b'<p>first ok</p></body></html>')),
+    ("u1", None),
+    ("u2", bytearray(
+        b'<html><head><title>Third</title>'
+        b'<script type="application/ld+json">{"n": 2}</script></head><body>'
+        b'<h1>Three</h1><table><tr><th>h<tr><td>c</table>'
+        b'<dl><dt><a href="/c">C</a></dl><p>third ok</p></body></html>')),
+]
+
+
+def _only_error_row(rows, **want):
+    return len(rows) == 1 and all(rows[0][k] == v for k, v in want.items())
+
+
+# each stage's failure convention for a document whose processing raised
+_FAILED_DOC = {
+    "extract_pages": lambda rows: _only_error_row(
+        rows, charset="error:TypeError", n_warns=-1, title="",
+        extracted_text="", spans=[], main_text=""),
+    "serialize_pages": lambda rows: _only_error_row(rows, html_out=""),
+    "metadata_of": lambda rows: _only_error_row(
+        rows, **{f: "" for f in pipeline._META_FIELDS}),
+    "nodes_of": lambda rows: rows == [],
+    "tokens_of": lambda rows: rows == [],
+    "bookmarks_of": lambda rows: rows == [],
+    "tables_of": lambda rows: rows == [],
+    "jsonld_of": lambda rows: rows == [],
+}
+
+
+@pytest.mark.parametrize("stage", sorted(_FAILED_DOC))
+def test_failed_doc_mid_batch_every_stage(spark, stage):
+    """A null `html` between two good documents in one batch: the stage
+    applies its failure convention to that document only, and the good
+    documents' rows equal the stage's output on them alone."""
+    fn = getattr(pipeline, stage)
+    df = spark.createDataFrame(_STAGE_DOCS, "url string, html binary")
+    got = fn(df.coalesce(1)).collect()
+    assert _FAILED_DOC[stage]([r for r in got if r["url"] == "u1"])
+    alone = fn(df.filter(F.col("url") != "u1").coalesce(1)).collect()
+    assert {r["url"] for r in alone} == {"u0", "u2"}
+    assert sorted(repr(r) for r in got if r["url"] != "u1") == \
+        sorted(repr(r) for r in alone)
 
 
 def test_nodes_of_engines_identical(spark):
-    """nodes_of engine='arrow' (flat-array MapArray assembly) must be
-    row-for-row identical to the pandas baseline, including attrs maps,
-    unparseable-doc skips, and the pre-order renumbering."""
+    """nodes_of (flat-array MapArray assembly) must be row-for-row
+    identical to the in-process reference, including attrs maps and the
+    pre-order renumbering."""
     rows = [("u0", bytearray(b'<html><head><title>T</title></head><body>'
                              b'<div id="nav" class="menu"><a href="/x">x</a>'
                              b'</div><p>text &amp; entity</p></body></html>')),
@@ -143,14 +267,11 @@ def test_nodes_of_engines_identical(spark):
             ("u2", bytearray(b""))]
     df = spark.createDataFrame(rows, "url string, html binary")
 
-    def rowset(d):
-        return sorted((r["url"], r["node_id"], r["parent_id"], r["depth"],
-                       r["name"], tuple(sorted((r["attrs"] or {}).items())),
-                       r["text"]) for r in d.collect())
-
-    a = rowset(nodes_of(df, engine="arrow"))
-    p = rowset(nodes_of(df, engine="pandas"))
-    assert a == p
+    a = sorted((r["url"], r["node_id"], r["parent_id"], r["depth"],
+                r["name"], tuple(sorted((r["attrs"] or {}).items())),
+                r["text"]) for r in nodes_of(df).collect())
+    assert a == sorted(x for url, raw in rows
+                       for x in _reference_nodes(url, raw))
     assert len(a) > 10
     # the attrs map survives the MapArray build
     nav = [r for r in a if r[5] and dict(r[5]).get("ID") == "nav"]
@@ -158,7 +279,7 @@ def test_nodes_of_engines_identical(spark):
 
 
 def test_tokens_of_engines_identical(spark):
-    """tokens_of engine='arrow' must match the pandas baseline row-for-row,
+    """tokens_of must match the in-process Tokenizer stream row-for-row,
     including repeated-attribute dedup (last wins) and bare attributes."""
     from closure_html_spark.spark.pipeline import tokens_of
 
@@ -168,47 +289,15 @@ def test_tokens_of_engines_identical(spark):
             ("u1", bytearray(b"<td>bare soup <!-- c -->"))]
     df = spark.createDataFrame(rows, "url string, html binary")
 
-    def rowset(d):
-        return sorted((r["url"], r["pos"], r["kind"], r["name"],
-                       tuple(sorted((r["attrs"] or {}).items())), r["text"])
-                      for r in d.collect())
-
-    a = rowset(tokens_of(df, engine="arrow"))
-    p = rowset(tokens_of(df, engine="pandas"))
-    assert a == p
+    a = sorted((r["url"], r["pos"], r["kind"], r["name"],
+                tuple(sorted((r["attrs"] or {}).items())), r["text"])
+               for r in tokens_of(df).collect())
+    assert a == sorted(x for url, raw in rows
+                       for x in _reference_tokens(url, raw))
     # raw-lexer attrs are pre-normalization: lowercase names as written
     dup = [r for r in a if r[4] and dict(r[4]).get("href")]
     assert dup and dict(dup[0][4])["href"] == "/2"  # last wins
     assert dict(dup[0][4]).get("selected") == ""    # bare attr -> ""
-
-
-def test_packed_spans_roundtrip(spark):
-    """packed_spans=True: the 20 B/span binary packing must decode to
-    exactly the struct-form spans, span count must be computable JVM-side
-    as length/20, and error rows pack to empty bytes."""
-    from closure_html_spark.spark.pipeline import unpack_spans
-
-    rows = [(f"u{i}", bytearray(
-        f"<html><head><title>D{i}</title></head><body><div id=nav>"
-        f"<a href=/>h</a></div><p>content {i} here</p>"
-        f"<div class=footer>f</div></body></html>".encode()))
-        for i in range(20)] + [("uerr", bytearray(b""))]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    full = {r["url"]: [tuple(s) for s in r["spans"]]
-            for r in extract_pages(df).collect()}
-    packed = extract_pages(df, packed_spans=True)
-    assert "spans_packed" in packed.columns and "main_text" not in packed.columns
-    got = {r["url"]: r["spans_packed"] for r in packed.collect()}
-    for url, buf in got.items():
-        dec = [(s, e, sc, k) for s, e, sc, k in unpack_spans(bytes(buf))]
-        want = [(s, e, sc, bool(k)) for s, e, sc, k in full[url]]
-        assert dec == want, url
-        assert len(buf) % 20 == 0
-    # JVM-side span count
-    cnt = {r["url"]: r["n"] for r in packed.select(
-        "url", (F.length("spans_packed") / 20).cast("int").alias("n"))
-        .collect()}
-    assert all(cnt[u] == len(full[u]) for u in full)
 
 
 def test_20mb_document_mixed_with_small(spark):
@@ -232,10 +321,10 @@ def test_20mb_document_mixed_with_small(spark):
 def test_oversize_doc_cap_truncates_and_marks(spark):
     """max_doc_bytes: a page past the cap is truncated (the prefix still
     parses and extracts), marked charset='error:oversize', and counted as
-    ONE level-5 warning; rows in the same batch are untouched.  Both
-    engines agree.  The default 64 MiB cap leaves ordinary corpora
-    unaffected (the 20 MB test above runs under it with zero error
-    rows)."""
+    ONE level-5 warning; rows in the same batch are untouched.  The
+    capped row equals the in-process reference of the prefix plus that
+    warning.  The default 64 MiB cap leaves ordinary corpora unaffected
+    (the 20 MB test above runs under it with zero error rows)."""
     big = ("<html><body><p>" + "word " * 100_000
            + "</p></body></html>").encode()
     rows = [("u_big", bytearray(big)),
@@ -250,33 +339,13 @@ def test_oversize_doc_cap_truncates_and_marks(spark):
     assert len(bigr["extracted_text"]) < 5000  # truncated, not full 500 KB
     assert out["u_ok"]["charset"] == "utf-8"
     assert out["u_ok"]["extracted_text"] == "fine"
-    p = {r["url"]: r for r in extract_pages(
-        df, engine="pandas", max_doc_bytes=4096).collect()}
-    assert p["u_big"]["charset"] == "error:oversize"
-    assert p["u_big"]["warn_levels"][4] == 1
-    assert p["u_big"]["extracted_text"] == bigr["extracted_text"]
-    assert p["u_big"]["n_warns"] == bigr["n_warns"]
-
-
-def test_out_batch_rows_coalescing_identical(spark):
-    """out_batch_rows: coalesced output batches must be value-identical to
-    the per-input-batch default (forced multi-batch input via a tiny
-    arrow batch cap)."""
-    rows = [(f"u{i:03d}", bytearray(
-        f"<html><head><title>D{i}</title></head><body><div id=n>"
-        f"<a href=/{i}>l</a></div><p>content {i} text</p></body></html>"
-        .encode())) for i in range(64)]
-    df = spark.createDataFrame(rows, "url string, html binary").coalesce(2)
-    cap = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "5")
-    try:
-        a = extract_pages(df, columns=ALL_COLS).orderBy("url").collect()
-        b = extract_pages(df, columns=ALL_COLS,
-                          out_batch_rows=1000).orderBy("url").collect()
-    finally:
-        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", cap)
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    assert len(a) == 64
+    want = _reference_row(big[:4096])
+    want["charset"] = "error:oversize"
+    want["n_warns"] += 1
+    want["warn_levels"][4] += 1
+    assert _as_dict(bigr) == {"url": "u_big", **want}
+    assert _as_dict(out["u_ok"]) == {
+        "url": "u_ok", **_reference_row(rows[1][1])}
 
 
 def test_worker_keeps_stat_checked_invalidate_caches(spark):
