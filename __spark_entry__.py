@@ -93,9 +93,11 @@ def _q_serialize_roundtrip(spark, sf_dir):
     ser = serialize_pages(pages, id_cols=("doc_id",))
     reparsed = ser.select(
         "doc_id", F.encode(F.col("html_out"), "utf-8").alias("html"))
-    ext1 = extract_pages(pages, id_cols=("doc_id",)) \
+    ext1 = extract_pages(pages, id_cols=("doc_id",),
+                         columns=("extracted_text",)) \
         .select("doc_id", F.col("extracted_text").alias("t1"))
-    ext2 = extract_pages(reparsed, id_cols=("doc_id",)) \
+    ext2 = extract_pages(reparsed, id_cols=("doc_id",),
+                         columns=("extracted_text",)) \
         .select("doc_id", F.col("extracted_text").alias("t2"))
     return (ext1.join(ext2, "doc_id")
             .select("doc_id",

@@ -20,9 +20,11 @@ Definitions:
     one per block with non-empty text; keep marks main-content spans
     (score >= MIN_SCORE and link_density < MAX_LINK_DENSITY).
   - main_text: concatenation of kept span texts -- the boilerplate-stripped
-    content.  In the Spark pipeline main_text is reassembled JVM-side from
-    (extracted_text, spans) so the text bytes cross the Arrow boundary once,
-    not twice (SCALE.md frontier #1).
+    content.  The Spark pipeline ships the string this function builds
+    (SCALE.md "Output volume"), so the kept text crosses the Arrow
+    boundary a second time; rebuilding it JVM-side from (extracted_text,
+    spans) would cost a character-indexed substr per span, which is
+    quadratic in the document's length.
 """
 
 from __future__ import annotations
@@ -75,9 +77,9 @@ def extract_main_content(doc: Doc, dtd: Dtd,
                          with_main_text: bool = True) -> dict:
     """Returns {title, extracted_text, main_text, spans} for one Doc.
     spans: list of (start, end, score) into extracted_text.
-    with_main_text=False skips assembling the main_text string (the Arrow
-    pipeline rebuilds it JVM-side from extracted_text + spans and never
-    reads the Python copy -- round-8 measurement)."""
+    with_main_text=False skips assembling the main_text string (it is
+    then None): the Arrow pipeline skips it when its caller did not ask
+    for both extracted_text and spans."""
     body = find_first(doc, doc.root, "BODY")
     if body < 0:
         body = find_first(doc, doc.root, "FRAMESET")

@@ -17,6 +17,8 @@ equivalent for static build artifacts shipped via --py-files.
 
 from __future__ import annotations
 
+import gc
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -102,20 +104,12 @@ def _doc_links_base(doc, want_anchors: bool = True) \
     return out, anchors, base
 
 
-# main_text reassembled JVM-side from kept spans: the text bytes cross the
-# Python->Arrow boundary once (extracted_text), not twice
-_MAIN_TEXT_EXPR = (
-    "aggregate(filter(spans, s -> s.keep), '', "
-    "(acc, s) -> acc || substr(extracted_text, s.start + 1, s.end - s.start))"
-)
-
-
 MAX_DOC_BYTES_DEFAULT = 64 * 1024 * 1024  # 64 MiB
 
 # extract_pages' row for a document whose processing raised, in the order
 # its work() returns: title, extracted_text, spans, links, anchors, base,
-# n_nodes, n_warns, warn_levels
-_ERROR_ROW = ("", "", (), (), (), None, 0, -1, (0, 0, 0, 0, 0))
+# n_nodes, n_warns, warn_levels, main_text
+_ERROR_ROW = ("", "", (), (), (), None, 0, -1, (0, 0, 0, 0, 0), "")
 
 
 def _parsed_docs(batch, default_charset: str, work,
@@ -130,6 +124,12 @@ def _parsed_docs(batch, default_charset: str, work,
     is decoded and worked from its prefix and marked 'error:oversize'.
     If the batch has a `content_type` column, its charset parameter seeds
     the decoder (a <meta> charset still overrides it, charset.py)."""
+    # with worker reuse, PySpark's daemon runs a full gc.collect() after
+    # every task (pyspark/daemon.py:244); nearly all the objects it would
+    # walk come from imports and never die.  Freezing moves them out of
+    # the collector's sight.  Parsing makes no cyclic garbage, and a
+    # frozen object is still freed when its refcount drops to zero.
+    gc.freeze()
     htmls = batch.column("html").to_pylist()
     cts = (batch.column("content_type").to_pylist()
            if "content_type" in batch.schema.names else None)
@@ -210,7 +210,9 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     pay the full text build + Arrow transfer; passing
     columns=("warn_levels",) skips building the text payload entirely
     (and skips the span scorer when no text column is requested).
-    main_text is only attached when extracted_text AND spans are present.
+    main_text, the concatenated kept spans, is only built and attached
+    (as the last column) when extracted_text AND spans are requested; an
+    error row's main_text is ''.
     columns=None builds _DEFAULT_COLS, which EXCLUDES links/base: they
     need a second full-DOM walk (the span scorer's walk starts at BODY
     and cannot see HEAD, where BASE lives), so only frontier consumers
@@ -228,9 +230,14 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     need_extract = bool({"title", "extracted_text", "spans"} & set(wanted))
     need_anchors = "anchors" in wanted
     need_links = bool({"links", "anchors", "base"} & set(wanted))
+    # built here, not from (extracted_text, spans) on the JVM: Spark's
+    # substr is character-indexed and walks the UTF-8 string from its
+    # start on every call, so a per-span fold there is quadratic
+    need_main = "extracted_text" in wanted and "spans" in wanted
 
     ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, ", ".join(f"{k} {RESULT_COL_DDL[k]}" for k in wanted))
+        df, id_cols, ", ".join([f"{k} {RESULT_COL_DDL[k]}" for k in wanted]
+                               + (["main_text string"] if need_main else [])))
     has_ct = "content_type" in df.columns
     cols = ids + ["html"] + (["content_type"] if has_ct else [])
     i32 = pa.int32()
@@ -241,11 +248,12 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
         def work(text):
             doc = parse_html(dtd, text)
             if need_extract:
-                res = extract_main_content(doc, dtd, with_main_text=False)
+                res = extract_main_content(doc, dtd,
+                                           with_main_text=need_main)
                 title_v, text_v = res["title"], res["extracted_text"]
-                spans_v = res["spans"]
+                spans_v, main_v = res["spans"], res["main_text"]
             else:
-                title_v = text_v = ""
+                title_v = text_v = main_v = ""
                 spans_v = ()
             links_v, anchors_v, base_v = (
                 _doc_links_base(doc, want_anchors=need_anchors)
@@ -257,11 +265,11 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                 if 1 <= level <= 5:
                     lv[level - 1] += 1
             return (title_v, text_v, spans_v, links_v, anchors_v, base_v,
-                    len(doc.name), len(doc.warnings), lv)
+                    len(doc.name), len(doc.warnings), lv, main_v)
 
         for batch in batches:
             n = batch.num_rows
-            titles, texts, charsets = [], [], []
+            titles, texts, mains, charsets = [], [], [], []
             n_nodes, n_warns = [], []
             # spans + warn_levels + links as flat child arrays + offsets:
             # the ListArray/StructArray build is one memcpy-style pass, no
@@ -274,12 +282,13 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
             for _, row, cs in _parsed_docs(batch, default_charset, work,
                                            max_doc_bytes):
                 (title_v, text_v, spans_v, links_v, anchors_v, base_v,
-                 nn, nw, lv) = row or _ERROR_ROW
+                 nn, nw, lv, main_v) = row or _ERROR_ROW
                 if cs == "error:oversize":
                     lv[4] += 1
                     nw += 1
                 titles.append(title_v)
                 texts.append(text_v)
+                mains.append(main_v)
                 for s, e, sc, k in spans_v:
                     sp_start.append(s)
                     sp_end.append(e)
@@ -327,13 +336,12 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                     pa.array(wl_flat, i32))
             if "charset" in wanted:
                 built["charset"] = pa.array(charsets, pa.string())
-            yield _out_batch(batch, ids, [built[k] for k in wanted],
-                             arrow_schema)
+            arrays = [built[k] for k in wanted]
+            if need_main:
+                arrays.append(pa.array(mains, pa.string()))
+            yield _out_batch(batch, ids, arrays, arrow_schema)
 
-    result = df.select(*cols).mapInArrow(fn, schema)
-    if "extracted_text" in wanted and "spans" in wanted:
-        result = result.withColumn("main_text", F.expr(_MAIN_TEXT_EXPR))
-    return result
+    return df.select(*cols).mapInArrow(fn, schema)
 
 
 def serialize_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),

@@ -127,7 +127,8 @@ def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     pages = warc_records_to_pages(recs, id_cols=("doc_id",))
     ext = extract_pages(pages.select("doc_id", "url", "html",
                                      "content_type"),
-                        id_cols=("doc_id", "url"))
+                        id_cols=("doc_id", "url"),
+                        columns=("title", "extracted_text", "charset"))
     return (ext.select("doc_id", "url", "title", "extracted_text",
                        "charset").orderBy("doc_id"))
 

@@ -1,9 +1,20 @@
 """The per-document loop every parse stage runs (pipeline._parsed_docs),
 driven on hand-built Arrow batches without Spark."""
 
+import gc
+
 import pyarrow as pa
+import pytest
 
 from closure_html_spark.spark.pipeline import _parsed_docs
+
+
+@pytest.fixture(autouse=True)
+def _unfreeze():
+    """_parsed_docs freezes the heap (gc.freeze()); give the test process
+    its collector back."""
+    yield
+    gc.unfreeze()
 
 
 def _batch(htmls, content_types=None):

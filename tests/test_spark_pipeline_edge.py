@@ -29,8 +29,7 @@ ALL_COLS = tuple(RESULT_COL_DDL)
 
 def _reference_row(raw, content_type=None) -> dict:
     """One extract_pages row (every column plus main_text) computed in
-    process: main_text is Python's, so comparing it pins the JVM-side
-    reassembly from extracted_text + spans."""
+    process with the library calls the kernel runs."""
     dtd = load_dtd()
     text, cs = decode_html(bytes(raw), "utf-8", content_type)
     doc = parse_html(dtd, text)
@@ -105,7 +104,7 @@ def test_arrow_engine_identical_to_pandas(spark):
     for url, raw, ct in rows:
         assert got[url] == {"url": url, **_reference_row(raw, ct)}, url
     assert got["u1"]["extracted_text"] == "caf\xe9"
-    # main_text rebuilt JVM-side from kept spans, non-ASCII included
+    # main_text is the kept spans only, non-ASCII included
     assert got["u4"]["main_text"].startswith("Caf\xe9 article text")
     assert got["u4"]["main_text"] != got["u4"]["extracted_text"]
 
@@ -316,6 +315,49 @@ def test_20mb_document_mixed_with_small(spark):
     assert bigrow["extracted_text"].startswith("big document content")
     assert bigrow["n_nodes"] > 6000
     assert out.count() == 501
+    assert bigrow["main_text"] == _reference_row(big)["main_text"]
+
+
+def test_spans_slice_extracted_text_jvm_side(spark):
+    """SQL consumers slice extracted_text by spans with Spark's substr
+    (1-based, in characters).  Python's offsets count code points, and so
+    does substr, so every span's JVM slice equals the Python slice even
+    past astral characters (one code point, two UTF-16 units, four UTF-8
+    bytes), combining marks and latin-1 text.  main_text equals the
+    in-process reference and the kept JVM slices joined in order."""
+    kept = ("Emoji \U0001F600\U0001F680 and cafe\u0301 with na\u00efve "
+            "\u00fcber text, long enough to keep as content. ")
+    page = ("<html><body><div class=nav><a href=/a>\U0001F3E0 home</a> "
+            "<a href=/b>m\u0301enu</a></div>"
+            + "".join(f"<p>{i} {kept * 3}</p><div><a href=/x{i}>\u00e9 "
+                      f"link {i}</a></div>" for i in range(3))
+            + "<p>short \U0001F44D</p><td>Stra\u00dfe \u00e0 la carte "
+            + kept * 2 + "</td></body></html>")
+    para = "<p>" + "Caf\xe9 cr\xe8me br\xfbl\xe9e, d\xe9j\xe0 vu. " * 8
+    latin = ("<html><body>" + para + "<div><a href=/>\xbb plus</a></div>"
+             + para + "<p>\xa9 \xc6</p></body></html>")
+    rows = [("u0", bytearray(page.encode()), None),
+            ("u1", bytearray(latin.encode("latin-1")),
+             "text/html; charset=latin-1")]
+    df = spark.createDataFrame(
+        rows, "url string, html binary, content_type string")
+    got = {r["url"]: r for r in extract_pages(df).select(
+        "url", "extracted_text", "spans", "main_text",
+        F.expr("transform(spans, s -> substr(extracted_text, s.start + 1, "
+               "s.end - s.start))").alias("slices")).collect()}
+    for url, raw, ct in rows:
+        r, want = got[url], _reference_row(raw, ct)
+        text = r["extracted_text"]
+        assert text == want["extracted_text"]
+        keeps = [s["keep"] for s in r["spans"]]
+        assert keeps.count(True) >= 2 and keeps.count(False) >= 2, url
+        assert r["slices"] == [text[s["start"]:s["end"]] for s in r["spans"]]
+        assert r["main_text"] == want["main_text"]
+        assert r["main_text"] == "".join(
+            sl for sl, k in zip(r["slices"], keeps) if k)
+    assert "\U0001F600" in got["u0"]["main_text"]
+    assert "cafe\u0301" in got["u0"]["main_text"]
+    assert "Caf\xe9 cr\xe8me" in got["u1"]["main_text"]
 
 
 def test_oversize_doc_cap_truncates_and_marks(spark):
@@ -379,3 +421,53 @@ def test_worker_keeps_stat_checked_invalidate_caches(spark):
     assert reused, f"no probe task ran on a reused worker: {got}"
     assert {r["impl"] for r in reused} == \
         {"closure_html_spark.zipcache.invalidate_caches"}
+
+
+def test_worker_heap_frozen_before_daemon_gc(spark):
+    """Every parse stage calls gc.freeze() before its first document, so
+    the full gc.collect() PySpark's daemon runs after each task of a
+    reused worker (pyspark/daemon.py) no longer walks the objects left by
+    imports.  After extract_pages passes, a worker's frozen generation
+    holds most of its tracked objects, and its size is the same after
+    each later pass: freezing at every batch leaks nothing.  The probe
+    never imports the package; it reports what earlier tasks left.
+
+    The documents are tag-free text past the parser's 256-character
+    pcdata cache limit, so parsing them adds no entries to the DTD's
+    bounded tag/pcdata caches, which would otherwise warm (and be frozen)
+    as each worker meets new tags."""
+    rows = [(f"u{i}", bytearray(("word " * 60 + str(i)).encode()))
+            for i in range(8)]
+    df = spark.createDataFrame(rows, "url string, html binary") \
+        .repartition(4)
+
+    def probe(batches):
+        import gc
+        import os
+
+        import pyarrow as pa
+        for _ in batches:
+            pass
+        yield pa.RecordBatch.from_pydict({
+            "pid": [os.getpid()],
+            "frozen": [gc.get_freeze_count()],
+            "tracked": [len(gc.get_objects())]})
+
+    passes = []
+    for _ in range(4):
+        assert extract_pages(df).count() == 8
+        got = (spark.range(4).repartition(4)
+               .mapInArrow(probe, "pid long, frozen long, tracked long")
+               .collect())
+        # only a parse stage freezes: frozen > 0 marks a worker that parsed
+        passes.append({r["pid"]: r for r in got if r["frozen"] > 0})
+    frozen = [r for p in passes for r in p.values()]
+    assert frozen, f"no probe task ran on a worker that parsed: {passes}"
+    for r in frozen:
+        assert r["tracked"] * 10 < r["frozen"], r
+    # the first pass may still warm caches; compare the later ones
+    later = passes[1:]
+    same = [(a[pid]["frozen"], b[pid]["frozen"])
+            for a, b in zip(later, later[1:]) for pid in set(a) & set(b)]
+    assert same, f"no worker probed after two later passes: {passes}"
+    assert all(x == y for x, y in same), same
