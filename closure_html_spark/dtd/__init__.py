@@ -30,6 +30,7 @@ class Dtd:
         "include", "exclude", "obegin", "oend", "attlist", "entities",
         "roots", "resolve", "eqv", "empty", "surclusion", "element_names",
         "valid_tags", "pda_actions", "tag_cache", "pcdata_cache",
+        "entity_memo", "heuristic_rules",
     )
 
     def __init__(self, data: dict):
@@ -58,13 +59,20 @@ class Dtd:
         # lazily-built fused PDA action tables (pda.py), one (smap, emap)
         # pair per context element; persists for the worker's lifetime
         self.pda_actions = {}
-        # raw tag text -> (normalized token | None, warns tuple) memo used
-        # by normalize.tokenize_normalized; size-bounded there
+        # raw tag piece ('<' .. '>') -> (normalized token | None, warns
+        # tuple) memo used by pda.sgml_parse; size-bounded there, and only
+        # pieces whose whole text decides their token are stored
         self.tag_cache = {}
         # raw entity-bearing pcdata gap -> (token, warns tuple) memo
         # (boilerplate gaps like ' &amp; ' repeat across a corpus);
         # size- and entry-length-bounded at the use site (pda.sgml_parse)
         self.pcdata_cache = {}
+        # entity reference text ('amp;', '#65;') -> decoded value memo for
+        # tokenizer.decode_pcdata_fast; size-bounded there
+        self.entity_memo = {}
+        # (context, token kind, token name, has lookahead) -> heuristic
+        # repair rule (pda._heuristic); bounded by the element set
+        self.heuristic_rules = {}
 
     def inclusion(self, x: str) -> frozenset:
         if x == TOP:

@@ -174,124 +174,3 @@ def normalized_tokens(tokenizer, dtd: Dtd):
         elif kind == "eof":
             yield ("E", TOP)
             return
-
-
-def tokenize_normalized(text: str, dtd: Dtd, tk=None):
-    """Whole-document tokenize + normalize in one tight loop.
-
-    Semantically identical to normalized_tokens(FastTokenizer(...)) but
-    without generator layering or per-token dispatch overhead: the fast
-    regexes run inline and only unusual syntax drops into the exact char
-    machine.  Returns (token_list, tokenizer) -- the tokenizer carries the
-    accumulated warnings.
-    """
-    from .tokenizer import (
-        _FAST_ATTR,
-        _FAST_END_TAG,
-        _FAST_START_TAG,
-        _SPECIAL,
-        Tokenizer,
-    )
-    if tk is None:
-        tk = Tokenizer(text, dtd.entities)
-    s = text
-    n = len(s)
-    out = []
-    append = out.append
-    valid = dtd.valid_tags
-    attlist = dtd.attlist
-    warn = tk.warn
-    warns_extend = tk.warnings.extend
-    end_match = _FAST_END_TAG.match
-    start_match = _FAST_START_TAG.match
-    special_search = _SPECIAL.search
-    # Whole-tag memo: raw matched tag text -> (token | None, warns tuple).
-    # Tag vocab repeats heavily across a corpus, so most tags become one
-    # dict hit; size-bounded so unique-attr floods (hrefs) can't grow it
-    # without bound.  Tokens/attr lists are shared and never mutated.
-    cache = dtd.tag_cache
-    cache_get = cache.get
-    i = 0
-    while i < n:
-        c = s[i]
-        if c == "<":
-            j = i + 1
-            cj = s[j] if j < n else ""
-            if cj == "/":
-                m = end_match(s, j)
-                if m is not None:
-                    i = m.end()
-                    hit = cache_get(m.group(0))
-                    if hit is None:
-                        hit = build_end_hit(dtd, m)
-                        if len(cache) < 65536:
-                            cache[m.group(0)] = hit
-                    tok, ws = hit
-                    if tok is not None:
-                        append(tok)
-                    if ws:
-                        warns_extend(ws)
-                    continue
-            else:
-                # no isalpha/isascii pre-check: the regex's leading [A-Za-z]
-                # class rejects exactly the same first chars in C
-                m = start_match(s, j)
-                if m is not None:
-                    i = m.end()
-                    hit = cache_get(m.group(0))
-                    if hit is None:
-                        hit = build_start_hit(dtd, m)
-                        if len(cache) < 65536:
-                            cache[m.group(0)] = hit
-                    tok, ws = hit
-                    if tok is not None:
-                        append(tok)
-                    if ws:
-                        warns_extend(ws)
-                    continue
-            # slow fallback for this one token
-            tk.i = i
-            tok = tk.read_token()
-            i = tk.i
-            kind = tok[0]
-            if kind == "pcdata":
-                append(("S", PCDATA, tok[1]))
-            elif kind == "comment":
-                append(("C", tok[1]))
-            elif kind == "start" or kind == "empty":
-                if kind == "empty":
-                    warn(2, "Oops -- there is an empty tag; "
-                            "but this is only HTML?!")
-                name = tok[1]
-                if dtd.tag_exists(name):
-                    append(("S", name, mungle_attlist(dtd, name, tok[2], warn)))
-                else:
-                    warn(4, f"There is no such thing as <{name}> -- ignored.")
-            elif kind == "end":
-                name = tok[1]
-                if dtd.tag_exists(name):
-                    append(("E", name))
-                else:
-                    warn(4, f"There is no such thing as </{name}> -- ignored.")
-            elif kind == "pi":
-                warn(2, f"Ignoreing processing instruction tag: '{tok[1]}'")
-            # define tags dropped; eof cannot occur here (i < n)
-        else:
-            m = special_search(s, i)
-            if m is None:
-                append(("S", PCDATA, s[i:]))
-                i = n
-            else:
-                j = m.start()
-                if s[j] == "<":
-                    # s[i] != '<' here, so j > i strictly
-                    append(("S", PCDATA, s[i:j]))
-                    i = j
-                else:
-                    # entity present: exact machine for this pcdata run
-                    tk.i = i
-                    tok = tk.read_pcdata()
-                    i = tk.i
-                    append(("S", PCDATA, tok[1]))
-    append(("E", TOP))
-    return out, tk

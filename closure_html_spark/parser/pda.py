@@ -16,9 +16,18 @@ Reimplements the reference parse loop and repair machinery:
 The DOM is array-encoded (north-star requirement): parallel Python lists
 name/attrs/text/parent plus per-node child index lists, built append-only
 inside the vectorized UDF -- no per-node objects.
+
+One engine ships: sgml_parse's fused loop, which cuts the text into tag
+and text pieces with one C-side regex split per window, resolves tag
+pieces by a whole-piece per-DTD memo and runs the exact char machine
+only on pieces no fast form takes.  _sgml_parse_ref, the direct
+transcription of the reference loop over the char machine, is the twin
+the differential tests pin it against.
 """
 
 from __future__ import annotations
+
+import re
 
 from ..dtd import Dtd, PRESERVES_COMMENTS
 from .normalize import (
@@ -28,19 +37,28 @@ from .normalize import (
     build_start_hit,
     mungle_attlist,
     normalized_tokens,
-    tokenize_normalized,
 )
 from .tokenizer import (
     _FAST_END_TAG,
     _FAST_START_TAG,
-    _SPECIAL,
-    FastTokenizer,
     Tokenizer,
     decode_pcdata_fast,
 )
 
 _DONE = object()       # production sentinel: input exhausted
 _EOF_TOK = ("E", TOP)  # read-token* :eof (sgml-parse.lisp:956-957)
+_LT_TOK = ("S", PCDATA, "<")  # read-tag's literal '<' (bad char after '<')
+
+# The fused loop's piece split: every '<' starts a tag piece that runs to
+# the first '>' (inclusive) or stops before the next '<' / EOF; the text
+# between tag pieces is one text piece.  A split from any '<' onward does
+# not depend on what precedes it, so windows cut just before a '<' give
+# the same pieces as one split of the whole document.
+_PIECE = re.compile(r"<[^<>]*>?|[^<]+")
+# characters per piece window (the next window starts at the first '<'
+# at or after this many characters): bounds the split's memory
+_WINDOW = 1 << 16
+_DASH_WARN = ((4, '"--" seen within comment; This is strongly depreciated.'),)
 
 
 class Doc:
@@ -151,14 +169,75 @@ def _build_ctx_actions(dtd: Dtd, ctx: str):
 _EMPTY_MAP: dict = {}
 
 
+def _piece_hit(dtd: Dtd, p: str):
+    """Memo entry (token | None, warns tuple) for a tag piece whose whole
+    text decides its token, or None when the exact char machine must read
+    it.  Every accepted form ends in the piece's only '>', so the char
+    machine would consume exactly the piece and look no further."""
+    c = p[1:2]
+    if c == "/":
+        m = _FAST_END_TAG.fullmatch(p, 1)
+        return None if m is None else build_end_hit(dtd, m)
+    if c == "!":
+        if p[-1] != ">":
+            return None
+        if p[2] != "-":
+            # read-define-tag: '<!...>' is discarded, '<!>' skipped
+            return (None, ())
+        if len(p) >= 7 and p.startswith("<!--") and p.endswith("-->"):
+            # read-comment: the first '-->' after '<!--' ends at the
+            # first '>', which is the piece's last character
+            data = p[4:-3]
+            return (("C", data), _DASH_WARN if "--" in data else ())
+        return None
+    m = _FAST_START_TAG.fullmatch(p, 1)
+    return None if m is None else build_start_hit(dtd, m)
+
+
+def _slow_token(dtd: Dtd, tk: Tokenizer, i: int):
+    """One raw token via the exact char machine at i, normalized (read-
+    token*).  Returns (token | None when dropped, new cursor)."""
+    tk.i = i
+    tok = tk.read_token()
+    i = tk.i
+    k0 = tok[0]
+    if k0 == "pcdata":
+        return ("S", PCDATA, tok[1]), i
+    if k0 == "comment":
+        return ("C", tok[1]), i
+    warn = tk.warn
+    if k0 == "start" or k0 == "empty":
+        if k0 == "empty":
+            warn(2, "Oops -- there is an empty tag; but this is only HTML?!")
+        nm = tok[1]
+        if nm in dtd.valid_tags:
+            return ("S", nm, mungle_attlist(dtd, nm, tok[2], warn)), i
+        warn(4, f"There is no such thing as <{nm}> -- ignored.")
+    elif k0 == "end":
+        nm = tok[1]
+        if nm in dtd.valid_tags:
+            return ("E", nm), i
+        warn(4, f"There is no such thing as </{nm}> -- ignored.")
+    elif k0 == "pi":
+        warn(2, f"Ignoreing processing instruction tag: '{tok[1]}'")
+    # define tags dropped; "eof" only after a final '<!>' (read-define-tag
+    # skips it and reads on), where the caller then sees i == n
+    return None, i
+
+
 def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
                font_htag: bool = False) -> Doc:
     """Parse decoded text into a Doc rooted at a synthetic top node.
 
     With an explicit tokenizer this runs the direct transcription of the
     reference loop (_sgml_parse_ref); the default path runs the fused
-    action-table engine, which the differential fuzz pins token- and
-    serialization-identical to the reference loop.
+    engine: tokenize + normalize + PDA in one loop over a C-side piece
+    split (_PIECE).  Tag pieces are one whole-piece memo hit
+    (dtd.tag_cache), text pieces become #PCDATA directly, and anything
+    else runs the exact char machine from the piece's offset until the
+    cursor is back on a piece boundary.  The differential fuzz and golden
+    piece-boundary cases pin it serialization- and warning-identical to
+    the reference loop.
 
     font_htag=True enables the reference's FONT-as-marker mode: FONT tags
     bypass the PDA and land in the tree as HSTAG/HETAG marker nodes
@@ -170,57 +249,28 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
     if tokenizer is not None:
         return _sgml_parse_ref(dtd, text, tokenizer, font_htag)
 
-    # Fully fused single loop: tokenize + normalize + PDA.  Tokens are
-    # produced on demand (no intermediate token list); tag tokens come out
-    # of the per-DTD whole-tag memo, unusual syntax drops into the exact
-    # char machine one token at a time.  The differential fuzz pins this
-    # engine token- and serialization-identical to _sgml_parse_ref.
     tk = Tokenizer(text, dtd.entities)
     src = text
     n = len(src)
-    i = 0
+    find = src.find
+    split = _PIECE.findall
+    window = _WINDOW
     cache = dtd.tag_cache
     cache_get = cache.get
     pcache = dtd.pcdata_cache
     pcache_get = pcache.get
-    valid = dtd.valid_tags
-    attlist = dtd.attlist
+    entities = dtd.entities
+    ememo = dtd.entity_memo
     warn = tk.warn
     warns_extend = tk.warnings.extend
-    end_match = _FAST_END_TAG.match
-    start_match = _FAST_START_TAG.match
-    special_search = _SPECIAL.search
     eof_sent = False
-
-    def _slow_token():
-        """One raw token via the exact char machine, normalized.
-        Returns the normalized token or None (dropped)."""
-        nonlocal i
-        tk.i = i
-        tok = tk.read_token()
-        i = tk.i
-        k0 = tok[0]
-        if k0 == "pcdata":
-            return ("S", PCDATA, tok[1])
-        if k0 == "comment":
-            return ("C", tok[1])
-        if k0 == "start" or k0 == "empty":
-            if k0 == "empty":
-                warn(2, "Oops -- there is an empty tag; "
-                        "but this is only HTML?!")
-            nm = tok[1]
-            if nm in valid:
-                return ("S", nm, mungle_attlist(dtd, nm, tok[2], warn))
-            warn(4, f"There is no such thing as <{nm}> -- ignored.")
-        elif k0 == "end":
-            nm = tok[1]
-            if nm in valid:
-                return ("E", nm)
-            warn(4, f"There is no such thing as </{nm}> -- ignored.")
-        elif k0 == "pi":
-            warn(2, f"Ignoreing processing instruction tag: '{tok[1]}'")
-        # define tags dropped; eof cannot occur here (callers check i < n)
-        return None
+    # Cursor state.  `i` is the next unread character; `pos` is the offset
+    # of pieces[k], the next piece boundary.  i == pos: the next token
+    # starts at a piece.  i < pos: the char machine stopped inside a piece
+    # and reads on from i.
+    i = pos = 0
+    pieces: list = []
+    k = npieces = 0
 
     doc = Doc()
     root = doc.add("%root", None, None, -1)
@@ -237,6 +287,7 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
     # the sentinel pair plays the empty-stack role
     mstack = [(_EMPTY_MAP, _EMPTY_MAP)]
     pending: list = []     # LIFO of synthesized / pushed-back tokens
+    held = None            # heuristic token waiting for its lookahead
     actions = dtd.pda_actions
     pair = actions.get(TOP)
     if pair is None:
@@ -255,93 +306,106 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
         else:
             see = None
             while see is None:
-                if i >= n:
-                    if eof_sent:
-                        see = _DONE
-                        break
-                    eof_sent = True
-                    see = _EOF_TOK
-                    break
-                c = src[i]
-                if c == "<":
-                    j = i + 1
-                    if j < n and src[j] == "/":
-                        m = end_match(src, j)
-                        if m is not None:
-                            i = m.end()
-                            hit = cache_get(m.group(0))
-                            if hit is None:
-                                hit = build_end_hit(dtd, m)
-                                if len(cache) < 65536:
-                                    cache[m.group(0)] = hit
-                            see, ws = hit
-                            if ws:
-                                warns_extend(ws)
+                if i == pos:
+                    if k == npieces:
+                        if i >= n:
+                            if eof_sent:
+                                see = _DONE
+                                break
+                            eof_sent = True
+                            see = _EOF_TOK
+                            break
+                        w = find("<", i + window)
+                        pieces = split(src, i, n if w < 0 else w)
+                        npieces = len(pieces)
+                        k = 0
+                    p = pieces[k]
+                    k += 1
+                    pos = i + len(p)
+                    if p[0] != "<":
+                        if "&" not in p:
+                            see = ("S", PCDATA, p)
+                            i = pos
                             continue
-                    else:
-                        m = start_match(src, j)
-                        if m is not None:
-                            i = m.end()
-                            hit = cache_get(m.group(0))
-                            if hit is None:
-                                hit = build_start_hit(dtd, m)
-                                if len(cache) < 65536:
-                                    cache[m.group(0)] = hit
-                            see, ws = hit
-                            if ws:
-                                warns_extend(ws)
-                            continue
-                    see = _slow_token()
-                else:
-                    m = special_search(src, i)
-                    if m is None:
-                        see = ("S", PCDATA, src[i:])
-                        i = n
-                    elif src[m.start()] == "<":
-                        j = m.start()  # j > i strictly (src[i] != '<')
-                        see = ("S", PCDATA, src[i:j])
-                        i = j
-                    else:
-                        # entity present: the gap ends at the next '<'
-                        # (read-pcdata stops only there); short gaps repeat
-                        # across a corpus (' &amp; ', '&nbsp;' runs), so
-                        # memoize decoded token + warns per raw gap
-                        lt = src.find("<", i)
-                        end = n if lt < 0 else lt
-                        raw = src[i:end]
-                        hit = pcache_get(raw)
+                        # entity-bearing gap (read-pcdata stops only at
+                        # '<'); short gaps repeat across a corpus
+                        # (' &amp; ', '&nbsp;' runs), so memoize decoded
+                        # token + warns per raw gap
+                        hit = pcache_get(p)
                         if hit is not None:
                             see, ws = hit
                             if ws:
                                 warns_extend(ws)
-                            i = end
                         else:
                             # inline decode of the warning-free common
                             # forms; the exact char machine handles the
                             # rest (unknown names, no ';', overflow, EOF)
-                            dec = decode_pcdata_fast(raw, tk.entities)
+                            dec = decode_pcdata_fast(p, entities, ememo)
                             if dec is not None:
                                 see = ("S", PCDATA, dec)
-                                i = end
-                                if len(raw) <= 256 and len(pcache) < 16384:
-                                    pcache[raw] = (see, ())
+                                if len(p) <= 256 and len(pcache) < 16384:
+                                    pcache[p] = (see, ())
                             else:
                                 w0 = len(tk.warnings)
                                 tk.i = i
-                                tok = tk.read_pcdata()
-                                i = tk.i
-                                see = ("S", PCDATA, tok[1])
+                                see = ("S", PCDATA, tk.read_pcdata()[1])
                                 # gaps ending in an INCOMPLETE reference
                                 # ('&', '&#', '&#x') warn differently at
                                 # EOF vs before '<' (read-entity-ref's EOF
                                 # branches), so their decode is not a pure
                                 # function of the raw gap -- never memoize
-                                if (len(raw) <= 256 and len(pcache) < 16384
-                                        and raw[-1] != "&"
-                                        and not raw.endswith("&#")
-                                        and not raw.endswith("&#x")):
-                                    pcache[raw] = (
+                                if (len(p) <= 256 and len(pcache) < 16384
+                                        and p[-1] != "&"
+                                        and not p.endswith("&#")
+                                        and not p.endswith("&#x")):
+                                    pcache[p] = (
                                         see, tuple(tk.warnings[w0:]))
+                        i = pos
+                        continue
+                    hit = cache_get(p)
+                    if hit is None:
+                        hit = _piece_hit(dtd, p)
+                        if hit is not None and len(cache) < 65536:
+                            cache[p] = hit
+                    if hit is not None:
+                        see, ws = hit
+                        if ws:
+                            warns_extend(ws)
+                        i = pos
+                        continue
+                    if len(p) > 1:
+                        c = p[1]
+                        if c not in "/!?" and not (c.isalpha()
+                                                   and c.isascii()):
+                            # read-tag: bad char after '<' -> literal '<';
+                            # the rest of the piece is read from i
+                            warn(3, f"Bad character after '<': {c!r} "
+                                    "-- ignored.")
+                            see = _LT_TOK
+                            i += 1
+                            continue
+                # Exact char machine: a piece no fast form takes, or the
+                # rest of a piece it stopped inside.  Then walk the piece
+                # boundaries up to its cursor; past the window, resume at
+                # the next '<' (always a boundary) and let the char
+                # machine read up to it.
+                see, i = _slow_token(dtd, tk, i)
+                while pos < i:
+                    if k < npieces:
+                        pos += len(pieces[k])
+                        k += 1
+                    else:
+                        pos = find("<", i)
+                        if pos < 0:
+                            pos = n
+                        pieces = ()
+                        k = npieces = 0
+            if held is not None:
+                # the heuristic's lookahead token has arrived
+                ein = [held] if see is _DONE else [held, see]
+                held = None
+                pending.extend(reversed(_heuristic(dtd, tk, stack[-1], ein)))
+                continue
             if see is _DONE:
                 break
         kind = see[0]
@@ -446,21 +510,10 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
             tk.warn(5, "parser step budget exceeded -- document truncated")
             break
         if pending:
-            nxt = pending.pop()
+            ein = [see, pending.pop()]
+            pending.extend(reversed(_heuristic(dtd, tk, stack[-1], ein)))
         else:
-            # pull one lookahead token via the exact machine (rare path)
-            nxt = None
-            while nxt is None:
-                if i >= n:
-                    if not eof_sent:
-                        eof_sent = True
-                        nxt = _EOF_TOK
-                    break
-                nxt = _slow_token()
-        ein = [see] if nxt is None else [see, nxt]
-        new_ein = _heuristic(dtd, tk, stack[-1], ein)
-        for t in reversed(new_ein):
-            pending.append(t)
+            held = see  # repaired once the next token is pulled
 
     doc.warnings = tk.warnings
     doc.root = root
@@ -593,58 +646,59 @@ def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer,
     return doc
 
 
-def _heuristic(dtd: Dtd, tk: Tokenizer, context, ein: list) -> list:
-    """Inline repair rules (sgml-parse.lisp:1213-1315), exact order."""
-    see = ein[0]
-    ctx_name = context[1]
+# heuristic repair outcomes (_heuristic_rule)
+_H_DROP, _H_CLOSE, _H_REOPEN, _H_STYLE, _H_LI, _H_TR, _H_SWAP = range(7)
+
+
+def _heuristic_rule(dtd: Dtd, ctx_name: str, kind: str, name: str,
+                    has_next: bool) -> int:
+    """Which inline repair rule (sgml-parse.lisp:1213-1315, exact order)
+    fires for token (kind, name) in context ctx_name."""
     eqv = dtd.eqv_eq
 
     def is_(tag: str) -> bool:
         # `is` in the reference: context matches `state` via elms-eqv and
         # the token matches `tag` via elms-eqv; "/NAME" means end tag.
         if tag.startswith("/"):
-            return see[0] == "E" and eqv(see[1], tag[1:])
-        return see[0] == "S" and eqv(see[1], tag)
+            return kind == "E" and eqv(name, tag[1:])
+        return kind == "S" and eqv(name, tag)
 
     def in_(state: str) -> bool:
         return eqv(state, ctx_name)
 
-    close_ctx = [_etag(ctx_name)] + ein
-    close_reopen = [_etag(ctx_name), see, context] + ein[1:]
-
     if "HTML" in dtd.roots:
-        if see[0] == "E" and see[1] == TOP:
-            return close_ctx
-        if see[0] == "S" and see[1] == "STYLE":
-            return [_stag("SPAN", [("CLASS", "illegalstyle")])] + ein[1:]
+        if kind == "E" and name == TOP:
+            return _H_CLOSE
+        if kind == "S" and name == "STYLE":
+            return _H_STYLE
         if in_("H1") and is_("CENTER"):
-            return close_reopen
+            return _H_REOPEN
         if in_("FONT") and (is_("CENTER") or is_("P")):
-            return close_reopen
+            return _H_REOPEN
         if in_("I") and is_("HR"):
-            return close_reopen
+            return _H_REOPEN
         if eqv(ctx_name, "FONT"):
-            return close_ctx
+            return _H_CLOSE
         if in_("CENTER") and is_("TR"):
-            return close_ctx
+            return _H_CLOSE
         if in_("H1") and is_("/H2"):
-            return close_ctx
+            return _H_CLOSE
         if in_("H1") and is_("UL"):
-            return close_ctx
+            return _H_CLOSE
         if in_("H3") and is_("/CENTER"):
-            return close_ctx
+            return _H_CLOSE
         if in_("DIV") and is_("/TD"):
-            return close_ctx
+            return _H_CLOSE
         if in_("UL") and (is_("P") or is_("A") or is_("IMG") or is_(PCDATA)):
-            return [_stag("LI")] + ein
+            return _H_LI
         if in_("TABLE") and is_("TD"):
-            return [_stag("TR")] + ein
+            return _H_TR
         if in_("TABLE") and is_(PCDATA):
-            return close_reopen
+            return _H_REOPEN
         if in_("NOSCRIPT") and is_("FRAMESET"):
-            return close_ctx
+            return _H_CLOSE
         if in_("TABLE") and is_("FORM"):
-            return close_reopen
+            return _H_REOPEN
         # INTENTIONAL DEVIATION from sgml-parse.lisp:1290-1294: the
         # reference swaps the first two queue items unconditionally --
         # `(list* (cadr eingabe) (car eingabe) (cddr eingabe))` -- so a
@@ -654,13 +708,38 @@ def _heuristic(dtd: Dtd, tk: Tokenizer, context, ein: list) -> list:
         # behind; we fall through to the default drop (warn level 4)
         # instead of enqueueing a bogus token.  Pinned both ways by
         # tests/test_parser_golden.py::test_form_in_tbody_queue_depth.
-        if in_("TBODY") and is_("/FORM") and len(ein) >= 2:
-            return [ein[1], ein[0]] + ein[2:]
+        if in_("TBODY") and is_("/FORM") and has_next:
+            return _H_SWAP
         if (in_("LI") or in_("UL")) and (is_("TD") or is_("/TD")):
-            return close_ctx
-    # default: drop the offending token (document-action :1199-1211)
-    tk.warn(4, f"[-] Saw {see[:2]!r} in {ctx_name} -- nuked.")
-    return ein[1:]
+            return _H_CLOSE
+    return _H_DROP
+
+
+def _heuristic(dtd: Dtd, tk: Tokenizer, context, ein: list) -> list:
+    """Inline repair rules (sgml-parse.lisp:1213-1315), exact order.  The
+    rule depends only on the context name, the token's kind and name and
+    whether a lookahead token is queued, so it is memoized per DTD."""
+    see = ein[0]
+    ctx_name = context[1]
+    key = (ctx_name, see[0], see[1], len(ein) >= 2)
+    rule = dtd.heuristic_rules.get(key)
+    if rule is None:
+        rule = dtd.heuristic_rules[key] = _heuristic_rule(dtd, *key)
+    if rule == _H_DROP:
+        # default: drop the offending token (document-action :1199-1211)
+        tk.warn(4, f"[-] Saw {see[:2]!r} in {ctx_name} -- nuked.")
+        return ein[1:]
+    if rule == _H_CLOSE:
+        return [_etag(ctx_name)] + ein
+    if rule == _H_REOPEN:
+        return [_etag(ctx_name), see, context] + ein[1:]
+    if rule == _H_STYLE:
+        return [_stag("SPAN", [("CLASS", "illegalstyle")])] + ein[1:]
+    if rule == _H_LI:
+        return [_stag("LI")] + ein
+    if rule == _H_TR:
+        return [_stag("TR")] + ein
+    return [ein[1], ein[0]] + ein[2:]  # _H_SWAP
 
 
 # ---------------------------------------------------------------------------

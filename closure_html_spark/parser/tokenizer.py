@@ -45,16 +45,28 @@ _SLOOPY_NAME = re.compile(r"""[A-Za-z0-9.:\-%/~#_+?!@()'";,\[\]&]+""")
 _SLOOPY_VALUE = re.compile(r"""[A-Za-z0-9.:\-%/~#_+?!@()'";,\[\]&=]+""")
 _WS_RUN = re.compile(r"[ \t\n\r\x0c]*")
 
-# well-formed entity forms ONLY (name/decimal/lowercase-hex, terminated by
-# ';'): the warning-free subset of read-entity-ref that the fused parse
-# loop may decode inline; anything else falls back to the exact machine
-_FAST_ENTITY = re.compile(
-    r"([A-Za-z][A-Za-z0-9.:\-]*);|#([0-9]+);|#x([0-9A-Fa-f]+);")
+# '&' plus, when it starts one, a well-formed ';'-terminated reference
+# (name/decimal/lowercase-hex): the warning-free subset of read-entity-ref
+# that the fused parse loop may decode inline.  Optional group, so
+# re.split yields None for every other '&'.
+_AMP_REF = re.compile(
+    r"&([A-Za-z][A-Za-z0-9.:\-]*;|#[0-9]+;|#x[0-9A-Fa-f]+;)?")
 
 BAD_TAG = "##BAD TAG##"
 
 
-def decode_pcdata_fast(raw: str, entities: dict) -> str | None:
+def _ref_value(ref: str | None, entities: dict) -> str | None:
+    """Decoded text of one _AMP_REF reference, or None when it is a bare
+    '&', an unknown name or a numeric beyond 16 bits."""
+    if ref is None:
+        return None
+    if ref[0] != "#":
+        return entities.get(ref[:-1])
+    num = int(ref[2:-1], 16) if ref[1] == "x" else int(ref[1:-1])
+    return chr(num) if num <= 0xFFFF else None
+
+
+def decode_pcdata_fast(raw: str, entities: dict, memo: dict) -> str | None:
     """Decode an entity-bearing pcdata gap IFF every '&' is a well-formed,
     ';'-terminated reference to a known entity (or an in-range numeric):
     exactly the cases where read_pcdata/read_entity_ref emit no warning
@@ -62,32 +74,23 @@ def decode_pcdata_fast(raw: str, entities: dict) -> str | None:
     caller then runs the exact char machine, so warnings, terminator-less
     references, overflow raws and `&#X`-style quirks keep bit-identical
     behavior (differential fuzz pins this).  Entity values are appended
-    verbatim, never rescanned, matching read-entity-ref."""
-    i = raw.find("&")
-    parts = []
-    prev = 0
-    get = entities.get
-    match = _FAST_ENTITY.match
-    while i >= 0:
-        m = match(raw, i + 1)
-        if m is None:
-            return None
-        name = m.group(1)
-        if name is not None:
-            val = get(name)
-            if val is None:
-                return None
-        else:
-            dec = m.group(2)
-            num = int(dec) if dec is not None else int(m.group(3), 16)
-            if num > 0xFFFF:
-                return None
-            val = chr(num)
-        parts.append(raw[prev:i])
-        parts.append(val)
-        prev = m.end()
-        i = raw.find("&", prev)
-    parts.append(raw[prev:])
+    verbatim, never rescanned, matching read-entity-ref.  `memo` maps
+    reference text to its decoded value; the caller owns it per entity
+    table, and only valid references are stored (at most 4096)."""
+    parts = _AMP_REF.split(raw)
+    refs = parts[1::2]
+    get = memo.get
+    vals = [get(r) for r in refs]
+    if None in vals:
+        for j, r in enumerate(refs):
+            if vals[j] is None:
+                v = _ref_value(r, entities)
+                if v is None:
+                    return None
+                vals[j] = v
+                if len(memo) < 4096:
+                    memo[r] = v
+    parts[1::2] = vals
     return "".join(parts)
 
 
@@ -420,8 +423,9 @@ class Tokenizer:
 
 
 # ---------------------------------------------------------------------------
-# Fast path: match a whole well-formed tag with ONE compiled regex and fall
-# back to the exact char machine above for anything unusual.  The fast
+# Fast path: the fused parse loop (pda.sgml_parse) matches a whole
+# well-formed tag piece with ONE compiled regex and falls back to the exact
+# char machine above for anything unusual.  The fast
 # patterns are deliberately narrower than the grammar (no '&' or quotes in
 # names/unquoted values, no '&' inside quoted literals, whitespace between
 # attributes) so every fast match produces byte-identical tokens to the
@@ -447,47 +451,3 @@ _FAST_START_TAG = re.compile(
 _FAST_ATTR = re.compile(
     _FWS + r"""*([A-Za-z0-9.:\-%~#_+?!@();,\[\]][A-Za-z0-9.:\-%/~#_+?!@();,\[\]]*)"""
     r"""(?:""" + _FWS + r"""*=""" + _FWS + r"""*("[^"&]*"|'[^'&]*'|[A-Za-z0-9.:\-%/~#_+?!@();,\[\]][A-Za-z0-9.:\-%/~#_+?!@();,\[\]=]*))?""")
-
-
-def _fast_atts(raw: str) -> list:
-    if not raw:
-        return []
-    atts = []
-    for m in _FAST_ATTR.finditer(raw):
-        name, value = m.group(1), m.group(2)
-        if value is None:
-            atts.append(name)
-        elif value[0] in "\"'":
-            atts.append((name, value[1:-1]))
-        else:
-            atts.append((name, value))
-    return atts
-
-
-class FastTokenizer(Tokenizer):
-    """Tokenizer with the single-regex tag fast path."""
-
-    __slots__ = ()
-
-    def read_token(self):
-        s, i, n = self.s, self.i, self.n
-        if i >= n:
-            return ("eof",)
-        if s[i] != "<":
-            return self.read_pcdata()
-        j = i + 1
-        if j < n:
-            c = s[j]
-            if c == "/":
-                m = _FAST_END_TAG.match(s, j)
-                if m is not None:
-                    self.i = m.end()
-                    return ("end", m.group(1).upper())
-            elif c.isalpha() and c.isascii():
-                m = _FAST_START_TAG.match(s, j)
-                if m is not None:
-                    self.i = m.end()
-                    kind = "empty" if m.group(3) else "start"
-                    return (kind, m.group(1).upper(), _fast_atts(m.group(2)))
-        self.i = j
-        return self.read_tag()
