@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .relational import _cap_buckets
+
 MEDIA_SCHEMA = ("media_id long, doc_id long, mime string, payload binary, "
                 "meta struct<width:int,height:int,n_frames:int,"
                 "sample_rate:int>")
@@ -290,11 +292,7 @@ def q_media_phash_neardup(spark, sf_dir, max_hamming: int = 1,
         .alias("b"))
         .select("media_id", "ph", F.col("b.band").alias("band"),
                 F.col("b.val").alias("val")))
-    if max_bucket is not None:
-        from pyspark.sql import Window
-        w = Window.partitionBy("band", "val").orderBy("media_id")
-        bands = (bands.withColumn("rn", F.row_number().over(w))
-                 .filter(F.col("rn") <= max_bucket).drop("rn"))
+    bands = _cap_buckets(bands, ["band", "val"], "media_id", max_bucket)
     a = bands.select(F.col("media_id").alias("id_a"),
                      F.col("ph").alias("ph_a"), "band", "val")
     b = bands.select(F.col("media_id").alias("id_b"),

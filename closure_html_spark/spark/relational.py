@@ -432,7 +432,7 @@ ORDER BY a_id, b_id
 """
 
 
-def _dot_expr(a, b, dim: int = 64):
+def _dot_expr(a, b):
     """Dot product via zip_with/aggregate.  Round 3 unrolled this into 64
     element_at terms on the theory that HOF lambdas are interpreted while
     the unrolled sum stays in whole-stage codegen; an interleaved ABBA A/B
@@ -442,7 +442,7 @@ def _dot_expr(a, b, dim: int = 64):
     back to interpretation of a far bigger tree, while the HOF loop is a
     tight JVM array loop).  Reverted to the fold form; left-associated
     from 0.0 so the float result is bit-identical to DuckDB's
-    list_dot_product.  `dim` kept for signature stability (unused)."""
+    list_dot_product."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
@@ -463,12 +463,42 @@ def _dot_expr(a, b, dim: int = 64):
 # -- so every dot/norm is bit-identical to _dot_expr's and the DuckDB
 # oracles replay unchanged.  Rounding/division stay JVM-side.
 
-def _np_embs(col, dim: int = 64):
-    """(n, dim) float64 matrix from an Arrow list<float> column -- the
-    exact element sequence zip_with sees, as one contiguous buffer."""
+# the embedding width every kernel and sign matrix is built for; inputs are
+# checked against it (_emb_matrix), never reshaped on trust
+_EMB_DIM = 64
+
+
+def _emb_matrix(col):
+    """(n, _EMB_DIM) float32 matrix from an Arrow list<float> column -- the
+    exact element sequence zip_with sees, as one contiguous buffer.  A row
+    of any other length (or a null row) raises ValueError naming the
+    lengths found: a bare reshape would fold ragged rows into their
+    neighbours without a trace."""
     import numpy as np
-    arr = col.flatten().to_numpy(zero_copy_only=False)
-    return np.asarray(arr, dtype=np.float64).reshape(-1, dim)
+    import pyarrow.compute as pc
+    found = set(pc.unique(pc.list_value_length(col)).to_pylist())
+    if found - {_EMB_DIM}:
+        raise ValueError(f"embeddings must have {_EMB_DIM} elements; found "
+                         f"lengths {', '.join(sorted(map(str, found)))}")
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return np.asarray(flat, dtype=np.float32).reshape(-1, _EMB_DIM)
+
+
+def _np_embs(col):
+    """(n, _EMB_DIM) float64 matrix from an Arrow list<float> column (see
+    _emb_matrix for the length check)."""
+    import numpy as np
+    return _emb_matrix(col).astype(np.float64)
+
+
+def _emb_rows(tbl):
+    """(ids ascending, float32 matrix) from an Arrow (vec_id, embedding)
+    table."""
+    import numpy as np
+    ids = np.asarray(tbl.column("vec_id").to_numpy(zero_copy_only=False))
+    mat = _emb_matrix(tbl.column("embedding").combine_chunks())
+    order = np.argsort(ids)
+    return ids[order], mat[order]
 
 
 def _np_seq_dot(a, b):
@@ -483,7 +513,7 @@ def _np_seq_dot(a, b):
 
 
 def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str],
-                 out: str = "dot", dim: int = 64):
+                 out: str = "dot"):
     """Append `out` = dot(a_col, b_col) (raw double, unrounded) to `df`
     via one numpy mapInArrow pass; keeps only `keep` + `out`."""
     import pyarrow as pa
@@ -492,8 +522,8 @@ def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str],
 
     def fn(batches):
         for b in batches:
-            d = _np_seq_dot(_np_embs(b.column(a_col), dim),
-                            _np_embs(b.column(b_col), dim))
+            d = _np_seq_dot(_np_embs(b.column(a_col)),
+                            _np_embs(b.column(b_col)))
             yield pa.RecordBatch.from_arrays(
                 [b.column(c) for c in keep] + [pa.array(d, pa.float64())],
                 names=keep + [out])
@@ -512,62 +542,67 @@ def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str],
 _EMB_BCAST_MAX_BYTES = 64 << 20
 
 
-def _local_emb_table(sf_dir: str | None, dim: int = 64):
+def _parquet_files(sf_dir: str, name: str) -> list[str] | None:
+    """The files of table `name` when it is a LOCAL parquet file or
+    directory under sf_dir; None otherwise."""
+    import glob
+    import os
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    if os.path.isdir(path):
+        files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
+                                 recursive=True))
+    elif os.path.isfile(path):
+        files = [path]
+    else:
+        return None
+    return files or None
+
+
+def _local_emb_table(sf_dir: str | None):
     """(sorted ids, float32 matrix) read driver-side straight from a LOCAL
     embeddings.parquet below the broadcast gate -- the footer-stats
     pattern (_parquet_n_rows) extended to the bounded-collection case: it
     saves one Spark job per bounded codebook/query collection.  Returns
     None for non-local/oversized tables; callers fall back to a
     distributed collect."""
-    import glob
     import os
-    if sf_dir is None:
-        return None
     try:
-        import numpy as np
         import pyarrow.parquet as pq
-        path = os.path.join(sf_dir, "embeddings.parquet")
-        if os.path.isdir(path):
-            files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
-                                     recursive=True))
-        elif os.path.isfile(path):
-            files = [path]
-        else:
-            return None
-        if not files or sum(os.path.getsize(f) for f in files) \
+        files = _parquet_files(sf_dir, "embeddings")
+        if files is None or sum(os.path.getsize(f) for f in files) \
                 > _EMB_BCAST_MAX_BYTES:
             return None
         tbl = pq.read_table(files, columns=["vec_id", "embedding"])
-        ids = np.asarray(tbl.column("vec_id").to_numpy(
-            zero_copy_only=False))
-        mat = np.asarray(
-            tbl.column("embedding").combine_chunks().flatten()
-            .to_numpy(zero_copy_only=False),
-            dtype=np.float32).reshape(-1, dim)
-        order = np.argsort(ids)
-        return ids[order], mat[order]
     except Exception:
         return None
+    return _emb_rows(tbl)
 
 
-def _emb_matrix_bcast(emb, dim: int = 64, sf_dir: str | None = None):
+def _emb_subset(emb, sf_dir: str | None, keep):
+    """(ids ascending, float64 matrix) of the bounded vector subset whose
+    vec_id passes `keep` -- a query or centroid side.  `keep` is applied
+    to a numpy id array AND to the vec_id Column, so it must be written
+    with operators both accept (`lambda v: v < n_queries`).  Read from the
+    local table when there is one (no Spark job), else one filtered
+    collect."""
+    import numpy as np
+    local = _local_emb_table(sf_dir)
+    if local is None:
+        local = _emb_rows(emb.filter(keep(F.col("vec_id")))
+                          .select("vec_id", "embedding").toArrow())
+    ids, mat = local
+    sel = keep(ids)
+    return [int(v) for v in ids[sel]], mat[sel].astype(np.float64)
+
+
+def _emb_matrix_bcast(emb, sf_dir: str | None):
     """Broadcast (sorted ids, float32 matrix, float64 norms) of the whole
     embeddings frame.  Norms use the same sequential fold as _np_normed
     (bit-identical)."""
     import numpy as np
-    local = _local_emb_table(sf_dir, dim)
-    if local is not None:
-        ids, mat = local
-    else:
-        tbl = emb.select("vec_id", "embedding").toArrow()
-        ids = np.asarray(tbl.column("vec_id").to_numpy(
-            zero_copy_only=False))
-        mat = np.asarray(
-            tbl.column("embedding").combine_chunks().flatten()
-            .to_numpy(zero_copy_only=False),
-            dtype=np.float32).reshape(-1, dim)
-        order = np.argsort(ids)
-        ids, mat = ids[order], mat[order]
+    local = _local_emb_table(sf_dir)
+    ids, mat = local if local is not None else _emb_rows(
+        emb.select("vec_id", "embedding").toArrow())
     norms = np.sqrt(_np_seq_dot(mat.astype(np.float64),
                                 mat.astype(np.float64)))
     return emb.sparkSession.sparkContext.broadcast((ids, mat, norms))
@@ -602,7 +637,7 @@ def _np_pair_dot_bcast(pairs, bc, a_id: str = "a_id", b_id: str = "b_id"):
             "a_norm double, b_norm double")
 
 
-def _np_cent_sims(emb, c_ids, c_mat, dim: int = 64):
+def _np_cent_sims(emb, c_ids, c_mat):
     """(vec_id, c_id, raw) rows -- raw = dot(v, c) / (|v| * |c|) UNROUNDED
     -- for every (vector, centroid) pair, from one numpy kernel with the
     bounded centroid matrix in the closure: the kernel twin of the
@@ -618,7 +653,7 @@ def _np_cent_sims(emb, c_ids, c_mat, dim: int = 64):
 
     def fn(batches):
         for b in batches:
-            e = _np_embs(b.column("embedding"), dim)
+            e = _np_embs(b.column("embedding"))
             n = e.shape[0]
             vn = np.sqrt(_np_seq_dot(e, e))
             vid = b.column("vec_id").to_numpy(zero_copy_only=False)
@@ -636,7 +671,7 @@ def _np_cent_sims(emb, c_ids, c_mat, dim: int = 64):
         fn, "vec_id bigint, c_id bigint, raw double")
 
 
-def _np_normed(emb, dim: int = 64, out: str = "norm"):
+def _np_normed(emb, out: str = "norm"):
     """(vec_id, embedding, norm) with norm = sqrt(fold(x^2)) -- the numpy
     twin of the per-vector norm lambda (same sequential add order; IEEE
     sqrt is exact so the result is bit-identical)."""
@@ -645,7 +680,7 @@ def _np_normed(emb, dim: int = 64, out: str = "norm"):
     def fn(batches):
         import numpy as np
         for b in batches:
-            e = _np_embs(b.column("embedding"), dim)
+            e = _np_embs(b.column("embedding"))
             n = np.sqrt(_np_seq_dot(e, e))
             yield pa.RecordBatch.from_arrays(
                 [b.column("vec_id"), b.column("embedding"),
@@ -654,6 +689,35 @@ def _np_normed(emb, dim: int = 64, out: str = "norm"):
 
     return emb.select("vec_id", "embedding").mapInArrow(
         fn, f"vec_id bigint, embedding array<float>, {out} double")
+
+
+def _cosine_rerank(pairs, emb, sf_dir, n: int, a: str = "a_id",
+                   b: str = "b_id"):
+    """(a, b, sim) for an ids-only candidate frame: sim = dot / (|a| * |b|)
+    from the numpy kernels, divided and rounded to 6 places JVM-side, so
+    it equals the interpreted-fold cosine bit for bit.  n (the table's row
+    count) decides the shape.  Below the broadcast gate the pairs cross
+    the Python boundary as ids only and vectors come from one broadcast
+    matrix (the old plan shipped 2 x 64 floats PER PAIR -- ~800 MB at
+    sf0.1 -- through two broadcast joins and the Arrow exchange).  Past
+    the gate both sides equi-join the normed table and carry their
+    vectors to the kernel; no broadcast hint there, since a frame that
+    holds embeddings is exactly what the gate judged too big to ship."""
+    if n * _EMB_DIM * 4 <= _EMB_BCAST_MAX_BYTES:
+        scored = _np_pair_dot_bcast(pairs, _emb_matrix_bcast(emb, sf_dir),
+                                    a_id=a, b_id=b)
+    else:
+        normed = _np_normed(emb).localCheckpoint(eager=True)
+        ea = normed.select(F.col("vec_id").alias(a),
+                           F.col("embedding").alias("a_emb"),
+                           F.col("norm").alias("a_norm"))
+        eb = normed.select(F.col("vec_id").alias(b),
+                           F.col("embedding").alias("b_emb"),
+                           F.col("norm").alias("b_norm"))
+        scored = _np_pair_dot(pairs.join(ea, a).join(eb, b), "a_emb",
+                              "b_emb", keep=[a, b, "a_norm", "b_norm"])
+    sim = F.round(F.col("dot") / (F.col("a_norm") * F.col("b_norm")), 6)
+    return scored.select(a, b, sim.alias("sim"))
 
 
 def q_ann_cosine_topk(spark, sf_dir, k: int = 5, n_queries: int = 3):
@@ -665,21 +729,8 @@ def q_ann_cosine_topk(spark, sf_dir, k: int = 5, n_queries: int = 3):
     crossJoin with interpreted per-row folds; dot and norms keep the fold
     order (and dot/norm-product commutativity is exact in IEEE floats, so
     sim is bit-identical); 6dp rounding stays JVM-side."""
-    import numpy as np
     emb = _t(spark, sf_dir, "embeddings")
-    local = _local_emb_table(sf_dir)
-    if local is not None:
-        ids, mat = local
-        sel = ids < n_queries
-        q_ids = [int(v) for v in ids[sel]]
-        q_mat = mat[sel].astype(np.float64)
-    else:
-        qrows = sorted(emb.filter(F.col("vec_id") < n_queries)
-                       .select("vec_id", "embedding").collect(),
-                       key=lambda r: r.vec_id)
-        q_ids = [int(r.vec_id) for r in qrows]
-        q_mat = np.asarray([list(r.embedding) for r in qrows],
-                           dtype=np.float32).astype(np.float64)
+    q_ids, q_mat = _emb_subset(emb, sf_dir, lambda v: v < n_queries)
     scored = (_np_cent_sims(emb, q_ids, q_mat)
               .filter(F.col("vec_id") != F.col("c_id"))
               .select(F.col("c_id").alias("q_id"), "vec_id",
@@ -713,59 +764,41 @@ FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk
 """
 
 
-def _minhash_sigs(docs, n_hashes: int = 16, portable_hash: bool = True):
+def _minhash_sigs(docs, n_hashes: int = 16):
     """MinHash signatures (doc_id, h0..h{n-1}), fully JVM-side: exploded
     shingles -> n_hashes salted hashes per row -> map-side partial MIN
     (stays in whole-stage codegen end to end; HOF lambdas would not).
 
-    portable_hash=True derives the hashes from ONE md5 per shingle via
-    Carter-Wegman-style linear mixes of its two 32-bit halves (a*k1 +
-    b*k2 + h, all < 2^41 so no BIGINT overflow in either engine -- DuckDB
-    errors on overflow where Spark wraps), so DuckDB replays the
-    signatures bit-for-bit.  portable_hash=False swaps in xxhash64 --
-    cheaper per shingle, the knob to flip at 100 TB if hashing ever
-    dominates the profile."""
+    The hashes derive from ONE md5 per shingle via Carter-Wegman-style
+    linear mixes of its two 32-bit halves (a*k1 + b*k2 + h, all < 2^41 so
+    no BIGINT overflow in either engine -- DuckDB errors on overflow where
+    Spark wraps), so DuckDB replays the signatures bit-for-bit."""
     words = F.split(F.trim(F.col("text")), r"\s+")
     docs = docs.filter(F.size(words) >= 3)
-    if portable_hash:
-        md5 = F.md5(F.col("tri"))
-        a = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
-        b = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
-
-        def _h(h):
-            return (a * F.lit(2 * h + 3) + b * F.lit(2 * h + 101)
-                    + F.lit(h)).alias(f"x{h}")
-    else:
-        def _h(h):
-            return F.xxhash64("tri", F.lit(h)).alias(f"x{h}")
-    tri = _shingles(docs).select(
-        "doc_id", *[_h(h) for h in range(n_hashes)])
+    md5 = F.md5(F.col("tri"))
+    a = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
+    b = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
+    tri = _shingles(docs).select("doc_id", *[
+        (a * F.lit(2 * h + 3) + b * F.lit(2 * h + 101)
+         + F.lit(h)).alias(f"x{h}")
+        for h in range(n_hashes)])
     return tri.groupBy("doc_id").agg(
         *[F.min(f"x{h}").alias(f"h{h}") for h in range(n_hashes)])
 
 
-def _minhash_banded(sigs, n_hashes: int, n_bands: int,
-                    portable_hash: bool = True):
+def _minhash_banded(sigs, n_hashes: int, n_bands: int):
     """(doc_id, band, bucket) rows from a signature table -- one pass via
     posexplode of an array of (band, bucket) structs.  (A unionAll of
     per-band selects would re-execute the whole shingle+agg subplan once
     per band: Catalyst does not dedupe common subplans across union
     branches.)"""
     per_band = n_hashes // n_bands
-    if portable_hash:
-        def _bucket(b):
-            return F.md5(F.concat_ws(",", *[
-                F.col(f"h{h}")
-                for h in range(b * per_band, (b + 1) * per_band)]))
-    else:
-        def _bucket(b):
-            return F.xxhash64(*[
-                F.col(f"h{h}")
-                for h in range(b * per_band, (b + 1) * per_band)]
-            ).cast("string")
     band_structs = F.array(*[
         F.struct(F.lit(b).cast("int").alias("band"),
-                 _bucket(b).alias("bucket"))
+                 F.md5(F.concat_ws(",", *[
+                     F.col(f"h{h}")
+                     for h in range(b * per_band, (b + 1) * per_band)]))
+                 .alias("bucket"))
         for b in range(n_bands)])
     return (sigs
             .select("doc_id", F.explode(band_structs).alias("bb"))
@@ -773,15 +806,14 @@ def _minhash_banded(sigs, n_hashes: int, n_bands: int,
                     F.col("bb.bucket").alias("bucket")))
 
 
-def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
-                    portable_hash: bool = True):
+def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4):
     """MinHash+LSH candidate generation: shingle -> salted hash -> min per
     hash -> band signature -> groupBy band bucket.  Returns candidate pair
     counts per band bucket (see _minhash_sigs for the portable-hash
     machinery the DuckDB oracle replays)."""
     docs = _t(spark, sf_dir, "documents")
-    sigs = _minhash_sigs(docs, n_hashes, portable_hash)
-    allb = _minhash_banded(sigs, n_hashes, n_bands, portable_hash)
+    sigs = _minhash_sigs(docs, n_hashes)
+    allb = _minhash_banded(sigs, n_hashes, n_bands)
     return (allb.groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.min("doc_id").alias("min_doc"))
@@ -789,9 +821,60 @@ def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
             .orderBy("band", "bucket"))
 
 
+# --- candidate pairs: blocking -> hot-bucket cap -> self-join (the SparkER
+# blocking / block-purging split); the near-dup queries share these stages
+# and keep their own rerank
+
+def _cap_buckets(df, keys: list[str], order_col: str,
+                 max_bucket: int | None):
+    """Hot-bucket guard: keep the first max_bucket rows (lowest order_col)
+    of every `keys` bucket; None returns df unchanged.  One degenerate
+    bucket -- thousands of byte-identical pages, zero vectors -- makes
+    |bucket|^2 pairs, the crossJoin again.  The window partitions on the
+    key the later join shuffles on, so its exchange is reused, not
+    added."""
+    if max_bucket is None:
+        return df
+    w = Window.partitionBy(*keys).orderBy(order_col)
+    return (df.withColumn("_rn", F.row_number().over(w))
+            .filter(F.col("_rn") <= max_bucket).drop("_rn"))
+
+
+def _candidate_pairs(blocks, id_col: str, keys: list[str],
+                     max_bucket: int | None):
+    """Distinct (a_id, b_id), a_id < b_id, of ids sharing ANY block row:
+    the capped block table is materialized once for its two self-join
+    sides (Catalyst does not dedupe common subplans), then a bucket
+    equi-join on `keys`."""
+    blocks = _cap_buckets(blocks, keys, id_col, max_bucket) \
+        .localCheckpoint(eager=True)
+    a = blocks.select(F.col(id_col).alias("a_id"), *keys)
+    b = blocks.select(F.col(id_col).alias("b_id"), *keys)
+    return (a.join(b, keys)
+            .filter(F.col("a_id") < F.col("b_id"))
+            .select("a_id", "b_id").distinct())
+
+
+def _sig_side(sigs, id_name: str, prefix: str):
+    """One side of a signature join: doc_id -> id_name, h{i} ->
+    {prefix}{i} (the a/b columns _est_jaccard compares)."""
+    return sigs.select(F.col("doc_id").alias(id_name), *[
+        F.col(c).alias(prefix + c[1:]) for c in sigs.columns
+        if c != "doc_id"])
+
+
+def _est_jaccard(n_hashes: int):
+    """Estimated Jaccard of a joined a/b signature row: the fraction of the
+    n_hashes minima that agree (the unbiased MinHash estimator), 4dp."""
+    agree = None
+    for h in range(n_hashes):
+        t = (F.col(f"a{h}") == F.col(f"b{h}")).cast("int")
+        agree = t if agree is None else agree + t
+    return F.round(agree / F.lit(float(n_hashes)), 4)
+
+
 def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
                         threshold: float = 0.5,
-                        portable_hash: bool = True,
                         max_bucket: int | None = 65536):
     """MinHash near-duplicate pairs with ESTIMATED Jaccard -- the second
     stage of the standard MinHash dedup pipeline: banding proposes
@@ -803,49 +886,26 @@ def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
     verification (q_jaccard_pairs) runs only on survivors if at all.
     Ids+signatures only through the shuffle; DuckDB replays everything.
 
-    Hot-bucket guard (same pattern as q_embedding_neardup_lsh): a single
-    boilerplate cluster -- thousands of byte-identical error pages share
-    EVERY band bucket -- makes |bucket|^2 pairs inside one bucket, which
-    is the crossJoin again.  max_bucket keeps the first max_bucket members
-    per (band, bucket) (deterministic: lowest doc_id; the window
-    partitions on the join key so the exchange is reused, not added).
-    Pairs among dropped members survive via the doc's other n_bands-1
-    bands unless those are identical too -- i.e. only true mega-dup
-    clusters are trimmed, and a dedup pass keeps one member anyway.  The
-    default (64x any sane expected occupancy) never fires at gate scale,
-    so the DuckDB oracle needs no cap clause; None disables."""
+    Hot-bucket guard (_cap_buckets): max_bucket keeps the first
+    max_bucket members per (band, bucket), lowest doc_id first.  Pairs
+    among dropped members survive via the doc's other n_bands-1 bands
+    unless those are identical too -- i.e. only true mega-dup clusters
+    are trimmed, and a dedup pass keeps one member anyway.  The default
+    (64x any sane expected occupancy) never fires at gate scale, so the
+    DuckDB oracle needs no cap clause; None disables."""
     docs = _t(spark, sf_dir, "documents")
     # round 8 (guide §2.4): sigs feeds three consumers (banding + both
-    # estimator sides) and allb two (both self-join sides); without
+    # estimator sides) and the bands two (both self-join sides); without
     # materialization every consumer re-ran the full shingle+minhash scan
     # (8 document scans in the before plan).  Both frames are ids+hashes
     # only -- the incremental_dedup localCheckpoint precedent.
-    sigs = _minhash_sigs(docs, n_hashes, portable_hash) \
-        .localCheckpoint(eager=True)
-    allb = _minhash_banded(sigs, n_hashes, n_bands, portable_hash)
-    if max_bucket is not None:
-        wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
-        allb = (allb.withColumn("_rn", F.row_number().over(wcap))
-                .filter(F.col("_rn") <= max_bucket).drop("_rn"))
-    allb = allb.localCheckpoint(eager=True)
-    a = allb.select(F.col("doc_id").alias("a_id"), "band", "bucket")
-    b = allb.select(F.col("doc_id").alias("b_id"), "band", "bucket")
-    cand = (a.join(b, ["band", "bucket"])
-            .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id").distinct())
-    sa = sigs.select(F.col("doc_id").alias("a_id"),
-                     *[F.col(f"h{h}").alias(f"a{h}")
-                       for h in range(n_hashes)])
-    sb = sigs.select(F.col("doc_id").alias("b_id"),
-                     *[F.col(f"h{h}").alias(f"b{h}")
-                       for h in range(n_hashes)])
-    agree = None
-    for h in range(n_hashes):
-        t = (F.col(f"a{h}") == F.col(f"b{h}")).cast("int")
-        agree = t if agree is None else agree + t
-    est = F.round(agree / F.lit(float(n_hashes)), 4)
-    return (cand.join(sa, "a_id").join(sb, "b_id")
-            .select("a_id", "b_id", est.alias("est_jaccard"))
+    sigs = _minhash_sigs(docs, n_hashes).localCheckpoint(eager=True)
+    cand = _candidate_pairs(_minhash_banded(sigs, n_hashes, n_bands),
+                            "doc_id", ["band", "bucket"], max_bucket)
+    return (cand.join(_sig_side(sigs, "a_id", "a"), "a_id")
+            .join(_sig_side(sigs, "b_id", "b"), "b_id")
+            .select("a_id", "b_id",
+                    _est_jaccard(n_hashes).alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= threshold)
             .orderBy("a_id", "b_id"))
 
@@ -1805,7 +1865,7 @@ bands AS (
 
 
 def _minhash_oracle_sql(n_hashes: int = 16, n_bands: int = 4) -> str:
-    """DuckDB replay of q_minhash_bands(portable_hash=True)."""
+    """DuckDB replay of q_minhash_bands."""
     return f"""
 WITH {_minhash_ctes(n_hashes, n_bands)}
 SELECT band, bucket, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc
@@ -2300,19 +2360,10 @@ def _parquet_n_rows(sf_dir: str, name: str) -> int | None:
     never triggers a hidden full-scan count() action (round-3 verdict
     wrong #3).  Returns None for non-local / non-parquet locations; callers
     fall back to an explicit n_rows parameter or df.count()."""
-    import glob
-    import os
     try:
         import pyarrow.parquet as pq
-        path = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.isdir(path):
-            files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
-                                     recursive=True))
-        elif os.path.isfile(path):
-            files = [path]
-        else:
-            return None
-        if not files:
+        files = _parquet_files(sf_dir, name)
+        if files is None:
             return None
         return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
     except Exception:
@@ -2367,7 +2418,7 @@ def lsh_band_bits(n_rows: int, lo: int = 4, hi: int = 20) -> int:
     return max(lo, min(hi, math.ceil(math.log2(n_rows)) - 10))
 
 
-def _rhp_sign_matrix(n_bits: int, dim: int = 64) -> list[list[float]]:
+def _rhp_sign_matrix(n_bits: int) -> list[list[float]]:
     """Deterministic +-1 hyperplane matrix derived from md5 ("rhp:bit:dim"),
     computed ONCE at plan-build time and baked into the plan as array
     literals -- portable across engines by construction: the DuckDB oracles
@@ -2376,15 +2427,15 @@ def _rhp_sign_matrix(n_bits: int, dim: int = 64) -> list[list[float]]:
     further: no per-row hashing exists at all here)."""
     import hashlib
     return [[1.0 if hashlib.md5(f"rhp:{b}:{d}".encode()).digest()[0] % 2 == 0
-             else -1.0 for d in range(dim)]
+             else -1.0 for d in range(_EMB_DIM)]
             for b in range(n_bits)]
 
 
-def _rhp_bands(emb_col, band_bits: int, n_bands: int, dim: int = 64):
+def _rhp_bands(emb_col, band_bits: int, n_bands: int):
     """Array of (band, val) structs: val = the band's band_bits hyperplane
     sign bits packed little-endian.  Each bit is sign(dot(embedding, +-1
     row)) via zip_with/aggregate -- JVM-side, whole-stage codegen."""
-    signs = _rhp_sign_matrix(band_bits * n_bands, dim)
+    signs = _rhp_sign_matrix(band_bits * n_bands)
 
     def bit(i):
         dot = F.aggregate(
@@ -2403,7 +2454,7 @@ def _rhp_bands(emb_col, band_bits: int, n_bands: int, dim: int = 64):
     return F.array(*structs)
 
 
-def _rhp_bands_np(emb, band_bits: int, n_bands: int, dim: int = 64):
+def _rhp_bands_np(emb, band_bits: int, n_bands: int):
     """(vec_id, bk struct<band:int,val:bigint>) rows -- the numpy twin of
     explode(_rhp_bands(...)): each sign bit is the SAME left-associated
     float64 fold as the interpreted zip_with/aggregate version (see the
@@ -2411,14 +2462,14 @@ def _rhp_bands_np(emb, band_bits: int, n_bands: int, dim: int = 64):
     one mapInArrow pass replaces band_bits*n_bands interpreted 64-element
     folds per row (the round-8 profile's single largest cost)."""
     import pyarrow as pa
-    signs = _rhp_sign_matrix(band_bits * n_bands, dim)
+    signs = _rhp_sign_matrix(band_bits * n_bands)
     n_bits = band_bits * n_bands
 
     def fn(batches):
         import numpy as np
         S = np.asarray(signs, dtype=np.float64)
         for b in batches:
-            e = _np_embs(b.column("embedding"), dim)
+            e = _np_embs(b.column("embedding"))
             n = e.shape[0]
             vals = np.zeros((n, n_bands), dtype=np.int64)
             for i in range(n_bits):
@@ -2456,11 +2507,10 @@ def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
     test_embedding_neardup_lsh_recall pins recall against it, and the
     DuckDB oracle replays the signature bit-for-bit (md5 sign matrix).
 
-    Hot-bucket guard (the jaccard max_df pattern): the sizing rule targets
-    ~2^10 EXPECTED rows per bucket, but on real embeddings one degenerate
+    Hot-bucket guard (_cap_buckets): the sizing rule targets ~2^10
+    EXPECTED rows per bucket, but on real embeddings one degenerate
     signature (zero vectors, a boilerplate-dominated cluster) can swallow
-    a large fraction of the corpus, and |bucket|^2 inside a single bucket
-    reintroduces the crossJoin.  max_bucket (default 64x the expected
+    a large fraction of the corpus.  max_bucket (default 64x the expected
     occupancy -- fires only on pathological skew, never at gate scale, so
     the DuckDB oracle needs no cap clause) keeps the first max_bucket
     members per (band, val) bucket (deterministic: lowest vec_id first,
@@ -2475,52 +2525,19 @@ def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
     pass n_rows (e.g. from catalog table stats) or band_bits explicitly
     when the input is not a local parquet table."""
     emb = _t(spark, sf_dir, "embeddings")
+    n = _embeddings_n_rows(emb, sf_dir, n_rows)
     if band_bits is None:
-        band_bits = lsh_band_bits(_embeddings_n_rows(emb, sf_dir, n_rows))
+        band_bits = lsh_band_bits(n)
     # round-8 (guide §4.2 + §2.4): signatures come from ONE numpy
     # mapInArrow pass (bit-identical fold, see _rhp_bands_np) and the tiny
     # (vec_id, bk) frame is materialized once -- the interpreted banding
     # subtree previously executed TWICE (both sides of the self-join;
     # plans/r08/embedding_neardup_lsh_before.txt shows the duplicated
-    # Generate), at scan parallelism 1
-    banded = _rhp_bands_np(emb, band_bits, n_bands)
-    if max_bucket is not None:
-        # window partitions on the SAME key the self-join shuffles on, so
-        # the exchange is shared (ReusedExchange), not an extra shuffle
-        wcap = Window.partitionBy("bk").orderBy("vec_id")
-        banded = (banded.withColumn("_rn", F.row_number().over(wcap))
-                  .filter(F.col("_rn") <= max_bucket).drop("_rn"))
-    banded = banded.localCheckpoint(eager=True)
-    a = banded.select(F.col("vec_id").alias("a_id"), F.col("bk").alias("a_bk"))
-    b = banded.select(F.col("vec_id").alias("b_id"), F.col("bk").alias("b_bk"))
-    pairs = (a.join(b, a.a_bk == b.b_bk)             # bucket equi-join
-             .filter(F.col("a_id") < F.col("b_id"))
-             .select("a_id", "b_id")
-             .dropDuplicates(["a_id", "b_id"]))      # ANY-band semantics
-    # rerank: raw pair dots + per-vector norms from the numpy kernels;
-    # division + 6dp rounding + threshold stay JVM-side, so the emitted
-    # sim is unchanged.  Below the broadcast gate the pair frame crosses
-    # the Python boundary as ids only and vectors come from one broadcast
-    # matrix (the old plan shipped 2 x 64 floats PER PAIR -- ~800 MB at
-    # sf0.1 -- through two broadcast joins and the Arrow exchange); past
-    # the gate the per-pair join shape takes over unchanged.
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
-    if n * 64 * 4 <= _EMB_BCAST_MAX_BYTES:
-        scored = _np_pair_dot_bcast(
-            pairs, _emb_matrix_bcast(emb, sf_dir=sf_dir))
-    else:
-        normed = _np_normed(emb).localCheckpoint(eager=True)
-        ea = normed.select(F.col("vec_id").alias("a_id"),
-                           F.col("embedding").alias("a_emb"),
-                           F.col("norm").alias("a_norm"))
-        eb = normed.select(F.col("vec_id").alias("b_id"),
-                           F.col("embedding").alias("b_emb"),
-                           F.col("norm").alias("b_norm"))
-        scored = _np_pair_dot(
-            pairs.join(ea, "a_id").join(eb, "b_id"),
-            "a_emb", "b_emb", keep=["a_id", "b_id", "a_norm", "b_norm"])
-    sim = F.round(F.col("dot") / (F.col("a_norm") * F.col("b_norm")), 6)
-    return (scored.select("a_id", "b_id", sim.alias("sim"))
+    # Generate), at scan parallelism 1.  Distinct pairs = ANY-band
+    # semantics.
+    pairs = _candidate_pairs(_rhp_bands_np(emb, band_bits, n_bands),
+                             "vec_id", ["bk"], max_bucket)
+    return (_cosine_rerank(pairs, emb, sf_dir, n)
             .filter(F.col("sim") >= threshold)
             .orderBy("a_id", "b_id"))
 
@@ -2535,11 +2552,11 @@ def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     candidate if ANY band matches; exact cosine rerank inside candidates.
     At 10^9 vectors this replaces the per-query O(N) scan with n_bands
     bucket joins over ~2^10-row buckets.  Only ids flow through the band
-    join; query embeddings broadcast, corpus embeddings join back on the
-    deduped candidate set.  Recall vs the brute-force reference
-    (q_ann_cosine_topk) depends on the data's neighbor structure: ~1.0 for
-    true near-duplicates; lower for uniformly random vectors whose
-    "nearest" neighbors are far (tested in test_ann_lsh_recall).
+    join; vectors meet the deduped candidate set in _cosine_rerank.
+    Recall vs the brute-force reference (q_ann_cosine_topk) depends on
+    the data's neighbor structure: ~1.0 for true near-duplicates; lower
+    for uniformly random vectors whose "nearest" neighbors are far
+    (tested in test_ann_lsh_recall).
     Self-sizing reads N from parquet footer stats (no scan job); pass
     n_rows or band_bits explicitly for non-local-parquet inputs."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -2557,22 +2574,7 @@ def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
              .filter(F.col("vec_id") != F.col("q_id"))
              .select("q_id", "vec_id")
              .dropDuplicates(["q_id", "vec_id"]))
-    if n * 64 * 4 <= _EMB_BCAST_MAX_BYTES:
-        scored = _np_pair_dot_bcast(cands, _emb_matrix_bcast(
-            emb, sf_dir=sf_dir), a_id="q_id", b_id="vec_id")
-    else:
-        normed = _np_normed(emb).localCheckpoint(eager=True)
-        eq = normed.select(F.col("vec_id").alias("q_id"),
-                           F.col("embedding").alias("q_emb"),
-                           F.col("norm").alias("a_norm"))
-        ev = normed.select("vec_id",
-                           F.col("embedding").alias("v_emb"),
-                           F.col("norm").alias("b_norm"))
-        scored = _np_pair_dot(
-            cands.join(F.broadcast(eq), "q_id").join(ev, "vec_id"),
-            "q_emb", "v_emb", keep=["q_id", "vec_id", "a_norm", "b_norm"])
-    sim = F.round(F.col("dot") / (F.col("a_norm") * F.col("b_norm")), 6)
-    scored = scored.select("q_id", "vec_id", sim.alias("sim"))
+    scored = _cosine_rerank(cands, emb, sf_dir, n, "q_id", "vec_id")
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
     return (scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
@@ -2580,10 +2582,10 @@ def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
             .orderBy("q_id", "rnk"))
 
 
-def _rhp_oracle_ctes(band_bits: int, n_bands: int, dim: int = 64) -> str:
+def _rhp_oracle_ctes(band_bits: int, n_bands: int) -> str:
     """Shared sig/banded CTE text for the two LSH oracles: the SAME md5
     sign constants as _rhp_bands, embedded as DuckDB array literals."""
-    signs = _rhp_sign_matrix(band_bits * n_bands, dim)
+    signs = _rhp_sign_matrix(band_bits * n_bands)
     bit_cols = ",\n         ".join(
         f"CASE WHEN list_dot_product(embedding::DOUBLE[], "
         f"[{', '.join(str(v) for v in row)}]::DOUBLE[]) >= 0 "
@@ -2740,20 +2742,8 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
         # round 8: assignment sims from the _np_cent_sims kernel (raw
         # division in the kernel, 6dp round here -- bit-identical), the
         # pair frame materialized once for its two consumers (cells +
-        # probes); rerank through the size-gated broadcast matrix
-        import numpy as np
-        local = _local_emb_table(sf_dir)
-        if local is not None:
-            ids, mat = local
-            sel = ids % step == 0
-            c_ids = [int(v) for v in ids[sel]]
-            c_mat = mat[sel].astype(np.float64)
-        else:
-            crows = sorted(cents.select("c_id", "c_emb").collect(),
-                           key=lambda r: r.c_id)
-            c_ids = [int(r.c_id) for r in crows]
-            c_mat = np.asarray([list(r.c_emb) for r in crows],
-                               dtype=np.float32).astype(np.float64)
+        # probes)
+        c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
         pairs = (_np_cent_sims(emb, c_ids, c_mat)
                  .select("vec_id", "c_id",
                          F.round(F.col("raw"), 6).alias("sim_c"))
@@ -2778,19 +2768,7 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     cand = (F.broadcast(probes).join(cells, "cell")
             .filter(F.col("vec_id") != F.col("q_id"))
             .select("q_id", "vec_id"))   # cells are disjoint: no dup pairs
-    if kmeans_iters == 0 and n * 64 * 4 <= _EMB_BCAST_MAX_BYTES:
-        scored = _np_pair_dot_bcast(cand, _emb_matrix_bcast(
-            emb, sf_dir=sf_dir), a_id="q_id", b_id="vec_id")
-        sim = F.round(F.col("dot") / (F.col("a_norm") * F.col("b_norm")), 6)
-        scored = scored.select("q_id", "vec_id", sim.alias("sim"))
-    else:
-        eq = emb.select(F.col("vec_id").alias("q_id"),
-                        F.col("embedding").alias("q_emb"),
-                        norm(F.col("embedding")).alias("q_norm"))
-        sim = F.round(_dot_expr(F.col("q_emb"), F.col("embedding")) /
-                      (F.col("q_norm") * F.col("v_norm")), 6)
-        scored = (cand.join(F.broadcast(eq), "q_id").join(ev, "vec_id")
-                  .select("q_id", "vec_id", sim.alias("sim")))
+    scored = _cosine_rerank(cand, emb, sf_dir, n, "q_id", "vec_id")
     w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
     return (scored.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
@@ -3361,30 +3339,17 @@ def incremental_dedup(index_docs, batch_docs, n_hashes: int = 16,
         i_sigs = _minhash_sigs(index_docs, n_hashes).localCheckpoint()
     if b_sigs is None:
         b_sigs = _minhash_sigs(batch_docs, n_hashes).localCheckpoint()
-    i_bands = _minhash_banded(i_sigs, n_hashes, n_bands)
-    if max_bucket is not None:
-        wcap = Window.partitionBy("band", "bucket").orderBy("doc_id")
-        i_bands = (i_bands.withColumn("_rn", F.row_number().over(wcap))
-                   .filter(F.col("_rn") <= max_bucket).drop("_rn"))
+    i_bands = _cap_buckets(_minhash_banded(i_sigs, n_hashes, n_bands),
+                           ["band", "bucket"], "doc_id", max_bucket)
     b_bands = _minhash_banded(b_sigs, n_hashes, n_bands)
     cand = (i_bands.withColumnRenamed("doc_id", "i_id")
             .join(F.broadcast(b_bands.withColumnRenamed("doc_id", "b_id")),
                   ["band", "bucket"])
             .select("i_id", "b_id").distinct())
-    si = i_sigs.select(F.col("doc_id").alias("i_id"),
-                       *[F.col(f"h{h}").alias(f"a{h}")
-                         for h in range(n_hashes)])
-    sb = b_sigs.select(F.col("doc_id").alias("b_id"),
-                       *[F.col(f"h{h}").alias(f"b{h}")
-                         for h in range(n_hashes)])
-    agree = None
-    for h in range(n_hashes):
-        t = (F.col(f"a{h}") == F.col(f"b{h}")).cast("int")
-        agree = t if agree is None else agree + t
-    near_ids = (si.join(F.broadcast(cand), "i_id")
-                .join(F.broadcast(sb), "b_id")
-                .filter(F.round(agree / F.lit(float(n_hashes)), 4)
-                        >= threshold)
+    near_ids = (_sig_side(i_sigs, "i_id", "a")
+                .join(F.broadcast(cand), "i_id")
+                .join(F.broadcast(_sig_side(b_sigs, "b_id", "b")), "b_id")
+                .filter(_est_jaccard(n_hashes) >= threshold)
                 .select(F.col("b_id").alias("doc_id")).distinct())
 
     status = (F.when(F.col("is_exact"), F.lit("exact_dup"))
@@ -4980,20 +4945,7 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     # and reranks through the broadcast-matrix kernel below the §3.1 size
     # gate (per-pair join fallback above it); division, rounding and the
     # threshold stay JVM-side.
-    local = _local_emb_table(sf_dir)
-    if local is not None:  # bounded centroid set without a Spark job
-        ids, mat = local
-        sel = ids % step == 0
-        c_ids = [int(v) for v in ids[sel]]
-        c_mat = mat[sel].astype(np.float64)
-    else:
-        crows = sorted(
-            emb.filter(F.col("vec_id") % step == 0)
-            .select(F.col("vec_id").alias("c_id"), "embedding").collect(),
-            key=lambda r: r.c_id)
-        c_ids = [int(r.c_id) for r in crows]
-        c_mat = np.asarray([list(r.embedding) for r in crows],
-                           dtype=np.float32).astype(np.float64)
+    c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
     c_norm = np.sqrt(_np_seq_dot(c_mat, c_mat))
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
@@ -5022,22 +4974,8 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     pairs = (a.join(bb, "cell")
              .filter(F.col("a_id") < F.col("b_id"))
              .select("a_id", "b_id"))
-    if n * 64 * 4 <= _EMB_BCAST_MAX_BYTES:
-        scored = _np_pair_dot_bcast(
-            pairs, _emb_matrix_bcast(emb, sf_dir=sf_dir))
-    else:
-        normed = _np_normed(emb).localCheckpoint(eager=True)
-        ea = normed.select(F.col("vec_id").alias("a_id"),
-                           F.col("embedding").alias("a_emb"),
-                           F.col("norm").alias("a_norm"))
-        eb = normed.select(F.col("vec_id").alias("b_id"),
-                           F.col("embedding").alias("b_emb"),
-                           F.col("norm").alias("b_norm"))
-        scored = _np_pair_dot(
-            pairs.join(ea, "a_id").join(eb, "b_id"),
-            "a_emb", "b_emb", keep=["a_id", "b_id", "a_norm", "b_norm"])
-    sim = F.round(F.col("dot") / (F.col("a_norm") * F.col("b_norm")), 6)
-    losers = (scored.filter(sim >= threshold)
+    losers = (_cosine_rerank(pairs, emb, sf_dir, n)
+              .filter(F.col("sim") >= threshold)
               .select(F.col("b_id").alias("vec_id"))
               .distinct())
     return (cells.select("vec_id", "cell")
@@ -5108,7 +5046,7 @@ def _pq_subdist(x, c, j, d_sub):
                    + _pq_dot(cj, cj), 6)
 
 
-def _pq_codebook(emb, sf_dir, m, n_sub_cents, n_rows):
+def _pq_codebook(emb, sf_dir, n_sub_cents, n_rows):
     """(centroids DF, step): deterministic every-step-th sampling, the IVF
     convention, so DuckDB replays the codebook bit for bit."""
     import math
@@ -5138,19 +5076,9 @@ def _pq_codes(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
     import numpy as np
     import pyarrow as pa
     emb = _t(spark, sf_dir, "embeddings")
-    cents, step = _pq_codebook(emb, sf_dir, m, n_sub_cents, n_rows)
-    d_sub = 64 // m
-    local = _local_emb_table(sf_dir)
-    if local is not None:  # bounded codebook without a Spark job
-        ids, mat = local
-        sel = ids % step == 0
-        c_ids = [int(v) for v in ids[sel]]
-        c_mat = mat[sel].astype(np.float64)
-    else:
-        crows = sorted(cents.collect(), key=lambda r: r.c_id)
-        c_ids = [int(r.c_id) for r in crows]
-        c_mat = np.asarray([list(r.c_emb) for r in crows],
-                           dtype=np.float32).astype(np.float64)
+    cents, step = _pq_codebook(emb, sf_dir, n_sub_cents, n_rows)
+    d_sub = _EMB_DIM // m
+    c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
     nc = len(c_ids)
 
     def fn(batches):
@@ -5259,7 +5187,7 @@ def q_ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     exploits; the operator shape is unchanged."""
     codes, cents = _pq_codes(spark, sf_dir, m, n_sub_cents, n_rows)
     emb = _t(spark, sf_dir, "embeddings")
-    _, step = _pq_codebook(emb, sf_dir, m, n_sub_cents, n_rows)
+    _, step = _pq_codebook(emb, sf_dir, n_sub_cents, n_rows)
     return _adc_topk(codes, cents, emb, k=k, n_queries=n_queries, m=m,
                      rerank=rerank, sf_dir=sf_dir, cent_step=step)
 
@@ -5327,28 +5255,20 @@ def _adc_topk(codes, cents, emb, k: int, n_queries: int, m: int,
     j-order left association; the 6dp round stays JVM-side."""
     import numpy as np
     import pyarrow as pa
-    d_sub = 64 // m
-    local = _local_emb_table(sf_dir) if cent_step is not None else None
+    d_sub = _EMB_DIM // m
     qs = (emb.filter(F.col("vec_id") < n_queries)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_emb")))
-    if local is not None:
-        ids, mat = local
-        sel = ids % cent_step == 0
-        c_ids = np.asarray(ids[sel])
-        c_mat = mat[sel].astype(np.float64)
-        qsel = ids < n_queries
-        q_ids = [int(v) for v in ids[qsel]]
-        q_mat = mat[qsel].astype(np.float64)
+    if cent_step is not None:
+        c_ids, c_mat = _emb_subset(emb, sf_dir,
+                                   lambda v: v % cent_step == 0)
     else:
         crows = sorted(cents.collect(), key=lambda r: r.c_id)
-        c_ids = np.asarray([int(r.c_id) for r in crows])
+        c_ids = [int(r.c_id) for r in crows]
         c_mat = np.asarray([list(r.c_emb) for r in crows],
                            dtype=np.float32).astype(np.float64)
-        qrows = sorted(qs.collect(), key=lambda r: r.q_id)
-        q_ids = [int(r.q_id) for r in qrows]
-        q_mat = np.asarray([list(r.q_emb) for r in qrows],
-                           dtype=np.float32).astype(np.float64)
+    q_ids, q_mat = _emb_subset(emb, sf_dir, lambda v: v < n_queries)
+    c_ids = np.asarray(c_ids)
     nc, nq = len(c_ids), len(q_ids)
     lut = np.empty((nq, m, nc))
     for j in range(m):
@@ -5441,7 +5361,7 @@ def q_ann_pq_index_topk(spark, index_path: str, sf_dir, k: int = 5,
 
 
 def _pq_oracle_sql(m: int = 8, n_sub_cents: int = 16) -> str:
-    d_sub = 64 // m
+    d_sub = _EMB_DIM // m
 
     def dist(j):
         a = f"array_slice(e.embedding::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
@@ -5477,7 +5397,7 @@ def _ann_pq_oracle_sql(k: int = 5, n_queries: int = 3, m: int = 8,
     """ADC replay: same codebook/codes CTEs as the PQ oracle, per-query
     lookup tables as one CTE per subspace, fixed l0+..+l7 summation
     order mirroring the Spark expression."""
-    d_sub = 64 // m
+    d_sub = _EMB_DIM // m
 
     def dist(j, x, c):
         a = f"array_slice({x}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
@@ -5902,21 +5822,7 @@ def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     # division in the kernel, 6dp round here -- bit-identical to the old
     # broadcast-crossJoin interpreted folds), materialized once for the
     # cells + probes consumers
-    import numpy as np
-    local = _local_emb_table(sf_dir)
-    if local is not None:
-        lids, lmat = local
-        sel = lids % step == 0
-        c_ids = [int(v) for v in lids[sel]]
-        c_mat = lmat[sel].astype(np.float64)
-    else:
-        crows = sorted(
-            emb.filter(F.col("vec_id") % step == 0)
-            .select(F.col("vec_id").alias("c_id"), "embedding").collect(),
-            key=lambda r: r.c_id)
-        c_ids = [int(r.c_id) for r in crows]
-        c_mat = np.asarray([list(r.embedding) for r in crows],
-                           dtype=np.float32).astype(np.float64)
+    c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
     pairs = (_np_cent_sims(emb, c_ids, c_mat)
              .select("vec_id", "c_id",
                      F.round(F.col("raw"), 6).alias("sim_c"))
@@ -5935,7 +5841,7 @@ def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
             .filter(F.col("vec_id") != F.col("q_id"))
             .select("q_id", "vec_id"))
     # compressed-domain scoring: candidates x broadcast LUT maps
-    d_sub = 64 // m
+    d_sub = _EMB_DIM // m
     codes, pq_cents = _pq_codes(spark, sf_dir, m, n_sub_cents, n_rows)
     qs = (emb.filter(F.col("vec_id") < n_queries)
           .select(F.col("vec_id").alias("q_id"),
@@ -5966,7 +5872,7 @@ def _ann_ivfadc_oracle_sql(k: int = 5, n_queries: int = 3,
                            m: int = 8, n_sub_cents: int = 16) -> str:
     """IVF cell/probe CTEs (from the IVF oracle) + PQ codes/LUT CTEs
     (from the ADC oracle), joined on the candidate set."""
-    d_sub = 64 // m
+    d_sub = _EMB_DIM // m
     sim_ec = _IVF_COS.format(a="e", b="c")
 
     def dist(j, x, c):
@@ -6281,18 +6187,11 @@ def q_decontaminate_fuzzy(spark, sf_dir, n_hashes: int = 16,
     tr_bands = _minhash_banded(tr_sigs, n_hashes, n_bands)
     cand = (tr_bands.join(F.broadcast(ev_bands), ["band", "bucket"])
             .select("doc_id", "eval_id").distinct())
-    sa = tr_sigs.select("doc_id", *[F.col(f"h{h}").alias(f"a{h}")
-                                    for h in range(n_hashes)])
-    sb = ev_sigs.select(F.col("doc_id").alias("eval_id"),
-                        *[F.col(f"h{h}").alias(f"b{h}")
-                          for h in range(n_hashes)])
-    agree = None
-    for h in range(n_hashes):
-        t = (F.col(f"a{h}") == F.col(f"b{h}")).cast("int")
-        agree = t if agree is None else agree + t
-    est = F.round(agree / F.lit(float(n_hashes)), 4)
-    return (cand.join(sa, "doc_id").join(F.broadcast(sb), "eval_id")
-            .select("doc_id", "eval_id", est.alias("est_jaccard"))
+    sb = _sig_side(ev_sigs, "eval_id", "b")
+    return (cand.join(_sig_side(tr_sigs, "doc_id", "a"), "doc_id")
+            .join(F.broadcast(sb), "eval_id")
+            .select("doc_id", "eval_id",
+                    _est_jaccard(n_hashes).alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= threshold)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_eval_matches"),

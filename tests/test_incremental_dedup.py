@@ -61,3 +61,19 @@ def test_incremental_plan_index_never_smj(spark):
     assert plan.count("BroadcastHashJoin") >= 4
     assert "CartesianProduct" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
+
+
+def test_index_hot_bucket_cap(spark):
+    """Index-side twin of test_minhash_hot_bucket_guard: 400 byte-identical
+    index docs share every band bucket, so max_bucket=30 trims each bucket
+    to its 30 lowest doc_ids.  The near-identical batch doc still meets
+    the kept members in the band it shares with them, so it is near_dup
+    with the cap and without it."""
+    index = _docs(spark, [(i, BASE) for i in range(400)])
+    batch = _docs(spark, [(1000, BASE + " extra")])
+    bands = R._minhash_banded(R._minhash_sigs(index), 16, 4)
+    capped = R._cap_buckets(bands, ["band", "bucket"], "doc_id", 30)
+    assert bands.count() == 4 * 400 and capped.count() == 4 * 30
+    for cap in (30, None):
+        [row] = R.incremental_dedup(index, batch, max_bucket=cap).collect()
+        assert row.status == "near_dup", cap

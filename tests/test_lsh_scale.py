@@ -304,3 +304,51 @@ def test_ivfadc_candidate_pruning(spark):
     for r in got:
         key = (r["q_id"], r["vec_id"])
         assert key in full and full[key] == r["adist"], key
+
+
+def _emb_broadcast_blocks(plan: str) -> list[str]:
+    """Input lists of every BroadcastExchange in a formatted plan that
+    carry an embedding column."""
+    import re
+    blocks = re.findall(r"\(\d+\) BroadcastExchange\nInput \[\d+\]: (\[.*\])",
+                        plan)
+    return [b for b in blocks if "emb" in b]
+
+
+def test_rerank_above_broadcast_gate_matches(spark, monkeypatch):
+    """The scale fallbacks of the embedding family, forced at sf0.001: a
+    gate of 0 sends _cosine_rerank down the normed equi-join path and
+    makes _local_emb_table return None, so the bounded query/centroid
+    sides are collected through Spark.  Every query must return the rows
+    of its default run.  Past the gate no broadcast may carry embeddings:
+    with automatic broadcast joins off, a BroadcastExchange holding an
+    embedding column can only come from an explicit hint on a table the
+    gate has just judged too big to ship."""
+    from closure_html_spark.spark import relational as R
+    sf = "/root/testdata/sf0.001"
+    runs = {
+        "embedding_neardup_lsh": lambda: R.q_embedding_neardup_lsh(
+            spark, sf, band_bits=4),
+        "ann_lsh_topk": lambda: R.q_ann_lsh_topk(spark, sf, band_bits=4),
+        "ann_ivf_topk": lambda: R.q_ann_ivf_topk(spark, sf, n_cells=16),
+        "semantic_dedup": lambda: R.q_semantic_dedup(spark, sf, n_cells=16),
+        "ann_cosine_topk": lambda: R.q_ann_cosine_topk(spark, sf),
+    }
+    default = {name: sorted(q().collect()) for name, q in runs.items()}
+    assert default["embedding_neardup_lsh"] and default["semantic_dedup"]
+    monkeypatch.setattr(R, "_EMB_BCAST_MAX_BYTES", 0)
+    assert R._local_emb_table(sf) is None
+    for name, q in runs.items():
+        assert sorted(q().collect()) == default[name], name
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        for name in ("ann_lsh_topk", "ann_ivf_topk"):
+            df = runs[name]()
+            plan = df._sc._jvm.PythonSQLUtils.explainString(
+                df._jdf.queryExecution(), "formatted")
+            assert "BroadcastExchange" in plan, name
+            assert _emb_broadcast_blocks(plan) == [], name
+    finally:
+        spark.conf.set(key, old)

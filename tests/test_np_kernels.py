@@ -80,10 +80,30 @@ def test_np_seq_dot_matches_interpreted_fold(spark):
         assert norms[i] == r["norm"]
 
 
-@pytest.mark.parametrize("n", [0, 1, 5])
-def test_np_embs_shapes(n):
+@pytest.mark.parametrize("lens, found", [
+    pytest.param([], None, id="0"),
+    pytest.param([64], None, id="1"),
+    pytest.param([64] * 5, None, id="5"),
+    # a bare reshape(-1, 64) would make 2 rows, row 0 ending in row 1's data
+    pytest.param([63, 65], "63, 65", id="ragged"),
+    # a narrower model: four rows would become 2
+    pytest.param([32] * 4, "32", id="dim32"),
+    # a null row drops out of the flatten and shifts every later row
+    pytest.param([64, None], "64, None", id="null"),
+])
+def test_np_embs_shapes(lens, found):
+    """(n, 64) float64 for 64-wide rows; any other width is refused with
+    the lengths seen, by the kernels' reader and the driver-side one."""
     import pyarrow as pa
-    arr = pa.array([[float(i)] * 64 for i in range(n)],
-                   pa.list_(pa.float32()))
-    m = R._np_embs(arr)
-    assert m.shape == (n, 64) and m.dtype == np.float64
+    arr = pa.array([None if k is None else [float(i)] * k
+                    for i, k in enumerate(lens)], pa.list_(pa.float32()))
+    if found is None:
+        m = R._np_embs(arr)
+        assert m.shape == (len(lens), 64) and m.dtype == np.float64
+        return
+    with pytest.raises(ValueError, match=f"found lengths {found}$"):
+        R._np_embs(arr)
+    tbl = pa.table({"vec_id": pa.array(range(len(lens)), pa.int64()),
+                    "embedding": arr})
+    with pytest.raises(ValueError, match=f"found lengths {found}$"):
+        R._emb_rows(tbl)
