@@ -52,7 +52,7 @@ def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _decode_one(mime: str, payload: bytes, meta) -> dict:
+def _decode_one(mime: str, payload: bytes) -> dict:
     """STUB decode kernel.  Real codecs are not available in this container;
     fake/* mime types get a deterministic decode so the pipeline is testable
     end-to-end."""
@@ -81,9 +81,8 @@ def decode_media(df: DataFrame) -> DataFrame:
         for pdf in batches:
             out = {"media_id": pdf["media_id"], "doc_id": pdf["doc_id"],
                    "byte_len": [], "sha256": [], "feature": []}
-            for mime, payload, meta in zip(pdf["mime"], pdf["payload"],
-                                           pdf["meta"]):
-                d = _decode_one(mime, bytes(payload), meta)
+            for mime, payload in zip(pdf["mime"], pdf["payload"]):
+                d = _decode_one(mime, bytes(payload))
                 out["byte_len"].append(d["byte_len"])
                 out["sha256"].append(d["sha256"])
                 out["feature"].append(d["feature"])

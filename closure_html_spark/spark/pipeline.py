@@ -42,6 +42,7 @@ RESULT_COL_DDL = {
     "n_warns": "int",
     "warn_levels": "array<int>",
     "charset": "string",
+    "main_text": "string",
 }
 
 # links/base need their own full-DOM walk (the span scorer's walk starts at
@@ -210,9 +211,8 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     pay the full text build + Arrow transfer; passing
     columns=("warn_levels",) skips building the text payload entirely
     (and skips the span scorer when no text column is requested).
-    main_text, the concatenated kept spans, is only built and attached
-    (as the last column) when extracted_text AND spans are requested; an
-    error row's main_text is ''.
+    main_text is the concatenated kept spans; an error row's main_text
+    is ''.
     columns=None builds _DEFAULT_COLS, which EXCLUDES links/base: they
     need a second full-DOM walk (the span scorer's walk starts at BODY
     and cannot see HEAD, where BASE lives), so only frontier consumers
@@ -227,17 +227,17 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
             raise ValueError(f"unknown result columns: {sorted(unknown)}")
         wanted = tuple(k for k in RESULT_COL_DDL if k in columns)
     # the span scorer only runs when some text-derived column is requested
-    need_extract = bool({"title", "extracted_text", "spans"} & set(wanted))
+    need_extract = bool(
+        {"title", "extracted_text", "spans", "main_text"} & set(wanted))
     need_anchors = "anchors" in wanted
     need_links = bool({"links", "anchors", "base"} & set(wanted))
     # built here, not from (extracted_text, spans) on the JVM: Spark's
     # substr is character-indexed and walks the UTF-8 string from its
     # start on every call, so a per-span fold there is quadratic
-    need_main = "extracted_text" in wanted and "spans" in wanted
+    need_main = "main_text" in wanted
 
     ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, ", ".join([f"{k} {RESULT_COL_DDL[k]}" for k in wanted]
-                               + (["main_text string"] if need_main else [])))
+        df, id_cols, ", ".join(f"{k} {RESULT_COL_DDL[k]}" for k in wanted))
     has_ct = "content_type" in df.columns
     cols = ids + ["html"] + (["content_type"] if has_ct else [])
     i32 = pa.int32()
@@ -336,9 +336,9 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                     pa.array(wl_flat, i32))
             if "charset" in wanted:
                 built["charset"] = pa.array(charsets, pa.string())
-            arrays = [built[k] for k in wanted]
             if need_main:
-                arrays.append(pa.array(mains, pa.string()))
+                built["main_text"] = pa.array(mains, pa.string())
+            arrays = [built[k] for k in wanted]
             yield _out_batch(batch, ids, arrays, arrow_schema)
 
     return df.select(*cols).mapInArrow(fn, schema)

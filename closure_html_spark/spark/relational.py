@@ -578,15 +578,15 @@ def _local_emb_table(sf_dir: str | None):
     return _emb_rows(tbl)
 
 
-def _emb_subset(emb, sf_dir: str | None, keep):
+def _emb_subset(emb, local, keep):
     """(ids ascending, float64 matrix) of the bounded vector subset whose
     vec_id passes `keep` -- a query or centroid side.  `keep` is applied
     to a numpy id array AND to the vec_id Column, so it must be written
-    with operators both accept (`lambda v: v < n_queries`).  Read from the
-    local table when there is one (no Spark job), else one filtered
-    collect."""
+    with operators both accept (`lambda v: v < n_queries`).  `local` is
+    _local_emb_table's result, read once per query by the caller: the
+    subset is cut from it when there is one (no Spark job), else taken by
+    one filtered collect."""
     import numpy as np
-    local = _local_emb_table(sf_dir)
     if local is None:
         local = _emb_rows(emb.filter(keep(F.col("vec_id")))
                           .select("vec_id", "embedding").toArrow())
@@ -730,7 +730,8 @@ def q_ann_cosine_topk(spark, sf_dir, k: int = 5, n_queries: int = 3):
     order (and dot/norm-product commutativity is exact in IEEE floats, so
     sim is bit-identical); 6dp rounding stays JVM-side."""
     emb = _t(spark, sf_dir, "embeddings")
-    q_ids, q_mat = _emb_subset(emb, sf_dir, lambda v: v < n_queries)
+    q_ids, q_mat = _emb_subset(emb, _local_emb_table(sf_dir),
+                               lambda v: v < n_queries)
     scored = (_np_cent_sims(emb, q_ids, q_mat)
               .filter(F.col("vec_id") != F.col("c_id"))
               .select(F.col("c_id").alias("q_id"), "vec_id",
@@ -2359,7 +2360,7 @@ def _parquet_n_rows(sf_dir: str, name: str) -> int | None:
     the self-sizing ANN queries use this so merely building/running a plan
     never triggers a hidden full-scan count() action (round-3 verdict
     wrong #3).  Returns None for non-local / non-parquet locations; callers
-    fall back to an explicit n_rows parameter or df.count()."""
+    fall back to df.count()."""
     try:
         import pyarrow.parquet as pq
         files = _parquet_files(sf_dir, name)
@@ -2370,12 +2371,9 @@ def _parquet_n_rows(sf_dir: str, name: str) -> int | None:
         return None
 
 
-def _embeddings_n_rows(emb: DataFrame, sf_dir: str,
-                       n_rows: int | None) -> int:
-    """N for index sizing: explicit parameter > parquet footer stats >
-    (documented last resort) a count() scan job."""
-    if n_rows is not None:
-        return n_rows
+def _embeddings_n_rows(emb: DataFrame, sf_dir: str) -> int:
+    """N for index sizing: parquet footer stats, else (the documented last
+    resort) a count() scan job."""
     n = _parquet_n_rows(sf_dir, "embeddings")
     return n if n is not None else emb.count()
 
@@ -2492,7 +2490,6 @@ def _rhp_bands_np(emb, band_bits: int, n_bands: int):
 
 def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
                             band_bits: int | None = None, n_bands: int = 8,
-                            n_rows: int | None = None,
                             max_bucket: int | None = 65536):
     """Scale path for embedding near-dup: random-hyperplane LSH bucket
     self-join + exact cosine rerank, instead of the O(N^2) crossJoin.
@@ -2522,10 +2519,10 @@ def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
     max_bucket=None to disable.
 
     Self-sizing reads N from parquet footer statistics (no scan job);
-    pass n_rows (e.g. from catalog table stats) or band_bits explicitly
-    when the input is not a local parquet table."""
+    for an input that is not a local parquet table it counts the rows
+    (one scan job) unless band_bits is passed."""
     emb = _t(spark, sf_dir, "embeddings")
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
+    n = _embeddings_n_rows(emb, sf_dir)
     if band_bits is None:
         band_bits = lsh_band_bits(n)
     # round-8 (guide §4.2 + §2.4): signatures come from ONE numpy
@@ -2543,8 +2540,7 @@ def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
 
 
 def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
-                   band_bits: int | None = None, n_bands: int = 8,
-                   n_rows: int | None = None):
+                   band_bits: int | None = None, n_bands: int = 8):
     """LSH-bucketed approximate top-k: the scale path for similarity search.
 
     Banded OR-construction over random-hyperplane bits (n_bands tables of
@@ -2557,10 +2553,10 @@ def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     the data's neighbor structure: ~1.0 for true near-duplicates; lower
     for uniformly random vectors whose "nearest" neighbors are far
     (tested in test_ann_lsh_recall).
-    Self-sizing reads N from parquet footer stats (no scan job); pass
-    n_rows or band_bits explicitly for non-local-parquet inputs."""
+    Self-sizing reads N from parquet footer stats (no scan job); a
+    non-local-parquet input costs one count() job."""
     emb = _t(spark, sf_dir, "embeddings")
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
+    n = _embeddings_n_rows(emb, sf_dir)
     if band_bits is None:
         band_bits = lsh_band_bits(n)
     # round 8: same kernel + materialize-once treatment as
@@ -2675,7 +2671,7 @@ ORACLE_ANN_LSH = _ann_lsh_oracle_sql()
 
 def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
                    n_cells: int | None = None, n_probe: int = 4,
-                   n_rows: int | None = None, kmeans_iters: int = 0):
+                   kmeans_iters: int = 0):
     """IVF-Flat approximate top-k: the coarse-quantizer counterpart to the
     RHP-LSH path.  Vectors partition into n_cells Voronoi cells around
     DETERMINISTIC sampled centroids (every ceil(N/n_cells)-th vec_id --
@@ -2689,7 +2685,7 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     and rerank touch only candidate cells.  n_cells defaults to
     ivf_n_cells(N) ~ sqrt(N) (cell occupancy sqrt(N) => probe cost
     n_probe*sqrt(N), sublinear); N comes from parquet footer stats, no
-    scan job -- pass n_rows or n_cells for non-local-parquet inputs.
+    scan job (a non-local-parquet input costs one count() job).
 
     kmeans_iters > 0 refines the sampled centroids with that many Lloyd
     iterations before the index build (the FAISS IVF training step):
@@ -2704,7 +2700,7 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     refinement does not lose recall at equal n_probe."""
     import math
     emb = _t(spark, sf_dir, "embeddings")
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
+    n = _embeddings_n_rows(emb, sf_dir)
     if n_cells is None:
         n_cells = ivf_n_cells(n)
     step = max(1, math.ceil(n / n_cells))
@@ -2743,7 +2739,8 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
         # division in the kernel, 6dp round here -- bit-identical), the
         # pair frame materialized once for its two consumers (cells +
         # probes)
-        c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
+        c_ids, c_mat = _emb_subset(emb, _local_emb_table(sf_dir),
+                                   lambda v: v % step == 0)
         pairs = (_np_cent_sims(emb, c_ids, c_mat)
                  .select("vec_id", "c_id",
                          F.round(F.col("raw"), 6).alias("sim_c"))
@@ -4907,7 +4904,7 @@ ORACLE_BM25 = _bm25_oracle_sql()
 # --- SemDeDup: clustered semantic dedup (round 7) ----------------------------
 
 def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
-                     n_cells: int | None = None, n_rows: int | None = None):
+                     n_cells: int | None = None):
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition embeddings into k-means cells, then find
     near-duplicate pairs ONLY within each cell and keep one survivor per
@@ -4930,7 +4927,7 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     import numpy as np
     import pyarrow as pa
     emb = _t(spark, sf_dir, "embeddings")
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
+    n = _embeddings_n_rows(emb, sf_dir)
     if n_cells is None:
         n_cells = ivf_n_cells(n)
     step = max(1, math.ceil(n / n_cells))
@@ -4945,7 +4942,8 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     # and reranks through the broadcast-matrix kernel below the §3.1 size
     # gate (per-pair join fallback above it); division, rounding and the
     # threshold stay JVM-side.
-    c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
+    c_ids, c_mat = _emb_subset(emb, _local_emb_table(sf_dir),
+                               lambda v: v % step == 0)
     c_norm = np.sqrt(_np_seq_dot(c_mat, c_mat))
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
@@ -5046,22 +5044,13 @@ def _pq_subdist(x, c, j, d_sub):
                    + _pq_dot(cj, cj), 6)
 
 
-def _pq_codebook(emb, sf_dir, n_sub_cents, n_rows):
-    """(centroids DF, step): deterministic every-step-th sampling, the IVF
-    convention, so DuckDB replays the codebook bit for bit."""
-    import math
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
-    step = max(1, math.ceil(n / n_sub_cents))
-    cents = (emb.filter(F.col("vec_id") % step == 0)
-             .select(F.col("vec_id").alias("c_id"),
-                     F.col("embedding").alias("c_emb")))
-    return cents, step
-
-
-def _pq_codes(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
-              n_rows: int | None = None):
-    """(codes DF with vec_id/code0..code{m-1}/qerr, centroids DF): the
-    shared encode pipeline behind q_pq_encode and q_ann_pq_topk.
+def _pq_codes(spark, sf_dir, local, m: int, n_sub_cents: int):
+    """(codes DF with vec_id/code0..code{m-1}/qerr, centroids DF,
+    (centroid ids, float64 centroid matrix)): the shared encode pipeline
+    behind q_pq_encode, q_ann_pq_topk, build_pq_index and
+    q_ann_ivfadc_topk.  The codebook is every step-th vector, the IVF
+    convention, so DuckDB replays it bit for bit; `local` is
+    _local_emb_table's result (see _emb_subset).
 
     Round 8 (guide §4.2): the old shape crossJoined every vector with the
     16-row codebook and evaluated m x 3 interpreted 8-dim folds PER PAIR
@@ -5073,12 +5062,17 @@ def _pq_codes(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
     computed -- and qerr stay JVM-side.  The bounded codebook
     (n_sub_cents rows) is collected once, the same driver-table class as
     the BPE top-words counter."""
+    import math
+
     import numpy as np
     import pyarrow as pa
     emb = _t(spark, sf_dir, "embeddings")
-    cents, step = _pq_codebook(emb, sf_dir, n_sub_cents, n_rows)
+    step = max(1, math.ceil(_embeddings_n_rows(emb, sf_dir) / n_sub_cents))
+    cents = (emb.filter(F.col("vec_id") % step == 0)
+             .select(F.col("vec_id").alias("c_id"),
+                     F.col("embedding").alias("c_emb")))
     d_sub = _EMB_DIM // m
-    c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
+    c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
     nc = len(c_ids)
 
     def fn(batches):
@@ -5124,11 +5118,10 @@ def _pq_codes(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
         dj = F.col(f"m{j}.d")
         qerr = dj if qerr is None else qerr + dj
     outs.append(F.round(qerr, 6).alias("qerr"))
-    return mins.select(*outs), cents
+    return mins.select(*outs), cents, (c_ids, c_mat)
 
 
-def q_pq_encode(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
-                n_rows: int | None = None):
+def q_pq_encode(spark, sf_dir, m: int = 8, n_sub_cents: int = 16):
     """Product-quantization encoding (Jegou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"): the 64-dim vector splits
     into m=8 contiguous 8-dim subspaces; each subvector is replaced by
@@ -5146,7 +5139,8 @@ def q_pq_encode(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
     |x|^2 - 2x.c + |c|^2 rounded to 6dp (cross-engine float parity, the
     _IVF_COS convention); qerr = sum of the 8 min distances is the
     reconstruction-error audit column."""
-    codes, _ = _pq_codes(spark, sf_dir, m, n_sub_cents, n_rows)
+    codes, _, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir), m,
+                            n_sub_cents)
     # the orderBy exists for the deterministic oracle compare, and range
     # partitioning samples its child -- materialize the (ints-only)
     # codes once so the encode kernel is not executed twice (guide §2.4)
@@ -5155,7 +5149,7 @@ def q_pq_encode(spark, sf_dir, m: int = 8, n_sub_cents: int = 16,
 
 def q_ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
                   m: int = 8, n_sub_cents: int = 16,
-                  n_rows: int | None = None, rerank: int | None = None):
+                  rerank: int | None = None):
     """ADC top-k search over PQ codes (Jegou et al. 2011 §III-B,
     asymmetric distance computation): the query stays uncompressed; each
     corpus vector's approximate L2 distance is the sum of m table
@@ -5185,11 +5179,11 @@ def q_ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     Lloyd refinement of the codebook does NOT improve it (swept 0-4
     iters: flat).  On real embedding corpora the manifold is what PQ
     exploits; the operator shape is unchanged."""
-    codes, cents = _pq_codes(spark, sf_dir, m, n_sub_cents, n_rows)
+    local = _local_emb_table(sf_dir)
+    codes, _, book = _pq_codes(spark, sf_dir, local, m, n_sub_cents)
     emb = _t(spark, sf_dir, "embeddings")
-    _, step = _pq_codebook(emb, sf_dir, n_sub_cents, n_rows)
-    return _adc_topk(codes, cents, emb, k=k, n_queries=n_queries, m=m,
-                     rerank=rerank, sf_dir=sf_dir, cent_step=step)
+    return _adc_topk(codes, book, emb, local, k=k, n_queries=n_queries,
+                     m=m, rerank=rerank)
 
 
 def _java_round(x: float, scale: int = 6) -> float:
@@ -5234,16 +5228,14 @@ def _round6_micro(x):
     return out
 
 
-def _adc_topk(codes, cents, emb, k: int, n_queries: int, m: int,
-              rerank: int | None, sf_dir: str | None = None,
-              cent_step: int | None = None):
+def _adc_topk(codes, book, emb, local, k: int, n_queries: int, m: int,
+              rerank: int | None):
     """ADC scoring core shared by q_ann_pq_topk (inline encode) and
     q_ann_pq_index_topk (persisted index): per-query LUTs, compressed-
-    domain scan, top-k window, optional exact-rerank tail.  sf_dir +
-    cent_step, when the embeddings are a local parquet table under the
-    broadcast gate, let the bounded codebook/query collections skip
-    their Spark jobs (inline path only -- the persisted-index path reads
-    its own codebook table and keeps the collect).
+    domain scan, top-k window, optional exact-rerank tail.  book is the
+    codebook as (centroid ids, float64 matrix); the query side is cut
+    from `local` (see _emb_subset), which the persisted-index path leaves
+    None, keeping its query collect.
 
     Round 8: the LUTs (n_queries x m x n_sub_cents rounded distances --
     KBs) are computed DRIVER-side from the two bounded tables (queries,
@@ -5259,16 +5251,8 @@ def _adc_topk(codes, cents, emb, k: int, n_queries: int, m: int,
     qs = (emb.filter(F.col("vec_id") < n_queries)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_emb")))
-    if cent_step is not None:
-        c_ids, c_mat = _emb_subset(emb, sf_dir,
-                                   lambda v: v % cent_step == 0)
-    else:
-        crows = sorted(cents.collect(), key=lambda r: r.c_id)
-        c_ids = [int(r.c_id) for r in crows]
-        c_mat = np.asarray([list(r.c_emb) for r in crows],
-                           dtype=np.float32).astype(np.float64)
-    q_ids, q_mat = _emb_subset(emb, sf_dir, lambda v: v < n_queries)
-    c_ids = np.asarray(c_ids)
+    q_ids, q_mat = _emb_subset(emb, local, lambda v: v < n_queries)
+    c_ids, c_mat = np.asarray(book[0]), book[1]
     nc, nq = len(c_ids), len(q_ids)
     lut = np.empty((nq, m, nc))
     for j in range(m):
@@ -5331,7 +5315,7 @@ def _adc_topk(codes, cents, emb, k: int, n_queries: int, m: int,
 
 
 def build_pq_index(spark, sf_dir, out_path: str, m: int = 8,
-                   n_sub_cents: int = 16, n_rows: int | None = None):
+                   n_sub_cents: int = 16):
     """Materialize the PQ index -- codes + codebook parquet -- the
     "encode once, search many" serving flow (the inline q_ann_pq_topk
     re-encodes per query; a 100-TB corpus encodes ONCE and every later
@@ -5339,7 +5323,8 @@ def build_pq_index(spark, sf_dir, out_path: str, m: int = 8,
     incremental_dedup: the big side (codes) is written partitioned and
     never re-shuffled by searches; the codebook is a 16-row table any
     search broadcasts."""
-    codes, cents = _pq_codes(spark, sf_dir, m, n_sub_cents, n_rows)
+    codes, cents, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir), m,
+                                n_sub_cents)
     codes.write.mode("overwrite").parquet(f"{out_path}/codes")
     cents.write.mode("overwrite").parquet(f"{out_path}/codebook")
     return out_path
@@ -5353,10 +5338,15 @@ def q_ann_pq_index_topk(spark, index_path: str, sf_dir, k: int = 5,
     (asserted in tests/test_lsh_scale.py) -- the search-side plan never
     touches the raw embeddings except for the query rows themselves
     (and the rerank shortlist if enabled)."""
+    import numpy as np
     codes = spark.read.parquet(f"{index_path}/codes")
-    cents = spark.read.parquet(f"{index_path}/codebook")
+    crows = sorted(spark.read.parquet(f"{index_path}/codebook").collect(),
+                   key=lambda r: r.c_id)
+    book = ([int(r.c_id) for r in crows],
+            np.asarray([list(r.c_emb) for r in crows],
+                       dtype=np.float32).astype(np.float64))
     emb = _t(spark, sf_dir, "embeddings")
-    return _adc_topk(codes, cents, emb, k=k, n_queries=n_queries, m=m,
+    return _adc_topk(codes, book, emb, None, k=k, n_queries=n_queries, m=m,
                      rerank=rerank)
 
 
@@ -5793,7 +5783,7 @@ ORACLE_CMS = _cms_oracle_sql()
 
 def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
                       n_cells: int = 16, n_probe: int = 4, m: int = 8,
-                      n_sub_cents: int = 16, n_rows: int | None = None):
+                      n_sub_cents: int = 16):
     """IVFADC (Jegou et al. 2011 §IV): the full PQ serving system --
     the IVF coarse quantizer prunes the corpus to n_probe cells
     (~n_probe/n_cells of N candidates), then ADC scores ONLY those
@@ -5816,13 +5806,14 @@ def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     broadcast, embeddings never shuffle."""
     import math
     emb = _t(spark, sf_dir, "embeddings")
-    n = _embeddings_n_rows(emb, sf_dir, n_rows)
+    local = _local_emb_table(sf_dir)
+    n = _embeddings_n_rows(emb, sf_dir)
     step = max(1, math.ceil(n / n_cells))
     # round 8: coarse-assignment sims from the _np_cent_sims kernel (raw
     # division in the kernel, 6dp round here -- bit-identical to the old
     # broadcast-crossJoin interpreted folds), materialized once for the
     # cells + probes consumers
-    c_ids, c_mat = _emb_subset(emb, sf_dir, lambda v: v % step == 0)
+    c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
     pairs = (_np_cent_sims(emb, c_ids, c_mat)
              .select("vec_id", "c_id",
                      F.round(F.col("raw"), 6).alias("sim_c"))
@@ -5842,7 +5833,7 @@ def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
             .select("q_id", "vec_id"))
     # compressed-domain scoring: candidates x broadcast LUT maps
     d_sub = _EMB_DIM // m
-    codes, pq_cents = _pq_codes(spark, sf_dir, m, n_sub_cents, n_rows)
+    codes, pq_cents, _ = _pq_codes(spark, sf_dir, local, m, n_sub_cents)
     qs = (emb.filter(F.col("vec_id") < n_queries)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_emb")))

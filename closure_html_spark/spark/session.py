@@ -17,7 +17,8 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "closure-html-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
+                              str(len(os.sched_getaffinity(0)))))
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
@@ -26,11 +27,12 @@ def get_spark(app: str = "closure-html-spark",
         SparkSession.builder
         .appName(app)
         .master(master)
-        # local-mode JVM defaults to -Xmx1g: with 32 concurrent Arrow
-        # streams that means GC storms; this box has 128 GiB
+        # local-mode JVM defaults to -Xmx1g: with one concurrent Arrow
+        # stream per thread that means GC storms
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
-        # G1's concurrent GC threads contend with the 32 Python workers for
-        # cores and halve mapInPandas throughput at full occupancy;
+        # G1's concurrent GC threads contend with the Python workers (one
+        # per thread) for cores and halve mapInPandas throughput at full
+        # occupancy (measured at local[32]);
         # throughput-oriented ParallelGC wins for this batch workload
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")

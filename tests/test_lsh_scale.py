@@ -352,3 +352,42 @@ def test_rerank_above_broadcast_gate_matches(spark, monkeypatch):
             assert _emb_broadcast_blocks(plan) == [], name
     finally:
         spark.conf.set(key, old)
+
+
+def test_non_local_sf_dir_fallbacks(spark, sf_dir, monkeypatch):
+    """A `file://` sf_dir is no local path to _parquet_files, so the scale
+    fallbacks run at sf0.001: q_tfidf_topk and _embeddings_n_rows count
+    the rows with a count() job, and _emb_subset and _emb_matrix_bcast
+    collect the vectors through Spark.  Every query must return the rows
+    of its local-path run."""
+    import os
+
+    from closure_html_spark.spark import relational as R
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    uri = "file://" + sf
+    assert R._parquet_n_rows(uri, "documents") is None
+    assert R._local_emb_table(uri) is None
+    # query -> the count()/toArrow() calls its fallbacks make: the row
+    # count, then (embedding queries) the broadcast matrix, and for
+    # semantic_dedup first its centroid subset
+    runs = {
+        "tfidf_topk": (R.q_tfidf_topk, ["count"]),
+        "embedding_neardup_lsh": (lambda s, d: R.q_embedding_neardup_lsh(
+            s, d, band_bits=None), ["count", "toArrow"]),
+        "semantic_dedup": (R.q_semantic_dedup,
+                           ["count", "toArrow", "toArrow"]),
+    }
+    local = {name: sorted(q(spark, sf).collect())
+             for name, (q, _) in runs.items()}
+    assert all(local.values())
+    calls = []
+    frame_cls = type(spark.range(1))
+    for method in ("count", "toArrow"):
+        real = getattr(frame_cls, method)
+        monkeypatch.setattr(
+            frame_cls, method,
+            lambda self, _m=method, _f=real: calls.append(_m) or _f(self))
+    for name, (q, want) in runs.items():
+        del calls[:]
+        assert sorted(q(spark, uri).collect()) == local[name], name
+        assert calls == want, (name, calls)

@@ -123,9 +123,14 @@ def test_columns_projection_matches_full(spark):
         df, columns=("n_nodes", "n_warns", "warn_levels")).orderBy("url")
     assert set(proj.columns) == {"url", "n_nodes", "n_warns", "warn_levels"}
     assert [tuple(r) for r in proj.collect()] == [tuple(r) for r in full]
-    # title-only still attaches no main_text (needs text+spans)
     t = extract_pages(df, columns=("title", "charset"))
     assert set(t.columns) == {"url", "title", "charset"}
+    # main_text is built only when asked for by name
+    ts = extract_pages(df, columns=("extracted_text", "spans"))
+    assert ts.columns == ["url", "extracted_text", "spans"]
+    full_ts = extract_pages(df).orderBy("url") \
+        .select("url", "extracted_text", "spans").collect()
+    assert ts.orderBy("url").collect() == full_ts
 
 
 def test_links_column(spark):

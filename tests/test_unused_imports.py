@@ -1,6 +1,6 @@
 """Static checks: no module of the package imports a name it never uses,
-and no function of `spark/relational.py` takes a parameter it never
-reads.
+and no function of `spark/relational.py` or `spark/multimodal.py` takes
+a parameter it never reads.
 
 Stdlib only (`ast`): a name bound by `import` / `from ... import` at any
 depth must be read somewhere in the same module.  `from __future__`
@@ -77,4 +77,9 @@ def test_param_checker_flags_unused_and_keeps_used():
 
 def test_relational_has_no_unused_params():
     source = (PKG / "spark" / "relational.py").read_text()
+    assert unused_params(source) == []
+
+
+def test_multimodal_has_no_unused_params():
+    source = (PKG / "spark" / "multimodal.py").read_text()
     assert unused_params(source) == []
