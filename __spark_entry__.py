@@ -22,6 +22,10 @@ from pyspark.sql import functions as F
 
 from closure_html_spark.spark import relational as R
 from closure_html_spark.spark.pages import (
+    HOSTILE_ACHR,
+    HOSTILE_AMP,
+    HOSTILE_BAD,
+    HOSTILE_FLOOD,
     ORACLE_EXTRACTED_TEXT,
     ORACLE_MAIN_TEXT,
     ORACLE_TITLE,
@@ -259,21 +263,21 @@ def _q_extract_hostile(spark, sf_dir):
 
 
 # Closed forms measured against the parser (see hostile_pages_from_-
-# documents docstring): tpl0 = payload under 200 auto-closed divs,
-# tpl1 = payload x64, tpl2 = '&'x1000 || 'A'x200 || payload (entities
-# decoded), tpl3 = '<3 'x500 || payload (each '<3 ' a level-3 bad-tag
-# warn kept as pcdata), tpl4 = 'xÂ©y' || payload (UTF-8 bytes of (c)
-# re-decoded as the lying iso-8859-1).  tpl0/tpl1 have zero spans when
-# the payload is empty; the bomb/storm/lie constants guarantee one span
-# otherwise.
-ORACLE_EXTRACT_HOSTILE = """
+# documents docstring): tpl0 = payload under HOSTILE_DEEP auto-closed
+# divs, tpl1 = payload x HOSTILE_FLOOD, tpl2 = '&' x HOSTILE_AMP || 'A' x
+# HOSTILE_ACHR || payload (entities decoded), tpl3 = '<3 ' x HOSTILE_BAD
+# || payload (each '<3 ' a level-3 bad-tag warn kept as pcdata), tpl4 =
+# 'xÂ©y' || payload (UTF-8 bytes of (c) re-decoded as the lying
+# iso-8859-1).  tpl0/tpl1 have zero spans when the payload is empty; the
+# bomb/storm/lie constants guarantee one span otherwise.
+ORACLE_EXTRACT_HOSTILE = f"""
 WITH h AS (
   SELECT doc_id, doc_id % 5 AS tpl,
          CASE doc_id % 5
            WHEN 0 THEN text
-           WHEN 1 THEN repeat(text, 64)
-           WHEN 2 THEN repeat('&', 1000) || repeat('A', 200) || text
-           WHEN 3 THEN repeat('<3 ', 500) || text
+           WHEN 1 THEN repeat(text, {HOSTILE_FLOOD})
+           WHEN 2 THEN repeat('&', {HOSTILE_AMP}) || repeat('A', {HOSTILE_ACHR}) || text
+           WHEN 3 THEN repeat('<3 ', {HOSTILE_BAD}) || text
            ELSE 'xÂ©y' || text
          END AS et
   FROM documents
@@ -282,7 +286,7 @@ SELECT doc_id, tpl, md5(et) AS text_md5,
        CAST(LENGTH(et) AS INT) AS text_len,
        CAST(CASE WHEN tpl IN (0, 1) AND LENGTH(et) = 0 THEN 0 ELSE 1 END
             AS INT) AS n_spans,
-       CAST(CASE WHEN tpl = 3 THEN 500 ELSE 0 END AS INT) AS n_warns,
+       CAST(CASE WHEN tpl = 3 THEN {HOSTILE_BAD} ELSE 0 END AS INT) AS n_warns,
        CASE WHEN tpl = 4 THEN 'latin-1' ELSE 'utf-8' END AS charset
 FROM h ORDER BY doc_id
 """
@@ -395,14 +399,13 @@ SELECT doc_id, lang, main_text FROM ranked WHERE rn = 1 ORDER BY doc_id
 """
 
 
-def _q_corpus_to_sequences(spark, sf_dir, budget: int = 512,
-                           n_shards: int = 8):
+def _q_corpus_to_sequences(spark, sf_dir):
     """The FULL pretraining-data chain in one oracle-checked query: raw
     HTML -> parse+repair+extract -> quality gate -> exact dedup
     (_q_corpus_clean_pipeline) -> GPT-style sequence packing
     (q_pack_sequences semantics over the CLEANED corpus): every
-    surviving doc gets (shard, seq_id, tok_offset) for budget-token
-    context windows.
+    surviving doc gets (shard, seq_id, tok_offset) for R.PACK_BUDGET-token
+    context windows over R.PACK_SHARDS shards.
 
     Scale shape: the clean chain's invariants carry over unchanged
     (hashes/ids shuffle, text does not); the packing stage consumes
@@ -413,8 +416,7 @@ def _q_corpus_to_sequences(spark, sf_dir, budget: int = 512,
     n_tok = F.size(F.split(F.trim("main_text"), r"\s+")).cast("long")
     slim = clean.select(
         "doc_id",
-        (F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8),
-                16, 10).cast("long") % n_shards).alias("shard"),
+        R.md5_shard(F.col("doc_id"), R.PACK_SHARDS).alias("shard"),
         n_tok.alias("n_tokens"))
     from pyspark.sql import Window
     w = Window.partitionBy("shard").orderBy("doc_id")
@@ -422,7 +424,7 @@ def _q_corpus_to_sequences(spark, sf_dir, budget: int = 512,
     return (slim.select(
         "doc_id", "shard", "n_tokens",
         (cum - F.col("n_tokens")).alias("tok_offset"),
-        F.floor((cum - F.col("n_tokens")) / budget).alias("seq_id"))
+        F.floor((cum - F.col("n_tokens")) / R.PACK_BUDGET).alias("seq_id"))
         .orderBy("doc_id"))
 
 
@@ -431,7 +433,7 @@ WITH cleaned AS (SELECT * FROM ({ORACLE_CORPUS_CLEAN}) AS c),
 slim AS (
   SELECT doc_id,
          CAST(from_hex(substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIT
-              AS BIGINT) % 8 AS shard,
+              AS BIGINT) % {R.PACK_SHARDS} AS shard,
          CAST(LEN(regexp_split_to_array(TRIM(main_text), '\\s+'))
               AS BIGINT) AS n_tokens
   FROM cleaned
@@ -443,7 +445,7 @@ packed AS (
   FROM slim
 )
 SELECT doc_id, shard, n_tokens, tok_offset,
-       CAST(FLOOR(tok_offset / 512) AS BIGINT) AS seq_id
+       CAST(FLOOR(tok_offset / {R.PACK_BUDGET}) AS BIGINT) AS seq_id
 FROM packed ORDER BY doc_id
 """
 
@@ -629,9 +631,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # SemDeDup: IVF-cell-bucketed semantic near-dup removal -- the
         # scale answer to the demoted O(N^2) exact baseline (media_meta
         # demoted: projection twin of the still-gated media_decode).
-        # n_cells pinned to the static oracle constant exactly like the
-        # ann_ivf_topk gate; the self-sizing rule is tested separately
-        "semantic_dedup": lambda s, d: R.q_semantic_dedup(s, d, n_cells=16),
+        # n_cells pinned to R.N_CELLS, the constant its oracle is built
+        # from, exactly like the ann_ivf_topk gate; the self-sizing rule
+        # is tested separately
+        "semantic_dedup": lambda s, d: R.q_semantic_dedup(s, d, R.N_CELLS),
         # adversarial parser corpus (round-6 verdict #2): deep nesting /
         # pcdata flood / entity bomb / bad-tag storm / charset lie, all
         # closed-form oracled (string_datetime demoted to aux for the
@@ -685,17 +688,17 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # demoted to aux round 7: the one non-scale-safe plan is no
         # longer invokable from the driver window; its oracle survives
         # in aux and it remains the LSH twin's recall reference)
-        # index-sizing params PINNED to the static oracle constants
-        # (band_bits=4 / n_cells=16): the queries self-size from table
-        # stats by default, but the gate must replay identically on ANY
-        # corpus size -- the sizing rules themselves are asserted by
+        # index-sizing params PINNED to the constants the oracles are
+        # built from (R.BAND_BITS / R.N_CELLS): the queries self-size from
+        # table stats by default, but the gate must replay identically on
+        # ANY corpus size -- the sizing rules themselves are asserted by
         # tests/test_lsh_scale.py, not this gate
         "embedding_neardup_lsh": lambda s, d: R.q_embedding_neardup_lsh(
-            s, d, band_bits=4),
+            s, d, band_bits=R.BAND_BITS),
         # connected components over the LSH pair graph (iterative min-label
         # propagation; band_bits pinned like the pair query it builds on)
         "neardup_clusters": lambda s, d: R.q_neardup_clusters(
-            s, d, band_bits=4),
+            s, d, band_bits=R.BAND_BITS),
         # multimodal plumbing (media_meta demoted to aux round 7)
         "media_decode": q_media_decode,
         # --- full-pipeline extraction (parse + repair + extract) ---
@@ -722,11 +725,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # toy; 50-word shared spans are near-certain cross-doc duplication;
         # the toy chunk_words=3 report stays in aux_queries)
         "paragraph_dedup_50": lambda s, d: R.q_paragraph_dedup(
-            s, d, chunk_words=50),
+            s, d, chunk_words=R.C4_CHUNK_WORDS),
         # the removal transform that follows the report: clean_text with
         # globally duplicated 50-word chunks removed (one survivor each)
-        "paragraph_clean_50": lambda s, d: R.q_paragraph_dedup_clean(
-            s, d, chunk_words=50),
+        "paragraph_clean_50": R.q_paragraph_dedup_clean,
         "url_canonical": R.q_url_canonical,
         # the frontier's RFC 3986 link resolution, replayed in batch
         "resolve_href": R.q_resolve_href,
@@ -746,8 +748,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # EXACT brute-force top-k baseline (broadcast query side); the
         # scale paths are the LSH/IVF twins below
         "ann_cosine_topk": R.q_ann_cosine_topk,
-        "ann_lsh_topk": lambda s, d: R.q_ann_lsh_topk(s, d, band_bits=4),
-        "ann_ivf_topk": lambda s, d: R.q_ann_ivf_topk(s, d, n_cells=16),
+        "ann_lsh_topk": lambda s, d: R.q_ann_lsh_topk(s, d, R.BAND_BITS),
+        "ann_ivf_topk": lambda s, d: R.q_ann_ivf_topk(s, d, R.N_CELLS),
         # (minhash_est_pairs demoted to aux round 6: its banding +
         # signature-agreement machinery runs under the gate through BOTH
         # text_dedup_clean and incremental_dedup)
@@ -1055,8 +1057,8 @@ FROM p ORDER BY doc_id, rep
         "pack_sequences": R.ORACLE_PACK_SEQUENCES,
         "host_boilerplate_clean": R.ORACLE_HOST_BOILERPLATE,
         # the LSH oracles replay the md5-derived hyperplane sign matrix
-        # bit-for-bit (constants baked into both plans); band_bits=4 in the
-        # oracle matches lsh_band_bits(500) at the driver's sf0.01 gate
+        # bit-for-bit (constants baked into both plans); R.BAND_BITS in
+        # the oracle matches lsh_band_bits(500) at the driver's sf0.01 gate
         "embedding_neardup_lsh": R.ORACLE_EMBEDDING_NEARDUP_LSH,
         "neardup_clusters": R.ORACLE_NEARDUP_CLUSTERS,
         "ann_lsh_topk": R.ORACLE_ANN_LSH,

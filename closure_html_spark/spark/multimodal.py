@@ -242,7 +242,12 @@ FROM documents GROUP BY 1 ORDER BY mime
 """
 
 
-def q_media_phash_neardup(spark, sf_dir, max_hamming: int = 1,
+# the hamming radius the media_phash_neardup gate and its oracle use
+PHASH_MAX_HAMMING = 1
+
+
+def q_media_phash_neardup(spark, sf_dir,
+                          max_hamming: int = PHASH_MAX_HAMMING,
                           max_bucket: int | None = None):
     """Perceptual-hash near-duplicate detection for the image modality:
     aHash over the decode stage's 8-component feature (bit_i set iff
@@ -305,7 +310,7 @@ def q_media_phash_neardup(spark, sf_dir, max_hamming: int = 1,
             .orderBy("id_a", "id_b"))
 
 
-def _media_phash_oracle_sql(max_hamming: int = 1) -> str:
+def _media_phash_oracle_sql() -> str:
     ks = ", ".join(
         f"CAST(from_hex(substring(dg, {i*2+1}, 2))::BIT AS BIGINT) AS k{i}"
         for i in range(8))
@@ -331,7 +336,7 @@ SELECT DISTINCT a.media_id AS id_a, b.media_id AS id_b,
 FROM bands a JOIN bands b ON a.band = b.band AND a.val = b.val
 WHERE a.media_id < b.media_id
   AND bit_count(xor(CAST(a.ph AS BIGINT), CAST(b.ph AS BIGINT)))
-      <= {max_hamming}
+      <= {PHASH_MAX_HAMMING}
 ORDER BY id_a, id_b
 """
 

@@ -123,23 +123,30 @@ _META_LIE = ('<html><head><meta http-equiv=Content-Type '
              '<title>H</title></head><body><p>x©y')
 
 
-def hostile_pages_from_documents(spark: SparkSession, sf_dir: str,
-                                 deep: int = 200, flood: int = 64,
-                                 amp: int = 1000, achr: int = 200,
-                                 bad: int = 500) -> DataFrame:
+# the hostile corpus' sizes, read by the extract_hostile oracle too: nesting
+# depth, payload copies, &amp; and &#65; chains, '<3 ' repetitions
+HOSTILE_DEEP = 200
+HOSTILE_FLOOD = 64
+HOSTILE_AMP = 1000
+HOSTILE_ACHR = 200
+HOSTILE_BAD = 500
+
+
+def hostile_pages_from_documents(spark: SparkSession,
+                                 sf_dir: str) -> DataFrame:
     """The ADVERSARIAL page corpus (round-6 verdict #2): five hostile
     template families cycling on doc_id % 5, each stressing a different
     repair surface while keeping the REPAIRED extraction output a
     closed-form SQL function of `documents`:
 
-      h0  deep nesting -- `deep` unclosed <div>s wrapping the payload;
-          the PDA must auto-close the whole chain at EOF
-      h1  pcdata flood -- the payload repeated `flood` times inside ONE
-          <p> on one line (the 1 MB-single-line shape, scaled)
-      h2  entity bomb -- `amp` chained &amp; + `achr` chained &#65;
-          ahead of the payload (entity machine stress)
-      h3  ##BAD TAG## storm -- `bad` repetitions of '<3 ' (bad char
-          after '<', level-3 warn each, '<3 ' kept as pcdata)
+      h0  deep nesting -- HOSTILE_DEEP unclosed <div>s wrapping the
+          payload; the PDA must auto-close the whole chain at EOF
+      h1  pcdata flood -- the payload repeated HOSTILE_FLOOD times inside
+          ONE <p> on one line (the 1 MB-single-line shape, scaled)
+      h2  entity bomb -- HOSTILE_AMP chained &amp; + HOSTILE_ACHR chained
+          &#65; ahead of the payload (entity machine stress)
+      h3  ##BAD TAG## storm -- HOSTILE_BAD repetitions of '<3 ' (bad
+          char after '<', level-3 warn each, '<3 ' kept as pcdata)
       h4  charset lie -- <meta> claims iso-8859-1 over UTF-8 bytes;
           the two-phase re-decode must relabel and re-decode, turning
           the UTF-8 (c) sign (0xC2 0xA9) into 'Â©'
@@ -149,11 +156,14 @@ def hostile_pages_from_documents(spark: SparkSession, sf_dir: str,
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     esc_text = _esc(F.col("text"))
     h = F.col("doc_id") % 5
-    t0 = F.concat(F.lit(_HOSTILE_HEAD + "<div>" * deep + "<p>"), esc_text)
-    t1 = F.concat(F.lit(_HOSTILE_HEAD + "<p>"), F.repeat(esc_text, flood))
-    t2 = F.concat(F.lit(_HOSTILE_HEAD + "<p>" + "&amp;" * amp
-                        + "&#65;" * achr), esc_text)
-    t3 = F.concat(F.lit(_HOSTILE_HEAD + "<p>" + "<3 " * bad), esc_text)
+    t0 = F.concat(F.lit(_HOSTILE_HEAD + "<div>" * HOSTILE_DEEP + "<p>"),
+                  esc_text)
+    t1 = F.concat(F.lit(_HOSTILE_HEAD + "<p>"),
+                  F.repeat(esc_text, HOSTILE_FLOOD))
+    t2 = F.concat(F.lit(_HOSTILE_HEAD + "<p>" + "&amp;" * HOSTILE_AMP
+                        + "&#65;" * HOSTILE_ACHR), esc_text)
+    t3 = F.concat(F.lit(_HOSTILE_HEAD + "<p>" + "<3 " * HOSTILE_BAD),
+                  esc_text)
     t4 = F.concat(F.lit(_META_LIE), esc_text)
     html = (F.when(h == 0, t0).when(h == 1, t1).when(h == 2, t2)
             .when(h == 3, t3).otherwise(t4))

@@ -20,7 +20,6 @@ from __future__ import annotations
 import gc
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ..dtd import load_dtd
 from ..extract import extract_main_content
@@ -113,7 +112,7 @@ MAX_DOC_BYTES_DEFAULT = 64 * 1024 * 1024  # 64 MiB
 _ERROR_ROW = ("", "", (), (), (), None, 0, -1, (0, 0, 0, 0, 0), "")
 
 
-def _parsed_docs(batch, default_charset: str, work,
+def _parsed_docs(batch, work,
                  max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT):
     """The per-document loop of every parse stage: yields exactly one
     (idx, result, charset) per row of the Arrow `batch`, in order, where
@@ -140,8 +139,8 @@ def _parsed_docs(batch, default_charset: str, work,
             oversize = max_doc_bytes is not None and len(raw_b) > max_doc_bytes
             if oversize:
                 raw_b = raw_b[:max_doc_bytes]
-            text, cs = decode_html(raw_b, default_charset,
-                                   cts[idx] if cts is not None else None)
+            text, cs = decode_html(
+                raw_b, content_type=cts[idx] if cts is not None else None)
             result = work(text)
         except Exception as exc:  # never kill the batch for one doc
             yield idx, None, f"error:{type(exc).__name__}"
@@ -177,7 +176,6 @@ def _out_batch(batch, ids: list[str], arrays: list, arrow_schema, take=None):
 
 
 def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                  default_charset: str = "utf-8",
                   columns: tuple[str, ...] | None = None,
                   max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
                   ) -> DataFrame:
@@ -279,8 +277,7 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
             lk_off, lk_flat, an_flat = [0], [], []
             bases = []
             wl_flat = []
-            for _, row, cs in _parsed_docs(batch, default_charset, work,
-                                           max_doc_bytes):
+            for _, row, cs in _parsed_docs(batch, work, max_doc_bytes):
                 (title_v, text_v, spans_v, links_v, anchors_v, base_v,
                  nn, nw, lv, main_v) = row or _ERROR_ROW
                 if cs == "error:oversize":
@@ -344,8 +341,8 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     return df.select(*cols).mapInArrow(fn, schema)
 
 
-def serialize_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                    default_charset: str = "utf-8") -> DataFrame:
+def serialize_pages(df: DataFrame,
+                    id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Parse + re-serialize every page to canonical escaped HTML
     (the reference's clean-html round trip, doc/examples.xml:60-77).
     mapInArrow: html_out is the largest string column in the system
@@ -364,16 +361,15 @@ def serialize_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
 
         for batch in batches:
             outs = [out if out is not None else ""
-                    for _, out, _ in _parsed_docs(batch, default_charset,
-                                                  work)]
+                    for _, out, _ in _parsed_docs(batch, work)]
             yield _out_batch(batch, ids, [pa.array(outs, pa.string())],
                              arrow_schema)
 
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def nodes_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-             default_charset: str = "utf-8") -> DataFrame:
+def nodes_of(df: DataFrame,
+             id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Exploded `nodes` table: one row per DOM node -- the relational query
     surface over parsed documents (SURVEY.md §2.8 / FIXTURES.md §2).
 
@@ -402,7 +398,7 @@ def nodes_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
             node_id, parent_id, depth_c = [], [], []
             name_c, text_c = [], []
             at_off, at_k, at_v = [0], [], []
-            for idx, doc, _ in _parsed_docs(batch, default_charset, work):
+            for idx, doc, _ in _parsed_docs(batch, work):
                 if doc is None:
                     continue
                 # renumber pre-order from the post-mortem root
@@ -437,15 +433,8 @@ def nodes_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def with_url_bucket(df: DataFrame, num_buckets: int = 1024) -> DataFrame:
-    """Stable bucket id from xxhash64(url) -- the bucket-by-url partitioning
-    key used for Iceberg-style layout, lineage and resumable runs."""
-    return df.withColumn(
-        "bucket", F.pmod(F.xxhash64("url"), F.lit(num_buckets)).cast("int"))
-
-
-def tokens_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8") -> DataFrame:
+def tokens_of(df: DataFrame,
+              id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Exploded `tokens` table (FIXTURES.md §2): the raw lexer output, one
     row per token -- the debugging/inspection surface for the tokenizer.
     Same flat-array + MapArray + take() assembly as nodes_of (no
@@ -470,7 +459,7 @@ def tokens_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
             row_idx = []
             pos_c, kind_c, name_c, text_c = [], [], [], []
             at_off, at_k, at_v = [0], [], []
-            for idx, toks, _ in _parsed_docs(batch, default_charset, work):
+            for idx, toks, _ in _parsed_docs(batch, work):
                 if toks is None:
                     continue
                 for pos, tok in enumerate(toks):
@@ -512,8 +501,8 @@ def tokens_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                 default_charset: str = "utf-8") -> DataFrame:
+def bookmarks_of(df: DataFrame,
+                 id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Parse NETSCAPE-Bookmark-file-1 payloads (the reference's second
     catalog DTD) into (folder_path, link_title, href) rows -- demonstrates
     the multi-DTD parse surface (`sgml-parse dtd input`).  Same take()
@@ -534,7 +523,7 @@ def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
 
         for batch in batches:
             row_idx, folder_c, title_c, href_c = [], [], [], []
-            for idx, doc, _ in _parsed_docs(batch, default_charset, work):
+            for idx, doc, _ in _parsed_docs(batch, work):
                 if doc is None:
                     continue
 
@@ -572,8 +561,8 @@ def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
 
 # --- structured extraction stages (round 7) ----------------------------------
 
-def tables_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8") -> DataFrame:
+def tables_of(df: DataFrame,
+              id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Exploded `cells` table: one row per TD/TH of every <table> in the
     repaired DOM -- (table_idx, row_idx, col_idx, tag, cell).  Same
     shuffle-free mapInArrow shape as nodes_of: flat primitive lists ->
@@ -598,7 +587,7 @@ def tables_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
         for batch in batches:
             row_idx = []
             t_c, r_c, c_c, tag_c, cell_c = [], [], [], [], []
-            for idx, rows, _ in _parsed_docs(batch, default_charset, work):
+            for idx, rows, _ in _parsed_docs(batch, work):
                 for (t, r, c, tag, cell) in rows or ():
                     row_idx.append(idx)
                     t_c.append(t)
@@ -619,8 +608,8 @@ def tables_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
 _META_FIELDS = ("title", "description", "og_title", "canonical", "h1")
 
 
-def metadata_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                default_charset: str = "utf-8") -> DataFrame:
+def metadata_of(df: DataFrame,
+                id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Per-page head metadata (title / meta description / og:title /
     canonical link / first h1): exactly one output row per input page
     (a malformed document yields the all-'' row, so ingest accounting
@@ -641,7 +630,7 @@ def metadata_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
 
         for batch in batches:
             cols = {f: [] for f in _META_FIELDS}
-            for _, md, _ in _parsed_docs(batch, default_charset, work):
+            for _, md, _ in _parsed_docs(batch, work):
                 md = md or empty
                 for f in _META_FIELDS:
                     cols[f].append(md[f])
@@ -652,8 +641,8 @@ def metadata_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def jsonld_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-              default_charset: str = "utf-8") -> DataFrame:
+def jsonld_of(df: DataFrame,
+              id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """One row per <script type=application/ld+json> block: (ld_idx,
     json) with the payload verbatim.  Schema-aware parsing stays JVM-side
     -- compose with F.from_json, never a Python json.loads stage.  A
@@ -674,8 +663,7 @@ def jsonld_of(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
 
         for batch in batches:
             row_idx, idx_c, json_c = [], [], []
-            for idx, payloads, _ in _parsed_docs(batch, default_charset,
-                                                 work):
+            for idx, payloads, _ in _parsed_docs(batch, work):
                 for i, payload in enumerate(payloads or ()):
                     row_idx.append(idx)
                     idx_c.append(i)

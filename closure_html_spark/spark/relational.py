@@ -21,6 +21,114 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
+# Constants a query shares with the DuckDB oracle that replays it, or with
+# other queries: each is declared once, so a query and its gate cannot drift
+# apart
+
+# MinHash signature width and LSH band count (N_HASHES // N_BANDS minima
+# per band), the estimated-Jaccard cut of minhash_est_pairs,
+# incremental_dedup and decontaminate_fuzzy, and text_dedup's stricter one
+N_HASHES = 16
+N_BANDS = 4
+EST_JACCARD_MIN = 0.5
+TEXT_DEDUP_MIN = 0.7
+# the ANN family's result depth and query side (vec_id < N_QUERIES)
+TOP_K = 5
+N_QUERIES = 3
+# the embedding near-dup cosine cut: embedding_neardup(_lsh),
+# neardup_clusters and semantic_dedup
+COSINE_MIN = 0.4
+# random-hyperplane LSH band count, and the band width (bits per band) the
+# gate pins, which equals lsh_band_bits(500) at the sf0.01 gate's 500 rows
+RHP_BANDS = 8
+BAND_BITS = 4
+# IVF cells probed per query, and the cell count the gate pins (the
+# ivf_n_cells floor)
+N_PROBE = 4
+N_CELLS = 16
+# product quantization: subspaces per vector, sub-centroids per subspace
+# (4-bit codes)
+PQ_M = 8
+PQ_SUB_CENTS = 16
+# jaccard_pairs' similarity cut and shingle document-frequency cap
+JACCARD_THRESHOLD = 0.5
+JACCARD_MAX_DF = 50
+# paragraph-dedup chunk sizes (words): the toy report, the C4-style span
+TOY_CHUNK_WORDS = 3
+C4_CHUNK_WORDS = 50
+# frontier_schedule's delay (seconds) for hosts whose robots.txt names none
+DEFAULT_CRAWL_DELAY = 1.0
+# keywords per document in tfidf_topk; PageRank iterations and damping
+TFIDF_K = 3
+PAGERANK_ITERS = 5
+PAGERANK_DAMPING = 0.85
+# winnowing k-gram length and window width
+WINNOW_K = 8
+WINNOW_W = 16
+# corpus_sample's per-language keep rates, out of SAMPLE_DENOM
+SAMPLE_RATES = {"en": 600, "de": 300}
+SAMPLE_DENOM = 1000
+# sequence packing's context window (tokens) and output shard count, for
+# pack_sequences and the corpus_to_sequences chain
+PACK_BUDGET = 512
+PACK_SHARDS = 8
+# the eval split (doc_id % EVAL_MOD == 0) of both decontamination scrubs,
+# and the exact scrub's word n-gram length
+EVAL_MOD = 7
+DECON_N = 8
+# domain_mix's alpha-sampling temperature
+MIX_ALPHA = 0.3
+# incremental_dedup's batch: doc_id % BATCH_MOD >= BATCH_MIN
+BATCH_MOD = 10
+BATCH_MIN = 8
+# the quality classifier's gradient-descent iterations and learning rate
+QC_ITERS = 5
+QC_LR = 2.0
+# the BPE gate's merge count and word-counter cut
+BPE_MERGES = 8
+BPE_TOP_WORDS = 200
+# the bigram LM's vocabulary cut and add-k smoothing constant
+LM_TOP_VOCAB = 500
+LM_K = 0.5
+# the exact-substring family's window length (words), and the distinct
+# documents that make a window a duplicate
+SPAN_W = 8
+SPAN_MIN_DOCS = 2
+# corpus_shuffle's output shard count and seed
+SHUFFLE_SHARDS = 8
+SHUFFLE_SEED = "s0"
+# captures per url in url_revisit's synthesized archive
+REVISIT_SNAPSHOTS = 3
+# quality_budget_select's token budget
+QUALITY_BUDGET = 20000
+# the share of a host's pages on which a line counts as boilerplate
+BOILERPLATE_MIN = 0.6
+# url_blocklist's domain rules
+BLOCKLIST = ("host7.example", "news.host3.example")
+# BM25's query terms, result depth and Okapi k1 (saturation) / b (length
+# normalization)
+BM25_TERMS = ("spark", "window", "join")
+BM25_K = 20
+BM25_K1 = 1.2
+BM25_B = 0.75
+# DSIR's hashed-unigram bucket count, add-k smoothing and target slice
+DSIR_BUCKETS = 256
+DSIR_SMOOTHING = 0.5
+DSIR_TARGET = "en"
+# HyperLogLog precision: 2^HLL_P registers
+HLL_P = 10
+# corpus_split: percent of md5_shard(doc_id, 100) buckets in valid / test
+SPLIT_VALID_PCT = 5
+SPLIT_TEST_PCT = 5
+# count-min sketch rows and counters per row, and the doc the gate probes
+CMS_DEPTH = 4
+CMS_WIDTH = 256
+CMS_PROBE_DOC = 0
+# the quantiles token_quantiles reports
+QUANTILES = (0.5, 0.9, 0.99)
+
+
+# ---------------------------------------------------------------------------
 # TPC-H-ish relational shell
 
 def q_pricing_summary(spark, sf_dir):
@@ -328,17 +436,12 @@ def _ngrams(docs, n: int = 3, out: str = "tri"):
             .select("doc_id", gram.alias(out)))
 
 
-def _shingles(docs, n: int = 3):
-    """Exploded word trigram shingles (doc_id, tri) -- see _ngrams."""
-    return _ngrams(docs, n, out="tri")
-
-
 def q_ngram_shingles(spark, sf_dir):
     """3-gram shingle sets (the MinHash input representation): count of
     distinct word-trigrams per document."""
     docs = _t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
-    return (_shingles(docs.filter(F.size(words) >= 3))
+    return (_ngrams(docs.filter(F.size(words) >= 3))
             .groupBy("doc_id")
             .agg(F.countDistinct("tri").cast("int").alias("n_shingles"))
             .orderBy("doc_id"))
@@ -356,19 +459,18 @@ FROM w WHERE LEN(ws) >= 3 ORDER BY doc_id
 """
 
 
-def q_jaccard_pairs(spark, sf_dir, threshold: float = 0.5,
-                    max_df: int = 50):
+def q_jaccard_pairs(spark, sf_dir):
     """Exact word-trigram Jaccard near-duplicate pairs -- the exact
     counterpart MinHash approximates -- via an INVERTED SHINGLE INDEX:
     docs join only on shingles they share, never all-pairs.
 
     Scale shape: candidate volume = sum over shingles of df^2, bounded by
-    the `max_df` document-frequency cap (a shingle appearing in more than
-    max_df docs carries no dedup signal and would otherwise quadratically
-    dominate the join -- the standard hot-token guard).  Jaccard is
-    computed over the df-capped shingle space for both numerator and
-    sizes, so J is exact within that space and the DuckDB oracle replays
-    it bit-for-bit.  At this corpus max df is 7, so the cap keeps every
+    the JACCARD_MAX_DF document-frequency cap (a shingle appearing in more
+    than JACCARD_MAX_DF docs carries no dedup signal and would otherwise
+    quadratically dominate the join -- the standard hot-token guard).
+    Jaccard is computed over the df-capped shingle space for both
+    numerator and sizes, so J is exact within that space and the DuckDB
+    oracle replays it bit-for-bit.  At this corpus max df is 7, so the cap keeps every
     shingle and J is the true Jaccard."""
     docs = _t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
@@ -380,11 +482,11 @@ def q_jaccard_pairs(spark, sf_dir, threshold: float = 0.5,
     # groupBy + re-join), and the capped frame is materialized once for
     # its three consumers (ids+shingles only, the incremental_dedup
     # localCheckpoint precedent).
-    sh0 = _shingles(docs.filter(F.size(words) >= 3)) \
+    sh0 = _ngrams(docs.filter(F.size(words) >= 3)) \
         .select("doc_id", "tri").distinct()
     wdf = Window.partitionBy("tri")
     sh = (sh0.withColumn("df", F.count(F.lit(1)).over(wdf))
-          .filter(F.col("df") <= max_df).drop("df")
+          .filter(F.col("df") <= JACCARD_MAX_DF).drop("df")
           .localCheckpoint(eager=True))
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("sz"))
     a = sh.select(F.col("doc_id").alias("a_id"), "tri")
@@ -400,11 +502,11 @@ def q_jaccard_pairs(spark, sf_dir, threshold: float = 0.5,
                     F.round(F.col("shared") /
                             (F.col("sa") + F.col("sb") - F.col("shared")),
                             6).alias("jaccard"))
-            .filter(F.col("jaccard") >= threshold)
+            .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
             .orderBy("a_id", "b_id"))
 
 
-ORACLE_JACCARD_PAIRS = """
+ORACLE_JACCARD_PAIRS = f"""
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS ws
   FROM documents
@@ -415,7 +517,7 @@ sh0 AS (
                   FOR i IN range(1, LEN(ws) - 1)]) AS t(tri)
   WHERE LEN(ws) >= 3
 ),
-keep AS (SELECT tri FROM sh0 GROUP BY tri HAVING COUNT(*) <= 50),
+keep AS (SELECT tri FROM sh0 GROUP BY tri HAVING COUNT(*) <= {JACCARD_MAX_DF}),
 sh AS (SELECT sh0.* FROM sh0 JOIN keep USING (tri)),
 sizes AS (SELECT doc_id, COUNT(*) AS sz FROM sh GROUP BY doc_id),
 shared AS (
@@ -427,7 +529,7 @@ SELECT s.a_id, s.b_id, ROUND(c / (sa.sz + sb.sz - c), 6) AS jaccard
 FROM shared s
 JOIN sizes sa ON sa.doc_id = s.a_id
 JOIN sizes sb ON sb.doc_id = s.b_id
-WHERE ROUND(c / (sa.sz + sb.sz - c), 6) >= 0.5
+WHERE ROUND(c / (sa.sz + sb.sz - c), 6) >= {JACCARD_THRESHOLD}
 ORDER BY a_id, b_id
 """
 
@@ -446,6 +548,13 @@ def _dot_expr(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
+
+
+def _norm_expr(c):
+    """sqrt of the same left-associated fold over c's squares."""
+    return F.sqrt(F.aggregate(
+        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0), lambda acc, x: acc + x))
 
 
 # --- vectorized embedding kernels (round 8, guide §4.2) ---------------------
@@ -512,13 +621,12 @@ def _np_seq_dot(a, b):
     return acc
 
 
-def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str],
-                 out: str = "dot"):
-    """Append `out` = dot(a_col, b_col) (raw double, unrounded) to `df`
-    via one numpy mapInArrow pass; keeps only `keep` + `out`."""
+def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str]):
+    """Append `dot` = dot(a_col, b_col) (raw double, unrounded) to `df`
+    via one numpy mapInArrow pass; keeps only `keep` + `dot`."""
     import pyarrow as pa
     dts = dict(df.dtypes)
-    schema = ", ".join(f"{c} {dts[c]}" for c in keep) + f", {out} double"
+    schema = ", ".join(f"{c} {dts[c]}" for c in keep) + ", dot double"
 
     def fn(batches):
         for b in batches:
@@ -526,7 +634,7 @@ def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str],
                             _np_embs(b.column(b_col)))
             yield pa.RecordBatch.from_arrays(
                 [b.column(c) for c in keep] + [pa.array(d, pa.float64())],
-                names=keep + [out])
+                names=keep + ["dot"])
 
     return df.select(*dict.fromkeys(keep + [a_col, b_col])) \
         .mapInArrow(fn, schema)
@@ -582,7 +690,7 @@ def _emb_subset(emb, local, keep):
     """(ids ascending, float64 matrix) of the bounded vector subset whose
     vec_id passes `keep` -- a query or centroid side.  `keep` is applied
     to a numpy id array AND to the vec_id Column, so it must be written
-    with operators both accept (`lambda v: v < n_queries`).  `local` is
+    with operators both accept (`lambda v: v < N_QUERIES`).  `local` is
     _local_emb_table's result, read once per query by the caller: the
     subset is cut from it when there is one (no Spark job), else taken by
     one filtered collect."""
@@ -595,12 +703,12 @@ def _emb_subset(emb, local, keep):
     return [int(v) for v in ids[sel]], mat[sel].astype(np.float64)
 
 
-def _emb_matrix_bcast(emb, sf_dir: str | None):
+def _emb_matrix_bcast(emb, local):
     """Broadcast (sorted ids, float32 matrix, float64 norms) of the whole
-    embeddings frame.  Norms use the same sequential fold as _np_normed
-    (bit-identical)."""
+    embeddings frame, from `local` (the caller's _local_emb_table result)
+    or, when that is None, one collect.  Norms use the same sequential
+    fold as _np_normed (bit-identical)."""
     import numpy as np
-    local = _local_emb_table(sf_dir)
     ids, mat = local if local is not None else _emb_rows(
         emb.select("vec_id", "embedding").toArrow())
     norms = np.sqrt(_np_seq_dot(mat.astype(np.float64),
@@ -671,7 +779,7 @@ def _np_cent_sims(emb, c_ids, c_mat):
         fn, "vec_id bigint, c_id bigint, raw double")
 
 
-def _np_normed(emb, out: str = "norm"):
+def _np_normed(emb):
     """(vec_id, embedding, norm) with norm = sqrt(fold(x^2)) -- the numpy
     twin of the per-vector norm lambda (same sequential add order; IEEE
     sqrt is exact so the result is bit-identical)."""
@@ -685,26 +793,28 @@ def _np_normed(emb, out: str = "norm"):
             yield pa.RecordBatch.from_arrays(
                 [b.column("vec_id"), b.column("embedding"),
                  pa.array(n, pa.float64())],
-                names=["vec_id", "embedding", out])
+                names=["vec_id", "embedding", "norm"])
 
     return emb.select("vec_id", "embedding").mapInArrow(
-        fn, f"vec_id bigint, embedding array<float>, {out} double")
+        fn, "vec_id bigint, embedding array<float>, norm double")
 
 
-def _cosine_rerank(pairs, emb, sf_dir, n: int, a: str = "a_id",
+def _cosine_rerank(pairs, emb, local, n: int, a: str = "a_id",
                    b: str = "b_id"):
     """(a, b, sim) for an ids-only candidate frame: sim = dot / (|a| * |b|)
     from the numpy kernels, divided and rounded to 6 places JVM-side, so
     it equals the interpreted-fold cosine bit for bit.  n (the table's row
     count) decides the shape.  Below the broadcast gate the pairs cross
     the Python boundary as ids only and vectors come from one broadcast
-    matrix (the old plan shipped 2 x 64 floats PER PAIR -- ~800 MB at
-    sf0.1 -- through two broadcast joins and the Arrow exchange).  Past
-    the gate both sides equi-join the normed table and carry their
-    vectors to the kernel; no broadcast hint there, since a frame that
-    holds embeddings is exactly what the gate judged too big to ship."""
+    matrix, built from `local` (the caller's _local_emb_table result)
+    when there is one (the old plan shipped 2 x 64 floats PER PAIR --
+    ~800 MB at sf0.1 -- through two broadcast joins and the Arrow
+    exchange).  Past the gate both sides equi-join the normed table and
+    carry their vectors to the kernel; no broadcast hint there, since a
+    frame that holds embeddings is exactly what the gate judged too big
+    to ship."""
     if n * _EMB_DIM * 4 <= _EMB_BCAST_MAX_BYTES:
-        scored = _np_pair_dot_bcast(pairs, _emb_matrix_bcast(emb, sf_dir),
+        scored = _np_pair_dot_bcast(pairs, _emb_matrix_bcast(emb, local),
                                     a_id=a, b_id=b)
     else:
         normed = _np_normed(emb).localCheckpoint(eager=True)
@@ -720,9 +830,20 @@ def _cosine_rerank(pairs, emb, sf_dir, n: int, a: str = "a_id",
     return scored.select(a, b, sim.alias("sim"))
 
 
-def q_ann_cosine_topk(spark, sf_dir, k: int = 5, n_queries: int = 3):
+def _top_k(scored, order, k: int = TOP_K):
+    """The k first rows per q_id of a (q_id, vec_id, score) frame under
+    `order`, ties to the smaller vec_id, numbered in rnk and sorted by
+    (q_id, rnk)."""
+    w = Window.partitionBy("q_id").orderBy(order, "vec_id")
+    return (scored.withColumn("rnk", F.row_number().over(w))
+            .filter(F.col("rnk") <= k)
+            .select(*scored.columns, "rnk")
+            .orderBy("q_id", "rnk"))
+
+
+def q_ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k similarity search -- the exact baseline for
-    ANN.  Query vectors = embeddings with vec_id < n_queries.
+    ANN.  Query vectors = embeddings with vec_id < N_QUERIES.
 
     Round 8: the bounded query side rides the _np_cent_sims kernel's
     closure (queries play the centroid role) instead of a broadcast
@@ -731,21 +852,17 @@ def q_ann_cosine_topk(spark, sf_dir, k: int = 5, n_queries: int = 3):
     sim is bit-identical); 6dp rounding stays JVM-side."""
     emb = _t(spark, sf_dir, "embeddings")
     q_ids, q_mat = _emb_subset(emb, _local_emb_table(sf_dir),
-                               lambda v: v < n_queries)
+                               lambda v: v < N_QUERIES)
     scored = (_np_cent_sims(emb, q_ids, q_mat)
               .filter(F.col("vec_id") != F.col("c_id"))
               .select(F.col("c_id").alias("q_id"), "vec_id",
                       F.round(F.col("raw"), 6).alias("sim")))
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "vec_id", "sim", "rnk")
-            .orderBy("q_id", "rnk"))
+    return _top_k(scored, F.desc("sim"))
 
 
-ORACLE_ANN = """
+ORACLE_ANN = f"""
 WITH q AS (SELECT vec_id AS q_id, embedding::DOUBLE[] AS q_emb FROM embeddings
-           WHERE vec_id < 3),
+           WHERE vec_id < {N_QUERIES}),
 scored AS (
   SELECT q.q_id, e.vec_id,
          ROUND(list_dot_product(q.q_emb, e.embedding::DOUBLE[]) /
@@ -761,13 +878,13 @@ ranked AS (
   FROM scored
 )
 SELECT q_id, vec_id, sim, CAST(rnk AS INT) AS rnk
-FROM ranked WHERE rnk <= 5 ORDER BY q_id, rnk
+FROM ranked WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 """
 
 
-def _minhash_sigs(docs, n_hashes: int = 16):
+def _minhash_sigs(docs):
     """MinHash signatures (doc_id, h0..h{n-1}), fully JVM-side: exploded
-    shingles -> n_hashes salted hashes per row -> map-side partial MIN
+    shingles -> N_HASHES salted hashes per row -> map-side partial MIN
     (stays in whole-stage codegen end to end; HOF lambdas would not).
 
     The hashes derive from ONE md5 per shingle via Carter-Wegman-style
@@ -779,42 +896,41 @@ def _minhash_sigs(docs, n_hashes: int = 16):
     md5 = F.md5(F.col("tri"))
     a = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
     b = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
-    tri = _shingles(docs).select("doc_id", *[
+    tri = _ngrams(docs).select("doc_id", *[
         (a * F.lit(2 * h + 3) + b * F.lit(2 * h + 101)
          + F.lit(h)).alias(f"x{h}")
-        for h in range(n_hashes)])
+        for h in range(N_HASHES)])
     return tri.groupBy("doc_id").agg(
-        *[F.min(f"x{h}").alias(f"h{h}") for h in range(n_hashes)])
+        *[F.min(f"x{h}").alias(f"h{h}") for h in range(N_HASHES)])
 
 
-def _minhash_banded(sigs, n_hashes: int, n_bands: int):
+def _minhash_banded(sigs):
     """(doc_id, band, bucket) rows from a signature table -- one pass via
     posexplode of an array of (band, bucket) structs.  (A unionAll of
     per-band selects would re-execute the whole shingle+agg subplan once
     per band: Catalyst does not dedupe common subplans across union
     branches.)"""
-    per_band = n_hashes // n_bands
+    per_band = N_HASHES // N_BANDS
     band_structs = F.array(*[
         F.struct(F.lit(b).cast("int").alias("band"),
                  F.md5(F.concat_ws(",", *[
                      F.col(f"h{h}")
                      for h in range(b * per_band, (b + 1) * per_band)]))
                  .alias("bucket"))
-        for b in range(n_bands)])
+        for b in range(N_BANDS)])
     return (sigs
             .select("doc_id", F.explode(band_structs).alias("bb"))
             .select("doc_id", F.col("bb.band").alias("band"),
                     F.col("bb.bucket").alias("bucket")))
 
 
-def q_minhash_bands(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4):
+def q_minhash_bands(spark, sf_dir):
     """MinHash+LSH candidate generation: shingle -> salted hash -> min per
     hash -> band signature -> groupBy band bucket.  Returns candidate pair
     counts per band bucket (see _minhash_sigs for the portable-hash
     machinery the DuckDB oracle replays)."""
     docs = _t(spark, sf_dir, "documents")
-    sigs = _minhash_sigs(docs, n_hashes)
-    allb = _minhash_banded(sigs, n_hashes, n_bands)
+    allb = _minhash_banded(_minhash_sigs(docs))
     return (allb.groupBy("band", "bucket")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.min("doc_id").alias("min_doc"))
@@ -864,32 +980,31 @@ def _sig_side(sigs, id_name: str, prefix: str):
         if c != "doc_id"])
 
 
-def _est_jaccard(n_hashes: int):
+def _est_jaccard():
     """Estimated Jaccard of a joined a/b signature row: the fraction of the
-    n_hashes minima that agree (the unbiased MinHash estimator), 4dp."""
+    N_HASHES minima that agree (the unbiased MinHash estimator), 4dp."""
     agree = None
-    for h in range(n_hashes):
+    for h in range(N_HASHES):
         t = (F.col(f"a{h}") == F.col(f"b{h}")).cast("int")
         agree = t if agree is None else agree + t
-    return F.round(agree / F.lit(float(n_hashes)), 4)
+    return F.round(agree / F.lit(float(N_HASHES)), 4)
 
 
-def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
-                        threshold: float = 0.5,
+def q_minhash_est_pairs(spark, sf_dir, threshold: float = EST_JACCARD_MIN,
                         max_bucket: int | None = 65536):
     """MinHash near-duplicate pairs with ESTIMATED Jaccard -- the second
     stage of the standard MinHash dedup pipeline: banding proposes
     candidates (any shared band bucket, sub-quadratic bucket equi-join),
-    then est_jaccard = fraction of the n_hashes signature minima that
+    then est_jaccard = fraction of the N_HASHES signature minima that
     agree (the unbiased MinHash estimator) filters them WITHOUT touching
-    document text -- at 100 TB the signatures (n_hashes longs/doc) are
+    document text -- at 100 TB the signatures (N_HASHES longs/doc) are
     ~1/1000th of the corpus, so the estimate join is cheap and the exact
     verification (q_jaccard_pairs) runs only on survivors if at all.
     Ids+signatures only through the shuffle; DuckDB replays everything.
 
     Hot-bucket guard (_cap_buckets): max_bucket keeps the first
     max_bucket members per (band, bucket), lowest doc_id first.  Pairs
-    among dropped members survive via the doc's other n_bands-1 bands
+    among dropped members survive via the doc's other N_BANDS-1 bands
     unless those are identical too -- i.e. only true mega-dup clusters
     are trimmed, and a dedup pass keeps one member anyway.  The default
     (64x any sane expected occupancy) never fires at gate scale, so the
@@ -900,18 +1015,17 @@ def q_minhash_est_pairs(spark, sf_dir, n_hashes: int = 16, n_bands: int = 4,
     # materialization every consumer re-ran the full shingle+minhash scan
     # (8 document scans in the before plan).  Both frames are ids+hashes
     # only -- the incremental_dedup localCheckpoint precedent.
-    sigs = _minhash_sigs(docs, n_hashes).localCheckpoint(eager=True)
-    cand = _candidate_pairs(_minhash_banded(sigs, n_hashes, n_bands),
-                            "doc_id", ["band", "bucket"], max_bucket)
+    sigs = _minhash_sigs(docs).localCheckpoint(eager=True)
+    cand = _candidate_pairs(_minhash_banded(sigs), "doc_id",
+                            ["band", "bucket"], max_bucket)
     return (cand.join(_sig_side(sigs, "a_id", "a"), "a_id")
             .join(_sig_side(sigs, "b_id", "b"), "b_id")
-            .select("a_id", "b_id",
-                    _est_jaccard(n_hashes).alias("est_jaccard"))
+            .select("a_id", "b_id", _est_jaccard().alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= threshold)
             .orderBy("a_id", "b_id"))
 
 
-def q_paragraph_dedup(spark, sf_dir, chunk_words: int = 3):
+def q_paragraph_dedup(spark, sf_dir, chunk_words: int = TOY_CHUNK_WORDS):
     """Sub-document exact dedup (C4-style): split each document into
     non-overlapping `chunk_words`-word chunks, hash, report chunks that
     appear in more than one document.  The per-doc transform/slice lambda
@@ -940,11 +1054,12 @@ def q_paragraph_dedup(spark, sf_dir, chunk_words: int = 3):
             .orderBy("h"))
 
 
-def _paragraph_dedup_oracle_sql(chunk_words: int = 3) -> str:
-    """DuckDB replay of q_paragraph_dedup at any chunk size.  chunk_words=3
-    is the toy gate default; chunk_words=50 is the realistic C4-style span
-    length (a 50-word chunk shared across docs is near-certain duplication,
-    not coincidence) -- both sizes run at the correctness gate."""
+def _paragraph_dedup_oracle_sql(chunk_words: int) -> str:
+    """DuckDB replay of q_paragraph_dedup at any chunk size.
+    TOY_CHUNK_WORDS is the toy gate default; C4_CHUNK_WORDS is the
+    realistic C4-style span length (a 50-word chunk shared across docs is
+    near-certain duplication, not coincidence) -- both sizes run at the
+    correctness gate."""
     k = chunk_words
     return f"""
 WITH w AS (
@@ -963,11 +1078,11 @@ FROM c GROUP BY 1 HAVING COUNT(DISTINCT doc_id) > 1 ORDER BY h
 """
 
 
-ORACLE_PARAGRAPH_DEDUP = _paragraph_dedup_oracle_sql()
-ORACLE_PARAGRAPH_DEDUP_50 = _paragraph_dedup_oracle_sql(50)
+ORACLE_PARAGRAPH_DEDUP = _paragraph_dedup_oracle_sql(TOY_CHUNK_WORDS)
+ORACLE_PARAGRAPH_DEDUP_50 = _paragraph_dedup_oracle_sql(C4_CHUNK_WORDS)
 
 
-def q_paragraph_dedup_clean(spark, sf_dir, chunk_words: int = 50):
+def q_paragraph_dedup_clean(spark, sf_dir):
     """C4-style paragraph REMOVAL: the transform stage that follows
     q_paragraph_dedup's reporting -- re-emit every document with globally
     duplicated chunks removed, keeping exactly ONE occurrence corpus-wide
@@ -987,7 +1102,7 @@ def q_paragraph_dedup_clean(spark, sf_dir, chunk_words: int = 50):
     q_paragraph_dedup's reporting."""
     docs = _t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
-    k = chunk_words
+    k = C4_CHUNK_WORDS
     n_chunks = F.floor(F.size(words) / k).cast("long")
     hashes = F.when(n_chunks >= 1, F.transform(
         F.sequence(F.lit(1), n_chunks),
@@ -1021,19 +1136,17 @@ def q_paragraph_dedup_clean(spark, sf_dir, chunk_words: int = 50):
             .orderBy("doc_id"))
 
 
-def _paragraph_clean_oracle_sql(chunk_words: int = 50) -> str:
-    """DuckDB replay of q_paragraph_dedup_clean: same chunking, same
-    struct-min ownership, same rejoin."""
-    k = chunk_words
-    return f"""
+# DuckDB replay of q_paragraph_dedup_clean: same chunking, same struct-min
+# ownership, same rejoin
+ORACLE_PARAGRAPH_CLEAN_50 = f"""
 WITH w AS (
   SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS ws
   FROM documents
 ),
 c AS (
   SELECT doc_id, i - 1 AS pos,
-         array_to_string(ws[(i-1)*{k}+1 : i*{k}], ' ') AS chunk
-  FROM w, UNNEST(range(1, CAST(FLOOR(LEN(ws)/{k}) AS BIGINT) + 1)) AS t(i)
+         array_to_string(ws[(i-1)*{C4_CHUNK_WORDS}+1 : i*{C4_CHUNK_WORDS}], ' ') AS chunk
+  FROM w, UNNEST(range(1, CAST(FLOOR(LEN(ws)/{C4_CHUNK_WORDS}) AS BIGINT) + 1)) AS t(i)
 ),
 marked AS (
   SELECT doc_id, pos, chunk,
@@ -1053,14 +1166,11 @@ SELECT w.doc_id,
        CAST(COALESCE(p.n_removed, 0) AS BIGINT) AS n_removed,
        TRIM(CONCAT_WS(' ', COALESCE(p.kept, ''),
             array_to_string(
-              ws[CAST(FLOOR(LEN(ws)/{k}) AS BIGINT)*{k}+1 : LEN(ws)], ' ')))
+              ws[CAST(FLOOR(LEN(ws)/{C4_CHUNK_WORDS}) AS BIGINT)*{C4_CHUNK_WORDS}+1 : LEN(ws)], ' ')))
          AS clean_text
 FROM w LEFT JOIN perdoc p USING (doc_id)
 ORDER BY w.doc_id
 """
-
-
-ORACLE_PARAGRAPH_CLEAN_50 = _paragraph_clean_oracle_sql(50)
 
 
 def _remove_dot_segments(path):
@@ -1419,8 +1529,7 @@ def robots_directives(robots_df):
                     F.coalesce("sitemaps", F.array()).alias("sitemaps")))
 
 
-def frontier_schedule(urls_df, directives_df, per_host_cap: int = 1000,
-                      default_delay: float = 1.0):
+def frontier_schedule(urls_df, directives_df, per_host_cap: int = 1000):
     """Politeness scheduling: turn a crawl frontier (host, url) plus
     robots_directives into a fetch plan -- each url gets a per-host slot
     and an earliest-fetch offset `eta_sec = slot * crawl_delay` (the
@@ -1447,7 +1556,7 @@ def frontier_schedule(urls_df, directives_df, per_host_cap: int = 1000,
     joined = ranked.join(
         F.broadcast(directives_df.select("host", "crawl_delay")),
         "host", "left")
-    delay = F.coalesce(F.col("crawl_delay"), F.lit(default_delay))
+    delay = F.coalesce(F.col("crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))
     return joined.select(
         "host", "url", "slot",
         (F.col("slot") * delay).alias("eta_sec"))
@@ -1493,8 +1602,8 @@ FROM u ORDER BY doc_id
 """
 
 
-def q_tfidf_topk(spark, sf_dir, k: int = 3):
-    """Per-document top-k keywords by TF-IDF -- the IR primitive behind
+def q_tfidf_topk(spark, sf_dir):
+    """Per-document top-TFIDF_K keywords by TF-IDF -- the IR primitive behind
     keyword extraction and sparse retrieval.  Shape: one explode to
     (doc, term) with map-side-combined counts, document frequencies as a
     second partial agg over distinct (doc, term) -- Σdf rows, never the
@@ -1518,13 +1627,12 @@ def q_tfidf_topk(spark, sf_dir, k: int = 3):
                       .alias("score")))
     w = Window.partitionBy("doc_id").orderBy(F.desc("score"), "term")
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TFIDF_K)
             .select("doc_id", "term", "score", "rnk")
             .orderBy("doc_id", "rnk"))
 
 
-def _tfidf_oracle_sql(k: int = 3) -> str:
-    return f"""
+ORACLE_TFIDF = f"""
 WITH w AS (
   SELECT doc_id, UNNEST(regexp_split_to_array(TRIM(text), '\\s+')) AS term
   FROM documents WHERE LENGTH(TRIM(text)) > 0
@@ -1544,16 +1652,12 @@ ranked AS (
                                  ORDER BY score DESC, term) AS INT) AS rnk
   FROM scored
 )
-SELECT doc_id, term, score, rnk FROM ranked WHERE rnk <= {k}
+SELECT doc_id, term, score, rnk FROM ranked WHERE rnk <= {TFIDF_K}
 ORDER BY doc_id, rnk
 """
 
 
-ORACLE_TFIDF = _tfidf_oracle_sql()
-
-
-def pagerank(edges, iters: int = 5, damping: float = 0.85,
-             n_nodes: int | None = None):
+def pagerank(edges, n_nodes: int | None = None):
     """PageRank over an (src, dst) edge DataFrame -- the web-graph rank
     that feeds crawl prioritization and quality weighting.  Simplified
     (dangling mass leaks, like the original formulation) so a SQL oracle
@@ -1567,7 +1671,8 @@ def pagerank(edges, iters: int = 5, damping: float = 0.85,
     n = n_nodes if n_nodes is not None else nodes.count()
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
+    damping = PAGERANK_DAMPING
+    for _ in range(PAGERANK_ITERS):
         contribs = (edges.join(ranks, edges["src"] == ranks["id"])
                     .join(outdeg, "src")
                     .select(F.col("dst").alias("id"),
@@ -1582,7 +1687,7 @@ def pagerank(edges, iters: int = 5, damping: float = 0.85,
     return ranks
 
 
-def q_host_pagerank(spark, sf_dir, iters: int = 5):
+def q_host_pagerank(spark, sf_dir):
     """Gate query: a deterministic 50-host link graph (ring edge, doubling
     edge, and periodic links into host 0 -- a hub) ranked with 5 PageRank
     iterations.  The oracle unrolls the same 5 iterations as stacked
@@ -1597,17 +1702,17 @@ def q_host_pagerank(spark, sf_dir, iters: int = 5):
     hub = docs.filter(F.col("h") % 7 == 3) \
         .select(F.col("h").alias("src"), F.lit(0).alias("dst"))
     edges = ring.union(dbl).union(hub).distinct()
-    ranks = pagerank(edges, iters=iters, n_nodes=50)
+    ranks = pagerank(edges, n_nodes=50)
     return (ranks.select("id", F.round("rank", 6).alias("rank"))
             .orderBy("id"))
 
 
-def _pagerank_oracle_sql(iters: int = 5) -> str:
+def _pagerank_oracle_sql() -> str:
     layers = ["pr0 AS (SELECT h AS id, 1.0/50 AS rank FROM hosts)"]
-    for k in range(1, iters + 1):
+    for k in range(1, PAGERANK_ITERS + 1):
         layers.append(f"""pr{k} AS (
   SELECT h.h AS id,
-         0.15/50 + 0.85 * COALESCE((
+         {1 - PAGERANK_DAMPING:g}/50 + {PAGERANK_DAMPING} * COALESCE((
            SELECT SUM(p.rank / o.deg)
            FROM edges e JOIN pr{k-1} p ON p.id = e.src
            JOIN outdeg o ON o.src = e.src
@@ -1623,7 +1728,7 @@ edges AS (
 ),
 outdeg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
 {body}
-SELECT id, ROUND(rank, 6) AS rank FROM pr{iters} ORDER BY id
+SELECT id, ROUND(rank, 6) AS rank FROM pr{PAGERANK_ITERS} ORDER BY id
 """
 
 
@@ -1825,13 +1930,13 @@ FROM documents ORDER BY doc_id
 """
 
 
-def _minhash_ctes(n_hashes: int = 16, n_bands: int = 4) -> str:
+def _minhash_ctes() -> str:
     """Shared CTE text (w/tri/ab/hx/bands) replaying _minhash_sigs +
-    _minhash_banded in DuckDB, used by both minhash oracles."""
-    per_band = n_hashes // n_bands
+    _minhash_banded in DuckDB, used by every minhash oracle."""
+    per_band = N_HASHES // N_BANDS
     mins = ",\n   ".join(
         f"MIN(a * {2 * h + 3} + b * {2 * h + 101} + {h}) AS h{h}"
-        for h in range(n_hashes))
+        for h in range(N_HASHES))
     bands = "\n  UNION ALL ".join(
         "SELECT doc_id, CAST({b} AS INT) AS band, md5({cat}) AS bucket "
         "FROM hx".format(
@@ -1839,7 +1944,7 @@ def _minhash_ctes(n_hashes: int = 16, n_bands: int = 4) -> str:
             cat=" || ',' || ".join(
                 f"h{h}::VARCHAR"
                 for h in range(b * per_band, (b + 1) * per_band)))
-        for b in range(n_bands))
+        for b in range(N_BANDS))
     return f"""w AS (
   SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS ws
   FROM documents
@@ -1865,22 +1970,45 @@ bands AS (
 )"""
 
 
-def _minhash_oracle_sql(n_hashes: int = 16, n_bands: int = 4) -> str:
-    """DuckDB replay of q_minhash_bands."""
-    return f"""
-WITH {_minhash_ctes(n_hashes, n_bands)}
+# _est_jaccard in DuckDB, over a candidate row joined to the signatures of
+# both sides as hx x and hx y
+_EST_JACCARD_SQL = "ROUND(({}) / {}.0, 4)".format(
+    " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(N_HASHES)), N_HASHES)
+
+# transitive closure over the symmetrized near(a_id, b_id) pair graph: the
+# DuckDB side of connected_components; a node's component label (the min
+# reachable id) is _MIN_REACH
+_MIN_REACH = "LEAST(src, MIN(dst))"
+_REACH_CTES = """edges AS (
+  SELECT a_id AS src, b_id AS dst FROM near
+  UNION SELECT b_id, a_id FROM near
+),
+reach(src, dst) AS (
+  SELECT src, dst FROM edges
+  UNION
+  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
+)"""
+
+
+def _reach_clusters_sql(id_col: str) -> str:
+    """(id_col, cluster, is_survivor) rows of the _REACH_CTES closure."""
+    return f"""SELECT src AS {id_col},
+       {_MIN_REACH} AS cluster,
+       src = {_MIN_REACH} AS is_survivor
+FROM reach GROUP BY src ORDER BY {id_col}"""
+
+
+# DuckDB replay of q_minhash_bands
+ORACLE_MINHASH = f"""
+WITH {_minhash_ctes()}
 SELECT band, bucket, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc
 FROM bands GROUP BY band, bucket HAVING COUNT(*) > 1
 ORDER BY band, bucket
 """
 
-
-def _minhash_est_oracle_sql(n_hashes: int = 16, n_bands: int = 4,
-                            threshold: float = 0.5) -> str:
-    """DuckDB replay of q_minhash_est_pairs (same signature constants)."""
-    agree = " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(n_hashes))
-    return f"""
-WITH {_minhash_ctes(n_hashes, n_bands)},
+# DuckDB replay of q_minhash_est_pairs (same signature constants)
+ORACLE_MINHASH_EST = f"""
+WITH {_minhash_ctes()},
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
   FROM bands a JOIN bands b
@@ -1888,23 +2016,25 @@ cand AS (
 ),
 est AS (
   SELECT c.a_id, c.b_id,
-         ROUND(({agree}) / {n_hashes}.0, 4) AS est_jaccard
+         {_EST_JACCARD_SQL} AS est_jaccard
   FROM cand c
   JOIN hx x ON x.doc_id = c.a_id
   JOIN hx y ON y.doc_id = c.b_id
 )
 SELECT a_id, b_id, est_jaccard FROM est
-WHERE est_jaccard >= {threshold} ORDER BY a_id, b_id
+WHERE est_jaccard >= {EST_JACCARD_MIN} ORDER BY a_id, b_id
 """
 
 
-ORACLE_MINHASH = _minhash_oracle_sql()
-ORACLE_MINHASH_EST = _minhash_est_oracle_sql()
+def _text_dedup_labels(spark, sf_dir):
+    """(id, label) connected components of the q_minhash_est_pairs graph
+    at TEXT_DEDUP_MIN: the shared prefix of both text_dedup queries."""
+    pairs = q_minhash_est_pairs(spark, sf_dir, TEXT_DEDUP_MIN) \
+        .select("a_id", "b_id")
+    return connected_components(pairs)
 
 
-def q_text_dedup_clusters(spark, sf_dir, threshold: float = 0.7,
-                          n_hashes: int = 16, n_bands: int = 4,
-                          max_iter: int = 25):
+def q_text_dedup_clusters(spark, sf_dir):
     """The complete TEXT near-dup pipeline end: MinHash banding proposes
     candidates, the signature estimator scores them (q_minhash_est_pairs),
     and connected components assign every involved document to a cluster
@@ -1912,23 +2042,15 @@ def q_text_dedup_clusters(spark, sf_dir, threshold: float = 0.7,
     q_neardup_clusters (which runs on embeddings).  Everything before the
     iterative clustering is a single signatures-only job; the cluster
     loop touches only the (tiny) pair graph."""
-    pairs = q_minhash_est_pairs(spark, sf_dir, n_hashes, n_bands,
-                                threshold).select("a_id", "b_id")
-    labels = connected_components(pairs, max_iter=max_iter)
-    return (labels.select(
+    return (_text_dedup_labels(spark, sf_dir).select(
         F.col("id").alias("doc_id"), F.col("label").alias("cluster"),
         (F.col("id") == F.col("label")).alias("is_survivor"))
         .orderBy("doc_id"))
 
 
-def _text_dedup_clusters_oracle_sql(threshold: float = 0.7,
-                                    n_hashes: int = 16,
-                                    n_bands: int = 4) -> str:
-    """Recursive closure over the MinHash-estimated pair graph (same
-    signature constants as ORACLE_MINHASH_EST)."""
-    agree = " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(n_hashes))
-    return f"""
-WITH RECURSIVE {_minhash_ctes(n_hashes, n_bands)},
+# the text_dedup pairs of ORACLE_MINHASH_EST's graph at TEXT_DEDUP_MIN, as
+# near(a_id, b_id)
+_TEXT_NEAR_CTES = f"""{_minhash_ctes()},
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
   FROM bands a JOIN bands b
@@ -1939,30 +2061,18 @@ near AS (
   FROM cand c
   JOIN hx x ON x.doc_id = c.a_id
   JOIN hx y ON y.doc_id = c.b_id
-  WHERE ROUND(({agree}) / {n_hashes}.0, 4) >= {threshold}
-),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM near
-  UNION SELECT b_id, a_id FROM near
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS doc_id,
-       LEAST(src, MIN(dst)) AS cluster,
-       src = LEAST(src, MIN(dst)) AS is_survivor
-FROM reach GROUP BY src ORDER BY doc_id
+  WHERE {_EST_JACCARD_SQL} >= {TEXT_DEDUP_MIN}
+)"""
+
+# recursive closure over the MinHash-estimated pair graph
+ORACLE_TEXT_DEDUP_CLUSTERS = f"""
+WITH RECURSIVE {_TEXT_NEAR_CTES},
+{_REACH_CTES}
+{_reach_clusters_sql("doc_id")}
 """
 
 
-ORACLE_TEXT_DEDUP_CLUSTERS = _text_dedup_clusters_oracle_sql()
-
-
-def q_text_dedup_clean(spark, sf_dir, threshold: float = 0.7,
-                       n_hashes: int = 16, n_bands: int = 4,
-                       max_iter: int = 25):
+def q_text_dedup_clean(spark, sf_dir):
     """The doc-level CLEAN OUTPUT of the text near-dup pipeline -- the
     transform a training-data pipeline actually ships (mirroring
     q_paragraph_dedup_clean at document granularity): every document that
@@ -1970,56 +2080,27 @@ def q_text_dedup_clean(spark, sf_dir, threshold: float = 0.7,
     its text.  Non-survivors are a tiny ids-only frame (one row per
     dropped doc), so the anti-join broadcasts and the text payload never
     enters a shuffle."""
-    pairs = q_minhash_est_pairs(spark, sf_dir, n_hashes, n_bands,
-                                threshold).select("a_id", "b_id")
-    labels = connected_components(pairs, max_iter=max_iter)
-    losers = labels.filter(F.col("id") != F.col("label")) \
+    losers = _text_dedup_labels(spark, sf_dir) \
+                   .filter(F.col("id") != F.col("label")) \
                    .select(F.col("id").alias("doc_id"))
     docs = _t(spark, sf_dir, "documents")
     return (docs.join(F.broadcast(losers), "doc_id", "left_anti")
             .select("doc_id", "text").orderBy("doc_id"))
 
 
-def _text_dedup_clean_oracle_sql(threshold: float = 0.7,
-                                 n_hashes: int = 16,
-                                 n_bands: int = 4) -> str:
-    """Survivor anti-join over the same recursive pair-graph closure as
-    ORACLE_TEXT_DEDUP_CLUSTERS."""
-    agree = " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(n_hashes))
-    return f"""
-WITH RECURSIVE {_minhash_ctes(n_hashes, n_bands)},
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
-near AS (
-  SELECT c.a_id, c.b_id
-  FROM cand c
-  JOIN hx x ON x.doc_id = c.a_id
-  JOIN hx y ON y.doc_id = c.b_id
-  WHERE ROUND(({agree}) / {n_hashes}.0, 4) >= {threshold}
-),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM near
-  UNION SELECT b_id, a_id FROM near
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-),
+# survivor anti-join over the same recursive pair-graph closure as
+# ORACLE_TEXT_DEDUP_CLUSTERS
+ORACLE_TEXT_DEDUP_CLEAN = f"""
+WITH RECURSIVE {_TEXT_NEAR_CTES},
+{_REACH_CTES},
 losers AS (
   SELECT src AS doc_id FROM reach GROUP BY src
-  HAVING src <> LEAST(src, MIN(dst))
+  HAVING src <> {_MIN_REACH}
 )
 SELECT d.doc_id, d.text FROM documents d
 WHERE d.doc_id NOT IN (SELECT doc_id FROM losers)
 ORDER BY d.doc_id
 """
-
-
-ORACLE_TEXT_DEDUP_CLEAN = _text_dedup_clean_oracle_sql()
 
 
 _LANG_STOPS = {
@@ -2316,29 +2397,26 @@ SELECT doc_id, {assemble} AS simhash FROM v ORDER BY doc_id
 ORACLE_SIMHASH = _simhash_oracle_sql()
 
 
-def q_embedding_neardup(spark, sf_dir, threshold: float = 0.4):
-    """Embedding-cosine near-duplicate pairs (i<j, cosine >= threshold):
+def q_embedding_neardup(spark, sf_dir):
+    """Embedding-cosine near-duplicate pairs (i<j, cosine >= COSINE_MIN):
     the exact-similarity complement to MinHash for semantic dedup."""
     emb = _t(spark, sf_dir, "embeddings")
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
     a = emb.select(F.col("vec_id").alias("a_id"),
                    F.col("embedding").alias("a_emb"),
-                   norm(F.col("embedding")).alias("a_norm"))
+                   _norm_expr(F.col("embedding")).alias("a_norm"))
     b = emb.select(F.col("vec_id").alias("b_id"),
                    F.col("embedding").alias("b_emb"),
-                   norm(F.col("embedding")).alias("b_norm"))
+                   _norm_expr(F.col("embedding")).alias("b_norm"))
     dot = _dot_expr(F.col("a_emb"), F.col("b_emb"))
     sim = F.round(dot / (F.col("a_norm") * F.col("b_norm")), 6)
     return (a.crossJoin(b)
             .filter(F.col("a_id") < F.col("b_id"))
             .select("a_id", "b_id", sim.alias("sim"))
-            .filter(F.col("sim") >= threshold)
+            .filter(F.col("sim") >= COSINE_MIN)
             .orderBy("a_id", "b_id"))
 
 
-ORACLE_EMBEDDING_NEARDUP = """
+ORACLE_EMBEDDING_NEARDUP = f"""
 SELECT a.vec_id AS a_id, b.vec_id AS b_id,
        ROUND(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
              (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
@@ -2349,7 +2427,7 @@ WHERE a.vec_id < b.vec_id
   AND ROUND(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
         (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
          sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))),
-        6) >= 0.4
+        6) >= {COSINE_MIN}
 ORDER BY a_id, b_id
 """
 
@@ -2378,42 +2456,44 @@ def _embeddings_n_rows(emb: DataFrame, sf_dir: str) -> int:
     return n if n is not None else emb.count()
 
 
-def ivf_n_cells(n_rows: int, lo: int = 16, hi: int = 1 << 16) -> int:
-    """Corpus-sized IVF cell count: n_cells = clamp(round(sqrt(N)), lo, hi).
+def ivf_n_cells(n_rows: int) -> int:
+    """Corpus-sized IVF cell count: n_cells = clamp(round(sqrt(N)), N_CELLS,
+    2^16).
 
     sqrt(N) cells put expected cell occupancy at sqrt(N), so a query's
-    n_probe probes touch ~n_probe*sqrt(N) rows and the build-side
+    N_PROBE probes touch ~N_PROBE*sqrt(N) rows and the build-side
     assignment broadcast carries sqrt(N) centroids -- both sublinear in N
     (the standard IVF-Flat balance point; SCALE.md §ANN).  Examples:
-    N=500 -> 22, N=10^6 -> 1000, N=10^9 -> 31623.  hi bounds the broadcast
-    size (2^16 centroids x 64 floats = 32 MB).  Mirrors lsh_band_bits;
-    asserted by tests/test_lsh_scale.py."""
+    N=500 -> 22, N=10^6 -> 1000, N=10^9 -> 31623.  The 2^16 cap bounds
+    the broadcast size (2^16 centroids x 64 floats = 32 MB).  Mirrors
+    lsh_band_bits; asserted by tests/test_lsh_scale.py."""
     import math
     if n_rows <= 1:
-        return lo
-    return max(lo, min(hi, round(math.sqrt(n_rows))))
+        return N_CELLS
+    return max(N_CELLS, min(1 << 16, round(math.sqrt(n_rows))))
 
 
-def lsh_band_bits(n_rows: int, lo: int = 4, hi: int = 20) -> int:
+def lsh_band_bits(n_rows: int) -> int:
     """Corpus-sized bucket width for the banded-LSH scale paths.
 
-    band_bits = clamp(ceil(log2 N) - 10, lo, hi): 2^band_bits buckets per
-    band puts the EXPECTED bucket occupancy at N / 2^(log2 N - 10) = 2^10
-    = ~1024 rows, so the bucket self-join generates about
-    n_bands * N * 1024 / 2 candidate pairs -- LINEAR in N -- instead of
-    the ~n_bands * 2^band_bits * (N/2^band_bits)^2 / 2 = N^2-ish blowup a
-    fixed small band_bits gives (the round-2 default of 4 bits degenerated
-    to ~N^2/32 pairs at 10^9 vectors).  Examples: N=500 -> 4 (floor),
-    N=10^6 -> 10, N=10^9 -> 20.  hi=20 bounds plan-compile cost (each bit
-    is one zip_with dot product; 8 bands x 20 bits = 160 expressions) --
-    beyond ~10^9 rows per partition-group, pre-compute signatures with a
-    numpy projection in mapInArrow instead of column expressions.
+    band_bits = clamp(ceil(log2 N) - 10, BAND_BITS, 20): 2^band_bits
+    buckets per band puts the EXPECTED bucket occupancy at
+    N / 2^(log2 N - 10) = 2^10 = ~1024 rows, so the bucket self-join
+    generates about n_bands * N * 1024 / 2 candidate pairs -- LINEAR in
+    N -- instead of the ~n_bands * 2^band_bits * (N/2^band_bits)^2 / 2 =
+    N^2-ish blowup a fixed small band_bits gives (the round-2 default of 4
+    bits degenerated to ~N^2/32 pairs at 10^9 vectors).  Examples: N=500
+    -> 4 (floor), N=10^6 -> 10, N=10^9 -> 20.  The cap of 20 bounds
+    plan-compile cost (each bit is one zip_with dot product; 8 bands x 20
+    bits = 160 expressions) -- beyond ~10^9 rows per partition-group,
+    pre-compute signatures with a numpy projection in mapInArrow instead
+    of column expressions.
     Occupancy is asserted by tests/test_lsh_scale.py; the full sizing
     derivation lives in SCALE.md."""
     import math
     if n_rows <= 1:
-        return lo
-    return max(lo, min(hi, math.ceil(math.log2(n_rows)) - 10))
+        return BAND_BITS
+    return max(BAND_BITS, min(20, math.ceil(math.log2(n_rows)) - 10))
 
 
 def _rhp_sign_matrix(n_bits: int) -> list[list[float]]:
@@ -2452,16 +2532,18 @@ def _rhp_bands(emb_col, band_bits: int, n_bands: int):
     return F.array(*structs)
 
 
-def _rhp_bands_np(emb, band_bits: int, n_bands: int):
+def _rhp_bands_np(emb, band_bits: int):
     """(vec_id, bk struct<band:int,val:bigint>) rows -- the numpy twin of
-    explode(_rhp_bands(...)): each sign bit is the SAME left-associated
-    float64 fold as the interpreted zip_with/aggregate version (see the
-    round-8 kernel note above), so bucket membership is bit-identical;
-    one mapInArrow pass replaces band_bits*n_bands interpreted 64-element
-    folds per row (the round-8 profile's single largest cost)."""
+    explode(_rhp_bands(..., RHP_BANDS)): each sign bit is the SAME
+    left-associated float64 fold as the interpreted zip_with/aggregate
+    version (see the round-8 kernel note above), so bucket membership is
+    bit-identical; one mapInArrow pass replaces band_bits*RHP_BANDS
+    interpreted 64-element folds per row (the round-8 profile's single
+    largest cost)."""
     import pyarrow as pa
-    signs = _rhp_sign_matrix(band_bits * n_bands)
+    n_bands = RHP_BANDS
     n_bits = band_bits * n_bands
+    signs = _rhp_sign_matrix(n_bits)
 
     def fn(batches):
         import numpy as np
@@ -2488,18 +2570,18 @@ def _rhp_bands_np(emb, band_bits: int, n_bands: int):
                        F.struct("band", "val").alias("bk"))
 
 
-def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
-                            band_bits: int | None = None, n_bands: int = 8,
+def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None,
                             max_bucket: int | None = 65536):
     """Scale path for embedding near-dup: random-hyperplane LSH bucket
     self-join + exact cosine rerank, instead of the O(N^2) crossJoin.
 
-    A pair is a candidate iff ANY of the n_bands band values matches -- a
+    A pair is a candidate iff ANY of the RHP_BANDS band values matches -- a
     bucket equi-join whose size is sum over buckets of |bucket|^2, not N^2.
     band_bits defaults to lsh_band_bits(N) (~1024 expected rows/bucket =>
     candidates linear in N); only (vec_id, band, val) flows through the
     banding shuffle -- embeddings join back AFTER candidate-pair dedup, so
-    the 64-float vector is never amplified x n_bands through the exchange.
+    the 64-float vector is never amplified x RHP_BANDS through the
+    exchange.
     q_embedding_neardup (the crossJoin) stays as the exact baseline;
     test_embedding_neardup_lsh_recall pins recall against it, and the
     DuckDB oracle replays the signature bit-for-bit (md5 sign matrix).
@@ -2511,10 +2593,10 @@ def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
     occupancy -- fires only on pathological skew, never at gate scale, so
     the DuckDB oracle needs no cap clause) keeps the first max_bucket
     members per (band, val) bucket (deterministic: lowest vec_id first,
-    ties impossible), bounding candidates at n_bands * n_buckets *
+    ties impossible), bounding candidates at RHP_BANDS * n_buckets *
     max_bucket^2 / 2.  Pairs among dropped members of a hot bucket are
     lost to THIS band only -- they remain candidates through their other
-    n_bands-1 signatures, and a genuinely near-dup mega-cluster keeps its
+    RHP_BANDS-1 signatures, and a genuinely near-dup mega-cluster keeps its
     kept-member core (the survivors a dedup pass retains anyway).  Pass
     max_bucket=None to disable.
 
@@ -2532,21 +2614,20 @@ def q_embedding_neardup_lsh(spark, sf_dir, threshold: float = 0.4,
     # plans/r08/embedding_neardup_lsh_before.txt shows the duplicated
     # Generate), at scan parallelism 1.  Distinct pairs = ANY-band
     # semantics.
-    pairs = _candidate_pairs(_rhp_bands_np(emb, band_bits, n_bands),
-                             "vec_id", ["bk"], max_bucket)
-    return (_cosine_rerank(pairs, emb, sf_dir, n)
-            .filter(F.col("sim") >= threshold)
+    pairs = _candidate_pairs(_rhp_bands_np(emb, band_bits), "vec_id",
+                             ["bk"], max_bucket)
+    return (_cosine_rerank(pairs, emb, _local_emb_table(sf_dir), n)
+            .filter(F.col("sim") >= COSINE_MIN)
             .orderBy("a_id", "b_id"))
 
 
-def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
-                   band_bits: int | None = None, n_bands: int = 8):
+def q_ann_lsh_topk(spark, sf_dir, band_bits: int | None = None):
     """LSH-bucketed approximate top-k: the scale path for similarity search.
 
-    Banded OR-construction over random-hyperplane bits (n_bands tables of
+    Banded OR-construction over random-hyperplane bits (RHP_BANDS tables of
     band_bits each, band_bits sized by lsh_band_bits(N)): a pair is a
     candidate if ANY band matches; exact cosine rerank inside candidates.
-    At 10^9 vectors this replaces the per-query O(N) scan with n_bands
+    At 10^9 vectors this replaces the per-query O(N) scan with RHP_BANDS
     bucket joins over ~2^10-row buckets.  Only ids flow through the band
     join; vectors meet the deduped candidate set in _cosine_rerank.
     Recall vs the brute-force reference (q_ann_cosine_topk) depends on
@@ -2562,26 +2643,24 @@ def q_ann_lsh_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     # round 8: same kernel + materialize-once treatment as
     # q_embedding_neardup_lsh (the interpreted banding previously ran
     # twice -- query side and corpus side)
-    banded = _rhp_bands_np(emb, band_bits, n_bands) \
-        .localCheckpoint(eager=True)
-    qs = (banded.filter(F.col("vec_id") < n_queries)
+    banded = _rhp_bands_np(emb, band_bits).localCheckpoint(eager=True)
+    qs = (banded.filter(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("q_id"), F.col("bk").alias("q_bk")))
     cands = (F.broadcast(qs).join(banded, qs.q_bk == banded.bk)
              .filter(F.col("vec_id") != F.col("q_id"))
              .select("q_id", "vec_id")
              .dropDuplicates(["q_id", "vec_id"]))
-    scored = _cosine_rerank(cands, emb, sf_dir, n, "q_id", "vec_id")
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "vec_id", "sim", "rnk")
-            .orderBy("q_id", "rnk"))
+    scored = _cosine_rerank(cands, emb, _local_emb_table(sf_dir), n,
+                            "q_id", "vec_id")
+    return _top_k(scored, F.desc("sim"))
 
 
-def _rhp_oracle_ctes(band_bits: int, n_bands: int) -> str:
-    """Shared sig/banded CTE text for the two LSH oracles: the SAME md5
-    sign constants as _rhp_bands, embedded as DuckDB array literals."""
-    signs = _rhp_sign_matrix(band_bits * n_bands)
+def _rhp_oracle_ctes() -> str:
+    """Shared sig/banded CTE text for the LSH oracles at the gate's
+    BAND_BITS x RHP_BANDS: the SAME md5 sign constants as _rhp_bands,
+    embedded as DuckDB array literals."""
+    band_bits = BAND_BITS
+    signs = _rhp_sign_matrix(band_bits * RHP_BANDS)
     bit_cols = ",\n         ".join(
         f"CASE WHEN list_dot_product(embedding::DOUBLE[], "
         f"[{', '.join(str(v) for v in row)}]::DOUBLE[]) >= 0 "
@@ -2592,7 +2671,7 @@ def _rhp_oracle_ctes(band_bits: int, n_bands: int) -> str:
         " AS val FROM sig".format(
             b=b, expr=" + ".join(f"{1 << i} * bit{b * band_bits + i}"
                                  for i in range(band_bits)))
-        for b in range(n_bands))
+        for b in range(RHP_BANDS))
     return f"""sig AS (
   SELECT vec_id, embedding,
          {bit_cols}
@@ -2603,15 +2682,9 @@ banded AS (
 )"""
 
 
-def _embedding_neardup_lsh_oracle_sql(threshold: float = 0.4,
-                                      band_bits: int = 4,
-                                      n_bands: int = 8) -> str:
-    """DuckDB replay of q_embedding_neardup_lsh.  band_bits=4 matches
-    lsh_band_bits(500) -- the sf0.01 embeddings row count the driver's
-    correctness gate runs at (the query computes the same value from its
-    own count)."""
-    return f"""
-WITH {_rhp_oracle_ctes(band_bits, n_bands)},
+# DuckDB replay of q_embedding_neardup_lsh at band_bits=BAND_BITS
+ORACLE_EMBEDDING_NEARDUP_LSH = f"""
+WITH {_rhp_oracle_ctes()},
 pairs AS (
   SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
   FROM banded a JOIN banded b
@@ -2627,18 +2700,14 @@ sims AS (
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
 )
-SELECT a_id, b_id, sim FROM sims WHERE sim >= {threshold}
+SELECT a_id, b_id, sim FROM sims WHERE sim >= {COSINE_MIN}
 ORDER BY a_id, b_id
 """
 
-
-def _ann_lsh_oracle_sql(k: int = 5, n_queries: int = 3, band_bits: int = 4,
-                        n_bands: int = 8) -> str:
-    """DuckDB replay of q_ann_lsh_topk (same band_bits coupling note as
-    _embedding_neardup_lsh_oracle_sql)."""
-    return f"""
-WITH {_rhp_oracle_ctes(band_bits, n_bands)},
-qs AS (SELECT vec_id AS q_id, band, val FROM banded WHERE vec_id < {n_queries}),
+# DuckDB replay of q_ann_lsh_topk at band_bits=BAND_BITS
+ORACLE_ANN_LSH = f"""
+WITH {_rhp_oracle_ctes()},
+qs AS (SELECT vec_id AS q_id, band, val FROM banded WHERE vec_id < {N_QUERIES}),
 cand AS (
   SELECT DISTINCT q.q_id, b.vec_id
   FROM qs q JOIN banded b
@@ -2660,23 +2729,33 @@ ranked AS (
               AS INT) AS rnk
   FROM sims
 )
-SELECT q_id, vec_id, sim, rnk FROM ranked WHERE rnk <= {k}
+SELECT q_id, vec_id, sim, rnk FROM ranked WHERE rnk <= {TOP_K}
 ORDER BY q_id, rnk
 """
 
 
-ORACLE_EMBEDDING_NEARDUP_LSH = _embedding_neardup_lsh_oracle_sql()
-ORACLE_ANN_LSH = _ann_lsh_oracle_sql()
+def _ivf_candidates(pairs, cells):
+    """(q_id, vec_id) candidates: every vector of each query's N_PROBE
+    nearest cells (by pairs' sim_c, ties to the smaller c_id), minus the
+    query itself.  Cells are disjoint, so no pair repeats."""
+    wq = Window.partitionBy("q_id").orderBy(F.desc("sim_c"), "c_id")
+    probes = (pairs.filter(F.col("vec_id") < N_QUERIES)
+              .select(F.col("vec_id").alias("q_id"), "c_id", "sim_c")
+              .withColumn("rn", F.row_number().over(wq))
+              .filter(F.col("rn") <= N_PROBE)
+              .select("q_id", F.col("c_id").alias("cell")))
+    return (F.broadcast(probes).join(cells, "cell")
+            .filter(F.col("vec_id") != F.col("q_id"))
+            .select("q_id", "vec_id"))
 
 
-def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
-                   n_cells: int | None = None, n_probe: int = 4,
+def q_ann_ivf_topk(spark, sf_dir, n_cells: int | None = None,
                    kmeans_iters: int = 0):
     """IVF-Flat approximate top-k: the coarse-quantizer counterpart to the
     RHP-LSH path.  Vectors partition into n_cells Voronoi cells around
     DETERMINISTIC sampled centroids (every ceil(N/n_cells)-th vec_id --
     no RNG, so the DuckDB oracle replays the whole index bit-for-bit); a
-    query scans only its n_probe nearest cells, i.e. ~n_probe/n_cells of
+    query scans only its N_PROBE nearest cells, i.e. ~N_PROBE/n_cells of
     the corpus instead of an O(N) scan.
 
     Scale shape: the build-side assignment is one broadcast of n_cells
@@ -2684,7 +2763,7 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     map-side combined, no window over the N x n_cells pair rows; probes
     and rerank touch only candidate cells.  n_cells defaults to
     ivf_n_cells(N) ~ sqrt(N) (cell occupancy sqrt(N) => probe cost
-    n_probe*sqrt(N), sublinear); N comes from parquet footer stats, no
+    N_PROBE*sqrt(N), sublinear); N comes from parquet footer stats, no
     scan job (a non-local-parquet input costs one count() job).
 
     kmeans_iters > 0 refines the sampled centroids with that many Lloyd
@@ -2697,22 +2776,20 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     partition).  Deterministic given the sampled seeds up to float
     summation order; the correctness gate therefore pins kmeans_iters=0
     (bit-exact oracle replay) and tests/test_lsh_scale.py pins that
-    refinement does not lose recall at equal n_probe."""
+    refinement does not lose recall at equal N_PROBE."""
     import math
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
+    local = _local_emb_table(sf_dir)
     if n_cells is None:
         n_cells = ivf_n_cells(n)
     step = max(1, math.ceil(n / n_cells))
-    norm = lambda c: F.sqrt(F.aggregate(  # noqa: E731
-        F.transform(c, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x))
     cents = (emb.filter(F.col("vec_id") % step == 0)
              .select(F.col("vec_id").alias("c_id"),
                      F.col("embedding").alias("c_emb"),
-                     norm(F.col("embedding")).alias("c_norm")))
+                     _norm_expr(F.col("embedding")).alias("c_norm")))
     ev = emb.select("vec_id", "embedding",
-                    norm(F.col("embedding")).alias("v_norm"))
+                    _norm_expr(F.col("embedding")).alias("v_norm"))
     for _ in range(kmeans_iters):
         sim_i = F.round(_dot_expr(F.col("embedding"), F.col("c_emb")) /
                         (F.col("v_norm") * F.col("c_norm")), 6)
@@ -2733,14 +2810,13 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
                      F.array_sort(F.collect_list(F.struct("d", "m"))),
                      lambda s: s["m"]).alias("c_emb"))
                  .select(F.col("cell").alias("c_id"), "c_emb",
-                         norm(F.col("c_emb")).alias("c_norm")))
+                         _norm_expr(F.col("c_emb")).alias("c_norm")))
     if kmeans_iters == 0:
         # round 8: assignment sims from the _np_cent_sims kernel (raw
         # division in the kernel, 6dp round here -- bit-identical), the
         # pair frame materialized once for its two consumers (cells +
         # probes)
-        c_ids, c_mat = _emb_subset(emb, _local_emb_table(sf_dir),
-                                   lambda v: v % step == 0)
+        c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
         pairs = (_np_cent_sims(emb, c_ids, c_mat)
                  .select("vec_id", "c_id",
                          F.round(F.col("raw"), 6).alias("sim_c"))
@@ -2756,21 +2832,9 @@ def q_ann_ivf_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
              .agg(F.max(F.struct(F.col("sim_c").alias("s"),
                                  (-F.col("c_id")).alias("nc"))).alias("m"))
              .select("vec_id", (-F.col("m.nc")).alias("cell")))
-    wq = Window.partitionBy("q_id").orderBy(F.desc("sim_c"), "c_id")
-    probes = (pairs.filter(F.col("vec_id") < n_queries)
-              .select(F.col("vec_id").alias("q_id"), "c_id", "sim_c")
-              .withColumn("rn", F.row_number().over(wq))
-              .filter(F.col("rn") <= n_probe)
-              .select("q_id", F.col("c_id").alias("cell")))
-    cand = (F.broadcast(probes).join(cells, "cell")
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select("q_id", "vec_id"))   # cells are disjoint: no dup pairs
-    scored = _cosine_rerank(cand, emb, sf_dir, n, "q_id", "vec_id")
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "vec_id", "sim", "rnk")
-            .orderBy("q_id", "rnk"))
+    scored = _cosine_rerank(_ivf_candidates(pairs, cells), emb, local, n,
+                            "q_id", "vec_id")
+    return _top_k(scored, F.desc("sim"))
 
 
 _IVF_COS = ("ROUND(list_dot_product({a}.embedding::DOUBLE[], "
@@ -2781,26 +2845,19 @@ _IVF_COS = ("ROUND(list_dot_product({a}.embedding::DOUBLE[], "
             "{b}.embedding::DOUBLE[]))), 6)")
 
 
-def _ann_ivf_oracle_sql(k: int = 5, n_queries: int = 3, n_cells: int = 16,
-                        n_probe: int = 4) -> str:
-    """DuckDB replay of q_ann_ivf_topk: same sampled centroids (the step
-    arithmetic runs in SQL), same cosine rounding, same tie-breaks."""
-    sim_ec = _IVF_COS.format(a="e", b="c")
-    sim_qv = _IVF_COS.format(a="eq", b="ev")
-    return f"""
-WITH stepv AS (
-  SELECT CAST(CEIL(COUNT(*) / {n_cells}.0) AS BIGINT) AS step
+# the IVF centroids at n_cells=N_CELLS as cents(c_id, embedding): every
+# step-th vector, the step arithmetic run in SQL
+_IVF_CENT_CTES = f"""stepv AS (
+  SELECT CAST(CEIL(COUNT(*) / {N_CELLS}.0) AS BIGINT) AS step
   FROM embeddings
 ),
 cents AS (
   SELECT vec_id AS c_id, embedding
   FROM embeddings WHERE vec_id % (SELECT GREATEST(step, 1) FROM stepv) = 0
-),
-sims AS (
-  SELECT e.vec_id, c.c_id, {sim_ec} AS sim_c
-  FROM embeddings e CROSS JOIN cents c
-),
-cells AS (
+)"""
+# each vector's nearest cell, and the N_PROBE cells of each query, from the
+# sims(vec_id, c_id, sim_c) table
+_IVF_PROBE_CTES = f"""cells AS (
   SELECT vec_id, c_id AS cell FROM (
     SELECT vec_id, c_id,
            ROW_NUMBER() OVER (PARTITION BY vec_id
@@ -2812,15 +2869,25 @@ probes AS (
     SELECT vec_id, c_id,
            ROW_NUMBER() OVER (PARTITION BY vec_id
                               ORDER BY sim_c DESC, c_id) AS rn
-    FROM sims WHERE vec_id < {n_queries}) WHERE rn <= {n_probe}
+    FROM sims WHERE vec_id < {N_QUERIES}) WHERE rn <= {N_PROBE}
+)"""
+
+# DuckDB replay of q_ann_ivf_topk at n_cells=N_CELLS: same sampled
+# centroids, same cosine rounding, same tie-breaks
+ORACLE_ANN_IVF = f"""
+WITH {_IVF_CENT_CTES},
+sims AS (
+  SELECT e.vec_id, c.c_id, {_IVF_COS.format(a="e", b="c")} AS sim_c
+  FROM embeddings e CROSS JOIN cents c
 ),
+{_IVF_PROBE_CTES},
 cand AS (
   SELECT p.q_id, a.vec_id
   FROM probes p JOIN cells a USING (cell)
   WHERE a.vec_id <> p.q_id
 ),
 scored AS (
-  SELECT cd.q_id, cd.vec_id, {sim_qv} AS sim
+  SELECT cd.q_id, cd.vec_id, {_IVF_COS.format(a="eq", b="ev")} AS sim
   FROM cand cd
   JOIN embeddings eq ON eq.vec_id = cd.q_id
   JOIN embeddings ev ON ev.vec_id = cd.vec_id
@@ -2831,18 +2898,16 @@ ranked AS (
                                  ORDER BY sim DESC, vec_id) AS INT) AS rnk
   FROM scored
 )
-SELECT q_id, vec_id, sim, rnk FROM ranked WHERE rnk <= {k}
+SELECT q_id, vec_id, sim, rnk FROM ranked WHERE rnk <= {TOP_K}
 ORDER BY q_id, rnk
 """
 
 
-ORACLE_ANN_IVF = _ann_ivf_oracle_sql()
-
-
-def q_winnow_fingerprint(spark, sf_dir, k: int = 8, w: int = 16):
+def q_winnow_fingerprint(spark, sf_dir):
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken):
-    rolling k-gram hashes, keep the minimum of every w-window, distinct.
-    Guarantees any shared substring of length >= w+k-1 yields a shared
+    rolling WINNOW_K-gram hashes, keep the minimum of every WINNOW_W-window,
+    distinct.  Guarantees any shared substring of length >= w+k-1 yields a
+    shared
     fingerprint -- the plagiarism/near-dup detection primitive.
 
     Computed in ONE shuffle-free Arrow stage (spark/winnow.py: numpy
@@ -2856,20 +2921,21 @@ def q_winnow_fingerprint(spark, sf_dir, k: int = 8, w: int = 16):
     compare; the fingerprint computation itself has no exchange."""
     from .winnow import winnow_fingerprints
     docs = _t(spark, sf_dir, "documents")
-    return winnow_fingerprints(docs, k=k, w=w).orderBy("doc_id")
+    return winnow_fingerprints(docs, k=WINNOW_K, w=WINNOW_W).orderBy("doc_id")
 
 
-def _winnow_hash_expr(k: int, pos: str = "pos") -> str:
-    """The portable rolling hash h = fold (h*257 + codepoint) mod 1e9+7 as
-    nested SQL -- identical text works in Spark SQL and DuckDB."""
+def _winnow_hash_expr(pos: str) -> str:
+    """The portable rolling hash h = fold (h*257 + codepoint) mod 1e9+7
+    over the WINNOW_K chars from `pos`, as nested SQL -- identical text
+    works in Spark SQL and DuckDB."""
     expr = f"CAST(ascii(substring(text, {pos}, 1)) AS BIGINT)"
-    for j in range(1, k):
+    for j in range(1, WINNOW_K):
         expr = (f"(({expr}) * 257 + "
                 f"ascii(substring(text, {pos} + {j}, 1))) % 1000000007")
     return expr
 
 
-def q_winnow_fingerprint_expr(spark, sf_dir, k: int = 8, w: int = 16):
+def q_winnow_fingerprint_expr(spark, sf_dir):
     """The relational formulation of q_winnow_fingerprint (explode one row
     per char position + window min): kept as the executable DEFINITION the
     Arrow kernel is differentially tested against, not as the scale path."""
@@ -2877,13 +2943,13 @@ def q_winnow_fingerprint_expr(spark, sf_dir, k: int = 8, w: int = 16):
     grams = (docs
              .select("doc_id", "text",
                      F.explode(F.sequence(F.lit(1),
-                                          F.length("text") - (k - 1)))
+                                          F.length("text") - (WINNOW_K - 1)))
                       .alias("pos"))
-             .filter(F.length("text") >= k)
+             .filter(F.length("text") >= WINNOW_K)
              .select("doc_id", "pos",
-                     F.expr(_winnow_hash_expr(k)).alias("h")))
+                     F.expr(_winnow_hash_expr("pos")).alias("h")))
     win = Window.partitionBy("doc_id").orderBy("pos") \
-                .rowsBetween(0, w - 1)
+                .rowsBetween(0, WINNOW_W - 1)
     fps = (grams.withColumn("wmin", F.min("h").over(win))
            .select("doc_id", F.col("wmin").alias("fp"))
            .distinct())
@@ -2893,9 +2959,7 @@ def q_winnow_fingerprint_expr(spark, sf_dir, k: int = 8, w: int = 16):
             .orderBy("doc_id"))
 
 
-def q_neardup_clusters(spark, sf_dir, threshold: float = 0.4,
-                       band_bits: int | None = None, n_bands: int = 8,
-                       max_iter: int = 25, max_bucket: int | None = 65536):
+def q_neardup_clusters(spark, sf_dir, band_bits: int | None = None):
     """Near-duplicate CLUSTER assignment: connected components over the
     LSH near-dup pair graph -- the step a real dedup pipeline runs after
     pair generation (keep ONE survivor per cluster, not one per pair;
@@ -2906,7 +2970,8 @@ def q_neardup_clusters(spark, sf_dir, threshold: float = 0.4,
     round every vertex takes min(own, neighbors' labels) (edges are the
     symmetrized pairs); converges in O(component diameter) rounds -- for
     near-dup clusters diameter is tiny (they are quasi-cliques), so 3-5
-    rounds in practice; `max_iter` bounds adversarial chains (a path
+    rounds in practice; connected_components' `max_iter` bounds
+    adversarial chains (a path
     graph; large-star/small-star is the known O(log N)-round alternative
     if that ever matters).  Per round: one ids-only equi-join + partial
     groupBy-min + localCheckpoint (truncates the growing plan lineage --
@@ -2919,11 +2984,9 @@ def q_neardup_clusters(spark, sf_dir, threshold: float = 0.4,
     component, survivor = the cluster representative.  The DuckDB oracle
     replays it with a recursive transitive-closure CTE over the same
     md5-sign-matrix LSH pairs."""
-    pairs = q_embedding_neardup_lsh(spark, sf_dir, threshold, band_bits,
-                                    n_bands, max_bucket=max_bucket) \
+    pairs = q_embedding_neardup_lsh(spark, sf_dir, band_bits) \
         .select("a_id", "b_id")
-    labels = connected_components(pairs, max_iter=max_iter)
-    return (labels.select(
+    return (connected_components(pairs).select(
         F.col("id").alias("vec_id"), F.col("label").alias("cluster"),
         (F.col("id") == F.col("label")).alias("is_survivor"))
         .orderBy("vec_id"))
@@ -2961,12 +3024,10 @@ def connected_components(pairs: DataFrame, max_iter: int = 25) -> DataFrame:
         "(component diameter > max_iter)")
 
 
-def _neardup_clusters_oracle_sql(threshold: float = 0.4, band_bits: int = 4,
-                                 n_bands: int = 8) -> str:
-    """Recursive transitive closure over the same LSH pair graph (identical
-    sign-matrix constants); cluster = min reachable id."""
-    return f"""
-WITH RECURSIVE {_rhp_oracle_ctes(band_bits, n_bands)},
+# recursive transitive closure over the same LSH pair graph (identical
+# sign-matrix constants); cluster = min reachable id
+ORACLE_NEARDUP_CLUSTERS = f"""
+WITH RECURSIVE {_rhp_oracle_ctes()},
 cpairs AS (
   SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
   FROM banded a JOIN banded b
@@ -2982,36 +3043,22 @@ csims AS (
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
 ),
-near AS (SELECT a_id, b_id FROM csims WHERE sim >= {threshold}),
-edges AS (
-  SELECT a_id AS src, b_id AS dst FROM near
-  UNION SELECT b_id, a_id FROM near
-),
-reach(src, dst) AS (
-  SELECT src, dst FROM edges
-  UNION
-  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src
-)
-SELECT src AS vec_id,
-       LEAST(src, MIN(dst)) AS cluster,
-       src = LEAST(src, MIN(dst)) AS is_survivor
-FROM reach GROUP BY src ORDER BY vec_id
+near AS (SELECT a_id, b_id FROM csims WHERE sim >= {COSINE_MIN}),
+{_REACH_CTES}
+{_reach_clusters_sql("vec_id")}
 """
-
-
-ORACLE_NEARDUP_CLUSTERS = _neardup_clusters_oracle_sql()
 
 
 ORACLE_WINNOW = f"""
 WITH grams AS (
   SELECT doc_id, i AS pos,
-         {_winnow_hash_expr(8, pos="i")} AS h
-  FROM documents, UNNEST(range(1, LENGTH(text) - 6)) AS t(i)
+         {_winnow_hash_expr("i")} AS h
+  FROM documents, UNNEST(range(1, LENGTH(text) - {WINNOW_K - 2})) AS t(i)
 ),
 wins AS (
   SELECT doc_id,
          MIN(h) OVER (PARTITION BY doc_id ORDER BY pos
-                      ROWS BETWEEN CURRENT ROW AND 15 FOLLOWING) AS fp
+                      ROWS BETWEEN CURRENT ROW AND {WINNOW_W - 1} FOLLOWING) AS fp
   FROM grams
 )
 SELECT doc_id, COUNT(DISTINCT fp) AS n_fps, MIN(fp) AS min_fp
@@ -3037,25 +3084,25 @@ def md5_shard(col, n):
             .cast("long") % n)
 
 
-def q_corpus_sample(spark, sf_dir, rates=None, denom: int = 1000):
+def q_corpus_sample(spark, sf_dir):
     """Deterministic stratified corpus sampling: keep a doc iff
-    md5(doc_id) mod denom < rate(lang) -- the hash-threshold sampler
+    md5(doc_id) mod SAMPLE_DENOM < SAMPLE_RATES[lang] -- the hash-threshold
+    sampler
     every corpus mix uses to hit per-language token budgets.
 
     Scale shape: a MAP-ONLY filter -- no shuffle, no count jobs, no
     window.  Sampling by content-stable hash (not rand()) makes the
     sample reproducible across runs/retries/cluster sizes and
     automatically consistent between incremental loads (a doc's keep
-    decision never changes).  Stratum rates arrive as a plain dict
-    compiled into a CASE expression (a handful of languages -- no join
+    decision never changes).  SAMPLE_RATES is a plain dict compiled
+    into a CASE expression (a handful of languages -- no join
     needed; a 10^4-stratum map would broadcast-join instead).  The
     DuckDB oracle replays the md5 threshold bit-for-bit (the minhash
     portable-hash pattern)."""
-    rates = rates if rates is not None else {"en": 600, "de": 300}
     docs = _t(spark, sf_dir, "documents")
-    h = md5_shard(F.col("doc_id"), denom)
+    h = md5_shard(F.col("doc_id"), SAMPLE_DENOM)
     rate = F.lit(0)
-    for lang, r in sorted(rates.items()):
+    for lang, r in sorted(SAMPLE_RATES.items()):
         rate = F.when(F.col("lang") == lang, F.lit(r)).otherwise(rate)
     return (docs.withColumn("bucket", h)
             .filter(F.col("bucket") < rate)
@@ -3063,34 +3110,31 @@ def q_corpus_sample(spark, sf_dir, rates=None, denom: int = 1000):
             .orderBy("doc_id"))
 
 
-def _corpus_sample_oracle_sql(rates, denom):
-    cases = " ".join(f"WHEN lang = '{lang}' THEN {r}"
-                     for lang, r in sorted(rates.items()))
-    return f"""
+ORACLE_CORPUS_SAMPLE = f"""
 SELECT doc_id, lang,
        CAST(from_hex(substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIT
-            AS BIGINT) % {denom} AS bucket
+            AS BIGINT) % {SAMPLE_DENOM} AS bucket
 FROM documents
 WHERE CAST(from_hex(substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIT
-           AS BIGINT) % {denom} < (CASE {cases} ELSE 0 END)
+           AS BIGINT) % {SAMPLE_DENOM} < (CASE {" ".join(
+               f"WHEN lang = '{lang}' THEN {r}"
+               for lang, r in sorted(SAMPLE_RATES.items()))} ELSE 0 END)
 ORDER BY doc_id
 """
 
 
-ORACLE_CORPUS_SAMPLE = _corpus_sample_oracle_sql({"en": 600, "de": 300}, 1000)
-
-
-def q_pack_sequences(spark, sf_dir, budget: int = 512, n_shards: int = 8):
+def q_pack_sequences(spark, sf_dir):
     """Sequence packing: assign every doc a (shard, seq_id, tok_offset) under
     GPT-style concatenate-then-split semantics -- docs are concatenated
-    in doc_id order and split into budget-token context windows; seq_id
+    in doc_id order and split into PACK_BUDGET-token context windows; seq_id
     is the window a doc's FIRST token lands in, tok_offset its position
     inside the concatenation.  The step that turns a cleaned corpus into
     fixed-length pretraining rows.
 
-    Scale shape: packing is per-SHARD (shard = md5(doc_id) mod n_shards,
-    the url-bucket idiom), so the running sum is a window over each
-    shard's partition -- n_shards independent sorted cumsums, NO global
+    Scale shape: packing is per-SHARD (shard = md5(doc_id) mod
+    PACK_SHARDS, the url-bucket idiom), so the running sum is a window over
+    each shard's partition -- PACK_SHARDS independent sorted cumsums, NO
+    global
     ordering (a single global sort of 10^12 docs is the anti-pattern;
     real pipelines pack per output shard exactly like this).  Token
     counts are whitespace words (q_token_stats' n_tokens), computed
@@ -3101,23 +3145,22 @@ def q_pack_sequences(spark, sf_dir, budget: int = 512, n_shards: int = 8):
         F.size(F.split(F.trim("text"), r"\s+"))).cast("long")
     slim = docs.select(
         "doc_id",
-        md5_shard(F.col("doc_id"), n_shards).alias("shard"),
+        md5_shard(F.col("doc_id"), PACK_SHARDS).alias("shard"),
         n_tok.alias("n_tokens"))
     w = Window.partitionBy("shard").orderBy("doc_id")
     cum = F.sum("n_tokens").over(w)
     return (slim.select(
         "doc_id", "shard", "n_tokens",
         (cum - F.col("n_tokens")).alias("tok_offset"),
-        F.floor((cum - F.col("n_tokens")) / budget).alias("seq_id"))
+        F.floor((cum - F.col("n_tokens")) / PACK_BUDGET).alias("seq_id"))
         .orderBy("doc_id"))
 
 
-def _pack_sequences_oracle_sql(budget, n_shards):
-    return f"""
+ORACLE_PACK_SEQUENCES = f"""
 WITH slim AS (
   SELECT doc_id,
          CAST(from_hex(substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))::BIT
-              AS BIGINT) % {n_shards} AS shard,
+              AS BIGINT) % {PACK_SHARDS} AS shard,
          CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
               ELSE LEN(regexp_split_to_array(TRIM(text), '\\s+')) END
            AS n_tokens
@@ -3130,12 +3173,9 @@ packed AS (
   FROM slim
 )
 SELECT doc_id, shard, n_tokens, tok_offset,
-       CAST(FLOOR(tok_offset / {budget}) AS BIGINT) AS seq_id
+       CAST(FLOOR(tok_offset / {PACK_BUDGET}) AS BIGINT) AS seq_id
 FROM packed ORDER BY doc_id
 """
-
-
-ORACLE_PACK_SEQUENCES = _pack_sequences_oracle_sql(512, 8)
 
 
 # ---------------------------------------------------------------------------
@@ -3144,10 +3184,10 @@ ORACLE_PACK_SEQUENCES = _pack_sequences_oracle_sql(512, 8)
 # overlap filter is the canonical form; pure training-data shell, no
 # reference counterpart)
 
-def q_decontaminate(spark, sf_dir, n: int = 8, eval_mod: int = 7):
-    """Contamination report: every TRAIN document (doc_id % eval_mod != 0)
-    sharing at least one word n-gram with the held-out EVAL split
-    (doc_id % eval_mod == 0), with its count of distinct shared grams.
+def q_decontaminate(spark, sf_dir):
+    """Contamination report: every TRAIN document (doc_id % EVAL_MOD != 0)
+    sharing at least one word DECON_N-gram with the held-out EVAL split
+    (doc_id % EVAL_MOD == 0), with its count of distinct shared grams.
     The split is a deterministic stand-in for "the benchmark suite" --
     in production the eval side is a separate tiny table of benchmark
     prompts/answers and the train side is the corpus.
@@ -3163,76 +3203,69 @@ def q_decontaminate(spark, sf_dir, n: int = 8, eval_mod: int = 7):
     oracle replays exactly with no cross-engine hash dependency."""
     docs = _t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
-    long_enough = docs.filter(F.size(words) >= n)
-    is_eval = (F.col("doc_id") % eval_mod) == 0
-    eval_grams = (_ngrams(long_enough.filter(is_eval), n, out="gram")
+    long_enough = docs.filter(F.size(words) >= DECON_N)
+    is_eval = (F.col("doc_id") % EVAL_MOD) == 0
+    eval_grams = (_ngrams(long_enough.filter(is_eval), DECON_N, out="gram")
                   .select("gram").distinct())
-    train_grams = _ngrams(long_enough.filter(~is_eval), n, out="gram")
+    train_grams = _ngrams(long_enough.filter(~is_eval), DECON_N, out="gram")
     return (train_grams.join(F.broadcast(eval_grams), "gram")
             .groupBy("doc_id")
             .agg(F.countDistinct("gram").cast("int").alias("n_shared_grams"))
             .orderBy("doc_id"))
 
 
-def _decontaminate_gram_cte(n: int, eval_mod: int) -> str:
-    return f"""
+# the eval grams e and the train grams t of both exact-scrub oracles
+_DECON_GRAM_CTES = f"""
 w AS (SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS ws
       FROM documents),
 g AS (
   SELECT doc_id,
-         UNNEST([array_to_string(ws[i:i+{n - 1}], ' ')
-                 FOR i IN range(1, LEN(ws) - {n - 2})]) AS gram
-  FROM w WHERE LEN(ws) >= {n}
+         UNNEST([array_to_string(ws[i:i+{DECON_N - 1}], ' ')
+                 FOR i IN range(1, LEN(ws) - {DECON_N - 2})]) AS gram
+  FROM w WHERE LEN(ws) >= {DECON_N}
 ),
-e AS (SELECT DISTINCT gram FROM g WHERE doc_id % {eval_mod} = 0),
-t AS (SELECT doc_id, gram FROM g WHERE doc_id % {eval_mod} != 0)"""
+e AS (SELECT DISTINCT gram FROM g WHERE doc_id % {EVAL_MOD} = 0),
+t AS (SELECT doc_id, gram FROM g WHERE doc_id % {EVAL_MOD} != 0)"""
 
-
-def _decontaminate_oracle_sql(n: int = 8, eval_mod: int = 7) -> str:
-    return f"""
-WITH {_decontaminate_gram_cte(n, eval_mod)}
+ORACLE_DECONTAMINATE = f"""
+WITH {_DECON_GRAM_CTES}
 SELECT t.doc_id, CAST(COUNT(DISTINCT t.gram) AS INT) AS n_shared_grams
 FROM t JOIN e USING (gram)
 GROUP BY t.doc_id ORDER BY doc_id
 """
 
 
-ORACLE_DECONTAMINATE = _decontaminate_oracle_sql(8, 7)
-
-
-def q_decontaminate_clean(spark, sf_dir, n: int = 8, eval_mod: int = 7):
+def q_decontaminate_clean(spark, sf_dir):
     """The decontaminated TRAIN corpus: train docs with zero shared
     n-grams against the eval split, with their text.  Contaminated ids
     are a tiny frame (the q_decontaminate report), so the removal is a
     broadcast LEFT-ANTI join -- the text payload never enters a shuffle,
     same pattern as q_text_dedup_clean / q_paragraph_dedup_clean."""
-    dirty = q_decontaminate(spark, sf_dir, n, eval_mod).select("doc_id")
+    dirty = q_decontaminate(spark, sf_dir).select("doc_id")
     docs = _t(spark, sf_dir, "documents")
-    return (docs.filter((F.col("doc_id") % eval_mod) != 0)
+    return (docs.filter((F.col("doc_id") % EVAL_MOD) != 0)
             .join(F.broadcast(dirty), "doc_id", "left_anti")
             .select("doc_id", "text").orderBy("doc_id"))
 
 
-def _decontaminate_clean_oracle_sql(n: int = 8, eval_mod: int = 7) -> str:
-    return f"""
-WITH {_decontaminate_gram_cte(n, eval_mod)},
+ORACLE_DECONTAMINATE_CLEAN = f"""
+WITH {_DECON_GRAM_CTES},
 dirty AS (SELECT DISTINCT t.doc_id FROM t JOIN e USING (gram))
 SELECT doc_id, text FROM documents
-WHERE doc_id % {eval_mod} != 0
+WHERE doc_id % {EVAL_MOD} != 0
   AND doc_id NOT IN (SELECT doc_id FROM dirty)
 ORDER BY doc_id
 """
 
 
-ORACLE_DECONTAMINATE_CLEAN = _decontaminate_clean_oracle_sql(8, 7)
-
-
-def q_domain_mix(spark, sf_dir, alpha: float = 0.3):
+def q_domain_mix(spark, sf_dir):
     """Corpus mix planning: per-language token totals, natural share, and
-    the temperature-smoothed target share p_l^alpha / sum(p^alpha) --
+    the temperature-smoothed target share p_l^MIX_ALPHA /
+    sum(p^MIX_ALPHA) --
     the XLM-R/mT5 alpha-sampling rule that up-weights low-resource
     strata -- plus the resulting over/under-sampling factor.  The output
-    of this report is exactly the `rates` dict q_corpus_sample consumes.
+    of this report is exactly the SAMPLE_RATES dict q_corpus_sample
+    consumes.
 
     Scale shape: one partial-agg groupBy over (lang) -- the exchange
     carries ONE ROW PER LANGUAGE of (sum, count), nothing else; shares
@@ -3247,7 +3280,7 @@ def q_domain_mix(spark, sf_dir, alpha: float = 0.3):
                      F.count(F.lit(1)).alias("n_docs")))
     w = Window.partitionBy()
     share = F.col("lang_tokens") / F.sum("lang_tokens").over(w)
-    smoothed = F.pow(share, F.lit(alpha))
+    smoothed = F.pow(share, F.lit(MIX_ALPHA))
     target = smoothed / F.sum(smoothed).over(w)
     return (per_lang.select(
         "lang", "lang_tokens", "n_docs",
@@ -3257,8 +3290,7 @@ def q_domain_mix(spark, sf_dir, alpha: float = 0.3):
         .orderBy("lang"))
 
 
-def _domain_mix_oracle_sql(alpha: float = 0.3) -> str:
-    return f"""
+ORACLE_DOMAIN_MIX = f"""
 WITH per_lang AS (
   SELECT lang,
          SUM(CASE WHEN LENGTH(TRIM(text)) = 0 THEN 0
@@ -3270,7 +3302,7 @@ WITH per_lang AS (
 shares AS (
   SELECT lang, lang_tokens, n_docs,
          lang_tokens / SUM(lang_tokens) OVER () AS share,
-         POW(lang_tokens / SUM(lang_tokens) OVER (), {alpha}) AS sm
+         POW(lang_tokens / SUM(lang_tokens) OVER (), {MIX_ALPHA}) AS sm
   FROM per_lang
 )
 SELECT lang, CAST(lang_tokens AS BIGINT) AS lang_tokens, n_docs,
@@ -3281,23 +3313,18 @@ FROM shares ORDER BY lang
 """
 
 
-ORACLE_DOMAIN_MIX = _domain_mix_oracle_sql(0.3)
-
-
 # ---------------------------------------------------------------------------
 # Incremental dedup: new-batch ingest vs a persisted corpus index (the
 # steady-state shape of dedup at 100 TB -- you never re-minhash the whole
 # corpus per ingest; the index's content hashes and MinHash signatures are
 # computed once and stored, and each new batch joins against them)
 
-def incremental_dedup(index_docs, batch_docs, n_hashes: int = 16,
-                      n_bands: int = 4, threshold: float = 0.5,
-                      max_bucket: int | None = 65536,
+def incremental_dedup(index_docs, batch_docs, max_bucket: int | None = 65536,
                       i_hash=None, b_hash=None, i_sigs=None, b_sigs=None):
     """Classify every BATCH document against the INDEX corpus:
     ``exact_dup`` (content hash already in the index), ``near_dup``
     (shares a MinHash band bucket with an index doc and estimated
-    Jaccard >= threshold), else ``new``.  Exact wins over near.
+    Jaccard >= EST_JACCARD_MIN), else ``new``.  Exact wins over near.
 
     Scale shape (batch << index is the definition of incremental):
     every batch-derived frame -- content hashes, signatures, band rows,
@@ -3333,12 +3360,12 @@ def incremental_dedup(index_docs, batch_docs, n_hashes: int = 16,
     # persisted index: production reads i_sigs/i_bands from the stored
     # corpus-index table instead of computing them at all.
     if i_sigs is None:
-        i_sigs = _minhash_sigs(index_docs, n_hashes).localCheckpoint()
+        i_sigs = _minhash_sigs(index_docs).localCheckpoint()
     if b_sigs is None:
-        b_sigs = _minhash_sigs(batch_docs, n_hashes).localCheckpoint()
-    i_bands = _cap_buckets(_minhash_banded(i_sigs, n_hashes, n_bands),
-                           ["band", "bucket"], "doc_id", max_bucket)
-    b_bands = _minhash_banded(b_sigs, n_hashes, n_bands)
+        b_sigs = _minhash_sigs(batch_docs).localCheckpoint()
+    i_bands = _cap_buckets(_minhash_banded(i_sigs), ["band", "bucket"],
+                           "doc_id", max_bucket)
+    b_bands = _minhash_banded(b_sigs)
     cand = (i_bands.withColumnRenamed("doc_id", "i_id")
             .join(F.broadcast(b_bands.withColumnRenamed("doc_id", "b_id")),
                   ["band", "bucket"])
@@ -3346,7 +3373,7 @@ def incremental_dedup(index_docs, batch_docs, n_hashes: int = 16,
     near_ids = (_sig_side(i_sigs, "i_id", "a")
                 .join(F.broadcast(cand), "i_id")
                 .join(F.broadcast(_sig_side(b_sigs, "b_id", "b")), "b_id")
-                .filter(_est_jaccard(n_hashes) >= threshold)
+                .filter(_est_jaccard() >= EST_JACCARD_MIN)
                 .select(F.col("b_id").alias("doc_id")).distinct())
 
     status = (F.when(F.col("is_exact"), F.lit("exact_dup"))
@@ -3362,16 +3389,15 @@ def incremental_dedup(index_docs, batch_docs, n_hashes: int = 16,
             .orderBy("doc_id"))
 
 
-def q_incremental_dedup(spark, sf_dir, batch_mod: int = 10,
-                        batch_min: int = 8):
-    """Gate wrapper: batch = docs with doc_id % batch_mod >= batch_min,
+def q_incremental_dedup(spark, sf_dir):
+    """Gate wrapper: batch = docs with doc_id % BATCH_MOD >= BATCH_MIN,
     index = the rest (a deterministic stand-in for "yesterday's corpus +
     today's crawl").  Testdata has zero exact text duplicates anywhere
     (checked r6), so the exact_dup arm is pinned by a synthetic-frame
     unit test (tests/test_incremental_dedup.py) and the gate's signal is
     the near_dup/new split (40+ straddling near-pairs at sf0.01)."""
     docs = _t(spark, sf_dir, "documents")
-    is_batch = (F.col("doc_id") % batch_mod) >= batch_min
+    is_batch = (F.col("doc_id") % BATCH_MOD) >= BATCH_MIN
     # round 8 (guide §2.4): both sides are slices of ONE corpus, so the
     # content hashes and MinHash signatures come from a single shared
     # scan each (per-doc computations commute with the doc_id filter
@@ -3387,34 +3413,31 @@ def q_incremental_dedup(spark, sf_dir, batch_mod: int = 10,
         b_sigs=sigs.filter(is_batch))
 
 
-def _incremental_dedup_oracle_sql(n_hashes: int = 16, n_bands: int = 4,
-                                  threshold: float = 0.5,
-                                  batch_mod: int = 10,
-                                  batch_min: int = 8) -> str:
-    agree = " + ".join(f"(x.a{h} = y.b{h})::INT" for h in range(n_hashes))
-    ax = ", ".join(f"h{h} AS a{h}" for h in range(n_hashes))
-    bx = ", ".join(f"h{h} AS b{h}" for h in range(n_hashes))
+def _incremental_dedup_oracle_sql() -> str:
+    agree = " + ".join(f"(x.a{h} = y.b{h})::INT" for h in range(N_HASHES))
+    ax = ", ".join(f"h{h} AS a{h}" for h in range(N_HASHES))
+    bx = ", ".join(f"h{h} AS b{h}" for h in range(N_HASHES))
     return f"""
-WITH {_minhash_ctes(n_hashes, n_bands)},
+WITH {_minhash_ctes()},
 exact AS (
   SELECT DISTINCT b.doc_id FROM documents b
   JOIN documents i ON md5(i.text) = md5(b.text)
-  WHERE b.doc_id % {batch_mod} >= {batch_min}
-    AND i.doc_id % {batch_mod} < {batch_min}
+  WHERE b.doc_id % {BATCH_MOD} >= {BATCH_MIN}
+    AND i.doc_id % {BATCH_MOD} < {BATCH_MIN}
 ),
 cand AS (
   SELECT DISTINCT ib.doc_id AS i_id, bb.doc_id AS b_id
   FROM bands ib JOIN bands bb
     ON ib.band = bb.band AND ib.bucket = bb.bucket
-  WHERE ib.doc_id % {batch_mod} < {batch_min}
-    AND bb.doc_id % {batch_mod} >= {batch_min}
+  WHERE ib.doc_id % {BATCH_MOD} < {BATCH_MIN}
+    AND bb.doc_id % {BATCH_MOD} >= {BATCH_MIN}
 ),
 near AS (
   SELECT DISTINCT c.b_id AS doc_id
   FROM cand c
   JOIN (SELECT doc_id, {ax} FROM hx) x ON x.doc_id = c.i_id
   JOIN (SELECT doc_id, {bx} FROM hx) y ON y.doc_id = c.b_id
-  WHERE ROUND(({agree}) / {float(n_hashes)}, 4) >= {threshold}
+  WHERE ROUND(({agree}) / {float(N_HASHES)}, 4) >= {EST_JACCARD_MIN}
 )
 SELECT d.doc_id,
        CASE WHEN e.doc_id IS NOT NULL THEN 'exact_dup'
@@ -3423,7 +3446,7 @@ SELECT d.doc_id,
 FROM documents d
 LEFT JOIN exact e ON e.doc_id = d.doc_id
 LEFT JOIN near n ON n.doc_id = d.doc_id
-WHERE d.doc_id % {batch_mod} >= {batch_min}
+WHERE d.doc_id % {BATCH_MOD} >= {BATCH_MIN}
 ORDER BY d.doc_id
 """
 
@@ -3452,7 +3475,7 @@ def _quality_features(docs, label):
         (F.log10(1.0 + n_words) / 4.0).alias("x3"))
 
 
-def train_quality_classifier(feats, iters: int = 5, lr: float = 2.0):
+def train_quality_classifier(feats, iters: int):
     """Full-batch gradient-descent logistic regression expressed as Spark
     aggregations over a (doc_id, y, x1..x3) frame: one partial-agg pass
     standardizes the features (mean/stddev become part of the model,
@@ -3487,7 +3510,7 @@ def train_quality_classifier(feats, iters: int = 5, lr: float = 2.0):
               (F.col("x3") - F.lit(st["mx3"])) / F.lit(st["sx3"])]
         g = feats.agg(*[F.avg(err * x).alias(f"g{j}")
                         for j, x in enumerate(xs)]).collect()[0]
-        w = [w[j] - lr * g[j] for j in range(4)]
+        w = [w[j] - QC_LR * g[j] for j in range(4)]
     p = F.lit(1.0) / (F.lit(1.0) + F.exp(-z_of(w)))
     scored = (feats.select(
         "doc_id", "y",
@@ -3497,7 +3520,7 @@ def train_quality_classifier(feats, iters: int = 5, lr: float = 2.0):
     return scored, w
 
 
-def q_quality_classifier(spark, sf_dir, iters: int = 5, lr: float = 2.0):
+def q_quality_classifier(spark, sf_dir, iters: int = QC_ITERS):
     """Train a CCNet/fastText-style quality classifier INSIDE the engine
     and score every document.  The gate's seed label is the
     deterministic length rule ``n_words >= 50`` -- learnable from the
@@ -3521,11 +3544,11 @@ def q_quality_classifier(spark, sf_dir, iters: int = 5, lr: float = 2.0):
     words = F.split(F.trim(F.col("text")), r"\s+")
     feats = _quality_features(_t(spark, sf_dir, "documents"),
                               F.size(words) >= 50)
-    scored, _w = train_quality_classifier(feats, iters, lr)
+    scored, _w = train_quality_classifier(feats, iters)
     return scored
 
 
-def _quality_classifier_oracle_sql(iters: int = 5, lr: float = 2.0) -> str:
+def _quality_classifier_oracle_sql() -> str:
     """Unrolled replay: standardization CTE, then one CTE layer per GD
     iteration, each a one-row weight frame CROSS JOINed into the next
     gradient pass."""
@@ -3553,8 +3576,9 @@ feats AS (
   FROM raw CROSS JOIN st
 ),
 w0 AS (SELECT 0.0 AS w0, 0.0 AS w1, 0.0 AS w2, 0.0 AS w3)"""
+    lr = QC_LR
     layers = []
-    for i in range(iters):
+    for i in range(QC_ITERS):
         layers.append(f"""
 w{i + 1} AS (
   SELECT w.w0 - {lr} * AVG(1.0 / (1.0 + EXP(-(w.w0 + w.w1 * f.x1
@@ -3575,12 +3599,12 @@ SELECT f.doc_id, f.y,
              + w.w3 * f.x3))), 4) AS p_quality,
        CASE WHEN 1.0 / (1.0 + EXP(-(w.w0 + w.w1 * f.x1 + w.w2 * f.x2
              + w.w3 * f.x3))) >= 0.5 THEN 1 ELSE 0 END AS pred
-FROM feats f CROSS JOIN w{iters} w
+FROM feats f CROSS JOIN w{QC_ITERS} w
 ORDER BY f.doc_id
 """
 
 
-ORACLE_QUALITY_CLASSIFIER = _quality_classifier_oracle_sql(5, 2.0)
+ORACLE_QUALITY_CLASSIFIER = _quality_classifier_oracle_sql()
 
 
 # ---------------------------------------------------------------------------
@@ -3588,7 +3612,8 @@ ORACLE_QUALITY_CLASSIFIER = _quality_classifier_oracle_sql(5, 2.0)
 # loop over the bounded word table -- the sentencepiece / HF-tokenizers
 # trainer architecture (corpus scan -> word counter -> in-memory merges)
 
-def q_bpe_merges(spark, sf_dir, n_merges: int = 8, top_words: int = 200):
+def q_bpe_merges(spark, sf_dir, n_merges: int = BPE_MERGES,
+                 top_words: int = BPE_TOP_WORDS):
     """Learn the first n_merges BPE merges from the corpus: (step, left,
     right, merged, pair_count).
 
@@ -3654,7 +3679,7 @@ def _bpe_learn(wc_rows, n_merges: int):
     return out
 
 
-def _bpe_oracle_sql(n_merges: int = 8, top_words: int = 200) -> str:
+def _bpe_oracle_sql() -> str:
     """Unrolled replay: word counter + top-K, then per merge step a
     pair-count layer (index-UNNEST zip over the symbol array, weighted,
     overlap-counting) and a one-row winner CROSS JOINed into the next
@@ -3664,7 +3689,7 @@ wc AS (
   SELECT word, COUNT(*) AS cnt FROM (
     SELECT UNNEST(regexp_split_to_array(TRIM(text), '\\s+')) AS word
     FROM documents) WHERE word != ''
-  GROUP BY word ORDER BY cnt DESC, word LIMIT {top_words}
+  GROUP BY word ORDER BY cnt DESC, word LIMIT {BPE_TOP_WORDS}
 ),
 s0 AS (
   SELECT ' ' || array_to_string(
@@ -3674,7 +3699,7 @@ s0 AS (
   FROM wc
 )"""
     layers = []
-    for i in range(n_merges):
+    for i in range(BPE_MERGES):
         layers.append(f"""
 p{i} AS (
   SELECT ss[i] AS l, ss[i + 1] AS r, SUM(cnt) AS c
@@ -3695,7 +3720,7 @@ s{i + 1} AS (
 )""")
     un = "\nUNION ALL ".join(
         f"SELECT step, l AS pair_left, r AS pair_right, merged, pair_count FROM m{i}"
-        for i in range(n_merges))
+        for i in range(BPE_MERGES))
     return f"""
 WITH {base},{",".join(layers)}
 SELECT CAST(step AS INT) AS step, pair_left, pair_right, merged,
@@ -3704,10 +3729,11 @@ FROM ({un}) ORDER BY step
 """
 
 
-ORACLE_BPE_MERGES = _bpe_oracle_sql(8, 200)
+ORACLE_BPE_MERGES = _bpe_oracle_sql()
 
 
-def q_bpe_tokenize(spark, sf_dir, n_merges: int = 8, top_words: int = 200):
+def q_bpe_tokenize(spark, sf_dir, n_merges: int = BPE_MERGES,
+                   top_words: int = BPE_TOP_WORDS):
     """Apply the learned BPE merges to the corpus: per document, the
     whitespace word count and the BPE token count after n_merges merges
     -- the bridge from q_bpe_merges to q_pack_sequences' token budgets.
@@ -3742,19 +3768,18 @@ def q_bpe_tokenize(spark, sf_dir, n_merges: int = 8, top_words: int = 200):
             .orderBy("doc_id"))
 
 
-def _bpe_tokenize_oracle_sql(n_merges: int = 8, top_words: int = 200) -> str:
-    """Replay: the full merge-derivation CTE chain from _bpe_oracle_sql,
-    then per-word symbol strings rewritten through the n_merges winner
+def _bpe_tokenize_oracle_sql() -> str:
+    """Replay: the full merge-derivation CTE chain of ORACLE_BPE_MERGES,
+    then per-word symbol strings rewritten through the BPE_MERGES winner
     rows (nested REPLACE, all one-row CTEs CROSS JOINed)."""
-    base = _bpe_oracle_sql(n_merges, top_words)
     # reuse everything up to the final SELECT of the merges oracle
-    ctes = base.split("\nSELECT CAST(step AS INT)")[0]
+    ctes = ORACLE_BPE_MERGES.split("\nSELECT CAST(step AS INT)")[0]
     expr = "s"
-    for i in range(n_merges):
+    for i in range(BPE_MERGES):
         for _ in range(2):  # double replace = one-pair fixed point
             expr = (f"REPLACE({expr}, ' ' || m{i}.l || ' ' || m{i}.r "
                     f"|| ' ', ' ' || m{i}.l || m{i}.r || ' ')")
-    crosses = " ".join(f"CROSS JOIN m{i} m{i}" for i in range(n_merges))
+    crosses = " ".join(f"CROSS JOIN m{i} m{i}" for i in range(BPE_MERGES))
     return f"""{ctes},
 dw AS (
   SELECT doc_id,
@@ -3777,11 +3802,11 @@ FROM dtok GROUP BY doc_id ORDER BY doc_id
 """
 
 
-ORACLE_BPE_TOKENIZE = _bpe_tokenize_oracle_sql(8, 200)
+ORACLE_BPE_TOKENIZE = _bpe_tokenize_oracle_sql()
 
 
-def q_lm_perplexity(spark, sf_dir, top_vocab: int = 500, k: float = 0.5):
-    """CCNet-style language-model quality signal: train an add-k-smoothed
+def q_lm_perplexity(spark, sf_dir, top_vocab: int = LM_TOP_VOCAB):
+    """CCNet-style language-model quality signal: train an add-LM_K-smoothed
     bigram LM on the corpus (top_vocab words + <unk>, chr(1) start
     symbol) and score every document's per-token negative log2
     likelihood and perplexity.  Low-ppl docs read like the corpus;
@@ -3843,7 +3868,7 @@ def q_lm_perplexity(spark, sf_dir, top_vocab: int = 500, k: float = 0.5):
     # BOUNDED big table, NOT by a second corpus pass over m
     uni = big.groupBy("pm").agg(F.sum("cb").alias("cu"))
     vs = vocab.agg((F.count(F.lit(1)) + 1).alias("v"))
-    nll = -F.log2((F.col("cb") + k) / (F.col("cu") + k * F.col("v")))
+    nll = -F.log2((F.col("cb") + LM_K) / (F.col("cu") + LM_K * F.col("v")))
     return (m.join(F.broadcast(big), ["pm", "cm"])
             .join(F.broadcast(uni), ["pm"])
             .crossJoin(F.broadcast(vs))
@@ -3855,10 +3880,9 @@ def q_lm_perplexity(spark, sf_dir, top_vocab: int = 500, k: float = 0.5):
             .orderBy("doc_id"))
 
 
-def _lm_perplexity_oracle_sql(top_vocab: int = 500, k: float = 0.5) -> str:
-    """DuckDB replay: same pair construction via a list comprehension
-    over the split array, same vocab cut, same smoothed score."""
-    return f"""
+# DuckDB replay of q_lm_perplexity: same pair construction via a list
+# comprehension over the split array, same vocab cut, same smoothed score
+ORACLE_LM_PERPLEXITY = f"""
 WITH d AS (
   SELECT doc_id,
          list_filter(regexp_split_to_array(TRIM(LOWER(text)), '\\s+'),
@@ -3874,7 +3898,7 @@ pairs AS (
 ),
 vocab AS (
   SELECT c AS word FROM pairs
-  GROUP BY c ORDER BY COUNT(*) DESC, c LIMIT {top_vocab}
+  GROUP BY c ORDER BY COUNT(*) DESC, c LIMIT {LM_TOP_VOCAB}
 ),
 m AS (
   SELECT doc_id,
@@ -3889,17 +3913,14 @@ big AS (SELECT pm, cm, COUNT(*) AS cb FROM m GROUP BY pm, cm),
 uni AS (SELECT pm, COUNT(*) AS cu FROM m GROUP BY pm),
 vs AS (SELECT COUNT(*) + 1 AS v FROM vocab)
 SELECT doc_id, CAST(COUNT(*) AS INT) AS n_bigrams,
-       AVG(-log2((cb + {k}) / (cu + {k} * v))) AS avg_nll,
-       POW(2.0, AVG(-log2((cb + {k}) / (cu + {k} * v)))) AS ppl
+       AVG(-log2((cb + {LM_K}) / (cu + {LM_K} * v))) AS avg_nll,
+       POW(2.0, AVG(-log2((cb + {LM_K}) / (cu + {LM_K} * v)))) AS ppl
 FROM m JOIN big USING (pm, cm) JOIN uni USING (pm) CROSS JOIN vs
 GROUP BY doc_id ORDER BY doc_id
 """
 
 
-ORACLE_LM_PERPLEXITY = _lm_perplexity_oracle_sql(500, 0.5)
-
-
-def q_ppl_buckets(spark, sf_dir, top_vocab: int = 500, k: float = 0.5):
+def q_ppl_buckets(spark, sf_dir):
     """CCNet's head/middle/tail perplexity bucketing (Wenzek et al.
     2020 §4.3): tertile cutoffs over the corpus ppl distribution label
     every doc head (most fluent third), middle, or tail -- the standard
@@ -3918,7 +3939,7 @@ def q_ppl_buckets(spark, sf_dir, top_vocab: int = 500, k: float = 0.5):
     engines therefore quantize ppl AND the interpolated cutoffs to 6dp
     before comparing -- the boundary comparison is then between two
     identically quantized values."""
-    scored = q_lm_perplexity(spark, sf_dir, top_vocab=top_vocab, k=k)
+    scored = q_lm_perplexity(spark, sf_dir)
     rounded = scored.select("doc_id", F.round("ppl", 6).alias("rppl"))
     cuts = rounded.agg(F.expr(
         "transform(percentile(rppl, array(CAST(1 AS DOUBLE)/3, "
@@ -3964,11 +3985,11 @@ def _pos_ngrams(docs, n: int):
             .select("doc_id", "pos", gram.alias("gram")))
 
 
-def q_repeated_spans(spark, sf_dir, w: int = 8, min_docs: int = 2):
+def q_repeated_spans(spark, sf_dir, w: int = SPAN_W):
     """Exact-substring dedup primitive (the suffix-array-dedup signal of
     Lee et al. 2022, 'Deduplicating Training Data Makes Language Models
     Better', arXiv:2107.06499, re-expressed relationally): every
-    w-word window that occurs in >= min_docs DISTINCT documents, as
+    w-word window that occurs in >= SPAN_MIN_DOCS DISTINCT documents, as
     (doc_id, pos, n_docs) rows -- the span inventory a
     remove-duplicate-substrings pass consumes.
 
@@ -3996,7 +4017,7 @@ def q_repeated_spans(spark, sf_dir, w: int = 8, min_docs: int = 2):
         .localCheckpoint(eager=True)  # feeds the count agg AND the join
     dup = (wk.groupBy("h_hi", "h_lo")
            .agg(F.countDistinct("doc_id").alias("n_docs"))
-           .filter(F.col("n_docs") >= min_docs))
+           .filter(F.col("n_docs") >= SPAN_MIN_DOCS))
     return (wk.join(dup, ["h_hi", "h_lo"])
             .select("doc_id", "pos", F.col("n_docs").cast("int").alias("n_docs"))
             .orderBy("doc_id", "pos"))
@@ -4021,7 +4042,7 @@ def _merged_islands(spans, w: int):
             .select("doc_id", "s", "e"))
 
 
-def q_dup_coverage(spark, sf_dir, w: int = 8, min_docs: int = 2):
+def q_dup_coverage(spark, sf_dir, w: int = SPAN_W):
     """Per-document duplicate coverage: how many of a doc's tokens sit
     inside at least one cross-document repeated w-word window
     (q_repeated_spans), as (doc_id, n_tokens, dup_tokens, dup_frac) --
@@ -4036,7 +4057,7 @@ def q_dup_coverage(spark, sf_dir, w: int = 8, min_docs: int = 2):
     the stats frame LEFT-joins spans stats onto the map-only token
     counts -- text never enters any exchange."""
     docs = _t(spark, sf_dir, "documents")
-    spans = q_repeated_spans(spark, sf_dir, w=w, min_docs=min_docs)
+    spans = q_repeated_spans(spark, sf_dir, w=w)
     cov = (_merged_islands(spans, w)
            .groupBy("doc_id")
            .agg(F.sum(F.col("e") - F.col("s")).cast("int")
@@ -4054,17 +4075,18 @@ def q_dup_coverage(spark, sf_dir, w: int = 8, min_docs: int = 2):
             .orderBy("doc_id"))
 
 
-def _repeated_spans_gram_cte(w: int) -> str:
-    return f"""
+# the SPAN_W-word windows of every document keyed by their md5 halves,
+# for the three exact-substring oracles
+_SPAN_GRAM_CTES = f"""
 d AS (
   SELECT doc_id, regexp_split_to_array(TRIM(text), '\\s+') AS ws
   FROM documents
 ),
 g AS (
   SELECT doc_id, i - 1 AS pos,
-         array_to_string(ws[i : i + {w} - 1], ' ') AS gram
-  FROM d, UNNEST(range(1, LEN(ws) - {w} + 2)) AS t(i)
-  WHERE LEN(ws) >= {w}
+         array_to_string(ws[i : i + {SPAN_W} - 1], ' ') AS gram
+  FROM d, UNNEST(range(1, LEN(ws) - {SPAN_W} + 2)) AS t(i)
+  WHERE LEN(ws) >= {SPAN_W}
 ),
 wk AS (
   SELECT doc_id, pos,
@@ -4073,29 +4095,25 @@ wk AS (
   FROM g
 )"""
 
-
-def _repeated_spans_oracle_sql(w: int = 8, min_docs: int = 2) -> str:
-    return f"""
-WITH {_repeated_spans_gram_cte(w)},
+ORACLE_REPEATED_SPANS = f"""
+WITH {_SPAN_GRAM_CTES},
 dup AS (
   SELECT h_hi, h_lo, COUNT(DISTINCT doc_id) AS n_docs
-  FROM wk GROUP BY h_hi, h_lo HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+  FROM wk GROUP BY h_hi, h_lo HAVING COUNT(DISTINCT doc_id) >= {SPAN_MIN_DOCS}
 )
 SELECT doc_id, pos, CAST(n_docs AS INT) AS n_docs
 FROM wk JOIN dup USING (h_hi, h_lo)
 ORDER BY doc_id, pos
 """
 
-
-def _dup_coverage_oracle_sql(w: int = 8, min_docs: int = 2) -> str:
-    return f"""
-WITH {_repeated_spans_gram_cte(w)},
+ORACLE_DUP_COVERAGE = f"""
+WITH {_SPAN_GRAM_CTES},
 dup AS (
   SELECT h_hi, h_lo, COUNT(DISTINCT doc_id) AS n_docs
-  FROM wk GROUP BY h_hi, h_lo HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+  FROM wk GROUP BY h_hi, h_lo HAVING COUNT(DISTINCT doc_id) >= {SPAN_MIN_DOCS}
 ),
 spans AS (
-  SELECT doc_id, pos, pos + {w} AS e
+  SELECT doc_id, pos, pos + {SPAN_W} AS e
   FROM wk JOIN dup USING (h_hi, h_lo)
 ),
 isl AS (
@@ -4132,11 +4150,7 @@ ORDER BY t.doc_id
 """
 
 
-ORACLE_REPEATED_SPANS = _repeated_spans_oracle_sql(8, 2)
-ORACLE_DUP_COVERAGE = _dup_coverage_oracle_sql(8, 2)
-
-
-def q_repeated_span_clean(spark, sf_dir, w: int = 8, min_docs: int = 2):
+def q_repeated_span_clean(spark, sf_dir, w: int = SPAN_W):
     """Exact-substring REMOVAL (the transform of Lee et al. 2022's
     dedup: arXiv:2107.06499 §3 removes all but one occurrence of every
     duplicated >=50-token substring): re-emit each document with the
@@ -4172,7 +4186,7 @@ def q_repeated_span_clean(spark, sf_dir, w: int = 8, min_docs: int = 2):
     dup = (wk.groupBy("h_hi", "h_lo")
            .agg(F.countDistinct("doc_id").alias("n_docs"),
                 F.min(F.struct("doc_id", "pos")).alias("own"))
-           .filter(F.col("n_docs") >= min_docs))
+           .filter(F.col("n_docs") >= SPAN_MIN_DOCS))
     losers = (wk.join(dup, ["h_hi", "h_lo"])
               .filter(~((F.col("doc_id") == F.col("own.doc_id"))
                         & (F.col("pos") == F.col("own.pos"))))
@@ -4196,20 +4210,19 @@ def q_repeated_span_clean(spark, sf_dir, w: int = 8, min_docs: int = 2):
             .orderBy("doc_id"))
 
 
-def _repeated_span_clean_oracle_sql(w: int = 8, min_docs: int = 2) -> str:
-    """DuckDB replay: same ownership rule (row_number over (doc_id,pos)
-    per hash), same island merge, same index-filter rebuild."""
-    return f"""
-WITH {_repeated_spans_gram_cte(w)},
+# DuckDB replay of q_repeated_span_clean: same ownership rule (row_number
+# over (doc_id,pos) per hash), same island merge, same index-filter rebuild
+ORACLE_REPEATED_SPAN_CLEAN = f"""
+WITH {_SPAN_GRAM_CTES},
 dup AS (
   SELECT h_hi, h_lo,
          COUNT(DISTINCT doc_id) AS n_docs,
          FIRST(doc_id ORDER BY doc_id, pos) AS own_doc,
          FIRST(pos ORDER BY doc_id, pos) AS own_pos
-  FROM wk GROUP BY h_hi, h_lo HAVING COUNT(DISTINCT doc_id) >= {min_docs}
+  FROM wk GROUP BY h_hi, h_lo HAVING COUNT(DISTINCT doc_id) >= {SPAN_MIN_DOCS}
 ),
 losers AS (
-  SELECT wk.doc_id, wk.pos, wk.pos + {w} AS e
+  SELECT wk.doc_id, wk.pos, wk.pos + {SPAN_W} AS e
   FROM wk JOIN dup USING (h_hi, h_lo)
   WHERE NOT (wk.doc_id = dup.own_doc AND wk.pos = dup.own_pos)
 ),
@@ -4248,27 +4261,25 @@ ORDER BY d.doc_id
 """
 
 
-ORACLE_REPEATED_SPAN_CLEAN = _repeated_span_clean_oracle_sql(8, 2)
-
-
-def q_corpus_shuffle(spark, sf_dir, n_shards: int = 8, seed: str = "s0"):
+def q_corpus_shuffle(spark, sf_dir):
     """Deterministic corpus shuffle: the reproducible global-random
     training order every pretraining run needs.  Each doc's position is
     a pure function of (seed, doc_id) -- md5 -- so the order is stable
     across runs/retries/cluster sizes and changes completely with the
     seed (epoch reshuffles = bump the seed).
 
-    Scale shape: shard = first 8 hex digits of the hash mod n_shards
-    (the pack_sequences/JSONL-sink layout), position = row_number over
-    the hash WITHIN the shard -- n_shards independent sorts of (doc_id,
-    32-char hash) rows, never a global sort and never any text through
-    the exchange.  At 10^12 docs n_shards grows to O(10^4) output
-    shards so each per-shard sort stays executor-sized."""
+    Scale shape: shard = first 8 hex digits of the hash mod
+    SHUFFLE_SHARDS (the pack_sequences/JSONL-sink layout), position =
+    row_number over the hash WITHIN the shard -- SHUFFLE_SHARDS
+    independent sorts of (doc_id, 32-char hash) rows, never a global sort
+    and never any text through the exchange.  At 10^12 docs the shard
+    count grows to O(10^4) output shards so each per-shard sort stays
+    executor-sized."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
-    key = F.concat(F.lit(seed), F.lit(":"),
+    key = F.concat(F.lit(SHUFFLE_SEED), F.lit(":"),
                    F.col("doc_id").cast("string"))
     h = F.md5(key)
-    shard = md5_shard(key, n_shards)
+    shard = md5_shard(key, SHUFFLE_SHARDS)
     w = Window.partitionBy("shard").orderBy("h", "doc_id")
     return (docs.select("doc_id", h.alias("h"), shard.alias("shard"))
             .withColumn("pos", (F.row_number().over(w) - 1).cast("long"))
@@ -4276,12 +4287,11 @@ def q_corpus_shuffle(spark, sf_dir, n_shards: int = 8, seed: str = "s0"):
             .orderBy("doc_id"))
 
 
-def _corpus_shuffle_oracle_sql(n_shards, seed):
-    return f"""
+ORACLE_CORPUS_SHUFFLE = f"""
 WITH s AS (
-  SELECT doc_id, md5('{seed}:' || CAST(doc_id AS VARCHAR)) AS h,
-         CAST(from_hex(substring(md5('{seed}:' || CAST(doc_id AS VARCHAR)),
-                                 1, 8))::BIT AS BIGINT) % {n_shards} AS shard
+  SELECT doc_id, md5('{SHUFFLE_SEED}:' || CAST(doc_id AS VARCHAR)) AS h,
+         CAST(from_hex(substring(md5('{SHUFFLE_SEED}:' || CAST(doc_id AS VARCHAR)),
+                                 1, 8))::BIT AS BIGINT) % {SHUFFLE_SHARDS} AS shard
   FROM documents
 )
 SELECT doc_id, shard,
@@ -4291,10 +4301,7 @@ FROM s ORDER BY doc_id
 """
 
 
-ORACLE_CORPUS_SHUFFLE = _corpus_shuffle_oracle_sql(8, "s0")
-
-
-def q_url_revisit(spark, sf_dir, n_snapshots: int = 3):
+def q_url_revisit(spark, sf_dir):
     """CDX-style URL revisit dedup: a crawl archive holds several
     snapshots of the same url; corpus ingest keeps the LATEST capture
     per url (optionally flagging unchanged-content revisits, which the
@@ -4315,7 +4322,7 @@ def q_url_revisit(spark, sf_dir, n_snapshots: int = 3):
     snaps = docs.select(
         "doc_id", url.alias("url"),
         F.explode(F.sequence(
-            F.lit(0), F.lit(n_snapshots - 1))).alias("snap_id"))
+            F.lit(0), F.lit(REVISIT_SNAPSHOTS - 1))).alias("snap_id"))
     ts = (F.to_timestamp(F.lit("2024-01-01 00:00:00")) +
           F.make_interval(secs=(F.col("doc_id") * (F.col("snap_id") + 1))
                           % 1000))
@@ -4330,8 +4337,7 @@ def q_url_revisit(spark, sf_dir, n_snapshots: int = 3):
             .orderBy("url"))
 
 
-def _url_revisit_oracle_sql(n_snapshots):
-    return f"""
+ORACLE_URL_REVISIT = f"""
 WITH s AS (
   SELECT doc_id,
          'https://host' || CAST(CASE WHEN doc_id % 10 < 3 THEN 0
@@ -4341,7 +4347,7 @@ WITH s AS (
          TIMESTAMP '2024-01-01 00:00:00'
            + to_seconds((doc_id * (k.snap_id + 1)) % 1000) AS warc_ts
   FROM documents,
-       (SELECT UNNEST(range({n_snapshots})) AS snap_id) k
+       (SELECT UNNEST(range({REVISIT_SNAPSHOTS})) AS snap_id) k
 ),
 r AS (
   SELECT url, snap_id, warc_ts,
@@ -4356,20 +4362,15 @@ ORDER BY url
 """
 
 
-ORACLE_URL_REVISIT = _url_revisit_oracle_sql(3)
-
-
-def _c4_keep_line(line, *, min_words: int = 5):
+def _c4_keep_line(line):
     """The C4 line-retention predicate (Raffel et al. 2020 §2.2): keep a
-    line iff it ends in terminal punctuation, has >= min_words words,
-    and does not mention javascript.  Pure codegen -- usable inside a
-    filter() HOF lambda.  min_words is keyword-only: a second positional
-    parameter would make pyspark's HOF dispatch treat this as a
-    two-argument (element, index) lambda and bind the ELEMENT INDEX as
-    min_words (observed: line 3 kept with 4 words)."""
+    line iff it ends in terminal punctuation, has >= 5 words, and does
+    not mention javascript.  Pure codegen -- usable inside a filter() HOF
+    lambda, which must keep one parameter: a second one would make
+    pyspark's HOF dispatch bind the ELEMENT INDEX to it."""
     wc = F.when(F.length(F.trim(line)) == 0, F.lit(0)) \
           .otherwise(F.size(F.split(F.trim(line), r"\s+")))
-    return (line.rlike('[.!?"]$') & (wc >= min_words)
+    return (line.rlike('[.!?"]$') & (wc >= 5)
             & ~F.lower(line).contains("javascript"))
 
 
@@ -4461,7 +4462,7 @@ FROM k ORDER BY doc_id
 """
 
 
-def q_quality_budget_select(spark, sf_dir, token_budget: int = 20000):
+def q_quality_budget_select(spark, sf_dir, token_budget: int = QUALITY_BUDGET):
     """Token-budget corpus selection -- quality-first curation: keep the
     highest-quality documents (score = distinct-word count, a lexical-
     diversity proxy; any integral score plugs in) until the token budget
@@ -4515,8 +4516,7 @@ def q_quality_budget_select(spark, sf_dir, token_budget: int = 20000):
             .orderBy("doc_id"))
 
 
-def _quality_budget_oracle_sql(token_budget):
-    return f"""
+ORACLE_QUALITY_BUDGET = f"""
 WITH s AS (
   SELECT doc_id,
     CAST(CASE WHEN trim(text) = '' THEN 0
@@ -4531,17 +4531,14 @@ SELECT doc_id, score, n_tokens,
        COALESCE(SUM(n_tokens) OVER (
          ORDER BY score DESC, doc_id ASC
          ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0)
-         < {token_budget} AS selected
+         < {QUALITY_BUDGET} AS selected
 FROM s ORDER BY doc_id
 """
 
 
-ORACLE_QUALITY_BUDGET = _quality_budget_oracle_sql(20000)
-
-
-def q_host_boilerplate_clean(spark, sf_dir, threshold: float = 0.6):
+def q_host_boilerplate_clean(spark, sf_dir):
     """Host-frequency boilerplate removal -- strip lines that appear on
-    >= threshold of a host's pages (nav bars, copyright footers, cookie
+    >= BOILERPLATE_MIN of a host's pages (nav bars, copyright footers, cookie
     banners that survive DOM-level extraction).  The line-prevalence
     technique web-corpus pipelines run after main-content extraction.
 
@@ -4553,9 +4550,9 @@ def q_host_boilerplate_clean(spark, sf_dir, threshold: float = 0.6):
     pages, keyed on floor(doc_id/50) parity -- doc_id parity itself
     would be vacuous: hosts are doc_id % 50 and +50 preserves parity,
     so a host's pages all share it (df 0 or 1); the floor key alternates
-    within a host, df = 0.5 < threshold -> kept, pinning the threshold
-    arithmetic (both engines evaluate n >= threshold * pages in IEEE
-    doubles).
+    within a host, df = 0.5 < BOILERPLATE_MIN -> kept, pinning the
+    threshold arithmetic (both engines evaluate n >= BOILERPLATE_MIN *
+    pages in IEEE doubles).
 
     Scale shape: the prevalence counts group (host, md5(line)) with
     map-side partials; the boilerplate set (tiny: frequent lines per
@@ -4583,7 +4580,7 @@ def q_host_boilerplate_clean(spark, sf_dir, threshold: float = 0.6):
     counts = ex.groupBy("host", "h").agg(
         F.countDistinct("doc_id").alias("n"))
     boiler = (counts.join(F.broadcast(pages), "host")
-              .filter(F.col("n") >= F.lit(threshold) * F.col("pages"))
+              .filter(F.col("n") >= F.lit(BOILERPLATE_MIN) * F.col("pages"))
               .select("host", "h"))
     kept = (ex.join(F.broadcast(boiler), ["host", "h"], "left_anti")
             .groupBy("doc_id")
@@ -4604,8 +4601,7 @@ def q_host_boilerplate_clean(spark, sf_dir, threshold: float = 0.6):
             .orderBy("doc_id"))
 
 
-def _host_boilerplate_oracle_sql(threshold):
-    return f"""
+ORACLE_HOST_BOILERPLATE = f"""
 WITH base AS (
   SELECT doc_id, CAST(doc_id % 50 AS BIGINT) AS host,
     list_filter([
@@ -4630,7 +4626,7 @@ boiler AS (
   FROM (SELECT host, line, COUNT(DISTINCT doc_id) AS n
         FROM ex GROUP BY host, line) c
   JOIN pages p ON c.host = p.host
-  WHERE c.n >= {threshold} * p.pages
+  WHERE c.n >= {BOILERPLATE_MIN} * p.pages
 ),
 kept AS (
   SELECT e.doc_id, e.pos, e.line
@@ -4651,18 +4647,15 @@ ORDER BY b.doc_id
 """
 
 
-ORACLE_HOST_BOILERPLATE = _host_boilerplate_oracle_sql(0.6)
-
-
-def sitemap_urls(df, body_col: str = "sitemap"):
-    """Extract url entries from sitemap XML bodies (sitemaps.org
+def sitemap_urls(df):
+    """Extract url entries from the `sitemap` XML bodies (sitemaps.org
     urlset/loc) -- the crawl-seeding companion to robots_directives'
     Sitemap pointers.  Tolerant regex extraction (whitespace inside
     <loc> per the spec's examples), pure codegen, map-side explode --
     no shuffle; the frontier dedups/canonicalizes downstream with the
     same ops as discovered links."""
     locs = F.expr(
-        f"regexp_extract_all({body_col}, '<loc>\\\\s*([^<]+?)\\\\s*</loc>', 1)")
+        "regexp_extract_all(sitemap, '<loc>\\\\s*([^<]+?)\\\\s*</loc>', 1)")
     return (df.select("host", F.explode(locs).alias("url"))
             .select("host", F.trim("url").alias("url")))
 
@@ -4700,8 +4693,7 @@ ORDER BY host, url
 """
 
 
-def q_url_blocklist(spark, sf_dir,
-                    blocklist=("host7.example", "news.host3.example")):
+def q_url_blocklist(spark, sf_dir):
     """Domain-blocklist filtering (the UT1/adult-domain step every web
     corpus runs): a url is blocked when ANY parent-domain suffix of its
     host appears on the list, so 'm.news.host3.example' matches the rule
@@ -4731,7 +4723,7 @@ def q_url_blocklist(spark, sf_dir,
         lambda i: F.array_join(F.slice(parts, i + 1, n - i), "."))
     ex = base.select("doc_id", "host",
                      F.explode(suffixes).alias("suffix"))
-    rules = spark.createDataFrame([(r,) for r in blocklist],
+    rules = spark.createDataFrame([(r,) for r in BLOCKLIST],
                                   "rule string")
     hits = (ex.join(F.broadcast(rules),
                     ex["suffix"] == rules["rule"])
@@ -4808,11 +4800,8 @@ FROM s GROUP BY lang ORDER BY lang
 
 # --- BM25 retrieval (round 7) ------------------------------------------------
 
-BM25_TERMS = ("spark", "window", "join")
-
-
-def q_bm25_topk(spark, sf_dir, terms: tuple = BM25_TERMS, k: int = 20,
-                k1: float = 1.2, b: float = 0.75):
+# result depth and the Okapi k1/b saturation and length-normalization
+def q_bm25_topk(spark, sf_dir, terms: tuple = BM25_TERMS):
     """Okapi BM25 top-k retrieval for a fixed query -- the sparse-retrieval
     primitive behind corpus search and RAG candidate generation (Robertson
     & Zaragoza 2009; idf in the Lucene ln(1 + (N-df+.5)/(df+.5)) form so
@@ -4824,7 +4813,7 @@ def q_bm25_topk(spark, sf_dir, terms: tuple = BM25_TERMS, k: int = 20,
     N, avgdl and every df come out of ONE one-row aggregate that re-enters
     the plan as a broadcast crossJoin (the classifier-weights pattern), so
     the only exchange bigger than one row is the final global top-k, which
-    TakeOrderedAndProject keeps at k rows per partition.  Scores rounded
+    TakeOrderedAndProject keeps at BM25_K rows per partition.  Scores rounded
     to 6dp for cross-engine float compare (the lm_perplexity precedent)."""
     docs = _t(spark, sf_dir, "documents")
     words = F.filter(F.split(F.trim("text"), r"\s+"),
@@ -4850,21 +4839,22 @@ def q_bm25_topk(spark, sf_dir, terms: tuple = BM25_TERMS, k: int = 20,
                     (F.col("n_docs") - F.col(f"df{i}") + F.lit(0.5)) /
                     (F.col(f"df{i}") + F.lit(0.5)))
         tf = F.col(f"tf{i}").cast("double")
-        part = idf * tf * F.lit(k1 + 1.0) / (
-            tf + F.lit(k1) * (F.lit(1.0 - b) +
-                              F.lit(b) * F.col("dl") / F.col("avgdl")))
+        part = idf * tf * F.lit(BM25_K1 + 1.0) / (
+            tf + F.lit(BM25_K1) * (F.lit(1.0 - BM25_B) +
+                                   F.lit(BM25_B) * F.col("dl")
+                                   / F.col("avgdl")))
         score = part if score is None else score + part
     scored = (base.crossJoin(F.broadcast(stats))
               .select("doc_id", F.round(score, 6).alias("score"))
               .filter(F.col("score") > 0))
-    top = scored.orderBy(F.desc("score"), "doc_id").limit(k)
+    top = scored.orderBy(F.desc("score"), "doc_id").limit(BM25_K)
     w = Window.orderBy(F.desc("score"), "doc_id")
     return (top.withColumn("rnk", F.row_number().over(w))
             .select("doc_id", "score", "rnk").orderBy("rnk"))
 
 
-def _bm25_oracle_sql(terms: tuple = BM25_TERMS, k: int = 20,
-                     k1: float = 1.2, b: float = 0.75) -> str:
+def _bm25_oracle_sql() -> str:
+    terms, k1, b = BM25_TERMS, BM25_K1, BM25_B
     tf_cols = ", ".join(
         "len(list_filter(regexp_split_to_array(TRIM(text), '\\s+'), "
         f"x -> x = '{t}')) AS tf{i}" for i, t in enumerate(terms))
@@ -4894,7 +4884,7 @@ scored AS (
 SELECT doc_id, score,
        CAST(ROW_NUMBER() OVER (ORDER BY score DESC, doc_id) AS INT) AS rnk
 FROM scored WHERE score > 0
-ORDER BY score DESC, doc_id LIMIT {k}
+ORDER BY score DESC, doc_id LIMIT {BM25_K}
 """
 
 
@@ -4903,8 +4893,7 @@ ORACLE_BM25 = _bm25_oracle_sql()
 
 # --- SemDeDup: clustered semantic dedup (round 7) ----------------------------
 
-def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
-                     n_cells: int | None = None):
+def q_semantic_dedup(spark, sf_dir, n_cells: int | None = None):
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition embeddings into k-means cells, then find
     near-duplicate pairs ONLY within each cell and keep one survivor per
@@ -4913,7 +4902,7 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     assignment via a partial-aggregating max(struct)), so the DuckDB
     oracle replays the index bit for bit.  Survivor rule: a vector is
     dropped iff a same-cell neighbor with SMALLER vec_id has cosine >=
-    threshold (the paper keeps the vector farthest from the centroid; a
+    COSINE_MIN (the paper keeps the vector farthest from the centroid; a
     float-free deterministic tie-break keeps the oracle exact).
 
     Scale shape: assignment is broadcast(n_cells) x map-side combine --
@@ -4942,8 +4931,8 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     # and reranks through the broadcast-matrix kernel below the §3.1 size
     # gate (per-pair join fallback above it); division, rounding and the
     # threshold stay JVM-side.
-    c_ids, c_mat = _emb_subset(emb, _local_emb_table(sf_dir),
-                               lambda v: v % step == 0)
+    local = _local_emb_table(sf_dir)
+    c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
     c_norm = np.sqrt(_np_seq_dot(c_mat, c_mat))
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
@@ -4972,8 +4961,8 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
     pairs = (a.join(bb, "cell")
              .filter(F.col("a_id") < F.col("b_id"))
              .select("a_id", "b_id"))
-    losers = (_cosine_rerank(pairs, emb, sf_dir, n)
-              .filter(F.col("sim") >= threshold)
+    losers = (_cosine_rerank(pairs, emb, local, n)
+              .filter(F.col("sim") >= COSINE_MIN)
               .select(F.col("b_id").alias("vec_id"))
               .distinct())
     return (cells.select("vec_id", "cell")
@@ -4984,24 +4973,14 @@ def q_semantic_dedup(spark, sf_dir, threshold: float = 0.4,
             .orderBy("vec_id"))
 
 
-def _semantic_dedup_oracle_sql(threshold: float = 0.4,
-                               n_cells: int = 16) -> str:
-    sim_ec = _IVF_COS.format(a="e", b="c")
-    sim_ab = _IVF_COS.format(a="ea", b="eb")
-    return f"""
-WITH stepv AS (
-  SELECT CAST(CEIL(COUNT(*) / {n_cells}.0) AS BIGINT) AS step
-  FROM embeddings
-),
-cents AS (
-  SELECT vec_id AS c_id, embedding
-  FROM embeddings WHERE vec_id % (SELECT GREATEST(step, 1) FROM stepv) = 0
-),
+# DuckDB replay of q_semantic_dedup at n_cells=N_CELLS
+ORACLE_SEMANTIC_DEDUP = f"""
+WITH {_IVF_CENT_CTES},
 cells AS (
   SELECT vec_id, c_id AS cell FROM (
     SELECT e.vec_id, c.c_id,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY {sim_ec} DESC, c.c_id) AS rn
+                              ORDER BY {_IVF_COS.format(a="e", b="c")} DESC, c.c_id) AS rn
     FROM embeddings e CROSS JOIN cents c) WHERE rn = 1
 ),
 losers AS (
@@ -5010,7 +4989,7 @@ losers AS (
                             AND ca.vec_id < cb.vec_id
   JOIN embeddings ea ON ea.vec_id = ca.vec_id
   JOIN embeddings eb ON eb.vec_id = cb.vec_id
-  WHERE {sim_ab} >= {threshold}
+  WHERE {_IVF_COS.format(a="ea", b="eb")} >= {COSINE_MIN}
 )
 SELECT c.vec_id, c.cell,
        CASE WHEN l.vec_id IS NULL THEN 1 ELSE 0 END AS kept
@@ -5019,33 +4998,19 @@ ORDER BY c.vec_id
 """
 
 
-ORACLE_SEMANTIC_DEDUP = _semantic_dedup_oracle_sql()
-
-
 # --- product quantization (round 7) -------------------------------------------
 
-def _pq_sub(c, j, d_sub):
-    """1-based slice of subspace j (length d_sub)."""
-    return F.slice(c, j * d_sub + 1, d_sub)
+def _pq_subdist(x, c, j):
+    """Expanded-form L2 distance between the subspace-j slices of x and c,
+    rounded to 6dp (the cross-engine float-parity convention)."""
+    d_sub = _EMB_DIM // PQ_M
+    xj, cj = (F.slice(v, j * d_sub + 1, d_sub) for v in (x, c))
+    return F.round(_dot_expr(xj, xj) - 2 * _dot_expr(xj, cj)
+                   + _dot_expr(cj, cj), 6)
 
 
-def _pq_dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y:
-                   x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, x: acc + x)
-
-
-def _pq_subdist(x, c, j, d_sub):
-    """Expanded-form L2 distance between subspace-j slices, rounded to 6dp
-    (the cross-engine float-parity convention)."""
-    xj, cj = _pq_sub(x, j, d_sub), _pq_sub(c, j, d_sub)
-    return F.round(_pq_dot(xj, xj) - 2 * _pq_dot(xj, cj)
-                   + _pq_dot(cj, cj), 6)
-
-
-def _pq_codes(spark, sf_dir, local, m: int, n_sub_cents: int):
-    """(codes DF with vec_id/code0..code{m-1}/qerr, centroids DF,
+def _pq_codes(spark, sf_dir, local):
+    """(codes DF with vec_id/code0..code{PQ_M-1}/qerr, centroids DF,
     (centroid ids, float64 centroid matrix)): the shared encode pipeline
     behind q_pq_encode, q_ann_pq_topk, build_pq_index and
     q_ann_ivfadc_topk.  The codebook is every step-th vector, the IVF
@@ -5053,21 +5018,22 @@ def _pq_codes(spark, sf_dir, local, m: int, n_sub_cents: int):
     _local_emb_table's result (see _emb_subset).
 
     Round 8 (guide §4.2): the old shape crossJoined every vector with the
-    16-row codebook and evaluated m x 3 interpreted 8-dim folds PER PAIR
+    16-row codebook and evaluated PQ_M x 3 interpreted 8-dim folds PER PAIR
     (384 boxed-lambda dot products per vector) under a groupBy argmin.
     Now one numpy mapInArrow pass emits the raw |x|^2 - 2x.c + |c|^2
     distances (same left-associated float64 fold order, so every double
     is bit-identical); the 6dp rounding, the (d, c_id) argmin -- an
     array_min over 16 structs, the same lexicographic min the groupBy
     computed -- and qerr stay JVM-side.  The bounded codebook
-    (n_sub_cents rows) is collected once, the same driver-table class as
+    (PQ_SUB_CENTS rows) is collected once, the same driver-table class as
     the BPE top-words counter."""
     import math
 
     import numpy as np
     import pyarrow as pa
     emb = _t(spark, sf_dir, "embeddings")
-    step = max(1, math.ceil(_embeddings_n_rows(emb, sf_dir) / n_sub_cents))
+    m = PQ_M
+    step = max(1, math.ceil(_embeddings_n_rows(emb, sf_dir) / PQ_SUB_CENTS))
     cents = (emb.filter(F.col("vec_id") % step == 0)
              .select(F.col("vec_id").alias("c_id"),
                      F.col("embedding").alias("c_emb")))
@@ -5121,7 +5087,7 @@ def _pq_codes(spark, sf_dir, local, m: int, n_sub_cents: int):
     return mins.select(*outs), cents, (c_ids, c_mat)
 
 
-def q_pq_encode(spark, sf_dir, m: int = 8, n_sub_cents: int = 16):
+def q_pq_encode(spark, sf_dir):
     """Product-quantization encoding (Jegou et al. 2011, "Product
     Quantization for Nearest Neighbor Search"): the 64-dim vector splits
     into m=8 contiguous 8-dim subspaces; each subvector is replaced by
@@ -5139,27 +5105,24 @@ def q_pq_encode(spark, sf_dir, m: int = 8, n_sub_cents: int = 16):
     |x|^2 - 2x.c + |c|^2 rounded to 6dp (cross-engine float parity, the
     _IVF_COS convention); qerr = sum of the 8 min distances is the
     reconstruction-error audit column."""
-    codes, _, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir), m,
-                            n_sub_cents)
+    codes, _, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir))
     # the orderBy exists for the deterministic oracle compare, and range
     # partitioning samples its child -- materialize the (ints-only)
     # codes once so the encode kernel is not executed twice (guide §2.4)
     return codes.localCheckpoint(eager=True).orderBy("vec_id")
 
 
-def q_ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
-                  m: int = 8, n_sub_cents: int = 16,
-                  rerank: int | None = None):
+def q_ann_pq_topk(spark, sf_dir, k: int = TOP_K, rerank: int | None = None):
     """ADC top-k search over PQ codes (Jegou et al. 2011 §III-B,
     asymmetric distance computation): the query stays uncompressed; each
-    corpus vector's approximate L2 distance is the sum of m table
+    corpus vector's approximate L2 distance is the sum of PQ_M table
     lookups d(q_j, centroid[code_j]) -- the compressed-domain scan that
     is the POINT of PQ (the 100-TB corpus is read as 4-byte codes, not
     256-byte floats; ~64x less memory bandwidth per scanned vector).
 
-    Scale shape: the per-query lookup tables (n_queries x m x
-    n_sub_cents distances -- KBs) collapse to ONE broadcast row per
-    query carrying m map<c_id, dist> columns; the codes table
+    Scale shape: the per-query lookup tables (N_QUERIES x PQ_M x
+    PQ_SUB_CENTS distances -- KBs) collapse to ONE broadcast row per
+    query carrying PQ_M map<c_id, dist> columns; the codes table
     crossJoins that broadcast and scores map-side via element_at --
     the only exchange is the top-k window on (q_id).  Self-match is
     excluded to mirror q_ann_cosine_topk; ties break on vec_id.  Every
@@ -5180,21 +5143,20 @@ def q_ann_pq_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     iters: flat).  On real embedding corpora the manifold is what PQ
     exploits; the operator shape is unchanged."""
     local = _local_emb_table(sf_dir)
-    codes, _, book = _pq_codes(spark, sf_dir, local, m, n_sub_cents)
+    codes, _, book = _pq_codes(spark, sf_dir, local)
     emb = _t(spark, sf_dir, "embeddings")
-    return _adc_topk(codes, book, emb, local, k=k, n_queries=n_queries,
-                     m=m, rerank=rerank)
+    return _adc_topk(codes, book, emb, local, k, rerank)
 
 
-def _java_round(x: float, scale: int = 6) -> float:
-    """Exact Python replica of Spark's ROUND(double, scale): Spark rounds
+def _java_round(x: float) -> float:
+    """Exact Python replica of Spark's ROUND(double, 6): Spark rounds
     BigDecimal.valueOf(x) -- i.e. the SHORTEST decimal representation,
-    which is what Python's repr() also produces -- HALF_UP at `scale`.
+    which is what Python's repr() also produces -- HALF_UP at 6 places.
     Used when a 6dp-rounded constant is computed driver-side instead of
     by a JVM expression; equality with F.round is pinned by the A/B and
     oracle replays of every query that uses it."""
     from decimal import ROUND_HALF_UP, Decimal
-    q = Decimal(1).scaleb(-scale)
+    q = Decimal(1).scaleb(-6)
     return float(Decimal(repr(float(x))).quantize(q, rounding=ROUND_HALF_UP))
 
 
@@ -5228,8 +5190,7 @@ def _round6_micro(x):
     return out
 
 
-def _adc_topk(codes, book, emb, local, k: int, n_queries: int, m: int,
-              rerank: int | None):
+def _adc_topk(codes, book, emb, local, k: int, rerank: int | None):
     """ADC scoring core shared by q_ann_pq_topk (inline encode) and
     q_ann_pq_index_topk (persisted index): per-query LUTs, compressed-
     domain scan, top-k window, optional exact-rerank tail.  book is the
@@ -5237,7 +5198,7 @@ def _adc_topk(codes, book, emb, local, k: int, n_queries: int, m: int,
     from `local` (see _emb_subset), which the persisted-index path leaves
     None, keeping its query collect.
 
-    Round 8: the LUTs (n_queries x m x n_sub_cents rounded distances --
+    Round 8: the LUTs (N_QUERIES x PQ_M x PQ_SUB_CENTS rounded distances --
     KBs) are computed DRIVER-side from the two bounded tables (queries,
     codebook) with the same fold order and a bit-exact HALF_UP round
     (_java_round), and ride the scoring kernel's closure: the old
@@ -5247,11 +5208,12 @@ def _adc_topk(codes, book, emb, local, k: int, n_queries: int, m: int,
     j-order left association; the 6dp round stays JVM-side."""
     import numpy as np
     import pyarrow as pa
+    m = PQ_M
     d_sub = _EMB_DIM // m
-    qs = (emb.filter(F.col("vec_id") < n_queries)
+    qs = (emb.filter(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_emb")))
-    q_ids, q_mat = _emb_subset(emb, local, lambda v: v < n_queries)
+    q_ids, q_mat = _emb_subset(emb, local, lambda v: v < N_QUERIES)
     c_ids, c_mat = np.asarray(book[0]), book[1]
     nc, nq = len(c_ids), len(q_ids)
     lut = np.empty((nq, m, nc))
@@ -5293,29 +5255,22 @@ def _adc_topk(codes, book, emb, local, k: int, n_queries: int, m: int,
               .filter(F.col("vec_id") != F.col("q_id"))
               .select("q_id", "vec_id",
                       F.round(F.col("adist_raw"), 6).alias("adist")))
-    w = Window.partitionBy("q_id").orderBy("adist", "vec_id")
     if rerank is None:
-        return (scored.withColumn("rnk", F.row_number().over(w))
-                .filter(F.col("rnk") <= k)
-                .select("q_id", "vec_id", "adist", "rnk")
-                .orderBy("q_id", "rnk"))
+        return _top_k(scored, "adist", k)
+    w = Window.partitionBy("q_id").orderBy("adist", "vec_id")
     short = (scored.withColumn("rnk", F.row_number().over(w))
              .filter(F.col("rnk") <= rerank).select("q_id", "vec_id"))
     cand = (emb.join(F.broadcast(short), "vec_id")
             .join(F.broadcast(qs), "q_id"))
     exact = F.round(
-        _pq_dot(F.col("q_emb"), F.col("q_emb"))
-        - 2 * _pq_dot(F.col("q_emb"), F.col("embedding"))
-        + _pq_dot(F.col("embedding"), F.col("embedding")), 6)
-    rr = cand.select("q_id", "vec_id", exact.alias("adist"))
-    return (rr.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "vec_id", "adist", "rnk")
-            .orderBy("q_id", "rnk"))
+        _dot_expr(F.col("q_emb"), F.col("q_emb"))
+        - 2 * _dot_expr(F.col("q_emb"), F.col("embedding"))
+        + _dot_expr(F.col("embedding"), F.col("embedding")), 6)
+    return _top_k(cand.select("q_id", "vec_id", exact.alias("adist")),
+                  "adist", k)
 
 
-def build_pq_index(spark, sf_dir, out_path: str, m: int = 8,
-                   n_sub_cents: int = 16):
+def build_pq_index(spark, sf_dir, out_path: str):
     """Materialize the PQ index -- codes + codebook parquet -- the
     "encode once, search many" serving flow (the inline q_ann_pq_topk
     re-encodes per query; a 100-TB corpus encodes ONCE and every later
@@ -5323,19 +5278,18 @@ def build_pq_index(spark, sf_dir, out_path: str, m: int = 8,
     incremental_dedup: the big side (codes) is written partitioned and
     never re-shuffled by searches; the codebook is a 16-row table any
     search broadcasts."""
-    codes, cents, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir), m,
-                                n_sub_cents)
+    codes, cents, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir))
     codes.write.mode("overwrite").parquet(f"{out_path}/codes")
     cents.write.mode("overwrite").parquet(f"{out_path}/codebook")
     return out_path
 
 
-def q_ann_pq_index_topk(spark, index_path: str, sf_dir, k: int = 5,
-                        n_queries: int = 3, m: int = 8,
+def q_ann_pq_index_topk(spark, index_path: str, sf_dir,
                         rerank: int | None = None):
     """ADC search over a PERSISTED PQ index (build_pq_index output):
     identical results to the inline q_ann_pq_topk by construction
-    (asserted in tests/test_lsh_scale.py) -- the search-side plan never
+    at k=TOP_K (asserted in tests/test_lsh_scale.py) -- the search-side
+    plan never
     touches the raw embeddings except for the query rows themselves
     (and the rerank shortlist if enabled)."""
     import numpy as np
@@ -5346,34 +5300,48 @@ def q_ann_pq_index_topk(spark, index_path: str, sf_dir, k: int = 5,
             np.asarray([list(r.c_emb) for r in crows],
                        dtype=np.float32).astype(np.float64))
     emb = _t(spark, sf_dir, "embeddings")
-    return _adc_topk(codes, book, emb, None, k=k, n_queries=n_queries, m=m,
-                     rerank=rerank)
+    return _adc_topk(codes, book, emb, None, TOP_K, rerank)
 
 
-def _pq_oracle_sql(m: int = 8, n_sub_cents: int = 16) -> str:
-    d_sub = _EMB_DIM // m
+def _pq_dist_sql(j: int, x: str, c: str) -> str:
+    """DuckDB twin of _pq_subdist: the 6dp expanded-form L2 distance
+    between the subspace-j slices of vector columns x and c."""
+    d_sub = _EMB_DIM // PQ_M
+    a = f"array_slice({x}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
+    b = f"array_slice({c}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
+    return (f"ROUND(list_dot_product({a}, {a}) "
+            f"- 2*list_dot_product({a}, {b}) "
+            f"+ list_dot_product({b}, {b}), 6)")
 
-    def dist(j):
-        a = f"array_slice(e.embedding::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
-        b = f"array_slice(c.c_emb::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
-        return (f"ROUND(list_dot_product({a}, {a}) "
-                f"- 2*list_dot_product({a}, {b}) "
-                f"+ list_dot_product({b}, {b}), 6)")
 
-    code_cols = ", ".join(
-        f"(MIN(struct_pack(d := {dist(j)}, c := c.c_id))).c AS code{j}"
-        for j in range(m))
-    err_cols = " + ".join(f"MIN({dist(j)})" for j in range(m))
-    return f"""
-WITH stepv AS (
-  SELECT CAST(CEIL(COUNT(*) / {n_sub_cents}.0) AS BIGINT) AS step
+def _pq_code_cols(c: str) -> str:
+    """code0..code{PQ_M-1} select items: per subspace, the id of the
+    codebook row `c` (c_id, c_emb) nearest to e.embedding."""
+    return ", ".join(
+        f"(MIN(struct_pack(d := {_pq_dist_sql(j, 'e.embedding', c + '.c_emb')}, "
+        f"c := {c}.c_id))).c AS code{j}"
+        for j in range(PQ_M))
+
+
+# the PQ codebook (every step-th vector, the IVF convention) as c(c_id,
+# c_emb)
+_PQ_BOOK_CTES = f"""stepv AS (
+  SELECT CAST(CEIL(COUNT(*) / {PQ_SUB_CENTS}.0) AS BIGINT) AS step
   FROM embeddings
 ),
 c AS (
   SELECT vec_id AS c_id, embedding AS c_emb
   FROM embeddings WHERE vec_id % (SELECT GREATEST(step, 1) FROM stepv) = 0
-)
-SELECT e.vec_id, {code_cols}, ROUND({err_cols}, 6) AS qerr
+)"""
+
+
+def _pq_oracle_sql() -> str:
+    err_cols = " + ".join(
+        f"MIN({_pq_dist_sql(j, 'e.embedding', 'c.c_emb')})"
+        for j in range(PQ_M))
+    return f"""
+WITH {_PQ_BOOK_CTES}
+SELECT e.vec_id, {_pq_code_cols("c")}, ROUND({err_cols}, 6) AS qerr
 FROM embeddings e CROSS JOIN c
 GROUP BY e.vec_id ORDER BY e.vec_id
 """
@@ -5382,48 +5350,27 @@ GROUP BY e.vec_id ORDER BY e.vec_id
 ORACLE_PQ_ENCODE = _pq_oracle_sql()
 
 
-def _ann_pq_oracle_sql(k: int = 5, n_queries: int = 3, m: int = 8,
-                       n_sub_cents: int = 16) -> str:
+def _ann_pq_oracle_sql() -> str:
     """ADC replay: same codebook/codes CTEs as the PQ oracle, per-query
     lookup tables as one CTE per subspace, fixed l0+..+l7 summation
     order mirroring the Spark expression."""
-    d_sub = _EMB_DIM // m
-
-    def dist(j, x, c):
-        a = f"array_slice({x}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
-        b = f"array_slice({c}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
-        return (f"ROUND(list_dot_product({a}, {a}) "
-                f"- 2*list_dot_product({a}, {b}) "
-                f"+ list_dot_product({b}, {b}), 6)")
-
-    code_cols = ", ".join(
-        f"(MIN(struct_pack(d := {dist(j, 'e.embedding', 'c.c_emb')}, "
-        f"c := c.c_id))).c AS code{j}"
-        for j in range(m))
     luts = ",\n".join(
         f"lut{j} AS (SELECT q.q_id, c.c_id, "
-        f"{dist(j, 'q.q_emb', 'c.c_emb')} AS d FROM q CROSS JOIN c)"
-        for j in range(m))
+        f"{_pq_dist_sql(j, 'q.q_emb', 'c.c_emb')} AS d FROM q CROSS JOIN c)"
+        for j in range(PQ_M))
     lut_joins = "\n  ".join(
         f"JOIN lut{j} l{j} ON l{j}.q_id = l0.q_id "
         f"AND l{j}.c_id = x.code{j}"
-        for j in range(1, m))
-    dsum = " + ".join(f"l{j}.d" for j in range(m))
+        for j in range(1, PQ_M))
+    dsum = " + ".join(f"l{j}.d" for j in range(PQ_M))
     return f"""
-WITH stepv AS (
-  SELECT CAST(CEIL(COUNT(*) / {n_sub_cents}.0) AS BIGINT) AS step
-  FROM embeddings
-),
-c AS (
-  SELECT vec_id AS c_id, embedding AS c_emb
-  FROM embeddings WHERE vec_id % (SELECT GREATEST(step, 1) FROM stepv) = 0
-),
+WITH {_PQ_BOOK_CTES},
 codes AS (
-  SELECT e.vec_id, {code_cols}
+  SELECT e.vec_id, {_pq_code_cols("c")}
   FROM embeddings e CROSS JOIN c GROUP BY e.vec_id
 ),
 q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-      WHERE vec_id < {n_queries}),
+      WHERE vec_id < {N_QUERIES}),
 {luts},
 scored AS (
   SELECT l0.q_id, x.vec_id, ROUND({dsum}, 6) AS adist
@@ -5439,7 +5386,7 @@ ranked AS (
   FROM scored
 )
 SELECT q_id, vec_id, adist, CAST(rnk AS INT) AS rnk
-FROM ranked WHERE rnk <= {k} ORDER BY q_id, rnk
+FROM ranked WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 """
 
 
@@ -5448,21 +5395,20 @@ ORACLE_ANN_PQ = _ann_pq_oracle_sql()
 
 # --- DSIR importance weights (round 7) ----------------------------------------
 
-def q_dsir_weights(spark, sf_dir, n_buckets: int = 256,
-                   smoothing: float = 0.5, target_lang: str = "en"):
+def q_dsir_weights(spark, sf_dir):
     """Data Selection with Importance Resampling (Xie et al. 2023,
     arXiv:2302.03169): score every raw document by the log importance
     weight log p_target(x) - log p_raw(x) under two hashed-unigram
     bag-of-words models -- the standard cheap way to select web data
     that "reads like" a curated target domain.  Target here = the
-    corpus's `lang = target_lang` slice (the available in-table proxy
-    for a curated corpus); features = words hashed into n_buckets via
+    corpus's `lang = DSIR_TARGET` slice (the available in-table proxy
+    for a curated corpus); features = words hashed into DSIR_BUCKETS via
     the repo's cross-engine md5 convention (first 8 hex digits ->
     BIGINT, the q_simhash idiom), add-k smoothed.
 
     Scale shape: the ONLY corpus-sized exchange is the bucket-count
-    partial agg, whose key space is n_buckets (tiny; map-side
-    combined).  The fitted model (<= n_buckets rows) collapses to ONE
+    partial agg, whose key space is DSIR_BUCKETS (tiny; map-side
+    combined).  The fitted model (<= DSIR_BUCKETS rows) collapses to ONE
     broadcast map<bucket, logratio> row; scoring is then a pure
     map-side transform/aggregate over each doc's word array --
     document text never shuffles, and no per-doc groupBy exists at
@@ -5475,11 +5421,13 @@ def q_dsir_weights(spark, sf_dir, n_buckets: int = 256,
                    ).otherwise(F.array().cast("array<string>"))
     base = docs.select("doc_id", "lang", words.alias("ws"))
 
+    n_buckets = DSIR_BUCKETS
+
     def bucket(col):
         return (F.conv(F.substring(F.md5(col), 1, 8), 16, 10)
                 .cast("long") % n_buckets)
 
-    a = float(smoothing)
+    a = float(DSIR_SMOOTHING)
     # round 8 (guide §2.4): cnt feeds both the totals row and the model
     # projection; un-materialized, the corpus-wide explode + per-word md5
     # bucketing ran twice.  <= n_buckets rows.
@@ -5487,7 +5435,7 @@ def q_dsir_weights(spark, sf_dir, n_buckets: int = 256,
            .select("lang", bucket(F.col("w")).alias("b"))
            .groupBy("b")
            .agg(F.count(F.lit(1)).alias("cr"),
-                F.sum(F.when(F.col("lang") == target_lang, 1)
+                F.sum(F.when(F.col("lang") == DSIR_TARGET, 1)
                       .otherwise(0)).alias("ct"))
            .localCheckpoint(eager=True))
     tot = cnt.agg(F.sum("cr").alias("nr"), F.sum("ct").alias("nt"))
@@ -5509,11 +5457,11 @@ def q_dsir_weights(spark, sf_dir, n_buckets: int = 256,
             .orderBy("doc_id"))
 
 
-def _dsir_oracle_sql(n_buckets: int = 256, smoothing: float = 0.5,
-                     target_lang: str = "en") -> str:
+def _dsir_oracle_sql() -> str:
+    n_buckets = DSIR_BUCKETS
     b = (f"CAST(from_hex(substring(md5({{w}}), 1, 8))::BIT AS BIGINT) "
          f"% {n_buckets}")
-    a = smoothing
+    a = DSIR_SMOOTHING
     return f"""
 WITH w AS (
   SELECT doc_id, lang,
@@ -5528,7 +5476,7 @@ ex AS (
 ),
 cnt AS (
   SELECT b, COUNT(*) AS cr,
-         SUM(CASE WHEN lang = '{target_lang}' THEN 1 ELSE 0 END) AS ct
+         SUM(CASE WHEN lang = '{DSIR_TARGET}' THEN 1 ELSE 0 END) AS ct
   FROM ex GROUP BY b
 ),
 tot AS (SELECT SUM(cr) AS nr, SUM(ct) AS nt FROM cnt),
@@ -5555,13 +5503,13 @@ ORACLE_DSIR = _dsir_oracle_sql()
 
 # --- HyperLogLog cardinality sketch (round 7) ---------------------------------
 
-def q_vocab_hll(spark, sf_dir, p: int = 10):
+def q_vocab_hll(spark, sf_dir):
     """Corpus vocabulary cardinality via a cross-engine-deterministic
     HyperLogLog sketch (Flajolet et al. 2007) -- the scale answer to
     "how many distinct words/URLs are in 10^12 rows" without an exact
     COUNT(DISTINCT)'s full-key shuffle: the ONLY exchange is the
-    m=2^p-keyed max-rho partial agg (map-side combined; 1024 keys at
-    p=10), constant memory at ANY corpus size.  Spark's built-in
+    m=2^HLL_P-keyed max-rho partial agg (map-side combined; 1024 keys at
+    HLL_P=10), constant memory at ANY corpus size.  Spark's built-in
     approx_count_distinct is the same sketch but its registers are not
     replayable in DuckDB; this one derives register and rho from the
     repo's md5 convention (first/second 8 hex digits -> two 32-bit
@@ -5576,7 +5524,7 @@ def q_vocab_hll(spark, sf_dir, p: int = 10):
     zero registers; 32-bit large-range correction omitted (documented:
     test scale is ~1e3, correction bites at ~1e8 -- use the 64-bit
     variant there)."""
-    m = 1 << p
+    m = 1 << HLL_P
     docs = _t(spark, sf_dir, "documents")
     words = F.when(F.length(F.trim("text")) > 0,
                    F.split(F.lower(F.trim(F.col("text"))), r"\s+")
@@ -5606,8 +5554,8 @@ def q_vocab_hll(spark, sf_dir, p: int = 10):
         F.round(est, 3).alias("est_distinct"))
 
 
-def _vocab_hll_oracle_sql(p: int = 10) -> str:
-    m = 1 << p
+def _vocab_hll_oracle_sql() -> str:
+    m = 1 << HLL_P
     alpha = 0.7213 / (1 + 1.079 / m)
     return f"""
 WITH w AS (
@@ -5650,7 +5598,7 @@ ORACLE_VOCAB_HLL = _vocab_hll_oracle_sql()
 
 # --- train/valid/test split (round 7) -----------------------------------------
 
-def q_corpus_split(spark, sf_dir, valid_pct: int = 5, test_pct: int = 5):
+def q_corpus_split(spark, sf_dir):
     """Deterministic stratified train/valid/test assignment: split =
     md5_shard(doc_id, 100) thresholds, so membership is a pure function
     of doc_id -- re-runs, retries, cluster resizes, and INCREMENTAL
@@ -5667,8 +5615,8 @@ def q_corpus_split(spark, sf_dir, valid_pct: int = 5, test_pct: int = 5):
     routing composes with shard layout without a second hash."""
     docs = _t(spark, sf_dir, "documents")
     bucket = md5_shard(F.col("doc_id"), 100)
-    split = (F.when(bucket < valid_pct, F.lit("valid"))
-             .when(bucket < valid_pct + test_pct, F.lit("test"))
+    split = (F.when(bucket < SPLIT_VALID_PCT, F.lit("valid"))
+             .when(bucket < SPLIT_VALID_PCT + SPLIT_TEST_PCT, F.lit("test"))
              .otherwise(F.lit("train")))
     return (docs.select("lang", split.alias("split"))
             .groupBy("lang", "split")
@@ -5676,13 +5624,12 @@ def q_corpus_split(spark, sf_dir, valid_pct: int = 5, test_pct: int = 5):
             .orderBy("lang", "split"))
 
 
-def _corpus_split_oracle_sql(valid_pct: int = 5, test_pct: int = 5) -> str:
-    b = ("CAST(from_hex(substring(md5(CAST(doc_id AS VARCHAR)), 1, 8))"
-         "::BIT AS BIGINT) % 100")
-    return f"""
+_SPLIT_BUCKET = ("CAST(from_hex(substring(md5(CAST(doc_id AS VARCHAR)), 1, "
+                 "8))::BIT AS BIGINT) % 100")
+ORACLE_CORPUS_SPLIT = f"""
 SELECT lang,
-       CASE WHEN {b} < {valid_pct} THEN 'valid'
-            WHEN {b} < {valid_pct + test_pct} THEN 'test'
+       CASE WHEN {_SPLIT_BUCKET} < {SPLIT_VALID_PCT} THEN 'valid'
+            WHEN {_SPLIT_BUCKET} < {SPLIT_VALID_PCT + SPLIT_TEST_PCT} THEN 'test'
             ELSE 'train' END AS split,
        COUNT(*) AS n_docs
 FROM documents
@@ -5690,23 +5637,19 @@ GROUP BY 1, 2 ORDER BY lang, split
 """
 
 
-ORACLE_CORPUS_SPLIT = _corpus_split_oracle_sql()
-
-
 # --- count-min sketch heavy-hitter estimates (round 7) ------------------------
 
-def q_cms_word_freq(spark, sf_dir, depth: int = 4, width: int = 256,
-                    probe_doc: int = 0):
+def q_cms_word_freq(spark, sf_dir):
     """Count-min sketch word-frequency estimates (Cormode & Muthu 2005):
-    depth x width counters, row-i column = (md5-derived 32-bit hash of
-    "i:word") % width, estimate = min over rows -- frequency queries
-    over a 10^12-word corpus in depth*width*8 bytes of state instead
-    of a full-vocabulary groupBy.  The CMS guarantee (est >= true, and
-    est <= true + eps*N with eps = e/width at prob 1 - e^-depth) is
-    asserted against exact counts in pytest.
+    depth x width counters (CMS_DEPTH x CMS_WIDTH), row-i column =
+    (md5-derived 32-bit hash of "i:word") % width, estimate = min over
+    rows -- frequency queries over a 10^12-word corpus in depth*width*8
+    bytes of state instead of a full-vocabulary groupBy.  The CMS
+    guarantee (est >= true, and est <= true + eps*N with eps = e/width at
+    prob 1 - e^-depth) is asserted against exact counts in pytest.
 
     The registered query builds the sketch and reads it back for a
-    deterministic probe set (the distinct words of doc `probe_doc`) --
+    deterministic probe set (the distinct words of doc CMS_PROBE_DOC) --
     bounded output, everything md5-derived, so DuckDB replays sketch
     AND probes bit-for-bit.  Scale shape: ONE partial-agg pass on
     (row, col) keys (depth*width distinct -- map-side combined), the
@@ -5717,11 +5660,12 @@ def q_cms_word_freq(spark, sf_dir, depth: int = 4, width: int = 256,
                    F.split(F.lower(F.trim(F.col("text"))), r"\s+")
                    ).otherwise(F.array().cast("array<string>"))
     ex = docs.select("doc_id", F.explode(words).alias("w"))
+    depth = CMS_DEPTH
 
     def col_of(row, w_col):
         return (F.conv(F.substring(
             F.md5(F.concat(F.lit(f"{row}:"), w_col)), 1, 8), 16, 10)
-            .cast("long") % width)
+            .cast("long") % CMS_WIDTH)
 
     # one pass builds all depth rows: explode the per-row column ids
     rows_arr = F.array(*[
@@ -5730,7 +5674,7 @@ def q_cms_word_freq(spark, sf_dir, depth: int = 4, width: int = 256,
     sketch = (ex.select(F.explode(rows_arr).alias("rc"))
               .groupBy(F.col("rc.r").alias("r"), F.col("rc.c").alias("c"))
               .agg(F.count(F.lit(1)).alias("n")))
-    probes = (ex.filter(F.col("doc_id") == probe_doc)
+    probes = (ex.filter(F.col("doc_id") == CMS_PROBE_DOC)
               .select("w").distinct())
     est = None
     p = probes
@@ -5744,8 +5688,9 @@ def q_cms_word_freq(spark, sf_dir, depth: int = 4, width: int = 256,
             .orderBy("word"))
 
 
-def _cms_oracle_sql(depth: int = 4, width: int = 256,
-                    probe_doc: int = 0) -> str:
+def _cms_oracle_sql() -> str:
+    depth, width = CMS_DEPTH, CMS_WIDTH
+
     def col_of(row, w):
         return (f"CAST(from_hex(substring(md5('{row}:' || {w}), 1, 8))"
                 f"::BIT AS BIGINT) % {width}")
@@ -5770,7 +5715,7 @@ sketch AS (
   FROM ex CROSS JOIN (SELECT UNNEST(range({depth})) AS i) r
   GROUP BY 1, 2
 ),
-probes AS (SELECT DISTINCT w FROM ex WHERE doc_id = {probe_doc})
+probes AS (SELECT DISTINCT w FROM ex WHERE doc_id = {CMS_PROBE_DOC})
 SELECT p.w AS word, LEAST({ests}) AS est_count
 FROM probes p ORDER BY word
 """
@@ -5781,12 +5726,10 @@ ORACLE_CMS = _cms_oracle_sql()
 
 # --- IVFADC: coarse cells + compressed-domain scoring (round 7) ---------------
 
-def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
-                      n_cells: int = 16, n_probe: int = 4, m: int = 8,
-                      n_sub_cents: int = 16):
+def q_ann_ivfadc_topk(spark, sf_dir):
     """IVFADC (Jegou et al. 2011 §IV): the full PQ serving system --
-    the IVF coarse quantizer prunes the corpus to n_probe cells
-    (~n_probe/n_cells of N candidates), then ADC scores ONLY those
+    the IVF coarse quantizer prunes the corpus to N_PROBE of N_CELLS
+    cells (~N_PROBE/N_CELLS of N candidates), then ADC scores ONLY those
     candidates from their 4-byte codes.  This is the shape a 100-TB
     embedding index actually serves: sub-linear candidate count
     (n_probe * N/n_cells with n_cells ~ sqrt N) times 64x less memory
@@ -5808,7 +5751,7 @@ def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
     emb = _t(spark, sf_dir, "embeddings")
     local = _local_emb_table(sf_dir)
     n = _embeddings_n_rows(emb, sf_dir)
-    step = max(1, math.ceil(n / n_cells))
+    step = max(1, math.ceil(n / N_CELLS))
     # round 8: coarse-assignment sims from the _np_cent_sims kernel (raw
     # division in the kernel, 6dp round here -- bit-identical to the old
     # broadcast-crossJoin interpreted folds), materialized once for the
@@ -5822,105 +5765,56 @@ def q_ann_ivfadc_topk(spark, sf_dir, k: int = 5, n_queries: int = 3,
              .agg(F.max(F.struct(F.col("sim_c").alias("s"),
                                  (-F.col("c_id")).alias("nc"))).alias("x"))
              .select("vec_id", (-F.col("x.nc")).alias("cell")))
-    wq = Window.partitionBy("q_id").orderBy(F.desc("sim_c"), "c_id")
-    probes = (pairs.filter(F.col("vec_id") < n_queries)
-              .select(F.col("vec_id").alias("q_id"), "c_id", "sim_c")
-              .withColumn("rn", F.row_number().over(wq))
-              .filter(F.col("rn") <= n_probe)
-              .select("q_id", F.col("c_id").alias("cell")))
-    cand = (F.broadcast(probes).join(cells, "cell")
-            .filter(F.col("vec_id") != F.col("q_id"))
-            .select("q_id", "vec_id"))
+    cand = _ivf_candidates(pairs, cells)
     # compressed-domain scoring: candidates x broadcast LUT maps
-    d_sub = _EMB_DIM // m
-    codes, pq_cents, _ = _pq_codes(spark, sf_dir, local, m, n_sub_cents)
-    qs = (emb.filter(F.col("vec_id") < n_queries)
+    codes, pq_cents, _ = _pq_codes(spark, sf_dir, local)
+    qs = (emb.filter(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("q_id"),
                   F.col("embedding").alias("q_emb")))
     lut = (F.broadcast(qs).crossJoin(F.broadcast(pq_cents))
            .groupBy("q_id").agg(*[
                F.map_from_entries(F.collect_list(F.struct(
                    F.col("c_id"),
-                   _pq_subdist(F.col("q_emb"), F.col("c_emb"), j, d_sub)
+                   _pq_subdist(F.col("q_emb"), F.col("c_emb"), j)
                    .alias("d")))).alias(f"lut{j}")
-               for j in range(m)]))
+               for j in range(PQ_M)]))
     adist = None
-    for j in range(m):
+    for j in range(PQ_M):
         term = F.element_at(F.col(f"lut{j}"), F.col(f"code{j}"))
         adist = term if adist is None else adist + term
     scored = (codes.join(F.broadcast(cand), "vec_id")
               .join(F.broadcast(lut), "q_id")
               .select("q_id", "vec_id", F.round(adist, 6).alias("adist")))
-    w = Window.partitionBy("q_id").orderBy("adist", "vec_id")
-    return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("q_id", "vec_id", "adist", "rnk")
-            .orderBy("q_id", "rnk"))
+    return _top_k(scored, "adist")
 
 
-def _ann_ivfadc_oracle_sql(k: int = 5, n_queries: int = 3,
-                           n_cells: int = 16, n_probe: int = 4,
-                           m: int = 8, n_sub_cents: int = 16) -> str:
+def _ann_ivfadc_oracle_sql() -> str:
     """IVF cell/probe CTEs (from the IVF oracle) + PQ codes/LUT CTEs
     (from the ADC oracle), joined on the candidate set."""
-    d_sub = _EMB_DIM // m
-    sim_ec = _IVF_COS.format(a="e", b="c")
-
-    def dist(j, x, c):
-        a = f"array_slice({x}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
-        b = f"array_slice({c}::DOUBLE[], {j*d_sub+1}, {(j+1)*d_sub})"
-        return (f"ROUND(list_dot_product({a}, {a}) "
-                f"- 2*list_dot_product({a}, {b}) "
-                f"+ list_dot_product({b}, {b}), 6)")
-
-    code_cols = ", ".join(
-        f"(MIN(struct_pack(d := {dist(j, 'e.embedding', 'pc.c_emb')}, "
-        f"c := pc.c_id))).c AS code{j}"
-        for j in range(m))
     luts = ",\n".join(
         f"lut{j} AS MATERIALIZED (SELECT q.q_id, pc.c_id, "
-        f"{dist(j, 'q.q_emb', 'pc.c_emb')} AS d "
+        f"{_pq_dist_sql(j, 'q.q_emb', 'pc.c_emb')} AS d "
         f"FROM q CROSS JOIN pqc pc)"
-        for j in range(m))
+        for j in range(PQ_M))
     lut_joins = "\n  ".join(
         f"JOIN lut{j} l{j} ON l{j}.q_id = cd.q_id "
         f"AND l{j}.c_id = x.code{j}"
-        for j in range(m))
-    dsum = " + ".join(f"l{j}.d" for j in range(m))
+        for j in range(PQ_M))
+    dsum = " + ".join(f"l{j}.d" for j in range(PQ_M))
     return f"""
-WITH stepv AS (
-  SELECT CAST(CEIL(COUNT(*) / {n_cells}.0) AS BIGINT) AS step
-  FROM embeddings
-),
-cents AS (
-  SELECT vec_id AS c_id, embedding
-  FROM embeddings WHERE vec_id % (SELECT GREATEST(step, 1) FROM stepv) = 0
-),
+WITH {_IVF_CENT_CTES},
 sims AS MATERIALIZED (
-  SELECT e.vec_id, c.c_id, {sim_ec} AS sim_c
+  SELECT e.vec_id, c.c_id, {_IVF_COS.format(a="e", b="c")} AS sim_c
   FROM embeddings e CROSS JOIN cents c
 ),
-cells AS (
-  SELECT vec_id, c_id AS cell FROM (
-    SELECT vec_id, c_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY sim_c DESC, c_id) AS rn
-    FROM sims) WHERE rn = 1
-),
-probes AS (
-  SELECT vec_id AS q_id, c_id AS cell FROM (
-    SELECT vec_id, c_id,
-           ROW_NUMBER() OVER (PARTITION BY vec_id
-                              ORDER BY sim_c DESC, c_id) AS rn
-    FROM sims WHERE vec_id < {n_queries}) WHERE rn <= {n_probe}
-),
+{_IVF_PROBE_CTES},
 cand AS MATERIALIZED (
   SELECT p.q_id, a.vec_id
   FROM probes p JOIN cells a USING (cell)
   WHERE a.vec_id <> p.q_id
 ),
 pqstep AS (
-  SELECT CAST(CEIL(COUNT(*) / {n_sub_cents}.0) AS BIGINT) AS step
+  SELECT CAST(CEIL(COUNT(*) / {PQ_SUB_CENTS}.0) AS BIGINT) AS step
   FROM embeddings
 ),
 pqc AS (
@@ -5928,11 +5822,11 @@ pqc AS (
   FROM embeddings WHERE vec_id % (SELECT GREATEST(step, 1) FROM pqstep) = 0
 ),
 codes AS MATERIALIZED (
-  SELECT e.vec_id, {code_cols}
+  SELECT e.vec_id, {_pq_code_cols("pc")}
   FROM embeddings e CROSS JOIN pqc pc GROUP BY e.vec_id
 ),
 q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings
-      WHERE vec_id < {n_queries}),
+      WHERE vec_id < {N_QUERIES}),
 {luts},
 scored AS (
   SELECT cd.q_id, cd.vec_id, ROUND({dsum}, 6) AS adist
@@ -5946,7 +5840,7 @@ ranked AS (
                                  ORDER BY adist, vec_id) AS INT) AS rnk
   FROM scored
 )
-SELECT q_id, vec_id, adist, rnk FROM ranked WHERE rnk <= {k}
+SELECT q_id, vec_id, adist, rnk FROM ranked WHERE rnk <= {TOP_K}
 ORDER BY q_id, rnk
 """
 
@@ -5956,7 +5850,7 @@ ORACLE_ANN_IVFADC = _ann_ivfadc_oracle_sql()
 
 # --- deterministic quantile sketch (round 7) ----------------------------------
 
-def q_token_quantiles(spark, sf_dir, quantiles=(0.5, 0.9, 0.99)):
+def q_token_quantiles(spark, sf_dir):
     """Per-doc token-count quantiles from a DETERMINISTIC HDR-style
     histogram sketch -- the replayable stand-in for t-digest the
     ppl_buckets docstring promises at 10^12 docs: t-digest centroids
@@ -5998,7 +5892,7 @@ def q_token_quantiles(spark, sf_dir, quantiles=(0.5, 0.9, 0.99)):
                hist.agg(F.sum("n").alias("total"))))
            .withColumn("lo", lo))
     out = None
-    for q in quantiles:
+    for q in QUANTILES:
         rank = F.ceil(F.lit(float(q)) * F.col("total"))
         hit = (cum.filter(F.col("cum") >= rank)
                .orderBy("bin").limit(1)
@@ -6009,14 +5903,14 @@ def q_token_quantiles(spark, sf_dir, quantiles=(0.5, 0.9, 0.99)):
     return out.orderBy("q")
 
 
-def _token_quantiles_oracle_sql(quantiles=(0.5, 0.9, 0.99)) -> str:
+def _token_quantiles_oracle_sql() -> str:
     sel = ",\n  ".join(
         f"(SELECT lo FROM cum WHERE cum >= CEIL({q} * total) "
         f"ORDER BY bin LIMIT 1) AS q{i}"
-        for i, q in enumerate(quantiles))
+        for i, q in enumerate(QUANTILES))
     rows = "\nUNION ALL\n".join(
         f"SELECT {q} AS q, q{i} AS est_tokens, n_docs FROM picks"
-        for i, q in enumerate(quantiles))
+        for i, q in enumerate(QUANTILES))
     return f"""
 WITH vals AS (
   SELECT CASE WHEN LENGTH(TRIM(text)) > 0
@@ -6055,8 +5949,8 @@ ORACLE_TOKEN_QUANTILES = _token_quantiles_oracle_sql()
 
 # --- RSS/Atom feed ingest (round 7) -------------------------------------------
 
-def feed_entries(df, body_col: str = "feed"):
-    """Extract entries from RSS 2.0 / Atom feed bodies -- the third
+def feed_entries(df):
+    """Extract entries from the RSS 2.0 / Atom `feed` bodies -- the third
     crawl-seeding source next to robots Sitemap pointers and
     sitemap_urls.  Dispatches on the root element per body; RSS
     <item> blocks yield (link, title, RFC-822 pubDate), Atom <entry>
@@ -6066,18 +5960,16 @@ def feed_entries(df, body_col: str = "feed"):
     standard tolerant-reader move).  Pure codegen regex extraction +
     map-side explode, no shuffle; feeds whose entries lack a date get
     pub_epoch NULL rather than dropping the row."""
-    is_rss = F.col(body_col).contains("<rss")
+    is_rss = F.col("feed").contains("<rss")
     # (?s): Java regex '.' does not match newlines, and real feeds put
     # newlines inside every <item>/<entry> block; without DOTALL the
     # extraction silently yields zero entries on multi-line bodies
     # (single-line bodies -- the gate corpus -- are unaffected)
     blocks = F.when(
         is_rss,
-        F.expr(f"regexp_extract_all({body_col}, "
-               "'(?s)<item>(.*?)</item>', 1)")
+        F.expr("regexp_extract_all(feed, '(?s)<item>(.*?)</item>', 1)")
     ).otherwise(
-        F.expr(f"regexp_extract_all({body_col}, "
-               "'(?s)<entry>(.*?)</entry>', 1)"))
+        F.expr("regexp_extract_all(feed, '(?s)<entry>(.*?)</entry>', 1)"))
     b = F.col("b")
     rss_url = F.regexp_extract(b, "<link>([^<]*)</link>", 1)
     atom_url = F.regexp_extract(b, '<link href="([^"]*)"', 1)
@@ -6150,15 +6042,14 @@ FROM documents ORDER BY host, url
 
 # --- fuzzy decontamination (round 7) ------------------------------------------
 
-def q_decontaminate_fuzzy(spark, sf_dir, n_hashes: int = 16,
-                          n_bands: int = 4, threshold: float = 0.5,
-                          eval_mod: int = 7):
+def q_decontaminate_fuzzy(spark, sf_dir,
+                          threshold: float = EST_JACCARD_MIN):
     """Fuzzy train/eval decontamination: flag every TRAIN document whose
     MinHash-estimated Jaccard vs ANY eval document reaches threshold --
     the near-duplicate complement to q_decontaminate's exact-8-gram
     scrub (modern pipelines run both: exact n-grams catch verbatim
     leaks, fuzzy catches paraphrased/reformatted copies of benchmark
-    items).  Same eval split convention (doc_id % eval_mod == 0 = the
+    items).  Same eval split convention (doc_id % EVAL_MOD == 0 = the
     stand-in benchmark table) and the SAME signature/band constants as
     the minhash gates, so the DuckDB oracle replays bit-for-bit.
 
@@ -6169,20 +6060,19 @@ def q_decontaminate_fuzzy(spark, sf_dir, n_hashes: int = 16,
     never shuffles; the only corpus-sized exchange is the signature
     partial-MIN agg the minhash family already pays."""
     docs = _t(spark, sf_dir, "documents")
-    sigs = _minhash_sigs(docs, n_hashes)
-    is_eval = (F.col("doc_id") % eval_mod) == 0
+    sigs = _minhash_sigs(docs)
+    is_eval = (F.col("doc_id") % EVAL_MOD) == 0
     ev_sigs = sigs.filter(is_eval)
     tr_sigs = sigs.filter(~is_eval)
-    ev_bands = _minhash_banded(ev_sigs, n_hashes, n_bands) \
+    ev_bands = _minhash_banded(ev_sigs) \
         .select(F.col("doc_id").alias("eval_id"), "band", "bucket")
-    tr_bands = _minhash_banded(tr_sigs, n_hashes, n_bands)
+    tr_bands = _minhash_banded(tr_sigs)
     cand = (tr_bands.join(F.broadcast(ev_bands), ["band", "bucket"])
             .select("doc_id", "eval_id").distinct())
     sb = _sig_side(ev_sigs, "eval_id", "b")
     return (cand.join(_sig_side(tr_sigs, "doc_id", "a"), "doc_id")
             .join(F.broadcast(sb), "eval_id")
-            .select("doc_id", "eval_id",
-                    _est_jaccard(n_hashes).alias("est_jaccard"))
+            .select("doc_id", "eval_id", _est_jaccard().alias("est_jaccard"))
             .filter(F.col("est_jaccard") >= threshold)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_eval_matches"),
@@ -6190,30 +6080,23 @@ def q_decontaminate_fuzzy(spark, sf_dir, n_hashes: int = 16,
             .orderBy("doc_id"))
 
 
-def _decontaminate_fuzzy_oracle_sql(n_hashes: int = 16, n_bands: int = 4,
-                                    threshold: float = 0.5,
-                                    eval_mod: int = 7) -> str:
-    agree = " + ".join(f"(x.h{h} = y.h{h})::INT" for h in range(n_hashes))
-    return f"""
-WITH {_minhash_ctes(n_hashes, n_bands)},
+ORACLE_DECONTAMINATE_FUZZY = f"""
+WITH {_minhash_ctes()},
 cand AS (
   SELECT DISTINCT t.doc_id, e.doc_id AS eval_id
   FROM bands t JOIN bands e
     ON t.band = e.band AND t.bucket = e.bucket
-  WHERE t.doc_id % {eval_mod} <> 0 AND e.doc_id % {eval_mod} = 0
+  WHERE t.doc_id % {EVAL_MOD} <> 0 AND e.doc_id % {EVAL_MOD} = 0
 ),
 est AS (
   SELECT c.doc_id, c.eval_id,
-         ROUND(({agree}) / {n_hashes}.0, 4) AS est_jaccard
+         {_EST_JACCARD_SQL} AS est_jaccard
   FROM cand c
   JOIN hx x ON x.doc_id = c.doc_id
   JOIN hx y ON y.doc_id = c.eval_id
 )
 SELECT doc_id, CAST(COUNT(*) AS INT) AS n_eval_matches,
        MAX(est_jaccard) AS max_est_jaccard
-FROM est WHERE est_jaccard >= {threshold}
+FROM est WHERE est_jaccard >= {EST_JACCARD_MIN}
 GROUP BY doc_id ORDER BY doc_id
 """
-
-
-ORACLE_DECONTAMINATE_FUZZY = _decontaminate_fuzzy_oracle_sql()

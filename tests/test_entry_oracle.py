@@ -114,9 +114,9 @@ def test_ann_lsh_recall_vs_bruteforce(spark):
     near-dup data recall approaches 1."""
     from closure_html_spark.spark import relational as R
     lsh = {(r["q_id"], r["vec_id"])
-           for r in R.q_ann_lsh_topk(spark, SF_DIR, k=5).collect()}
+           for r in R.q_ann_lsh_topk(spark, SF_DIR).collect()}
     exact = {(r["q_id"], r["vec_id"])
-             for r in R.q_ann_cosine_topk(spark, SF_DIR, k=5).collect()}
+             for r in R.q_ann_cosine_topk(spark, SF_DIR).collect()}
     recall = len(lsh & exact) / len(exact)
     assert recall >= 0.5, f"LSH recall collapsed: {recall}"
 
@@ -127,8 +127,8 @@ def test_ann_ivf_recall_vs_bruteforce(spark):
     share of the exact top-k (near vectors co-cluster)."""
     from closure_html_spark.spark import relational as R
     ivf = {(r["q_id"], r["vec_id"])
-           for r in R.q_ann_ivf_topk(spark, SF_DIR, k=5).collect()}
+           for r in R.q_ann_ivf_topk(spark, SF_DIR).collect()}
     exact = {(r["q_id"], r["vec_id"])
-             for r in R.q_ann_cosine_topk(spark, SF_DIR, k=5).collect()}
+             for r in R.q_ann_cosine_topk(spark, SF_DIR).collect()}
     recall = len(ivf & exact) / len(exact)
     assert recall >= 0.3, f"IVF recall collapsed: {recall}"

@@ -71,7 +71,7 @@ def test_index_hot_bucket_cap(spark):
     with the cap and without it."""
     index = _docs(spark, [(i, BASE) for i in range(400)])
     batch = _docs(spark, [(1000, BASE + " extra")])
-    bands = R._minhash_banded(R._minhash_sigs(index), 16, 4)
+    bands = R._minhash_banded(R._minhash_sigs(index))
     capped = R._cap_buckets(bands, ["band", "bucket"], "doc_id", 30)
     assert bands.count() == 4 * 400 and capped.count() == 4 * 30
     for cap in (30, None):

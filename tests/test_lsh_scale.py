@@ -162,13 +162,11 @@ def test_ivf_kmeans_refinement_improves_recall(spark):
     from closure_html_spark.spark import relational as R
     SF = "/root/testdata/sf0.001"
     exact = {(r["q_id"], r["vec_id"])
-             for r in R.q_ann_cosine_topk(spark, SF, k=5).collect()}
+             for r in R.q_ann_cosine_topk(spark, SF).collect()}
     base = {(r["q_id"], r["vec_id"])
-            for r in R.q_ann_ivf_topk(spark, SF, k=5,
-                                      kmeans_iters=0).collect()}
+            for r in R.q_ann_ivf_topk(spark, SF, kmeans_iters=0).collect()}
     refined = {(r["q_id"], r["vec_id"])
-               for r in R.q_ann_ivf_topk(spark, SF, k=5,
-                                         kmeans_iters=2).collect()}
+               for r in R.q_ann_ivf_topk(spark, SF, kmeans_iters=2).collect()}
     r0 = len(base & exact) / len(exact)
     r2 = len(refined & exact) / len(exact)
     assert r2 >= r0, f"refinement lost recall: {r2} < {r0}"
@@ -271,7 +269,7 @@ def test_pq_persisted_index_matches_inline(spark, tmp_path):
         inline = [tuple(r) for r in
                   R.q_ann_pq_topk(spark, SF, k=5, rerank=rerank).collect()]
         from_idx = [tuple(r) for r in
-                    R.q_ann_pq_index_topk(spark, idx, SF, k=5,
+                    R.q_ann_pq_index_topk(spark, idx, SF,
                                           rerank=rerank).collect()]
         assert inline == from_idx, rerank
 
@@ -285,7 +283,7 @@ def test_ivfadc_candidate_pruning(spark):
     from closure_html_spark.spark import relational as R
     SF = "/root/testdata/sf0.001"
     n = R._parquet_n_rows(SF, "embeddings")
-    got = R.q_ann_ivfadc_topk(spark, SF, k=5, n_probe=4).collect()
+    got = R.q_ann_ivfadc_topk(spark, SF).collect()
     assert len(got) == 15
     # per-query candidate count from the oracle's cand CTE: strictly
     # sublinear (4 of 16 cells ~= 25% of the corpus at this toy scale)
@@ -391,3 +389,29 @@ def test_non_local_sf_dir_fallbacks(spark, sf_dir, monkeypatch):
         del calls[:]
         assert sorted(q(spark, uri).collect()) == local[name], name
         assert calls == want, (name, calls)
+
+
+def test_embedding_queries_read_local_table_once(spark, sf_dir, monkeypatch):
+    """Every embedding query that cuts a bounded side or a broadcast
+    matrix from the local embeddings.parquet reads that file exactly
+    once: the caller's _local_emb_table result is handed to _emb_subset
+    and _cosine_rerank rather than read again by each."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    import __spark_entry__ as entry
+    sf = os.path.join(os.path.dirname(sf_dir.rstrip("/")), "sf0.001")
+    registry = {**entry.queries(), **entry.aux_queries()}
+    reads = []
+    real = pq.read_table
+    monkeypatch.setattr(
+        pq, "read_table", lambda *a, **kw: reads.append(a) or real(*a, **kw))
+    got = {}
+    for name in ("ann_cosine_topk", "ann_lsh_topk", "ann_ivf_topk",
+                 "embedding_neardup_lsh", "semantic_dedup", "ann_pq_topk",
+                 "ann_ivfadc_topk"):
+        del reads[:]
+        registry[name](spark, sf)
+        got[name] = len(reads)
+    assert got == dict.fromkeys(got, 1), got

@@ -25,7 +25,7 @@ def _batch(htmls, content_types=None):
 
 
 def test_null_html_yields_type_error_and_neighbours_unshifted():
-    got = list(_parsed_docs(_batch([b"<p>a", None, b"<p>b"]), "utf-8",
+    got = list(_parsed_docs(_batch([b"<p>a", None, b"<p>b"]),
                             lambda text: text))
     assert got == [(0, "<p>a", "utf-8"), (1, None, "error:TypeError"),
                    (2, "<p>b", "utf-8")]
@@ -33,17 +33,17 @@ def test_null_html_yields_type_error_and_neighbours_unshifted():
 
 def test_oversize_row_is_truncated_and_marked():
     got = list(_parsed_docs(_batch([b"0123456789abcdef", b"short"]),
-                            "utf-8", lambda text: text, max_doc_bytes=8))
+                            lambda text: text, max_doc_bytes=8))
     assert got == [(0, "01234567", "error:oversize"), (1, "short", "utf-8")]
 
 
 def test_content_type_charset_seeds_the_decode():
     raw = "caf\xe9".encode("latin-1")
     seeded = list(_parsed_docs(_batch([raw], ["text/html; charset=latin-1"]),
-                               "utf-8", lambda text: text))
+                               lambda text: text))
     assert seeded == [(0, "caf\xe9", "latin-1")]
     # without the column the default charset decodes, replacing the byte
-    plain = list(_parsed_docs(_batch([raw]), "utf-8", lambda text: text))
+    plain = list(_parsed_docs(_batch([raw]), lambda text: text))
     assert plain == [(0, "caf\ufffd", "utf-8")]
 
 
@@ -53,6 +53,6 @@ def test_raising_work_fails_only_its_row():
             raise ZeroDivisionError
         return text.upper()
 
-    got = list(_parsed_docs(_batch([b"ok", b"bad", b"fine"]), "utf-8", work))
+    got = list(_parsed_docs(_batch([b"ok", b"bad", b"fine"]), work))
     assert got == [(0, "OK", "utf-8"), (1, None, "error:ZeroDivisionError"),
                    (2, "FINE", "utf-8")]

@@ -87,9 +87,9 @@ def test_shingles_shuffle_free(spark):
     at 100 TB is a corpus-sized exchange.  The arrays_zip/slice/explode
     form keeps a doc's grams in its scan partition, so the only exchanges
     in any consumer are the hash/signature aggregations."""
-    from closure_html_spark.spark.relational import _shingles, _t
+    from closure_html_spark.spark.relational import _ngrams, _t
     docs = _t(spark, SF, "documents")
-    plan = plan_of(_shingles(docs))
+    plan = plan_of(_ngrams(docs))
     assert "Window" not in plan, "shingles regressed to a window shuffle"
     assert "Exchange" not in plan, "exchange below the gram projection"
     # consumers: minhash signatures must also be window-free

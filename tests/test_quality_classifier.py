@@ -24,7 +24,7 @@ def test_learns_separable_signal(spark):
         rows.append((100 + i, JUNK + f" {i}", 0))
     docs = spark.createDataFrame(rows, "doc_id long, text string, y int")
     feats = R._quality_features(docs, F.col("y") == 1)
-    scored, w = R.train_quality_classifier(feats, iters=5, lr=2.0)
+    scored, w = R.train_quality_classifier(feats, iters=5)
     got = scored.collect()
     acc = sum(1 for r in got if r.pred == r.y) / len(got)
     assert acc >= 0.95, (acc, w)

@@ -1,19 +1,34 @@
 """Static checks: no module of the package imports a name it never uses,
-and no function of `spark/relational.py` or `spark/multimodal.py` takes
-a parameter it never reads.
+no function of `spark/relational.py` or `spark/multimodal.py` takes a
+parameter it never reads, and no defaulted parameter of the query
+modules is a knob that every call leaves at one value.
 
 Stdlib only (`ast`): a name bound by `import` / `from ... import` at any
 depth must be read somewhere in the same module.  `from __future__`
 imports are exempt.  The parameter check covers `def` functions only:
 lambdas handed to Spark (zip_with, aggregate, transform) must keep the
-arity Spark calls them with."""
+arity Spark calls them with.  The knob check covers the defaulted
+parameters of top-level `def`s: some call in the repo's `.py` files
+must pass each one a value whose source text differs from its default,
+or the value belongs in a module constant."""
 
 import ast
+import collections
 import pathlib
 
 import closure_html_spark
 
 PKG = pathlib.Path(closure_html_spark.__file__).parent
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+# the modules whose queries, oracle builders and stages the knob check
+# covers, relative to ROOT
+KNOB_SCOPE = (
+    "closure_html_spark/spark/relational.py",
+    "closure_html_spark/spark/multimodal.py",
+    "closure_html_spark/spark/pages.py",
+    "closure_html_spark/spark/pipeline.py",
+    "__spark_entry__.py",
+)
 
 
 def unused_imports(source: str) -> list[str]:
@@ -83,3 +98,67 @@ def test_relational_has_no_unused_params():
 def test_multimodal_has_no_unused_params():
     source = (PKG / "spark" / "multimodal.py").read_text()
     assert unused_params(source) == []
+
+
+def single_value_knobs(source: str, call_sources: list[str]) -> list[str]:
+    """Defaulted parameters of the top-level defs in `source` that no
+    call in `call_sources` passes a value whose source text differs from
+    the default.  Calls match by callee name (`f(...)` or `mod.f(...)`),
+    positional arguments by position; arguments after a `*args` are not
+    counted, nor is a `**kwargs`."""
+    passed = collections.defaultdict(set)
+    for src in call_sources:
+        for call in ast.walk(ast.parse(src)):
+            if not isinstance(call, ast.Call):
+                continue
+            name = getattr(call.func, "id", getattr(call.func, "attr", None))
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    break
+                passed[name, i].add(ast.unparse(arg))
+            for kw in call.keywords:
+                if kw.arg is not None:
+                    passed[name, kw.arg].add(ast.unparse(kw.value))
+    found = []
+    for fn in ast.parse(source).body:
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        a = fn.args
+        pos = a.posonlyargs + a.args
+        first = len(pos) - len(a.defaults)
+        knobs = [(i, p, d) for i, (p, d)
+                 in enumerate(zip(pos[first:], a.defaults), first)]
+        knobs += [(p.arg, p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                  if d is not None]
+        for i, p, d in knobs:
+            default = ast.unparse(d)
+            values = passed[fn.name, p.arg] | passed[fn.name, i]
+            if not values - {default}:
+                found.append(f"{fn.name}({p.arg}={default}) (line {fn.lineno})")
+    return found
+
+
+def test_knob_checker_flags_single_value_defaults():
+    src = ("def f(a, b=1, *, c='x', d=None):\n    return a\n"
+           "def g(x=2):\n    return x\n"
+           "def _h(y=3):\n"
+           "    def inner(z=4):\n        return z\n"
+           "    return inner(y)\n")
+    calls = ["f(0, 1, c='x')\nm.f(0, d=obj)\ng(*xs)\nm.g(x=5)\n"]
+    assert single_value_knobs(src, calls) == [
+        "f(b=1) (line 1)", "f(c='x') (line 1)", "_h(y=3) (line 5)"]
+
+
+def _repo_sources() -> list[str]:
+    return [p.read_text() for p in sorted(ROOT.rglob("*.py"))
+            if not any(d.startswith(".") for d in p.relative_to(ROOT).parts)]
+
+
+def test_query_modules_have_no_single_value_knobs():
+    calls = _repo_sources()
+    found = {}
+    for rel in KNOB_SCOPE:
+        bad = single_value_knobs((ROOT / rel).read_text(), calls)
+        if bad:
+            found[rel] = bad
+    assert found == {}
