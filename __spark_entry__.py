@@ -695,8 +695,10 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # tests/test_lsh_scale.py, not this gate
         "embedding_neardup_lsh": lambda s, d: R.q_embedding_neardup_lsh(
             s, d, band_bits=R.BAND_BITS),
-        # connected components over the LSH pair graph (iterative min-label
-        # propagation; band_bits pinned like the pair query it builds on)
+        # connected components over the LSH pair graph (a driver
+        # union-find below R.CC_DRIVER_MAX_PAIRS pairs, large-star/
+        # small-star in Spark above it; band_bits pinned like the pair
+        # query it builds on)
         "neardup_clusters": lambda s, d: R.q_neardup_clusters(
             s, d, band_bits=R.BAND_BITS),
         # multimodal plumbing (media_meta demoted to aux round 7)

@@ -68,6 +68,10 @@ def _lookup(name):
 
 @pytest.mark.parametrize("name", QUERIES + AUX)
 def test_query_vs_oracle(spark, ducks, name):
+    _assert_matches_oracle(spark, ducks, name)
+
+
+def _assert_matches_oracle(spark, ducks, name):
     q, oracle = _lookup(name)
     sdf = q(spark, SF_DIR).toPandas()
     if oracle is None:
@@ -82,6 +86,36 @@ def test_query_vs_oracle(spark, ducks, name):
     assert not mism, (
         f"{name}: first mismatches: "
         + "; ".join(f"spark={srows[i]} oracle={orows[i]}" for i in mism))
+
+
+# connected_components' gate at 0 (every graph runs large-star/small-star)
+# and at its largest value (every graph is labelled on the driver): the
+# largest gate for which the collect's limit(gate + 1) is still a Java int
+CC_GATES = {"star": 0, "driver": 2**31 - 2}
+
+
+@pytest.mark.parametrize("path", sorted(CC_GATES))
+@pytest.mark.parametrize(
+    "name", ["text_dedup_clusters", "text_dedup_clean", "neardup_clusters"])
+def test_cc_paths_match_oracles(spark, ducks, monkeypatch, path, name):
+    """Both connected_components paths replay the recursive-closure
+    oracles of the three clustering queries; the spies prove which path
+    labelled the graph."""
+    from closure_html_spark.spark import relational as R
+    calls = {"star": 0, "driver": 0}
+
+    def spy(which, fn):
+        def wrapped(*args):
+            calls[which] += 1
+            return fn(*args)
+        return wrapped
+
+    monkeypatch.setattr(R, "CC_DRIVER_MAX_PAIRS", CC_GATES[path])
+    monkeypatch.setattr(R, "_star_components",
+                        spy("star", R._star_components))
+    monkeypatch.setattr(R, "_np_min_labels", spy("driver", R._np_min_labels))
+    _assert_matches_oracle(spark, ducks, name)
+    assert calls == {"star": 0, "driver": 0, path: 1}
 
 
 def test_entry_smoke(spark):

@@ -7,34 +7,86 @@ from pyspark.sql import functions as F
 
 import pytest
 
+from closure_html_spark.spark import relational as R
 from closure_html_spark.spark.relational import (
     _parquet_n_rows,
     _rhp_bands,
-    connected_components,
     ivf_n_cells,
     lsh_band_bits,
 )
 
 
-def test_connected_components(spark):
-    """Min-label propagation: correct components on a multi-component
-    graph, and a LOUD failure (not a silent wrong clustering) when a
-    component's diameter exceeds max_iter."""
-    # two components: a triangle {0,1,2} and a chain {10..13}
+def test_connected_components(spark, monkeypatch):
+    """Both paths (the default gate labels on the driver, gate 0 runs
+    large-star/small-star) label a multi-component graph, and an id that
+    only has a self-pair, with each component's min id."""
+    # a triangle {0,1,2}, a chain {10..13} and a self-pair
     pairs = spark.createDataFrame(
-        [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (12, 13)],
+        [(0, 1), (1, 2), (0, 2), (10, 11), (11, 12), (12, 13), (20, 20)],
         "a_id long, b_id long")
-    got = {(r["id"], r["label"])
-           for r in connected_components(pairs).collect()}
-    assert got == {(0, 0), (1, 0), (2, 0),
-                   (10, 10), (11, 10), (12, 10), (13, 10)}
-    # a 30-edge path has diameter 30: propagation cannot finish in 5
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(30)], "a_id long, b_id long")
-    with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iter=5)
-    full = connected_components(chain, max_iter=40).collect()
-    assert {r["label"] for r in full} == {0}
+    empty = spark.createDataFrame([], "a_id long, b_id long")
+    for gate in (R.CC_DRIVER_MAX_PAIRS, 0):
+        monkeypatch.setattr(R, "CC_DRIVER_MAX_PAIRS", gate)
+        got = {(r["id"], r["label"])
+               for r in R.connected_components(pairs).collect()}
+        assert got == {(0, 0), (1, 0), (2, 0),
+                       (10, 10), (11, 10), (12, 10), (13, 10), (20, 20)}
+        assert R.connected_components(empty).collect() == []
+
+
+def _path_graph(spark, ids):
+    return spark.createDataFrame(
+        [(int(ids[i]), int(ids[i + 1])) for i in range(len(ids) - 1)],
+        "a_id long, b_id long")
+
+
+@pytest.mark.parametrize("order", ["ascending", "shuffled"])
+def test_connected_components_path_graph_driver(spark, order):
+    """No diameter cap: a 10,000-node path (diameter 9,999) converges to
+    one component labelled 0 on the driver path, ids in path order or
+    shuffled."""
+    import numpy as np
+    ids = np.arange(10_000)
+    if order == "shuffled":
+        np.random.default_rng(7).shuffle(ids)
+    got = R.connected_components(_path_graph(spark, ids)).collect()
+    assert len(got) == 10_000
+    assert {r["label"] for r in got} == {0}
+
+
+def test_connected_components_path_graph_star(spark, monkeypatch):
+    """No diameter cap on the large-star/small-star path either: a
+    shuffled 1,000-node path converges to one component labelled 0."""
+    import numpy as np
+    monkeypatch.setattr(R, "CC_DRIVER_MAX_PAIRS", 0)
+    ids = np.arange(1_000)
+    np.random.default_rng(11).shuffle(ids)
+    got = R.connected_components(_path_graph(spark, ids)).collect()
+    assert len(got) == 1_000
+    assert {r["label"] for r in got} == {0}
+
+
+def test_np_min_labels_matches_reference():
+    """The driver union-find equals a plain Python union-find on random
+    multigraphs (duplicate pairs, self-pairs, both orientations)."""
+    import numpy as np
+    rng = np.random.default_rng(5)
+    for _ in range(200):
+        n = int(rng.integers(1, 60))
+        m = int(rng.integers(1, 90))
+        a, b = rng.integers(0, n, m) * 3, rng.integers(0, n, m) * 3
+        parent = {}
+
+        def find(x):
+            while parent.setdefault(x, x) != x:
+                x = parent[x]
+            return x
+        for x, y in zip(a.tolist(), b.tolist()):
+            rx, ry = find(x), find(y)
+            parent[max(rx, ry)] = min(rx, ry)
+        ids, labels = R._np_min_labels(a, b)
+        assert dict(zip(ids.tolist(), labels.tolist())) == \
+            {x: find(x) for x in parent}
 
 
 def test_ivf_n_cells_sizing_rule():
@@ -59,6 +111,20 @@ def test_parquet_n_rows_matches_table(spark, sf_dir):
     n_true = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
     assert n_meta == n_true
     assert _parquet_n_rows(sf_dir, "no_such_table") is None
+
+
+def test_parquet_n_rows_unreadable_footer(sf_dir, tmp_path):
+    """A truncated parquet file has no footer to read: the footer count is
+    None, so _embeddings_n_rows falls back to the frame's count()."""
+    with open(f"{sf_dir}/embeddings.parquet", "rb") as f:
+        head = f.read(512)
+    (tmp_path / "embeddings.parquet").write_bytes(head)
+    assert _parquet_n_rows(str(tmp_path), "embeddings") is None
+
+    class Counted:
+        def count(self):
+            return 7
+    assert R._embeddings_n_rows(Counted(), str(tmp_path)) == 7
 
 
 def test_lsh_band_bits_sizing_rule():
