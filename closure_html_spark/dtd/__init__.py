@@ -56,8 +56,9 @@ class Dtd:
         self.valid_tags = self.element_names - {"NOSCRIPT"}
         # empty-element-p (sgml-parse.lisp:1108-1109): empty include set
         self.empty = frozenset(k for k, v in self.include.items() if not v)
-        # lazily-built fused PDA action tables (pda.py), one (smap, emap)
-        # pair per context element; persists for the worker's lifetime
+        # lazily-built fused PDA action tables (pda.py), one (smap, emap,
+        # text_leaf) triple per context element; persists for the
+        # worker's lifetime
         self.pda_actions = {}
         # raw tag piece ('<' .. '>') -> (normalized token | None, warns
         # tuple) memo used by pda.sgml_parse; size-bounded there, and only

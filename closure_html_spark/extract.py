@@ -1,9 +1,11 @@
 """Main-content extraction over the parsed DOM (the north-star stage).
 
 A HAX-style pre-order event walk (the batch analog of serialize-pt,
-html-parser.lisp:122-151) over the array-encoded DOM, scoring text blocks
-with text-density / link-density / tag-class heuristics and emitting
-main-content spans.
+html-parser.lisp:122-151) over the flat pre-order DOM (pda.Doc: the
+subtree of node n is the id range [n, end[n])), scoring text blocks with
+text-density / link-density / tag-class heuristics and emitting
+main-content spans.  Every walk here is a scan over an id range that
+jumps past a skipped subtree by its end[].
 
 Definitions:
   - extracted_text: concatenation of all PCDATA under BODY in document
@@ -56,10 +58,21 @@ MAX_LINK_DENSITY = 0.4
 
 def find_first(doc: Doc, parent: int, name: str) -> int:
     """flat-find-element (pt.lisp:204-208)."""
-    for c in doc.children[parent]:
-        if doc.name[c] == name:
+    names, end = doc.name, doc.end
+    c = parent + 1
+    stop = end[parent]
+    while c < stop:
+        if names[c] == name:
             return c
+        c = end[c]
     return -1
+
+
+def child_text(doc: Doc, n: int) -> str:
+    """Concatenated text of n's direct pcdata children."""
+    names, text = doc.name, doc.text
+    return "".join(text[c] or "" for c in doc.children_of(n)
+                   if names[c] == PCDATA)
 
 
 def title_of(doc: Doc) -> str:
@@ -69,8 +82,7 @@ def title_of(doc: Doc) -> str:
     title = find_first(doc, head, "TITLE")
     if title < 0:
         return ""
-    return "".join(doc.text[c] or "" for c in doc.children[title]
-                   if doc.name[c] == PCDATA)
+    return child_text(doc, title)
 
 
 def extract_main_content(doc: Doc, dtd: Dtd,
@@ -87,22 +99,29 @@ def extract_main_content(doc: Doc, dtd: Dtd,
         return {"title": title_of(doc), "extracted_text": "",
                 "main_text": "", "spans": []}  # spans: (start,end,score,keep)
 
-    # iterative event walk carrying (node, block_id, in_link); text is
+    # pre-order scan of BODY's id range carrying (block, in_link); a block
+    # element or an A opens a scope that ends at its end[].  Text is
     # accumulated into contiguous per-block SEGMENTS in document order, so
     # spans never overlap even when body text interleaves with child blocks
     parts: list[str] = []
     pos = 0
     segs: list[list] = []  # [block_nid, bname, start, end, text_len, link_len, n_tags]
 
-    stack = [(body, body, False)]
     name_arr = doc.name
     text_arr = doc.text
-    children = doc.children
-    while stack:
-        n, block, in_link = stack.pop()
+    end_arr = doc.end
+    block = body
+    in_link = False
+    scope_end = stop = end_arr[body]
+    scopes: list[tuple] = []  # the enclosing (block, in_link, scope_end)
+    n = body + 1
+    while n < stop:
+        while n >= scope_end:
+            block, in_link, scope_end = scopes.pop()
         nm = name_arr[n]
         if nm == PCDATA:
-            data = text_arr[n] or ""
+            data = text_arr[n]
+            n += 1
             if not data:
                 continue
             if not segs or segs[-1][0] != block:
@@ -116,14 +135,20 @@ def extract_main_content(doc: Doc, dtd: Dtd,
             pos += len(data)
             continue
         if nm in SKIP_SUBTREES:
+            n = end_arr[n]
             continue
-        if nm in BLOCK_ELEMENTS and n != block:
+        if nm in BLOCK_ELEMENTS:
+            scopes.append((block, in_link, scope_end))
             block = n
-        elif n != body and segs and segs[-1][0] == block:
-            segs[-1][6] += 1
-        child_link = in_link or nm == "A"
-        for c in reversed(children[n]):
-            stack.append((c, block, child_link))
+            scope_end = end_arr[n]
+        else:
+            if segs and segs[-1][0] == block:
+                segs[-1][6] += 1
+            if nm == "A" and not in_link:
+                scopes.append((block, in_link, scope_end))
+                in_link = True
+                scope_end = end_arr[n]
+        n += 1
 
     extracted = "".join(parts)
     spans = []
@@ -149,17 +174,18 @@ def extract_main_content(doc: Doc, dtd: Dtd,
 def _cell_text(doc: Doc, cell: int) -> str:
     """Concatenated PCDATA under a TD/TH in document order, not descending
     into nested TABLEs (their cells belong to their own table_idx)."""
+    names, text, end = doc.name, doc.text, doc.end
     parts = []
-    stack = list(reversed(doc.children[cell]))
-    while stack:
-        n = stack.pop()
-        nm = doc.name[n]
+    n = cell + 1
+    stop = end[cell]
+    while n < stop:
+        nm = names[n]
         if nm == PCDATA:
-            parts.append(doc.text[n] or "")
+            parts.append(text[n] or "")
+        elif nm == "TABLE" or nm in SKIP_SUBTREES:
+            n = end[n]
             continue
-        if nm == "TABLE" or nm in SKIP_SUBTREES:
-            continue
-        stack.extend(reversed(doc.children[n]))
+        n += 1
     return "".join(parts)
 
 
@@ -171,30 +197,31 @@ def tables_of_doc(doc: Doc) -> list:
     through section wrappers is what makes soup and well-formed markup
     yield identical grids), cells = direct TD/TH children per row.  Nested
     tables are separate table_idx entries, never rows of their parent."""
+    names, end = doc.name, doc.end
     out = []
     t_idx = 0
-    for n, _ in doc.walk():
-        if doc.name[n] != "TABLE":
-            continue
+    for n in doc.find_all("TABLE"):
         trs = []
-        stack = list(reversed(doc.children[n]))
-        while stack:
-            m = stack.pop()
-            nm = doc.name[m]
-            if nm == "TABLE":      # nested table: its own walk() visit
+        m = n + 1
+        stop = end[n]
+        while m < stop:
+            nm = names[m]
+            if nm == "TABLE":      # nested table: its own visit
+                m = end[m]
                 continue
             if nm == "TR":
                 trs.append(m)
-            stack.extend(reversed(doc.children[m]))
+            m += 1
         for r, tr in enumerate(trs):
             c = 0
-            for ch in doc.children[tr]:
-                if doc.name[ch] in ("TD", "TH"):
-                    out.append((t_idx, r, c, doc.name[ch],
+            for ch in doc.children_of(tr):
+                if names[ch] in ("TD", "TH"):
+                    out.append((t_idx, r, c, names[ch],
                                 _cell_text(doc, ch)))
                     c += 1
         t_idx += 1
     return out
+
 
 
 def metadata_of_doc(doc: Doc) -> dict:
@@ -212,7 +239,7 @@ def metadata_of_doc(doc: Doc) -> dict:
     root = doc.root
     head = find_first(doc, root, "HEAD")
     if head >= 0:
-        for n, _ in doc.walk(head):
+        for n in range(head, doc.end[head]):
             nm = doc.name[n]
             if nm == "META":
                 a = dict(doc.attrs[n] or ())
@@ -226,10 +253,9 @@ def metadata_of_doc(doc: Doc) -> dict:
                     md["canonical"] = a.get("HREF", "")
     body = find_first(doc, root, "BODY")
     if body >= 0:
-        for n, _ in doc.walk(body):
-            if doc.name[n] == "H1":
-                md["h1"] = _cell_text(doc, n)
-                break
+        for n in doc.find_all("H1", body):
+            md["h1"] = _cell_text(doc, n)
+            break
     return md
 
 
@@ -241,13 +267,9 @@ def jsonld_of_doc(doc: Doc) -> list:
     back verbatim; actual JSON parsing happens JVM-side via from_json
     (the UDF-free half of the operator)."""
     out = []
-    for n, _ in doc.walk():
-        if doc.name[n] != "SCRIPT":
-            continue
+    for n in doc.find_all("SCRIPT"):
         a = dict(doc.attrs[n] or ())
         if a.get("TYPE", "").lower() != "application/ld+json":
             continue
-        out.append("".join(
-            doc.text[c] or "" for c in doc.children[n]
-            if doc.name[c] == PCDATA))
+        out.append(child_text(doc, n))
     return out

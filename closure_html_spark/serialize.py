@@ -22,6 +22,9 @@ from __future__ import annotations
 from .dtd import Dtd, PCDATA
 from .parser.pda import Doc
 
+# elements whose pcdata children are written unescaped
+_RAW = frozenset({"SCRIPT", "STYLE"})
+
 # uri-attribute-p table (unparse.lisp:118-138), lowercase
 URI_ATTRS = {
     "a": {"href", "name"},
@@ -57,12 +60,19 @@ def visible_attrs(attrs):
 
 
 def doc_to_lhtml(doc: Doc, nid: int | None = None):
+    """LHTML of nid's subtree, built children-first by a backward scan
+    of its id range, so depth is not bounded by Python recursion."""
     if nid is None:
         nid = doc.root
-    if doc.name[nid] == PCDATA:
-        return doc.text[nid]
-    children = tuple(doc_to_lhtml(doc, c) for c in doc.children[nid])
-    return (doc.name[nid], tuple(visible_attrs(doc.attrs[nid]))) + children
+    name, attrs, text = doc.name, doc.attrs, doc.text
+    built = {}
+    for n in range(doc.end[nid] - 1, nid - 1, -1):
+        if name[n] == PCDATA:
+            built[n] = text[n]
+        else:
+            built[n] = ((name[n], tuple(visible_attrs(attrs[n])))
+                        + tuple(built.pop(c) for c in doc.children_of(n)))
+    return built[nid]
 
 
 def lhtml_to_json(node):
@@ -87,10 +97,14 @@ def lhtml_to_doc(node) -> Doc:
     stack = [(node, -1)]
     while stack:
         n, parent = stack.pop()
+        if n is None:  # parent's subtree is complete
+            doc.end[parent] = len(doc.name)
+            continue
         if isinstance(n, str):
             doc.add(PCDATA, None, n, parent)
             continue
         nid = doc.add(n[0], list(n[1]), None, parent)
+        stack.append((None, nid))
         for c in reversed(n[2:]):
             stack.append((c, nid))
     doc.root = 0
@@ -196,25 +210,27 @@ def serialize_doc(doc: Doc, dtd: Dtd, nid: int | None = None,
     out: list[str] = []
     if system_id:
         out.append(doctype_string(doctype_name, public_id, system_id))
-    # iterative pre-order walk with explicit close events -- CC-scale pages
-    # contain pathologically deep DOMs that would blow Python recursion
-    stack: list[tuple] = [("open", nid, False)]
-    while stack:
-        ev, n, raw_text = stack.pop()
-        if ev == "close":
-            out.append("</")
-            out.append(doc.name[n])
-            out.append(">")
-            continue
-        name = doc.name[n]
+    name_arr, attrs_arr, text_arr = doc.name, doc.attrs, doc.text
+    parent, end = doc.parent, doc.end
+    # one pass over the subtree's id range; an element's end tag is due
+    # once the scan reaches its end[] (stack bottom: a sentinel end)
+    close_at = [end[nid] + 1]
+    close_tag = [""]
+    for n in range(nid, end[nid]):
+        while close_at[-1] <= n:
+            close_at.pop()
+            out.append(close_tag.pop())
+        name = name_arr[n]
         if name == PCDATA:
-            data = doc.text[n] or ""
-            out.append(data if raw_text else _escape_datachar_readable(data))
+            data = text_arr[n] or ""
+            # script/style text is written raw (unparse.lisp:164-168)
+            out.append(data if n != nid and name_arr[parent[n]] in _RAW
+                       else _escape_datachar_readable(data))
             continue
         attlist = dtd.attlist.get(name, ())
         out.append("<")
         out.append(name)
-        for aname, avalue in visible_attrs(doc.attrs[n]):
+        for aname, avalue in visible_attrs(attrs_arr[n]):
             out.append(" ")
             out.append(aname)
             att = next((t for an, t in attlist if an == aname), None)
@@ -228,9 +244,9 @@ def serialize_doc(doc: Doc, dtd: Dtd, nid: int | None = None,
             out.append(_escape_attribute(value))
             out.append('"')
         out.append(">")
-        child_raw = name in ("SCRIPT", "STYLE")
         if dtd.include.get(name):  # EMPTY elements get no end tag
-            stack.append(("close", n, False))
-        for c in reversed(doc.children[n]):
-            stack.append(("open", c, child_raw))
+            close_at.append(end[n])
+            close_tag.append(f"</{name}>")
+    close_tag.reverse()
+    out.extend(close_tag)
     return "".join(out)

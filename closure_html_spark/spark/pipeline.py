@@ -44,63 +44,48 @@ RESULT_COL_DDL = {
     "main_text": "string",
 }
 
-# links/base need their own full-DOM walk (the span scorer's walk starts at
-# BODY and cannot see HEAD, where BASE lives), so only consumers that ask
-# for them pay for it: columns=None builds the text/metadata set and a
-# frontier consumer passes columns=("links", "base")
+# links/base need their own scan of the whole DOM (the span scorer's scan
+# covers BODY and cannot see HEAD, where BASE lives), so only consumers
+# that ask for them pay for it: columns=None builds the text/metadata set
+# and a frontier consumer passes columns=("links", "base")
 _DEFAULT_COLS = tuple(k for k in RESULT_COL_DDL
                       if k not in ("links", "anchors", "base"))
 
 
 def _doc_links_base(doc, want_anchors: bool = True) \
         -> tuple[list[str], list[str], str | None]:
-    """One full-DOM (pre)order walk collecting the crawl-frontier
-    outlink feed (HREF values of <A> nodes in document order), the
-    anchor text of each link (concatenated pcdata of the A subtree --
-    the classic inbound-anchor relevance signal), and the document base
-    URL (first BASE node's HREF -- the reference's own test fixture pins
-    a BASE node in HEAD, test.lisp:5-18).  anchors[i] belongs to
-    links[i]; an A whose subtree has no pcdata yields ''.
+    """The crawl-frontier outlink feed (HREF values of <A> nodes in
+    document order), the anchor text of each link (concatenated pcdata of
+    the A subtree -- the classic inbound-anchor relevance signal), and the
+    document base URL (first BASE node's HREF -- the reference's own test
+    fixture pins a BASE node in HEAD, test.lisp:5-18).  anchors[i]
+    belongs to links[i]; an A whose subtree has no pcdata yields ''.
 
-    ONE pass, O(nodes) (round-6 verdict #5: the per-A subtree re-walk
-    was O(nodes x A-density) -- on a link-farm page with 1000 A nodes
-    the old form re-visited every anchor subtree twice): the pre-order
-    walk carries the depth, so an open A's pcdata is collected until
-    the walk pops back to the A's depth.  The DTD forbids A inside A
-    (and the PDA repairs soup to match), so at most one A scope is ever
-    open; a defensive close keeps the pairing correct even if a foreign
-    Doc carried nested As.  Anchor collection only runs when the caller
-    asked for it -- the streaming frontier's links/base projection must
-    not pay it."""
+    A subtree is an id range of the flat pre-order DOM, so this is a
+    C-side list.index scan of `name` for A and BASE nodes plus one join
+    of the text slice [a + 1, end[a]) per anchor.  An A nested in an A
+    (the PDA lets soup like '<a href=x>..<a href=y>' nest) keeps the
+    pairing: the outer anchor's text includes the inner one's.  Anchor
+    text is only joined when the caller asked for it -- the streaming
+    frontier's links/base projection must not pay it."""
     out = []
     anchors = []
     base = None
-    name = doc.name
     attrs = doc.attrs
     text = doc.text
-    a_depth = -1        # depth of the currently open A scope (-1: none)
-    buf: list | None = None
-    for n, d in doc.walk():
-        if a_depth >= 0 and d <= a_depth:
-            anchors.append("".join(buf))
-            a_depth, buf = -1, None
-        nm = name[n]
-        if nm == "A":
-            for k, v in (attrs[n] or ()):
-                if k == "HREF" and v is not None:
-                    out.append(v)
-                    if want_anchors:
-                        a_depth, buf = d, []
-                    break
-        elif nm == "BASE" and base is None:
-            for k, v in (attrs[n] or ()):
-                if k == "HREF" and v is not None:
-                    base = v
-                    break
-        elif buf is not None and (t := text[n]) is not None:
-            buf.append(t)
-    if a_depth >= 0:
-        anchors.append("".join(buf))
+    end = doc.end
+    for n in doc.find_all("A"):
+        for k, v in (attrs[n] or ()):
+            if k == "HREF" and v is not None:
+                out.append(v)
+                if want_anchors:
+                    anchors.append("".join(filter(None, text[n + 1:end[n]])))
+                break
+    for n in doc.find_all("BASE"):
+        base = next((v for k, v in (attrs[n] or ())
+                     if k == "HREF" and v is not None), None)
+        if base is not None:
+            break
     return out, anchors, base
 
 
@@ -212,7 +197,7 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     main_text is the concatenated kept spans; an error row's main_text
     is ''.
     columns=None builds _DEFAULT_COLS, which EXCLUDES links/base: they
-    need a second full-DOM walk (the span scorer's walk starts at BODY
+    need a second scan of the whole DOM (the span scorer's covers BODY
     and cannot see HEAD, where BASE lives), so only frontier consumers
     passing columns=("links", "base") pay it."""
     import pyarrow as pa
@@ -401,24 +386,30 @@ def nodes_of(df: DataFrame,
             for idx, doc, _ in _parsed_docs(batch, work):
                 if doc is None:
                     continue
-                # renumber pre-order from the post-mortem root
-                remap = {}
-                for n, d in doc.walk():
-                    remap[n] = len(remap)
-                for n, d in doc.walk():
-                    row_idx.append(idx)
-                    node_id.append(remap[n])
-                    p = doc.parent[n]
-                    parent_id.append(remap.get(p, -1))
-                    depth_c.append(d)
-                    name_c.append(doc.name[n])
-                    # dict round-trip dedups repeated attr names (last
-                    # wins) -- Spark's map-key uniqueness requirement
-                    ad = dict(doc.attrs[n]) if doc.attrs[n] else {}
-                    at_k.extend(ad.keys())
-                    at_v.extend(ad.values())
+                # the tree is the id range [root, end[root]), already in
+                # pre-order: ids and parents are offsets from the root,
+                # and a parent's depth is known before its children's
+                root = doc.root
+                stop = doc.end[root]
+                pids = [-1]
+                pids.extend([p - root for p in doc.parent[root + 1:stop]])
+                depth = [0]
+                for p in pids[1:]:
+                    depth.append(depth[p] + 1)
+                row_idx.extend([idx] * len(pids))
+                node_id.extend(range(len(pids)))
+                parent_id.extend(pids)
+                depth_c.extend(depth)
+                name_c.extend(doc.name[root:stop])
+                text_c.extend(doc.text[root:stop])
+                for a in doc.attrs[root:stop]:
+                    if a:
+                        # dict round-trip dedups repeated attr names (last
+                        # wins) -- Spark's map-key uniqueness requirement
+                        ad = dict(a)
+                        at_k.extend(ad.keys())
+                        at_v.extend(ad.values())
                     at_off.append(len(at_k))
-                    text_c.append(doc.text[n])
             yield _out_batch(batch, ids, [
                 pa.array(node_id, i32), pa.array(parent_id, i32),
                 pa.array(depth_c, i32),
@@ -510,7 +501,7 @@ def bookmarks_of(df: DataFrame,
     contributes zero rows."""
     import pyarrow as pa
 
-    from ..dtd import PCDATA
+    from ..extract import child_text, find_first
 
     ids, schema, arrow_schema = _stage_schema(
         df, id_cols, "folder string, link_title string, href string")
@@ -527,29 +518,34 @@ def bookmarks_of(df: DataFrame,
                 if doc is None:
                     continue
 
-                # folder = concatenated H3 headings on the DL ancestor path
-                def text_of(n):
-                    return "".join(doc.text[c] or "" for c in doc.children[n]
-                                   if doc.name[c] == PCDATA)
-                stack = [(doc.root, "")]
-                while stack:
-                    n, folder = stack.pop()
-                    nm = doc.name[n]
+                # folder = concatenated H3 headings on the DL ancestor
+                # path: a DT with an H3 sets it for the DT's id range
+                names, end = doc.name, doc.end
+                folder = ""
+                scopes = []   # the enclosing (folder, scope end)
+                n = doc.root
+                scope_end = stop = end[n]
+                while n < stop:
+                    while n >= scope_end:
+                        folder, scope_end = scopes.pop()
+                    nm = names[n]
                     if nm == "A":
                         href = next((v for k, v in (doc.attrs[n] or ())
                                      if k == "HREF"), None)
                         row_idx.append(idx)
                         folder_c.append(folder)
-                        title_c.append(text_of(n))
+                        title_c.append(child_text(doc, n))
                         href_c.append(href)
+                        n = end[n]
                         continue
                     if nm == "DT":
-                        h3 = next((c for c in doc.children[n]
-                                   if doc.name[c] == "H3"), -1)
+                        h3 = find_first(doc, n, "H3")
                         if h3 >= 0:
-                            folder = (folder + "/" + text_of(h3)).lstrip("/")
-                    for c in reversed(doc.children[n]):
-                        stack.append((c, folder))
+                            scopes.append((folder, scope_end))
+                            folder = (folder + "/"
+                                      + child_text(doc, h3)).lstrip("/")
+                            scope_end = end[n]
+                    n += 1
             yield _out_batch(batch, ids, [
                 pa.array(folder_c, pa.string()),
                 pa.array(title_c, pa.string()),

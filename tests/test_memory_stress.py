@@ -10,11 +10,11 @@ documented in SCALE.md:
 
     worker_peak ~= interpreter base (~150 MB with Arrow)
                  + A x max_doc_bytes   (ONE doc's DOM at a time;
-                   A ~= 26 measured for tag-dense soup, ~4 for
+                   A ~= 19 measured for tag-dense soup, ~2 for
                    pcdata floods)
                  + ~2 x arrow batch bytes (input + staged output)
 
-With the default 64 MiB cap that budgets ~2 GB per Python worker
+With the default 64 MiB cap that budgets ~1.5 GB per Python worker
 (spark.executor.pyspark.memory=2g at one worker per core); the test
 scales the same rule down to a 2 MiB cap so it runs in seconds.
 """
@@ -26,7 +26,7 @@ from closure_html_spark.spark.pipeline import extract_pages
 
 CAP = 2 << 20  # 2 MiB per-doc cap for the test
 
-# tag-dense unit: the worst measured amplification shape (~26x input
+# tag-dense unit: the worst measured amplification shape (~19x input
 # bytes as DOM nodes)
 _UNIT = '<p>word soup here with <a href="/x">a link</a> and more</p>'
 
@@ -65,7 +65,7 @@ def test_oversize_batch_completes_with_accounting(spark):
 def test_worker_peak_rss_obeys_sizing_rule(spark):
     """Drive 16 AT-cap tag-dense docs through 4 concurrent workers,
     then probe the reused workers' high-water RSS: each must sit under
-    base + A x cap + 2 x batch with the measured A=26 and 50% slack --
+    base + A x cap + 2 x batch with the measured A=19 and 50% slack --
     the SCALE.md rule scaled to this test's 2 MiB cap (~320 MB).  A doc
     whose DOM exceeded the rule (e.g. a per-batch leak, or all batch
     docs' DOMs alive at once) would blow well past it."""
@@ -92,7 +92,7 @@ def test_worker_peak_rss_obeys_sizing_rule(spark):
     warm = [r.rss_mb for r in peaks if r.rss_mb > 100.0]
     if not warm:
         pytest.skip("worker pool was recycled; no warm worker probed")
-    budget_mb = 150 + 26 * (CAP / 1048576) + 2 * 64  # rule at this cap
+    budget_mb = 150 + 19 * (CAP / 1048576) + 2 * 64  # rule at this cap
     assert max(warm) < budget_mb * 1.5, \
         f"worker peak {max(warm):.0f} MB exceeds sizing rule " \
         f"({budget_mb:.0f} MB + 50% slack)"

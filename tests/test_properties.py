@@ -58,7 +58,7 @@ def test_check_saneness(src):
     must be consistent (the reference's check-saneness invariant)."""
     doc = parse_html(DTD, src)
     for nid, _ in doc.walk():
-        for c in doc.children[nid]:
+        for c in doc.children_of(nid):
             assert doc.parent[c] == nid, "parent/child linkage broken"
             cname = doc.name[c]
             pname = doc.name[nid]
