@@ -45,6 +45,7 @@ from closure_html_spark.spark.multimodal import (
     q_media_phash_neardup,
 )
 from closure_html_spark.spark.pdfs import ORACLE_PDF_EXTRACT, q_pdf_extract
+from closure_html_spark.spark.tables import read_table
 from closure_html_spark.spark.warcs import (
     ORACLE_WARC_EXTRACT,
     ORACLE_WET_ROUNDTRIP,
@@ -300,7 +301,7 @@ def _q_bookmarks(spark, sf_dir):
     top-level link per doc, all closed-form."""
     from closure_html_spark.spark.pipeline import bookmarks_of
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_table(spark, sf_dir, "documents") \
         .select("doc_id")
     i = F.col("doc_id").cast("string")
     m = (F.col("doc_id") % 5).cast("string")

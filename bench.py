@@ -206,6 +206,8 @@ def _relational() -> dict[str, list[float]]:
                       shuffle_partitions=CPUS)
 
     def run(name):
+        # an event log groups this query's jobs by the description
+        spark.sparkContext.setJobDescription(f"q:{name}")
         registry[name](spark, SF_DIR).write.format("noop") \
             .mode("overwrite").save()
 

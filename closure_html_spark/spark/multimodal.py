@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .relational import _cap_buckets
+from .tables import read_table
 
 MEDIA_SCHEMA = ("media_id long, doc_id long, mime string, payload binary, "
                 "meta struct<width:int,height:int,n_frames:int,"
@@ -34,7 +35,7 @@ MEDIA_SCHEMA = ("media_id long, doc_id long, mime string, payload binary, "
 def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic synthetic media table: payload = utf-8 bytes of the
     document text (a stand-in blob); metadata derived from doc_id."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     mime = (F.when(F.col("doc_id") % 3 == 0, F.lit("fake/image"))
             .when(F.col("doc_id") % 3 == 1, F.lit("fake/audio"))
             .otherwise(F.lit("fake/video")))

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from closure_html_spark.spark.tables import read_table
+
 
 def _esc(col):
     # HTML-escape of the text payload (matches entity decode on the way back)
@@ -80,7 +82,7 @@ def pages_from_documents(spark: SparkSession, sf_dir: str,
     tile > 1 replicates each document `tile` times (distinct urls) for
     benchmark scale; variants > 1 cycles templates by (doc_id+rep) % variants.
     """
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     df = docs.select("doc_id", "text", "lang")
     if tile > 1:
         df = df.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(tile - 1))))
@@ -153,7 +155,7 @@ def hostile_pages_from_documents(spark: SparkSession,
 
     Every template ends WITHOUT its closing tags (EOF repair on every
     row).  Synthesis is pure JVM expressions like pages_from_documents."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     esc_text = _esc(F.col("text"))
     h = F.col("doc_id") % 5
     t0 = F.concat(F.lit(_HOSTILE_HEAD + "<div>" * HOSTILE_DEEP + "<p>"),
@@ -215,7 +217,7 @@ ORACLE_VARIANT_NSPANS = (
 def pages_with_tables(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthesize pages whose bodies hold a well-formed and a tag-soup
     <table>, cells closed-form in doc_id/n_chars/lang/source."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     nstr = F.col("doc_id").cast("string")
     lenstr = F.col("n_chars").cast("string")
     table_a = F.concat(
@@ -246,7 +248,7 @@ def pages_with_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     name=description>, an RDFa <meta property="og:title"> (undeclared in
     the HTML-4 DTD -- value-attrs are kept verbatim, the mungle-attlist
     rule the extractor depends on), and <link rel=canonical>."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, sf_dir, "documents")
     nstr = F.col("doc_id").cast("string")
     html = F.concat(
         F.lit("<html lang="), F.col("lang"),

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from closure_html_spark.spark.tables import read_table
+
 
 def _esc_pdf(col):
     # PDF literal-string escapes: backslash first, then parens
@@ -30,7 +32,7 @@ def _esc_pdf(col):
 
 
 def pdfs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_table(spark, sf_dir, "documents") \
         .select("doc_id", "text")
     title = F.concat(F.lit("Doc "), F.col("doc_id").cast("string"))
     content = F.concat(

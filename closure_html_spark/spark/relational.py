@@ -12,12 +12,13 @@ similarity search) over the documents/embeddings tables.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+# every table read: schema and row count from the parquet footers, no job
+from closure_html_spark.spark.tables import (
+    parquet_files as _parquet_files, parquet_n_rows as _parquet_n_rows,
+    read_table as _t)
 
 
 # ---------------------------------------------------------------------------
@@ -658,22 +659,6 @@ def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str]):
 _EMB_BCAST_MAX_BYTES = 64 << 20
 
 
-def _parquet_files(sf_dir: str, name: str) -> list[str] | None:
-    """The files of table `name` when it is a LOCAL parquet file or
-    directory under sf_dir; None otherwise."""
-    import glob
-    import os
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        files = sorted(glob.glob(os.path.join(path, "**", "*.parquet"),
-                                 recursive=True))
-    elif os.path.isfile(path):
-        files = [path]
-    else:
-        return None
-    return files or None
-
-
 def _local_emb_table(sf_dir: str | None):
     """(sorted ids, float32 matrix) read driver-side straight from a LOCAL
     embeddings.parquet below the broadcast gate -- the footer-stats
@@ -808,19 +793,29 @@ def _np_normed(emb):
 
 
 def _cosine_rerank(pairs, emb, local, n: int, a: str = "a_id",
-                   b: str = "b_id"):
+                   b: str = "b_id", min_sim: float | None = None):
     """(a, b, sim) for an ids-only candidate frame: sim = dot / (|a| * |b|)
     from the numpy kernels, divided and rounded to 6 places JVM-side, so
-    it equals the interpreted-fold cosine bit for bit.  n (the table's row
-    count) decides the shape.  Below the broadcast gate the pairs cross
-    the Python boundary as ids only and vectors come from one broadcast
-    matrix, built from `local` (the caller's _local_emb_table result)
-    when there is one (the old plan shipped 2 x 64 floats PER PAIR --
-    ~800 MB at sf0.1 -- through two broadcast joins and the Arrow
-    exchange).  Past the gate both sides equi-join the normed table and
-    carry their vectors to the kernel; no broadcast hint there, since a
-    frame that holds embeddings is exactly what the gate judged too big
-    to ship."""
+    it equals the interpreted-fold cosine bit for bit.  Every candidate
+    row gets a row out: a pair that occurs twice is scored twice.
+
+    min_sim keeps only the rows with sim >= min_sim, and drops most of
+    the rest before the rounding: round(raw, 6) >= min_sim needs
+    raw >= min_sim - 5e-7 (HALF_UP), so a raw cosine below
+    min_sim - 1e-6 can never pass, and the BigDecimal round runs only on
+    the rows near or above the cut.  Spark orders NaN above every number,
+    so a NaN cosine passes the prefilter and meets the exact test as
+    before.
+
+    n (the table's row count) decides the shape.  Below the broadcast
+    gate the pairs cross the Python boundary as ids only and vectors come
+    from one broadcast matrix, built from `local` (the caller's
+    _local_emb_table result) when there is one (the old plan shipped
+    2 x 64 floats PER PAIR -- ~800 MB at sf0.1 -- through two broadcast
+    joins and the Arrow exchange).  Past the gate both sides equi-join
+    the normed table and carry their vectors to the kernel; no broadcast
+    hint there, since a frame that holds embeddings is exactly what the
+    gate judged too big to ship."""
     if n * _EMB_DIM * 4 <= _EMB_BCAST_MAX_BYTES:
         scored = _np_pair_dot_bcast(pairs, _emb_matrix_bcast(emb, local),
                                     a_id=a, b_id=b)
@@ -834,8 +829,13 @@ def _cosine_rerank(pairs, emb, local, n: int, a: str = "a_id",
                            F.col("norm").alias("b_norm"))
         scored = _np_pair_dot(pairs.join(ea, a).join(eb, b), "a_emb",
                               "b_emb", keep=[a, b, "a_norm", "b_norm"])
-    sim = F.round(F.col("dot") / (F.col("a_norm") * F.col("b_norm")), 6)
-    return scored.select(a, b, sim.alias("sim"))
+    raw = F.col("dot") / (F.col("a_norm") * F.col("b_norm"))
+    if min_sim is None:
+        return scored.select(a, b, F.round(raw, 6).alias("sim"))
+    return (scored.select(a, b, raw.alias("raw"))
+            .filter(F.col("raw") >= min_sim - 1e-6)
+            .select(a, b, F.round(F.col("raw"), 6).alias("sim"))
+            .filter(F.col("sim") >= min_sim))
 
 
 def _top_k(scored, order, k: int = TOP_K):
@@ -967,17 +967,21 @@ def _cap_buckets(df, keys: list[str], order_col: str,
 
 def _candidate_pairs(blocks, id_col: str, keys: list[str],
                      max_bucket: int | None):
-    """Distinct (a_id, b_id), a_id < b_id, of ids sharing ANY block row:
-    the capped block table is materialized once for its two self-join
-    sides (Catalyst does not dedupe common subplans), then a bucket
-    equi-join on `keys`."""
+    """(a_id, b_id), a_id < b_id, once for every block two ids share: the
+    capped block table is materialized once for its two self-join sides
+    (Catalyst does not dedupe common subplans), then a bucket equi-join on
+    `keys`.  A pair that shares k blocks comes out k times.  The caller
+    de-duplicates AFTER its own threshold (the SparkER order: blocking,
+    comparison, cleaning), so the de-duplicating shuffle sees only the
+    survivors: at 1,000 vectors the RHP bands give ~265k join rows for
+    ~1.5k near pairs."""
     blocks = _cap_buckets(blocks, keys, id_col, max_bucket) \
         .localCheckpoint(eager=True)
     a = blocks.select(F.col(id_col).alias("a_id"), *keys)
     b = blocks.select(F.col(id_col).alias("b_id"), *keys)
     return (a.join(b, keys)
             .filter(F.col("a_id") < F.col("b_id"))
-            .select("a_id", "b_id").distinct())
+            .select("a_id", "b_id"))
 
 
 def _sig_side(sigs, id_name: str, prefix: str):
@@ -1036,7 +1040,8 @@ def _minhash_est_pairs(spark, sf_dir, threshold: float,
     return (cand.join(_sig_side(sigs, "a_id", "a"), "a_id")
             .join(_sig_side(sigs, "b_id", "b"), "b_id")
             .select("a_id", "b_id", _est_jaccard().alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold))
+            .filter(F.col("est_jaccard") >= threshold)
+            .distinct())
 
 
 def q_paragraph_dedup(spark, sf_dir, chunk_words: int = TOY_CHUNK_WORDS):
@@ -2445,25 +2450,6 @@ ORDER BY a_id, b_id
 """
 
 
-def _parquet_n_rows(sf_dir: str, name: str) -> int | None:
-    """Table row count from parquet FOOTER metadata (the table-statistics
-    source): reads only the footers driver-side, launches NO Spark job --
-    the self-sizing ANN queries use this so merely building/running a plan
-    never triggers a hidden full-scan count() action (round-3 verdict
-    wrong #3).  Returns None for non-local / non-parquet locations and
-    for a footer that cannot be read (a truncated or unreadable file);
-    callers fall back to df.count()."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    files = _parquet_files(sf_dir, name)
-    if files is None:
-        return None
-    try:
-        return sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except (OSError, pa.ArrowInvalid):
-        return None
-
-
 def _embeddings_n_rows(emb: DataFrame, sf_dir: str) -> int:
     """N for index sizing: parquet footer stats, else (the documented last
     resort) a count() scan job."""
@@ -2594,9 +2580,10 @@ def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None,
     bucket equi-join whose size is sum over buckets of |bucket|^2, not N^2.
     band_bits defaults to lsh_band_bits(N) (~1024 expected rows/bucket =>
     candidates linear in N); only (vec_id, band, val) flows through the
-    banding shuffle -- embeddings join back AFTER candidate-pair dedup, so
-    the 64-float vector is never amplified x RHP_BANDS through the
-    exchange.
+    banding shuffle -- vectors meet the candidate pairs only in
+    _cosine_rerank, so the 64-float vector is never amplified x
+    RHP_BANDS through the banding exchange; a pair found in several bands
+    is de-duplicated after the cosine cut.
     q_embedding_neardup (the crossJoin) stays as the exact baseline;
     test_embedding_neardup_lsh_recall pins recall against it, and the
     DuckDB oracle replays the signature bit-for-bit (md5 sign matrix).
@@ -2635,12 +2622,12 @@ def _embedding_near_pairs(spark, sf_dir, band_bits: int | None,
     # (vec_id, bk) frame is materialized once -- the interpreted banding
     # subtree previously executed TWICE (both sides of the self-join;
     # plans/r08/embedding_neardup_lsh_before.txt shows the duplicated
-    # Generate), at scan parallelism 1.  Distinct pairs = ANY-band
-    # semantics.
+    # Generate), at scan parallelism 1.  The distinct after the cosine
+    # cut gives ANY-band semantics.
     pairs = _candidate_pairs(_rhp_bands_np(emb, band_bits), "vec_id",
                              ["bk"], max_bucket)
-    return (_cosine_rerank(pairs, emb, _local_emb_table(sf_dir), n)
-            .filter(F.col("sim") >= COSINE_MIN))
+    return _cosine_rerank(pairs, emb, _local_emb_table(sf_dir), n,
+                          min_sim=COSINE_MIN).distinct()
 
 
 def q_ann_lsh_topk(spark, sf_dir, band_bits: int | None = None):
@@ -5041,8 +5028,7 @@ def q_semantic_dedup(spark, sf_dir, n_cells: int | None = None):
     pairs = (a.join(bb, "cell")
              .filter(F.col("a_id") < F.col("b_id"))
              .select("a_id", "b_id"))
-    losers = (_cosine_rerank(pairs, emb, local, n)
-              .filter(F.col("sim") >= COSINE_MIN)
+    losers = (_cosine_rerank(pairs, emb, local, n, min_sim=COSINE_MIN)
               .select(F.col("b_id").alias("vec_id"))
               .distinct())
     return (cells.select("vec_id", "cell")

@@ -17,6 +17,20 @@ from pyspark.sql import SparkSession
 def get_spark(app: str = "closure-html-spark",
               master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
+    """The engine's SparkSession: local[cpus] by default, where cpus is
+    SPARK_GRAFT_CPUS or the CPUs this process may use.
+
+    PySpark's DataFrame call-site capture is off
+    (spark.python.sql.dataFrameDebugging.enabled=false).  With it on,
+    every Column method walks the Python stack and makes ~10 py4j round
+    trips to record where it was called; one pass of the dedup query
+    family sent 17,124 py4j calls with it on and 5,924 with it off (not
+    counting py4j's deletes of dead Java references).
+    The cost: a Spark error message no longer names the Python line that
+    built the failing expression.  PySpark reads the setting once per
+    process, at the first Column method after a session starts
+    (pyspark.errors.utils.is_debugging_enabled caches it), so it goes on
+    the builder: a later spark.conf.set would not reach that cache."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               str(len(os.sched_getaffinity(0)))))
     if master is None:
@@ -48,5 +62,6 @@ def get_spark(app: str = "closure-html-spark",
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from closure_html_spark.spark.tables import read_table
+
 
 def _esc(col):
     return F.replace(
@@ -31,7 +33,7 @@ def _esc(col):
 
 
 def warcs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_table(spark, sf_dir, "documents") \
         .select("doc_id", "text")
     i = F.col("doc_id").cast("string")
     h = (F.col("doc_id") % 50).cast("string")
@@ -173,7 +175,7 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     A writer/parser disagreement (header drift, length-vs-chars bug,
     charset slip) turns `match` to 0 and breaks the closed-form
     oracle loudly."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
+    docs = read_table(spark, sf_dir, "documents") \
         .select("doc_id", "text")
     url = F.concat(F.lit("https://wet.example/p"),
                    F.col("doc_id").cast("string"))

@@ -481,3 +481,56 @@ def test_embedding_queries_read_local_table_once(spark, sf_dir, monkeypatch):
         registry[name](spark, sf)
         got[name] = len(reads)
     assert got == dict.fromkeys(got, 1), got
+
+
+def test_rerank_prefilter_at_the_rounding_edge(spark, monkeypatch):
+    """_cosine_rerank(min_sim=COSINE_MIN) drops raw cosines below
+    min_sim - 1e-6 before the 6-place round; it must return exactly the
+    rows of the unfiltered rerank followed by the sim >= COSINE_MIN
+    filter.  Synthetic pairs put raw cosines on both sides of 0.3999995
+    (the HALF_UP edge of round(raw, 6) >= 0.4) and on both sides of the
+    prefilter cut, plus a repeated pair and a NaN cosine, which Spark
+    orders above every number.  Checked on the broadcast-matrix path and,
+    with the gate at 0, on the normed equi-join path."""
+    import numpy as np
+    edge = 0.3999995
+    cs = [edge + k * 1.5e-8 for k in range(-40, 41)] + [
+        0.399999, 0.3999985, 0.5, 0.1]
+    vecs = [np.eye(1, R._EMB_DIM, dtype=np.float32)[0]]
+    for c in cs:
+        v = np.zeros(R._EMB_DIM, dtype=np.float32)
+        v[0], v[1] = c, np.sqrt(1.0 - c * c)
+        vecs.append(v)
+    nan = np.full(R._EMB_DIM, np.nan, dtype=np.float32)
+    m = np.asarray(vecs, dtype=np.float64)
+    norms = np.sqrt(R._np_seq_dot(m, m))
+    raw = R._np_seq_dot(np.broadcast_to(m[0], m.shape), m) / (norms[0] *
+                                                               norms)
+    cut = R.COSINE_MIN - 1e-6
+    assert any(edge < r < edge + 1e-7 for r in raw)
+    assert any(edge - 1e-7 < r < edge for r in raw)
+    assert any(cut <= r < edge for r in raw)
+    assert any(r < cut for r in raw[1:])
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in v]) for i, v in enumerate(vecs + [nan])],
+        "vec_id long, embedding array<float>")
+    n = len(vecs) + 1
+    dup = 1 + cs.index(0.5)
+    pairs = spark.createDataFrame(
+        [(0, i) for i in range(1, n)] + [(0, dup)], "a_id long, b_id long")
+    from pyspark.sql import functions as F
+
+    def rows(df):  # repr: a NaN sim equals itself
+        return sorted((r["a_id"], r["b_id"], repr(r["sim"]))
+                      for r in df.collect())
+    for gate in (R._EMB_BCAST_MAX_BYTES, 0):
+        monkeypatch.setattr(R, "_EMB_BCAST_MAX_BYTES", gate)
+        every = R._cosine_rerank(pairs, emb, None, n)
+        assert {r["sim"] for r in every.collect()} >= {0.4, 0.399999}
+        want = rows(every.filter(F.col("sim") >= R.COSINE_MIN))
+        got = rows(R._cosine_rerank(pairs, emb, None, n,
+                                    min_sim=R.COSINE_MIN))
+        assert got == want, gate
+        ids = [b for _, b, _ in got]
+        assert ids.count(dup) == 2
+        assert n - 1 in ids and 0 < len(ids) < n
