@@ -267,19 +267,16 @@ def _slow_token(dtd: Dtd, tk: Tokenizer, i: int):
     return None, i
 
 
-def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
-               font_htag: bool = False) -> Doc:
+def sgml_parse(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
     """Parse decoded text into a Doc rooted at a synthetic top node.
 
-    With an explicit tokenizer this runs the direct transcription of the
-    reference loop (_sgml_parse_ref); the default path runs the fused
-    engine: tokenize + normalize + PDA in one loop over a C-side piece
-    split (_PIECE).  Tag pieces are one whole-piece memo hit
+    This is the fused engine: tokenize + normalize + PDA in one loop over
+    a C-side piece split (_PIECE).  Tag pieces are one whole-piece memo hit
     (dtd.tag_cache), text pieces become #PCDATA directly, and anything
     else runs the exact char machine from the piece's offset until the
     cursor is back on a piece boundary.  The differential fuzz and golden
     piece-boundary cases pin it serialization- and warning-identical to
-    the reference loop.
+    the reference loop, _sgml_parse_ref, which tests call directly.
 
     font_htag=True enables the reference's FONT-as-marker mode: FONT tags
     bypass the PDA and land in the tree as HSTAG/HETAG marker nodes
@@ -288,9 +285,6 @@ def sgml_parse(dtd: Dtd, text: str, tokenizer: Tokenizer | None = None,
     (sgml-parse.lisp:1174-1178) discards its first `and` form, so the
     default flags make it constantly nil -- this flag is the fixed,
     opt-in variant SURVEY §7 promised."""
-    if tokenizer is not None:
-        return _sgml_parse_ref(dtd, text, tokenizer, font_htag)
-
     tk = Tokenizer(text, dtd.entities)
     src = text
     n = len(src)

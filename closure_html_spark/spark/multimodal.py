@@ -106,11 +106,14 @@ def _fake_pixels(payload: bytes, w: int, h: int):
 
 RESIZED_SCHEMA = ("media_id long, doc_id long, out_w int, out_h int, "
                   "mean_px double, resized_sha string, err string")
+# resize_media's thumbnail size (pixels)
+RESIZE_W = 32
+RESIZE_H = 32
 
 
-def resize_media(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
+def resize_media(df: DataFrame) -> DataFrame:
     """mapInPandas resize stage: nearest-neighbor index-map resample of
-    the decoded matrix to (out_w, out_h) -- REAL resize math over the
+    the decoded matrix to (RESIZE_W, RESIZE_H) -- REAL resize math over the
     deterministic fake decode; only the codec boundary is stubbed
     (non-fake mimes raise at the _decode boundary exactly like
     decode_media -- a missing codec is a configuration error and must
@@ -123,6 +126,8 @@ def resize_media(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
     err='error:TypeName: msg' and NULL outputs, matching the
     extract_pages never-kill-the-batch convention (pipeline._parsed_docs)."""
     import numpy as np
+    # read on the driver: the worker closure carries the values
+    out_w, out_h = RESIZE_W, RESIZE_H
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -159,12 +164,15 @@ def resize_media(df: DataFrame, out_w: int = 32, out_h: int = 32) -> DataFrame:
 
 FRAMES_SCHEMA = ("media_id long, doc_id long, frame_idx int, "
                  "frame_sha string, err string")
+# frame_sample keeps every FRAME_EVERY_K-th frame
+FRAME_EVERY_K = 5
 
 
-def frame_sample(df: DataFrame, every_k: int = 5) -> DataFrame:
-    """mapInPandas frame-sampling stage for video rows: every k-th frame
-    index up to meta.n_frames, one OUTPUT ROW PER SAMPLED FRAME (the
-    1->N batch-shape case the decode/resize stages don't exercise).
+def frame_sample(df: DataFrame) -> DataFrame:
+    """mapInPandas frame-sampling stage for video rows: every
+    FRAME_EVERY_K-th frame index up to meta.n_frames, one OUTPUT ROW PER
+    SAMPLED FRAME (the 1->N batch-shape case the decode/resize stages
+    don't exercise).
     Frame content is the deterministic fake digest of (payload, idx);
     a real ffmpeg seek-and-decode drops into the same loop.
 
@@ -172,6 +180,8 @@ def frame_sample(df: DataFrame, every_k: int = 5) -> DataFrame:
     n_frames) emits ONE marker row (frame_idx=-1, err set) instead of
     killing the batch -- the extract_pages convention; the codec
     boundary still raises loudly (configuration error)."""
+    # read on the driver: the worker closure carries the value
+    every_k = FRAME_EVERY_K
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -243,18 +253,19 @@ FROM documents GROUP BY 1 ORDER BY mime
 """
 
 
-# the hamming radius the media_phash_neardup gate and its oracle use
+# the hamming radius of media_phash_neardup and its oracle.  The query's
+# fixed 2-band split is pigeonhole-exact only for a radius <= 1: a larger
+# one needs radius+1 bands, or pairs differing in both bands are silently
+# lost at the candidate-generation stage
 PHASH_MAX_HAMMING = 1
 
 
-def q_media_phash_neardup(spark, sf_dir,
-                          max_hamming: int = PHASH_MAX_HAMMING,
-                          max_bucket: int | None = None):
+def q_media_phash_neardup(spark, sf_dir):
     """Perceptual-hash near-duplicate detection for the image modality:
     aHash over the decode stage's 8-component feature (bit_i set iff
     component_i is above the feature mean), then a BANDED hamming join
     -- two 4-bit bands; hamming <= 1 implies equality in at least one
-    band, so banding is EXACT (not approximate) for max_hamming=1, the
+    band, so banding is EXACT (not approximate) for PHASH_MAX_HAMMING=1, the
     standard pigeonhole split of a hamming-LSH index.
 
     Scale shape: the hash is pure integer column math JVM-side (sha2 +
@@ -264,17 +275,11 @@ def q_media_phash_neardup(spark, sf_dir,
     never shuffle.  8-bit hashes are what the stub 8-float feature
     supports; a real pHash is 64-bit with 8-bit bands, same plan.  A
     degenerate hot value (mono-color corpus) resurrects the in-bucket
-    N^2 exactly like MinHash banding -- max_bucket keeps the
-    lowest-media_id members per (band, val) bucket, the house hot-key
-    cap.  All-integer outputs, so the DuckDB oracle hashes exactly."""
-    if max_hamming > 1:
-        # the fixed 2-band split is only pigeonhole-exact for
-        # max_hamming <= 1; a larger radius needs max_hamming+1 bands
-        # or pairs differing in both bands are silently lost at the
-        # candidate-generation stage
-        raise ValueError(
-            "q_media_phash_neardup's 2-band candidate generation is "
-            f"exact only for max_hamming <= 1 (got {max_hamming})")
+    N^2 exactly like MinHash banding -- _cap_buckets keeps the
+    MAX_BUCKET lowest-media_id members per (band, val) bucket, the house
+    hot-key cap (never fires at gate scale, so the DuckDB oracle needs no
+    cap clause).  All-integer outputs, so the DuckDB oracle hashes
+    exactly."""
     media = media_from_documents(spark, sf_dir) \
         .filter(F.col("mime") == "fake/image")
     digest = F.sha2(F.col("payload"), 256)
@@ -297,7 +302,7 @@ def q_media_phash_neardup(spark, sf_dir,
         .alias("b"))
         .select("media_id", "ph", F.col("b.band").alias("band"),
                 F.col("b.val").alias("val")))
-    bands = _cap_buckets(bands, ["band", "val"], "media_id", max_bucket)
+    bands = _cap_buckets(bands, ["band", "val"], "media_id")
     a = bands.select(F.col("media_id").alias("id_a"),
                      F.col("ph").alias("ph_a"), "band", "val")
     b = bands.select(F.col("media_id").alias("id_b"),
@@ -306,7 +311,7 @@ def q_media_phash_neardup(spark, sf_dir,
     return (a.join(b, ["band", "val"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b", ham.cast("int").alias("hamming"))
-            .filter(F.col("hamming") <= max_hamming)
+            .filter(F.col("hamming") <= PHASH_MAX_HAMMING)
             .distinct()
             .orderBy("id_a", "id_b"))
 

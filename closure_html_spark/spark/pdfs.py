@@ -63,16 +63,12 @@ def pdf_extract_pages(df: DataFrame,
                       id_cols: tuple[str, ...] = ("doc_id",)) -> DataFrame:
     """mapInArrow PDF text extraction over a `pdf binary` column."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     from ..pdf import extract_pdf_text
+    from .pipeline import _stage_schema
 
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    schema = ", ".join(
-        [f"{n} {t}" for n, t in df.dtypes if n in id_cols]
-        + ["pdf_text string", "n_streams int", "pdf_error string"])
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, "pdf_text string, n_streams int, pdf_error string")
 
     def fn(batches):
         for batch in batches:

@@ -65,8 +65,10 @@ JACCARD_MAX_DF = 50
 # paragraph-dedup chunk sizes (words): the toy report, the C4-style span
 TOY_CHUNK_WORDS = 3
 C4_CHUNK_WORDS = 50
-# frontier_schedule's delay (seconds) for hosts whose robots.txt names none
+# frontier_schedule's delay (seconds) for hosts whose robots.txt names none,
+# and the urls it schedules per host and cycle
 DEFAULT_CRAWL_DELAY = 1.0
+FRONTIER_HOST_CAP = 1000
 # keywords per document in tfidf_topk; PageRank iterations and damping
 TFIDF_K = 3
 PAGERANK_ITERS = 5
@@ -838,13 +840,13 @@ def _cosine_rerank(pairs, emb, local, n: int, a: str = "a_id",
             .filter(F.col("sim") >= min_sim))
 
 
-def _top_k(scored, order, k: int = TOP_K):
-    """The k first rows per q_id of a (q_id, vec_id, score) frame under
+def _top_k(scored, order):
+    """The TOP_K first rows per q_id of a (q_id, vec_id, score) frame under
     `order`, ties to the smaller vec_id, numbered in rnk and sorted by
     (q_id, rnk)."""
     w = Window.partitionBy("q_id").orderBy(order, "vec_id")
     return (scored.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
+            .filter(F.col("rnk") <= TOP_K)
             .select(*scored.columns, "rnk")
             .orderBy("q_id", "rnk"))
 
@@ -950,23 +952,18 @@ def q_minhash_bands(spark, sf_dir):
 # blocking / block-purging split); the near-dup queries share these stages
 # and keep their own rerank
 
-def _cap_buckets(df, keys: list[str], order_col: str,
-                 max_bucket: int | None):
-    """Hot-bucket guard: keep the first max_bucket rows (lowest order_col)
-    of every `keys` bucket; None returns df unchanged.  One degenerate
-    bucket -- thousands of byte-identical pages, zero vectors -- makes
-    |bucket|^2 pairs, the crossJoin again.  The window partitions on the
-    key the later join shuffles on, so its exchange is reused, not
-    added."""
-    if max_bucket is None:
-        return df
+def _cap_buckets(df, keys: list[str], order_col: str):
+    """Hot-bucket guard (block purging): keep the first MAX_BUCKET rows
+    (lowest order_col) of every `keys` bucket.  One degenerate bucket --
+    thousands of byte-identical pages, zero vectors -- makes |bucket|^2
+    pairs, the crossJoin again.  The window partitions on the key the
+    later join shuffles on, so its exchange is reused, not added."""
     w = Window.partitionBy(*keys).orderBy(order_col)
     return (df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= max_bucket).drop("_rn"))
+            .filter(F.col("_rn") <= MAX_BUCKET).drop("_rn"))
 
 
-def _candidate_pairs(blocks, id_col: str, keys: list[str],
-                     max_bucket: int | None):
+def _candidate_pairs(blocks, id_col: str, keys: list[str]):
     """(a_id, b_id), a_id < b_id, once for every block two ids share: the
     capped block table is materialized once for its two self-join sides
     (Catalyst does not dedupe common subplans), then a bucket equi-join on
@@ -975,7 +972,7 @@ def _candidate_pairs(blocks, id_col: str, keys: list[str],
     comparison, cleaning), so the de-duplicating shuffle sees only the
     survivors: at 1,000 vectors the RHP bands give ~265k join rows for
     ~1.5k near pairs."""
-    blocks = _cap_buckets(blocks, keys, id_col, max_bucket) \
+    blocks = _cap_buckets(blocks, keys, id_col) \
         .localCheckpoint(eager=True)
     a = blocks.select(F.col(id_col).alias("a_id"), *keys)
     b = blocks.select(F.col(id_col).alias("b_id"), *keys)
@@ -1002,7 +999,7 @@ def _est_jaccard():
     return F.round(agree / F.lit(float(N_HASHES)), 4)
 
 
-def q_minhash_est_pairs(spark, sf_dir, max_bucket: int | None = MAX_BUCKET):
+def q_minhash_est_pairs(spark, sf_dir):
     """MinHash near-duplicate pairs with ESTIMATED Jaccard -- the second
     stage of the standard MinHash dedup pipeline: banding proposes
     candidates (any shared band bucket, sub-quadratic bucket equi-join),
@@ -1013,19 +1010,18 @@ def q_minhash_est_pairs(spark, sf_dir, max_bucket: int | None = MAX_BUCKET):
     verification (q_jaccard_pairs) runs only on survivors if at all.
     Ids+signatures only through the shuffle; DuckDB replays everything.
 
-    Hot-bucket guard (_cap_buckets): max_bucket keeps the first
-    max_bucket members per (band, bucket), lowest doc_id first.  Pairs
-    among dropped members survive via the doc's other N_BANDS-1 bands
-    unless those are identical too -- i.e. only true mega-dup clusters
-    are trimmed, and a dedup pass keeps one member anyway.  The default
-    (64x any sane expected occupancy) never fires at gate scale, so the
-    DuckDB oracle needs no cap clause; None disables."""
-    return _minhash_est_pairs(spark, sf_dir, EST_JACCARD_MIN, max_bucket) \
+    Hot-bucket guard (_cap_buckets): the first MAX_BUCKET members per
+    (band, bucket), lowest doc_id first, are kept.  Pairs among dropped
+    members survive via the doc's other N_BANDS-1 bands unless those are
+    identical too -- i.e. only true mega-dup clusters are trimmed, and a
+    dedup pass keeps one member anyway.  The cap (64x any sane expected
+    occupancy) never fires at gate scale, so the DuckDB oracle needs no
+    cap clause."""
+    return _minhash_est_pairs(spark, sf_dir, EST_JACCARD_MIN) \
         .orderBy("a_id", "b_id")
 
 
-def _minhash_est_pairs(spark, sf_dir, threshold: float,
-                       max_bucket: int | None):
+def _minhash_est_pairs(spark, sf_dir, threshold: float):
     """The (a_id, b_id, est_jaccard) rows of q_minhash_est_pairs in no
     order: the query sorts them, connected_components needs no sort."""
     docs = _t(spark, sf_dir, "documents")
@@ -1036,7 +1032,7 @@ def _minhash_est_pairs(spark, sf_dir, threshold: float,
     # only -- the incremental_dedup localCheckpoint precedent.
     sigs = _minhash_sigs(docs).localCheckpoint(eager=True)
     cand = _candidate_pairs(_minhash_banded(sigs), "doc_id",
-                            ["band", "bucket"], max_bucket)
+                            ["band", "bucket"])
     return (cand.join(_sig_side(sigs, "a_id", "a"), "a_id")
             .join(_sig_side(sigs, "b_id", "b"), "b_id")
             .select("a_id", "b_id", _est_jaccard().alias("est_jaccard"))
@@ -1548,7 +1544,7 @@ def robots_directives(robots_df):
                     F.coalesce("sitemaps", F.array()).alias("sitemaps")))
 
 
-def frontier_schedule(urls_df, directives_df, per_host_cap: int = 1000):
+def frontier_schedule(urls_df, directives_df):
     """Politeness scheduling: turn a crawl frontier (host, url) plus
     robots_directives into a fetch plan -- each url gets a per-host slot
     and an earliest-fetch offset `eta_sec = slot * crawl_delay` (the
@@ -1558,7 +1554,7 @@ def frontier_schedule(urls_df, directives_df, per_host_cap: int = 1000):
     exchange carries (host, url) strings for the per-host ranking
     window.  Per-host sequencing is inherently a per-host order, so the
     window partitions by host -- skew (one hot host with 10^7 frontier
-    urls) is bounded by `per_host_cap` FIRST: a polite crawler can only
+    urls) is bounded by FRONTIER_HOST_CAP FIRST: a polite crawler can only
     fetch cap urls from one host per cycle anyway (cap * delay seconds),
     so ranking past the cap is wasted work and the cap doubles as the
     skew guard.  Deterministic: slots order by url, ties impossible
@@ -1569,7 +1565,7 @@ def frontier_schedule(urls_df, directives_df, per_host_cap: int = 1000):
     # (rn - 1).cast(long) column ranks ALL of a hot host's rows before
     # dropping them (verified: no WindowGroupLimit node in that plan)
     ranked = (urls_df.withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") <= per_host_cap)
+              .filter(F.col("rn") <= FRONTIER_HOST_CAP)
               .withColumn("slot", (F.col("rn") - 1).cast("long"))
               .drop("rn"))
     joined = ranked.join(
@@ -2048,7 +2044,7 @@ def _text_dedup_labels(spark, sf_dir):
     """(id, label) connected components of the q_minhash_est_pairs graph
     at TEXT_DEDUP_MIN: the shared prefix of both text_dedup queries."""
     return connected_components(_minhash_est_pairs(
-        spark, sf_dir, TEXT_DEDUP_MIN, MAX_BUCKET).select("a_id", "b_id"))
+        spark, sf_dir, TEXT_DEDUP_MIN).select("a_id", "b_id"))
 
 
 def q_text_dedup_clusters(spark, sf_dir):
@@ -2510,37 +2506,15 @@ def _rhp_sign_matrix(n_bits: int) -> list[list[float]]:
             for b in range(n_bits)]
 
 
-def _rhp_bands(emb_col, band_bits: int, n_bands: int):
-    """Array of (band, val) structs: val = the band's band_bits hyperplane
-    sign bits packed little-endian.  Each bit is sign(dot(embedding, +-1
-    row)) via zip_with/aggregate -- JVM-side, whole-stage codegen."""
-    signs = _rhp_sign_matrix(band_bits * n_bands)
-
-    def bit(i):
-        dot = F.aggregate(
-            F.zip_with(emb_col, F.lit(signs[i]),
-                       lambda x, y: x.cast("double") * y),
-            F.lit(0.0), lambda acc, x: acc + x)
-        return F.when(dot >= 0, F.lit(1)).otherwise(F.lit(0)).cast("long")
-
-    structs = []
-    for b in range(n_bands):
-        val = None
-        for i in range(band_bits):
-            t = bit(b * band_bits + i) * F.lit(1 << i)
-            val = t if val is None else val + t
-        structs.append(F.struct(F.lit(b).alias("band"), val.alias("val")))
-    return F.array(*structs)
-
-
 def _rhp_bands_np(emb, band_bits: int):
-    """(vec_id, bk struct<band:int,val:bigint>) rows -- the numpy twin of
-    explode(_rhp_bands(..., RHP_BANDS)): each sign bit is the SAME
-    left-associated float64 fold as the interpreted zip_with/aggregate
-    version (see the round-8 kernel note above), so bucket membership is
-    bit-identical; one mapInArrow pass replaces band_bits*RHP_BANDS
-    interpreted 64-element folds per row (the round-8 profile's single
-    largest cost)."""
+    """(vec_id, bk struct<band:int,val:bigint>) rows: RHP_BANDS bands per
+    vector, each band's val the band_bits hyperplane sign bits packed
+    little-endian (bit i = sign(dot(embedding, _rhp_sign_matrix row))).
+    Each dot is the SAME left-associated float64 fold as _dot_expr (see
+    the round-8 kernel note above), so bucket membership is what a
+    JVM-side zip_with/aggregate band column would give; one mapInArrow
+    pass replaces band_bits*RHP_BANDS interpreted 64-element folds per
+    row (the round-8 profile's single largest cost)."""
     import pyarrow as pa
     n_bands = RHP_BANDS
     n_bits = band_bits * n_bands
@@ -2571,8 +2545,7 @@ def _rhp_bands_np(emb, band_bits: int):
                        F.struct("band", "val").alias("bk"))
 
 
-def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None,
-                            max_bucket: int | None = MAX_BUCKET):
+def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None):
     """Scale path for embedding near-dup: random-hyperplane LSH bucket
     self-join + exact cosine rerank, instead of the O(N^2) crossJoin.
 
@@ -2591,26 +2564,24 @@ def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None,
     Hot-bucket guard (_cap_buckets): the sizing rule targets ~2^10
     EXPECTED rows per bucket, but on real embeddings one degenerate
     signature (zero vectors, a boilerplate-dominated cluster) can swallow
-    a large fraction of the corpus.  max_bucket (default 64x the expected
+    a large fraction of the corpus.  MAX_BUCKET (64x the expected
     occupancy -- fires only on pathological skew, never at gate scale, so
-    the DuckDB oracle needs no cap clause) keeps the first max_bucket
+    the DuckDB oracle needs no cap clause) keeps the first MAX_BUCKET
     members per (band, val) bucket (deterministic: lowest vec_id first,
     ties impossible), bounding candidates at RHP_BANDS * n_buckets *
-    max_bucket^2 / 2.  Pairs among dropped members of a hot bucket are
+    MAX_BUCKET^2 / 2.  Pairs among dropped members of a hot bucket are
     lost to THIS band only -- they remain candidates through their other
     RHP_BANDS-1 signatures, and a genuinely near-dup mega-cluster keeps its
-    kept-member core (the survivors a dedup pass retains anyway).  Pass
-    max_bucket=None to disable.
+    kept-member core (the survivors a dedup pass retains anyway).
 
     Self-sizing reads N from parquet footer statistics (no scan job);
     for an input that is not a local parquet table it counts the rows
     (one scan job) unless band_bits is passed."""
-    return _embedding_near_pairs(spark, sf_dir, band_bits, max_bucket) \
+    return _embedding_near_pairs(spark, sf_dir, band_bits) \
         .orderBy("a_id", "b_id")
 
 
-def _embedding_near_pairs(spark, sf_dir, band_bits: int | None,
-                          max_bucket: int | None):
+def _embedding_near_pairs(spark, sf_dir, band_bits: int | None):
     """The (a_id, b_id, sim) rows of q_embedding_neardup_lsh in no
     order: the query sorts them, connected_components needs no sort."""
     emb = _t(spark, sf_dir, "embeddings")
@@ -2625,7 +2596,7 @@ def _embedding_near_pairs(spark, sf_dir, band_bits: int | None,
     # Generate), at scan parallelism 1.  The distinct after the cosine
     # cut gives ANY-band semantics.
     pairs = _candidate_pairs(_rhp_bands_np(emb, band_bits), "vec_id",
-                             ["bk"], max_bucket)
+                             ["bk"])
     return _cosine_rerank(pairs, emb, _local_emb_table(sf_dir), n,
                           min_sim=COSINE_MIN).distinct()
 
@@ -2666,7 +2637,7 @@ def q_ann_lsh_topk(spark, sf_dir, band_bits: int | None = None):
 
 def _rhp_oracle_ctes() -> str:
     """Shared sig/banded CTE text for the LSH oracles at the gate's
-    BAND_BITS x RHP_BANDS: the SAME md5 sign constants as _rhp_bands,
+    BAND_BITS x RHP_BANDS: the SAME md5 sign constants as _rhp_bands_np,
     embedded as DuckDB array literals."""
     band_bits = BAND_BITS
     signs = _rhp_sign_matrix(band_bits * RHP_BANDS)
@@ -2758,8 +2729,7 @@ def _ivf_candidates(pairs, cells):
             .select("q_id", "vec_id"))
 
 
-def q_ann_ivf_topk(spark, sf_dir, n_cells: int | None = None,
-                   kmeans_iters: int = 0):
+def q_ann_ivf_topk(spark, sf_dir, n_cells: int | None = None):
     """IVF-Flat approximate top-k: the coarse-quantizer counterpart to the
     RHP-LSH path.  Vectors partition into n_cells Voronoi cells around
     DETERMINISTIC sampled centroids (every ceil(N/n_cells)-th vec_id --
@@ -2773,19 +2743,7 @@ def q_ann_ivf_topk(spark, sf_dir, n_cells: int | None = None,
     and rerank touch only candidate cells.  n_cells defaults to
     ivf_n_cells(N) ~ sqrt(N) (cell occupancy sqrt(N) => probe cost
     N_PROBE*sqrt(N), sublinear); N comes from parquet footer stats, no
-    scan job (a non-local-parquet input costs one count() job).
-
-    kmeans_iters > 0 refines the sampled centroids with that many Lloyd
-    iterations before the index build (the FAISS IVF training step):
-    assign every vector to its nearest current centroid (broadcast
-    crossJoin + map-side-combined max_by, embeddings shuffled ONCE per
-    iteration -- the cost any distributed k-means pays), then recompute
-    each cell's centroid as the per-dimension mean (posexplode + partial
-    avg: the wide exchange carries ~n_cells x dim rows per map
-    partition).  Deterministic given the sampled seeds up to float
-    summation order; the correctness gate therefore pins kmeans_iters=0
-    (bit-exact oracle replay) and tests/test_lsh_scale.py pins that
-    refinement does not lose recall at equal N_PROBE."""
+    scan job (a non-local-parquet input costs one count() job)."""
     import math
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
@@ -2793,48 +2751,14 @@ def q_ann_ivf_topk(spark, sf_dir, n_cells: int | None = None,
     if n_cells is None:
         n_cells = ivf_n_cells(n)
     step = max(1, math.ceil(n / n_cells))
-    cents = (emb.filter(F.col("vec_id") % step == 0)
-             .select(F.col("vec_id").alias("c_id"),
-                     F.col("embedding").alias("c_emb"),
-                     _norm_expr(F.col("embedding")).alias("c_norm")))
-    ev = emb.select("vec_id", "embedding",
-                    _norm_expr(F.col("embedding")).alias("v_norm"))
-    for _ in range(kmeans_iters):
-        sim_i = F.round(_dot_expr(F.col("embedding"), F.col("c_emb")) /
-                        (F.col("v_norm") * F.col("c_norm")), 6)
-        asg = (ev.crossJoin(F.broadcast(cents))
-               .select("vec_id", "embedding",
-                       F.col("c_id"),
-                       F.struct(sim_i.alias("s"),
-                                (-F.col("c_id")).alias("nc")).alias("o"))
-               .groupBy("vec_id")
-               .agg(F.max_by("c_id", F.col("o")).alias("cell"),
-                    F.first("embedding").alias("embedding")))
-        dims = (asg.select("cell", F.posexplode("embedding")
-                           .alias("d", "x"))
-                .groupBy("cell", "d")
-                .agg(F.avg(F.col("x").cast("double")).alias("m")))
-        cents = (dims.groupBy("cell")
-                 .agg(F.transform(
-                     F.array_sort(F.collect_list(F.struct("d", "m"))),
-                     lambda s: s["m"]).alias("c_emb"))
-                 .select(F.col("cell").alias("c_id"), "c_emb",
-                         _norm_expr(F.col("c_emb")).alias("c_norm")))
-    if kmeans_iters == 0:
-        # round 8: assignment sims from the _np_cent_sims kernel (raw
-        # division in the kernel, 6dp round here -- bit-identical), the
-        # pair frame materialized once for its two consumers (cells +
-        # probes)
-        c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
-        pairs = (_np_cent_sims(emb, c_ids, c_mat)
-                 .select("vec_id", "c_id",
-                         F.round(F.col("raw"), 6).alias("sim_c"))
-                 .localCheckpoint(eager=True))
-    else:
-        sim_c = F.round(_dot_expr(F.col("embedding"), F.col("c_emb")) /
-                        (F.col("v_norm") * F.col("c_norm")), 6)
-        pairs = (ev.crossJoin(F.broadcast(cents))
-                 .select("vec_id", "c_id", sim_c.alias("sim_c")))
+    # round 8: assignment sims from the _np_cent_sims kernel (raw division
+    # in the kernel, 6dp round here -- bit-identical), the pair frame
+    # materialized once for its two consumers (cells + probes)
+    c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
+    pairs = (_np_cent_sims(emb, c_ids, c_mat)
+             .select("vec_id", "c_id",
+                     F.round(F.col("raw"), 6).alias("sim_c"))
+             .localCheckpoint(eager=True))
     # nearest centroid via max(struct(sim, -c_id)): partial agg (map-side
     # combine), deterministic tie-break to the smallest centroid id
     cells = (pairs.groupBy("vec_id")
@@ -2983,7 +2907,7 @@ def q_neardup_clusters(spark, sf_dir, band_bits: int | None = None):
     component, survivor = the cluster representative.  The DuckDB oracle
     replays it with a recursive transitive-closure CTE over the same
     md5-sign-matrix LSH pairs."""
-    pairs = _embedding_near_pairs(spark, sf_dir, band_bits, MAX_BUCKET) \
+    pairs = _embedding_near_pairs(spark, sf_dir, band_bits) \
         .select("a_id", "b_id")
     return (connected_components(pairs).select(
         F.col("id").alias("vec_id"), F.col("label").alias("cluster"),
@@ -3385,9 +3309,8 @@ FROM shares ORDER BY lang
 # corpus per ingest; the index's content hashes and MinHash signatures are
 # computed once and stored, and each new batch joins against them)
 
-def incremental_dedup(index_docs, batch_docs,
-                      max_bucket: int | None = MAX_BUCKET,
-                      i_hash=None, b_hash=None, i_sigs=None, b_sigs=None):
+def incremental_dedup(index_docs, batch_docs, i_hash=None, b_hash=None,
+                      i_sigs=None, b_sigs=None):
     """Classify every BATCH document against the INDEX corpus:
     ``exact_dup`` (content hash already in the index), ``near_dup``
     (shares a MinHash band bucket with an index doc and estimated
@@ -3403,7 +3326,7 @@ def incremental_dedup(index_docs, batch_docs,
     signatures / bands are a PERSISTED table (computed once per corpus,
     pre-capped per bucket); here they are derived from index_docs so the
     gate is self-contained -- the derivation cost is the one-time index
-    build, not the per-ingest cost.  max_bucket bounds hot buckets on
+    build, not the per-ingest cost.  MAX_BUCKET bounds hot buckets on
     the index side (same guard as q_minhash_est_pairs); the persisted
     index would store bands already capped.
 
@@ -3431,7 +3354,7 @@ def incremental_dedup(index_docs, batch_docs,
     if b_sigs is None:
         b_sigs = _minhash_sigs(batch_docs).localCheckpoint()
     i_bands = _cap_buckets(_minhash_banded(i_sigs), ["band", "bucket"],
-                           "doc_id", max_bucket)
+                           "doc_id")
     b_bands = _minhash_banded(b_sigs)
     cand = (i_bands.withColumnRenamed("doc_id", "i_id")
             .join(F.broadcast(b_bands.withColumnRenamed("doc_id", "b_id")),
@@ -3587,7 +3510,7 @@ def train_quality_classifier(feats, iters: int):
     return scored, w
 
 
-def q_quality_classifier(spark, sf_dir, iters: int = QC_ITERS):
+def q_quality_classifier(spark, sf_dir):
     """Train a CCNet/fastText-style quality classifier INSIDE the engine
     and score every document.  The gate's seed label is the
     deterministic length rule ``n_words >= 50`` -- learnable from the
@@ -3601,7 +3524,7 @@ def q_quality_classifier(spark, sf_dir, iters: int = QC_ITERS):
     Wikipedia seed; learning on a genuinely separable text signal is
     additionally pinned by tests/test_quality_classifier.py.
 
-    Scale shape: 1 + iters full scans with partial agg, driver state =
+    Scale shape: 1 + QC_ITERS full scans with partial agg, driver state =
     7 floats -- at 100 TB you'd train on a 0.1% q_corpus_sample (the
     sampler is map-only) and score the full corpus once, which is
     exactly how the production filters are fit.  The DuckDB oracle
@@ -3611,7 +3534,7 @@ def q_quality_classifier(spark, sf_dir, iters: int = QC_ITERS):
     words = F.split(F.trim(F.col("text")), r"\s+")
     feats = _quality_features(_t(spark, sf_dir, "documents"),
                               F.size(words) >= 50)
-    scored, _w = train_quality_classifier(feats, iters)
+    scored, _w = train_quality_classifier(feats, QC_ITERS)
     return scored
 
 
@@ -3679,20 +3602,19 @@ ORACLE_QUALITY_CLASSIFIER = _quality_classifier_oracle_sql()
 # loop over the bounded word table -- the sentencepiece / HF-tokenizers
 # trainer architecture (corpus scan -> word counter -> in-memory merges)
 
-def q_bpe_merges(spark, sf_dir, n_merges: int = BPE_MERGES,
-                 top_words: int = BPE_TOP_WORDS):
-    """Learn the first n_merges BPE merges from the corpus: (step, left,
+def q_bpe_merges(spark, sf_dir):
+    """Learn the first BPE_MERGES BPE merges from the corpus: (step, left,
     right, merged, pair_count).
 
     Architecture (and scale shape): the ONLY corpus-sized work is the
     word-count aggregation -- explode words, partial-agg count, shuffle
     carries (word, count) for DISTINCT words only -- followed by a
     deterministic top-K cut (count DESC, word ASC).  The merge loop then
-    runs driver-side over that bounded word table (top_words rows; the
+    runs driver-side over that bounded word table (BPE_TOP_WORDS rows; the
     HF/sentencepiece trainers do exactly this: BPE's statistics are a
     function of the word counter, not of the corpus), so each merge step
     is O(K * avg_word_len) driver work with zero further Spark jobs.
-    At 100 TB you raise top_words to ~10^6 and nothing else changes.
+    At 100 TB you raise BPE_TOP_WORDS to ~10^6 and nothing else changes.
 
     Semantics: symbols start as characters + a terminal '</w>'; the best
     pair maximizes summed within-word occurrence count (overlapping
@@ -3707,30 +3629,30 @@ def q_bpe_merges(spark, sf_dir, n_merges: int = BPE_MERGES,
     canonical greedy left-to-right BPE application ('aaa' merges once,
     'x y x y' merges both).  Both passes are identical in Python and in
     the oracle's nested REPLACE, pinned by the cross-engine gate."""
-    out = _bpe_learn(_bpe_word_counts(spark, sf_dir, top_words), n_merges)
+    out = _bpe_learn(_bpe_word_counts(spark, sf_dir))
     return spark.createDataFrame(
         out, "step int, pair_left string, pair_right string, "
              "merged string, pair_count bigint")
 
 
-def _bpe_word_counts(spark, sf_dir, top_words: int):
+def _bpe_word_counts(spark, sf_dir):
     docs = _t(spark, sf_dir, "documents")
     return (docs.select(F.explode(
             F.split(F.trim(F.col("text")), r"\s+")).alias("word"))
             .filter(F.col("word") != "")
             .groupBy("word").count()
             .orderBy(F.col("count").desc(), F.col("word"))
-            .limit(top_words)
+            .limit(BPE_TOP_WORDS)
             .collect())
 
 
-def _bpe_learn(wc_rows, n_merges: int):
+def _bpe_learn(wc_rows):
     """The driver-side merge loop over the bounded word table; returns
     [(step, left, right, merged, pair_count), ...]."""
     words = [(" " + " ".join(list(r["word"]) + ["</w>"]) + " ", r["count"])
              for r in wc_rows]
     out = []
-    for step in range(1, n_merges + 1):
+    for step in range(1, BPE_MERGES + 1):
         counts: dict = {}
         for sym, n in words:
             ss = sym.split()
@@ -3799,22 +3721,20 @@ FROM ({un}) ORDER BY step
 ORACLE_BPE_MERGES = _bpe_oracle_sql()
 
 
-def q_bpe_tokenize(spark, sf_dir, n_merges: int = BPE_MERGES,
-                   top_words: int = BPE_TOP_WORDS):
+def q_bpe_tokenize(spark, sf_dir):
     """Apply the learned BPE merges to the corpus: per document, the
-    whitespace word count and the BPE token count after n_merges merges
+    whitespace word count and the BPE token count after BPE_MERGES merges
     -- the bridge from q_bpe_merges to q_pack_sequences' token budgets.
 
     Scale shape: training reuses the bounded word-counter collect
     (q_bpe_merges); APPLICATION is pure whole-stage codegen -- each
     word becomes its padded symbol string (one regexp_replace) and the
-    merge table is compiled into a chain of n_merges literal REPLACEs,
+    merge table is compiled into a chain of BPE_MERGES literal REPLACEs,
     so tokenization runs JVM-side inside the scan partition with no
     Python, no HOF lambdas, no join (the merge table rides in the plan
     as literals, the degenerate broadcast).  The only exchange is the
     per-doc partial-sum aggregation."""
-    merges = _bpe_learn(_bpe_word_counts(spark, sf_dir, top_words),
-                        n_merges)
+    merges = _bpe_learn(_bpe_word_counts(spark, sf_dir))
     docs = _t(spark, sf_dir, "documents")
     exploded = (docs.select(
         "doc_id",
@@ -3872,9 +3792,9 @@ FROM dtok GROUP BY doc_id ORDER BY doc_id
 ORACLE_BPE_TOKENIZE = _bpe_tokenize_oracle_sql()
 
 
-def q_lm_perplexity(spark, sf_dir, top_vocab: int = LM_TOP_VOCAB):
+def q_lm_perplexity(spark, sf_dir):
     """CCNet-style language-model quality signal: train an add-LM_K-smoothed
-    bigram LM on the corpus (top_vocab words + <unk>, chr(1) start
+    bigram LM on the corpus (LM_TOP_VOCAB words + <unk>, chr(1) start
     symbol) and score every document's per-token negative log2
     likelihood and perplexity.  Low-ppl docs read like the corpus;
     high-ppl docs are boilerplate/gibberish -- the standard
@@ -3883,7 +3803,7 @@ def q_lm_perplexity(spark, sf_dir, top_vocab: int = LM_TOP_VOCAB):
     Scale shape: bigram pairs come from zipping the split-word array
     against its shifted self (map-side, NO lead/lag window exchange --
     the shuffle-free shingle idiom); vocab mapping is two BROADCAST
-    joins against the bounded top_vocab table; the trained model
+    joins against the bounded LM_TOP_VOCAB table; the trained model
     (bigram/unigram count tables, <= (V+2)^2 rows by construction) is
     BROADCAST back for scoring, so the only wide exchanges are the
     count partial-aggs on hash-sized keys and the final per-doc agg --
@@ -3916,7 +3836,7 @@ def q_lm_perplexity(spark, sf_dir, top_vocab: int = LM_TOP_VOCAB):
              .localCheckpoint(eager=True))
     vocab = (pairs.groupBy(F.col("c").alias("word"))
              .agg(F.count(F.lit(1)).alias("n"))
-             .orderBy(F.col("n").desc(), "word").limit(top_vocab)
+             .orderBy(F.col("n").desc(), "word").limit(LM_TOP_VOCAB)
              .select("word")
              .localCheckpoint(eager=True))
     m = (pairs
@@ -4052,11 +3972,11 @@ def _pos_ngrams(docs, n: int):
             .select("doc_id", "pos", gram.alias("gram")))
 
 
-def q_repeated_spans(spark, sf_dir, w: int = SPAN_W):
+def q_repeated_spans(spark, sf_dir):
     """Exact-substring dedup primitive (the suffix-array-dedup signal of
     Lee et al. 2022, 'Deduplicating Training Data Makes Language Models
     Better', arXiv:2107.06499, re-expressed relationally): every
-    w-word window that occurs in >= SPAN_MIN_DOCS DISTINCT documents, as
+    SPAN_W-word window that occurs in >= SPAN_MIN_DOCS DISTINCT documents, as
     (doc_id, pos, n_docs) rows -- the span inventory a
     remove-duplicate-substrings pass consumes.
 
@@ -4064,12 +3984,12 @@ def q_repeated_spans(spark, sf_dir, w: int = SPAN_W):
     projection (_pos_ngrams); each window is keyed by the PORTABLE
     64-bit hash pair (h_hi, h_lo) of its text, so the count exchange
     and the match join carry (hash, doc_id, pos) only -- window TEXT
-    never shuffles (at w=50 a text-keyed groupBy would shuffle ~50x
+    never shuffles (at 50-word windows a text-keyed groupBy would shuffle ~50x
     the corpus).  The duplicated-gram table is corpus-sized in the
     worst case, so the match join is a plain hash join on the key pair,
     not a broadcast."""
     docs = _t(spark, sf_dir, "documents")
-    g = _pos_ngrams(docs, w)
+    g = _pos_ngrams(docs, SPAN_W)
     # round 8: the window key is OUTPUT-INVISIBLE (only gram equality
     # matters, and equal grams hash equal under any function), so the
     # md5 + hex-substring + conv chain -- measured ~20% of this query's
@@ -4090,11 +4010,11 @@ def q_repeated_spans(spark, sf_dir, w: int = SPAN_W):
             .orderBy("doc_id", "pos"))
 
 
-def _merged_islands(spans, w: int):
-    """Gaps-and-islands merge of [pos, pos+w) windows into disjoint
+def _merged_islands(spans):
+    """Gaps-and-islands merge of [pos, pos+SPAN_W) windows into disjoint
     intervals: (doc_id, s, e).  Windows over the spans-only ids frame,
     partitioned per doc -- no global sort, no text."""
-    end = F.col("pos") + w
+    end = F.col("pos") + SPAN_W
     win = Window.partitionBy("doc_id").orderBy("pos")
     prev_max = F.max(end).over(
         win.rowsBetween(Window.unboundedPreceding, -1))
@@ -4109,9 +4029,9 @@ def _merged_islands(spans, w: int):
             .select("doc_id", "s", "e"))
 
 
-def q_dup_coverage(spark, sf_dir, w: int = SPAN_W):
+def q_dup_coverage(spark, sf_dir):
     """Per-document duplicate coverage: how many of a doc's tokens sit
-    inside at least one cross-document repeated w-word window
+    inside at least one cross-document repeated SPAN_W-word window
     (q_repeated_spans), as (doc_id, n_tokens, dup_tokens, dup_frac) --
     the doc-level filter signal ('drop docs that are >X% duplicated
     text').
@@ -4124,8 +4044,8 @@ def q_dup_coverage(spark, sf_dir, w: int = SPAN_W):
     the stats frame LEFT-joins spans stats onto the map-only token
     counts -- text never enters any exchange."""
     docs = _t(spark, sf_dir, "documents")
-    spans = q_repeated_spans(spark, sf_dir, w=w)
-    cov = (_merged_islands(spans, w)
+    spans = q_repeated_spans(spark, sf_dir)
+    cov = (_merged_islands(spans)
            .groupBy("doc_id")
            .agg(F.sum(F.col("e") - F.col("s")).cast("int")
                 .alias("dup_tokens")))
@@ -4217,11 +4137,11 @@ ORDER BY t.doc_id
 """
 
 
-def q_repeated_span_clean(spark, sf_dir, w: int = SPAN_W):
+def q_repeated_span_clean(spark, sf_dir):
     """Exact-substring REMOVAL (the transform of Lee et al. 2022's
     dedup: arXiv:2107.06499 §3 removes all but one occurrence of every
     duplicated >=50-token substring): re-emit each document with the
-    tokens of every cross-doc duplicated w-window removed, keeping the
+    tokens of every cross-doc duplicated SPAN_W-window removed, keeping the
     corpus-wide FIRST occurrence (lexicographic min (doc_id, pos) per
     window hash, the q_paragraph_dedup_clean ownership rule).
 
@@ -4237,7 +4157,7 @@ def q_repeated_span_clean(spark, sf_dir, w: int = SPAN_W):
     The index-filter lambda is the HOF slow path, but it evaluates only
     on rows whose interval list is non-null (the duplicated fraction)."""
     docs = _t(spark, sf_dir, "documents")
-    g = _pos_ngrams(docs, w)
+    g = _pos_ngrams(docs, SPAN_W)
     # round 8 (guide §2.4): wk feeds both the ownership agg and the loser
     # match join; un-materialized, the positional n-gram explode + window
     # hashing ran twice (6 document scans in the before plan).  The frame
@@ -4258,7 +4178,7 @@ def q_repeated_span_clean(spark, sf_dir, w: int = SPAN_W):
               .filter(~((F.col("doc_id") == F.col("own.doc_id"))
                         & (F.col("pos") == F.col("own.pos"))))
               .select("doc_id", "pos"))
-    intervals = (_merged_islands(losers, w)
+    intervals = (_merged_islands(losers)
                  .groupBy("doc_id")
                  .agg(F.flatten(F.collect_list(
                       F.sequence(F.col("s"), F.col("e") - 1))).alias("ridx"),
@@ -4529,7 +4449,7 @@ FROM k ORDER BY doc_id
 """
 
 
-def q_quality_budget_select(spark, sf_dir, token_budget: int = QUALITY_BUDGET):
+def q_quality_budget_select(spark, sf_dir):
     """Token-budget corpus selection -- quality-first curation: keep the
     highest-quality documents (score = distinct-word count, a lexical-
     diversity proxy; any integral score plugs in) until the token budget
@@ -4560,8 +4480,8 @@ def q_quality_budget_select(spark, sf_dir, token_budget: int = QUALITY_BUDGET):
         key=lambda x: -x[0])
     cum, boundary, rem = 0, None, 0
     for s_, t_ in levels:
-        if cum + t_ >= token_budget:
-            boundary, rem = s_, token_budget - cum
+        if cum + t_ >= QUALITY_BUDGET:
+            boundary, rem = s_, QUALITY_BUDGET - cum
             break
         cum += t_
     if boundary is None:  # budget >= whole corpus
@@ -4868,7 +4788,7 @@ FROM s GROUP BY lang ORDER BY lang
 # --- BM25 retrieval (round 7) ------------------------------------------------
 
 # result depth and the Okapi k1/b saturation and length-normalization
-def q_bm25_topk(spark, sf_dir, terms: tuple = BM25_TERMS):
+def q_bm25_topk(spark, sf_dir):
     """Okapi BM25 top-k retrieval for a fixed query -- the sparse-retrieval
     primitive behind corpus search and RAG candidate generation (Robertson
     & Zaragoza 2009; idf in the Lucene ln(1 + (N-df+.5)/(df+.5)) form so
@@ -4882,6 +4802,7 @@ def q_bm25_topk(spark, sf_dir, terms: tuple = BM25_TERMS):
     the only exchange bigger than one row is the final global top-k, which
     TakeOrderedAndProject keeps at BM25_K rows per partition.  Scores rounded
     to 6dp for cross-engine float compare (the lm_perplexity precedent)."""
+    terms = BM25_TERMS
     docs = _t(spark, sf_dir, "documents")
     words = F.filter(F.split(F.trim("text"), r"\s+"),
                      lambda x: x != F.lit(""))
@@ -5178,7 +5099,7 @@ def q_pq_encode(spark, sf_dir):
     return codes.localCheckpoint(eager=True).orderBy("vec_id")
 
 
-def q_ann_pq_topk(spark, sf_dir, k: int = TOP_K, rerank: int | None = None):
+def q_ann_pq_topk(spark, sf_dir):
     """ADC top-k search over PQ codes (Jegou et al. 2011 §III-B,
     asymmetric distance computation): the query stays uncompressed; each
     corpus vector's approximate L2 distance is the sum of PQ_M table
@@ -5195,23 +5116,17 @@ def q_ann_pq_topk(spark, sf_dir, k: int = TOP_K, rerank: int | None = None):
     subspace distance is pre-rounded to 6dp and summed in fixed j-order
     so the DuckDB oracle hashes exactly.
 
-    rerank=R is the production IVFADC+R shape (Jegou §III-C): ADC
-    shortlist of R candidates per query, then exact L2 over the R ids
-    only (the shortlist -- q x R ids -- broadcasts back against the
-    float table; the full corpus is still scanned ONLY in compressed
-    form).  Recall@k then equals the shortlist's containment of the
-    exact top-k, monotonically >= plain ADC (asserted in
-    tests/test_lsh_scale.py).  HONEST LIMIT, measured on the synthetic
-    corpus: these embeddings are i.i.d.-random 64-dim vectors -- PQ's
-    adversarial case (no low-intrinsic-dimension manifold), so
-    containment at N=500 is 0.20@R=5 / 0.73@R=100, and per-subspace
-    Lloyd refinement of the codebook does NOT improve it (swept 0-4
-    iters: flat).  On real embedding corpora the manifold is what PQ
-    exploits; the operator shape is unchanged."""
+    HONEST LIMIT, measured on the synthetic corpus: these embeddings are
+    i.i.d.-random 64-dim vectors -- PQ's adversarial case (no
+    low-intrinsic-dimension manifold), so recall@5 against the exact L2
+    top-5 at N=500 is 0.20, and per-subspace Lloyd refinement of the
+    codebook does NOT improve it (swept 0-4 iters: flat).  On real
+    embedding corpora the manifold is what PQ exploits; the operator
+    shape is unchanged."""
     local = _local_emb_table(sf_dir)
     codes, _, book = _pq_codes(spark, sf_dir, local)
     emb = _t(spark, sf_dir, "embeddings")
-    return _adc_topk(codes, book, emb, local, k, rerank)
+    return _adc_topk(codes, book, emb, local)
 
 
 def _java_round(x: float) -> float:
@@ -5256,10 +5171,10 @@ def _round6_micro(x):
     return out
 
 
-def _adc_topk(codes, book, emb, local, k: int, rerank: int | None):
+def _adc_topk(codes, book, emb, local):
     """ADC scoring core shared by q_ann_pq_topk (inline encode) and
     q_ann_pq_index_topk (persisted index): per-query LUTs, compressed-
-    domain scan, top-k window, optional exact-rerank tail.  book is the
+    domain scan, top-k window.  book is the
     codebook as (centroid ids, float64 matrix); the query side is cut
     from `local` (see _emb_subset), which the persisted-index path leaves
     None, keeping its query collect.
@@ -5276,9 +5191,6 @@ def _adc_topk(codes, book, emb, local, k: int, rerank: int | None):
     import pyarrow as pa
     m = PQ_M
     d_sub = _EMB_DIM // m
-    qs = (emb.filter(F.col("vec_id") < N_QUERIES)
-          .select(F.col("vec_id").alias("q_id"),
-                  F.col("embedding").alias("q_emb")))
     q_ids, q_mat = _emb_subset(emb, local, lambda v: v < N_QUERIES)
     c_ids, c_mat = np.asarray(book[0]), book[1]
     nc, nq = len(c_ids), len(q_ids)
@@ -5321,19 +5233,7 @@ def _adc_topk(codes, book, emb, local, k: int, rerank: int | None):
               .filter(F.col("vec_id") != F.col("q_id"))
               .select("q_id", "vec_id",
                       F.round(F.col("adist_raw"), 6).alias("adist")))
-    if rerank is None:
-        return _top_k(scored, "adist", k)
-    w = Window.partitionBy("q_id").orderBy("adist", "vec_id")
-    short = (scored.withColumn("rnk", F.row_number().over(w))
-             .filter(F.col("rnk") <= rerank).select("q_id", "vec_id"))
-    cand = (emb.join(F.broadcast(short), "vec_id")
-            .join(F.broadcast(qs), "q_id"))
-    exact = F.round(
-        _dot_expr(F.col("q_emb"), F.col("q_emb"))
-        - 2 * _dot_expr(F.col("q_emb"), F.col("embedding"))
-        + _dot_expr(F.col("embedding"), F.col("embedding")), 6)
-    return _top_k(cand.select("q_id", "vec_id", exact.alias("adist")),
-                  "adist", k)
+    return _top_k(scored, "adist")
 
 
 def build_pq_index(spark, sf_dir, out_path: str):
@@ -5350,14 +5250,11 @@ def build_pq_index(spark, sf_dir, out_path: str):
     return out_path
 
 
-def q_ann_pq_index_topk(spark, index_path: str, sf_dir,
-                        rerank: int | None = None):
+def q_ann_pq_index_topk(spark, index_path: str, sf_dir):
     """ADC search over a PERSISTED PQ index (build_pq_index output):
     identical results to the inline q_ann_pq_topk by construction
-    at k=TOP_K (asserted in tests/test_lsh_scale.py) -- the search-side
-    plan never
-    touches the raw embeddings except for the query rows themselves
-    (and the rerank shortlist if enabled)."""
+    (asserted in tests/test_lsh_scale.py) -- the search-side plan never
+    touches the raw embeddings except for the query rows themselves."""
     import numpy as np
     codes = spark.read.parquet(f"{index_path}/codes")
     crows = sorted(spark.read.parquet(f"{index_path}/codebook").collect(),
@@ -5366,7 +5263,7 @@ def q_ann_pq_index_topk(spark, index_path: str, sf_dir,
             np.asarray([list(r.c_emb) for r in crows],
                        dtype=np.float32).astype(np.float64))
     emb = _t(spark, sf_dir, "embeddings")
-    return _adc_topk(codes, book, emb, None, TOP_K, rerank)
+    return _adc_topk(codes, book, emb, None)
 
 
 def _pq_dist_sql(j: int, x: str, c: str) -> str:
@@ -6108,10 +6005,10 @@ FROM documents ORDER BY host, url
 
 # --- fuzzy decontamination (round 7) ------------------------------------------
 
-def q_decontaminate_fuzzy(spark, sf_dir,
-                          threshold: float = EST_JACCARD_MIN):
+def q_decontaminate_fuzzy(spark, sf_dir):
     """Fuzzy train/eval decontamination: flag every TRAIN document whose
-    MinHash-estimated Jaccard vs ANY eval document reaches threshold --
+    MinHash-estimated Jaccard vs ANY eval document reaches
+    EST_JACCARD_MIN --
     the near-duplicate complement to q_decontaminate's exact-8-gram
     scrub (modern pipelines run both: exact n-grams catch verbatim
     leaks, fuzzy catches paraphrased/reformatted copies of benchmark
@@ -6139,7 +6036,7 @@ def q_decontaminate_fuzzy(spark, sf_dir,
     return (cand.join(_sig_side(tr_sigs, "doc_id", "a"), "doc_id")
             .join(F.broadcast(sb), "eval_id")
             .select("doc_id", "eval_id", _est_jaccard().alias("est_jaccard"))
-            .filter(F.col("est_jaccard") >= threshold)
+            .filter(F.col("est_jaccard") >= EST_JACCARD_MIN)
             .groupBy("doc_id")
             .agg(F.count(F.lit(1)).cast("int").alias("n_eval_matches"),
                  F.max("est_jaccard").alias("max_est_jaccard"))

@@ -66,17 +66,14 @@ def warc_records_to_pages(df: DataFrame,
     broken records keep their row with null url/html and the error
     marker, so ingest accounting never silently drops records."""
     import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
 
     from ..warc import parse_warc_record
+    from .pipeline import _stage_schema
 
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    schema = ", ".join(
-        [f"{n} {t}" for n, t in df.dtypes if n in id_cols]
-        + ["url string", "warc_ts timestamp", "html binary",
-           "content_type string", "http_status int", "warc_error string"])
-    arrow_schema = to_arrow_schema(StructType.fromDDL(schema))
+    ids, schema, arrow_schema = _stage_schema(
+        df, id_cols, "url string, warc_ts timestamp, html binary, "
+                     "content_type string, http_status int, "
+                     "warc_error string")
 
     def fn(batches):
         import datetime

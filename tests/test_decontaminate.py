@@ -52,7 +52,7 @@ def test_decontaminate_clean_complement(spark):
     assert not (clean_ids & bad_ids)
 
 
-def test_fuzzy_catches_what_exact_misses(spark, tmp_path):
+def test_fuzzy_catches_what_exact_misses(spark, tmp_path, monkeypatch):
     """A train doc that paraphrases an eval doc -- every 8-gram broken by
     a word swap, but most trigram shingles intact -- must be INVISIBLE
     to the exact scrub and FLAGGED by the fuzzy one; an unrelated train
@@ -81,9 +81,9 @@ def test_fuzzy_catches_what_exact_misses(spark, tmp_path):
     exact = {r["doc_id"]
              for r in R.q_decontaminate(spark, str(tmp_path)).collect()}
     assert 1 not in exact, "8-gram scrub should miss the paraphrase"
+    monkeypatch.setattr(R, "EST_JACCARD_MIN", 0.3)
     fuzzy = {r["doc_id"]: r for r in
-             R.q_decontaminate_fuzzy(spark, str(tmp_path),
-                                     threshold=0.3).collect()}
+             R.q_decontaminate_fuzzy(spark, str(tmp_path)).collect()}
     assert 1 in fuzzy, "fuzzy scrub must flag the paraphrase"
     assert 2 not in fuzzy
     assert fuzzy[1]["max_est_jaccard"] >= 0.3

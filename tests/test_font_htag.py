@@ -9,11 +9,11 @@ import random
 
 from closure_html_spark.dtd import load_dtd
 from closure_html_spark.parser.pda import (
+    _sgml_parse_ref,
     check_saneness,
     parse_html,
     post_mortem_fix_font,
     post_mortem_fix_top_level,
-    sgml_parse,
 )
 from closure_html_spark.parser.tokenizer import Tokenizer
 from closure_html_spark.serialize import serialize_doc
@@ -75,8 +75,8 @@ def test_differential_and_saneness_fuzz():
         fx = "".join(random.choice(chars)
                      for _ in range(random.randrange(1, 180)))
         fast = parse_html(DTD, fx, font_htag=True)
-        ref = sgml_parse(DTD, fx, tokenizer=Tokenizer(fx, DTD.entities),
-                         font_htag=True)
+        ref = _sgml_parse_ref(DTD, fx, Tokenizer(fx, DTD.entities),
+                              font_htag=True)
         post_mortem_fix_font(ref, DTD)
         post_mortem_fix_top_level(ref)
         assert serialize_doc(fast, DTD) == serialize_doc(ref, DTD), fx

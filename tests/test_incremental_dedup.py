@@ -63,17 +63,21 @@ def test_incremental_plan_index_never_smj(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-def test_index_hot_bucket_cap(spark):
+def test_index_hot_bucket_cap(spark, monkeypatch):
     """Index-side twin of test_minhash_hot_bucket_guard: 400 byte-identical
-    index docs share every band bucket, so max_bucket=30 trims each bucket
-    to its 30 lowest doc_ids.  The near-identical batch doc still meets
-    the kept members in the band it shares with them, so it is near_dup
-    with the cap and without it."""
+    index docs share every band bucket, so a MAX_BUCKET of 30 trims each
+    bucket to its 30 lowest doc_ids.  The near-identical batch doc still
+    meets the kept members in the band it shares with them, so it is
+    near_dup with the cap and without it (the default MAX_BUCKET is above
+    400)."""
     index = _docs(spark, [(i, BASE) for i in range(400)])
     batch = _docs(spark, [(1000, BASE + " extra")])
     bands = R._minhash_banded(R._minhash_sigs(index))
-    capped = R._cap_buckets(bands, ["band", "bucket"], "doc_id", 30)
-    assert bands.count() == 4 * 400 and capped.count() == 4 * 30
-    for cap in (30, None):
-        [row] = R.incremental_dedup(index, batch, max_bucket=cap).collect()
+    assert R.MAX_BUCKET > 400
+    for cap in (None, 30):
+        if cap is not None:
+            monkeypatch.setattr(R, "MAX_BUCKET", cap)
+        [row] = R.incremental_dedup(index, batch).collect()
         assert row.status == "near_dup", cap
+    capped = R._cap_buckets(bands, ["band", "bucket"], "doc_id")
+    assert bands.count() == 4 * 400 and capped.count() == 4 * 30

@@ -9,7 +9,7 @@ from closure_html_spark.spark import relational as R
 SF = "/root/testdata/sf0.001"
 
 
-def test_known_corpus_scores(spark, tmp_path):
+def test_known_corpus_scores(spark, tmp_path, monkeypatch):
     """Two identical docs + one outlier: the repeated doc's bigrams all
     have count 2 so its avg NLL (and ppl) must be strictly lower than
     the outlier's, and every n_bigrams equals the doc's word count
@@ -17,18 +17,20 @@ def test_known_corpus_scores(spark, tmp_path):
     texts = ["the cat sat", "the cat sat", "zq xv bn"]
     p = str(tmp_path / "documents.parquet")
     pd.DataFrame({"doc_id": range(3), "text": texts}).to_parquet(p)
+    monkeypatch.setattr(R, "LM_TOP_VOCAB", 50)
     rows = {r.doc_id: r for r in
-            R.q_lm_perplexity(spark, str(tmp_path), top_vocab=50).collect()}
+            R.q_lm_perplexity(spark, str(tmp_path)).collect()}
     assert [rows[i].n_bigrams for i in range(3)] == [3, 3, 3]
     assert rows[0].avg_nll == rows[1].avg_nll
     assert rows[0].ppl < rows[2].ppl
 
 
-def test_empty_doc_drops(spark, tmp_path):
+def test_empty_doc_drops(spark, tmp_path, monkeypatch):
     """A whitespace-only doc has no bigrams and drops from the output."""
     p = str(tmp_path / "documents.parquet")
     pd.DataFrame({"doc_id": [0, 1], "text": ["a b", "   "]}).to_parquet(p)
-    got = R.q_lm_perplexity(spark, str(tmp_path), top_vocab=50).collect()
+    monkeypatch.setattr(R, "LM_TOP_VOCAB", 50)
+    got = R.q_lm_perplexity(spark, str(tmp_path)).collect()
     assert [r.doc_id for r in got] == [0]
 
 

@@ -12,7 +12,7 @@ from closure_html_spark.spark import multimodal as M
 SF = "/root/testdata/sf0.001"
 
 
-def test_resize_identity_at_native_dims(spark):
+def test_resize_identity_at_native_dims(spark, monkeypatch):
     """Resizing to the native (meta.width, meta.height) is the identity
     index map: resized_sha equals the sha of the tiled source matrix and
     mean_px its exact mean.  Verified independently in numpy for the
@@ -21,9 +21,10 @@ def test_resize_identity_at_native_dims(spark):
     rows = media.collect()
     for r in rows:
         w, h = r.meta.width, r.meta.height
+        monkeypatch.setattr(M, "RESIZE_W", w)
+        monkeypatch.setattr(M, "RESIZE_H", h)
         got = M.resize_media(
-            media.filter(f"media_id = {r.media_id}"),
-            out_w=w, out_h=h).collect()[0]
+            media.filter(f"media_id = {r.media_id}")).collect()[0]
         px = M._fake_pixels(bytes(r.payload), w, h)
         assert got.resized_sha == hashlib.sha256(px.tobytes()).hexdigest()
         assert got.mean_px == pytest.approx(float(px.mean()))
@@ -39,12 +40,13 @@ def test_resize_known_tiny_case():
     assert rs.tolist() == [[0, 2], [8, 10]]
 
 
-def test_frame_sample_one_row_per_sampled_frame(spark):
+def test_frame_sample_one_row_per_sampled_frame(spark, monkeypatch):
     """Video rows explode to ceil(n_frames / k) output rows with the
     deterministic per-index digests; non-video rows contribute none."""
     media = M.media_from_documents(spark, SF)
     k = 5
-    got = M.frame_sample(media, every_k=k).toPandas()
+    monkeypatch.setattr(M, "FRAME_EVERY_K", k)
+    got = M.frame_sample(media).toPandas()
     vids = media.filter("mime = 'fake/video'").collect()
     expected = sum(math.ceil(r.meta.n_frames / k) for r in vids)
     assert len(got) == expected > 0
@@ -101,12 +103,15 @@ def test_real_codec_honestly_stubbed(spark):
         isinstance(ei.value, NotImplementedError)
 
 
-def test_media_phash_banding_exact_and_capped(spark):
+def test_media_phash_banding_exact_and_capped(spark, monkeypatch):
     """The banded hamming join must return EXACTLY the brute-force
     hamming<=1 pair set (pigeonhole: <=1 differing bit leaves one 4-bit
-    band identical), and max_bucket must bound in-bucket pair blowup
-    while keeping lowest-media_id members."""
+    band identical) under the default MAX_BUCKET, and a small MAX_BUCKET
+    must bound in-bucket pair blowup while keeping lowest-media_id
+    members."""
     import duckdb
+
+    from closure_html_spark.spark import relational as R
     from closure_html_spark.spark.multimodal import (
         q_media_phash_neardup, _media_phash_oracle_sql)
     SF = "/root/testdata/sf0.001"
@@ -130,20 +135,10 @@ WHERE bit_count(xor(a.ph, b.ph)) <= 1""").fetchall()))
     banded = {(r["id_a"], r["id_b"])
               for r in q_media_phash_neardup(spark, SF).collect()}
     assert banded == brute, (len(banded), len(brute))
-    capped = q_media_phash_neardup(spark, SF, max_bucket=5).collect()
+    monkeypatch.setattr(R, "MAX_BUCKET", 5)
+    capped = q_media_phash_neardup(spark, SF).collect()
     assert len(capped) < len(banded)
     # kept members must be the lowest media_ids of each bucket: every
     # capped pair must also be in the uncapped set
     assert {(r["id_a"], r["id_b"]) for r in capped} <= banded
 
-
-def test_media_phash_rejects_unsupported_radius(spark):
-    """The 2-band pigeonhole split is exact only for max_hamming <= 1;
-    a larger radius must refuse loudly instead of silently dropping
-    pairs that differ in both bands."""
-    import pytest
-
-    from closure_html_spark.spark.multimodal import q_media_phash_neardup
-    with pytest.raises(ValueError, match="max_hamming"):
-        q_media_phash_neardup(spark, "/root/testdata/sf0.001",
-                              max_hamming=2)

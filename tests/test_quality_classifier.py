@@ -44,11 +44,12 @@ def test_gate_predictions_not_constant(spark):
     assert acc >= base + 0.2, (acc, base)
 
 
-def test_gradient_pass_plan(spark):
+def test_gradient_pass_plan(spark, monkeypatch):
     """Each training pass is a partial aggregation to ONE row: no
     Python, no join, no window in the scored plan (the CROSS JOIN
     exists only in the DuckDB oracle's unrolled replay)."""
-    df = R.q_quality_classifier(spark, SF, iters=1)
+    monkeypatch.setattr(R, "QC_ITERS", 1)
+    df = R.q_quality_classifier(spark, SF)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted")
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -71,14 +71,16 @@ def test_pdf_length_is_byte_count(spark, tmp_path):
     assert len(m.group(2)) > len(m.group(2).decode("utf-8"))
 
 
-def test_quality_budget_select_edges(spark):
+def test_quality_budget_select_edges(spark, monkeypatch):
     """Budget >= corpus selects everything; tiny budget selects only the
     top stratum prefix; totals respect the budget boundary exactly."""
     from closure_html_spark.spark import relational as R
     SF = "/root/testdata/sf0.001"
-    allr = R.q_quality_budget_select(spark, SF, token_budget=10**9).collect()
+    monkeypatch.setattr(R, "QUALITY_BUDGET", 10**9)
+    allr = R.q_quality_budget_select(spark, SF).collect()
     assert all(r.selected for r in allr)
-    few = R.q_quality_budget_select(spark, SF, token_budget=500).collect()
+    monkeypatch.setattr(R, "QUALITY_BUDGET", 500)
+    few = R.q_quality_budget_select(spark, SF).collect()
     sel = [r for r in few if r.selected]
     tot = sum(r.n_tokens for r in sel)
     # selection stops at the first doc crossing the budget: under

@@ -10,35 +10,37 @@ from closure_html_spark.spark import relational as R
 SF = "/root/testdata/sf0.001"
 
 
-def test_known_spans_and_coverage(spark, tmp_path):
+def test_known_spans_and_coverage(spark, tmp_path, monkeypatch):
     """Docs 0 and 1 share the 4-word window 'a b c d' (doc 1 shifted by
     one leading word); doc 2 is disjoint.  Coverage must union the
     overlapping windows of a run, not double-count."""
     texts = ["a b c d e f", "x a b c d e", "p q r s t u"]
     p = str(tmp_path / "documents.parquet")
     pd.DataFrame({"doc_id": range(3), "text": texts}).to_parquet(p)
-    spans = R.q_repeated_spans(spark, str(tmp_path), w=4).collect()
+    monkeypatch.setattr(R, "SPAN_W", 4)
+    spans = R.q_repeated_spans(spark, str(tmp_path)).collect()
     # shared 4-grams: 'a b c d' (doc0 pos0 / doc1 pos1) and 'b c d e'
     # (doc0 pos1 / doc1 pos2)
     assert [(r.doc_id, r.pos, r.n_docs) for r in spans] == [
         (0, 0, 2), (0, 1, 2), (1, 1, 2), (1, 2, 2)]
     cov = {r.doc_id: (r.n_tokens, r.dup_tokens)
-           for r in R.q_dup_coverage(spark, str(tmp_path), w=4).collect()}
+           for r in R.q_dup_coverage(spark, str(tmp_path)).collect()}
     # doc0: windows [0,4)+[1,5) union = [0,5) = 5 tokens of 6
     # doc1: windows [1,5)+[2,6) union = [1,6) = 5 tokens of 6
     assert cov == {0: (6, 5), 1: (6, 5), 2: (6, 0)}
 
 
-def test_within_doc_repeat_not_flagged(spark, tmp_path):
+def test_within_doc_repeat_not_flagged(spark, tmp_path, monkeypatch):
     """A window repeated INSIDE one doc only (min_docs=2 distinct docs)
     must not be reported."""
     p = str(tmp_path / "documents.parquet")
     pd.DataFrame({"doc_id": [0, 1],
                   "text": ["a b c a b c", "z z z z"]}).to_parquet(p)
-    assert R.q_repeated_spans(spark, str(tmp_path), w=3).count() == 0
+    monkeypatch.setattr(R, "SPAN_W", 3)
+    assert R.q_repeated_spans(spark, str(tmp_path)).count() == 0
 
 
-def test_span_clean_ownership(spark, tmp_path):
+def test_span_clean_ownership(spark, tmp_path, monkeypatch):
     """Doc 0 owns the shared window (first occurrence) and keeps its
     text byte-identical; doc 1 loses the covered run; a fully-duplicated
     doc rewrites to the empty string."""
@@ -47,8 +49,9 @@ def test_span_clean_ownership(spark, tmp_path):
              "a b c d"]          # fully covered -> ''
     p = str(tmp_path / "documents.parquet")
     pd.DataFrame({"doc_id": range(3), "text": texts}).to_parquet(p)
+    monkeypatch.setattr(R, "SPAN_W", 4)
     rows = {r.doc_id: r for r in
-            R.q_repeated_span_clean(spark, str(tmp_path), w=4).collect()}
+            R.q_repeated_span_clean(spark, str(tmp_path)).collect()}
     assert (rows[0].n_removed, rows[0].clean_text) == (0, "a b c d e f")
     assert (rows[1].n_removed, rows[1].clean_text) == (5, "x")
     assert (rows[2].n_removed, rows[2].clean_text) == (4, "")
@@ -95,7 +98,7 @@ def _brute_force(texts, w):
 
 
 @pytest.mark.parametrize("seed", [1, 2, 3])
-def test_random_corpus_vs_brute_force(spark, tmp_path, seed):
+def test_random_corpus_vs_brute_force(spark, tmp_path, monkeypatch, seed):
     """Seeded random corpora over a 6-word vocabulary (dense window
     collisions) differentially checked against the brute-force
     reference -- spans, coverage, n_removed, and clean_text."""
@@ -107,15 +110,16 @@ def test_random_corpus_vs_brute_force(spark, tmp_path, seed):
     p = str(tmp_path / "documents.parquet")
     pd.DataFrame({"doc_id": range(30), "text": texts}).to_parquet(p)
     w = 3
+    monkeypatch.setattr(R, "SPAN_W", w)
     exp_spans, exp_cov, exp_rm, exp_clean = _brute_force(texts, w)
     got_spans = sorted((r.doc_id, r.pos, r.n_docs) for r in
-                       R.q_repeated_spans(spark, str(tmp_path), w=w).collect())
+                       R.q_repeated_spans(spark, str(tmp_path)).collect())
     assert got_spans == exp_spans
     cov = {r.doc_id: r.dup_tokens for r in
-           R.q_dup_coverage(spark, str(tmp_path), w=w).collect()}
+           R.q_dup_coverage(spark, str(tmp_path)).collect()}
     assert cov == exp_cov
     cl = {r.doc_id: (r.n_removed, r.clean_text) for r in
-          R.q_repeated_span_clean(spark, str(tmp_path), w=w).collect()}
+          R.q_repeated_span_clean(spark, str(tmp_path)).collect()}
     assert cl == {d: (exp_rm[d], exp_clean[d]) for d in range(30)}
 
 

@@ -110,7 +110,7 @@ def test_robots_directives(spark):
     assert got["c.example"] == (None, [])
 
 
-def test_frontier_schedule(spark):
+def test_frontier_schedule(spark, monkeypatch):
     """Slots sequence per host, eta multiplies the host's crawl-delay
     (default 1.0 when absent), the per-host cap truncates hot hosts, and
     the directives join is a broadcast."""
@@ -121,8 +121,8 @@ def test_frontier_schedule(spark):
     robots = spark.createDataFrame(
         [("a.example", "User-agent: *\nCrawl-delay: 2.5\nDisallow: /x\n")],
         "host string, robots string")
-    plan = R.frontier_schedule(
-        urls, R.robots_directives(robots), per_host_cap=3)
+    monkeypatch.setattr(R, "FRONTIER_HOST_CAP", 3)
+    plan = R.frontier_schedule(urls, R.robots_directives(robots))
     rows = {(r.host, r.url): (r.slot, r.eta_sec) for r in plan.collect()}
     # cap: only 3 of a.example's 5 urls scheduled this cycle
     assert len([k for k in rows if k[0] == "a.example"]) == 3
@@ -153,7 +153,7 @@ def test_rules_and_directives_group_identically(spark):
     assert d.crawl_delay == 1.0  # and the delay stays with '*'
 
 
-def test_frontier_schedule_window_group_limit(spark):
+def test_frontier_schedule_window_group_limit(spark, monkeypatch):
     """Review finding (r6): the per-host cap must reach Spark's
     WindowGroupLimit pushdown (rank computed on at most cap+1 rows per
     host) -- filtering a derived slot column defeats it and ranks every
@@ -161,7 +161,7 @@ def test_frontier_schedule_window_group_limit(spark):
     urls = spark.createDataFrame(
         [("h", f"u{i}") for i in range(10)], "host string, url string")
     robots = spark.createDataFrame([], "host string, robots string")
-    plan = R.frontier_schedule(urls, R.robots_directives(robots),
-                               per_host_cap=3) \
+    monkeypatch.setattr(R, "FRONTIER_HOST_CAP", 3)
+    plan = R.frontier_schedule(urls, R.robots_directives(robots)) \
         ._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan

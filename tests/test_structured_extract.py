@@ -125,7 +125,8 @@ def test_tables_of_malformed_doc_contributes_zero_rows(spark):
 
 # --- BM25 --------------------------------------------------------------------
 
-def test_bm25_hand_computed(spark, tmp_path):
+def test_bm25_hand_computed(spark, tmp_path, monkeypatch):
+    from closure_html_spark.spark import relational as R
     from closure_html_spark.spark.relational import q_bm25_topk
     docs = [(0, "spark join join", "en", "s", 15),
             (1, "window window window window", "en", "s", 27),
@@ -133,9 +134,9 @@ def test_bm25_hand_computed(spark, tmp_path):
     spark.createDataFrame(
         docs, "doc_id long, text string, lang string, source string, "
         "n_chars long").write.parquet(str(tmp_path / "documents.parquet"))
+    monkeypatch.setattr(R, "BM25_TERMS", ("spark", "window", "join"))
     out = {r.doc_id: r.score
-           for r in q_bm25_topk(spark, str(tmp_path),
-                                terms=("spark", "window", "join")).collect()}
+           for r in q_bm25_topk(spark, str(tmp_path)).collect()}
     k1, b, n, avgdl = 1.2, 0.75, 3, 10 / 3
 
     def bm25(tf, df, dl):

@@ -102,7 +102,7 @@ def test_full_parse_serialization_identical():
         fx = "".join(random.choice(chars)
                      for _ in range(random.randrange(1, 250)))
         fast = serialize_doc(parse_html(DTD, fx), DTD)
-        doc = sgml_parse(DTD, fx, tokenizer=Tokenizer(fx, DTD.entities))
+        doc = _sgml_parse_ref(DTD, fx, Tokenizer(fx, DTD.entities))
         post_mortem_fix_top_level(doc)
         slow = serialize_doc(doc, DTD)
         assert fast == slow, fx
