@@ -10,9 +10,11 @@ never-kill-the-batch error handling.  No shuffle is introduced by
 extraction itself; repartitioning for skew is the caller's choice (see
 lineage.py).
 
-DTD tables are loaded once per executor process from the packaged dtd.json
+DTD tables are loaded once per Python process from the packaged dtd.json
 (module-level cache in closure_html_spark.dtd) -- the broadcast-variable
-equivalent for static build artifacts shipped via --py-files.
+equivalent for static build artifacts shipped via --py-files.  Under
+get_spark that process is the executor's worker daemon (daemon.py), which
+loads them before it forks any worker.
 """
 
 from __future__ import annotations
@@ -110,10 +112,12 @@ def _parsed_docs(batch, work,
     If the batch has a `content_type` column, its charset parameter seeds
     the decoder (a <meta> charset still overrides it, charset.py)."""
     # with worker reuse, PySpark's daemon runs a full gc.collect() after
-    # every task (pyspark/daemon.py:244); nearly all the objects it would
-    # walk come from imports and never die.  Freezing moves them out of
-    # the collector's sight.  Parsing makes no cyclic garbage, and a
-    # frozen object is still freed when its refcount drops to zero.
+    # every task (pyspark/daemon.py:244).  The worker daemon (daemon.py)
+    # froze the imports before the fork; this freezes what the worker has
+    # built since, such as the DTD's bounded tag and pcdata caches, so
+    # that collection walks only what the last batch left.  Parsing makes
+    # no cyclic garbage, and a frozen object is still freed when its
+    # refcount drops to zero.
     gc.freeze()
     htmls = batch.column("html").to_pylist()
     cts = (batch.column("content_type").to_pylist()

@@ -5,6 +5,14 @@ multi-executor cluster: AQE on (skew-join splitting, partition coalescing),
 Arrow exchange for the pandas UDF stages, bounded Arrow batch sizes so one
 batch of large HTML documents cannot blow executor memory
 (SURVEY.md §4 "physical risks").
+
+Worker model: Spark forks each Python worker from one daemon process per
+executor.  The session names closure_html_spark.spark.daemon as that
+daemon, which imports pyarrow, pandas, the parse stage and the DTD once,
+freezes them out of the garbage collector, and then runs PySpark's own
+daemon loop.  A worker therefore starts with the parse stage's imports
+done, and shares their pages with the daemon and its sibling workers
+copy-on-write instead of holding a private copy each.
 """
 
 from __future__ import annotations
@@ -12,6 +20,9 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# the module Spark runs (python -m) as the executor's Python worker daemon
+DAEMON_MODULE = "closure_html_spark.spark.daemon"
 
 
 def get_spark(app: str = "closure-html-spark",
@@ -30,7 +41,16 @@ def get_spark(app: str = "closure-html-spark",
     built the failing expression.  PySpark reads the setting once per
     process, at the first Column method after a session starts
     (pyspark.errors.utils.is_debugging_enabled caches it), so it goes on
-    the builder: a later spark.conf.set would not reach that cache."""
+    the builder: a later spark.conf.set would not reach that cache.
+
+    Python workers fork from DAEMON_MODULE (spark.python.daemon.module),
+    which has already imported the parse stage and loaded the DTD.  A
+    worker puts the --py-files archives on its path only when a task
+    arrives, after the fork, so the package must be importable from the
+    daemon's working directory or PYTHONPATH: a daemon module found only
+    inside a --py-files zip fails with "No module named ...".  A job
+    that ships the package only as --py-files builds its own session
+    with PySpark's stock daemon, as tools/run_extraction.py does."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               str(len(os.sched_getaffinity(0)))))
     if master is None:
@@ -63,5 +83,6 @@ def get_spark(app: str = "closure-html-spark",
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", "false")
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.python.daemon.module", DAEMON_MODULE)
         .getOrCreate()
     )

@@ -400,7 +400,8 @@ def test_worker_keeps_stat_checked_invalidate_caches(spark):
     stat-checked zipimporter.invalidate_caches into its later tasks, so
     PySpark's per-task importlib.invalidate_caches() no longer re-parses
     pyspark.zip's directory.  The probe itself never imports the package:
-    it only reports what an earlier task on the same worker installed."""
+    it only reports what the worker already holds (under get_spark's
+    daemon, every worker holds the package from the fork)."""
     rows = [(f"u{i}", bytearray(f"<p>doc {i}</p>".encode()))
             for i in range(8)]
     df = spark.createDataFrame(rows, "url string, html binary") \
@@ -429,18 +430,25 @@ def test_worker_keeps_stat_checked_invalidate_caches(spark):
 
 
 def test_worker_heap_frozen_before_daemon_gc(spark):
-    """Every parse stage calls gc.freeze() before its first document, so
-    the full gc.collect() PySpark's daemon runs after each task of a
-    reused worker (pyspark/daemon.py) no longer walks the objects left by
-    imports.  After extract_pages passes, a worker's frozen generation
-    holds most of its tracked objects, and its size is the same after
-    each later pass: freezing at every batch leaks nothing.  The probe
-    never imports the package; it reports what earlier tasks left.
+    """Every Python worker forks from get_spark's daemon
+    (closure_html_spark.spark.daemon), which imports the parse stage,
+    loads the DTD and calls gc.freeze() before its first fork.  So the
+    full gc.collect() PySpark's daemon runs after each task of a reused
+    worker (pyspark/daemon.py) never walks the objects left by imports:
+    a worker's frozen generation holds most of its tracked objects before
+    its first task, after extract_pages passes it stays that way, and its
+    size is the same after each later pass: the gc.freeze() every parse
+    stage calls per batch leaks nothing.  The probe never imports the
+    package; it reports what the fork and earlier tasks left.
 
     The documents are tag-free text past the parser's 256-character
     pcdata cache limit, so parsing them adds no entries to the DTD's
     bounded tag/pcdata caches, which would otherwise warm (and be frozen)
-    as each worker meets new tags."""
+    as each worker meets new tags.
+
+    A worker that has run no parse task comes from a second daemon: a
+    job whose environment differs from every earlier job's gets its own
+    worker factory, hence a new daemon and a freshly forked worker."""
     rows = [(f"u{i}", bytearray(("word " * 60 + str(i)).encode()))
             for i in range(8)]
     df = spark.createDataFrame(rows, "url string, html binary") \
@@ -455,20 +463,19 @@ def test_worker_heap_frozen_before_daemon_gc(spark):
             pass
         yield pa.RecordBatch.from_pydict({
             "pid": [os.getpid()],
+            "ppid": [os.getppid()],
             "frozen": [gc.get_freeze_count()],
             "tracked": [len(gc.get_objects())]})
 
+    schema = "pid long, ppid long, frozen long, tracked long"
     passes = []
     for _ in range(4):
         assert extract_pages(df).count() == 8
-        got = (spark.range(4).repartition(4)
-               .mapInArrow(probe, "pid long, frozen long, tracked long")
+        got = (spark.range(4).repartition(4).mapInArrow(probe, schema)
                .collect())
-        # only a parse stage freezes: frozen > 0 marks a worker that parsed
-        passes.append({r["pid"]: r for r in got if r["frozen"] > 0})
-    frozen = [r for p in passes for r in p.values()]
-    assert frozen, f"no probe task ran on a worker that parsed: {passes}"
-    for r in frozen:
+        passes.append({r["pid"]: r for r in got})
+    probed = [r for p in passes for r in p.values()]
+    for r in probed:
         assert r["tracked"] * 10 < r["frozen"], r
     # the first pass may still warm caches; compare the later ones
     later = passes[1:]
@@ -476,3 +483,15 @@ def test_worker_heap_frozen_before_daemon_gc(spark):
             for a, b in zip(later, later[1:]) for pid in set(a) & set(b)]
     assert same, f"no worker probed after two later passes: {passes}"
     assert all(x == y for x, y in same), same
+
+    env = spark.sparkContext.environment
+    env["CHS_TEST_FRESH_DAEMON"] = "1"
+    try:
+        fresh = spark.range(1, numPartitions=1).mapInArrow(probe, schema) \
+            .collect()
+    finally:
+        del env["CHS_TEST_FRESH_DAEMON"]
+    assert len(fresh) == 1
+    r = fresh[0]
+    assert r["ppid"] not in {p["ppid"] for p in probed}, (r, probed)
+    assert r["frozen"] > 0 and r["tracked"] * 10 < r["frozen"], r

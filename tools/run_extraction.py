@@ -11,6 +11,13 @@ Usage (local sandbox):
 On a real cluster the same invocation runs with --master yarn/k8s and the
 input pointing at the Iceberg/parquet pages table; everything else is
 identical (the engine has no driver-side per-document logic).
+
+This job builds its own session, so its Python workers fork from
+PySpark's stock daemon.  get_spark's preloading daemon
+(closure_html_spark.spark.daemon) needs the package importable from the
+executor's working directory or PYTHONPATH: a worker adds --py-files
+archives to its path only after the fork, so a daemon module shipped
+only in dist/chs.zip fails with "No module named ...".
 """
 
 from __future__ import annotations
