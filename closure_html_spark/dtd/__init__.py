@@ -15,9 +15,6 @@ from __future__ import annotations
 
 import json
 
-
-_DTD = None
-
 # Elements whose content preserves comment tokens (sgml-parse.lisp:142-144)
 PRESERVES_COMMENTS = frozenset({"STYLE", "SCRIPT"})
 
@@ -146,7 +143,6 @@ def load_dtd(name: str = "html-4.0-frameset") -> Dtd:
     """Load a compiled DTD by catalog name (cached per process).  The
     parse entry points take the Dtd as a parameter, mirroring the
     reference's `sgml-parse dtd input` (sgml-parse.lisp:1025)."""
-    global _DTD
     dtd = _DTDS.get(name)
     if dtd is None:
         # importlib.resources works both from the filesystem and from a
@@ -156,6 +152,4 @@ def load_dtd(name: str = "html-4.0-frameset") -> Dtd:
         data = files(__package__).joinpath(fname).read_text()
         dtd = Dtd(json.loads(data))
         _DTDS[name] = dtd
-    if name == "html-4.0-frameset":
-        _DTD = dtd
     return dtd

@@ -72,10 +72,6 @@ class Lexer:
     def _advance(self, n=1):
         self.frames[-1][1] += n
 
-    def _rest_startswith(self, lit):
-        s, p = self.frames[-1]
-        return s.startswith(lit, p)
-
     def next_token(self):
         while True:
             ch = self._peek_ch()

@@ -33,8 +33,6 @@ from __future__ import annotations
 
 import re
 
-WHITESPACE = " \t\n\r\x0c"
-
 _SPECIAL = re.compile(r"[<&]")
 _NAME = re.compile(r"[A-Za-z][A-Za-z0-9.:\-]*")
 _DIGITS = re.compile(r"[0-9]+")
@@ -431,7 +429,8 @@ class Tokenizer:
 # attributes) so every fast match produces byte-identical tokens to the
 # slow path; non-matches fall through.
 
-# _FWS matches exactly the slow machine's whitespace set (WHITESPACE above);
+# _FWS matches exactly the slow machine's whitespace set (space, tab, LF,
+# CR, form feed);
 # `\s` would also match Unicode spaces (NBSP,  ...) and make the fast
 # path accept tags the slow path rejects as ##BAD TAG##.
 _FWS = r"[ \t\n\r\x0c]"

@@ -75,15 +75,6 @@ def doc_to_lhtml(doc: Doc, nid: int | None = None):
     return built[nid]
 
 
-def lhtml_to_json(node):
-    """JSON-friendly render of LHTML for golden tests / debugging."""
-    if isinstance(node, str):
-        return node
-    name, attrs = node[0], node[1]
-    return [name, [[a, v] for a, v in attrs],
-            [lhtml_to_json(c) for c in node[2:]]]
-
-
 def lhtml_to_doc(node) -> Doc:
     """LHTML literal -> Doc: the INPUT direction of the LHTML surface
     (walk-lhtml / lhtml->pt, lhtml.lisp:145-171), inverse of

@@ -4,12 +4,12 @@ Media payloads are opaque `binary` columns with a typed metadata struct --
 the schema a 100 TB training-data pipeline uses so Parquet/Iceberg can
 store media inline or by reference without the engine interpreting bytes.
 
-The decode/resize/frame-sample kernels are STUBBED (this container has no
-image/audio codecs): `decode_media` raises NotImplementedError for real
-codecs and provides a deterministic fake decoder for the synthetic `fake/*`
-mime types, so the Spark-side plumbing -- schema, Arrow batch shape,
-mapInPandas signature, partition behavior -- is real and fully tested.
-Swapping in PIL/ffmpeg later changes only `_decode_one`.
+The decode kernel is STUBBED (this container has no image/audio codecs):
+`decode_media` raises NotImplementedError for real codecs and provides a
+deterministic fake decoder for the synthetic `fake/*` mime types, so the
+Spark-side plumbing -- schema, Arrow batch shape, mapInPandas signature,
+partition behavior -- is real and fully tested.  Swapping in PIL/ffmpeg
+later changes only `_decode_one`.
 
 media(media_id long, doc_id long, mime string, payload binary,
       meta struct<width:int, height:int, n_frames:int, sample_rate:int>)
@@ -26,10 +26,6 @@ from pyspark.sql import functions as F
 
 from .relational import _cap_buckets
 from .tables import read_table
-
-MEDIA_SCHEMA = ("media_id long, doc_id long, mime string, payload binary, "
-                "meta struct<width:int,height:int,n_frames:int,"
-                "sample_rate:int>")
 
 
 def media_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -90,129 +86,6 @@ def decode_media(df: DataFrame) -> DataFrame:
             yield pd.DataFrame(out)
 
     return df.mapInPandas(fn, schema)
-
-
-def _fake_pixels(payload: bytes, w: int, h: int):
-    """Deterministic fake 'decoded image': payload bytes tiled into an
-    (h, w) uint8 grayscale matrix.  Stands in for the codec output so
-    the resize math downstream is real and testable."""
-    import numpy as np
-    buf = np.frombuffer(payload, dtype=np.uint8)
-    if len(buf) == 0:
-        buf = np.zeros(1, np.uint8)
-    reps = -(-(w * h) // len(buf))
-    return np.tile(buf, reps)[: w * h].reshape(h, w)
-
-
-RESIZED_SCHEMA = ("media_id long, doc_id long, out_w int, out_h int, "
-                  "mean_px double, resized_sha string, err string")
-# resize_media's thumbnail size (pixels)
-RESIZE_W = 32
-RESIZE_H = 32
-
-
-def resize_media(df: DataFrame) -> DataFrame:
-    """mapInPandas resize stage: nearest-neighbor index-map resample of
-    the decoded matrix to (RESIZE_W, RESIZE_H) -- REAL resize math over the
-    deterministic fake decode; only the codec boundary is stubbed
-    (non-fake mimes raise at the _decode boundary exactly like
-    decode_media -- a missing codec is a configuration error and must
-    stay loud).  Output: per-media resized checksum + mean pixel -- the
-    dedup/quality signals an image pipeline derives from thumbnails.
-
-    Per-row isolation (round-6 ADVICE): one row with degenerate meta
-    (width/height 0, missing n_frames, NULL fields) must not kill the
-    whole Arrow batch/stage -- data errors emit a marker row with
-    err='error:TypeName: msg' and NULL outputs, matching the
-    extract_pages never-kill-the-batch convention (pipeline._parsed_docs)."""
-    import numpy as np
-    # read on the driver: the worker closure carries the values
-    out_w, out_h = RESIZE_W, RESIZE_H
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], "doc_id": pdf["doc_id"],
-                   "out_w": [], "out_h": [], "mean_px": [],
-                   "resized_sha": [], "err": []}
-            for mime, payload, meta in zip(pdf["mime"], pdf["payload"],
-                                           pdf["meta"]):
-                if not mime.startswith("fake/"):
-                    raise NotImplementedError(
-                        f"codec for {mime!r} not bundled")
-                try:
-                    w, h = int(meta["width"]), int(meta["height"])
-                    if w <= 0 or h <= 0:
-                        raise ValueError(f"degenerate dims {w}x{h}")
-                    px = _fake_pixels(bytes(payload), w, h)
-                    yi = (np.arange(out_h) * h) // out_h
-                    xi = (np.arange(out_w) * w) // out_w
-                    rs = px[yi][:, xi]
-                    out["mean_px"].append(float(rs.mean()))
-                    out["resized_sha"].append(
-                        hashlib.sha256(rs.tobytes()).hexdigest())
-                    out["err"].append(None)
-                except Exception as exc:  # never kill the batch for one row
-                    out["mean_px"].append(None)
-                    out["resized_sha"].append(None)
-                    out["err"].append(f"error:{type(exc).__name__}: {exc}")
-                out["out_w"].append(out_w)
-                out["out_h"].append(out_h)
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(fn, RESIZED_SCHEMA)
-
-
-FRAMES_SCHEMA = ("media_id long, doc_id long, frame_idx int, "
-                 "frame_sha string, err string")
-# frame_sample keeps every FRAME_EVERY_K-th frame
-FRAME_EVERY_K = 5
-
-
-def frame_sample(df: DataFrame) -> DataFrame:
-    """mapInPandas frame-sampling stage for video rows: every
-    FRAME_EVERY_K-th frame index up to meta.n_frames, one OUTPUT ROW PER
-    SAMPLED FRAME (the 1->N batch-shape case the decode/resize stages
-    don't exercise).
-    Frame content is the deterministic fake digest of (payload, idx);
-    a real ffmpeg seek-and-decode drops into the same loop.
-
-    Per-row isolation (round-6 ADVICE): degenerate meta (missing/NULL
-    n_frames) emits ONE marker row (frame_idx=-1, err set) instead of
-    killing the batch -- the extract_pages convention; the codec
-    boundary still raises loudly (configuration error)."""
-    # read on the driver: the worker closure carries the value
-    every_k = FRAME_EVERY_K
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"media_id": [], "doc_id": [], "frame_idx": [],
-                    "frame_sha": [], "err": []}
-            for mid, did, mime, payload, meta in zip(
-                    pdf["media_id"], pdf["doc_id"], pdf["mime"],
-                    pdf["payload"], pdf["meta"]):
-                if not mime.startswith("fake/"):
-                    raise NotImplementedError(
-                        f"codec for {mime!r} not bundled")
-                try:
-                    # build first, append after: an exception can never
-                    # leave the column lists unbalanced
-                    frames = [(idx, hashlib.sha256(
-                        bytes(payload) + idx.to_bytes(4, "big")).hexdigest(),
-                        None)
-                        for idx in range(0, int(meta["n_frames"]), every_k)]
-                except Exception as exc:  # never kill the batch for one row
-                    frames = [(-1, None,
-                               f"error:{type(exc).__name__}: {exc}")]
-                for idx, sha, err in frames:
-                    rows["media_id"].append(mid)
-                    rows["doc_id"].append(did)
-                    rows["frame_idx"].append(idx)
-                    rows["frame_sha"].append(sha)
-                    rows["err"].append(err)
-            yield pd.DataFrame(rows)
-
-    return df.filter(F.col("mime") == "fake/video").mapInPandas(
-        fn, FRAMES_SCHEMA)
 
 
 def q_media_decode(spark, sf_dir):

@@ -65,10 +65,6 @@ JACCARD_MAX_DF = 50
 # paragraph-dedup chunk sizes (words): the toy report, the C4-style span
 TOY_CHUNK_WORDS = 3
 C4_CHUNK_WORDS = 50
-# frontier_schedule's delay (seconds) for hosts whose robots.txt names none,
-# and the urls it schedules per host and cycle
-DEFAULT_CRAWL_DELAY = 1.0
-FRONTIER_HOST_CAP = 1000
 # keywords per document in tfidf_topk; PageRank iterations and damping
 TFIDF_K = 3
 PAGERANK_ITERS = 5
@@ -1338,8 +1334,8 @@ def q_resolve_href(spark, sf_dir):
     deep-path source URL, a 12-pattern href cycle (relative, ./ ../,
     rooted, protocol-relative, absolute, mailto/javascript -> NULL,
     query-only, empty, mid-path ../, over-clamped ../../..), and every
-    third doc a <base href> override -- the exact column expression
-    stream_frontier runs, replayed against a closed-form oracle."""
+    third doc a <base href> override -- resolve_href's column
+    expression replayed against a closed-form oracle."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     i = F.col("doc_id").cast("string")
     h = (F.col("doc_id") % 50).cast("string")
@@ -1437,10 +1433,8 @@ def robots_rules(robots_df):
     # the user-agent lines of one group): drop them BEFORE the lag window,
     # so a UA line starts a new group only when the previous RETAINED line
     # was a rule (or start of file).  Crawl-delay IS retained as a
-    # rule-type group member -- a UA line after it starts a NEW group --
-    # so this parser and robots_directives attribute the identical
-    # groups to the same file (pinned by
-    # test_robots.test_rules_and_directives_group_identically).
+    # rule-type group member -- a UA line after it starts a NEW group
+    # (pinned by test_robots.test_rules_and_directives_group_identically).
     parsed = lines.select("host", "pos", kind.alias("kind"),
                           value.alias("value")) \
         .filter(F.col("kind").isin(
@@ -1471,8 +1465,8 @@ def robots_allowed(urls_df, rules_df):
     The rules collapse to ONE array row per host on the (tiny, static)
     robots side, broadcast into the frontier, and the verdict is a
     per-row array HOF -- no aggregation over the url side at all, so the
-    same operator drops into Structured Streaming (stream_frontier's
-    robots= option) without requiring stateful-aggregation semantics."""
+    same operator drops into Structured Streaming without requiring
+    stateful-aggregation semantics."""
     per_host = rules_df.groupBy("host").agg(
         F.collect_list(F.struct("prefix", "is_allow")).alias("rules"))
     joined = urls_df.join(F.broadcast(per_host), "host", "left")
@@ -1487,94 +1481,6 @@ def robots_allowed(urls_df, rules_df):
                         F.col("rules").isNull() | best.isNull()
                         | (best["a"] == 1))
             .drop("rules"))
-
-
-def robots_directives(robots_df):
-    """Per-host politeness metadata beyond allow/disallow: `Crawl-delay`
-    for the '*' group (the de-facto extension most crawlers honor; a
-    per-host fetch-rate budget for the frontier scheduler) and the
-    file-global `Sitemap:` urls (sitemaps are NOT group-scoped --
-    sitemaps.org protocol -- so they collect per host regardless of
-    position).  Group attribution mirrors robots_rules, except
-    crawl-delay lines are group MEMBERS (a rule-type line ends a
-    user-agent run), and comments/blank lines stay transparent.
-
-    Scale shape: the robots side is tiny and static (one row per host);
-    every aggregation here happens on it, never on the frontier --
-    consumers broadcast the result exactly like robots_rules."""
-    lines = robots_df.select(
-        "host", F.posexplode(F.split("robots", "\n")).alias("pos", "line"))
-    kind = F.lower(F.trim(
-        F.regexp_extract("line", r"^\s*([A-Za-z-]+)\s*:", 1)))
-    value = F.trim(F.regexp_extract("line", r":\s*([^#]*)", 1))
-    parsed = lines.select("host", "pos", kind.alias("kind"),
-                          value.alias("value"))
-    # sitemaps: file-global, document order
-    sitemaps = (parsed.filter((F.col("kind") == "sitemap")
-                              & (F.col("value") != ""))
-                .groupBy("host")
-                .agg(F.array_sort(F.collect_list(
-                    F.struct("pos", "value"))).alias("sv"))
-                .select("host", F.transform(
-                    "sv", lambda s: s["value"]).alias("sitemaps")))
-    # crawl-delay: group-scoped like rules
-    grp_rows = parsed.filter(
-        F.col("kind").isin("user-agent", "allow", "disallow", "crawl-delay"))
-    wseq = Window.partitionBy("host").orderBy("pos")
-    is_ua = (F.col("kind") == "user-agent").cast("int")
-    new_grp = ((is_ua == 1) &
-               (F.coalesce(F.lag(is_ua).over(wseq), F.lit(0)) == 0))
-    grouped = grp_rows.withColumn(
-        "grp", F.sum(new_grp.cast("int")).over(
-            wseq.rowsBetween(Window.unboundedPreceding, 0)))
-    wgrp = Window.partitionBy("host", "grp")
-    agents = F.collect_set(
-        F.when(F.col("kind") == "user-agent",
-               F.lower(F.col("value")))).over(wgrp)
-    delay = (grouped.withColumn("agents", agents)
-             .filter((F.col("kind") == "crawl-delay")
-                     & F.array_contains(F.col("agents"), "*"))
-             .groupBy("host")
-             .agg(F.min(F.col("value").cast("double"))
-                   .alias("crawl_delay")))
-    return (robots_df.select("host").distinct()
-            .join(F.broadcast(delay), "host", "left")
-            .join(F.broadcast(sitemaps), "host", "left")
-            .select("host", "crawl_delay",
-                    F.coalesce("sitemaps", F.array()).alias("sitemaps")))
-
-
-def frontier_schedule(urls_df, directives_df):
-    """Politeness scheduling: turn a crawl frontier (host, url) plus
-    robots_directives into a fetch plan -- each url gets a per-host slot
-    and an earliest-fetch offset `eta_sec = slot * crawl_delay` (the
-    sequential-per-host budget every polite crawler enforces).
-
-    Scale shape: the directives side is tiny and broadcast; the only
-    exchange carries (host, url) strings for the per-host ranking
-    window.  Per-host sequencing is inherently a per-host order, so the
-    window partitions by host -- skew (one hot host with 10^7 frontier
-    urls) is bounded by FRONTIER_HOST_CAP FIRST: a polite crawler can only
-    fetch cap urls from one host per cycle anyway (cap * delay seconds),
-    so ranking past the cap is wasted work and the cap doubles as the
-    skew guard.  Deterministic: slots order by url, ties impossible
-    (urls pre-deduped by the frontier)."""
-    w = Window.partitionBy("host").orderBy("url")
-    # filter on the RAW row_number: Spark's WindowGroupLimit pushdown
-    # only fires on a direct rank predicate -- filtering a derived
-    # (rn - 1).cast(long) column ranks ALL of a hot host's rows before
-    # dropping them (verified: no WindowGroupLimit node in that plan)
-    ranked = (urls_df.withColumn("rn", F.row_number().over(w))
-              .filter(F.col("rn") <= FRONTIER_HOST_CAP)
-              .withColumn("slot", (F.col("rn") - 1).cast("long"))
-              .drop("rn"))
-    joined = ranked.join(
-        F.broadcast(directives_df.select("host", "crawl_delay")),
-        "host", "left")
-    delay = F.coalesce(F.col("crawl_delay"), F.lit(DEFAULT_CRAWL_DELAY))
-    return joined.select(
-        "host", "url", "slot",
-        (F.col("slot") * delay).alias("eta_sec"))
 
 
 def q_robots_filter(spark, sf_dir):
@@ -4636,7 +4542,7 @@ ORDER BY b.doc_id
 
 def sitemap_urls(df):
     """Extract url entries from the `sitemap` XML bodies (sitemaps.org
-    urlset/loc) -- the crawl-seeding companion to robots_directives'
+    urlset/loc) -- the crawl-seeding companion to robots.txt's
     Sitemap pointers.  Tolerant regex extraction (whitespace inside
     <loc> per the spec's examples), pure codegen, map-side explode --
     no shuffle; the frontier dedups/canonicalizes downstream with the
@@ -4999,8 +4905,7 @@ def _pq_subdist(x, c, j):
 def _pq_codes(spark, sf_dir, local):
     """(codes DF with vec_id/code0..code{PQ_M-1}/qerr, centroids DF,
     (centroid ids, float64 centroid matrix)): the shared encode pipeline
-    behind q_pq_encode, q_ann_pq_topk, build_pq_index and
-    q_ann_ivfadc_topk.  The codebook is every step-th vector, the IVF
+    behind q_pq_encode, q_ann_pq_topk and q_ann_ivfadc_topk.  The codebook is every step-th vector, the IVF
     convention, so DuckDB replays it bit for bit; `local` is
     _local_emb_table's result (see _emb_subset).
 
@@ -5172,12 +5077,10 @@ def _round6_micro(x):
 
 
 def _adc_topk(codes, book, emb, local):
-    """ADC scoring core shared by q_ann_pq_topk (inline encode) and
-    q_ann_pq_index_topk (persisted index): per-query LUTs, compressed-
-    domain scan, top-k window.  book is the
-    codebook as (centroid ids, float64 matrix); the query side is cut
-    from `local` (see _emb_subset), which the persisted-index path leaves
-    None, keeping its query collect.
+    """ADC scoring core of q_ann_pq_topk: per-query LUTs, compressed-
+    domain scan, top-k window.  book is the codebook as (centroid ids,
+    float64 matrix); the query side is cut from `local` (see
+    _emb_subset).
 
     Round 8: the LUTs (N_QUERIES x PQ_M x PQ_SUB_CENTS rounded distances --
     KBs) are computed DRIVER-side from the two bounded tables (queries,
@@ -5234,36 +5137,6 @@ def _adc_topk(codes, book, emb, local):
               .select("q_id", "vec_id",
                       F.round(F.col("adist_raw"), 6).alias("adist")))
     return _top_k(scored, "adist")
-
-
-def build_pq_index(spark, sf_dir, out_path: str):
-    """Materialize the PQ index -- codes + codebook parquet -- the
-    "encode once, search many" serving flow (the inline q_ann_pq_topk
-    re-encodes per query; a 100-TB corpus encodes ONCE and every later
-    search reads 4-byte codes).  Same persisted-index split as
-    incremental_dedup: the big side (codes) is written partitioned and
-    never re-shuffled by searches; the codebook is a 16-row table any
-    search broadcasts."""
-    codes, cents, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir))
-    codes.write.mode("overwrite").parquet(f"{out_path}/codes")
-    cents.write.mode("overwrite").parquet(f"{out_path}/codebook")
-    return out_path
-
-
-def q_ann_pq_index_topk(spark, index_path: str, sf_dir):
-    """ADC search over a PERSISTED PQ index (build_pq_index output):
-    identical results to the inline q_ann_pq_topk by construction
-    (asserted in tests/test_lsh_scale.py) -- the search-side plan never
-    touches the raw embeddings except for the query rows themselves."""
-    import numpy as np
-    codes = spark.read.parquet(f"{index_path}/codes")
-    crows = sorted(spark.read.parquet(f"{index_path}/codebook").collect(),
-                   key=lambda r: r.c_id)
-    book = ([int(r.c_id) for r in crows],
-            np.asarray([list(r.c_emb) for r in crows],
-                       dtype=np.float32).astype(np.float64))
-    emb = _t(spark, sf_dir, "embeddings")
-    return _adc_topk(codes, book, emb, None)
 
 
 def _pq_dist_sql(j: int, x: str, c: str) -> str:

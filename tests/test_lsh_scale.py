@@ -275,19 +275,6 @@ def test_ann_pq_adc_and_rerank(spark):
     assert "CartesianProduct" not in plan, "LUT join not broadcast"
 
 
-def test_pq_persisted_index_matches_inline(spark, tmp_path):
-    """build_pq_index + q_ann_pq_index_topk must reproduce the inline
-    q_ann_pq_topk EXACTLY -- the encode-once/search-many serving flow
-    cannot drift from the gated inline path."""
-    from closure_html_spark.spark import relational as R
-    SF = "/root/testdata/sf0.001"
-    idx = R.build_pq_index(spark, SF, str(tmp_path / "pq_index"))
-    inline = [tuple(r) for r in R.q_ann_pq_topk(spark, SF).collect()]
-    from_idx = [tuple(r) for r in
-                R.q_ann_pq_index_topk(spark, idx, SF).collect()]
-    assert inline == from_idx
-
-
 def test_ivfadc_candidate_pruning(spark, monkeypatch):
     """IVFADC audit: the scored candidate set must be exactly the probed
     cells' population (minus self) -- i.e. the coarse quantizer really
