@@ -631,11 +631,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "bm25_topk": R.q_bm25_topk,
         # SemDeDup: IVF-cell-bucketed semantic near-dup removal -- the
         # scale answer to the demoted O(N^2) exact baseline (media_meta
-        # demoted: projection twin of the still-gated media_decode).
-        # n_cells pinned to R.N_CELLS, the constant its oracle is built
-        # from, exactly like the ann_ivf_topk gate; the self-sizing rule
-        # is tested separately
-        "semantic_dedup": lambda s, d: R.q_semantic_dedup(s, d, R.N_CELLS),
+        # demoted: projection twin of the still-gated media_decode);
+        # R.N_CELLS cells, the constant its oracle is built from
+        "semantic_dedup": R.q_semantic_dedup,
         # adversarial parser corpus (round-6 verdict #2): deep nesting /
         # pcdata flood / entity bomb / bad-tag storm / charset lie, all
         # closed-form oracled (string_datetime demoted to aux for the
@@ -689,19 +687,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # demoted to aux round 7: the one non-scale-safe plan is no
         # longer invokable from the driver window; its oracle survives
         # in aux and it remains the LSH twin's recall reference)
-        # index-sizing params PINNED to the constants the oracles are
-        # built from (R.BAND_BITS / R.N_CELLS): the queries self-size from
-        # table stats by default, but the gate must replay identically on
-        # ANY corpus size -- the sizing rules themselves are asserted by
-        # tests/test_lsh_scale.py, not this gate
-        "embedding_neardup_lsh": lambda s, d: R.q_embedding_neardup_lsh(
-            s, d, band_bits=R.BAND_BITS),
+        # the LSH queries size their bands from the table's row count
+        # (R.lsh_band_bits), which is R.BAND_BITS, the width the oracles
+        # are built at, on every corpus of up to 2^14 rows
+        "embedding_neardup_lsh": R.q_embedding_neardup_lsh,
         # connected components over the LSH pair graph (a driver
         # union-find below R.CC_DRIVER_MAX_PAIRS pairs, large-star/
-        # small-star in Spark above it; band_bits pinned like the pair
-        # query it builds on)
-        "neardup_clusters": lambda s, d: R.q_neardup_clusters(
-            s, d, band_bits=R.BAND_BITS),
+        # small-star in Spark above it)
+        "neardup_clusters": R.q_neardup_clusters,
         # multimodal plumbing (media_meta demoted to aux round 7)
         "media_decode": q_media_decode,
         # --- full-pipeline extraction (parse + repair + extract) ---
@@ -751,8 +744,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # EXACT brute-force top-k baseline (broadcast query side); the
         # scale paths are the LSH/IVF twins below
         "ann_cosine_topk": R.q_ann_cosine_topk,
-        "ann_lsh_topk": lambda s, d: R.q_ann_lsh_topk(s, d, R.BAND_BITS),
-        "ann_ivf_topk": lambda s, d: R.q_ann_ivf_topk(s, d, R.N_CELLS),
+        "ann_lsh_topk": R.q_ann_lsh_topk,
+        "ann_ivf_topk": R.q_ann_ivf_topk,
         # (minhash_est_pairs demoted to aux round 6: its banding +
         # signature-agreement machinery runs under the gate through BOTH
         # text_dedup_clean and incremental_dedup)
@@ -1061,7 +1054,7 @@ FROM p ORDER BY doc_id, rep
         "host_boilerplate_clean": R.ORACLE_HOST_BOILERPLATE,
         # the LSH oracles replay the md5-derived hyperplane sign matrix
         # bit-for-bit (constants baked into both plans); R.BAND_BITS in
-        # the oracle matches lsh_band_bits(500) at the driver's sf0.01 gate
+        # the oracle is lsh_band_bits(N) on every gate corpus (N <= 2^14)
         "embedding_neardup_lsh": R.ORACLE_EMBEDDING_NEARDUP_LSH,
         "neardup_clusters": R.ORACLE_NEARDUP_CLUSTERS,
         "ann_lsh_topk": R.ORACLE_ANN_LSH,

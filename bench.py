@@ -152,7 +152,7 @@ def run_skew_leg(n_threads: int) -> dict:
     # hot-host detection is an eager stats pass (counts + quantile), timed
     # apart: a production run pays it once, not per stage
     t0 = time.time()
-    salted = salt_skewed(pages, key="url_host", n_salt=8)
+    salted = salt_skewed(pages)
     salt_prep = round(time.time() - t0, 3)
     plans = {"unsalted": pages.repartition(n_parts, "url_host"),
              "salted": salted.repartition(n_parts, "url_host", "salt")}

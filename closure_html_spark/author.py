@@ -19,9 +19,9 @@ from .dtd import Dtd, load_dtd
 from .serialize import (
     URI_ATTRS,
     _escape_attribute,
-    _escape_datachar,
     _escape_datachar_readable,
     _escape_uri,
+    doctype_string,
 )
 
 
@@ -37,16 +37,8 @@ class HtmlWriter:
         self._pending: tuple[str, list] | None = None
         self._raw_depth = 0  # inside SCRIPT/STYLE: text written raw
         # doctype iff a system-id is given (hax:start-document,
-        # unparse.lisp:68-84): public/system ids go through unparse-string
-        # (the datachar escape table), and a newline follows the `>`
-        if system_id:
-            self._out.append(f"<!DOCTYPE {name}")
-            if public_id:
-                self._out.append(f' PUBLIC "{_escape_datachar(public_id)}"'
-                                 f' "{_escape_datachar(system_id)}"')
-            else:
-                self._out.append(f' SYSTEM "{_escape_datachar(system_id)}"')
-            self._out.append(">\n")
+        # unparse.lisp:68-84)
+        self._out.append(doctype_string(name, public_id, system_id))
 
     # -- events --------------------------------------------------------
 
@@ -120,9 +112,8 @@ class HtmlWriter:
 
 
 @contextmanager
-def with_html_output(dtd: Dtd | None = None, name: str = "HTML",
-                     public_id: str | None = None,
+def with_html_output(name: str = "HTML", public_id: str | None = None,
                      system_id: str | None = None):
-    """with-html-output (unparse.lisp:247-262): yields an HtmlWriter; read
-    the result with .getvalue() after the block."""
-    yield HtmlWriter(dtd, name, public_id, system_id)
+    """with-html-output (unparse.lisp:247-262): yields an HtmlWriter over
+    the default DTD; read the result with .getvalue() after the block."""
+    yield HtmlWriter(None, name, public_id, system_id)

@@ -88,12 +88,12 @@ class Dtd:
         return cx is not None and cx == cy
 
 
-# name -> artifact; mirrors the reference catalog (html-parser.lisp:34-53).
-# HTML-3.0 is absent because the reference itself cannot load it: the file
-# pulls an uncataloged IETF PUBLIC entity set and uses SDATA entities the
-# reference's DTD grammar (sgml-dtd.lisp:177-252) does not accept.
-def shortest_path_to(dtd: Dtd, pathen: list[list[str]], goal: str,
-                     max_depth: int = 10) -> list[str] | None:
+# the levels shortest_path_to expands before it gives up
+SHORTEST_PATH_MAX_DEPTH = 10
+
+
+def shortest_path_to(dtd: Dtd, pathen: list[list[str]],
+                     goal: str) -> list[str] | None:
     """Breadth-first containment-chain search (shortest-path-to,
     sgml-parse.lisp:1699-1712): paths grow by prepending each element of
     the head's surclusion (the elements that may contain it) until a path
@@ -106,7 +106,7 @@ def shortest_path_to(dtd: Dtd, pathen: list[list[str]], goal: str,
     unreachable goal from a well-connected start multiplies by the
     surclusion fan-in each level and explodes combinatorially."""
     visited = {p[0] for p in pathen}
-    while max_depth > 0:
+    for _ in range(SHORTEST_PATH_MAX_DEPTH):
         for p in pathen:
             if p[0] == goal:
                 return p
@@ -119,16 +119,20 @@ def shortest_path_to(dtd: Dtd, pathen: list[list[str]], goal: str,
         if not nxt:
             return None
         pathen = nxt
-        max_depth -= 1
     return None
 
 
 def shortest_path(dtd: Dtd, start: str, goal: str) -> list[str] | None:
     """Containment chain [goal, ..., start] (each element may directly
-    contain the next), or None if no chain exists within depth 10."""
+    contain the next), or None if no chain exists within
+    SHORTEST_PATH_MAX_DEPTH levels."""
     return shortest_path_to(dtd, [[start]], goal)
 
 
+# name -> artifact; mirrors the reference catalog (html-parser.lisp:34-53).
+# HTML-3.0 is absent because the reference itself cannot load it: the file
+# pulls an uncataloged IETF PUBLIC entity set and uses SDATA entities the
+# reference's DTD grammar (sgml-dtd.lisp:177-252) does not accept.
 DTD_CATALOG = {
     "html-4.0-frameset": "dtd.json",          # chtml:parse default
     "html-4.0-strict": "dtd_html40_strict.json",

@@ -617,9 +617,13 @@ class CompiledDtd:
         }
 
 
-def compile_dtd(resource_dir: str, public_id: str = "-//W3C//DTD HTML 4.0 Frameset//EN"):
+# the DTD that dtd.json is compiled from (chtml:parse's default)
+PUBLIC_ID = "-//W3C//DTD HTML 4.0 Frameset//EN"
+
+
+def compile_dtd(resource_dir: str):
     b = DtdBuilder(Path(resource_dir))
-    b.parse_resource(public_id)
+    b.parse_resource(PUBLIC_ID)
     c = CompiledDtd(b)
     c.calculate_resolve_info()
     return c

@@ -161,8 +161,7 @@ def _resolve(name: str, default: str) -> str:
         return default  # "There is no such encoding" warn path (:1607-1612)
 
 
-def sniff_charset(raw: bytes, default: str = "utf-8",
-                  content_type: str | None = None) -> str:
+def sniff_charset(raw: bytes, default: str, content_type: str | None) -> str:
     """BOM first, then <meta> charset within the first SNIFF_LIMIT bytes
     (the mid-stream decoder switch wins over the header start charset,
     sgml-parse.lisp:1013-1023), then the HTTP header charset, then default."""

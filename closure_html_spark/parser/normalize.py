@@ -24,10 +24,7 @@ from __future__ import annotations
 
 import re
 
-from ..dtd import Dtd
-
-PCDATA = "#PCDATA"
-TOP = "%top"
+from ..dtd import PCDATA, TOP, Dtd
 
 
 def find_slot_value_pair(dtd: Dtd, tag: str, value: str):
@@ -78,7 +75,7 @@ def canon_value(dtd: Dtd, tag: str, slot: str, value: str, warn=None):
     return None
 
 
-def mungle_attlist(dtd: Dtd, tag: str, atts: list, warn=None) -> list:
+def mungle_attlist(dtd: Dtd, tag: str, atts: list, warn) -> list:
     out = []
     for x in atts:
         if isinstance(x, tuple):
@@ -89,7 +86,7 @@ def mungle_attlist(dtd: Dtd, tag: str, atts: list, warn=None) -> list:
             if slot is not None:
                 # foofoo -> "VALUE" then rod-downcase (unmungle case on)
                 out.append((slot, value.lower()))
-            elif warn is not None:
+            else:
                 # find-slot-value-pair fall-through (sgml-parse.lisp:908)
                 warn(3, f"The '<{tag}>' tag has no slot which could take "
                         f"the '{x}' keyword.")

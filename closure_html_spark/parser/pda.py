@@ -8,8 +8,10 @@ Reimplements the reference parse loop and repair machinery:
   - tag-as-marker-p INCLUDING its bug          :1174-1178 (two `and` forms,
     only the last returned; with defaults *font-heuristic-p*=t and
     *anchor-heuristic-p*=nil the predicate is always nil, so FONT flows
-    through the normal PDA + heuristic rules -- we replicate that and omit
-    the HTAG machinery entirely)
+    through the normal PDA + heuristic rules).  The HTAG machinery it
+    gates -- marker nodes, map-htag-pairs, mungle-font-pair and
+    post-mortem/fix-font (:1398-1556, :1665-1690) -- is unreachable in
+    the reference and not reproduced
   - heuristic repair rules (exact order)       :1213-1315
   - post-mortem/fix-top-level-structure        :1333-1396
 
@@ -19,9 +21,7 @@ the vectorized UDF.  The PDA only ever appends under the open node, so
 ids come out in document pre-order; a node's end (one past its last
 descendant) is recorded when it closes, and its subtree is the id range
 [n, end[n]).  No node owns a container, so a parse leaves nothing for the
-cyclic collector to walk.  The post-mortem keeps the order; only the
-opt-in font_htag mode, which edits the tree, builds a child-list view
-and lays the result out again.
+cyclic collector to walk.  The post-mortem keeps the order.
 
 One engine ships: sgml_parse's fused loop, which cuts the text into tag
 and text pieces with one C-side regex split per window, resolves tag
@@ -35,10 +35,8 @@ from __future__ import annotations
 
 import re
 
-from ..dtd import Dtd, PRESERVES_COMMENTS
+from ..dtd import PCDATA, PRESERVES_COMMENTS, TOP, Dtd
 from .normalize import (
-    PCDATA,
-    TOP,
     build_end_hit,
     build_start_hit,
     mungle_attlist,
@@ -77,7 +75,7 @@ class Doc:
     attrs, text, parent and end."""
 
     __slots__ = ("name", "attrs", "text", "parent", "end", "root",
-                 "warnings", "markers")
+                 "warnings")
 
     def __init__(self):
         self.name: list[str] = []
@@ -87,10 +85,6 @@ class Doc:
         self.end: list[int] = []    # one past the node's last descendant
         self.root = 0
         self.warnings: list[tuple[int, str]] = []
-        # nid -> "S"|"E" for HSTAG/HETAG marker nodes (font_htag mode only;
-        # hstag-node/hetag-node, sgml-parse.lisp:165-167); all removed by
-        # post_mortem_fix_font before any consumer sees the tree
-        self.markers: dict[int, str] = {}
 
     def add(self, name, attrs, text, parent) -> int:
         """Append a node with an empty subtree as the last child of
@@ -267,7 +261,7 @@ def _slow_token(dtd: Dtd, tk: Tokenizer, i: int):
     return None, i
 
 
-def sgml_parse(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
+def sgml_parse(dtd: Dtd, text: str) -> Doc:
     """Parse decoded text into a Doc rooted at a synthetic top node.
 
     This is the fused engine: tokenize + normalize + PDA in one loop over
@@ -276,15 +270,7 @@ def sgml_parse(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
     else runs the exact char machine from the piece's offset until the
     cursor is back on a piece boundary.  The differential fuzz and golden
     piece-boundary cases pin it serialization- and warning-identical to
-    the reference loop, _sgml_parse_ref, which tests call directly.
-
-    font_htag=True enables the reference's FONT-as-marker mode: FONT tags
-    bypass the PDA and land in the tree as HSTAG/HETAG marker nodes
-    (transition :1130-1134) for post_mortem_fix_font to pair and wrap.
-    The reference can never reach this path: tag-as-marker-p
-    (sgml-parse.lisp:1174-1178) discards its first `and` form, so the
-    default flags make it constantly nil -- this flag is the fixed,
-    opt-in variant SURVEY §7 promised."""
+    the reference loop, _sgml_parse_ref, which tests call directly."""
     tk = Tokenizer(text, dtd.entities)
     src = text
     n = len(src)
@@ -461,18 +447,6 @@ def sgml_parse(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
             if see is _DONE:
                 break
         kind = see[0]
-        if font_htag and see[1] == "FONT" and kind != "C":
-            # tag-as-marker: consume as an HSTAG/HETAG marker child of the
-            # current node, no stack change (transition :1130-1134 +
-            # :htag emission :1087-1104)
-            doc.markers[nn] = kind
-            d_name.append("FONT")
-            d_attrs.append(see[2] if kind == "S" else None)
-            d_text.append(None)
-            d_parent.append(s)
-            nn += 1
-            d_end.append(nn)
-            continue
         if kind == "S":
             act = smap.get(see[1])
         elif kind == "E":
@@ -570,8 +544,7 @@ def sgml_parse(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
     return doc
 
 
-def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer,
-                    font_htag: bool = False) -> Doc:
+def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer) -> Doc:
     """Direct transcription of the reference main loop (sgml-parse.lisp:
     1025-1106); kept as the differential-testing twin of the fused engine."""
     toks = list(normalized_tokens(tokenizer, dtd))
@@ -628,17 +601,6 @@ def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer,
                 d_text.append(see[1])
                 d_parent.append(s)
                 d_end.append(len(d_name))
-            continue
-        if font_htag and see[1] == "FONT":
-            # tag-as-marker (transition :1130-1134): HSTAG/HETAG marker
-            # node appended to the current node, no stack change
-            del ein[0]
-            doc.markers[len(d_name)] = kind
-            d_name.append("FONT")
-            d_attrs.append(see[2] if kind == "S" else None)
-            d_text.append(None)
-            d_parent.append(s)
-            d_end.append(len(d_name))
             continue
         if kind == "E" and top is not None and top[1] == see[1]:
             stack.pop()
@@ -912,202 +874,6 @@ def _relayout(doc: Doc, x: int, x_elts: list[int],
     doc.root = html
 
 
-# ---------------------------------------------------------------------------
-# FONT post-mortem (opt-in font_htag mode; sgml-parse.lisp:1398-1556,
-# 1665-1690).  Unreachable in the reference itself (tag-as-marker-p bug);
-# this is the fixed variant behind a flag.  It edits the tree in place, so
-# it runs on a list-of-lists view (`kids[n]`: n's child ids) that
-# post_mortem_fix_font builds from the flat layout and folds back into it.
-
-def _pt_path(doc: Doc, kids: list, nid: int) -> list[int] | None:
-    """Child-index path from doc.root to nid (pt-path equivalent)."""
-    path = []
-    while nid != doc.root:
-        p = doc.parent[nid]
-        if p < 0:
-            return None
-        path.append(kids[p].index(nid))
-        nid = p
-    path.reverse()
-    return path
-
-
-def _pt_access(doc: Doc, kids: list, path: list[int]) -> int:
-    nid = doc.root
-    for i in path:
-        nid = kids[nid][i]
-    return nid
-
-
-def _remove_pt(doc: Doc, kids: list, nid: int):
-    p = doc.parent[nid]
-    if p >= 0:
-        kids[p].remove(nid)
-    doc.parent[nid] = -1
-
-
-def _add_kid(doc: Doc, kids: list, name, attrs, parent: int) -> int:
-    nid = doc.add(name, attrs, None, parent)
-    kids.append([])
-    if parent >= 0:
-        kids[parent].append(nid)
-    return nid
-
-
-def map_htag_pairs(doc: Doc, kids: list, continuation, gi: str = "FONT"):
-    """Pre-order pairing of HSTAG/HETAG markers, inner pairs first
-    (map-htag-pairs, sgml-parse.lisp:1558-1586).  Iterative with an
-    explicit stack (round-6 verdict #5: a 1000+-deep repaired tree must
-    not hit the Python recursion limit in font_htag mode); like the
-    recursive original, a node's children are snapshotted before any
-    continuation mutation can reparent them, and marker nodes are not
-    descended into."""
-    stack: list[int] = []
-    markers = doc.markers
-    todo: list[int] = [doc.root]
-    while todo:
-        x = todo.pop()
-        m = markers.get(x)
-        if m == "S" and doc.name[x] == gi:
-            stack.append(x)
-        elif m == "E" and doc.name[x] == gi:
-            if not stack:
-                _remove_pt(doc, kids, x)
-                doc.warnings.append((4, f"Superfluous {gi} end tag."))
-            else:
-                continuation(stack.pop(), x)
-        else:
-            todo.extend(reversed(kids[x]))
-    if stack:
-        doc.warnings.append((4, f"Unclosed {gi} elements."))
-        new = []
-        for _ in stack:
-            nid = _add_kid(doc, kids, gi, None, doc.root)
-            doc.markers[nid] = "E"
-            new.append(nid)
-        for stag, etag in zip(stack, new):
-            continuation(stag, etag)
-
-
-_MUNGLE_MAX_DEPTH = 200
-
-
-def mungle_font_pair(dtd: Dtd, doc: Doc, kids: list, tag: int, s, e,
-                     depth: int = 0):
-    """Path-based wrap algorithm (mungle-font-pair, sgml-parse.lisp:1493-
-    1556), ported quirk-for-quirk: the prefix-equality guards on the
-    unequal-length branches are QUOTED in the reference (always true), so
-    those branches fire on length alone; we keep that behavior."""
-    if depth > _MUNGLE_MAX_DEPTH:
-        raise RecursionError("mungle-font-pair runaway")
-    if s == e:
-        return
-    if len(s) == len(e) and s[:-1] == e[:-1]:
-        if s[-1] > e[-1]:
-            # inverted span (possible after earlier mungles shift indices):
-            # the reference's before/after slicing would duplicate nodes
-            # here; treat as spanning nothing instead
-            return
-        p = _pt_access(doc, kids, s[:-1])
-        pinc = dtd.include.get(doc.name[p])
-        span = range(s[-1], e[-1])
-        ok = pinc is not None and "FONT" in pinc
-        if ok:
-            finc = dtd.include["FONT"]
-            for j in span:
-                cname = doc.name[kids[p][j]]
-                if cname not in finc:
-                    ok = False
-                    break
-        if ok:
-            between = kids[p][s[-1]:e[-1]]
-            # parent -1 skips the child-link append; the new FONT is
-            # wired in place of the span below
-            new = _add_kid(doc, kids, "FONT", doc.attrs[tag], -1)
-            doc.parent[new] = p
-            kids[new] = between
-            kids[p][s[-1]:e[-1]] = [new]
-            for k in between:
-                doc.parent[k] = new
-        else:
-            for i in span:
-                child = kids[p][i]
-                mungle_font_pair(
-                    dtd, doc, kids, tag,
-                    s[:-1] + [i, 0],
-                    s[:-1] + [i, len(kids[child])], depth + 1)
-        return
-    if len(s) < len(e):
-        v = e[:len(s)]
-        mungle_font_pair(dtd, doc, kids, tag, v + [0], e, depth + 1)
-        mungle_font_pair(dtd, doc, kids, tag, s, v, depth + 1)
-        return
-    if len(s) > len(e):
-        v = s[:len(e)]
-        mungle_font_pair(dtd, doc, kids, tag, v[:-1] + [v[-1] + 1], e,
-                         depth + 1)
-        m = len(kids[_pt_access(doc, kids, v)])
-        mungle_font_pair(dtd, doc, kids, tag, s, v + [m], depth + 1)
-        return
-    # equal length, different interior: split at first divergence (:1541-1553)
-    i = 0
-    while i < len(s) and i < len(e) and s[i] == e[i]:
-        i += 1
-    v1 = s[:i] + [s[i] + 1]
-    mungle_font_pair(dtd, doc, kids, tag, s, v1, depth + 1)
-    mungle_font_pair(dtd, doc, kids, tag, v1, e, depth + 1)
-
-
-def post_mortem_fix_font(doc: Doc, dtd: Dtd) -> Doc:
-    """Pair every HSTAG/HETAG FONT marker and wrap the spanned content in
-    real FONT elements (post-mortem/fix-font, sgml-parse.lisp:1665-1690),
-    then lay the edited tree out in pre-order again."""
-    kids: list[list[int]] = [[] for _ in doc.name]
-    for k, p in enumerate(doc.parent):
-        if p >= 0:
-            kids[p].append(k)
-    pairs: list[tuple[int, int]] = []
-    map_htag_pairs(doc, kids, lambda st, et: pairs.append((st, et)), "FONT")
-    for stag, etag in pairs:
-        s = _pt_path(doc, kids, stag)
-        _remove_pt(doc, kids, stag)
-        e = _pt_path(doc, kids, etag)
-        _remove_pt(doc, kids, etag)
-        if s is not None and e is not None:
-            mungle_font_pair(dtd, doc, kids, stag, s, e)
-    doc.markers.clear()
-    _flatten(doc, kids)
-    return doc
-
-
-def _flatten(doc: Doc, kids: list):
-    """Renumber doc in the pre-order of the `kids` view from doc.root
-    (which becomes id 0); the nodes outside the tree follow, detached."""
-    old = []                   # old id per new id
-    new_of = [-1] * len(kids)
-    n_end = []
-    todo = [doc.root]
-    while todo:
-        x = todo.pop()
-        if x < 0:              # ~x closes: its subtree is laid out
-            n_end[new_of[~x]] = len(old)
-            continue
-        new_of[x] = len(old)
-        old.append(x)
-        n_end.append(0)
-        todo.append(~x)
-        todo.extend(reversed(kids[x]))
-    n_end.extend(range(len(old) + 1, len(kids) + 1))
-    old.extend(k for k in range(len(kids)) if new_of[k] < 0)
-    name, attrs, text, parent = doc.name, doc.attrs, doc.text, doc.parent
-    doc.name = [name[k] for k in old]
-    doc.attrs = [attrs[k] for k in old]
-    doc.text = [text[k] for k in old]
-    doc.parent = [new_of[parent[k]] if new_of[k] > 0 else -1 for k in old]
-    doc.end = n_end
-    doc.root = 0
-
-
 def check_saneness(doc: Doc, dtd: Dtd) -> list[str]:
     """Runnable port of check-saneness (sgml-parse.lisp:1630-1638): walk the
     tree and report (a) children not allowed by the parent's DTD inclusion
@@ -1129,14 +895,11 @@ def check_saneness(doc: Doc, dtd: Dtd) -> list[str]:
     return out
 
 
-def parse_html(dtd: Dtd, text: str, font_htag: bool = False) -> Doc:
+def parse_html(dtd: Dtd, text: str) -> Doc:
     """Full parse: PDA + post-mortem (post-mortem-heuristic order,
-    sgml-parse.lisp:1326-1331: fix-font first when enabled, then
-    fix-top-level).  font_htag=False matches the reference's observable
-    default behavior, where the tag-as-marker-p bug makes the FONT HTAG
-    machinery unreachable; font_htag=True opts into the fixed variant."""
-    doc = sgml_parse(dtd, text, font_htag=font_htag)
-    if font_htag:
-        post_mortem_fix_font(doc, dtd)
+    sgml-parse.lisp:1326-1331).  Only fix-top-level runs: the
+    tag-as-marker-p bug makes the reference's fix-font unreachable, so
+    FONT goes through the PDA like any other element."""
+    doc = sgml_parse(dtd, text)
     post_mortem_fix_top_level(doc)
     return doc

@@ -160,8 +160,8 @@ def _escape_dtd_string(data: str) -> str:
                 .replace("\n", "&#10;").replace("\r", "&#13;"))
 
 
-def doctype_string(name: str, public_id: str | None = None,
-                   system_id: str | None = None) -> str:
+def doctype_string(name: str, public_id: str | None,
+                   system_id: str | None) -> str:
     """hax:start-document's doctype branch (unparse.lisp:68-84): a
     doctype is emitted IFF a non-empty system-id is supplied -- PUBLIC
     form when a public-id is also given, SYSTEM form otherwise; ids are

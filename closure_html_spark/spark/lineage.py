@@ -14,7 +14,7 @@ the url-hash bucket:
     recomputed or rewritten (idempotent restart).
 
 Skew: CC host distributions are Zipfian.  `salt_skewed` splits any bucket
-whose row count exceeds `skew_factor` x median across extra salt buckets
+whose row count exceeds SKEW_FACTOR x median across extra salt buckets
 before the parse stage, so one hot host cannot stall a partition.
 parse/extract is embarrassingly parallel, so salting is always safe here
 (no key-locality requirement).
@@ -32,6 +32,13 @@ from .pipeline import extract_pages
 LINEAGE_SCHEMA = ("bucket int, input_count long, output_count long, "
                   "warn_count long, wall_sec double, status string, "
                   "run_id string")
+# salt_skewed: the key it salts, the hot-key cut (count > SKEW_FACTOR x
+# median), the salt range, and the most hot keys that ride the plan as an
+# isin literal
+SALT_KEY = "url_host"
+SKEW_FACTOR = 4.0
+N_SALT = 8
+MAX_LITERAL_KEYS = 1000
 
 
 def with_bucket(df: DataFrame, n_buckets: int) -> DataFrame:
@@ -49,33 +56,34 @@ def completed_buckets(spark: SparkSession, output_dir: str) -> set[int]:
     return {r["bucket"] for r in rows}
 
 
-def salt_skewed(df: DataFrame, key: str = "url_host",
-                skew_factor: float = 4.0, n_salt: int = 8,
-                max_literal_keys: int = 1000) -> DataFrame:
-    """Add a `salt` column: 0 for normal keys, 0..n_salt-1 (hash-derived,
-    deterministic) for keys whose frequency exceeds skew_factor x median.
-    Callers repartition on (key, salt) to split hot keys.
+def salt_skewed(df: DataFrame) -> DataFrame:
+    """Add a `salt` column: 0 for normal SALT_KEY values, 0..N_SALT-1
+    (hash-derived, deterministic) for values whose frequency exceeds
+    SKEW_FACTOR x median.  Callers repartition on (SALT_KEY, salt) to
+    split hot keys.
 
     Hot-key detection is eager either way (approxQuantile runs a job),
     so the hot set is materialized ONCE here instead of re-running the
     corpus-wide groupBy lazily inside every downstream stage (measured:
     the recompute erased the salting win on the skew bench leg).  Up to
-    `max_literal_keys` hot keys ride the plan as an isin literal (pure
+    MAX_LITERAL_KEYS hot keys ride the plan as an isin literal (pure
     map-side, no join); a pathologically flat distribution beyond that
     falls back to a broadcast semi-structure.  Hot keys are >
-    skew_factor x median by definition, so the count is bounded by
-    N_rows / (skew_factor * median) -- small for any Zipf-like corpus."""
-    counts = df.groupBy(key).agg(F.count(F.lit(1)).alias("_cnt"))
+    SKEW_FACTOR x median by definition, so the count is bounded by
+    N_rows / (SKEW_FACTOR * median) -- small for any Zipf-like corpus."""
+    counts = df.groupBy(SALT_KEY).agg(F.count(F.lit(1)).alias("_cnt"))
     median = counts.approxQuantile("_cnt", [0.5], 0.01)[0] or 1.0
-    hot_df = counts.filter(F.col("_cnt") > skew_factor * median).select(key)
-    hot_keys = [r[0] for r in hot_df.limit(max_literal_keys + 1).collect()]
-    salted = F.pmod(F.xxhash64("url"), F.lit(n_salt)).cast("int")
-    if len(hot_keys) <= max_literal_keys:
-        is_hot = F.col(key).isin(hot_keys) if hot_keys else F.lit(False)
+    hot_df = counts.filter(F.col("_cnt") > SKEW_FACTOR * median) \
+        .select(SALT_KEY)
+    hot_keys = [r[0] for r in hot_df.limit(MAX_LITERAL_KEYS + 1).collect()]
+    salted = F.pmod(F.xxhash64("url"), F.lit(N_SALT)).cast("int")
+    if len(hot_keys) <= MAX_LITERAL_KEYS:
+        is_hot = (F.col(SALT_KEY).isin(hot_keys) if hot_keys
+                  else F.lit(False))
         return df.withColumn(
             "salt", F.when(is_hot, salted).otherwise(F.lit(0)))
     hot = hot_df.withColumn("_hot", F.lit(True))
-    return (df.join(F.broadcast(hot), key, "left")
+    return (df.join(F.broadcast(hot), SALT_KEY, "left")
             .withColumn(
                 "salt",
                 F.when(F.col("_hot").isNotNull(), salted)
@@ -109,16 +117,15 @@ def _cleanup_incomplete_buckets(spark: SparkSession, output_dir: str,
 
 
 def run_extraction_with_lineage(spark: SparkSession, pages: DataFrame,
-                                output_dir: str, n_buckets: int = 64,
-                                group_size: int = 16,
-                                run_id: str | None = None) -> dict:
+                                output_dir: str, n_buckets: int,
+                                group_size: int) -> dict:
     """Extract `pages` into parquet partitioned by url-hash bucket, with a
     lineage manifest per bucket group; re-running after a failure skips
     completed buckets (resume via anti-join on the manifest).
 
     Returns {"processed": [...buckets...], "skipped": [...], "run_id": ...}.
     """
-    run_id = run_id or f"run-{int(time.time() * 1000)}"
+    run_id = f"run-{int(time.time() * 1000)}"
     pages_b = with_bucket(pages, n_buckets)
 
     done = completed_buckets(spark, output_dir)

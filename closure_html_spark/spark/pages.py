@@ -43,7 +43,7 @@ _NAV = ("<div id=nav><a href=/>home</a> <a href=/about>about</a></div>")
 _FOOTER = ('<div class=footer><a href=/c>contact</a> &copy; 2026</div>')
 
 
-def _template(variant: int, title_expr, esc_text, heavy: int = 1):
+def _template(variant: int, title_expr, esc_text, heavy: int):
     head = F.concat(F.lit("<html><head><title>"), title_expr,
                     F.lit("</title></head><body>"))
     par = F.concat(F.lit("<p>"), esc_text, F.lit("</p>"))

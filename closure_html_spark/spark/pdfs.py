@@ -59,8 +59,7 @@ def pdfs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
                        "text")
 
 
-def pdf_extract_pages(df: DataFrame,
-                      id_cols: tuple[str, ...] = ("doc_id",)) -> DataFrame:
+def pdf_extract_pages(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """mapInArrow PDF text extraction over a `pdf binary` column."""
     import pyarrow as pa
 

@@ -54,7 +54,7 @@ _DEFAULT_COLS = tuple(k for k in RESULT_COL_DDL
                       if k not in ("links", "anchors", "base"))
 
 
-def _doc_links_base(doc, want_anchors: bool = True) \
+def _doc_links_base(doc, want_anchors: bool) \
         -> tuple[list[str], list[str], str | None]:
     """The crawl-frontier outlink feed (HREF values of <A> nodes in
     document order), the anchor text of each link (concatenated pcdata of
@@ -91,7 +91,10 @@ def _doc_links_base(doc, want_anchors: bool = True) \
     return out, anchors, base
 
 
-MAX_DOC_BYTES_DEFAULT = 64 * 1024 * 1024  # 64 MiB
+# every parse stage's per-document byte cap (_parsed_docs): the deployment
+# memory bound SCALE.md's worker-sizing rule is written in.  The stages'
+# worker closures ship the driver's value.
+MAX_DOC_BYTES = 64 * 1024 * 1024  # 64 MiB
 
 # extract_pages' row for a document whose processing raised, in the order
 # its work() returns: title, extracted_text, spans, links, anchors, base,
@@ -99,8 +102,7 @@ MAX_DOC_BYTES_DEFAULT = 64 * 1024 * 1024  # 64 MiB
 _ERROR_ROW = ("", "", (), (), (), None, 0, -1, (0, 0, 0, 0, 0), "")
 
 
-def _parsed_docs(batch, work,
-                 max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT):
+def _parsed_docs(batch, work, max_doc_bytes: int):
     """The per-document loop of every parse stage: yields exactly one
     (idx, result, charset) per row of the Arrow `batch`, in order, where
     result is `work(text)` on the row's decoded `html`.
@@ -125,7 +127,7 @@ def _parsed_docs(batch, work,
     for idx, raw in enumerate(htmls):
         try:
             raw_b = bytes(raw)
-            oversize = max_doc_bytes is not None and len(raw_b) > max_doc_bytes
+            oversize = len(raw_b) > max_doc_bytes
             if oversize:
                 raw_b = raw_b[:max_doc_bytes]
             text, cs = decode_html(
@@ -165,9 +167,7 @@ def _out_batch(batch, ids: list[str], arrays: list, arrow_schema, take=None):
 
 
 def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
-                  columns: tuple[str, ...] | None = None,
-                  max_doc_bytes: int | None = MAX_DOC_BYTES_DEFAULT
-                  ) -> DataFrame:
+                  columns: tuple[str, ...] | None = None) -> DataFrame:
     """Parse + extract every page.  Keeps `id_cols` as passthrough keys.
 
     One mapInArrow stage assembling the output columns directly as
@@ -175,12 +175,12 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     built as ListArrays from flat primitive arrays (no per-span dict
     objects), and id columns pass through zero-copy from the input batch.
 
-    max_doc_bytes: per-document byte cap (default 64 MiB, None disables).
-    The session's Arrow batch caps bound the BATCH, but one pathological
-    page -- a 500 MB binary mislabeled text/html -- is still one row
-    inside it, and parse output (node arrays, spans, serialized text) is
-    proportional to input, so a single such row can blow a worker's
-    memory at 10^12-document scale.  Oversize pages are truncated to the
+    MAX_DOC_BYTES is the per-document byte cap (64 MiB), as in every
+    parse stage.  The session's Arrow batch caps bound the BATCH, but one
+    pathological page -- a 500 MB binary mislabeled text/html -- is still
+    one row inside it, and parse output (node arrays, spans, serialized
+    text) is proportional to input, so a single such row can blow a
+    worker's memory at 10^12-document scale.  Oversize pages are truncated to the
     cap and parsed normally (the reference's own buffered xstream reads
     never require whole-document lookahead), with the row marked
     charset='error:oversize' and one level-5 parse warning counted --
@@ -266,7 +266,7 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
             lk_off, lk_flat, an_flat = [0], [], []
             bases = []
             wl_flat = []
-            for _, row, cs in _parsed_docs(batch, work, max_doc_bytes):
+            for _, row, cs in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 (title_v, text_v, spans_v, links_v, anchors_v, base_v,
                  nn, nw, lv, main_v) = row or _ERROR_ROW
                 if cs == "error:oversize":
@@ -350,7 +350,7 @@ def serialize_pages(df: DataFrame,
 
         for batch in batches:
             outs = [out if out is not None else ""
-                    for _, out, _ in _parsed_docs(batch, work)]
+                    for _, out, _ in _parsed_docs(batch, work, MAX_DOC_BYTES)]
             yield _out_batch(batch, ids, [pa.array(outs, pa.string())],
                              arrow_schema)
 
@@ -387,7 +387,7 @@ def nodes_of(df: DataFrame,
             node_id, parent_id, depth_c = [], [], []
             name_c, text_c = [], []
             at_off, at_k, at_v = [0], [], []
-            for idx, doc, _ in _parsed_docs(batch, work):
+            for idx, doc, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 if doc is None:
                     continue
                 # the tree is the id range [root, end[root]), already in
@@ -428,8 +428,7 @@ def nodes_of(df: DataFrame,
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def tokens_of(df: DataFrame,
-              id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
+def tokens_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Exploded `tokens` table (FIXTURES.md §2): the raw lexer output, one
     row per token -- the debugging/inspection surface for the tokenizer.
     Same flat-array + MapArray + take() assembly as nodes_of (no
@@ -454,7 +453,7 @@ def tokens_of(df: DataFrame,
             row_idx = []
             pos_c, kind_c, name_c, text_c = [], [], [], []
             at_off, at_k, at_v = [0], [], []
-            for idx, toks, _ in _parsed_docs(batch, work):
+            for idx, toks, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 if toks is None:
                     continue
                 for pos, tok in enumerate(toks):
@@ -496,8 +495,7 @@ def tokens_of(df: DataFrame,
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def bookmarks_of(df: DataFrame,
-                 id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
+def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Parse NETSCAPE-Bookmark-file-1 payloads (the reference's second
     catalog DTD) into (folder_path, link_title, href) rows -- demonstrates
     the multi-DTD parse surface (`sgml-parse dtd input`).  Same take()
@@ -518,7 +516,7 @@ def bookmarks_of(df: DataFrame,
 
         for batch in batches:
             row_idx, folder_c, title_c, href_c = [], [], [], []
-            for idx, doc, _ in _parsed_docs(batch, work):
+            for idx, doc, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 if doc is None:
                     continue
 
@@ -561,8 +559,7 @@ def bookmarks_of(df: DataFrame,
 
 # --- structured extraction stages (round 7) ----------------------------------
 
-def tables_of(df: DataFrame,
-              id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
+def tables_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Exploded `cells` table: one row per TD/TH of every <table> in the
     repaired DOM -- (table_idx, row_idx, col_idx, tag, cell).  Same
     shuffle-free mapInArrow shape as nodes_of: flat primitive lists ->
@@ -587,7 +584,7 @@ def tables_of(df: DataFrame,
         for batch in batches:
             row_idx = []
             t_c, r_c, c_c, tag_c, cell_c = [], [], [], [], []
-            for idx, rows, _ in _parsed_docs(batch, work):
+            for idx, rows, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 for (t, r, c, tag, cell) in rows or ():
                     row_idx.append(idx)
                     t_c.append(t)
@@ -608,8 +605,7 @@ def tables_of(df: DataFrame,
 _META_FIELDS = ("title", "description", "og_title", "canonical", "h1")
 
 
-def metadata_of(df: DataFrame,
-                id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
+def metadata_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Per-page head metadata (title / meta description / og:title /
     canonical link / first h1): exactly one output row per input page
     (a malformed document yields the all-'' row, so ingest accounting
@@ -630,7 +626,7 @@ def metadata_of(df: DataFrame,
 
         for batch in batches:
             cols = {f: [] for f in _META_FIELDS}
-            for _, md, _ in _parsed_docs(batch, work):
+            for _, md, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 md = md or empty
                 for f in _META_FIELDS:
                     cols[f].append(md[f])
@@ -641,8 +637,7 @@ def metadata_of(df: DataFrame,
     return df.select(*ids, "html").mapInArrow(fn, schema)
 
 
-def jsonld_of(df: DataFrame,
-              id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
+def jsonld_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """One row per <script type=application/ld+json> block: (ld_idx,
     json) with the payload verbatim.  Schema-aware parsing stays JVM-side
     -- compose with F.from_json, never a Python json.loads stage.  A
@@ -663,7 +658,7 @@ def jsonld_of(df: DataFrame,
 
         for batch in batches:
             row_idx, idx_c, json_c = [], [], []
-            for idx, payloads, _ in _parsed_docs(batch, work):
+            for idx, payloads, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
                 for i, payload in enumerate(payloads or ()):
                     row_idx.append(idx)
                     idx_c.append(i)

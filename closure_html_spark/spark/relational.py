@@ -47,12 +47,12 @@ N_QUERIES = 3
 # the embedding near-dup cosine cut: embedding_neardup(_lsh),
 # neardup_clusters and semantic_dedup
 COSINE_MIN = 0.4
-# random-hyperplane LSH band count, and the band width (bits per band) the
-# gate pins, which equals lsh_band_bits(500) at the sf0.01 gate's 500 rows
+# random-hyperplane LSH band count, and the floor of lsh_band_bits (bits
+# per band), which is its value at every corpus of up to 2^14 rows and the
+# width the LSH oracles are built at
 RHP_BANDS = 8
 BAND_BITS = 4
-# IVF cells probed per query, and the cell count the gate pins (the
-# ivf_n_cells floor)
+# IVF cells probed per query, and the IVF cell count
 N_PROBE = 4
 N_CELLS = 16
 # product quantization: subspaces per vector, sub-centroids per subspace
@@ -707,7 +707,7 @@ def _emb_matrix_bcast(emb, local):
     return emb.sparkSession.sparkContext.broadcast((ids, mat, norms))
 
 
-def _np_pair_dot_bcast(pairs, bc, a_id: str = "a_id", b_id: str = "b_id"):
+def _np_pair_dot_bcast(pairs, bc, a_id: str, b_id: str):
     """(a_id, b_id, dot, a_norm, b_norm) from an ids-only pair frame and
     the broadcast embedding matrix: the heavy bytes cross the Python
     boundary never (guide §8 -- decide with small rows); the dot is the
@@ -1578,9 +1578,10 @@ ORDER BY doc_id, rnk
 """
 
 
-def pagerank(edges, n_nodes: int | None = None):
-    """PageRank over an (src, dst) edge DataFrame -- the web-graph rank
-    that feeds crawl prioritization and quality weighting.  Simplified
+def pagerank(edges, n_nodes: int):
+    """PageRank over an (src, dst) edge DataFrame of n_nodes distinct
+    nodes -- the web-graph rank that feeds crawl prioritization and
+    quality weighting.  Simplified
     (dangling mass leaks, like the original formulation) so a SQL oracle
     can replay it exactly.  Iterative ids+rank joins with localCheckpoint
     per round (the distributed-loop pattern _star_components also uses):
@@ -1588,9 +1589,8 @@ def pagerank(edges, n_nodes: int | None = None):
     groupBy on dst -- ranks are (id, double) rows, never wider."""
     nodes = edges.select(F.col("src").alias("id")) \
         .union(edges.select(F.col("dst").alias("id"))).distinct()
-    n = n_nodes if n_nodes is not None else nodes.count()
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    ranks = nodes.select("id", F.lit(1.0 / n).alias("rank"))
+    ranks = nodes.select("id", F.lit(1.0 / n_nodes).alias("rank"))
     damping = PAGERANK_DAMPING
     for _ in range(PAGERANK_ITERS):
         contribs = (edges.join(ranks, edges["src"] == ranks["id"])
@@ -1600,7 +1600,7 @@ def pagerank(edges, n_nodes: int | None = None):
         sums = contribs.groupBy("id").agg(F.sum("c").alias("s"))
         ranks = (nodes.join(sums, "id", "left")
                  .select("id",
-                         (F.lit((1.0 - damping) / n) +
+                         (F.lit((1.0 - damping) / n_nodes) +
                           F.lit(damping) * F.coalesce("s", F.lit(0.0)))
                          .alias("rank"))
                  .localCheckpoint())
@@ -1926,14 +1926,18 @@ FROM bands GROUP BY band, bucket HAVING COUNT(*) > 1
 ORDER BY band, bucket
 """
 
-# DuckDB replay of q_minhash_est_pairs (same signature constants)
-ORACLE_MINHASH_EST = f"""
-WITH {_minhash_ctes()},
+# the MinHash signature CTEs plus cand(a_id, b_id), the pairs that share a
+# band bucket
+_MINHASH_CAND_CTES = f"""{_minhash_ctes()},
 cand AS (
   SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
   FROM bands a JOIN bands b
     ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
+)"""
+
+# DuckDB replay of q_minhash_est_pairs (same signature constants)
+ORACLE_MINHASH_EST = f"""
+WITH {_MINHASH_CAND_CTES},
 est AS (
   SELECT c.a_id, c.b_id,
          {_EST_JACCARD_SQL} AS est_jaccard
@@ -1970,12 +1974,7 @@ def q_text_dedup_clusters(spark, sf_dir):
 
 # the text_dedup pairs of ORACLE_MINHASH_EST's graph at TEXT_DEDUP_MIN, as
 # near(a_id, b_id)
-_TEXT_NEAR_CTES = f"""{_minhash_ctes()},
-cand AS (
-  SELECT DISTINCT a.doc_id AS a_id, b.doc_id AS b_id
-  FROM bands a JOIN bands b
-    ON a.band = b.band AND a.bucket = b.bucket AND a.doc_id < b.doc_id
-),
+_TEXT_NEAR_CTES = f"""{_MINHASH_CAND_CTES},
 near AS (
   SELECT c.a_id, c.b_id
   FROM cand c
@@ -2336,18 +2335,21 @@ def q_embedding_neardup(spark, sf_dir):
             .orderBy("a_id", "b_id"))
 
 
+# the embedding oracles' cosine of the rows aliased {a} and {b}: the dot
+# over the product of norms, rounded to 6 places like the Spark side
+_COS_SQL = ("ROUND(list_dot_product({a}.embedding::DOUBLE[], "
+            "{b}.embedding::DOUBLE[]) / "
+            "(sqrt(list_dot_product({a}.embedding::DOUBLE[], "
+            "{a}.embedding::DOUBLE[])) * "
+            "sqrt(list_dot_product({b}.embedding::DOUBLE[], "
+            "{b}.embedding::DOUBLE[]))), 6)")
+
 ORACLE_EMBEDDING_NEARDUP = f"""
 SELECT a.vec_id AS a_id, b.vec_id AS b_id,
-       ROUND(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
-             (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
-              sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))),
-             6) AS sim
+       {_COS_SQL.format(a="a", b="b")} AS sim
 FROM embeddings a CROSS JOIN embeddings b
 WHERE a.vec_id < b.vec_id
-  AND ROUND(list_dot_product(a.embedding::DOUBLE[], b.embedding::DOUBLE[]) /
-        (sqrt(list_dot_product(a.embedding::DOUBLE[], a.embedding::DOUBLE[])) *
-         sqrt(list_dot_product(b.embedding::DOUBLE[], b.embedding::DOUBLE[]))),
-        6) >= {COSINE_MIN}
+  AND {_COS_SQL.format(a="a", b="b")} >= {COSINE_MIN}
 ORDER BY a_id, b_id
 """
 
@@ -2357,23 +2359,6 @@ def _embeddings_n_rows(emb: DataFrame, sf_dir: str) -> int:
     resort) a count() scan job."""
     n = _parquet_n_rows(sf_dir, "embeddings")
     return n if n is not None else emb.count()
-
-
-def ivf_n_cells(n_rows: int) -> int:
-    """Corpus-sized IVF cell count: n_cells = clamp(round(sqrt(N)), N_CELLS,
-    2^16).
-
-    sqrt(N) cells put expected cell occupancy at sqrt(N), so a query's
-    N_PROBE probes touch ~N_PROBE*sqrt(N) rows and the build-side
-    assignment broadcast carries sqrt(N) centroids -- both sublinear in N
-    (the standard IVF-Flat balance point; SCALE.md §ANN).  Examples:
-    N=500 -> 22, N=10^6 -> 1000, N=10^9 -> 31623.  The 2^16 cap bounds
-    the broadcast size (2^16 centroids x 64 floats = 32 MB).  Mirrors
-    lsh_band_bits; asserted by tests/test_lsh_scale.py."""
-    import math
-    if n_rows <= 1:
-        return N_CELLS
-    return max(N_CELLS, min(1 << 16, round(math.sqrt(n_rows))))
 
 
 def lsh_band_bits(n_rows: int) -> int:
@@ -2451,13 +2436,13 @@ def _rhp_bands_np(emb, band_bits: int):
                        F.struct("band", "val").alias("bk"))
 
 
-def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None):
+def q_embedding_neardup_lsh(spark, sf_dir):
     """Scale path for embedding near-dup: random-hyperplane LSH bucket
     self-join + exact cosine rerank, instead of the O(N^2) crossJoin.
 
     A pair is a candidate iff ANY of the RHP_BANDS band values matches -- a
     bucket equi-join whose size is sum over buckets of |bucket|^2, not N^2.
-    band_bits defaults to lsh_band_bits(N) (~1024 expected rows/bucket =>
+    band_bits is lsh_band_bits(N) (~1024 expected rows/bucket =>
     candidates linear in N); only (vec_id, band, val) flows through the
     banding shuffle -- vectors meet the candidate pairs only in
     _cosine_rerank, so the 64-float vector is never amplified x
@@ -2482,18 +2467,15 @@ def q_embedding_neardup_lsh(spark, sf_dir, band_bits: int | None = None):
 
     Self-sizing reads N from parquet footer statistics (no scan job);
     for an input that is not a local parquet table it counts the rows
-    (one scan job) unless band_bits is passed."""
-    return _embedding_near_pairs(spark, sf_dir, band_bits) \
-        .orderBy("a_id", "b_id")
+    (one scan job)."""
+    return _embedding_near_pairs(spark, sf_dir).orderBy("a_id", "b_id")
 
 
-def _embedding_near_pairs(spark, sf_dir, band_bits: int | None):
+def _embedding_near_pairs(spark, sf_dir):
     """The (a_id, b_id, sim) rows of q_embedding_neardup_lsh in no
     order: the query sorts them, connected_components needs no sort."""
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
-    if band_bits is None:
-        band_bits = lsh_band_bits(n)
     # round-8 (guide §4.2 + §2.4): signatures come from ONE numpy
     # mapInArrow pass (bit-identical fold, see _rhp_bands_np) and the tiny
     # (vec_id, bk) frame is materialized once -- the interpreted banding
@@ -2501,13 +2483,13 @@ def _embedding_near_pairs(spark, sf_dir, band_bits: int | None):
     # plans/r08/embedding_neardup_lsh_before.txt shows the duplicated
     # Generate), at scan parallelism 1.  The distinct after the cosine
     # cut gives ANY-band semantics.
-    pairs = _candidate_pairs(_rhp_bands_np(emb, band_bits), "vec_id",
+    pairs = _candidate_pairs(_rhp_bands_np(emb, lsh_band_bits(n)), "vec_id",
                              ["bk"])
     return _cosine_rerank(pairs, emb, _local_emb_table(sf_dir), n,
                           min_sim=COSINE_MIN).distinct()
 
 
-def q_ann_lsh_topk(spark, sf_dir, band_bits: int | None = None):
+def q_ann_lsh_topk(spark, sf_dir):
     """LSH-bucketed approximate top-k: the scale path for similarity search.
 
     Banded OR-construction over random-hyperplane bits (RHP_BANDS tables of
@@ -2524,12 +2506,10 @@ def q_ann_lsh_topk(spark, sf_dir, band_bits: int | None = None):
     non-local-parquet input costs one count() job."""
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
-    if band_bits is None:
-        band_bits = lsh_band_bits(n)
     # round 8: same kernel + materialize-once treatment as
     # q_embedding_neardup_lsh (the interpreted banding previously ran
     # twice -- query side and corpus side)
-    banded = _rhp_bands_np(emb, band_bits).localCheckpoint(eager=True)
+    banded = _rhp_bands_np(emb, lsh_band_bits(n)).localCheckpoint(eager=True)
     qs = (banded.filter(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("q_id"), F.col("bk").alias("q_bk")))
     cands = (F.broadcast(qs).join(banded, qs.q_bk == banded.bk)
@@ -2568,24 +2548,24 @@ banded AS (
 )"""
 
 
-# DuckDB replay of q_embedding_neardup_lsh at band_bits=BAND_BITS
-ORACLE_EMBEDDING_NEARDUP_LSH = f"""
-WITH {_rhp_oracle_ctes()},
-pairs AS (
+# the LSH candidate pairs of the banded sign bits and their cosines, as
+# sims(a_id, b_id, sim)
+_LSH_SIMS_CTES = f"""pairs AS (
   SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
   FROM banded a JOIN banded b
     ON a.band = b.band AND a.val = b.val AND a.vec_id < b.vec_id
 ),
 sims AS (
-  SELECT p.a_id, p.b_id,
-         ROUND(list_dot_product(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) /
-               (sqrt(list_dot_product(ea.embedding::DOUBLE[], ea.embedding::DOUBLE[])) *
-                sqrt(list_dot_product(eb.embedding::DOUBLE[], eb.embedding::DOUBLE[]))),
-               6) AS sim
+  SELECT p.a_id, p.b_id, {_COS_SQL.format(a="ea", b="eb")} AS sim
   FROM pairs p
   JOIN embeddings ea ON ea.vec_id = p.a_id
   JOIN embeddings eb ON eb.vec_id = p.b_id
-)
+)"""
+
+# DuckDB replay of q_embedding_neardup_lsh at band_bits=BAND_BITS
+ORACLE_EMBEDDING_NEARDUP_LSH = f"""
+WITH {_rhp_oracle_ctes()},
+{_LSH_SIMS_CTES}
 SELECT a_id, b_id, sim FROM sims WHERE sim >= {COSINE_MIN}
 ORDER BY a_id, b_id
 """
@@ -2600,11 +2580,7 @@ cand AS (
     ON q.band = b.band AND q.val = b.val AND b.vec_id <> q.q_id
 ),
 sims AS (
-  SELECT c.q_id, c.vec_id,
-         ROUND(list_dot_product(eq.embedding::DOUBLE[], ev.embedding::DOUBLE[]) /
-               (sqrt(list_dot_product(eq.embedding::DOUBLE[], eq.embedding::DOUBLE[])) *
-                sqrt(list_dot_product(ev.embedding::DOUBLE[], ev.embedding::DOUBLE[]))),
-               6) AS sim
+  SELECT c.q_id, c.vec_id, {_COS_SQL.format(a="eq", b="ev")} AS sim
   FROM cand c
   JOIN embeddings eq ON eq.vec_id = c.q_id
   JOIN embeddings ev ON ev.vec_id = c.vec_id
@@ -2635,57 +2611,54 @@ def _ivf_candidates(pairs, cells):
             .select("q_id", "vec_id"))
 
 
-def q_ann_ivf_topk(spark, sf_dir, n_cells: int | None = None):
-    """IVF-Flat approximate top-k: the coarse-quantizer counterpart to the
-    RHP-LSH path.  Vectors partition into n_cells Voronoi cells around
-    DETERMINISTIC sampled centroids (every ceil(N/n_cells)-th vec_id --
-    no RNG, so the DuckDB oracle replays the whole index bit-for-bit); a
-    query scans only its N_PROBE nearest cells, i.e. ~N_PROBE/n_cells of
-    the corpus instead of an O(N) scan.
-
-    Scale shape: the build-side assignment is one broadcast of n_cells
-    centroids x a partial-aggregating max(struct(sim, -c_id)) groupBy --
-    map-side combined, no window over the N x n_cells pair rows; probes
-    and rerank touch only candidate cells.  n_cells defaults to
-    ivf_n_cells(N) ~ sqrt(N) (cell occupancy sqrt(N) => probe cost
-    N_PROBE*sqrt(N), sublinear); N comes from parquet footer stats, no
-    scan job (a non-local-parquet input costs one count() job)."""
+def _ivf_cells(emb, local, n):
+    """The IVF coarse quantizer (the blocking stage in SparkER's sense):
+    (vec_id, c_id, sim_c) sims of every vector to the N_CELLS centroids,
+    the DETERMINISTIC every ceil(N/N_CELLS)-th vec_id (no RNG, so the
+    DuckDB oracles replay the index bit-for-bit), materialized once for
+    its two consumers; and each vector's (vec_id, cell), the nearest
+    centroid.  Sims come from the _np_cent_sims kernel (raw division in
+    the kernel, 6dp round here).  The argmax is a max(struct(sim,
+    -c_id)) partial aggregate (map-side combined, no window over the
+    N x N_CELLS pair rows), ties to the smallest centroid id."""
     import math
-    emb = _t(spark, sf_dir, "embeddings")
-    n = _embeddings_n_rows(emb, sf_dir)
-    local = _local_emb_table(sf_dir)
-    if n_cells is None:
-        n_cells = ivf_n_cells(n)
-    step = max(1, math.ceil(n / n_cells))
-    # round 8: assignment sims from the _np_cent_sims kernel (raw division
-    # in the kernel, 6dp round here -- bit-identical), the pair frame
-    # materialized once for its two consumers (cells + probes)
+    step = max(1, math.ceil(n / N_CELLS))
     c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
     pairs = (_np_cent_sims(emb, c_ids, c_mat)
              .select("vec_id", "c_id",
                      F.round(F.col("raw"), 6).alias("sim_c"))
              .localCheckpoint(eager=True))
-    # nearest centroid via max(struct(sim, -c_id)): partial agg (map-side
-    # combine), deterministic tie-break to the smallest centroid id
     cells = (pairs.groupBy("vec_id")
              .agg(F.max(F.struct(F.col("sim_c").alias("s"),
                                  (-F.col("c_id")).alias("nc"))).alias("m"))
              .select("vec_id", (-F.col("m.nc")).alias("cell")))
+    return pairs, cells
+
+
+def q_ann_ivf_topk(spark, sf_dir):
+    """IVF-Flat approximate top-k: the coarse-quantizer counterpart to the
+    RHP-LSH path.  Vectors partition into N_CELLS Voronoi cells around
+    sampled centroids (_ivf_cells); a query scans only its N_PROBE
+    nearest cells, i.e. ~N_PROBE/N_CELLS of the corpus instead of an
+    O(N) scan.
+
+    Scale shape: the build-side assignment is one broadcast of N_CELLS
+    centroids x a map-side combined argmax; probes and rerank touch only
+    candidate cells.  N comes from parquet footer stats, no scan job (a
+    non-local-parquet input costs one count() job).  The cell count is
+    fixed, so a probe scans ~N_PROBE*N/N_CELLS rows: linear in N, a
+    quarter of the corpus (SCALE.md §ANN)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    n = _embeddings_n_rows(emb, sf_dir)
+    local = _local_emb_table(sf_dir)
+    pairs, cells = _ivf_cells(emb, local, n)
     scored = _cosine_rerank(_ivf_candidates(pairs, cells), emb, local, n,
                             "q_id", "vec_id")
     return _top_k(scored, F.desc("sim"))
 
 
-_IVF_COS = ("ROUND(list_dot_product({a}.embedding::DOUBLE[], "
-            "{b}.embedding::DOUBLE[]) / "
-            "(sqrt(list_dot_product({a}.embedding::DOUBLE[], "
-            "{a}.embedding::DOUBLE[])) * "
-            "sqrt(list_dot_product({b}.embedding::DOUBLE[], "
-            "{b}.embedding::DOUBLE[]))), 6)")
-
-
-# the IVF centroids at n_cells=N_CELLS as cents(c_id, embedding): every
-# step-th vector, the step arithmetic run in SQL
+# the IVF centroids as cents(c_id, embedding): every step-th vector, the
+# step arithmetic run in SQL
 _IVF_CENT_CTES = f"""stepv AS (
   SELECT CAST(CEIL(COUNT(*) / {N_CELLS}.0) AS BIGINT) AS step
   FROM embeddings
@@ -2711,12 +2684,12 @@ probes AS (
     FROM sims WHERE vec_id < {N_QUERIES}) WHERE rn <= {N_PROBE}
 )"""
 
-# DuckDB replay of q_ann_ivf_topk at n_cells=N_CELLS: same sampled
-# centroids, same cosine rounding, same tie-breaks
+# DuckDB replay of q_ann_ivf_topk: same sampled centroids, same cosine
+# rounding, same tie-breaks
 ORACLE_ANN_IVF = f"""
 WITH {_IVF_CENT_CTES},
 sims AS (
-  SELECT e.vec_id, c.c_id, {_IVF_COS.format(a="e", b="c")} AS sim_c
+  SELECT e.vec_id, c.c_id, {_COS_SQL.format(a="e", b="c")} AS sim_c
   FROM embeddings e CROSS JOIN cents c
 ),
 {_IVF_PROBE_CTES},
@@ -2726,7 +2699,7 @@ cand AS (
   WHERE a.vec_id <> p.q_id
 ),
 scored AS (
-  SELECT cd.q_id, cd.vec_id, {_IVF_COS.format(a="eq", b="ev")} AS sim
+  SELECT cd.q_id, cd.vec_id, {_COS_SQL.format(a="eq", b="ev")} AS sim
   FROM cand cd
   JOIN embeddings eq ON eq.vec_id = cd.q_id
   JOIN embeddings ev ON ev.vec_id = cd.vec_id
@@ -2760,7 +2733,7 @@ def q_winnow_fingerprint(spark, sf_dir):
     compare; the fingerprint computation itself has no exchange."""
     from .winnow import winnow_fingerprints
     docs = _t(spark, sf_dir, "documents")
-    return winnow_fingerprints(docs, k=WINNOW_K, w=WINNOW_W).orderBy("doc_id")
+    return winnow_fingerprints(docs).orderBy("doc_id")
 
 
 def _winnow_hash_expr(pos: str) -> str:
@@ -2798,7 +2771,7 @@ def q_winnow_fingerprint_expr(spark, sf_dir):
             .orderBy("doc_id"))
 
 
-def q_neardup_clusters(spark, sf_dir, band_bits: int | None = None):
+def q_neardup_clusters(spark, sf_dir):
     """Near-duplicate CLUSTER assignment: connected components over the
     LSH near-dup pair graph -- the step a real dedup pipeline runs after
     pair generation (keep ONE survivor per cluster, not one per pair;
@@ -2813,8 +2786,7 @@ def q_neardup_clusters(spark, sf_dir, band_bits: int | None = None):
     component, survivor = the cluster representative.  The DuckDB oracle
     replays it with a recursive transitive-closure CTE over the same
     md5-sign-matrix LSH pairs."""
-    pairs = _embedding_near_pairs(spark, sf_dir, band_bits) \
-        .select("a_id", "b_id")
+    pairs = _embedding_near_pairs(spark, sf_dir).select("a_id", "b_id")
     return (connected_components(pairs).select(
         F.col("id").alias("vec_id"), F.col("label").alias("cluster"),
         (F.col("id") == F.col("label")).alias("is_survivor"))
@@ -2924,22 +2896,8 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # sign-matrix constants); cluster = min reachable id
 ORACLE_NEARDUP_CLUSTERS = f"""
 WITH RECURSIVE {_rhp_oracle_ctes()},
-cpairs AS (
-  SELECT DISTINCT a.vec_id AS a_id, b.vec_id AS b_id
-  FROM banded a JOIN banded b
-    ON a.band = b.band AND a.val = b.val AND a.vec_id < b.vec_id
-),
-csims AS (
-  SELECT p.a_id, p.b_id,
-         ROUND(list_dot_product(ea.embedding::DOUBLE[], eb.embedding::DOUBLE[]) /
-               (sqrt(list_dot_product(ea.embedding::DOUBLE[], ea.embedding::DOUBLE[])) *
-                sqrt(list_dot_product(eb.embedding::DOUBLE[], eb.embedding::DOUBLE[]))),
-               6) AS sim
-  FROM cpairs p
-  JOIN embeddings ea ON ea.vec_id = p.a_id
-  JOIN embeddings eb ON eb.vec_id = p.b_id
-),
-near AS (SELECT a_id, b_id FROM csims WHERE sim >= {COSINE_MIN}),
+{_LSH_SIMS_CTES},
+near AS (SELECT a_id, b_id FROM sims WHERE sim >= {COSINE_MIN}),
 {_REACH_CTES}
 {_reach_clusters_sql("vec_id")}
 """
@@ -3215,10 +3173,10 @@ FROM shares ORDER BY lang
 # corpus per ingest; the index's content hashes and MinHash signatures are
 # computed once and stored, and each new batch joins against them)
 
-def incremental_dedup(index_docs, batch_docs, i_hash=None, b_hash=None,
-                      i_sigs=None, b_sigs=None):
-    """Classify every BATCH document against the INDEX corpus:
-    ``exact_dup`` (content hash already in the index), ``near_dup``
+def incremental_dedup(docs, is_batch):
+    """Classify every BATCH document (the rows of `docs` where the
+    `is_batch` column predicate holds) against the INDEX corpus (the
+    rest): ``exact_dup`` (content hash already in the index), ``near_dup``
     (shares a MinHash band bucket with an index doc and estimated
     Jaccard >= EST_JACCARD_MIN), else ``new``.  Exact wins over near.
 
@@ -3230,35 +3188,27 @@ def incremental_dedup(index_docs, batch_docs, i_hash=None, b_hash=None,
     the index band scan, then broadcast-joins the (tiny) candidate list
     into the index signature scan.  In production index hashes /
     signatures / bands are a PERSISTED table (computed once per corpus,
-    pre-capped per bucket); here they are derived from index_docs so the
+    pre-capped per bucket); here they are derived from `docs` so the
     gate is self-contained -- the derivation cost is the one-time index
     build, not the per-ingest cost.  MAX_BUCKET bounds hot buckets on
     the index side (same guard as q_minhash_est_pairs); the persisted
     index would store bands already capped.
 
-    i_hash/b_hash/i_sigs/b_sigs accept precomputed content-hash /
-    signature frames (round 8): when both sides are slices of ONE corpus
-    (the q_incremental_dedup gate), the caller derives them from a
-    single shared scan instead of re-scanning the text per side --
-    exactly the persisted-index read the docstring describes."""
-    if b_hash is None:
-        b_hash = batch_docs.select("doc_id", F.md5("text").alias("h"))
-    if i_hash is None:
-        i_hash = index_docs.select(F.md5("text").alias("h"))
-    exact_ids = (i_hash.join(F.broadcast(b_hash), "h")
+    Both sides are slices of one frame, so the content hashes and
+    MinHash signatures come from a single shared scan each (per-doc
+    computations commute with the filter exactly), materialized once
+    (localCheckpoint, the q_minhash_est_pairs precedent) and then split:
+    each feeds two consumers and Catalyst does not dedupe common
+    subplans.  This is the in-query mirror of the persisted-index read."""
+    hashes = docs.select("doc_id", F.md5("text").alias("h")) \
+        .localCheckpoint(eager=True)
+    sigs = _minhash_sigs(docs).localCheckpoint(eager=True)
+    exact_ids = (hashes.filter(~is_batch).select("h")
+                 .join(F.broadcast(hashes.filter(is_batch)), "h")
                  .select("doc_id").distinct())
 
-    # Materialize each signature table ONCE (localCheckpoint, the
-    # q_minhash_est_pairs precedent): both sides feed two consumers
-    # (bands + the estimator join) and Catalyst does not dedupe common
-    # subplans, so without this every consumer re-runs the full
-    # shingle+minhash scan.  This is the in-query mirror of the
-    # persisted index: production reads i_sigs/i_bands from the stored
-    # corpus-index table instead of computing them at all.
-    if i_sigs is None:
-        i_sigs = _minhash_sigs(index_docs).localCheckpoint()
-    if b_sigs is None:
-        b_sigs = _minhash_sigs(batch_docs).localCheckpoint()
+    i_sigs = sigs.filter(~is_batch)
+    b_sigs = sigs.filter(is_batch)
     i_bands = _cap_buckets(_minhash_banded(i_sigs), ["band", "bucket"],
                            "doc_id")
     b_bands = _minhash_banded(b_sigs)
@@ -3275,7 +3225,7 @@ def incremental_dedup(index_docs, batch_docs, i_hash=None, b_hash=None,
     status = (F.when(F.col("is_exact"), F.lit("exact_dup"))
               .when(F.col("is_near"), F.lit("near_dup"))
               .otherwise(F.lit("new")))
-    return (batch_docs.select("doc_id")
+    return (docs.filter(is_batch).select("doc_id")
             .join(F.broadcast(exact_ids.withColumn("is_exact", F.lit(True))),
                   "doc_id", "left")
             .join(F.broadcast(near_ids.withColumn("is_near", F.lit(True))),
@@ -3292,21 +3242,8 @@ def q_incremental_dedup(spark, sf_dir):
     (checked r6), so the exact_dup arm is pinned by a synthetic-frame
     unit test (tests/test_incremental_dedup.py) and the gate's signal is
     the near_dup/new split (40+ straddling near-pairs at sf0.01)."""
-    docs = _t(spark, sf_dir, "documents")
-    is_batch = (F.col("doc_id") % BATCH_MOD) >= BATCH_MIN
-    # round 8 (guide §2.4): both sides are slices of ONE corpus, so the
-    # content hashes and MinHash signatures come from a single shared
-    # scan each (per-doc computations commute with the doc_id filter
-    # exactly), then split -- 4 corpus text passes become 2
-    hashes = docs.select("doc_id", F.md5("text").alias("h")) \
-        .localCheckpoint(eager=True)
-    sigs = _minhash_sigs(docs).localCheckpoint(eager=True)
-    return incremental_dedup(
-        docs.filter(~is_batch), docs.filter(is_batch),
-        i_hash=hashes.filter(~is_batch).select("h"),
-        b_hash=hashes.filter(is_batch),
-        i_sigs=sigs.filter(~is_batch),
-        b_sigs=sigs.filter(is_batch))
+    return incremental_dedup(_t(spark, sf_dir, "documents"),
+                             (F.col("doc_id") % BATCH_MOD) >= BATCH_MIN)
 
 
 def _incremental_dedup_oracle_sql() -> str:
@@ -4787,7 +4724,7 @@ ORACLE_BM25 = _bm25_oracle_sql()
 
 # --- SemDeDup: clustered semantic dedup (round 7) ----------------------------
 
-def q_semantic_dedup(spark, sf_dir, n_cells: int | None = None):
+def q_semantic_dedup(spark, sf_dir):
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): partition embeddings into k-means cells, then find
     near-duplicate pairs ONLY within each cell and keep one survivor per
@@ -4799,21 +4736,18 @@ def q_semantic_dedup(spark, sf_dir, n_cells: int | None = None):
     COSINE_MIN (the paper keeps the vector farthest from the centroid; a
     float-free deterministic tie-break keeps the oracle exact).
 
-    Scale shape: assignment is broadcast(n_cells) x map-side combine --
+    Scale shape: assignment is broadcast(N_CELLS) x map-side combine --
     embeddings cross a shuffle once, keyed by cell; pairwise work is
-    quadratic only in cell occupancy, which ivf_n_cells(N) ~ sqrt(N)
-    keeps at ~sqrt(N) rows => O(N) candidate pairs corpus-wide (the same
-    sizing argument as the LSH twin, tests/test_lsh_scale.py); the final
-    anti-join carries ids only."""
+    quadratic in cell occupancy, N/N_CELLS rows with the fixed cell
+    count, so the within-cell pairs grow as N^2/(2*N_CELLS) (SCALE.md
+    §ANN); the final anti-join carries ids only."""
     import math
 
     import numpy as np
     import pyarrow as pa
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
-    if n_cells is None:
-        n_cells = ivf_n_cells(n)
-    step = max(1, math.ceil(n / n_cells))
+    step = max(1, math.ceil(n / N_CELLS))
     # round 8 (guide §4.2): the old plan crossJoined every vector with the
     # broadcast centroid table and ran one interpreted 64-dim fold per
     # (vector, centroid) under a groupBy argmax, then a second interpreted
@@ -4866,14 +4800,14 @@ def q_semantic_dedup(spark, sf_dir, n_cells: int | None = None):
             .orderBy("vec_id"))
 
 
-# DuckDB replay of q_semantic_dedup at n_cells=N_CELLS
+# DuckDB replay of q_semantic_dedup
 ORACLE_SEMANTIC_DEDUP = f"""
 WITH {_IVF_CENT_CTES},
 cells AS (
   SELECT vec_id, c_id AS cell FROM (
     SELECT e.vec_id, c.c_id,
            ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                              ORDER BY {_IVF_COS.format(a="e", b="c")} DESC, c.c_id) AS rn
+                              ORDER BY {_COS_SQL.format(a="e", b="c")} DESC, c.c_id) AS rn
     FROM embeddings e CROSS JOIN cents c) WHERE rn = 1
 ),
 losers AS (
@@ -4882,7 +4816,7 @@ losers AS (
                             AND ca.vec_id < cb.vec_id
   JOIN embeddings ea ON ea.vec_id = ca.vec_id
   JOIN embeddings eb ON eb.vec_id = cb.vec_id
-  WHERE {_IVF_COS.format(a="ea", b="eb")} >= {COSINE_MIN}
+  WHERE {_COS_SQL.format(a="ea", b="eb")} >= {COSINE_MIN}
 )
 SELECT c.vec_id, c.cell,
        CASE WHEN l.vec_id IS NULL THEN 1 ELSE 0 END AS kept
@@ -4995,7 +4929,7 @@ def q_pq_encode(spark, sf_dir):
     argmins ride a single groupBy(vec_id) pass (partial agg), embeddings
     cross the exchange once.  dist is the expanded L2 form
     |x|^2 - 2x.c + |c|^2 rounded to 6dp (cross-engine float parity, the
-    _IVF_COS convention); qerr = sum of the 8 min distances is the
+    _COS_SQL convention); qerr = sum of the 8 min distances is the
     reconstruction-error audit column."""
     codes, _, _ = _pq_codes(spark, sf_dir, _local_emb_table(sf_dir))
     # the orderBy exists for the deterministic oracle compare, and range
@@ -5566,42 +5500,27 @@ def q_ann_ivfadc_topk(spark, sf_dir):
     """IVFADC (Jegou et al. 2011 §IV): the full PQ serving system --
     the IVF coarse quantizer prunes the corpus to N_PROBE of N_CELLS
     cells (~N_PROBE/N_CELLS of N candidates), then ADC scores ONLY those
-    candidates from their 4-byte codes.  This is the shape a 100-TB
-    embedding index actually serves: sub-linear candidate count
-    (n_probe * N/n_cells with n_cells ~ sqrt N) times 64x less memory
-    bandwidth per candidate; the raw float table is never read by a
-    search at all.
+    candidates from their 4-byte codes, 64x less memory bandwidth per
+    candidate; the raw float table is never read by a search at all.
+    With the fixed N_CELLS the candidate count is N_PROBE * N/N_CELLS,
+    linear in N (a sublinear count needs cells growing as ~sqrt N;
+    SCALE.md §ANN).
 
     Deviation from the paper, documented: codes quantize the RAW
     vectors, not the per-cell residuals (residual PQ couples the
     codebook to the coarse cells for somewhat better recall; raw-vector
     PQ keeps ONE corpus-wide codebook -- the variant several production
     systems ship -- and keeps the DuckDB oracle assemblable from the
-    same CTEs as the IVF and PQ gates).  Coarse side reuses the IVF
-    conventions bit-for-bit (cosine cells, smallest-c_id tie-break);
+    same CTEs as the IVF and PQ gates).  Coarse side is _ivf_cells, as
+    in q_ann_ivf_topk (cosine cells, smallest-c_id tie-break);
     scoring reuses the ADC conventions (6dp-rounded subspace L2, fixed
     j-order sum).  Exchanges: the two index builds' partial aggs plus
     the top-k window -- candidates ride (q_id, vec_id) ids into a
     broadcast, embeddings never shuffle."""
-    import math
     emb = _t(spark, sf_dir, "embeddings")
     local = _local_emb_table(sf_dir)
     n = _embeddings_n_rows(emb, sf_dir)
-    step = max(1, math.ceil(n / N_CELLS))
-    # round 8: coarse-assignment sims from the _np_cent_sims kernel (raw
-    # division in the kernel, 6dp round here -- bit-identical to the old
-    # broadcast-crossJoin interpreted folds), materialized once for the
-    # cells + probes consumers
-    c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
-    pairs = (_np_cent_sims(emb, c_ids, c_mat)
-             .select("vec_id", "c_id",
-                     F.round(F.col("raw"), 6).alias("sim_c"))
-             .localCheckpoint(eager=True))
-    cells = (pairs.groupBy("vec_id")
-             .agg(F.max(F.struct(F.col("sim_c").alias("s"),
-                                 (-F.col("c_id")).alias("nc"))).alias("x"))
-             .select("vec_id", (-F.col("x.nc")).alias("cell")))
-    cand = _ivf_candidates(pairs, cells)
+    cand = _ivf_candidates(*_ivf_cells(emb, local, n))
     # compressed-domain scoring: candidates x broadcast LUT maps
     codes, pq_cents, _ = _pq_codes(spark, sf_dir, local)
     qs = (emb.filter(F.col("vec_id") < N_QUERIES)
@@ -5640,7 +5559,7 @@ def _ann_ivfadc_oracle_sql() -> str:
     return f"""
 WITH {_IVF_CENT_CTES},
 sims AS MATERIALIZED (
-  SELECT e.vec_id, c.c_id, {_IVF_COS.format(a="e", b="c")} AS sim_c
+  SELECT e.vec_id, c.c_id, {_COS_SQL.format(a="e", b="c")} AS sim_c
   FROM embeddings e CROSS JOIN cents c
 ),
 {_IVF_PROBE_CTES},

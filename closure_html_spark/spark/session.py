@@ -25,11 +25,11 @@ from pyspark.sql import SparkSession
 DAEMON_MODULE = "closure_html_spark.spark.daemon"
 
 
-def get_spark(app: str = "closure-html-spark",
-              master: str | None = None,
+def get_spark(app: str, master: str,
               shuffle_partitions: int | None = None) -> SparkSession:
-    """The engine's SparkSession: local[cpus] by default, where cpus is
-    SPARK_GRAFT_CPUS or the CPUs this process may use.
+    """The engine's SparkSession.  shuffle_partitions defaults to
+    max(cpus, 8), where cpus is SPARK_GRAFT_CPUS or the CPUs this process
+    may use.
 
     PySpark's DataFrame call-site capture is off
     (spark.python.sql.dataFrameDebugging.enabled=false).  With it on,
@@ -53,8 +53,6 @@ def get_spark(app: str = "closure-html-spark",
     with PySpark's stock daemon, as tools/run_extraction.py does."""
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS",
                               str(len(os.sched_getaffinity(0)))))
-    if master is None:
-        master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = max(cpus, 8)
     return (

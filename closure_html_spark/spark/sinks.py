@@ -12,8 +12,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 
-def write_jsonl_sharded(df: DataFrame, path: str, n_shards: int = 8,
-                        shard_key: str = "doc_id") -> None:
+def write_jsonl_sharded(df: DataFrame, path: str, n_shards: int,
+                        shard_key: str) -> None:
     """Write df as sharded JSONL: one `shard=K/` directory per shard,
     each row one JSON object line.
 
@@ -45,8 +45,8 @@ def read_jsonl_sharded(spark: SparkSession, path: str,
             .select("r.*", "shard"))
 
 
-def write_wet_sharded(df: DataFrame, path: str, n_shards: int = 8,
-                      url_col: str = "url", text_col: str = "text") -> None:
+def write_wet_sharded(df: DataFrame, path: str, n_shards: int,
+                      url_col: str, text_col: str) -> None:
     """Write extracted text as sharded WET files (ISO 28500 conversion
     records, the CommonCrawl interchange layout): `shard=K/` dirs via
     the shared md5 bucket hash, records rendered JVM-side by

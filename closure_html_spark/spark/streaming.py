@@ -15,29 +15,29 @@ from .pipeline import extract_pages
 
 PAGES_DDL = ("url string, warc_ts timestamp, html binary, text string, "
              "lang string, doc_id long")
+# parquet files the source reads per micro-batch
+MAX_FILES_PER_TRIGGER = 8
 
 
-def read_pages_stream(spark: SparkSession, input_dir: str,
-                      max_files_per_trigger: int = 8) -> DataFrame:
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     return (spark.readStream
             .schema(PAGES_DDL)
-            .option("maxFilesPerTrigger", str(max_files_per_trigger))
+            .option("maxFilesPerTrigger", str(MAX_FILES_PER_TRIGGER))
             .parquet(input_dir))
 
 
 def stream_extract(spark: SparkSession, input_dir: str, output_dir: str,
-                   checkpoint_dir: str, available_now: bool = True):
+                   checkpoint_dir: str):
     """Start the streaming extraction job; returns the StreamingQuery.
-    available_now=True drains everything currently in input_dir and stops
-    (the batch-backfill trigger); False runs continuously."""
+    It drains everything currently in input_dir and stops (the
+    availableNow batch-backfill trigger)."""
     pages = read_pages_stream(spark, input_dir)
     ext = extract_pages(pages, id_cols=("url", "doc_id"))
     writer = (ext.writeStream
               .format("parquet")
               .option("path", output_dir)
               .option("checkpointLocation", checkpoint_dir)
-              .outputMode("append"))
-    if available_now:
-        writer = writer.trigger(availableNow=True)
+              .outputMode("append")
+              .trigger(availableNow=True))
     return writer.start()
 

@@ -116,8 +116,7 @@ def _file_schema(path: str, ntz: bool) -> StructType | None:
     return _as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=ntz))
 
 
-def footer_schema(sf_dir: str, name: str,
-                  ntz: bool = True) -> StructType | None:
+def footer_schema(sf_dir: str, name: str, ntz: bool) -> StructType | None:
     """The schema Spark infers for table `name`, read from its parquet
     footers with no Spark job (`ntz`: the session's
     spark.sql.parquet.inferTimestampNTZ.enabled); None when the table is

@@ -21,15 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from closure_html_spark.spark.pages import _esc
 from closure_html_spark.spark.tables import read_table
 
-
-def _esc(col):
-    return F.replace(
-        F.replace(
-            F.replace(col, F.lit("&"), F.lit("&amp;")),
-            F.lit("<"), F.lit("&lt;")),
-        F.lit(">"), F.lit("&gt;"))
+# the WARC-Date of every synthesized response and exported WET record
+WARC_DATE = "2024-01-01T00:00:00Z"
 
 
 def warcs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -51,7 +47,7 @@ def warcs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("WARC/1.0\r\n"
               "WARC-Type: response\r\n"
               "WARC-Target-URI: "), url,
-        F.lit("\r\nWARC-Date: 2024-01-01T00:00:00Z\r\n"
+        F.lit(f"\r\nWARC-Date: {WARC_DATE}\r\n"
               "Content-Type: application/http; msgtype=response\r\n"
               "Content-Length: "), http_len.cast("string"),
         F.lit("\r\n\r\n" + http_head))
@@ -61,7 +57,7 @@ def warcs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def warc_records_to_pages(df: DataFrame,
-                          id_cols: tuple[str, ...] = ()) -> DataFrame:
+                          id_cols: tuple[str, ...]) -> DataFrame:
     """mapInArrow: `record binary` -> pages columns.  Non-response /
     broken records keep their row with null url/html and the error
     marker, so ingest accounting never silently drops records."""
@@ -143,8 +139,7 @@ FROM documents ORDER BY doc_id
 """
 
 
-def wet_record(url_col, text_col,
-               date: str = "2024-01-01T00:00:00Z"):
+def wet_record(url_col, text_col):
     """WET-style conversion record (ISO 28500 §6.8; the CommonCrawl WET
     layout) as ONE JVM-side string column: WARC header + blank line +
     the UTF-8 plain-text payload.  Content-Length is the payload's
@@ -157,7 +152,7 @@ def wet_record(url_col, text_col,
         F.lit("WARC/1.0\r\n"
               "WARC-Type: conversion\r\n"
               "WARC-Target-URI: "), url_col,
-        F.lit(f"\r\nWARC-Date: {date}\r\n"
+        F.lit(f"\r\nWARC-Date: {WARC_DATE}\r\n"
               "Content-Type: text/plain\r\n"
               "Content-Length: "),
         F.octet_length(F.encode(text_col, "UTF-8")).cast("string"),

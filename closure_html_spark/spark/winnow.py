@@ -27,7 +27,7 @@ WINNOW_B = 257
 WINNOW_M = 1_000_000_007
 
 
-def winnow_doc(text: str, k: int = 8, w: int = 16) -> np.ndarray | None:
+def winnow_doc(text: str, k: int, w: int) -> np.ndarray | None:
     """Sorted distinct window-min fingerprints of one document, or None if
     the text is shorter than k (no k-gram exists -- the doc is absent from
     the output, matching the SQL formulation's empty UNNEST range).
@@ -52,10 +52,11 @@ def winnow_doc(text: str, k: int = 8, w: int = 16) -> np.ndarray | None:
     return np.unique(wmins)
 
 
-def winnow_fingerprints(docs: DataFrame, k: int = 8,
-                        w: int = 16) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, n_fps, min_fp) per document -- the q_winnow_fingerprint
-    output contract -- computed entirely inside one Arrow batch stage."""
+    output contract -- computed entirely inside one Arrow batch stage,
+    with relational's WINNOW_K-grams and WINNOW_W-windows."""
+    from .relational import WINNOW_K as k, WINNOW_W as w
 
     def fn(batches):
         for pdf in batches:

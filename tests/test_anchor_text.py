@@ -29,7 +29,7 @@ def test_anchors_parallel_to_links(spark):
     assert list(r.anchors) == ["home", "about", ""]
     # equal to the in-process walk over the same parse
     doc = parse_html(load_dtd(), decode_html(_HTML)[0])
-    links, anchors, _ = _doc_links_base(doc)
+    links, anchors, _ = _doc_links_base(doc, True)
     assert (list(r.links), list(r.anchors)) == (links, anchors)
 
 

@@ -95,7 +95,7 @@ def test_unknown_element_gets_end_tag():
 
 
 def test_with_html_output_contextmanager():
-    with with_html_output(DTD) as w:
+    with with_html_output() as w:
         with w.element("p"):
             w.text("x")
     assert w.getvalue() == "<P>x</P>"

@@ -65,7 +65,7 @@ def test_meta_overrides_header():
 
 def test_unknown_header_charset_falls_back():
     raw = b"<html><body>x</body></html>"
-    assert sniff_charset(raw, content_type="text/html; charset=bogus-9") \
+    assert sniff_charset(raw, "utf-8", "text/html; charset=bogus-9") \
         == "utf-8"
 
 

@@ -152,7 +152,7 @@ def test_nested_anchor_keeps_links_and_anchors_paired(spark):
     then raised ArrowInvalid on the whole batch."""
     src = b"<p>see <a href=/q>q<a href=/r>r</a> and <a href=/s>s</a>"
     doc = parse_html(DTD, src.decode())
-    assert _doc_links_base(doc) == (["/q", "/r", "/s"],
+    assert _doc_links_base(doc, True) == (["/q", "/r", "/s"],
                                     ["qr and s", "r", "s"], None)
     df = spark.createDataFrame([("u", bytearray(src))],
                                "url string, html binary")

@@ -37,8 +37,8 @@ def test_exact_near_new_arms(spark):
               "documents whatsoever in any way shape or form today"),
         (104, "hi"),                      # short + identical -> exact_dup
     ])
-    got = {r.doc_id: r.status
-           for r in R.incremental_dedup(index, batch).collect()}
+    got = {r.doc_id: r.status for r in R.incremental_dedup(
+        index.union(batch), F.col("doc_id") >= 100).collect()}
     assert got == {101: "exact_dup", 102: "near_dup",
                    103: "new", 104: "exact_dup"}
 
@@ -48,7 +48,8 @@ def test_exact_wins_over_near(spark):
     exact_dup (the CASE priority), not near_dup."""
     index = _docs(spark, [(1, BASE)])
     batch = _docs(spark, [(201, BASE)])
-    [row] = R.incremental_dedup(index, batch).collect()
+    [row] = R.incremental_dedup(index.union(batch),
+                                F.col("doc_id") >= 100).collect()
     assert row.status == "exact_dup"
 
 
@@ -77,7 +78,8 @@ def test_index_hot_bucket_cap(spark, monkeypatch):
     for cap in (None, 30):
         if cap is not None:
             monkeypatch.setattr(R, "MAX_BUCKET", cap)
-        [row] = R.incremental_dedup(index, batch).collect()
+        [row] = R.incremental_dedup(index.union(batch),
+                                    F.col("doc_id") >= 1000).collect()
         assert row.status == "near_dup", cap
     capped = R._cap_buckets(bands, ["band", "bucket"], "doc_id")
     assert bands.count() == 4 * 400 and capped.count() == 4 * 30

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from closure_html_spark.spark import lineage
 from closure_html_spark.spark.lineage import (
     completed_buckets,
     run_extraction_with_lineage,
@@ -33,7 +34,8 @@ def test_lineage_run_and_resume(spark, pages, tmp_path_factory):
     assert done1 == set(range(n_buckets))
 
     # full resume over ALL pages: everything already marked -> no reprocess
-    r2 = run_extraction_with_lineage(spark, pages, out, n_buckets=n_buckets)
+    r2 = run_extraction_with_lineage(spark, pages, out, n_buckets=n_buckets,
+                                     group_size=16)
     assert r2["processed"] == []
     assert set(r2["skipped"]) == set(range(n_buckets))
 
@@ -73,11 +75,11 @@ def test_lineage_empty_corpus(spark, pages, tmp_path_factory):
     assert man.filter("status = 'ok' and output_count = 0").count() == 4
 
 
-def test_salt_skewed_splits_hot_hosts(spark, pages):
+def test_salt_skewed_splits_hot_hosts(spark, pages, monkeypatch):
     with_host = pages.withColumn(
         "url_host", F.regexp_extract("url", r"https://([^/]+)/", 1))
-    salted = salt_skewed(with_host, key="url_host", skew_factor=2.0,
-                         n_salt=8)
+    monkeypatch.setattr(lineage, "SKEW_FACTOR", 2.0)
+    salted = salt_skewed(with_host)
     # host0 holds ~30% of pages (synthesis skew fixture) -> must be salted
     hot = salted.filter(F.col("url_host") == "host0.example")
     n_salts = hot.select("salt").distinct().count()
@@ -109,7 +111,8 @@ def test_resume_cleans_partial_bucket_output(spark, pages, tmp_path_factory):
     for b in (4, 6, 7):
         shutil.rmtree(f"{out}/extracted/bucket={b}")
 
-    r = run_extraction_with_lineage(spark, pages, out, n_buckets=8)
+    r = run_extraction_with_lineage(spark, pages, out, n_buckets=8,
+                                    group_size=16)
     assert r["processed"] == [4, 5, 6, 7]
     assert r["cleaned_partial"] == [5]
     final = spark.read.parquet(f"{out}/extracted")
@@ -126,7 +129,7 @@ def test_lineage_failed_doc_does_not_lower_warn_count(spark, tmp_path_factory):
              bytearray(b"<table><td>x<ul>soup</table></p></b>")),
             ("https://a.example/null", None)]
     df = spark.createDataFrame(rows, "url string, html binary")
-    run_extraction_with_lineage(spark, df, out, n_buckets=1)
+    run_extraction_with_lineage(spark, df, out, n_buckets=1, group_size=16)
     ext = {r["url"]: r for r in
            spark.read.parquet(f"{out}/extracted").collect()}
     assert ext["https://a.example/null"]["charset"] == "error:TypeError"

@@ -11,7 +11,6 @@ from closure_html_spark.spark import relational as R
 from closure_html_spark.spark.relational import (
     _parquet_n_rows,
     _rhp_bands_np,
-    ivf_n_cells,
     lsh_band_bits,
 )
 
@@ -87,21 +86,6 @@ def test_np_min_labels_matches_reference():
         ids, labels = R._np_min_labels(a, b)
         assert dict(zip(ids.tolist(), labels.tolist())) == \
             {x: find(x) for x in parent}
-
-
-def test_ivf_n_cells_sizing_rule():
-    # ~sqrt(N) cells: occupancy sqrt(N) => probe cost n_probe*sqrt(N),
-    # sublinear in N; floor for toy corpora, broadcast-bounded cap
-    assert ivf_n_cells(0) == 16
-    assert ivf_n_cells(500) == 22
-    assert ivf_n_cells(10**6) == 1000
-    assert ivf_n_cells(10**9) == 31623
-    assert ivf_n_cells(10**12) == 1 << 16  # capped: 32 MB centroid bcast
-    for n in (10**6, 10**8, 10**10):
-        c = ivf_n_cells(n)
-        occupancy = n / c
-        # probes touch n_probe * occupancy rows -- must vanish vs N
-        assert 4 * occupancy / n < 1e-2
 
 
 def test_parquet_n_rows_matches_table(spark, sf_dir):
@@ -189,12 +173,11 @@ def test_lsh_hot_bucket_guard(spark, tmp_path, monkeypatch):
         F.array(*[F.lit(0.37)] * 64).cast("array<float>").alias("embedding"))
     df.write.parquet(str(tmp_path / "embeddings.parquet"))
     assert R.MAX_BUCKET > N
-    uncapped = R.q_embedding_neardup_lsh(
-        spark, str(tmp_path), band_bits=4).count()
+    assert lsh_band_bits(N) == 4
+    uncapped = R.q_embedding_neardup_lsh(spark, str(tmp_path)).count()
     assert uncapped == N * (N - 1) // 2, "skew fixture lost its hot bucket"
     monkeypatch.setattr(R, "MAX_BUCKET", cap)
-    capped = R.q_embedding_neardup_lsh(
-        spark, str(tmp_path), band_bits=4).count()
+    capped = R.q_embedding_neardup_lsh(spark, str(tmp_path)).count()
     assert capped == cap * (cap - 1) // 2
 
 
@@ -327,25 +310,25 @@ def test_rerank_above_broadcast_gate_matches(spark, monkeypatch):
     from closure_html_spark.spark import relational as R
     sf = "/root/testdata/sf0.001"
     runs = {
-        "embedding_neardup_lsh": lambda: R.q_embedding_neardup_lsh(
-            spark, sf, band_bits=4),
-        "ann_lsh_topk": lambda: R.q_ann_lsh_topk(spark, sf, band_bits=4),
-        "ann_ivf_topk": lambda: R.q_ann_ivf_topk(spark, sf, n_cells=16),
-        "semantic_dedup": lambda: R.q_semantic_dedup(spark, sf, n_cells=16),
-        "ann_cosine_topk": lambda: R.q_ann_cosine_topk(spark, sf),
+        "embedding_neardup_lsh": R.q_embedding_neardup_lsh,
+        "ann_lsh_topk": R.q_ann_lsh_topk,
+        "ann_ivf_topk": R.q_ann_ivf_topk,
+        "semantic_dedup": R.q_semantic_dedup,
+        "ann_cosine_topk": R.q_ann_cosine_topk,
     }
-    default = {name: sorted(q().collect()) for name, q in runs.items()}
+    default = {name: sorted(q(spark, sf).collect())
+               for name, q in runs.items()}
     assert default["embedding_neardup_lsh"] and default["semantic_dedup"]
     monkeypatch.setattr(R, "_EMB_BCAST_MAX_BYTES", 0)
     assert R._local_emb_table(sf) is None
     for name, q in runs.items():
-        assert sorted(q().collect()) == default[name], name
+        assert sorted(q(spark, sf).collect()) == default[name], name
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
     spark.conf.set(key, "-1")
     try:
         for name in ("ann_lsh_topk", "ann_ivf_topk"):
-            df = runs[name]()
+            df = runs[name](spark, sf)
             plan = df._sc._jvm.PythonSQLUtils.explainString(
                 df._jdf.queryExecution(), "formatted")
             assert "BroadcastExchange" in plan, name
@@ -372,8 +355,8 @@ def test_non_local_sf_dir_fallbacks(spark, sf_dir, monkeypatch):
     # semantic_dedup first its centroid subset
     runs = {
         "tfidf_topk": (R.q_tfidf_topk, ["count"]),
-        "embedding_neardup_lsh": (lambda s, d: R.q_embedding_neardup_lsh(
-            s, d, band_bits=None), ["count", "toArrow"]),
+        "embedding_neardup_lsh": (R.q_embedding_neardup_lsh,
+                                  ["count", "toArrow"]),
         "semantic_dedup": (R.q_semantic_dedup,
                            ["count", "toArrow", "toArrow"]),
     }

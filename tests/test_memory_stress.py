@@ -9,7 +9,7 @@ accounting, and that per-worker peak RSS obeys the sizing rule
 documented in SCALE.md:
 
     worker_peak ~= interpreter base (~150 MB with Arrow)
-                 + A x max_doc_bytes   (ONE doc's DOM at a time;
+                 + A x MAX_DOC_BYTES   (ONE doc's DOM at a time;
                    A ~= 19 measured for tag-dense soup, ~2 for
                    pcdata floods)
                  + ~2 x arrow batch bytes (input + staged output)
@@ -22,6 +22,7 @@ scales the same rule down to a 2 MiB cap so it runs in seconds.
 import pytest
 from pyspark.sql import functions as F
 
+from closure_html_spark.spark import pipeline
 from closure_html_spark.spark.pipeline import extract_pages
 
 CAP = 2 << 20  # 2 MiB per-doc cap for the test
@@ -42,13 +43,14 @@ def _pages(spark, n_docs: int, doc_bytes: int):
                     F.encode(html, "utf-8").alias("html")))
 
 
-def test_oversize_batch_completes_with_accounting(spark):
+def test_oversize_batch_completes_with_accounting(spark, monkeypatch):
     """8 docs, each ~1.5x the cap, through 4 partitions: the stage must
     complete (truncation, not OOM/kill), and EVERY row must carry the
     oversize accounting -- charset='error:oversize', one level-5 warn
     counted, n_warns incremented (pipeline.py oversize branch)."""
     pages = _pages(spark, 8, int(CAP * 1.5)).repartition(4)
-    ext = extract_pages(pages, id_cols=("url",), max_doc_bytes=CAP)
+    monkeypatch.setattr(pipeline, "MAX_DOC_BYTES", CAP)
+    ext = extract_pages(pages, id_cols=("url",))
     rows = ext.select("url", "charset", "n_warns",
                       F.element_at("warn_levels", 5).alias("lv5"),
                       F.length("extracted_text").alias("tl")).collect()
@@ -62,7 +64,7 @@ def test_oversize_batch_completes_with_accounting(spark):
         assert 0 < r.tl <= CAP, r
 
 
-def test_worker_peak_rss_obeys_sizing_rule(spark):
+def test_worker_peak_rss_obeys_sizing_rule(spark, monkeypatch):
     """Drive 16 AT-cap tag-dense docs through 4 concurrent workers,
     then probe the reused workers' high-water RSS: each must sit under
     base + A x cap + 2 x batch with the measured A=19 and 50% slack --
@@ -70,7 +72,8 @@ def test_worker_peak_rss_obeys_sizing_rule(spark):
     whose DOM exceeded the rule (e.g. a per-batch leak, or all batch
     docs' DOMs alive at once) would blow well past it."""
     pages = _pages(spark, 16, CAP - 4096).repartition(4)
-    ext = extract_pages(pages, id_cols=("url",), max_doc_bytes=CAP)
+    monkeypatch.setattr(pipeline, "MAX_DOC_BYTES", CAP)
+    ext = extract_pages(pages, id_cols=("url",))
     agg = ext.agg(F.sum(F.length("extracted_text")),
                   F.sum("n_nodes")).collect()[0]
     assert agg[0] > 0 and agg[1] > 0

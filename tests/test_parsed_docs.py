@@ -6,7 +6,7 @@ import gc
 import pyarrow as pa
 import pytest
 
-from closure_html_spark.spark.pipeline import _parsed_docs
+from closure_html_spark.spark.pipeline import MAX_DOC_BYTES, _parsed_docs
 
 
 @pytest.fixture(autouse=True)
@@ -26,7 +26,7 @@ def _batch(htmls, content_types=None):
 
 def test_null_html_yields_type_error_and_neighbours_unshifted():
     got = list(_parsed_docs(_batch([b"<p>a", None, b"<p>b"]),
-                            lambda text: text))
+                            lambda text: text, MAX_DOC_BYTES))
     assert got == [(0, "<p>a", "utf-8"), (1, None, "error:TypeError"),
                    (2, "<p>b", "utf-8")]
 
@@ -40,10 +40,11 @@ def test_oversize_row_is_truncated_and_marked():
 def test_content_type_charset_seeds_the_decode():
     raw = "caf\xe9".encode("latin-1")
     seeded = list(_parsed_docs(_batch([raw], ["text/html; charset=latin-1"]),
-                               lambda text: text))
+                               lambda text: text, MAX_DOC_BYTES))
     assert seeded == [(0, "caf\xe9", "latin-1")]
     # without the column the default charset decodes, replacing the byte
-    plain = list(_parsed_docs(_batch([raw]), lambda text: text))
+    plain = list(_parsed_docs(_batch([raw]), lambda text: text,
+                              MAX_DOC_BYTES))
     assert plain == [(0, "caf\ufffd", "utf-8")]
 
 
@@ -53,6 +54,7 @@ def test_raising_work_fails_only_its_row():
             raise ZeroDivisionError
         return text.upper()
 
-    got = list(_parsed_docs(_batch([b"ok", b"bad", b"fine"]), work))
+    got = list(_parsed_docs(_batch([b"ok", b"bad", b"fine"]), work,
+                            MAX_DOC_BYTES))
     assert got == [(0, "OK", "utf-8"), (1, None, "error:ZeroDivisionError"),
                    (2, "FINE", "utf-8")]

@@ -279,9 +279,9 @@ def test_attr_amp_brace_exception():
 
 
 def test_sniff_charset_bom():
-    assert sniff_charset(b"\xef\xbb\xbfhello") == "utf-8-sig"
-    assert sniff_charset(b"<html>") == "utf-8"
-    assert sniff_charset(b"<meta charset='UTF-8'>") == "utf-8"
+    assert sniff_charset(b"\xef\xbb\xbfhello", "utf-8", None) == "utf-8-sig"
+    assert sniff_charset(b"<html>", "utf-8", None) == "utf-8"
+    assert sniff_charset(b"<meta charset='UTF-8'>", "utf-8", None) == "utf-8"
 
 
 def test_style_in_div_becomes_span():

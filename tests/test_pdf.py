@@ -85,7 +85,8 @@ def test_spark_pdf_gate_roundtrip(spark):
         pdfs_from_documents,
     )
     pdfs = pdfs_from_documents(spark, "/root/testdata/sf0.001")
-    got = pdf_extract_pages(pdfs).select("doc_id", "pdf_text", "pdf_error") \
+    got = pdf_extract_pages(pdfs, ("doc_id",)) \
+        .select("doc_id", "pdf_text", "pdf_error") \
         .orderBy("doc_id").limit(20).collect()
     want = pdfs.select("doc_id", "text").orderBy("doc_id").limit(20).collect()
     for g, w in zip(got, want):
@@ -103,5 +104,5 @@ def test_spark_pdf_gate_roundtrip(spark):
                    F.lit(">>stream\n"), content,
                    F.lit("\nendstream\nendobj\n%%EOF\n"))
     adv = df.select("doc_id", F.encode(pdf, "utf-8").alias("pdf"))
-    out = pdf_extract_pages(adv).collect()[0]
+    out = pdf_extract_pages(adv, ("doc_id",)).collect()[0]
     assert out["pdf_text"] == "weird (paren) and \\backslash\\ text"

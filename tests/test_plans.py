@@ -248,7 +248,7 @@ def test_registry_wide_plan_discipline(spark):
     exact baseline now lives in aux, so the driver window contains zero
     all-pairs plans), and BroadcastNestedLoopJoin only where the
     broadcast side is provably tiny: the exact-ANN baselines' literal
-    query set, the IVF-family centroid tables (n_cells ~ sqrt N rows),
+    query set, the IVF-family centroid tables (N_CELLS rows),
     and bm25's ONE-row corpus-stats aggregate.  Any new registry entry
     that regresses to a Python UDF or an accidental cartesian fails here
     before the driver ever sees it."""

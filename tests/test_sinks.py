@@ -17,7 +17,7 @@ def test_roundtrip_and_layout(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .select("doc_id", "lang", "text")
     out = str(tmp_path / "corpus")
-    write_jsonl_sharded(docs, out, n_shards=8)
+    write_jsonl_sharded(docs, out, n_shards=8, shard_key="doc_id")
     dirs = sorted(glob.glob(f"{out}/shard=*"))
     assert len(dirs) == 8
     back = read_jsonl_sharded(
@@ -34,7 +34,7 @@ def test_shard_matches_pack_sequences(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .select("doc_id", "text")
     out = str(tmp_path / "corpus")
-    write_jsonl_sharded(docs, out, n_shards=8)
+    write_jsonl_sharded(docs, out, n_shards=8, shard_key="doc_id")
     back = read_jsonl_sharded(spark, out, "doc_id long, text string") \
         .select("doc_id", "shard")
     packed = R.q_pack_sequences(spark, SF).select(
@@ -48,7 +48,7 @@ def test_lines_are_json_objects(spark, tmp_path):
     docs = spark.read.parquet(f"{SF}/documents.parquet") \
         .select("doc_id", "text").limit(20)
     out = str(tmp_path / "c2")
-    write_jsonl_sharded(docs, out, n_shards=2)
+    write_jsonl_sharded(docs, out, n_shards=2, shard_key="doc_id")
     files = glob.glob(f"{out}/shard=*/part-*")
     assert files
     line = open(files[0]).readline()
@@ -63,7 +63,7 @@ def test_roundtrip_embedded_newlines_and_quotes(spark, tmp_path):
             (3, 'tab\there'), (4, '')]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     out = str(tmp_path / "c3")
-    write_jsonl_sharded(df, out, n_shards=2)
+    write_jsonl_sharded(df, out, n_shards=2, shard_key="doc_id")
     files = glob.glob(f"{out}/shard=*/part-*")
     n_lines = sum(1 for f in files for _ in open(f))
     assert n_lines == 4
@@ -85,7 +85,8 @@ def test_wet_sink_roundtrip(spark, tmp_path):
                         "text").limit(100))
     expected = {r["url"]: r["text"] for r in docs.collect()}
     out = str(tmp_path / "wet")
-    write_wet_sharded(docs, out, n_shards=4)
+    write_wet_sharded(docs, out, n_shards=4, url_col="url",
+                      text_col="text")
     got = {}
     for f in glob.glob(out + "/shard=*/part-*"):
         data = open(f, "rb").read()

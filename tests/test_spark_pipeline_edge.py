@@ -34,7 +34,7 @@ def _reference_row(raw, content_type=None) -> dict:
     text, cs = decode_html(bytes(raw), "utf-8", content_type)
     doc = parse_html(dtd, text)
     res = extract_main_content(doc, dtd, with_main_text=True)
-    links, anchors, base = _doc_links_base(doc)
+    links, anchors, base = _doc_links_base(doc, True)
     lv = [sum(1 for level, _ in doc.warnings if level == k)
           for k in range(1, 6)]
     return {"title": res["title"], "extracted_text": res["extracted_text"],
@@ -252,9 +252,9 @@ def test_failed_doc_mid_batch_every_stage(spark, stage):
     documents' rows equal the stage's output on them alone."""
     fn = getattr(pipeline, stage)
     df = spark.createDataFrame(_STAGE_DOCS, "url string, html binary")
-    got = fn(df.coalesce(1)).collect()
+    got = fn(df.coalesce(1), ("url",)).collect()
     assert _FAILED_DOC[stage]([r for r in got if r["url"] == "u1"])
-    alone = fn(df.filter(F.col("url") != "u1").coalesce(1)).collect()
+    alone = fn(df.filter(F.col("url") != "u1").coalesce(1), ("url",)).collect()
     assert {r["url"] for r in alone} == {"u0", "u2"}
     assert sorted(repr(r) for r in got if r["url"] != "u1") == \
         sorted(repr(r) for r in alone)
@@ -295,7 +295,7 @@ def test_tokens_of_engines_identical(spark):
 
     a = sorted((r["url"], r["pos"], r["kind"], r["name"],
                 tuple(sorted((r["attrs"] or {}).items())), r["text"])
-               for r in tokens_of(df).collect())
+               for r in tokens_of(df, ("url",)).collect())
     assert a == sorted(x for url, raw in rows
                        for x in _reference_tokens(url, raw))
     # raw-lexer attrs are pre-normalization: lowercase names as written
@@ -365,8 +365,8 @@ def test_spans_slice_extracted_text_jvm_side(spark):
     assert "Caf\xe9 cr\xe8me" in got["u1"]["main_text"]
 
 
-def test_oversize_doc_cap_truncates_and_marks(spark):
-    """max_doc_bytes: a page past the cap is truncated (the prefix still
+def test_oversize_doc_cap_truncates_and_marks(spark, monkeypatch):
+    """MAX_DOC_BYTES: a page past the cap is truncated (the prefix still
     parses and extracts), marked charset='error:oversize', and counted as
     ONE level-5 warning; rows in the same batch are untouched.  The
     capped row equals the in-process reference of the prefix plus that
@@ -377,8 +377,9 @@ def test_oversize_doc_cap_truncates_and_marks(spark):
     rows = [("u_big", bytearray(big)),
             ("u_ok", bytearray(b"<html><body><p>fine</p></body></html>"))]
     df = spark.createDataFrame(rows, "url string, html binary")
+    monkeypatch.setattr(pipeline, "MAX_DOC_BYTES", 4096)
     out = {r["url"]: r for r in extract_pages(
-        df, columns=ALL_COLS, max_doc_bytes=4096).collect()}
+        df, columns=ALL_COLS).collect()}
     bigr = out["u_big"]
     assert bigr["charset"] == "error:oversize"
     assert bigr["warn_levels"][4] == 1

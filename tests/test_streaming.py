@@ -22,7 +22,7 @@ def test_stream_extract_matches_batch(spark, staged_pages, tmp_path_factory):
     input_dir, n = staged_pages
     out = str(tmp_path_factory.mktemp("stream_out"))
     ckpt = str(tmp_path_factory.mktemp("ckpt"))
-    q = stream_extract(spark, input_dir, out, ckpt, available_now=True)
+    q = stream_extract(spark, input_dir, out, ckpt)
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     assert got.count() == n
@@ -33,7 +33,7 @@ def test_stream_extract_matches_batch(spark, staged_pages, tmp_path_factory):
     assert bad == 0
 
     # resume: restart with same checkpoint, nothing new -> no duplicates
-    q2 = stream_extract(spark, input_dir, out, ckpt, available_now=True)
+    q2 = stream_extract(spark, input_dir, out, ckpt)
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == n
 

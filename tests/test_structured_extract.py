@@ -116,10 +116,10 @@ def test_tables_of_malformed_doc_contributes_zero_rows(spark):
         [("u1", b"<body><table><tr><td>x</td></tr></table>"),
          ("u2", b"\xff\xfe totally not html \x00")],
         "url string, html binary")
-    out = tables_of(df).collect()
+    out = tables_of(df, ("url",)).collect()
     assert [(r.url, r.cell) for r in out] == [("u1", "x")]
     # metadata stays 1:1 even for garbage input
-    md = metadata_of(df).orderBy("url").collect()
+    md = metadata_of(df, ("url",)).orderBy("url").collect()
     assert len(md) == 2 and md[1].title == ""
 
 
@@ -170,7 +170,7 @@ def test_semantic_dedup_drops_are_sound(spark):
     (no survivor pair above threshold with both kept... which CAN happen
     only across cells -- within a cell the smaller id always wins)."""
     from closure_html_spark.spark.relational import q_semantic_dedup
-    rows = q_semantic_dedup(spark, SF, n_cells=16).collect()
+    rows = q_semantic_dedup(spark, SF).collect()
     import pyarrow.parquet as pq
     t = pq.read_table(f"{SF}/embeddings.parquet").to_pydict()
     emb = {v: np.array(e) for v, e in zip(t["vec_id"], t["embedding"])}
@@ -191,14 +191,6 @@ def test_semantic_dedup_drops_are_sound(spark):
             assert bool(kept) == (not has_dup), (cell, vid, sims)
             n_dropped += 0 if kept else 1
     assert n_dropped > 0  # the corpus must actually exercise the rule
-
-
-def test_semantic_dedup_self_sizing_runs(spark):
-    """n_cells=None takes ivf_n_cells(N) from the parquet footer and must
-    still produce one verdict row per vector."""
-    from closure_html_spark.spark.relational import q_semantic_dedup
-    out = q_semantic_dedup(spark, SF)
-    assert out.count() == 500
 
 
 # --- JSON-LD -----------------------------------------------------------------

@@ -23,7 +23,7 @@ def test_footer_schema_equals_inferred(spark, sf_dir, sf):
                    if f.endswith(".parquet"))
     assert "events" in names and "embeddings" in names
     for name in names:
-        got = footer_schema(d, name)
+        got = footer_schema(d, name, True)
         assert got is not None, name
         assert got == _inferred(spark, d, name), name
         assert read_table(spark, d, name).schema == got, name
@@ -61,7 +61,7 @@ def test_footer_schema_of_spark_written_file(spark, tmp_path):
          .write.parquet(str(tmp_path / "t.parquet")))
     finally:
         spark.conf.set(key, old)
-    got = footer_schema(str(tmp_path), "t")
+    got = footer_schema(str(tmp_path), "t", True)
     assert got["ts"].dataType == TimestampType()
     assert got == _inferred(spark, str(tmp_path), "t")
     assert read_table(spark, str(tmp_path), "t").count() == 3
@@ -100,7 +100,7 @@ def test_fallbacks_read_what_spark_infers(spark, sf_dir, tmp_path):
     cases = [(uri, "documents"), (str(tmp_path), "parts"),
              (str(tmp_path), "mixed"), (str(tmp_path), "unsigned")]
     for d, name in cases:
-        assert footer_schema(d, name) is None, name
+        assert footer_schema(d, name, True) is None, name
         assert read_table(spark, d, name).schema == \
             _inferred(spark, d, name), name
     assert "lang" in read_table(spark, str(tmp_path), "parts").columns

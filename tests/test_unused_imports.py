@@ -1,21 +1,24 @@
 """Static checks: no module of the package imports a name it never uses,
 no function of `spark/relational.py` or `spark/multimodal.py` takes a
-parameter it never reads, no defaulted parameter of the query modules is
-a knob that every call leaves at one value, and no top-level name of the
-package is read only by tests.
+parameter it never reads, no defaulted parameter of the package is a
+knob that code outside `tests/` leaves at one value or never leaves at
+its default, no top-level name of the package is read only by tests, and
+no top-level name is bound in two of its modules.
 
 Stdlib only (`ast`): a name bound by `import` / `from ... import` at any
 depth must be read somewhere in the same module.  `from __future__`
 imports are exempt.  The parameter check covers `def` functions only:
 lambdas handed to Spark (zip_with, aggregate, transform) must keep the
 arity Spark calls them with.  The knob check covers the defaulted
-parameters of top-level `def`s: some call in the repo's `.py` files
-outside `tests/` must pass each one a value whose source text differs
-from its default, or the value belongs in a module constant.  A value
-that only a test sets is no option; a test patches the constant.  The
-read check covers every top-level def, class and assigned name of the
-package, private ones included: code outside `tests/` must read it, or
-it is on the exemption list with a reason."""
+parameters of every top-level `def` of the package and of
+`__spark_entry__.py`: the code outside `tests/` must take each default
+somewhere and give the parameter more than one constant value, or the
+value belongs in a module constant (a test patches the constant) or the
+parameter is required.  The read check covers every top-level def, class
+and assigned name of the package, private ones included: code outside
+`tests/` must read it, or it is on the exemption list with a reason.
+Both checks match by name, which the one-binding-per-name check makes
+unambiguous inside the package."""
 
 import ast
 import collections
@@ -25,19 +28,33 @@ import closure_html_spark
 
 PKG = pathlib.Path(closure_html_spark.__file__).parent
 ROOT = pathlib.Path(__file__).resolve().parents[1]
-# the modules whose queries, oracle builders and stages the knob check
-# covers, relative to ROOT
-KNOB_SCOPE = (
-    "closure_html_spark/spark/relational.py",
-    "closure_html_spark/spark/multimodal.py",
-    "closure_html_spark/spark/pages.py",
-    "closure_html_spark/spark/pipeline.py",
-    "__spark_entry__.py",
-)
-# defaulted parameters the knob check lets stand with no caller: the
-# per-document byte cap of extract_pages is the deployment memory bound
-# that SCALE.md's worker-sizing rule is written in
-KNOB_EXEMPT = ("extract_pages(max_doc_bytes=",)
+# defaulted parameters the knob check lets stand, keyed
+# `module.function(parameter)` with the module relative to the package,
+# each with its reason.  Only two kinds of reason hold: a closure-html API
+# the reference can execute, reproduced as COVERAGE.md maps it, or a call
+# shape of the frozen benchmark (perfbench/).
+KNOB_EXEMPT = {
+    "serialize.serialize_doc(nid)": "serialize-pt serializes any pt node, "
+                                    "not only the root",
+    "serialize.serialize_doc(public_id)": "hax:start-document's doctype "
+                                          "arguments, unparse.lisp:68-84",
+    "serialize.serialize_doc(system_id)": "hax:start-document's doctype "
+                                          "arguments, unparse.lisp:68-84",
+    "serialize.serialize_doc(doctype_name)": "hax:start-document's doctype "
+                                             "arguments, unparse.lisp:68-84",
+    "serialize.doc_to_lhtml(nid)": "ppt and lhtml-builder render any pt "
+                                   "node",
+    "author.with_html_output(name)": "with-html-output's keyword "
+                                     "arguments, unparse.lisp:247-262",
+    "author.with_html_output(public_id)": "with-html-output's keyword "
+                                          "arguments, unparse.lisp:247-262",
+    "author.with_html_output(system_id)": "with-html-output's keyword "
+                                          "arguments, unparse.lisp:247-262",
+    "parser.normalize.canon_value(warn)": "canon-value's warnings, "
+                                          "sgml-parse.lisp:866-896",
+    "parser.charset.decode_html(default)": "perfbench/htmlwork.py:164 "
+                                           "passes it positionally",
+}
 
 
 def unused_imports(source: str) -> list[str]:
@@ -109,44 +126,6 @@ def test_multimodal_has_no_unused_params():
     assert unused_params(source) == []
 
 
-def single_value_knobs(source: str, call_sources: list[str]) -> list[str]:
-    """Defaulted parameters of the top-level defs in `source` that no
-    call in `call_sources` passes a value whose source text differs from
-    the default.  Calls match by callee name (`f(...)` or `mod.f(...)`),
-    positional arguments by position; arguments after a `*args` are not
-    counted, nor is a `**kwargs`."""
-    passed = collections.defaultdict(set)
-    for src in call_sources:
-        for call in ast.walk(ast.parse(src)):
-            if not isinstance(call, ast.Call):
-                continue
-            name = getattr(call.func, "id", getattr(call.func, "attr", None))
-            for i, arg in enumerate(call.args):
-                if isinstance(arg, ast.Starred):
-                    break
-                passed[name, i].add(ast.unparse(arg))
-            for kw in call.keywords:
-                if kw.arg is not None:
-                    passed[name, kw.arg].add(ast.unparse(kw.value))
-    found = []
-    for fn in ast.parse(source).body:
-        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-            continue
-        a = fn.args
-        pos = a.posonlyargs + a.args
-        first = len(pos) - len(a.defaults)
-        knobs = [(i, p, d) for i, (p, d)
-                 in enumerate(zip(pos[first:], a.defaults), first)]
-        knobs += [(p.arg, p, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
-                  if d is not None]
-        for i, p, d in knobs:
-            default = ast.unparse(d)
-            values = passed[fn.name, p.arg] | passed[fn.name, i]
-            if not values - {default}:
-                found.append(f"{fn.name}({p.arg}={default}) (line {fn.lineno})")
-    return found
-
-
 def _sources(root: pathlib.Path) -> dict[str, str]:
     """Path relative to root -> text of the `.py` files under root whose
     calls and reads count: none under a dot directory or under `tests/`."""
@@ -158,33 +137,227 @@ def _sources(root: pathlib.Path) -> dict[str, str]:
     return out
 
 
+def _module_of(rel: str, package: str) -> str | None:
+    """`rel`'s module name relative to `package` ("" for its __init__),
+    or None for a file outside it."""
+    if not rel.startswith(package + "/"):
+        return None
+    return rel[len(package) + 1:-3].replace("/", ".") \
+        .removesuffix("__init__").rstrip(".")
+
+
+def _params(fn) -> list[tuple]:
+    """(position or None, name, default node or None) of each named
+    parameter of `fn`; keyword-only parameters have no position."""
+    a = fn.args
+    pos = a.posonlyargs + a.args
+    defaults = [None] * (len(pos) - len(a.defaults)) + a.defaults
+    return ([(i, p.arg, d) for i, (p, d) in enumerate(zip(pos, defaults))]
+            + [(None, p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)])
+
+
+def _constant(text: str) -> bool:
+    """A literal, a module constant (an UPPER_CASE name or attribute), or
+    a tuple, list or arithmetic of those."""
+    def const(n):
+        if isinstance(n, ast.Constant):
+            return True
+        if isinstance(n, ast.Name):
+            return n.id.isupper()
+        if isinstance(n, ast.Attribute):
+            return n.attr.isupper()
+        if isinstance(n, (ast.Tuple, ast.List, ast.Set)):
+            return all(map(const, n.elts))
+        if isinstance(n, ast.UnaryOp):
+            return const(n.operand)
+        if isinstance(n, ast.BinOp):
+            return const(n.left) and const(n.right)
+        return False
+    try:
+        return const(ast.parse(text, mode="eval").body)
+    except SyntaxError:  # a `*args` / `**kwargs` stand-in
+        return False
+
+
+def single_value_knobs(sources: dict[str, str], package: str,
+                       extra=()) -> list[str]:
+    """Defaulted parameters of the top-level defs of the modules under
+    `package/` and of the files in `extra`, among `sources` (relative
+    path -> text), that the code in `sources` does not use as options:
+    `module.f(p) (line N): ...`, module relative to the package (an
+    `extra` file by its stem).
+
+    Every use of a def, matched by name, gives each parameter values.  A
+    call (`f(...)` or `x.f(...)`, positional arguments by position) gives
+    the source text of the argument it passes, or the default when it
+    leaves the argument out; a reference that is not a call (a registry
+    entry, a callback) takes every default.  An argument after a `*args`
+    or beside a `**kwargs` is unknown and counts as varying.  An argument
+    that is a bare parameter of the enclosing top-level def, never
+    rebound in it, forwards that parameter's values, resolved to a fixed
+    point.  A parameter fails when no use takes its default, or when it
+    has one value and that value is a constant expression."""
+    defs = {}
+    for rel, text in sources.items():
+        module = (_module_of(rel, package) if rel not in extra
+                  else rel.removesuffix(".py"))
+        if module is None:
+            continue
+        for fn in ast.parse(text).body:
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                defs.setdefault(fn.name, []).append((module, fn))
+    values = collections.defaultdict(set)    # (def, param) -> texts
+    forwards = collections.defaultdict(set)  # (def, param) -> its sources
+    taken = set()                            # (def, param) defaulted by a use
+
+    def forwarded(arg, scopes):
+        if not isinstance(arg, ast.Name):
+            return None
+        for fn in reversed(scopes):
+            a = fn.args
+            if arg.id in {p.arg for p in a.posonlyargs + a.args + a.kwonlyargs
+                          + [a.vararg, a.kwarg] if p is not None}:
+                rebound = any(isinstance(n, ast.Name) and n.id == arg.id
+                              and isinstance(n.ctx, ast.Store)
+                              for n in ast.walk(fn))
+                top = fn is scopes[0] and getattr(fn, "name", None) in defs
+                return (fn.name, arg.id) if top and not rebound else None
+        return None
+
+    def use(name, call, scopes):
+        given, star, stars = {}, None, None
+        if call is not None:
+            for i, arg in enumerate(call.args):
+                if isinstance(arg, ast.Starred):
+                    star = ast.unparse(arg)
+                    break
+                given[i] = arg
+            for kw in call.keywords:
+                if kw.arg is None:
+                    stars = "**" + ast.unparse(kw.value)
+                else:
+                    given[kw.arg] = kw.value
+        for i, p, d in _params(defs[name][0][1]):
+            arg = given.get(p, given.get(i))
+            unknown = stars if i is None else star or stars
+            if arg is not None:
+                src = forwarded(arg, scopes)
+                if src is not None:
+                    forwards[name, p].add(src)
+                else:
+                    values[name, p].add(ast.unparse(arg))
+            elif unknown is not None:
+                values[name, p].add(unknown)
+            elif d is not None:
+                values[name, p].add(ast.unparse(d))
+                taken.add((name, p))
+
+    def visit(node, scopes):
+        children = list(ast.iter_child_nodes(node))
+        if isinstance(node, ast.Call):
+            callee = node.func
+            name = getattr(callee, "id", getattr(callee, "attr", None))
+            if name in defs:
+                use(name, node, scopes)
+            children.remove(callee)
+            if isinstance(callee, ast.Attribute):
+                children.append(callee.value)
+        elif isinstance(node, (ast.Name, ast.Attribute)) \
+                and isinstance(node.ctx, ast.Load):
+            name = getattr(node, "id", getattr(node, "attr", None))
+            if name in defs:
+                use(name, None, scopes)
+        elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef,
+                               ast.Lambda)):
+            scopes = scopes + [node]
+        for child in children:
+            visit(child, scopes)
+
+    for text in sources.values():
+        visit(ast.parse(text), [])
+    changed = True
+    while changed:
+        changed = False
+        for key, srcs in forwards.items():
+            for src in srcs:
+                if not values[src] <= values[key]:
+                    values[key] |= values[src]
+                    changed = True
+    found = []
+    for name, fns in defs.items():
+        for module, fn in fns:
+            for _, p, d in _params(fn):
+                if d is None:
+                    continue
+                vals = sorted(values[name, p])
+                if (name, p) not in taken:
+                    why = "no use takes it"
+                elif len(vals) == 1 and _constant(vals[0]):
+                    why = "its one value"
+                else:
+                    continue
+                found.append(f"{module}.{name}({p})".lstrip(".")
+                             + f" (line {fn.lineno}): default "
+                             f"{ast.unparse(d)}, {why}; {vals}")
+    return found
+
+
 def test_knob_checker_flags_single_value_defaults(tmp_path):
-    src = ("def f(a, b=1, *, c='x', d=None):\n    return a\n"
-           "def g(x=2):\n    return x\n"
-           "def _h(y=3):\n"
-           "    def inner(z=4):\n        return z\n"
-           "    return inner(y)\n")
-    calls = ["f(0, 1, c='x')\nm.f(0, d=obj)\ng(*xs)\nm.g(x=5)\n"]
-    assert single_value_knobs(src, calls) == [
-        "f(b=1) (line 1)", "f(c='x') (line 1)", "_h(y=3) (line 5)"]
-    # a call under tests/ does not count; one in any other file does
-    (tmp_path / "tests").mkdir()
-    (tmp_path / "tests" / "test_g.py").write_text("m.g(x=5)\n")
+    sources = {
+        "pkg/a.py": ("K = 4\n"
+                     "def f(a, b=1, *, c='x', d=None):\n    return a\n"
+                     "def wrap(v, width=None):\n    return pad(v, width)\n"
+                     "def pad(v, width=None):\n"
+                     "    def inner(z=4):\n        return z\n"
+                     "    return inner(v)\n"
+                     "def reg(s, w=8):\n    return s\n"
+                     "def cli(p=None, *, q=K):\n    return p\n"),
+        "tool.py": ("from pkg.a import f, wrap, pad, reg, cli\n"
+                    "f(0, 1, c='x')\nm.f(0, d=obj)\n"
+                    "wrap(1)\npad(3)\n"
+                    "REGISTRY = {'q': reg}\nreg(0, w=16)\n"
+                    "cli(args.path)\ncli(*xs)\ncli(q=K)\n"),
+    }
+    # b and c: every use gives the default's value.  width: wrap forwards
+    # its own parameter, so pad's width is only ever wrap's default.  q:
+    # a module constant is a constant expression, and *xs fills no
+    # keyword-only parameter.  The registry entry takes reg's w=8 beside
+    # the call's 16; cli's p varies with a computed value and *xs;
+    # nested defs are not checked.
+    assert single_value_knobs(sources, "pkg") == [
+        "a.f(b) (line 2): default 1, its one value; ['1']",
+        "a.f(c) (line 2): default 'x', its one value; [\"'x'\"]",
+        "a.wrap(width) (line 4): default None, its one value; ['None']",
+        "a.pad(width) (line 6): default None, its one value; ['None']",
+        "a.cli(q) (line 12): default K, its one value; ['K']"]
+    # a default that only a test takes: a call under tests/ does not
+    # count, one in any other file does
+    (tmp_path / "pkg").mkdir()
+    (tmp_path / "pkg" / "b.py").write_text("def opt(x=2):\n    return x\n")
     (tmp_path / "tools").mkdir()
-    (tmp_path / "tools" / "run.py").write_text("f(0, 2, c='y', d=obj)\n")
-    assert single_value_knobs(src, list(_sources(tmp_path).values())) == [
-        "g(x=2) (line 3)", "_h(y=3) (line 5)"]
+    (tmp_path / "tools" / "run.py").write_text("opt(x=5)\nopt(x=n)\n")
+    (tmp_path / "tests").mkdir()
+    (tmp_path / "tests" / "test_b.py").write_text("opt()\n")
+    assert single_value_knobs(_sources(tmp_path), "pkg") == [
+        "b.opt(x) (line 1): default 2, no use takes it; ['5', 'n']"]
+    (tmp_path / "tools" / "run.py").write_text("opt(x=5)\nopt()\n")
+    assert single_value_knobs(_sources(tmp_path), "pkg") == []
+
+
+def _knobs(sources: dict[str, str]) -> list[str]:
+    return single_value_knobs(sources, "closure_html_spark",
+                              ("__spark_entry__.py",))
 
 
 def test_query_modules_have_no_single_value_knobs():
-    calls = list(_sources(ROOT).values())
-    found = {}
-    for rel in KNOB_SCOPE:
-        bad = [k for k in single_value_knobs((ROOT / rel).read_text(), calls)
-               if not k.startswith(KNOB_EXEMPT)]
-        if bad:
-            found[rel] = bad
-    assert found == {}
+    """Every top-level def of the package and of __spark_entry__.py."""
+    assert [k for k in _knobs(_sources(ROOT))
+            if k.split(" ")[0] not in KNOB_EXEMPT] == []
+
+
+def test_knob_exemptions_are_still_knobs():
+    found = {k.split(" ")[0] for k in _knobs(_sources(ROOT))}
+    assert sorted(set(KNOB_EXEMPT) - found) == []
 
 
 # top-level names of the package that no code outside tests/ reads and
@@ -219,6 +392,22 @@ UNREAD_EXEMPT = {
 }
 
 
+def _bound_names(top) -> list[str]:
+    """The names a top-level statement binds by def, class or assignment,
+    dunder names left out."""
+    if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef,
+                        ast.ClassDef)):
+        names = [top.name]
+    elif isinstance(top, (ast.Assign, ast.AnnAssign)):
+        targets = (top.targets if isinstance(top, ast.Assign)
+                   else [top.target])
+        names = [n.id for t in targets for n in ast.walk(t)
+                 if isinstance(n, ast.Name)]
+    else:
+        names = []
+    return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
+
+
 def unread_top_level(sources: dict[str, str], package: str,
                      roots=()) -> list[str]:
     """Top-level defs, classes and assigned names of the modules under
@@ -232,28 +421,14 @@ def unread_top_level(sources: dict[str, str], package: str,
     # name -> the key sets bound by the top-level statements reading it
     reads = collections.defaultdict(list)
     for rel, text in sources.items():
-        module = None
-        if rel.startswith(package + "/"):
-            module = rel[len(package) + 1:-3].replace("/", ".") \
-                .removesuffix("__init__").rstrip(".")
+        module = _module_of(rel, package)
         for top in ast.parse(text).body:
-            if isinstance(top, (ast.FunctionDef, ast.AsyncFunctionDef,
-                                ast.ClassDef)):
-                names = [top.name]
-            elif isinstance(top, (ast.Assign, ast.AnnAssign)):
-                targets = (top.targets if isinstance(top, ast.Assign)
-                           else [top.target])
-                names = [n.id for t in targets for n in ast.walk(t)
-                         if isinstance(n, ast.Name)]
-            else:
-                names = []
             owner = set()
             if module is not None:
-                for name in names:
-                    if not (name.startswith("__") and name.endswith("__")):
-                        key = f"{module}.{name}".lstrip(".")
-                        defs.setdefault(key, (name, module, top.lineno))
-                        owner.add(key)
+                for name in _bound_names(top):
+                    key = f"{module}.{name}".lstrip(".")
+                    defs.setdefault(key, (name, module, top.lineno))
+                    owner.add(key)
             for n in ast.walk(top):
                 if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
                     reads[n.id].append(owner)
@@ -324,3 +499,35 @@ def test_package_has_no_unread_top_level_names():
 def test_unread_exemptions_are_still_unread():
     assert stale_exemptions(_sources(ROOT), "closure_html_spark",
                             UNREAD_EXEMPT) == []
+
+
+def duplicate_top_level(sources: dict[str, str], package: str) -> list[str]:
+    """Top-level names that more than one module under `package/` binds
+    by def, class or assignment, as `name: module, module, ...`.  An
+    import of a name defined elsewhere binds nothing here."""
+    where = collections.defaultdict(list)
+    for rel, text in sources.items():
+        module = _module_of(rel, package)
+        if module is not None:
+            for top in ast.parse(text).body:
+                for name in _bound_names(top):
+                    if module not in where[name]:
+                        where[name].append(module)
+    return [f"{name}: {', '.join(mods)}" for name, mods in sorted(where.items())
+            if len(mods) > 1]
+
+
+def test_duplicate_checker_flags_names_bound_twice():
+    sources = {
+        "pkg/a.py": "X = 1\nX = 2\ndef f():\n    return X\n",
+        "pkg/sub/__init__.py": "from ..a import X\nclass f:\n    pass\n",
+        "pkg/sub/b.py": "Y, (X, _z) = 1, (2, 3)\n__all__ = []\n",
+        "pkg/c.py": "__all__ = []\n_z = 0\n",
+        "tool.py": "X = f = 0\n",
+    }
+    assert duplicate_top_level(sources, "pkg") == [
+        "X: a, sub.b", "_z: sub.b, c", "f: a, sub"]
+
+
+def test_package_binds_each_top_level_name_once():
+    assert duplicate_top_level(_sources(ROOT), "closure_html_spark") == []

@@ -79,7 +79,7 @@ def main(argv=None):
 
     if args.streaming:
         q = stream_extract(spark, args.input, f"{args.output}/extracted",
-                           f"{args.output}/_checkpoint", available_now=True)
+                           f"{args.output}/_checkpoint")
         q.awaitTermination()
         out = spark.read.parquet(f"{args.output}/extracted")
         print(json.dumps({"mode": "streaming", "rows": out.count(),
