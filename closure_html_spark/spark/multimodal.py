@@ -7,9 +7,9 @@ store media inline or by reference without the engine interpreting bytes.
 The decode kernel is STUBBED (this container has no image/audio codecs):
 `decode_media` raises NotImplementedError for real codecs and provides a
 deterministic fake decoder for the synthetic `fake/*` mime types, so the
-Spark-side plumbing -- schema, Arrow batch shape, mapInPandas signature,
-partition behavior -- is real and fully tested.  Swapping in PIL/ffmpeg
-later changes only `_decode_one`.
+Spark-side plumbing -- schema, Arrow batch shape, the pipeline.doc_stage
+it runs in, partition behavior -- is real and fully tested.  Swapping in
+PIL/ffmpeg later changes only `_decode_one`.
 
 media(media_id long, doc_id long, mime string, payload binary,
       meta struct<width:int, height:int, n_frames:int, sample_rate:int>)
@@ -18,9 +18,7 @@ media(media_id long, doc_id long, mime string, payload binary,
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -70,22 +68,21 @@ DECODED_COLS = ("byte_len int, sha256 string, feature array<float>")
 
 
 def decode_media(df: DataFrame) -> DataFrame:
-    """mapInPandas decode stage: (media_id, doc_id) + decoded features.
-    Arrow-batched; one Python call per batch, not per row."""
-    schema = "media_id long, doc_id long, " + DECODED_COLS
+    """The decode stage: (media_id, doc_id) + decoded features, one row
+    per media row.  Arrow-batched; one Python call per batch, not per
+    row.  A real codec raises and fails the task: the stub must not pass
+    for a decoder."""
+    from .pipeline import doc_stage
 
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"media_id": pdf["media_id"], "doc_id": pdf["doc_id"],
-                   "byte_len": [], "sha256": [], "feature": []}
-            for mime, payload in zip(pdf["mime"], pdf["payload"]):
-                d = _decode_one(mime, bytes(payload))
-                out["byte_len"].append(d["byte_len"])
-                out["sha256"].append(d["sha256"])
-                out["feature"].append(d["feature"])
-            yield pd.DataFrame(out)
+    def columns_of(batch):
+        ds = [_decode_one(mime, bytes(payload)) for mime, payload
+              in zip(batch.column("mime").to_pylist(),
+                     batch.column("payload").to_pylist())]
+        return None, [[d[c] for d in ds]
+                      for c in ("byte_len", "sha256", "feature")]
 
-    return df.mapInPandas(fn, schema)
+    return doc_stage(df, ("media_id", "doc_id"), ["mime", "payload"],
+                     DECODED_COLS, columns_of)
 
 
 def q_media_decode(spark, sf_dir):

@@ -2,8 +2,8 @@
 
 north_rule tier: "main-content extraction pipeline (HTML boilerplate
 strip, PDF/layout parse, DOM heuristics)" -- this module is the PDF leg.
-Same shape as pipeline.extract_pages: one narrow mapInArrow stage, ids
-zero-copy, per-doc parser (closure_html_spark.pdf) never raises.
+One pipeline.doc_stage like extract_pages: ids zero-copy, and the
+per-doc parser (closure_html_spark.pdf) never raises.
 
 Synthesis mirrors pages.pages_from_documents: minimal but REAL PDF files
 (header, catalog/pages/page objects, an uncompressed content stream with
@@ -47,9 +47,8 @@ def pdfs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
               "/Contents 4 0 R/Resources<</Font<</F1 5 0 R>>>>>>endobj\n"
               "4 0 obj<</Length "),
         # /Length is a BYTE count: octet length of the utf-8-encoded
-        # stream, not the character count (round-5 advice -- the in-repo
-        # parser ignores /Length, but the synthesized corpus should be
-        # valid for conforming external readers too)
+        # stream, not the character count (the in-repo parser ignores
+        # /Length; conforming external readers do not)
         F.length(F.encode(content, "utf-8")).cast("string"),
         F.lit(">>stream\n"), content, F.lit("\nendstream\nendobj\n"
               "5 0 obj<</Type/Font/Subtype/Type1/BaseFont/Helvetica>>"
@@ -60,40 +59,29 @@ def pdfs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def pdf_extract_pages(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
-    """mapInArrow PDF text extraction over a `pdf binary` column."""
-    import pyarrow as pa
-
+    """PDF text extraction over a `pdf binary` column, one row per input
+    row; a null or broken PDF keeps its row with the error marker."""
     from ..pdf import extract_pdf_text
-    from .pipeline import _stage_schema
+    from .pipeline import doc_stage
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, "pdf_text string, n_streams int, pdf_error string")
+    def columns_of(batch):
+        texts, n_streams, errors = [], [], []
+        for raw in batch.column("pdf").to_pylist():
+            try:
+                res = extract_pdf_text(bytes(raw) if raw is not None
+                                       else b"")
+                t_v, n_v, e_v = (res["pdf_text"], res["n_streams"],
+                                 res["error"])
+            except Exception as exc:  # pragma: no cover - never raises
+                t_v, n_v, e_v = "", 0, f"error:{type(exc).__name__}"
+            texts.append(t_v)
+            n_streams.append(n_v)
+            errors.append(e_v)
+        return None, [texts, n_streams, errors]
 
-    def fn(batches):
-        for batch in batches:
-            raws = batch.column("pdf").to_pylist()
-            texts, n_streams, errors = [], [], []
-            for raw in raws:
-                # staged locals + single append (same invariant as
-                # pipeline.extract_pages)
-                try:
-                    res = extract_pdf_text(bytes(raw) if raw is not None
-                                           else b"")
-                    t_v, n_v, e_v = (res["pdf_text"], res["n_streams"],
-                                     res["error"])
-                except Exception as exc:  # pragma: no cover - never raises
-                    t_v, n_v, e_v = "", 0, f"error:{type(exc).__name__}"
-                texts.append(t_v)
-                n_streams.append(n_v)
-                errors.append(e_v)
-            arrays = ([batch.column(c) for c in ids] +
-                      [pa.array(texts, pa.string()),
-                       pa.array(n_streams, pa.int32()),
-                       pa.array(errors, pa.string())])
-            yield pa.RecordBatch.from_arrays(arrays,
-                                             names=arrow_schema.names)
-
-    return df.select(*ids, "pdf").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["pdf"],
+                     "pdf_text string, n_streams int, pdf_error string",
+                     columns_of)
 
 
 def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -3,12 +3,15 @@
 Spark shape (SURVEY.md §3.1 "Spark version"): a single narrow stage per
 document family -- scan -> iterator-style mapInArrow (Arrow-batched, no
 per-row Python marshalling at the row level; the parser itself is the
-per-document state machine) -> result columns assembled as pyarrow
-arrays.  Every stage runs its per-document work through one loop,
-_parsed_docs, which applies the byte cap, the charset seeding and the
-never-kill-the-batch error handling.  No shuffle is introduced by
-extraction itself; repartitioning for skew is the caller's choice (see
-lineage.py).
+per-document state machine) -> result columns.  Every per-document Python
+stage of the package, here and in pdfs, warcs, winnow, multimodal and
+relational, is one doc_stage: the stage computes one Python list per
+result column and doc_stage makes each an Arrow array of the type its
+output DDL declares.  Every parse stage runs its per-document work
+through one loop, _parsed_docs, which applies the byte cap, the charset
+seeding and the never-kill-the-batch error handling.  No shuffle is
+introduced by extraction itself; repartitioning for skew is the caller's
+choice (see lineage.py).
 
 DTD tables are loaded once per Python process from the packaged dtd.json
 (module-level cache in closure_html_spark.dtd) -- the broadcast-variable
@@ -38,7 +41,6 @@ RESULT_COL_DDL = {
     "spans": "array<struct<start:int,end:int,score:double,keep:boolean>>",
     "links": "array<string>",
     "anchors": "array<string>",
-    "base": "string",
     "n_nodes": "int",
     "n_warns": "int",
     "warn_levels": "array<int>",
@@ -46,33 +48,26 @@ RESULT_COL_DDL = {
     "main_text": "string",
 }
 
-# links/base need their own scan of the whole DOM (the span scorer's scan
-# covers BODY and cannot see HEAD, where BASE lives), so only consumers
-# that ask for them pay for it: columns=None builds the text/metadata set
-# and a frontier consumer passes columns=("links", "base")
+# links/anchors need their own scan of the whole DOM (the span scorer's
+# scan covers BODY only), so only consumers that ask for them pay for it
 _DEFAULT_COLS = tuple(k for k in RESULT_COL_DDL
-                      if k not in ("links", "anchors", "base"))
+                      if k not in ("links", "anchors"))
 
 
-def _doc_links_base(doc, want_anchors: bool) \
-        -> tuple[list[str], list[str], str | None]:
-    """The crawl-frontier outlink feed (HREF values of <A> nodes in
-    document order), the anchor text of each link (concatenated pcdata of
-    the A subtree -- the classic inbound-anchor relevance signal), and the
-    document base URL (first BASE node's HREF -- the reference's own test
-    fixture pins a BASE node in HEAD, test.lisp:5-18).  anchors[i]
-    belongs to links[i]; an A whose subtree has no pcdata yields ''.
+def _doc_links(doc, want_anchors: bool) -> tuple[list[str], list[str]]:
+    """The outlink feed (HREF values of <A> nodes in document order) and
+    the anchor text of each link (concatenated pcdata of the A subtree --
+    the classic inbound-anchor relevance signal).  anchors[i] belongs to
+    links[i]; an A whose subtree has no pcdata yields ''.
 
     A subtree is an id range of the flat pre-order DOM, so this is a
-    C-side list.index scan of `name` for A and BASE nodes plus one join
-    of the text slice [a + 1, end[a]) per anchor.  An A nested in an A
-    (the PDA lets soup like '<a href=x>..<a href=y>' nest) keeps the
-    pairing: the outer anchor's text includes the inner one's.  Anchor
-    text is only joined when the caller asked for it -- the streaming
-    frontier's links/base projection must not pay it."""
+    C-side list.index scan of `name` for A nodes plus one join of the
+    text slice [a + 1, end[a]) per anchor.  An A nested in an A (the PDA
+    lets soup like '<a href=x>..<a href=y>' nest) keeps the pairing: the
+    outer anchor's text includes the inner one's.  Anchor text is only
+    joined when the caller asked for it."""
     out = []
     anchors = []
-    base = None
     attrs = doc.attrs
     text = doc.text
     end = doc.end
@@ -83,12 +78,7 @@ def _doc_links_base(doc, want_anchors: bool) \
                 if want_anchors:
                     anchors.append("".join(filter(None, text[n + 1:end[n]])))
                 break
-    for n in doc.find_all("BASE"):
-        base = next((v for k, v in (attrs[n] or ())
-                     if k == "HREF" and v is not None), None)
-        if base is not None:
-            break
-    return out, anchors, base
+    return out, anchors
 
 
 # every parse stage's per-document byte cap (_parsed_docs): the deployment
@@ -96,10 +86,55 @@ def _doc_links_base(doc, want_anchors: bool) \
 # worker closures ship the driver's value.
 MAX_DOC_BYTES = 64 * 1024 * 1024  # 64 MiB
 
-# extract_pages' row for a document whose processing raised, in the order
-# its work() returns: title, extracted_text, spans, links, anchors, base,
-# n_nodes, n_warns, warn_levels, main_text
-_ERROR_ROW = ("", "", (), (), (), None, 0, -1, (0, 0, 0, 0, 0), "")
+# extract_pages' values for a document whose processing raised
+_ERROR_ROW = {"title": "", "extracted_text": "", "spans": (), "links": (),
+              "anchors": (), "n_nodes": 0, "n_warns": -1,
+              "warn_levels": (0, 0, 0, 0, 0), "main_text": ""}
+
+
+def doc_stage(df: DataFrame, id_cols: tuple[str, ...], in_cols: list[str],
+              result_ddl: str, columns_of) -> DataFrame:
+    """The one Python stage: `id_cols` of `df` (in input order) ahead of
+    the `result_ddl` columns, computed by one mapInArrow over the id
+    columns and `in_cols`.
+
+    `columns_of(batch)` returns (take, columns): one Python list per
+    result column, and take None when the stage yields one row per input
+    row, or else each output row's input-row index.  The id columns pass
+    through zero-copy, or are gathered C++-side by take.  Each list
+    becomes an Arrow array of the type the DDL declares, so nested field
+    names match the schema Spark expects.  The Arrow schema is resolved
+    on the driver (it needs the JVM DDL parser) and captured."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    missing = [c for c in id_cols if c not in df.columns]
+    if missing:
+        raise ValueError(f"id columns not in the input: {missing}")
+    ids = [name for name in df.columns if name in id_cols]
+    ddl = ", ".join([f"{n} {t}" for n, t in df.dtypes if n in id_cols]
+                    + [result_ddl])
+    arrow_schema = to_arrow_schema(StructType.fromDDL(ddl))
+    # a name twice in one batch breaks the JVM's Arrow reader
+    clash = sorted(set(ids) & set(arrow_schema.names[len(ids):]))
+    if clash:
+        raise ValueError(f"id columns named like result columns: {clash}")
+    types = arrow_schema.types[len(ids):]
+
+    def fn(batches):
+        for batch in batches:
+            take, columns = columns_of(batch)
+            if take is None:
+                id_arrays = [batch.column(c) for c in ids]
+            else:
+                take = pa.array(take, pa.int32())
+                id_arrays = [batch.column(c).take(take) for c in ids]
+            yield pa.RecordBatch.from_arrays(
+                id_arrays + [pa.array(c, t) for c, t in zip(columns, types)],
+                schema=arrow_schema)
+
+    return df.select(*ids, *in_cols).mapInArrow(fn, ddl)
 
 
 def _parsed_docs(batch, work, max_doc_bytes: int):
@@ -139,41 +174,12 @@ def _parsed_docs(batch, work, max_doc_bytes: int):
         yield idx, result, "error:oversize" if oversize else cs
 
 
-def _stage_schema(df: DataFrame, id_cols: tuple[str, ...], result_ddl: str):
-    """(id column names in input order, output DDL, its Arrow schema) of
-    a stage that passes `id_cols` through ahead of `result_ddl`.  The
-    Arrow schema is resolved on the driver (it needs the JVM DDL parser)
-    and captured by the stage function."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    ids = [name for name, _ in df.dtypes if name in id_cols]
-    ddl = ", ".join([f"{n} {t}" for n, t in df.dtypes if n in id_cols]
-                    + [result_ddl])
-    return ids, ddl, to_arrow_schema(StructType.fromDDL(ddl))
-
-
-def _out_batch(batch, ids: list[str], arrays: list, arrow_schema, take=None):
-    """The output batch: the id columns of `batch` (zero-copy, or gathered
-    C++-side by the `take` indices for exploded stages), then `arrays`."""
-    import pyarrow as pa
-    id_arrays = [batch.column(c) if take is None
-                 else batch.column(c).take(take) for c in ids]
-    out = pa.RecordBatch.from_arrays(id_arrays + arrays,
-                                     names=arrow_schema.names)
-    # nested field names differ only cosmetically (item vs element); the
-    # cast is metadata-level, buffers are shared
-    return out.cast(arrow_schema, safe=False)
-
-
 def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
                   columns: tuple[str, ...] | None = None) -> DataFrame:
     """Parse + extract every page.  Keeps `id_cols` as passthrough keys.
 
-    One mapInArrow stage assembling the output columns directly as
-    pyarrow buffers: strings go Python->Arrow once, spans/warn_levels are
-    built as ListArrays from flat primitive arrays (no per-span dict
-    objects), and id columns pass through zero-copy from the input batch.
+    One doc_stage: strings go Python->Arrow once, and id columns pass
+    through zero-copy from the input batch.
 
     MAX_DOC_BYTES is the per-document byte cap (64 MiB), as in every
     parse stage.  The session's Arrow batch caps bound the BATCH, but one
@@ -200,12 +206,9 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     (and skips the span scorer when no text column is requested).
     main_text is the concatenated kept spans; an error row's main_text
     is ''.
-    columns=None builds _DEFAULT_COLS, which EXCLUDES links/base: they
-    need a second scan of the whole DOM (the span scorer's covers BODY
-    and cannot see HEAD, where BASE lives), so only frontier consumers
-    passing columns=("links", "base") pay it."""
-    import pyarrow as pa
-
+    columns=None builds _DEFAULT_COLS, which EXCLUDES links/anchors: they
+    need a second scan of the whole DOM, so only consumers that name them
+    pay it."""
     if columns is None:
         wanted = _DEFAULT_COLS
     else:
@@ -217,144 +220,66 @@ def extract_pages(df: DataFrame, id_cols: tuple[str, ...] = ("url",),
     need_extract = bool(
         {"title", "extracted_text", "spans", "main_text"} & set(wanted))
     need_anchors = "anchors" in wanted
-    need_links = bool({"links", "anchors", "base"} & set(wanted))
+    need_links = bool({"links", "anchors"} & set(wanted))
     # built here, not from (extracted_text, spans) on the JVM: Spark's
     # substr is character-indexed and walks the UTF-8 string from its
     # start on every call, so a per-span fold there is quadratic
     need_main = "main_text" in wanted
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, ", ".join(f"{k} {RESULT_COL_DDL[k]}" for k in wanted))
-    has_ct = "content_type" in df.columns
-    cols = ids + ["html"] + (["content_type"] if has_ct else [])
-    i32 = pa.int32()
-
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd()
 
         def work(text):
             doc = parse_html(dtd, text)
-            if need_extract:
-                res = extract_main_content(doc, dtd,
-                                           with_main_text=need_main)
-                title_v, text_v = res["title"], res["extracted_text"]
-                spans_v, main_v = res["spans"], res["main_text"]
-            else:
-                title_v = text_v = main_v = ""
-                spans_v = ()
-            links_v, anchors_v, base_v = (
-                _doc_links_base(doc, want_anchors=need_anchors)
-                if need_links else ((), (), None))
             # parse-warn levels 1-5 (sgml-parse.lisp:285-292) as per-doc
             # counters -> aggregable corpus metrics
             lv = [0, 0, 0, 0, 0]
             for level, _ in doc.warnings:
                 if 1 <= level <= 5:
                     lv[level - 1] += 1
-            return (title_v, text_v, spans_v, links_v, anchors_v, base_v,
-                    len(doc.name), len(doc.warnings), lv, main_v)
+            row = {"n_nodes": len(doc.name), "n_warns": len(doc.warnings),
+                   "warn_levels": lv}
+            if need_extract:
+                row.update(extract_main_content(doc, dtd,
+                                                with_main_text=need_main))
+            if need_links:
+                row["links"], row["anchors"] = _doc_links(doc, need_anchors)
+            return row
 
-        for batch in batches:
-            n = batch.num_rows
-            titles, texts, mains, charsets = [], [], [], []
-            n_nodes, n_warns = [], []
-            # spans + warn_levels + links as flat child arrays + offsets:
-            # the ListArray/StructArray build is one memcpy-style pass, no
-            # per-span Python dicts
-            sp_off = [0]
-            sp_start, sp_end, sp_score, sp_keep = [], [], [], []
-            lk_off, lk_flat, an_flat = [0], [], []
-            bases = []
-            wl_flat = []
-            for _, row, cs in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                (title_v, text_v, spans_v, links_v, anchors_v, base_v,
-                 nn, nw, lv, main_v) = row or _ERROR_ROW
-                if cs == "error:oversize":
-                    lv[4] += 1
-                    nw += 1
-                titles.append(title_v)
-                texts.append(text_v)
-                mains.append(main_v)
-                for s, e, sc, k in spans_v:
-                    sp_start.append(s)
-                    sp_end.append(e)
-                    sp_score.append(sc)
-                    sp_keep.append(k)
-                sp_off.append(len(sp_start))
-                lk_flat.extend(links_v)
-                an_flat.extend(anchors_v)
-                lk_off.append(len(lk_flat))
-                bases.append(base_v)
-                n_nodes.append(nn)
-                n_warns.append(nw)
-                wl_flat.extend(lv)
-                charsets.append(cs)
-            built = {}
-            if "title" in wanted:
-                built["title"] = pa.array(titles, pa.string())
-            if "extracted_text" in wanted:
-                built["extracted_text"] = pa.array(texts, pa.string())
-            if "spans" in wanted:
-                built["spans"] = pa.ListArray.from_arrays(
-                    pa.array(sp_off, i32),
-                    pa.StructArray.from_arrays(
-                        [pa.array(sp_start, i32), pa.array(sp_end, i32),
-                         pa.array(sp_score, pa.float64()),
-                         pa.array(sp_keep, pa.bool_())],
-                        names=["start", "end", "score", "keep"]))
-            if "links" in wanted:
-                built["links"] = pa.ListArray.from_arrays(
-                    pa.array(lk_off, i32), pa.array(lk_flat, pa.string()))
-            if "anchors" in wanted:
-                # one anchor per link: the links offsets describe this
-                # child array too
-                built["anchors"] = pa.ListArray.from_arrays(
-                    pa.array(lk_off, i32), pa.array(an_flat, pa.string()))
-            if "base" in wanted:
-                built["base"] = pa.array(bases, pa.string())
-            if "n_nodes" in wanted:
-                built["n_nodes"] = pa.array(n_nodes, i32)
-            if "n_warns" in wanted:
-                built["n_warns"] = pa.array(n_warns, i32)
-            if "warn_levels" in wanted:
-                built["warn_levels"] = pa.ListArray.from_arrays(
-                    pa.array(range(0, 5 * n + 5, 5), i32),
-                    pa.array(wl_flat, i32))
-            if "charset" in wanted:
-                built["charset"] = pa.array(charsets, pa.string())
-            if need_main:
-                built["main_text"] = pa.array(mains, pa.string())
-            arrays = [built[k] for k in wanted]
-            yield _out_batch(batch, ids, arrays, arrow_schema)
+        rows = []
+        for _, row, cs in _parsed_docs(batch, work, MAX_DOC_BYTES):
+            row = row or dict(_ERROR_ROW)
+            if cs == "error:oversize":
+                row["warn_levels"][4] += 1
+                row["n_warns"] += 1
+            row["charset"] = cs
+            rows.append(row)
+        return None, [[row[k] for row in rows] for k in wanted]
 
-    return df.select(*cols).mapInArrow(fn, schema)
+    in_cols = ["html"] + (["content_type"] if "content_type" in df.columns
+                          else [])
+    return doc_stage(df, id_cols, in_cols,
+                     ", ".join(f"{k} {RESULT_COL_DDL[k]}" for k in wanted),
+                     columns_of)
 
 
 def serialize_pages(df: DataFrame,
                     id_cols: tuple[str, ...] = ("url",)) -> DataFrame:
     """Parse + re-serialize every page to canonical escaped HTML
     (the reference's clean-html round trip, doc/examples.xml:60-77).
-    mapInArrow: html_out is the largest string column in the system
-    (~1x input), so it goes Python->Arrow exactly once; ids zero-copy.
-    A document whose processing raises yields html_out=''."""
-    import pyarrow as pa
-
-    ids, schema, arrow_schema = _stage_schema(df, id_cols,
-                                              "html_out string")
-
-    def fn(batches):
+    html_out is the largest string column in the system (~1x input), so
+    it goes Python->Arrow exactly once; ids zero-copy.  A document whose
+    processing raises yields html_out=''."""
+    def columns_of(batch):
         dtd = load_dtd()
 
         def work(text):
             return serialize_doc(parse_html(dtd, text), dtd)
 
-        for batch in batches:
-            outs = [out if out is not None else ""
-                    for _, out, _ in _parsed_docs(batch, work, MAX_DOC_BYTES)]
-            yield _out_batch(batch, ids, [pa.array(outs, pa.string())],
-                             arrow_schema)
+        return None, [[out if out is not None else "" for _, out, _
+                       in _parsed_docs(batch, work, MAX_DOC_BYTES)]]
 
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"], "html_out string", columns_of)
 
 
 def nodes_of(df: DataFrame,
@@ -362,244 +287,180 @@ def nodes_of(df: DataFrame,
     """Exploded `nodes` table: one row per DOM node -- the relational query
     surface over parsed documents (SURVEY.md §2.8 / FIXTURES.md §2).
 
-    The per-node columns are assembled as flat primitive lists -> pyarrow
-    arrays in one pass (attrs as a MapArray from flat key/value child
-    arrays + offsets), and the id columns are replicated with a C++-side
-    take() gather -- no per-node Python dicts (round-3 verdict wrong #2: a
-    50 KB page explodes to ~10^3 nodes; building each as a dict dominated
-    the stage).  A document whose processing raises contributes zero
+    The per-node columns are list slices of the flat DOM and the id
+    columns are replicated by doc_stage's take; a 50 KB page explodes to
+    ~10^3 nodes, so nothing here builds a per-node Python object but the
+    attrs dict.  A document whose processing raises contributes zero
     rows."""
-    import pyarrow as pa
-
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, "node_id int, parent_id int, depth int, name string, "
-        "attrs map<string,string>, text string")
-    i32 = pa.int32()
-
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd()
 
         def work(text):
             return parse_html(dtd, text)
 
-        for batch in batches:
-            row_idx = []          # input-row index per output node row
-            node_id, parent_id, depth_c = [], [], []
-            name_c, text_c = [], []
-            at_off, at_k, at_v = [0], [], []
-            for idx, doc, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                if doc is None:
-                    continue
-                # the tree is the id range [root, end[root]), already in
-                # pre-order: ids and parents are offsets from the root,
-                # and a parent's depth is known before its children's
-                root = doc.root
-                stop = doc.end[root]
-                pids = [-1]
-                pids.extend([p - root for p in doc.parent[root + 1:stop]])
-                depth = [0]
-                for p in pids[1:]:
-                    depth.append(depth[p] + 1)
-                row_idx.extend([idx] * len(pids))
-                node_id.extend(range(len(pids)))
-                parent_id.extend(pids)
-                depth_c.extend(depth)
-                name_c.extend(doc.name[root:stop])
-                text_c.extend(doc.text[root:stop])
-                for a in doc.attrs[root:stop]:
-                    if a:
-                        # dict round-trip dedups repeated attr names (last
-                        # wins) -- Spark's map-key uniqueness requirement
-                        ad = dict(a)
-                        at_k.extend(ad.keys())
-                        at_v.extend(ad.values())
-                    at_off.append(len(at_k))
-            yield _out_batch(batch, ids, [
-                pa.array(node_id, i32), pa.array(parent_id, i32),
-                pa.array(depth_c, i32),
-                pa.array(name_c, pa.string()),
-                pa.MapArray.from_arrays(
-                    pa.array(at_off, i32),
-                    pa.array(at_k, pa.string()),
-                    pa.array(at_v, pa.string())),
-                pa.array(text_c, pa.string())],
-                arrow_schema, take=pa.array(row_idx, i32))
+        take, node_id, parent_id, depth_c = [], [], [], []
+        name_c, attrs_c, text_c = [], [], []
+        for idx, doc, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
+            if doc is None:
+                continue
+            # the tree is the id range [root, end[root]), already in
+            # pre-order: ids and parents are offsets from the root, and a
+            # parent's depth is known before its children's
+            root = doc.root
+            stop = doc.end[root]
+            pids = [-1]
+            pids.extend([p - root for p in doc.parent[root + 1:stop]])
+            depth = [0]
+            for p in pids[1:]:
+                depth.append(depth[p] + 1)
+            take.extend([idx] * len(pids))
+            node_id.extend(range(len(pids)))
+            parent_id.extend(pids)
+            depth_c.extend(depth)
+            name_c.extend(doc.name[root:stop])
+            # dict() dedups repeated attr names (last wins) -- Spark's
+            # map-key uniqueness requirement.  An empty map is the empty
+            # tuple: no allocation, and Arrow converts it faster than {}
+            attrs_c.extend([dict(a) if a else ()
+                            for a in doc.attrs[root:stop]])
+            text_c.extend(doc.text[root:stop])
+        return take, [node_id, parent_id, depth_c, name_c, attrs_c, text_c]
 
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"],
+                     "node_id int, parent_id int, depth int, name string, "
+                     "attrs map<string,string>, text string", columns_of)
 
 
 def tokens_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Exploded `tokens` table (FIXTURES.md §2): the raw lexer output, one
     row per token -- the debugging/inspection surface for the tokenizer.
-    Same flat-array + MapArray + take() assembly as nodes_of (no
-    per-token Python dicts); a document whose processing raises
-    contributes zero rows."""
-    import pyarrow as pa
-
+    A document whose processing raises contributes zero rows."""
     from ..parser.tokenizer import Tokenizer
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, "pos int, kind string, name string, "
-        "attrs map<string,string>, text string")
-    i32 = pa.int32()
-
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd()
 
         def work(text):
             return list(Tokenizer(text, dtd.entities).tokens())
 
-        for batch in batches:
-            row_idx = []
-            pos_c, kind_c, name_c, text_c = [], [], [], []
-            at_off, at_k, at_v = [0], [], []
-            for idx, toks, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                if toks is None:
+        take, pos_c, kind_c, name_c, attrs_c, text_c = [], [], [], [], [], []
+        for idx, toks, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
+            if toks is None:
+                continue
+            take.extend([idx] * len(toks))
+            pos_c.extend(range(len(toks)))
+            for tok in toks:
+                kind = tok[0]
+                kind_c.append(kind)
+                if kind in ("start", "empty"):
+                    name_c.append(tok[1])
+                    # the dict dedups repeated attr names (last wins) --
+                    # Spark's map-key uniqueness requirement
+                    attrs_c.append({(a[0] if isinstance(a, tuple) else a):
+                                    (a[1] if isinstance(a, tuple) else "")
+                                    for a in tok[2]})
+                    text_c.append(None)
                     continue
-                for pos, tok in enumerate(toks):
-                    row_idx.append(idx)
-                    pos_c.append(pos)
-                    kind = tok[0]
-                    kind_c.append(kind)
-                    if kind in ("start", "empty"):
-                        name_c.append(tok[1])
-                        # dict round-trip dedups repeated attr names (last
-                        # wins) -- Spark's map-key uniqueness requirement
-                        ad = {(a[0] if isinstance(a, tuple) else a):
-                              (a[1] if isinstance(a, tuple) else "")
-                              for a in tok[2]}
-                        at_k.extend(ad.keys())
-                        at_v.extend(ad.values())
-                        text_c.append(None)
-                    elif kind == "end":
-                        name_c.append(tok[1])
-                        text_c.append(None)
-                    elif kind == "eof":
-                        name_c.append(None)
-                        text_c.append(None)
-                    else:  # pcdata/comment/define/pi
-                        name_c.append(None)
-                        text_c.append(tok[1])
-                    at_off.append(len(at_k))
-            yield _out_batch(batch, ids, [
-                pa.array(pos_c, i32),
-                pa.array(kind_c, pa.string()),
-                pa.array(name_c, pa.string()),
-                pa.MapArray.from_arrays(
-                    pa.array(at_off, i32),
-                    pa.array(at_k, pa.string()),
-                    pa.array(at_v, pa.string())),
-                pa.array(text_c, pa.string())],
-                arrow_schema, take=pa.array(row_idx, i32))
+                attrs_c.append(())
+                if kind == "end":
+                    name_c.append(tok[1])
+                    text_c.append(None)
+                elif kind == "eof":
+                    name_c.append(None)
+                    text_c.append(None)
+                else:  # pcdata/comment/define/pi
+                    name_c.append(None)
+                    text_c.append(tok[1])
+        return take, [pos_c, kind_c, name_c, attrs_c, text_c]
 
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"],
+                     "pos int, kind string, name string, "
+                     "attrs map<string,string>, text string", columns_of)
 
 
 def bookmarks_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Parse NETSCAPE-Bookmark-file-1 payloads (the reference's second
     catalog DTD) into (folder_path, link_title, href) rows -- demonstrates
-    the multi-DTD parse surface (`sgml-parse dtd input`).  Same take()
-    id replication as nodes_of; a document whose processing raises
-    contributes zero rows."""
-    import pyarrow as pa
-
+    the multi-DTD parse surface (`sgml-parse dtd input`).  A document
+    whose processing raises contributes zero rows."""
     from ..extract import child_text, find_first
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, "folder string, link_title string, href string")
-
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd("netscape-bookmark")
 
         def work(text):
             return sgml_parse(dtd, text)
 
-        for batch in batches:
-            row_idx, folder_c, title_c, href_c = [], [], [], []
-            for idx, doc, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                if doc is None:
+        take, folder_c, title_c, href_c = [], [], [], []
+        for idx, doc, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
+            if doc is None:
+                continue
+
+            # folder = concatenated H3 headings on the DL ancestor path: a
+            # DT with an H3 sets it for the DT's id range
+            names, end = doc.name, doc.end
+            folder = ""
+            scopes = []   # the enclosing (folder, scope end)
+            n = doc.root
+            scope_end = stop = end[n]
+            while n < stop:
+                while n >= scope_end:
+                    folder, scope_end = scopes.pop()
+                nm = names[n]
+                if nm == "A":
+                    href = next((v for k, v in (doc.attrs[n] or ())
+                                 if k == "HREF"), None)
+                    take.append(idx)
+                    folder_c.append(folder)
+                    title_c.append(child_text(doc, n))
+                    href_c.append(href)
+                    n = end[n]
                     continue
+                if nm == "DT":
+                    h3 = find_first(doc, n, "H3")
+                    if h3 >= 0:
+                        scopes.append((folder, scope_end))
+                        folder = (folder + "/"
+                                  + child_text(doc, h3)).lstrip("/")
+                        scope_end = end[n]
+                n += 1
+        return take, [folder_c, title_c, href_c]
 
-                # folder = concatenated H3 headings on the DL ancestor
-                # path: a DT with an H3 sets it for the DT's id range
-                names, end = doc.name, doc.end
-                folder = ""
-                scopes = []   # the enclosing (folder, scope end)
-                n = doc.root
-                scope_end = stop = end[n]
-                while n < stop:
-                    while n >= scope_end:
-                        folder, scope_end = scopes.pop()
-                    nm = names[n]
-                    if nm == "A":
-                        href = next((v for k, v in (doc.attrs[n] or ())
-                                     if k == "HREF"), None)
-                        row_idx.append(idx)
-                        folder_c.append(folder)
-                        title_c.append(child_text(doc, n))
-                        href_c.append(href)
-                        n = end[n]
-                        continue
-                    if nm == "DT":
-                        h3 = find_first(doc, n, "H3")
-                        if h3 >= 0:
-                            scopes.append((folder, scope_end))
-                            folder = (folder + "/"
-                                      + child_text(doc, h3)).lstrip("/")
-                            scope_end = end[n]
-                    n += 1
-            yield _out_batch(batch, ids, [
-                pa.array(folder_c, pa.string()),
-                pa.array(title_c, pa.string()),
-                pa.array(href_c, pa.string())],
-                arrow_schema, take=pa.array(row_idx, pa.int32()))
-
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"],
+                     "folder string, link_title string, href string",
+                     columns_of)
 
 
-# --- structured extraction stages (round 7) ----------------------------------
+# --- structured extraction stages --------------------------------------------
 
 def tables_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Exploded `cells` table: one row per TD/TH of every <table> in the
-    repaired DOM -- (table_idx, row_idx, col_idx, tag, cell).  Same
-    shuffle-free mapInArrow shape as nodes_of: flat primitive lists ->
-    pyarrow arrays, id columns replicated by a C++-side take(); a
-    malformed document contributes zero rows rather than killing the
-    batch (the extract_pages never-kill-the-batch convention)."""
-    import pyarrow as pa
-
+    repaired DOM -- (table_idx, row_idx, col_idx, tag, cell).  Shuffle-free
+    like nodes_of; a malformed document contributes zero rows rather than
+    killing the batch (the extract_pages never-kill-the-batch
+    convention)."""
     from ..extract import tables_of_doc
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, "table_idx int, row_idx int, col_idx int, "
-        "tag string, cell string")
-    i32 = pa.int32()
-
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd()
 
         def work(text):
             return tables_of_doc(parse_html(dtd, text))
 
-        for batch in batches:
-            row_idx = []
-            t_c, r_c, c_c, tag_c, cell_c = [], [], [], [], []
-            for idx, rows, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                for (t, r, c, tag, cell) in rows or ():
-                    row_idx.append(idx)
-                    t_c.append(t)
-                    r_c.append(r)
-                    c_c.append(c)
-                    tag_c.append(tag)
-                    cell_c.append(cell)
-            yield _out_batch(batch, ids, [
-                pa.array(t_c, i32), pa.array(r_c, i32),
-                pa.array(c_c, i32),
-                pa.array(tag_c, pa.string()),
-                pa.array(cell_c, pa.string())],
-                arrow_schema, take=pa.array(row_idx, i32))
+        take, t_c, r_c, c_c, tag_c, cell_c = [], [], [], [], [], []
+        for idx, rows, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
+            for (t, r, c, tag, cell) in rows or ():
+                take.append(idx)
+                t_c.append(t)
+                r_c.append(r)
+                c_c.append(c)
+                tag_c.append(tag)
+                cell_c.append(cell)
+        return take, [t_c, r_c, c_c, tag_c, cell_c]
 
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"],
+                     "table_idx int, row_idx int, col_idx int, "
+                     "tag string, cell string", columns_of)
 
 
 _META_FIELDS = ("title", "description", "og_title", "canonical", "h1")
@@ -609,32 +470,24 @@ def metadata_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     """Per-page head metadata (title / meta description / og:title /
     canonical link / first h1): exactly one output row per input page
     (a malformed document yields the all-'' row, so ingest accounting
-    stays 1:1), assembled as flat string arrays in one mapInArrow pass."""
-    import pyarrow as pa
-
+    stays 1:1)."""
     from ..extract import metadata_of_doc
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, ", ".join(f"{f} string" for f in _META_FIELDS))
+    empty = {f: "" for f in _META_FIELDS}
 
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd()
-        empty = {f: "" for f in _META_FIELDS}
 
         def work(text):
             return metadata_of_doc(parse_html(dtd, text))
 
-        for batch in batches:
-            cols = {f: [] for f in _META_FIELDS}
-            for _, md, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                md = md or empty
-                for f in _META_FIELDS:
-                    cols[f].append(md[f])
-            yield _out_batch(batch, ids, [
-                pa.array(cols[f], pa.string()) for f in _META_FIELDS],
-                arrow_schema)
+        mds = [md or empty
+               for _, md, _ in _parsed_docs(batch, work, MAX_DOC_BYTES)]
+        return None, [[md[f] for md in mds] for f in _META_FIELDS]
 
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"],
+                     ", ".join(f"{f} string" for f in _META_FIELDS),
+                     columns_of)
 
 
 def jsonld_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
@@ -642,29 +495,21 @@ def jsonld_of(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     json) with the payload verbatim.  Schema-aware parsing stays JVM-side
     -- compose with F.from_json, never a Python json.loads stage.  A
     document whose processing raises contributes zero rows."""
-    import pyarrow as pa
-
     from ..extract import jsonld_of_doc
 
-    ids, schema, arrow_schema = _stage_schema(df, id_cols,
-                                              "ld_idx int, json string")
-    i32 = pa.int32()
-
-    def fn(batches):
+    def columns_of(batch):
         dtd = load_dtd()
 
         def work(text):
             return jsonld_of_doc(parse_html(dtd, text))
 
-        for batch in batches:
-            row_idx, idx_c, json_c = [], [], []
-            for idx, payloads, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
-                for i, payload in enumerate(payloads or ()):
-                    row_idx.append(idx)
-                    idx_c.append(i)
-                    json_c.append(payload)
-            yield _out_batch(batch, ids, [
-                pa.array(idx_c, i32), pa.array(json_c, pa.string())],
-                arrow_schema, take=pa.array(row_idx, i32))
+        take, idx_c, json_c = [], [], []
+        for idx, payloads, _ in _parsed_docs(batch, work, MAX_DOC_BYTES):
+            for i, payload in enumerate(payloads or ()):
+                take.append(idx)
+                idx_c.append(i)
+                json_c.append(payload)
+        return take, [idx_c, json_c]
 
-    return df.select(*ids, "html").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["html"], "ld_idx int, json string",
+                     columns_of)

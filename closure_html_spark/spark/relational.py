@@ -542,16 +542,11 @@ ORDER BY a_id, b_id
 
 
 def _dot_expr(a, b):
-    """Dot product via zip_with/aggregate.  Round 3 unrolled this into 64
-    element_at terms on the theory that HOF lambdas are interpreted while
-    the unrolled sum stays in whole-stage codegen; an interleaved ABBA A/B
-    at sf0.1 (round 4, BASELINE.md) showed the OPPOSITE -- the unrolled
-    chain is ~1.7x SLOWER (median 2.48 s vs 1.48 s on ann_cosine; a
-    64-term generated expression exceeds JIT method-size limits and falls
-    back to interpretation of a far bigger tree, while the HOF loop is a
-    tight JVM array loop).  Reverted to the fold form; left-associated
-    from 0.0 so the float result is bit-identical to DuckDB's
-    list_dot_product."""
+    """Dot product via zip_with/aggregate, left-associated from 0.0 so the
+    float result is bit-identical to DuckDB's list_dot_product.  Not 64
+    unrolled element_at terms: in an ABBA A/B at sf0.1 (BASELINE.md) they
+    ran ~1.7x slower on ann_cosine (2.48 s vs 1.48 s), the generated
+    expression exceeding JIT method-size limits."""
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
         F.lit(0.0), lambda acc, x: acc + x)
@@ -564,7 +559,7 @@ def _norm_expr(c):
         F.lit(0.0), lambda acc, x: acc + x))
 
 
-# --- vectorized embedding kernels (round 8, guide §4.2) ---------------------
+# --- vectorized embedding kernels (guide §4.2) -------------------------------
 #
 # The zip_with/aggregate HOF lambdas of _dot_expr are INTERPRETED by the
 # JVM expression evaluator (never whole-stage-codegen'd): every element of
@@ -1663,24 +1658,21 @@ def q_unicode_nfc(spark, sf_dir):
     Arrow-batched stage (unicodedata.normalize over each batch);
     DuckDB's nfc_normalize replays it.  Each doc gets a deterministic
     decomposed prefix so the transform provably fires."""
-    import pyarrow as pa
+    from .pipeline import doc_stage
 
     docs = _t(spark, sf_dir, "documents")
     # 'cafe' + combining acute + space: decomposed on purpose
     dirty = F.concat(F.lit("café naïve "), F.col("text"))
     src = docs.select("doc_id", dirty.alias("dirty"))
 
-    def fn(batches):
+    def columns_of(batch):
         import unicodedata
-        for batch in batches:
-            vals = [unicodedata.normalize("NFC", v) if v is not None
-                    else None
-                    for v in batch.column("dirty").to_pylist()]
-            yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), pa.array(vals, pa.string())],
-                names=["doc_id", "nfc_text"])
+        return None, [[unicodedata.normalize("NFC", v) if v is not None
+                       else None
+                       for v in batch.column("dirty").to_pylist()]]
 
-    out = src.mapInArrow(fn, "doc_id long, nfc_text string")
+    out = doc_stage(src, ("doc_id",), ["dirty"], "nfc_text string",
+                    columns_of)
     return (out.select("doc_id", "nfc_text",
                        F.length("nfc_text").alias("nfc_len"))
             .orderBy("doc_id"))
@@ -4628,7 +4620,7 @@ FROM s GROUP BY lang ORDER BY lang
 """
 
 
-# --- BM25 retrieval (round 7) ------------------------------------------------
+# --- BM25 retrieval ----------------------------------------------------------
 
 # result depth and the Okapi k1/b saturation and length-normalization
 def q_bm25_topk(spark, sf_dir):
@@ -4722,7 +4714,7 @@ ORDER BY score DESC, doc_id LIMIT {BM25_K}
 ORACLE_BM25 = _bm25_oracle_sql()
 
 
-# --- SemDeDup: clustered semantic dedup (round 7) ----------------------------
+# --- SemDeDup: clustered semantic dedup --------------------------------------
 
 def q_semantic_dedup(spark, sf_dir):
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -4748,17 +4740,14 @@ def q_semantic_dedup(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
     step = max(1, math.ceil(n / N_CELLS))
-    # round 8 (guide §4.2): the old plan crossJoined every vector with the
-    # broadcast centroid table and ran one interpreted 64-dim fold per
-    # (vector, centroid) under a groupBy argmax, then a second interpreted
-    # fold per within-cell pair.  Assignment is now one numpy kernel with
-    # the centroid matrix in a broadcast variable (the same <=2^16-row
-    # bound the old BroadcastExchange carried); the argmax compares the
-    # 6dp-rounded sims as exact HALF_UP micro-units (_round6_micro), so
-    # cell assignment is bit-identical.  The pair stage shuffles ids only
-    # and reranks through the broadcast-matrix kernel below the §3.1 size
-    # gate (per-pair join fallback above it); division, rounding and the
-    # threshold stay JVM-side.
+    # guide §4.2: assignment is one numpy kernel with the centroid matrix
+    # in a broadcast variable (<=2^16 rows), not an interpreted 64-dim
+    # fold per (vector, centroid) under a groupBy argmax; the argmax
+    # compares the 6dp-rounded sims as exact HALF_UP micro-units
+    # (_round6_micro), so cell assignment is bit-identical.  The pair
+    # stage shuffles ids only and reranks through the broadcast-matrix
+    # kernel below the §3.1 size gate (per-pair join fallback above it);
+    # division, rounding and the threshold stay JVM-side.
     local = _local_emb_table(sf_dir)
     c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
     c_norm = np.sqrt(_np_seq_dot(c_mat, c_mat))

@@ -2,7 +2,7 @@
 
 The extraction stage is stateless per document, so the streaming pipeline
 is: file-source readStream over arriving `pages` parquet -> the SAME
-Arrow-batched extraction mapInPandas used in batch mode -> parquet sink
+Arrow-batched extraction stage used in batch mode -> parquet sink
 with checkpointing.  Exactly-once comes from the file-source + checkpoint
 combination; no stateful operator is needed for parse itself.
 """

@@ -58,58 +58,46 @@ def warcs_from_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def warc_records_to_pages(df: DataFrame,
                           id_cols: tuple[str, ...]) -> DataFrame:
-    """mapInArrow: `record binary` -> pages columns.  Non-response /
-    broken records keep their row with null url/html and the error
-    marker, so ingest accounting never silently drops records."""
-    import pyarrow as pa
+    """`record binary` -> pages columns, one row per record.
+    Non-response / broken records keep their row with null url/html and
+    the error marker, so ingest accounting never silently drops
+    records."""
+    import datetime
 
     from ..warc import parse_warc_record
-    from .pipeline import _stage_schema
+    from .pipeline import doc_stage
 
-    ids, schema, arrow_schema = _stage_schema(
-        df, id_cols, "url string, warc_ts timestamp, html binary, "
-                     "content_type string, http_status int, "
-                     "warc_error string")
-
-    def fn(batches):
-        import datetime
-        for batch in batches:
-            raws = batch.column("record").to_pylist()
-            urls, tss, htmls, cts, sts, errs = [], [], [], [], [], []
-            for raw in raws:
+    def columns_of(batch):
+        urls, tss, htmls, cts, sts, errs = [], [], [], [], [], []
+        for raw in batch.column("record").to_pylist():
+            try:
+                r = parse_warc_record(bytes(raw) if raw is not None
+                                      else b"")
+                u, d, b, c, s, e = (r["url"], r["warc_date"], r["html"],
+                                    r["content_type"], r["http_status"],
+                                    r["error"])
+            except Exception as exc:  # pragma: no cover
+                u = d = b = c = s = None
+                e = f"error:{type(exc).__name__}"
+            ts = None
+            if d:
                 try:
-                    r = parse_warc_record(bytes(raw) if raw is not None
-                                          else b"")
-                    u, d, b, c, s, e = (r["url"], r["warc_date"], r["html"],
-                                        r["content_type"], r["http_status"],
-                                        r["error"])
-                except Exception as exc:  # pragma: no cover
-                    u = d = b = c = s = None
-                    e = f"error:{type(exc).__name__}"
-                ts = None
-                if d:
-                    try:
-                        ts = datetime.datetime.fromisoformat(
-                            d.replace("Z", "+00:00")).replace(tzinfo=None)
-                    except ValueError:
-                        pass
-                urls.append(u)
-                tss.append(ts)
-                htmls.append(b)
-                cts.append(c)
-                sts.append(s)
-                errs.append(e)
-            arrays = ([batch.column(c) for c in ids] +
-                      [pa.array(urls, pa.string()),
-                       pa.array(tss, pa.timestamp("us")),
-                       pa.array(htmls, pa.binary()),
-                       pa.array(cts, pa.string()),
-                       pa.array(sts, pa.int32()),
-                       pa.array(errs, pa.string())])
-            yield pa.RecordBatch.from_arrays(arrays,
-                                             names=arrow_schema.names)
+                    ts = datetime.datetime.fromisoformat(
+                        d.replace("Z", "+00:00")).replace(tzinfo=None)
+                except ValueError:
+                    pass
+            urls.append(u)
+            tss.append(ts)
+            htmls.append(b)
+            cts.append(c)
+            sts.append(s)
+            errs.append(e)
+        return None, [urls, tss, htmls, cts, sts, errs]
 
-    return df.select(*ids, "record").mapInArrow(fn, schema)
+    return doc_stage(df, id_cols, ["record"],
+                     "url string, warc_ts timestamp, html binary, "
+                     "content_type string, http_status int, "
+                     "warc_error string", columns_of)
 
 
 def q_warc_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,40 +163,25 @@ def q_wet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "text",
         F.encode(wet_record(url, F.col("text")), "UTF-8").alias("record"))
 
-    import pyarrow as pa
     from ..warc import parse_warc_record
+    from .pipeline import doc_stage
 
-    out_schema = ("doc_id long, url string, warc_type string, "
-                  "content_type string, body_len int, match int")
+    def columns_of(batch):
+        urls, types, cts, lens, match = [], [], [], [], []
+        for blob, txt in zip(batch.column("record").to_pylist(),
+                             batch.column("text").to_pylist()):
+            r = parse_warc_record(bytes(blob))
+            body = r["html"] or b""
+            urls.append(r["url"])
+            types.append(r["warc_type"])
+            cts.append(r["content_type"])
+            lens.append(len(body))
+            match.append(1 if body.decode("utf-8", "replace") == txt else 0)
+        return None, [urls, types, cts, lens, match]
 
-    def fn(batches):
-        for batch in batches:
-            ids = batch.column("doc_id").to_pylist()
-            txts = batch.column("text").to_pylist()
-            blobs = batch.column("record").to_pylist()
-            rows = {k: [] for k in ("doc_id", "url", "warc_type",
-                                    "content_type", "body_len", "match")}
-            for i, blob in zip(range(len(ids)), blobs):
-                r = parse_warc_record(bytes(blob))
-                body = r["html"] or b""
-                rows["doc_id"].append(ids[i])
-                rows["url"].append(r["url"])
-                rows["warc_type"].append(r["warc_type"])
-                rows["content_type"].append(r["content_type"])
-                rows["body_len"].append(len(body))
-                rows["match"].append(
-                    1 if body.decode("utf-8", "replace") == txts[i] else 0)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(rows["doc_id"], type=pa.int64()),
-                 pa.array(rows["url"], type=pa.string()),
-                 pa.array(rows["warc_type"], type=pa.string()),
-                 pa.array(rows["content_type"], type=pa.string()),
-                 pa.array(rows["body_len"], type=pa.int32()),
-                 pa.array(rows["match"], type=pa.int32())],
-                names=["doc_id", "url", "warc_type", "content_type",
-                       "body_len", "match"])
-
-    return (recs.mapInArrow(fn, out_schema)
+    return (doc_stage(recs, ("doc_id",), ["text", "record"],
+                      "url string, warc_type string, content_type string, "
+                      "body_len int, match int", columns_of)
             .orderBy("doc_id"))
 
 

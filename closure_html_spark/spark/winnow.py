@@ -1,13 +1,12 @@
 """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03)
 as a SHUFFLE-FREE Arrow stage.
 
-Round 2 computed this relationally: explode one row per character position
-(~5,000 rows per 5 KB doc), shuffle them through Window.partitionBy(doc_id)
--- ~10^14 rows through a shuffle+sort at 100 TB of text.  The fingerprint
-set is a pure per-document function, so it belongs in the same place as the
-parser: a mapInPandas stage whose inner loop is numpy-vectorized (rolling
-polynomial hash + sliding-window min), emitting one row per document with
-no exchange anywhere in the plan.
+The fingerprint set is a pure per-document function, so it belongs in the
+same place as the parser: one pipeline.doc_stage whose inner loop is
+numpy-vectorized (rolling polynomial hash + sliding-window min), emitting
+one row per document with no exchange anywhere in the plan.  A relational
+formulation explodes one row per character position (~5,000 rows per 5 KB
+doc) and sorts them through a shuffle.
 
 The hash is an engine-portable rolling polynomial over Unicode code points
 (h = fold (h*257 + cp) mod 1e9+7), so the relational formulation survives
@@ -20,7 +19,6 @@ kernel row-for-row.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 WINNOW_B = 257
@@ -56,21 +54,19 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, n_fps, min_fp) per document -- the q_winnow_fingerprint
     output contract -- computed entirely inside one Arrow batch stage,
     with relational's WINNOW_K-grams and WINNOW_W-windows."""
+    from .pipeline import doc_stage
     from .relational import WINNOW_K as k, WINNOW_W as w
 
-    def fn(batches):
-        for pdf in batches:
-            ids, nfps, minfp = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                fps = winnow_doc(text or "", k, w)
-                if fps is None:
-                    continue
-                ids.append(doc_id)
-                nfps.append(len(fps))
-                minfp.append(int(fps[0]))
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype="int64"),
-                                "n_fps": pd.Series(nfps, dtype="int64"),
-                                "min_fp": pd.Series(minfp, dtype="int64")})
+    def columns_of(batch):
+        take, nfps, minfp = [], [], []
+        for idx, text in enumerate(batch.column("text").to_pylist()):
+            fps = winnow_doc(text or "", k, w)
+            if fps is None:
+                continue
+            take.append(idx)
+            nfps.append(len(fps))
+            minfp.append(int(fps[0]))
+        return take, [nfps, minfp]
 
-    return (docs.select("doc_id", "text")
-            .mapInPandas(fn, "doc_id long, n_fps long, min_fp long"))
+    return doc_stage(docs, ("doc_id",), ["text"], "n_fps long, min_fp long",
+                     columns_of)

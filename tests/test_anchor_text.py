@@ -5,7 +5,7 @@ import __spark_entry__ as entry
 from closure_html_spark.dtd import load_dtd
 from closure_html_spark.parser.charset import decode_html
 from closure_html_spark.parser.pda import parse_html
-from closure_html_spark.spark.pipeline import _doc_links_base, extract_pages
+from closure_html_spark.spark.pipeline import _doc_links, extract_pages
 
 SF = "/root/testdata/sf0.001"
 
@@ -29,7 +29,7 @@ def test_anchors_parallel_to_links(spark):
     assert list(r.anchors) == ["home", "about", ""]
     # equal to the in-process walk over the same parse
     doc = parse_html(load_dtd(), decode_html(_HTML)[0])
-    links, anchors, _ = _doc_links_base(doc, True)
+    links, anchors = _doc_links(doc, True)
     assert (list(r.links), list(r.anchors)) == (links, anchors)
 
 

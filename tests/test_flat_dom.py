@@ -13,7 +13,7 @@ import pytest
 from closure_html_spark.dtd import load_dtd
 from closure_html_spark.parser.pda import (check_saneness, parse_html,
                                            sgml_parse)
-from closure_html_spark.spark.pipeline import (_doc_links_base,
+from closure_html_spark.spark.pipeline import (_doc_links,
                                                extract_pages, nodes_of,
                                                serialize_pages)
 
@@ -152,8 +152,8 @@ def test_nested_anchor_keeps_links_and_anchors_paired(spark):
     then raised ArrowInvalid on the whole batch."""
     src = b"<p>see <a href=/q>q<a href=/r>r</a> and <a href=/s>s</a>"
     doc = parse_html(DTD, src.decode())
-    assert _doc_links_base(doc, True) == (["/q", "/r", "/s"],
-                                    ["qr and s", "r", "s"], None)
+    assert _doc_links(doc, True) == (["/q", "/r", "/s"],
+                               ["qr and s", "r", "s"])
     df = spark.createDataFrame([("u", bytearray(src))],
                                "url string, html binary")
     r = extract_pages(df, columns=("links", "anchors")).collect()[0]

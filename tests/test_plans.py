@@ -1,6 +1,6 @@
 """Physical-plan audits: the optimizations we rely on at 100 TB must be
 visible in the plan, not assumed -- predicate pushdown into the parquet
-scan, column pruning through the mapInPandas stage, broadcast joins for
+scan, column pruning through the mapInArrow stage, broadcast joins for
 small dimensions, partial (map-side) aggregation."""
 
 import pytest
@@ -65,7 +65,7 @@ def test_ann_broadcasts_query_side(spark):
 
 def test_no_python_udf_in_relational_queries(spark):
     """Every relational/training-data query must stay JVM-side; Python
-    appears only in the dedicated mapInPandas pipeline stages."""
+    appears only in the dedicated mapInArrow pipeline stages."""
     for name, fn in [
         ("pricing", R.q_pricing_summary), ("revenue", R.q_top_revenue_nations),
         ("window", R.q_window_user_events), ("sessionize", R.q_sessionize),
@@ -192,11 +192,11 @@ def test_embedding_neardup_lsh_no_cartesian(spark):
 
 def test_winnow_is_shuffle_free_arrow_stage(spark):
     """Winnowing is a per-document function: the plan must be scan ->
-    mapInPandas -> (sort for the oracle compare), with NO char-position
-    explode and NO Window/shuffle over gram rows -- round 2's relational
-    form pushed ~10^14 rows through an exchange at 100 TB."""
+    mapInArrow -> (sort for the oracle compare), with NO char-position
+    explode and NO Window/shuffle over gram rows -- a relational form
+    pushes ~10^14 rows through an exchange at 100 TB."""
     plan = plan_of(R.q_winnow_fingerprint(spark, SF))
-    assert "MapInPandas" in plan
+    assert "MapInArrow" in plan
     assert "Generate" not in plan, "char-position explode is back"
     assert "Window" not in plan, "gram rows going through a window again"
     # the only exchange allowed is the rangepartitioning for the final sort

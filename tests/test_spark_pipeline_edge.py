@@ -5,7 +5,7 @@ batches are bounded by rows AND bytes in session.py).
 Spark output is compared against an in-process reference built from the
 library calls each stage runs (perfbench/htmlwork.references builds the
 same one): decode_html -> parse_html -> extract_main_content(with
-main_text) -> _doc_links_base, doc.walk() renumbering, and the raw
+main_text) -> _doc_links, doc.walk() renumbering, and the raw
 Tokenizer stream."""
 
 import pytest
@@ -16,10 +16,10 @@ from closure_html_spark.extract import extract_main_content
 from closure_html_spark.parser.charset import decode_html
 from closure_html_spark.parser.pda import parse_html
 from closure_html_spark.parser.tokenizer import Tokenizer
-from closure_html_spark.spark import pipeline
+from closure_html_spark.spark import pdfs, pipeline, warcs
 from closure_html_spark.spark.pipeline import (
     RESULT_COL_DDL,
-    _doc_links_base,
+    _doc_links,
     extract_pages,
     nodes_of,
 )
@@ -34,12 +34,12 @@ def _reference_row(raw, content_type=None) -> dict:
     text, cs = decode_html(bytes(raw), "utf-8", content_type)
     doc = parse_html(dtd, text)
     res = extract_main_content(doc, dtd, with_main_text=True)
-    links, anchors, base = _doc_links_base(doc, True)
+    links, anchors = _doc_links(doc, True)
     lv = [sum(1 for level, _ in doc.warnings if level == k)
           for k in range(1, 6)]
     return {"title": res["title"], "extracted_text": res["extracted_text"],
             "spans": [tuple(s) for s in res["spans"]], "links": links,
-            "anchors": anchors, "base": base, "n_nodes": len(doc.name),
+            "anchors": anchors, "n_nodes": len(doc.name),
             "n_warns": len(doc.warnings), "warn_levels": lv, "charset": cs,
             "main_text": res["main_text"]}
 
@@ -158,29 +158,9 @@ def test_links_column(spark):
     proj = extract_pages(df, columns=("links",))
     assert set(proj.columns) == {"url", "links"}
     assert {r["url"]: r["links"] for r in proj.collect()} == a
-    # the default column set excludes links/base (second-walk payloads)
+    # the default column set excludes links/anchors (second-walk payloads)
     assert "links" not in extract_pages(df).columns
-    assert "base" not in extract_pages(df).columns
-
-
-def test_base_column(spark):
-    """The `base` result column: href of the first BASE node (the
-    reference's own fixture pins BASE in HEAD, test.lisp:5-18); absent
-    base -> null; first BASE wins; equal to the in-process reference."""
-    rows = [
-        ("u0", bytearray(b'<html><head><base href="https://cdn.example/a/">'
-                         b'</head><body><a href=x.html>x</a></body></html>')),
-        ("u1", bytearray(b'<html><head><base href="/one"><base href="/two">'
-                         b'</head><body>t</body></html>')),
-        ("u2", bytearray(b"<p>no base")),
-    ]
-    df = spark.createDataFrame(rows, "url string, html binary")
-    a = {r["url"]: r["base"]
-         for r in extract_pages(df, columns=("links", "base")).collect()}
-    assert a["u0"] == "https://cdn.example/a/"
-    assert a["u1"] == "/one"
-    assert a["u2"] is None
-    assert a == {url: _reference_row(raw)["base"] for url, raw in rows}
+    assert "anchors" not in extract_pages(df).columns
 
 
 def test_error_row_mid_batch_alignment(spark):
@@ -196,7 +176,7 @@ def test_error_row_mid_batch_alignment(spark):
            extract_pages(df, columns=ALL_COLS).collect()}
     assert got["u1"]["charset"].startswith("error:")
     assert got["u1"]["title"] == "" and got["u1"]["spans"] == []
-    assert got["u1"]["links"] == [] and got["u1"]["base"] is None
+    assert got["u1"]["links"] == [] and got["u1"]["anchors"] == []
     assert got["u1"]["n_warns"] == -1
     # neighbors unshifted
     assert got["u0"]["extracted_text"] == "first ok"
@@ -209,7 +189,7 @@ def test_error_row_mid_batch_alignment(spark):
         assert _as_dict(got[url]) == {"url": url, **_reference_row(raw)}
 
 
-_STAGE_DOCS = [
+_HTML_DOCS = [
     ("u0", bytearray(
         b'<html><head><title>First</title><meta name=description content=d0>'
         b'<script type="application/ld+json">{"n": 0}</script></head><body>'
@@ -225,39 +205,90 @@ _STAGE_DOCS = [
 ]
 
 
+def _pdf(text: bytes) -> bytearray:
+    body = b"BT (" + text + b") Tj ET"
+    return bytearray(
+        b"%PDF-1.4\n1 0 obj<</Type/Catalog/Pages 2 0 R>>endobj\n"
+        b"4 0 obj<</Length " + str(len(body)).encode() + b">>stream\n"
+        + body + b"\nendstream\nendobj\ntrailer<</Root 1 0 R>>\n%%EOF\n")
+
+
+def _warc(url: bytes, html: bytes) -> bytearray:
+    http = b"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n" + html
+    return bytearray(
+        b"WARC/1.0\r\nWARC-Type: response\r\nWARC-Target-URI: " + url
+        + b"\r\nWARC-Date: 2024-01-01T00:00:00Z\r\n"
+        b"Content-Type: application/http; msgtype=response\r\n"
+        b"Content-Length: " + str(len(http)).encode() + b"\r\n\r\n"
+        + http + b"\r\n\r\n")
+
+
+# each module's three input rows, keyed by `key` (warc_records_to_pages
+# outputs a `url`), a null payload in the middle
+_STAGE_DOCS = {
+    pipeline: (_HTML_DOCS, "key string, html binary"),
+    pdfs: ([("u0", _pdf(b"first ok")), ("u1", None),
+            ("u2", _pdf(b"third ok"))], "key string, pdf binary"),
+    warcs: ([("u0", _warc(b"https://a.ex/0", b"<p>first ok")),
+             ("u1", None),
+             ("u2", _warc(b"https://a.ex/2", b"<p>third ok"))],
+            "key string, record binary"),
+}
+
+
 def _only_error_row(rows, **want):
     return len(rows) == 1 and all(rows[0][k] == v for k, v in want.items())
 
 
-# each stage's failure convention for a document whose processing raised
+# each stage's module and failure convention for a document whose
+# processing raised, or whose payload is null
 _FAILED_DOC = {
-    "extract_pages": lambda rows: _only_error_row(
+    "extract_pages": (pipeline, lambda rows: _only_error_row(
         rows, charset="error:TypeError", n_warns=-1, title="",
-        extracted_text="", spans=[], main_text=""),
-    "serialize_pages": lambda rows: _only_error_row(rows, html_out=""),
-    "metadata_of": lambda rows: _only_error_row(
-        rows, **{f: "" for f in pipeline._META_FIELDS}),
-    "nodes_of": lambda rows: rows == [],
-    "tokens_of": lambda rows: rows == [],
-    "bookmarks_of": lambda rows: rows == [],
-    "tables_of": lambda rows: rows == [],
-    "jsonld_of": lambda rows: rows == [],
+        extracted_text="", spans=[], main_text="")),
+    "serialize_pages": (pipeline,
+                        lambda rows: _only_error_row(rows, html_out="")),
+    "metadata_of": (pipeline, lambda rows: _only_error_row(
+        rows, **{f: "" for f in pipeline._META_FIELDS})),
+    "nodes_of": (pipeline, lambda rows: rows == []),
+    "tokens_of": (pipeline, lambda rows: rows == []),
+    "bookmarks_of": (pipeline, lambda rows: rows == []),
+    "tables_of": (pipeline, lambda rows: rows == []),
+    "jsonld_of": (pipeline, lambda rows: rows == []),
+    "pdf_extract_pages": (pdfs, lambda rows: _only_error_row(
+        rows, pdf_text="", n_streams=0, pdf_error="not-pdf")),
+    "warc_records_to_pages": (warcs, lambda rows: _only_error_row(
+        rows, url=None, warc_ts=None, html=None, content_type=None,
+        http_status=None, warc_error="not-warc")),
 }
 
 
 @pytest.mark.parametrize("stage", sorted(_FAILED_DOC))
 def test_failed_doc_mid_batch_every_stage(spark, stage):
-    """A null `html` between two good documents in one batch: the stage
+    """A null payload between two good documents in one batch: the stage
     applies its failure convention to that document only, and the good
     documents' rows equal the stage's output on them alone."""
-    fn = getattr(pipeline, stage)
-    df = spark.createDataFrame(_STAGE_DOCS, "url string, html binary")
-    got = fn(df.coalesce(1), ("url",)).collect()
-    assert _FAILED_DOC[stage]([r for r in got if r["url"] == "u1"])
-    alone = fn(df.filter(F.col("url") != "u1").coalesce(1), ("url",)).collect()
-    assert {r["url"] for r in alone} == {"u0", "u2"}
-    assert sorted(repr(r) for r in got if r["url"] != "u1") == \
+    module, failed = _FAILED_DOC[stage]
+    fn = getattr(module, stage)
+    df = spark.createDataFrame(*_STAGE_DOCS[module])
+    got = fn(df.coalesce(1), ("key",)).collect()
+    assert failed([r for r in got if r["key"] == "u1"])
+    alone = fn(df.filter(F.col("key") != "u1").coalesce(1), ("key",)).collect()
+    assert {r["key"] for r in alone} == {"u0", "u2"}
+    assert sorted(repr(r) for r in got if r["key"] != "u1") == \
         sorted(repr(r) for r in alone)
+
+
+def test_stage_rejects_id_cols_missing_from_input(spark):
+    """An id column the input lacks is an error naming it, not a stage
+    whose output has no key to join back on."""
+    df = spark.createDataFrame([("u0", bytearray(b"<p>x"))],
+                               "url string, html binary")
+    with pytest.raises(ValueError, match=r"\['doc_id', 'lang'\]"):
+        nodes_of(df, ("doc_id", "url", "lang"))
+    # nor one that a result column shares a name with
+    with pytest.raises(ValueError, match=r"\['text'\]"):
+        nodes_of(df.withColumnRenamed("url", "text"), ("text",))
 
 
 def test_nodes_of_engines_identical(spark):
