@@ -16,7 +16,8 @@ Out of scope (returns pdf_text="" + an error marker, never raises):
 encryption, CID/Type0 composite fonts, xref streams with predictors,
 object streams.  Those need a full PDF library; the container has none,
 and the extraction contract (like multimodal.py's codec boundary) is to
-mark, not guess.
+mark, not guess.  A document whose FlateDecode streams inflate past
+MAX_INFLATED_BYTES is marked too (error "inflate-limit").
 
 The Spark stage (pdf_extract_pages) mirrors pipeline.extract_pages:
 mapInArrow, Arrow-batched, ids zero-copy, one output string per doc.
@@ -40,6 +41,11 @@ _ESCAPES = {
 # TJ adjustments are in thousandths of an em, negative moves right-ward
 # glyphs apart; below this threshold treat the gap as an inter-word space
 _KERN_SPACE_THRESHOLD = -180.0
+
+# the most one document's FlateDecode streams may inflate to, summed: the
+# HTML stages' per-document cap (pipeline.MAX_DOC_BYTES).  A 200 KB stream
+# can inflate to 200 MiB; past the bound the document gets an error marker.
+MAX_INFLATED_BYTES = 64 * 1024 * 1024
 
 
 def _scan_literal_string(buf: bytes, i: int) -> tuple[bytes, int]:
@@ -88,11 +94,14 @@ def _scan_literal_string(buf: bytes, i: int) -> tuple[bytes, int]:
     return bytes(out), i
 
 
-def _content_streams(data: bytes) -> list[bytes]:
+def _content_streams(data: bytes) -> list[bytes] | None:
     """Every stream body in the file, FlateDecode-inflated when the
-    stream dict says so.  /Length is deliberately not trusted (broken
-    producers abound): the body runs to the next `endstream`."""
+    stream dict says so, or None once the inflated bodies pass
+    MAX_INFLATED_BYTES.  /Length is deliberately not trusted (broken
+    producers abound): the body runs to the next `endstream`.  A corrupt
+    or truncated FlateDecode stream is skipped."""
     out = []
+    budget = MAX_INFLATED_BYTES
     for m in _STREAM_RE.finditer(data):
         sdict = m.group(1)
         body_start = m.end()
@@ -106,10 +115,16 @@ def _content_streams(data: bytes) -> list[bytes]:
         if body.endswith(b"\r"):
             body = body[:-1]
         if b"/FlateDecode" in sdict:
+            inflate = zlib.decompressobj()
             try:
-                body = zlib.decompress(body)
+                body = inflate.decompress(body, budget + 1)
             except zlib.error:
                 continue
+            if len(body) > budget:
+                return None
+            if not inflate.eof:  # truncated
+                continue
+            budget -= len(body)
         out.append(body)
     return out
 
@@ -226,6 +241,8 @@ def extract_pdf_text(data: bytes) -> dict:
         return {"pdf_text": "", "n_streams": 0, "error": "encrypted"}
     texts = []
     streams = _content_streams(data)
+    if streams is None:
+        return {"pdf_text": "", "n_streams": 0, "error": "inflate-limit"}
     for body in streams:
         for m in _BT_ET_RE.finditer(body):
             t = _block_text(m.group(1))

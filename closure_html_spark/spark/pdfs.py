@@ -67,16 +67,10 @@ def pdf_extract_pages(df: DataFrame, id_cols: tuple[str, ...]) -> DataFrame:
     def columns_of(batch):
         texts, n_streams, errors = [], [], []
         for raw in batch.column("pdf").to_pylist():
-            try:
-                res = extract_pdf_text(bytes(raw) if raw is not None
-                                       else b"")
-                t_v, n_v, e_v = (res["pdf_text"], res["n_streams"],
-                                 res["error"])
-            except Exception as exc:  # pragma: no cover - never raises
-                t_v, n_v, e_v = "", 0, f"error:{type(exc).__name__}"
-            texts.append(t_v)
-            n_streams.append(n_v)
-            errors.append(e_v)
+            res = extract_pdf_text(bytes(raw) if raw is not None else b"")
+            texts.append(res["pdf_text"])
+            n_streams.append(res["n_streams"])
+            errors.append(res["error"])
         return None, [texts, n_streams, errors]
 
     return doc_stage(df, id_cols, ["pdf"],

@@ -2,9 +2,10 @@
 
 Designed for local[N] testing but with settings that transfer to a real
 multi-executor cluster: AQE on (skew-join splitting, partition coalescing),
-Arrow exchange for the pandas UDF stages, bounded Arrow batch sizes so one
-batch of large HTML documents cannot blow executor memory
-(SURVEY.md §4 "physical risks").
+Arrow exchange for the mapInArrow stages, and Arrow batches capped by rows
+and by bytes (ARROW_BATCH_CAPS), so that a Python worker holds about
+1 MiB of input documents plus one page at once (SURVEY.md §4 "physical
+risks").
 
 Worker model: Spark forks each Python worker from one daemon process per
 executor.  The session names closure_html_spark.spark.daemon as that
@@ -23,6 +24,19 @@ from pyspark.sql import SparkSession
 
 # the module Spark runs (python -m) as the executor's Python worker daemon
 DAEMON_MODULE = "closure_html_spark.spark.daemon"
+
+# Arrow batch caps for every Python stage.  A worker holds one batch's
+# documents, their decoded text and the staged output at once, so the
+# byte cap sets its working set (SCALE.md's worker-memory rule).  Spark's
+# own default is 64 MiB, which let a 500-page crawl partition (~3.3 MB)
+# reach a worker as one batch.  Spark closes a batch at the first row
+# that brings it to the cap, so a batch is under the cap plus one row.
+# That row arrives whole: the parse stages cut a page to
+# pipeline.MAX_DOC_BYTES only after the batch is in the worker.
+ARROW_BATCH_CAPS = {
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.execution.arrow.maxBytesPerBatch": str(1 << 20),
+}
 
 
 def get_spark(app: str, master: str,
@@ -72,11 +86,7 @@ def get_spark(app: str, master: str,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # HTML payloads are KB-to-MB scale; bound Arrow batches BOTH by row
-        # count and by bytes so one batch of huge documents cannot blow a
-        # Python worker (SURVEY.md §4 physical risk)
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(64 * 1024 * 1024))
+        .config(map=ARROW_BATCH_CAPS)
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.maxResultSize", "2g")
         .config("spark.ui.enabled", "false")

@@ -70,15 +70,8 @@ def warc_records_to_pages(df: DataFrame,
     def columns_of(batch):
         urls, tss, htmls, cts, sts, errs = [], [], [], [], [], []
         for raw in batch.column("record").to_pylist():
-            try:
-                r = parse_warc_record(bytes(raw) if raw is not None
-                                      else b"")
-                u, d, b, c, s, e = (r["url"], r["warc_date"], r["html"],
-                                    r["content_type"], r["http_status"],
-                                    r["error"])
-            except Exception as exc:  # pragma: no cover
-                u = d = b = c = s = None
-                e = f"error:{type(exc).__name__}"
+            r = parse_warc_record(bytes(raw) if raw is not None else b"")
+            d = r["warc_date"]
             ts = None
             if d:
                 try:
@@ -86,12 +79,12 @@ def warc_records_to_pages(df: DataFrame,
                         d.replace("Z", "+00:00")).replace(tzinfo=None)
                 except ValueError:
                     pass
-            urls.append(u)
+            urls.append(r["url"])
             tss.append(ts)
-            htmls.append(b)
-            cts.append(c)
-            sts.append(s)
-            errs.append(e)
+            htmls.append(r["html"])
+            cts.append(r["content_type"])
+            sts.append(r["http_status"])
+            errs.append(r["error"])
         return None, [urls, tss, htmls, cts, sts, errs]
 
     return doc_stage(df, id_cols, ["record"],

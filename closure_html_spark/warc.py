@@ -51,6 +51,8 @@ def _dechunk(body: bytes) -> bytes:
         start = m.end()
         out += body[start:start + size]
         i = start + size
+        if i >= len(body):  # the last chunk, or one cut short
+            break
         # skip the chunk-terminating CRLF
         if body[i:i + 2] == b"\r\n":
             i += 2
@@ -102,7 +104,9 @@ def parse_warc_record(record: bytes) -> dict:
     status_line = http_head.split(b"\n", 1)[0].rstrip(b"\r")
     parts = status_line.split()
     status = None
-    if len(parts) >= 2 and parts[1].isdigit():
+    # a status code is three digits (RFC 9110 §15); a longer run would
+    # overflow the stages' int column, or past 4,300 digits raise in int()
+    if len(parts) >= 2 and len(parts[1]) == 3 and parts[1].isdigit():
         status = int(parts[1])
     hh = _parse_headers(http_head[len(status_line):])
     if hh.get("transfer-encoding", "").lower() == "chunked":

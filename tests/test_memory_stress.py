@@ -12,11 +12,15 @@ documented in SCALE.md:
                  + A x MAX_DOC_BYTES   (ONE doc's DOM at a time;
                    A ~= 19 measured for tag-dense soup, ~2 for
                    pcdata floods)
-                 + ~2 x arrow batch bytes (input + staged output)
+                 + B x Arrow byte cap  (one batch of pages; B ~= 25
+                   measured on crawl pages at the 1 MiB cap)
+                 + 2 x R               (a raw page of R bytes past the
+                   byte cap arrives whole, held as Arrow and as bytes)
 
-With the default 64 MiB cap that budgets ~1.5 GB per Python worker
-(spark.executor.pyspark.memory=2g at one worker per core); the test
-scales the same rule down to a 2 MiB cap so it runs in seconds.
+With the default 64 MiB per-doc cap and pages of at most that size it
+budgets ~1.5 GB per Python worker (spark.executor.pyspark.memory=2g at
+one worker per core); the test scales the same rule down to a 2 MiB
+per-doc cap so it runs in seconds.
 """
 
 import pytest
@@ -24,6 +28,7 @@ from pyspark.sql import functions as F
 
 from closure_html_spark.spark import pipeline
 from closure_html_spark.spark.pipeline import extract_pages
+from closure_html_spark.spark.session import ARROW_BATCH_CAPS
 
 CAP = 2 << 20  # 2 MiB per-doc cap for the test
 
@@ -67,10 +72,12 @@ def test_oversize_batch_completes_with_accounting(spark, monkeypatch):
 def test_worker_peak_rss_obeys_sizing_rule(spark, monkeypatch):
     """Drive 16 AT-cap tag-dense docs through 4 concurrent workers,
     then probe the reused workers' high-water RSS: each must sit under
-    base + A x cap + 2 x batch with the measured A=19 and 50% slack --
-    the SCALE.md rule scaled to this test's 2 MiB cap (~320 MB).  A doc
-    whose DOM exceeded the rule (e.g. a per-batch leak, or all batch
-    docs' DOMs alive at once) would blow well past it."""
+    base + A x cap + B x byte cap + 2 x R with the measured A=19, B=25
+    and 50% slack -- the SCALE.md rule scaled to this test's 2 MiB
+    per-doc cap, the session's 1 MiB byte cap and R = 2 MiB pages
+    (217 MB, 326 MB with the slack).
+    A doc whose DOM exceeded the rule (e.g. a per-batch leak, or all
+    batch docs' DOMs alive at once) would blow well past it."""
     pages = _pages(spark, 16, CAP - 4096).repartition(4)
     monkeypatch.setattr(pipeline, "MAX_DOC_BYTES", CAP)
     ext = extract_pages(pages, id_cols=("url",))
@@ -95,7 +102,10 @@ def test_worker_peak_rss_obeys_sizing_rule(spark, monkeypatch):
     warm = [r.rss_mb for r in peaks if r.rss_mb > 100.0]
     if not warm:
         pytest.skip("worker pool was recycled; no warm worker probed")
-    budget_mb = 150 + 19 * (CAP / 1048576) + 2 * 64  # rule at this cap
+    mib = 1 << 20
+    byte_cap = int(ARROW_BATCH_CAPS[
+        "spark.sql.execution.arrow.maxBytesPerBatch"])
+    budget_mb = 150 + 19 * CAP / mib + 25 * byte_cap / mib + 2 * CAP / mib
     assert max(warm) < budget_mb * 1.5, \
         f"worker peak {max(warm):.0f} MB exceeds sizing rule " \
         f"({budget_mb:.0f} MB + 50% slack)"

@@ -8,6 +8,8 @@ same one): decode_html -> parse_html -> extract_main_content(with
 main_text) -> _doc_links, doc.walk() renumbering, and the raw
 Tokenizer stream."""
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -23,6 +25,7 @@ from closure_html_spark.spark.pipeline import (
     extract_pages,
     nodes_of,
 )
+from closure_html_spark.spark.session import ARROW_BATCH_CAPS
 
 ALL_COLS = tuple(RESULT_COL_DDL)
 
@@ -352,6 +355,70 @@ def test_20mb_document_mixed_with_small(spark):
     assert bigrow["n_nodes"] > 6000
     assert out.count() == 501
     assert bigrow["main_text"] == _reference_row(big)["main_text"]
+
+
+def _cap_test_pages() -> list:
+    """300 pages of 0.2-14 KB (tag soup, latin-1 labelled only by its
+    header, entities) with two 1.5 MiB pages, u_big1 and u_big2, in
+    the middle."""
+    rng = random.Random(1901)
+    rows = []
+    for i in range(300):
+        paras = "".join(
+            f"<p>page {i} para {j} caf\xe9 &amp; "
+            + "word " * rng.randrange(20, 400)
+            + ("</p>" if rng.random() < 0.7 else "")
+            for j in range(rng.randrange(1, 10)))
+        html = (f"<html><head><title>T{i}</title></head><body>"
+                f"<div id=nav><a href=/p{i}>home</a></div>{paras}"
+                "<table><td>x<ul>soup")
+        if i % 5 == 0:
+            rows.append((f"u{i:03d}", bytearray(html.encode("latin-1")),
+                         "text/html; charset=latin-1"))
+        else:
+            rows.append((f"u{i:03d}", bytearray(html.encode()), None))
+    rows[150:150] = [
+        (f"u_big{k}", bytearray(
+            (f"<html><body>{k}" + "<p>big page text. " * 90_000
+             + "</body></html>").encode()), None) for k in (1, 2)]
+    return rows
+
+
+def test_partition_reaches_python_in_byte_capped_batches(spark):
+    """One partition of ~300 pages (~1.7 MB) and two pages larger than
+    the session's Arrow byte cap reaches a Python stage as several
+    batches, not one.  Spark closes a batch at the first row that brings
+    it to the cap, so a batch of two or more rows is under the cap
+    without its last row: a worker holds under the cap plus one page,
+    which SCALE.md's worker-memory rule sizes.  extract_pages over the
+    same multi-batch partition equals the in-process reference row for
+    row."""
+    cap = int(ARROW_BATCH_CAPS["spark.sql.execution.arrow.maxBytesPerBatch"])
+    rows = _cap_test_pages()
+    df = spark.createDataFrame(
+        rows, "url string, html binary, content_type string").coalesce(1)
+
+    def probe(batches):
+        import pyarrow as pa
+        for b in batches:
+            yield pa.RecordBatch.from_pydict({
+                "urls": [b.column("url").to_pylist()],
+                "head_nbytes": [b.slice(0, b.num_rows - 1).nbytes]})
+
+    got = df.mapInArrow(probe, "urls array<string>, head_nbytes long") \
+        .collect()
+    assert [u for b in got for u in b.urls] == [r[0] for r in rows]
+    multi = [b for b in got if len(b.urls) >= 2]
+    assert len(multi) >= 2, [(len(b.urls), b.head_nbytes) for b in got]
+    for b in multi:
+        assert b.head_nbytes < cap, (len(b.urls), b.head_nbytes)
+    assert min(len(r[1]) for r in rows if r[0].startswith("u_big")) > cap
+
+    out = {r["url"]: _as_dict(r)
+           for r in extract_pages(df, columns=ALL_COLS).collect()}
+    assert set(out) == {r[0] for r in rows}
+    for url, raw, ct in rows:
+        assert out[url] == {"url": url, **_reference_row(raw, ct)}, url
 
 
 def test_spans_slice_extracted_text_jvm_side(spark):

@@ -12,8 +12,9 @@ On a real cluster the same invocation runs with --master yarn/k8s and the
 input pointing at the Iceberg/parquet pages table; everything else is
 identical (the engine has no driver-side per-document logic).
 
-This job builds its own session, so its Python workers fork from
-PySpark's stock daemon.  get_spark's preloading daemon
+This job builds its own session with get_spark's Arrow batch caps
+(session.ARROW_BATCH_CAPS), but its Python workers fork from PySpark's
+stock daemon.  get_spark's preloading daemon
 (closure_html_spark.spark.daemon) needs the package importable from the
 executor's working directory or PYTHONPATH: a worker adds --py-files
 archives to its path only after the fork, so a daemon module shipped
@@ -53,7 +54,9 @@ def main(argv=None):
                          "same md5(url) shard hash as --export-jsonl)")
     args = ap.parse_args(argv)
 
-    spark = SparkSession.builder.appName("chs-extract").getOrCreate()
+    from closure_html_spark.spark.session import ARROW_BATCH_CAPS
+    spark = (SparkSession.builder.appName("chs-extract")
+             .config(map=ARROW_BATCH_CAPS).getOrCreate())
 
     from closure_html_spark.spark.lineage import run_extraction_with_lineage
     from closure_html_spark.spark.pages import pages_from_documents
