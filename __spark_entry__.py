@@ -77,10 +77,10 @@ def _q_extract_doc(spark, sf_dir):
     """ONE wide extraction gate covering title + extracted_text +
     main_text + span accounting (template 0 always yields 3 blocks --
     nav, content, footer -- and the main span length equals the document
-    text length).  Round-5 verdict #1: the four single-column gates
-    (extract_text/main/title/spans) re-ran the same extraction four
-    times and crowded the driver's 50-entry correctness window; this one
-    query pins every column they pinned, in one pass."""
+    text length).  Four single-column gates (extract_text/main/title/
+    spans) would re-run the same extraction four times and crowd the
+    driver's 50-entry correctness window; this one query pins every
+    column they would pin, in one pass."""
     pages = pages_from_documents(spark, sf_dir)
     ext = extract_pages(pages, id_cols=("doc_id",))
     return (ext.select(
@@ -226,9 +226,8 @@ def _q_extract_variants(spark, sf_dir):
     resolve insertions / post-mortem merge shifts the text, and every
     template carries exactly the three core hrefs (/, /about, /c), so the
     oracle also breaks if repair ever drops or duplicates an A node inside
-    a mis-nested table/list/font wrapper.  (Merges the round-4 twin gates
-    extract_text_variants + extract_links_variants into one extraction
-    pass -- round-5 verdict #1.)"""
+    a mis-nested table/list/font wrapper.  (Text and links are checked
+    in one extraction pass, not as two twin gates.)"""
     pages = pages_from_documents(spark, sf_dir, tile=4, variants=4)
     ext = extract_pages(pages, id_cols=("doc_id", "rep"),
                         columns=("extracted_text", "spans", "links"))
@@ -241,8 +240,8 @@ def _q_extract_variants(spark, sf_dir):
 
 
 def _q_extract_hostile(spark, sf_dir):
-    """ADVERSARIAL parser corpus under the hard gate (round-6 verdict
-    #2): five hostile template families (deep unclosed nesting, pcdata
+    """ADVERSARIAL parser corpus under the hard gate: five hostile
+    template families (deep unclosed nesting, pcdata
     flood, entity bomb, ##BAD TAG## storm, charset lie -- see
     hostile_pages_from_documents) replayed through the full
     parse+repair+extract pipeline.  Each family's REPAIRED extraction
@@ -340,8 +339,7 @@ def _q_corpus_clean_pipeline(spark, sf_dir):
     words, Gopher-lite word-count rule) -> exact near-dup removal (md5 of
     main_text, first doc_id wins).
 
-    Scale shape (round-5 verdict wrong #2; round-6 ADVICE broadcast-OOM
-    fixed): dedup ownership is decided on an ids+hash-only frame --
+    Scale shape: dedup ownership is decided on an ids+hash-only frame --
     (doc_id, md5(main_text)) goes through the window exchange -- and the
     LOSER ids meet the text rows in a left-anti join with NO broadcast
     hint.  On real web corpora exact-duplicate losers are tens of
@@ -366,9 +364,10 @@ def _q_corpus_clean_pipeline(spark, sf_dir):
     wc = F.size(F.split(F.trim("main_text"), r"\s+"))
     quality = (F.length("main_text") > 0) & (wc >= 10)
     ext = extract_pages(pages, id_cols=("doc_id", "lang"))
-    # round 8 (guide §2.4): both the ownership branch and the final
+    # guide §2.4: both the ownership branch and the final
     # anti-join consume the extract output, and Catalyst does not dedupe
-    # common subplans -- the parse+extract mapInArrow stage ran TWICE.
+    # common subplans -- unmaterialized, the parse+extract stage runs
+    # TWICE.
     # localCheckpoint is the in-query mirror of the persisted extract
     # table the docstring already promises production would read.
     passed = (ext.select("doc_id", "lang", "main_text").filter(quality)
@@ -461,8 +460,8 @@ def _q_nodes_histogram(spark, sf_dir):
             .orderBy("name"))
 
 
-# --- merged per-doc stat gates (round-5 verdict #1: fold redundant gates
-# so every registered query fits the driver's 50-entry window; each merge
+# --- merged per-doc stat gates (redundant gates are folded so every
+# registered query fits the driver's 50-entry window; each merge
 # JOINS the component queries on doc_id, so the component code AND its
 # oracle closed form stay fully exercised) -----------------------------------
 
@@ -601,46 +600,39 @@ FROM documents ORDER BY doc_id
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """EXACTLY 50 entries -- the driver's correctness gate verifies the
     first 50 keys, so the registry is sized to fit entirely inside the
-    window (round-5 verdict #1: 10 round-4/5 queries sat past it,
-    permanently unverified).  Redundant single-column gates are merged
-    (extract_doc, extract_variants, text_stats, quality_signals,
-    normalize_text); the merged-away components keep local-only DuckDB
-    replay via aux_queries()/aux_oracle_sql().  Queries that have never
-    had a driver-green row are registered FIRST as defense in depth
-    against any future window shrink."""
+    window (a query past it is never verified).  Redundant single-column
+    gates are merged (extract_doc, extract_variants, text_stats,
+    quality_signals, normalize_text); the merged-away components keep
+    local-only DuckDB replay via aux_queries()/aux_oracle_sql().  The
+    queries with the least driver history come FIRST, as defense in
+    depth against any future window shrink."""
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-        # --- never driver-verified before round 7 ---
         # host-frequency boilerplate line removal (RefinedWeb/Dolma; the
-        # north_rule's "HTML boilerplate strip" leg) -- promoted round 7
-        # into the slot freed by demoting the O(N^2) embedding_neardup
-        # exact baseline to aux (round-6 verdict #1)
+        # north_rule's "HTML boilerplate strip" leg), in the slot the
+        # O(N^2) embedding_neardup exact baseline left for aux
         "host_boilerplate_clean": R.q_host_boilerplate_clean,
-        # --- round-7 additions (never driver-verified) ---
         # structured <table> extraction: soup + well-formed twins must
-        # repair to identical grids (tokens_histogram demoted to aux for
-        # the slot: any tokenizer drift already breaks every extraction
-        # gate's byte-pinned text; the tokens TABLE shape keeps aux replay)
+        # repair to identical grids (tokens_histogram is aux: any
+        # tokenizer drift already breaks every extraction gate's
+        # byte-pinned text; the tokens TABLE shape keeps aux replay)
         "html_tables": _q_html_tables,
         # head metadata: title/description/og:title/canonical/h1
-        # (host_stats demoted: it replayed the synthesis rule, gating no
+        # (host_stats is aux: it replayed the synthesis rule, gating no
         # machinery the agg + url gates don't)
         "doc_metadata": _q_doc_metadata,
         # Okapi BM25 top-k retrieval, one-pass corpus stats re-entering
-        # as a broadcast (sentence_chunks demoted: pure column exprs,
-        # oracle survives in aux)
+        # as a broadcast (sentence_chunks is aux: pure column exprs)
         "bm25_topk": R.q_bm25_topk,
         # SemDeDup: IVF-cell-bucketed semantic near-dup removal -- the
-        # scale answer to the demoted O(N^2) exact baseline (media_meta
-        # demoted: projection twin of the still-gated media_decode);
-        # R.N_CELLS cells, the constant its oracle is built from
+        # scale answer to the O(N^2) exact baseline (media_meta is aux:
+        # projection twin of the gated media_decode); R.N_CELLS cells,
+        # the constant its oracle is built from
         "semantic_dedup": R.q_semantic_dedup,
-        # adversarial parser corpus (round-6 verdict #2): deep nesting /
-        # pcdata flood / entity bomb / bad-tag storm / charset lie, all
-        # closed-form oracled (string_datetime demoted to aux for the
-        # slot; its string/datetime machinery stays gated via
-        # sessionize + url_canonical)
+        # adversarial parser corpus: deep nesting / pcdata flood /
+        # entity bomb / bad-tag storm / charset lie, all closed-form
+        # oracled (string_datetime is aux; its string/datetime machinery
+        # stays gated via sessionize + url_canonical)
         "extract_hostile": _q_extract_hostile,
-        # --- never driver-verified before round 6 (new or past-window) ---
         # one wide extraction gate: title/text/main/spans in one pass
         "extract_doc": _q_extract_doc,
         # tag-soup repair: variant text + spans + links in one pass
@@ -658,7 +650,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "corpus_clean_pipeline": _q_corpus_clean_pipeline,
         # multi-DTD catalog parse (netscape-bookmark) under the gate
         "bookmarks": _q_bookmarks,
-        # --- round-6 additions (never driver-verified) ---
         # eval-set n-gram overlap scrub (broadcast eval grams; the clean
         # transform is exercised through it and replayed in aux)
         "decontaminate": R.q_decontaminate,
@@ -679,14 +670,14 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # coverage reports (q_repeated_spans, q_dup_coverage) replay in aux
         "repeated_span_clean": R.q_repeated_span_clean,
         # inbound anchor-text aggregation over the (links, anchors)
-        # parallel arrays (late r6; extract_links demoted to aux -- its
-        # href machinery stays gated via extract_variants AND this)
+        # parallel arrays (extract_links is aux: its href machinery stays
+        # gated via extract_variants AND this)
         "anchor_text": _q_anchor_text,
         "simhash": R.q_simhash,
         # (embedding_neardup -- the EXACT O(N^2) crossJoin baseline --
-        # demoted to aux round 7: the one non-scale-safe plan is no
-        # longer invokable from the driver window; its oracle survives
-        # in aux and it remains the LSH twin's recall reference)
+        # is aux: the one non-scale-safe plan is not invokable from the
+        # driver window; its oracle survives in aux and it remains the
+        # LSH twin's recall reference)
         # the LSH queries size their bands from the table's row count
         # (R.lsh_band_bits), which is R.BAND_BITS, the width the oracles
         # are built at, on every corpus of up to 2^14 rows
@@ -695,31 +686,28 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # union-find below R.CC_DRIVER_MAX_PAIRS pairs, large-star/
         # small-star in Spark above it)
         "neardup_clusters": R.q_neardup_clusters,
-        # multimodal plumbing (media_meta demoted to aux round 7)
+        # multimodal plumbing (media_meta is aux)
         "media_decode": q_media_decode,
         # --- full-pipeline extraction (parse + repair + extract) ---
         "serialize_roundtrip": _q_serialize_roundtrip,
         "nodes_histogram": _q_nodes_histogram,
-        # (extract_links demoted to aux late r6 for anchor_text: per-doc
-        # href extraction stays driver-gated via extract_variants)
-        # (tokens_histogram + host_stats demoted to aux round 7, see the
-        # round-7 additions block for the rationale)
+        # (extract_links is aux: per-doc href extraction stays
+        # driver-gated via extract_variants; tokens_histogram and
+        # host_stats are aux, for the reasons given above)
         "warn_histogram": _q_warn_histogram,
         # --- relational shell (SURVEY.md §2.10) ---
         "pricing_summary": R.q_pricing_summary,
         "top_revenue_nations": R.q_top_revenue_nations,
-        # (order_priority demoted to aux round 6; r2+ green, its
-        # join+agg+sort pattern stays gated via top_revenue_nations;
-        # window_user_events likewise demoted late round 6 -- the window
-        # capability stays gated via sessionize)
+        # (order_priority is aux: its join+agg+sort pattern stays gated
+        # via top_revenue_nations; window_user_events likewise -- the
+        # window capability stays gated via sessionize)
         "sessionize": R.q_sessionize,
-        # (set_ops demoted to aux round 6 to make room; r2+ green;
-        # string_datetime demoted round 7 for extract_hostile)
+        # (set_ops and string_datetime are aux)
         # --- training-data ops ---
         "dedup_exact": R.q_dedup_exact,
-        # realistic C4-style span length (round-3 verdict #7: 3 words is a
-        # toy; 50-word shared spans are near-certain cross-doc duplication;
-        # the toy chunk_words=3 report stays in aux_queries)
+        # realistic C4-style span length (3 words is a toy; 50-word
+        # shared spans are near-certain cross-doc duplication; the toy
+        # chunk_words=3 report stays in aux_queries)
         "paragraph_dedup_50": lambda s, d: R.q_paragraph_dedup(
             s, d, chunk_words=R.C4_CHUNK_WORDS),
         # the removal transform that follows the report: clean_text with
@@ -732,13 +720,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "pii_redact": R.q_pii_redact,
         # crawl politeness: robots.txt groups + longest-match verdicts
         "robots_filter": R.q_robots_filter,
-        # (sentence_chunks demoted to aux round 7 for bm25_topk)
         # host-graph PageRank (iterative; crawl prioritization signal)
         "host_pagerank": R.q_host_pagerank,
         "tfidf_topk": R.q_tfidf_topk,
         "repetition_stats": R.q_repetition_stats,
-        # (q_fingerprint demoted to aux round 6: the winnowing variant
-        # below subsumes the rolling-hash machinery under the gate)
+        # (q_fingerprint is aux: the winnowing variant below subsumes
+        # the rolling-hash machinery under the gate)
         "winnow_fingerprint": R.q_winnow_fingerprint,
         "jaccard_pairs": R.q_jaccard_pairs,
         # EXACT brute-force top-k baseline (broadcast query side); the
@@ -746,13 +733,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "ann_cosine_topk": R.q_ann_cosine_topk,
         "ann_lsh_topk": R.q_ann_lsh_topk,
         "ann_ivf_topk": R.q_ann_ivf_topk,
-        # (minhash_est_pairs demoted to aux round 6: its banding +
-        # signature-agreement machinery runs under the gate through BOTH
-        # text_dedup_clean and incremental_dedup)
+        # (minhash_est_pairs is aux: its banding + signature-agreement
+        # machinery runs under the gate through BOTH text_dedup_clean
+        # and incremental_dedup)
         # the kept corpus: survivors + untouched docs with their text
-        # (text_dedup_clusters demoted to aux round 6: clean consumes the
-        # same connected-components labels; mime_class likewise -- both
-        # were driver-green in r4+r5 and keep local DuckDB replay)
+        # (text_dedup_clusters is aux: clean consumes the same
+        # connected-components labels; mime_class likewise)
         "text_dedup_clean": R.q_text_dedup_clean,
         "lang_id": R.q_lang_id,
     }
@@ -761,7 +747,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Gates pruned from the driver's 50-entry window whose DISTINCT
+    """Gates outside the driver's 50-entry window whose DISTINCT
     output shape is still worth an oracle: replayed by
     tests/test_entry_oracle.py exactly like queries(), just not by the
     driver.  (Everything merged into extract_doc / extract_variants /
@@ -774,8 +760,6 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "minhash_bands": R.q_minhash_bands,
         # per-doc distinct-shingle counts (jaccard's input representation)
         "ngram_shingles": R.q_ngram_shingles,
-        # demoted from the gate round 6 to make room for the corpus
-        # assembly + decontamination ops (driver-green r4+r5)
         "fingerprint": R.q_fingerprint,
         "text_dedup_clusters": R.q_text_dedup_clusters,
         "mime_class": R.q_mime_class,
@@ -783,29 +767,25 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "decontaminate_clean": R.q_decontaminate_clean,
         # alpha-sampling mix planner (feeds q_corpus_sample's rates)
         "domain_mix": R.q_domain_mix,
-        # demoted r6 (machinery gated via text_dedup_clean +
-        # incremental_dedup)
+        # machinery gated via text_dedup_clean + incremental_dedup
         "minhash_est_pairs": R.q_minhash_est_pairs,
         "set_ops": R.q_set_ops,
         "order_priority": R.q_order_priority,
-        # demoted r7 for extract_hostile (string fns stay driver-gated
-        # via url_canonical, datetime via sessionize)
+        # string fns stay driver-gated via url_canonical, datetime via
+        # sessionize
         "string_datetime": R.q_string_datetime,
-        # demoted late r6 for repeated_span_clean (window capability
-        # stays driver-gated via sessionize)
+        # window capability stays driver-gated via sessionize
         "window_user_events": R.q_window_user_events,
-        # demoted late r6 for anchor_text (href machinery stays gated
-        # via extract_variants + anchor_text)
+        # href machinery stays gated via extract_variants + anchor_text
         "extract_links": _q_extract_links,
-        # registry-external r6 ops: standing local replay
-        # (the full raw-HTML -> cleaned -> packed-sequences chain)
+        # the full raw-HTML -> cleaned -> packed-sequences chain
         "corpus_to_sequences": _q_corpus_to_sequences,
         "bpe_tokenize": R.q_bpe_tokenize,
         "lm_perplexity": R.q_lm_perplexity,
         "ppl_buckets": R.q_ppl_buckets,
         "repeated_spans": R.q_repeated_spans,
         "dup_coverage": R.q_dup_coverage,
-        # late r6: reproducible training order + CDX revisit dedup
+        # reproducible training order + CDX revisit dedup
         "corpus_shuffle": R.q_corpus_shuffle,
         "url_revisit": R.q_url_revisit,
         # C4 line-level cleaning over synthesized multi-line pages
@@ -813,9 +793,8 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # token-budget quality-first selection (histogram + boundary
         # stratum vs the oracle's single global window: same set)
         "quality_budget_select": R.q_quality_budget_select,
-        # (host_boilerplate_clean promoted to the driver gate round 7)
-        # EXACT O(N^2) crossJoin baseline, demoted from the gate round 7
-        # (round-6 verdict #1): recall reference for the LSH twin only
+        # EXACT O(N^2) crossJoin baseline: recall reference for the LSH
+        # twin only
         "embedding_neardup": R.q_embedding_neardup,
         # sitemap.xml ingest (crawl seeding; robots emits the pointers)
         "sitemap_urls": R.q_sitemap_urls,
@@ -823,51 +802,51 @@ def aux_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "url_blocklist": R.q_url_blocklist,
         # per-language data-card report (one partial-agg pass)
         "corpus_datasheet": R.q_corpus_datasheet,
-        # demoted r7 for the html_tables/doc_metadata/bm25/semantic_dedup
-        # promotions (rationale inline in queries())
+        # outside the window for the html_tables/doc_metadata/bm25/
+        # semantic_dedup gates (reasons inline in queries())
         "tokens_histogram": _q_tokens_histogram,
         "host_stats": _q_host_stats,
         "sentence_chunks": R.q_sentence_chunks,
         "media_meta": q_media_meta,
-        # round-7 addition: schema.org JSON-LD (raw payload via Arrow
-        # stage, fields via JVM-side from_json)
+        # schema.org JSON-LD (raw payload via Arrow stage, fields via
+        # JVM-side from_json)
         "jsonld_extract": _q_jsonld_extract,
-        # round-7 addition: product-quantization codes (Jegou et al.
-        # 2011) -- 4-bit-per-subspace codes, broadcast codebook, one
-        # groupBy pass; the vector-compression leg of the ANN family
+        # product-quantization codes (Jegou et al. 2011) -- 4-bit-per-
+        # subspace codes, broadcast codebook, one groupBy pass; the
+        # vector-compression leg of the ANN family
         "pq_encode": R.q_pq_encode,
-        # round-7 addition: compressed-domain ADC search over the PQ
-        # codes (broadcast per-query LUT maps; rerank option tested)
+        # compressed-domain ADC search over the PQ codes (per-query LUTs
+        # in the scoring kernel's closure)
         "ann_pq_topk": R.q_ann_pq_topk,
-        # round-7 addition: DSIR importance weights (arXiv:2302.03169)
-        # -- hashed-unigram target/raw log-ratio, broadcast model map,
-        # map-side scoring (no per-doc groupBy anywhere)
+        # DSIR importance weights (arXiv:2302.03169) -- hashed-unigram
+        # target/raw log-ratio, broadcast model map, map-side scoring
+        # (no per-doc groupBy anywhere)
         "dsir_weights": R.q_dsir_weights,
-        # round-7 addition: image perceptual-hash near-dup (aHash bits
-        # over the decode feature, banded hamming join -- exact for
-        # hamming<=1 by pigeonhole)
+        # image perceptual-hash near-dup (aHash bits over the decode
+        # feature, banded hamming join -- exact for hamming<=1 by
+        # pigeonhole)
         "media_phash_neardup": q_media_phash_neardup,
-        # round-7 addition: cross-engine-deterministic HyperLogLog
-        # (distinct counts with a 2^p-key exchange, any corpus size)
+        # cross-engine-deterministic HyperLogLog (distinct counts with a
+        # 2^p-key exchange, any corpus size)
         "vocab_hll": R.q_vocab_hll,
-        # round-7 addition: WET (ISO 28500 conversion records) export
-        # surface, gated as an in-engine write->reparse round trip
+        # WET (ISO 28500 conversion records) export surface, gated as an
+        # in-engine write->reparse round trip
         "wet_roundtrip": q_wet_roundtrip,
-        # round-7 additions: leak-proof hash-stratified eval split and
-        # count-min-sketch frequency estimates (bounded-memory state)
+        # leak-proof hash-stratified eval split and count-min-sketch
+        # frequency estimates (bounded-memory state)
         "corpus_split": R.q_corpus_split,
         "cms_word_freq": R.q_cms_word_freq,
-        # round-7 addition: the full PQ serving system (IVF cells prune,
-        # ADC scores the survivors from 4-byte codes)
+        # the full PQ serving system (IVF cells prune, ADC scores the
+        # survivors from 4-byte codes)
         "ann_ivfadc_topk": R.q_ann_ivfadc_topk,
-        # round-7 addition: deterministic HDR-binned quantile sketch
-        # (the replayable t-digest stand-in; 16 sub-bins/octave)
+        # deterministic HDR-binned quantile sketch (the replayable
+        # t-digest stand-in; 16 sub-bins/octave)
         "token_quantiles": R.q_token_quantiles,
-        # round-7 addition: RSS/Atom feed ingest (third crawl-seeding
-        # source; dates round-tripped through the wire formats)
+        # RSS/Atom feed ingest (third crawl-seeding source; dates
+        # round-tripped through the wire formats)
         "feed_entries": R.q_feed_entries,
-        # round-7 addition: fuzzy (MinHash) decontamination -- the
-        # near-dup complement to the exact 8-gram scrub
+        # fuzzy (MinHash) decontamination -- the near-dup complement to
+        # the exact 8-gram scrub
         "decontaminate_fuzzy": R.q_decontaminate_fuzzy,
     }
 

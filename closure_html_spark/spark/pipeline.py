@@ -3,15 +3,16 @@
 Spark shape (SURVEY.md §3.1 "Spark version"): a single narrow stage per
 document family -- scan -> iterator-style mapInArrow (Arrow-batched, no
 per-row Python marshalling at the row level; the parser itself is the
-per-document state machine) -> result columns.  Every per-document Python
-stage of the package, here and in pdfs, warcs, winnow, multimodal and
-relational, is one doc_stage: the stage computes one Python list per
-result column and doc_stage makes each an Arrow array of the type its
-output DDL declares.  Every parse stage runs its per-document work
-through one loop, _parsed_docs, which applies the byte cap, the charset
-seeding and the never-kill-the-batch error handling.  No shuffle is
-introduced by extraction itself; repartitioning for skew is the caller's
-choice (see lineage.py).
+per-document state machine) -> result columns.  Every Python stage of the
+package, here and in pdfs, warcs, winnow, multimodal and relational (the
+numpy embedding kernels included), is one doc_stage: the stage computes
+one column per result -- a Python list or a numpy vector -- and
+doc_stage makes each an Arrow array of the type its output DDL declares.
+Every parse stage runs its per-document work through one loop,
+_parsed_docs, which applies the byte cap, the charset seeding and the
+never-kill-the-batch error handling.  No shuffle is introduced by
+extraction itself; repartitioning for skew is the caller's choice (see
+lineage.py).
 
 DTD tables are loaded once per Python process from the packaged dtd.json
 (module-level cache in closure_html_spark.dtd) -- the broadcast-variable
@@ -96,15 +97,17 @@ def doc_stage(df: DataFrame, id_cols: tuple[str, ...], in_cols: list[str],
               result_ddl: str, columns_of) -> DataFrame:
     """The one Python stage: `id_cols` of `df` (in input order) ahead of
     the `result_ddl` columns, computed by one mapInArrow over the id
-    columns and `in_cols`.
+    columns and `in_cols` (a column in both is selected once).
 
-    `columns_of(batch)` returns (take, columns): one Python list per
-    result column, and take None when the stage yields one row per input
-    row, or else each output row's input-row index.  The id columns pass
-    through zero-copy, or are gathered C++-side by take.  Each list
-    becomes an Arrow array of the type the DDL declares, so nested field
-    names match the schema Spark expects.  The Arrow schema is resolved
-    on the driver (it needs the JVM DDL parser) and captured."""
+    `columns_of(batch)` returns (take, columns): one column per result
+    -- a Python list, a numpy vector or a prebuilt Arrow array -- and
+    take None when the stage yields one row per input row, or else each
+    output row's input-row index (a list or a numpy vector).  The id
+    columns pass through zero-copy, or are gathered C++-side by take.
+    Each column becomes an Arrow array of the type the DDL declares, so
+    nested field names match the schema Spark expects.  The Arrow schema
+    is resolved on the driver (it needs the JVM DDL parser) and
+    captured."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import StructType
@@ -134,7 +137,7 @@ def doc_stage(df: DataFrame, id_cols: tuple[str, ...], in_cols: list[str],
                 id_arrays + [pa.array(c, t) for c, t in zip(columns, types)],
                 schema=arrow_schema)
 
-    return df.select(*ids, *in_cols).mapInArrow(fn, ddl)
+    return df.select(*dict.fromkeys(ids + list(in_cols))).mapInArrow(fn, ddl)
 
 
 def _parsed_docs(batch, work, max_doc_bytes: int):

@@ -19,6 +19,8 @@ from pyspark.sql import functions as F
 from closure_html_spark.spark.tables import (
     parquet_files as _parquet_files, parquet_n_rows as _parquet_n_rows,
     read_table as _t)
+# the one Arrow stage every Python kernel below runs through
+from closure_html_spark.spark.pipeline import doc_stage
 
 
 # ---------------------------------------------------------------------------
@@ -416,6 +418,19 @@ FROM documents ORDER BY doc_id
 """
 
 
+def _word_windows(n: int):
+    """(zipped, gram, complete) for the n-word windows of `text`: the
+    word array zipped against its own 1..n-1 shifted slices, and, over
+    one exploded element `z` of it, the window's text and the test that
+    it is a complete gram (see _ngrams)."""
+    words = F.split(F.trim(F.col("text")), r"\s+")
+    cols = [words.alias("w0")] + [
+        F.slice(words, i + 1, F.size(words)).alias(f"w{i}")
+        for i in range(1, n)]
+    gram = F.concat_ws(" ", *[F.col(f"z.w{i}") for i in range(n)])
+    return F.arrays_zip(*cols), gram, F.col(f"z.w{n-1}").isNotNull()
+
+
 def _ngrams(docs, n: int = 3, out: str = "tri"):
     """Exploded word n-gram rows: (doc_id, <out>), SHUFFLE-FREE and fully
     codegen'd.  The grams come from zipping the word array against its own
@@ -432,15 +447,9 @@ def _ngrams(docs, n: int = 3, out: str = "tri"):
     appear in HIGHER fields first, so `last field non-null` <=> a complete
     gram, identical to the old lead-chain filter (plan-asserted by
     test_plans.py: no Exchange below the gram projection)."""
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    cols = [words.alias("w0")] + [
-        F.slice(words, i + 1, F.size(words)).alias(f"w{i}")
-        for i in range(1, n)]
-    exploded = docs.select(
-        "doc_id", F.explode(F.arrays_zip(*cols)).alias("z"))
-    gram = F.concat_ws(" ", *[F.col(f"z.w{i}") for i in range(n)])
-    return (exploded.filter(F.col(f"z.w{n-1}").isNotNull())
-            .select("doc_id", gram.alias(out)))
+    zipped, gram, complete = _word_windows(n)
+    return (docs.select("doc_id", F.explode(zipped).alias("z"))
+            .filter(complete).select("doc_id", gram.alias(out)))
 
 
 def q_ngram_shingles(spark, sf_dir):
@@ -481,10 +490,10 @@ def q_jaccard_pairs(spark, sf_dir):
     shingle and J is the true Jaccard."""
     docs = _t(spark, sf_dir, "documents")
     words = F.split(F.trim(F.col("text")), r"\s+")
-    # round 8 (guide §2.4): Catalyst does not dedupe common subplans, so
-    # the distinct-shingle frame -- one full explode + exchange over the
-    # corpus -- previously re-executed for every consumer (keep, sizes,
-    # both self-join sides: 8 document scans in the before plan).  The df
+    # guide §2.4: Catalyst does not dedupe common subplans, so
+    # unmaterialized, the distinct-shingle frame -- one full explode +
+    # exchange over the corpus -- re-executes for every consumer (keep,
+    # sizes, both self-join sides: 8 document scans).  The df
     # cap is a count-over-window on the same tri key (one exchange, no
     # groupBy + re-join), and the capped frame is materialized once for
     # its three consumers (ids+shingles only, the incremental_dedup
@@ -563,16 +572,19 @@ def _norm_expr(c):
 #
 # The zip_with/aggregate HOF lambdas of _dot_expr are INTERPRETED by the
 # JVM expression evaluator (never whole-stage-codegen'd): every element of
-# every dot product costs a boxed lambda invocation.  Round-8 measurement
-# (OPTIMIZATION_r08.md) put the embedding family at ~34 s of the 81 s
-# relational total, nearly all of it in these folds.  The kernels below move
-# the SAME arithmetic into numpy inside mapInArrow (guide §4.2: hand whole
-# batches to vectorized native code).  Bit-exactness: the JVM fold is a
-# left-associated float64 sum seeded at 0.0 over float->double casts; the
-# numpy loop accumulates `acc = acc + a[:, d] * b[:, d]` column by column --
-# the identical IEEE-754 operation sequence per row, vectorized ACROSS rows
-# -- so every dot/norm is bit-identical to _dot_expr's and the DuckDB
-# oracles replay unchanged.  Rounding/division stay JVM-side.
+# every dot product costs a boxed lambda invocation.  Profiled, the
+# embedding family took ~34 s of an 81 s relational total, nearly all of
+# it in these folds.  The kernels below move the SAME arithmetic into
+# numpy, each a doc_stage body that returns numpy columns (guide §4.2:
+# hand whole batches to vectorized native code).  Setup that depends only
+# on driver-side values (sign matrices, centroid tables) is built on the
+# driver and carried by the closure, so no batch repeats it.
+# Bit-exactness: the JVM fold is a left-associated float64 sum seeded at
+# 0.0 over float->double casts; the numpy loop accumulates
+# `acc = acc + a[:, d] * b[:, d]` column by column -- the identical
+# IEEE-754 operation sequence per row, vectorized ACROSS rows -- so every
+# dot/norm is bit-identical to _dot_expr's and the DuckDB oracles replay
+# unchanged.  Rounding/division stay JVM-side.
 
 # the embedding width every kernel and sign matrix is built for; inputs are
 # checked against it (_emb_matrix), never reshaped on trust
@@ -624,22 +636,14 @@ def _np_seq_dot(a, b):
 
 
 def _np_pair_dot(df, a_col: str, b_col: str, keep: list[str]):
-    """Append `dot` = dot(a_col, b_col) (raw double, unrounded) to `df`
-    via one numpy mapInArrow pass; keeps only `keep` + `dot`."""
-    import pyarrow as pa
-    dts = dict(df.dtypes)
-    schema = ", ".join(f"{c} {dts[c]}" for c in keep) + ", dot double"
+    """The `keep` columns of `df` plus `dot` = dot(a_col, b_col) (raw
+    double, unrounded), by one numpy pass."""
+    def columns_of(b):
+        return None, [_np_seq_dot(_np_embs(b.column(a_col)),
+                                  _np_embs(b.column(b_col)))]
 
-    def fn(batches):
-        for b in batches:
-            d = _np_seq_dot(_np_embs(b.column(a_col)),
-                            _np_embs(b.column(b_col)))
-            yield pa.RecordBatch.from_arrays(
-                [b.column(c) for c in keep] + [pa.array(d, pa.float64())],
-                names=keep + ["dot"])
-
-    return df.select(*dict.fromkeys(keep + [a_col, b_col])) \
-        .mapInArrow(fn, schema)
+    return doc_stage(df, tuple(keep), [a_col, b_col], "dot double",
+                     columns_of)
 
 
 # embeddings-side size gate for the pair-rerank kernels: when the WHOLE
@@ -706,29 +710,20 @@ def _np_pair_dot_bcast(pairs, bc, a_id: str, b_id: str):
     """(a_id, b_id, dot, a_norm, b_norm) from an ids-only pair frame and
     the broadcast embedding matrix: the heavy bytes cross the Python
     boundary never (guide §8 -- decide with small rows); the dot is the
-    same sequential float64 fold as _dot_expr."""
-    import pyarrow as pa
+    same sequential float64 fold as _dot_expr.  Each batch casts only the
+    rows it gathers (exact: a float32 -> float64 cast is lossless)."""
+    import numpy as np
 
-    def fn(batches):
-        import numpy as np
+    def columns_of(b):
         ids, mat, norms = bc.value
-        m64 = mat.astype(np.float64)
-        for b in batches:
-            av = b.column(a_id).to_numpy(zero_copy_only=False)
-            bv = b.column(b_id).to_numpy(zero_copy_only=False)
-            ai = np.searchsorted(ids, av)
-            bi = np.searchsorted(ids, bv)
-            d = _np_seq_dot(m64[ai], m64[bi])
-            yield pa.RecordBatch.from_arrays(
-                [b.column(a_id), b.column(b_id),
-                 pa.array(d, pa.float64()),
-                 pa.array(norms[ai], pa.float64()),
-                 pa.array(norms[bi], pa.float64())],
-                names=[a_id, b_id, "dot", "a_norm", "b_norm"])
+        ai, bi = (np.searchsorted(ids, b.column(c).to_numpy(
+            zero_copy_only=False)) for c in (a_id, b_id))
+        d = _np_seq_dot(mat[ai].astype(np.float64),
+                        mat[bi].astype(np.float64))
+        return None, [d, norms[ai], norms[bi]]
 
-    return pairs.select(a_id, b_id).mapInArrow(
-        fn, f"{a_id} bigint, {b_id} bigint, dot double, "
-            "a_norm double, b_norm double")
+    return doc_stage(pairs, (a_id, b_id), [],
+                     "dot double, a_norm double, b_norm double", columns_of)
 
 
 def _np_cent_sims(emb, c_ids, c_mat):
@@ -739,50 +734,38 @@ def _np_cent_sims(emb, c_ids, c_mat):
     sequential float64 fold + division, so F.round(raw, 6) downstream is
     bit-identical to the old in-join rounding)."""
     import numpy as np
-    import pyarrow as pa
     cid_arr = np.asarray([int(c) for c in c_ids], dtype=np.int64)
     cm = np.asarray(c_mat, dtype=np.float64)
     cn = np.sqrt(_np_seq_dot(cm, cm))
     nc = len(cid_arr)
 
-    def fn(batches):
-        for b in batches:
-            e = _np_embs(b.column("embedding"))
-            n = e.shape[0]
-            vn = np.sqrt(_np_seq_dot(e, e))
-            vid = b.column("vec_id").to_numpy(zero_copy_only=False)
-            sims = np.empty((n, nc))
-            for ci in range(nc):
-                d = _np_seq_dot(e, np.broadcast_to(cm[ci], e.shape))
-                sims[:, ci] = d / (vn * cn[ci])
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(vid, nc), pa.int64()),
-                 pa.array(np.tile(cid_arr, n), pa.int64()),
-                 pa.array(sims.reshape(-1), pa.float64())],
-                names=["vec_id", "c_id", "raw"])
+    def columns_of(b):
+        e = _np_embs(b.column("embedding"))
+        n = e.shape[0]
+        vn = np.sqrt(_np_seq_dot(e, e))
+        sims = np.empty((n, nc))
+        for ci in range(nc):
+            d = _np_seq_dot(e, np.broadcast_to(cm[ci], e.shape))
+            sims[:, ci] = d / (vn * cn[ci])
+        return np.repeat(np.arange(n), nc), [np.tile(cid_arr, n),
+                                             sims.reshape(-1)]
 
-    return emb.select("vec_id", "embedding").mapInArrow(
-        fn, "vec_id bigint, c_id bigint, raw double")
+    return doc_stage(emb, ("vec_id",), ["embedding"],
+                     "c_id bigint, raw double", columns_of)
 
 
 def _np_normed(emb):
     """(vec_id, embedding, norm) with norm = sqrt(fold(x^2)) -- the numpy
     twin of the per-vector norm lambda (same sequential add order; IEEE
     sqrt is exact so the result is bit-identical)."""
-    import pyarrow as pa
+    import numpy as np
 
-    def fn(batches):
-        import numpy as np
-        for b in batches:
-            e = _np_embs(b.column("embedding"))
-            n = np.sqrt(_np_seq_dot(e, e))
-            yield pa.RecordBatch.from_arrays(
-                [b.column("vec_id"), b.column("embedding"),
-                 pa.array(n, pa.float64())],
-                names=["vec_id", "embedding", "norm"])
+    def columns_of(b):
+        e = _np_embs(b.column("embedding"))
+        return None, [np.sqrt(_np_seq_dot(e, e))]
 
-    return emb.select("vec_id", "embedding").mapInArrow(
-        fn, "vec_id bigint, embedding array<float>, norm double")
+    return doc_stage(emb, ("vec_id", "embedding"), ["embedding"],
+                     "norm double", columns_of)
 
 
 def _cosine_rerank(pairs, emb, local, n: int, a: str = "a_id",
@@ -846,7 +829,7 @@ def q_ann_cosine_topk(spark, sf_dir):
     """Brute-force cosine top-k similarity search -- the exact baseline for
     ANN.  Query vectors = embeddings with vec_id < N_QUERIES.
 
-    Round 8: the bounded query side rides the _np_cent_sims kernel's
+    The bounded query side rides the _np_cent_sims kernel's
     closure (queries play the centroid role) instead of a broadcast
     crossJoin with interpreted per-row folds; dot and norms keep the fold
     order (and dot/norm-product commutativity is exact in IEEE floats, so
@@ -883,6 +866,15 @@ FROM ranked WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 """
 
 
+def _md5_halves(col):
+    """The first and second 32-bit halves of md5(col), as longs: unsigned
+    values that fit BIGINT in both engines, so a DuckDB oracle replays
+    every hash built from them bit for bit."""
+    md5 = F.md5(col)
+    return [F.conv(F.substring(md5, i, 8), 16, 10).cast("long")
+            for i in (1, 9)]
+
+
 def _minhash_sigs(docs):
     """MinHash signatures (doc_id, h0..h{n-1}), fully JVM-side: exploded
     shingles -> N_HASHES salted hashes per row -> map-side partial MIN
@@ -894,9 +886,7 @@ def _minhash_sigs(docs):
     Spark wraps), so DuckDB replays the signatures bit-for-bit."""
     words = F.split(F.trim(F.col("text")), r"\s+")
     docs = docs.filter(F.size(words) >= 3)
-    md5 = F.md5(F.col("tri"))
-    a = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
-    b = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
+    a, b = _md5_halves(F.col("tri"))
     tri = _ngrams(docs).select("doc_id", *[
         (a * F.lit(2 * h + 3) + b * F.lit(2 * h + 101)
          + F.lit(h)).alias(f"x{h}")
@@ -1016,10 +1006,10 @@ def _minhash_est_pairs(spark, sf_dir, threshold: float):
     """The (a_id, b_id, est_jaccard) rows of q_minhash_est_pairs in no
     order: the query sorts them, connected_components needs no sort."""
     docs = _t(spark, sf_dir, "documents")
-    # round 8 (guide §2.4): sigs feeds three consumers (banding + both
+    # guide §2.4: sigs feeds three consumers (banding + both
     # estimator sides) and the bands two (both self-join sides); without
-    # materialization every consumer re-ran the full shingle+minhash scan
-    # (8 document scans in the before plan).  Both frames are ids+hashes
+    # materialization every consumer re-runs the full shingle+minhash
+    # scan (8 document scans).  Both frames are ids+hashes
     # only -- the incremental_dedup localCheckpoint precedent.
     sigs = _minhash_sigs(docs).localCheckpoint(eager=True)
     cand = _candidate_pairs(_minhash_banded(sigs), "doc_id",
@@ -1045,7 +1035,7 @@ def q_paragraph_dedup(spark, sf_dir, chunk_words: int = TOY_CHUNK_WORDS):
     # guard the degenerate doc (< k words): Spark's sequence(1, 0) counts
     # DOWN to [1, 0] (DuckDB's range(1, 1) is empty), which silently
     # emitted partial chunks for short documents -- caught by the
-    # chunk_words=50 oracle at sf0.001 (round-4)
+    # chunk_words=50 oracle at sf0.001
     chunks = F.when(n_chunks >= 1, F.transform(
         F.sequence(F.lit(1), n_chunks),
         lambda i: F.concat_ws(
@@ -1095,9 +1085,8 @@ def q_paragraph_dedup_clean(spark, sf_dir):
     (the lexicographically first (doc_id, position); C4 keeps one
     occurrence of every three-sentence span, Raffel et al. 2020 §2.2).
 
-    Shape (round-4 verdict wrong #4 fixed, then some): ownership is
-    decided on an ids+hash-only frame -- explode to (doc_id, pos,
-    md5(chunk)), window-min over the 16-byte hash marks the owner, so the
+    Shape: ownership is decided on an ids+hash-only frame -- explode to
+    (doc_id, pos, md5(chunk)), window-min over the 16-byte hash marks the owner, so the
     wide exchange carries hashes and ids, never chunk text.  The removal
     list per doc (positions to drop) is a tiny aggregate joined back to
     `documents` by doc_id, and clean_text is rebuilt JVM-side by slicing
@@ -1242,10 +1231,10 @@ def _resolve_one(b, href):
 
 def resolve_href(src, href, base=None):
     """RFC 3986 reference resolution as pure column expressions -- the
-    batch counterpart of the crawl frontier's link resolution (round-4
-    verdict wrong #2).  `base` (the document's <base href>, possibly
-    itself relative) overrides `src` as the resolution base when present;
-    a base that resolves to NULL (non-http scheme) falls back to src."""
+    batch counterpart of the crawl frontier's link resolution.  `base`
+    (the document's <base href>, possibly itself relative) overrides
+    `src` as the resolution base when present; a base that resolves to
+    NULL (non-http scheme) falls back to src."""
     if base is not None:
         eff = F.coalesce(_resolve_one(src, F.coalesce(base, F.lit(""))), src)
         return _resolve_one(eff, href)
@@ -1658,8 +1647,6 @@ def q_unicode_nfc(spark, sf_dir):
     Arrow-batched stage (unicodedata.normalize over each batch);
     DuckDB's nfc_normalize replays it.  Each doc gets a deterministic
     decomposed prefix so the transform provably fires."""
-    from .pipeline import doc_stage
-
     docs = _t(spark, sf_dir, "documents")
     # 'cafe' + combining acute + space: decomposed on purpose
     dirty = F.concat(F.lit("café naïve "), F.col("text"))
@@ -1732,9 +1719,9 @@ def q_pii_redact(spark, sf_dir):
     closed-form (the corpus text itself carries no digits/@)."""
     docs = _t(spark, sf_dir, "documents")
     i = F.col("doc_id").cast("string")
-    # NANP-shaped 3-3-4 phone (round-5 advice: the old 555-01XX-1234 form
-    # was 3-4-4 and never matched PII_PHONE_RE, leaving the [PHONE] path
-    # vacuously green); tests/test_relational_edges.py asserts n_phones >= 1
+    # NANP-shaped 3-3-4 phone (a 3-4-4 form such as 555-01XX-1234 never
+    # matches PII_PHONE_RE, leaving the [PHONE] path vacuously green);
+    # tests/test_relational_edges.py asserts n_phones >= 1
     dirty = F.concat(
         F.col("text"),
         F.lit(" contact user"), i, F.lit("@mail.example or call 555-"),
@@ -2259,11 +2246,9 @@ def q_simhash(spark, sf_dir):
     for SimHash the hash cost is dwarfed by the explode + 64 aggregates."""
     docs = _t(spark, sf_dir, "documents")
     words = F.explode(F.split(F.trim(F.col("text")), r"\s+")).alias("w")
-    md5 = F.md5(F.col("w"))
+    h_hi, h_lo = _md5_halves(F.col("w"))
     exploded = docs.select("doc_id", words).select(
-        "doc_id",
-        F.conv(F.substring(md5, 1, 8), 16, 10).cast("long").alias("h_hi"),
-        F.conv(F.substring(md5, 9, 8), 16, 10).cast("long").alias("h_lo"))
+        "doc_id", h_hi.alias("h_hi"), h_lo.alias("h_lo"))
     votes = []
     for b in range(64):
         src = F.col("h_lo") if b < 32 else F.col("h_hi")
@@ -2361,8 +2346,8 @@ def lsh_band_bits(n_rows: int) -> int:
     N / 2^(log2 N - 10) = 2^10 = ~1024 rows, so the bucket self-join
     generates about n_bands * N * 1024 / 2 candidate pairs -- LINEAR in
     N -- instead of the ~n_bands * 2^band_bits * (N/2^band_bits)^2 / 2 =
-    N^2-ish blowup a fixed small band_bits gives (the round-2 default of 4
-    bits degenerated to ~N^2/32 pairs at 10^9 vectors).  Examples: N=500
+    N^2-ish blowup a fixed small band_bits gives (a fixed 4 bits
+    degenerates to ~N^2/32 pairs at 10^9 vectors).  Examples: N=500
     -> 4 (floor), N=10^6 -> 10, N=10^9 -> 20.  The cap of 20 bounds
     plan-compile cost (each bit is one zip_with dot product; 8 bands x 20
     bits = 160 expressions) -- beyond ~10^9 rows per partition-group,
@@ -2381,7 +2366,7 @@ def _rhp_sign_matrix(n_bits: int) -> list[list[float]]:
     computed ONCE at plan-build time and baked into the plan as array
     literals -- portable across engines by construction: the DuckDB oracles
     embed the SAME constants, so both engines replay identical signatures
-    (the round-2 minhash/simhash portable-hash pattern, taken one step
+    (the minhash/simhash portable-hash pattern, taken one step
     further: no per-row hashing exists at all here)."""
     import hashlib
     return [[1.0 if hashlib.md5(f"rhp:{b}:{d}".encode()).digest()[0] % 2 == 0
@@ -2394,36 +2379,28 @@ def _rhp_bands_np(emb, band_bits: int):
     vector, each band's val the band_bits hyperplane sign bits packed
     little-endian (bit i = sign(dot(embedding, _rhp_sign_matrix row))).
     Each dot is the SAME left-associated float64 fold as _dot_expr (see
-    the round-8 kernel note above), so bucket membership is what a
-    JVM-side zip_with/aggregate band column would give; one mapInArrow
-    pass replaces band_bits*RHP_BANDS interpreted 64-element folds per
-    row (the round-8 profile's single largest cost)."""
-    import pyarrow as pa
+    the kernel note above), so bucket membership is what a JVM-side
+    zip_with/aggregate band column would give; one numpy pass replaces
+    band_bits*RHP_BANDS interpreted 64-element folds per row (the largest
+    single cost in the relational pack's profile)."""
+    import numpy as np
     n_bands = RHP_BANDS
     n_bits = band_bits * n_bands
-    signs = _rhp_sign_matrix(n_bits)
+    S = np.asarray(_rhp_sign_matrix(n_bits), dtype=np.float64)
 
-    def fn(batches):
-        import numpy as np
-        S = np.asarray(signs, dtype=np.float64)
-        for b in batches:
-            e = _np_embs(b.column("embedding"))
-            n = e.shape[0]
-            vals = np.zeros((n, n_bands), dtype=np.int64)
-            for i in range(n_bits):
-                bit = (_np_seq_dot(e, np.broadcast_to(S[i], e.shape))
-                       >= 0.0).astype(np.int64)
-                vals[:, i // band_bits] += bit << (i % band_bits)
-            vid = b.column("vec_id").to_numpy(zero_copy_only=False)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.repeat(vid, n_bands), pa.int64()),
-                 pa.array(np.tile(np.arange(n_bands, dtype=np.int32), n),
-                          pa.int32()),
-                 pa.array(vals.reshape(-1), pa.int64())],
-                names=["vec_id", "band", "val"])
+    def columns_of(b):
+        e = _np_embs(b.column("embedding"))
+        n = e.shape[0]
+        vals = np.zeros((n, n_bands), dtype=np.int64)
+        for i in range(n_bits):
+            bit = (_np_seq_dot(e, np.broadcast_to(S[i], e.shape))
+                   >= 0.0).astype(np.int64)
+            vals[:, i // band_bits] += bit << (i % band_bits)
+        return np.repeat(np.arange(n), n_bands), [
+            np.tile(np.arange(n_bands, dtype=np.int32), n), vals.reshape(-1)]
 
-    flat = emb.select("vec_id", "embedding").mapInArrow(
-        fn, "vec_id bigint, band int, val bigint")
+    flat = doc_stage(emb, ("vec_id",), ["embedding"], "band int, val bigint",
+                     columns_of)
     return flat.select("vec_id",
                        F.struct("band", "val").alias("bk"))
 
@@ -2468,13 +2445,12 @@ def _embedding_near_pairs(spark, sf_dir):
     order: the query sorts them, connected_components needs no sort."""
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
-    # round-8 (guide §4.2 + §2.4): signatures come from ONE numpy
-    # mapInArrow pass (bit-identical fold, see _rhp_bands_np) and the tiny
-    # (vec_id, bk) frame is materialized once -- the interpreted banding
-    # subtree previously executed TWICE (both sides of the self-join;
-    # plans/r08/embedding_neardup_lsh_before.txt shows the duplicated
-    # Generate), at scan parallelism 1.  The distinct after the cosine
-    # cut gives ANY-band semantics.
+    # guide §4.2 + §2.4: signatures come from ONE numpy pass
+    # (bit-identical fold, see _rhp_bands_np), and _candidate_pairs
+    # materializes the tiny (vec_id, bk) frame once -- unmaterialized,
+    # the banding subtree runs TWICE (both sides of the self-join), at
+    # scan parallelism 1.  The distinct after the cosine cut gives
+    # ANY-band semantics.
     pairs = _candidate_pairs(_rhp_bands_np(emb, lsh_band_bits(n)), "vec_id",
                              ["bk"])
     return _cosine_rerank(pairs, emb, _local_emb_table(sf_dir), n,
@@ -2498,9 +2474,9 @@ def q_ann_lsh_topk(spark, sf_dir):
     non-local-parquet input costs one count() job."""
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
-    # round 8: same kernel + materialize-once treatment as
-    # q_embedding_neardup_lsh (the interpreted banding previously ran
-    # twice -- query side and corpus side)
+    # same kernel + materialize-once treatment as
+    # q_embedding_neardup_lsh (unmaterialized, the banding runs twice --
+    # query side and corpus side)
     banded = _rhp_bands_np(emb, lsh_band_bits(n)).localCheckpoint(eager=True)
     qs = (banded.filter(F.col("vec_id") < N_QUERIES)
           .select(F.col("vec_id").alias("q_id"), F.col("bk").alias("q_bk")))
@@ -2716,7 +2692,7 @@ def q_winnow_fingerprint(spark, sf_dir):
 
     Computed in ONE shuffle-free Arrow stage (spark/winnow.py: numpy
     rolling polynomial hash + sliding-window min per document) -- the
-    round-2 relational form exploded a row per character position and
+    relational form explodes a row per character position and
     shuffled them through Window.partitionBy(doc_id), ~10^14 rows of
     shuffle at 100 TB of text.  That relational formulation survives as
     the definition: q_winnow_fingerprint_expr (in-Spark SQL twin, diffed
@@ -3231,7 +3207,7 @@ def q_incremental_dedup(spark, sf_dir):
     """Gate wrapper: batch = docs with doc_id % BATCH_MOD >= BATCH_MIN,
     index = the rest (a deterministic stand-in for "yesterday's corpus +
     today's crawl").  Testdata has zero exact text duplicates anywhere
-    (checked r6), so the exact_dup arm is pinned by a synthetic-frame
+    (checked), so the exact_dup arm is pinned by a synthetic-frame
     unit test (tests/test_incremental_dedup.py) and the gate's signal is
     the near_dup/new split (40+ straddling near-pairs at sf0.01)."""
     return incremental_dedup(_t(spark, sf_dir, "documents"),
@@ -3312,8 +3288,8 @@ def train_quality_classifier(feats, iters: int):
     the exchange carries ONE ROW of partial gradient sums.
 
     Returns (scored DataFrame ordered by doc_id, weights list)."""
-    # round 8 (guide §2.4): every GD iteration is an action, and without
-    # materialization each of the 1 + iters + 1 passes re-ran the feature
+    # guide §2.4: every GD iteration is an action, and without
+    # materialization each of the 1 + iters + 1 passes re-runs the feature
     # extraction (stopword regexp over every document).  feats is a tiny
     # (doc_id, y, x1..x3) frame -- compute it once.
     feats = feats.localCheckpoint(eager=True)
@@ -3353,7 +3329,7 @@ def q_quality_classifier(spark, sf_dir):
     log-compressed x3 plus noise from x1/x2), reaching ~0.96 train
     accuracy vs a 0.55 base rate on testdata.  (The obvious
     ``lang == 'en'`` label is UNLEARNABLE here: testdata's lang column
-    is uncorrelated with its synthetic text, checked r6 -- a classifier
+    is uncorrelated with its synthetic text (checked) -- a classifier
     gate on it would pin a constant-majority predictor.)  Production
     swaps in "page from a trusted domain list" exactly like CCNet's
     Wikipedia seed; learning on a genuinely separable text signal is
@@ -3455,7 +3431,7 @@ def q_bpe_merges(spark, sf_dir):
     pair maximizes summed within-word occurrence count (overlapping
     occurrences counted, weighted by word count), ties broken (left,
     right) ascending; merge application is a padded-string replace
-    applied TWICE (round-6 ADVICE): a single pass misses an adjacent
+    applied TWICE: a single pass misses an adjacent
     occurrence that shares one delimiter space with a replaced one
     (' x y x y ' -> ' xy x y '), because the replacement consumes the
     shared space; after one pass the remaining occurrences are never
@@ -3653,10 +3629,10 @@ def q_lm_perplexity(spark, sf_dir):
     w = F.when(F.length(F.trim("text")) > 0,
                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
                ).otherwise(F.array().cast("array<string>"))
-    # round 8 (guide §2.4): this plan re-used pairs/vocab/m so many times
-    # that the corpus-wide bigram explode executed ~10x (20 document scans
-    # in the before plan: vocab alone re-derives pairs, and m -- consumed
-    # by big, uni and the scorer -- re-derives both).  Materialize each
+    # guide §2.4: this plan re-uses pairs/vocab/m so many times that,
+    # unmaterialized, the corpus-wide bigram explode executes ~10x (20
+    # document scans: vocab alone re-derives pairs, and m -- consumed by
+    # big, uni and the scorer -- re-derives both).  Materialize each
     # shared frame once; all are ids+words or bounded count tables.
     pairs = (docs.select("doc_id", w.alias("w"))
              .select("doc_id", F.explode(
@@ -3757,7 +3733,7 @@ def q_ppl_buckets(spark, sf_dir):
     Output carries no floats, but the labels depend on float ppl /
     percentile values computed independently in Spark and DuckDB
     (different summation order -> ULP drift), so a doc landing exactly
-    on a tertile cutoff could flip buckets (round-6 ADVICE).  Both
+    on a tertile cutoff could flip buckets.  Both
     engines therefore quantize ppl AND the interpolated cutoffs to 6dp
     before comparing -- the boundary comparison is then between two
     identically quantized values."""
@@ -3792,19 +3768,28 @@ ORDER BY doc_id
 """
 
 
-def _pos_ngrams(docs, n: int):
-    """Positional variant of _ngrams: (doc_id, pos, gram) with pos the
-    0-based word offset of the window start.  Same shuffle-free
-    zip-against-shifted-slices construction (see _ngrams)."""
-    words = F.split(F.trim(F.col("text")), r"\s+")
-    cols = [words.alias("w0")] + [
-        F.slice(words, i + 1, F.size(words)).alias(f"w{i}")
-        for i in range(1, n)]
-    exploded = docs.select(
-        "doc_id", F.posexplode(F.arrays_zip(*cols)).alias("pos", "z"))
-    gram = F.concat_ws(" ", *[F.col(f"z.w{i}") for i in range(n)])
-    return (exploded.filter(F.col(f"z.w{n-1}").isNotNull())
-            .select("doc_id", "pos", gram.alias("gram")))
+def _span_window_keys(docs):
+    """(doc_id, pos, h_hi, h_lo) for every SPAN_W-word window, pos the
+    0-based word offset of its start: the shuffle-free zip construction
+    of _ngrams, posexploded, with each window keyed by a 64-bit hash
+    pair of its text, materialized once because it feeds both a
+    count aggregate and a match join (unmaterialized, the explode and
+    the hashing run once per consumer: 6 document scans).
+
+    The key is OUTPUT-INVISIBLE (only gram equality matters, and equal
+    grams hash equal under any function), so it is two codegen'd
+    xxhash64 calls, not the md5 + hex-substring + conv chain, which
+    measured ~20% of q_repeated_spans' wall.  The oracles keep md5:
+    outputs agree unless two DISTINCT grams collide on the full 128-bit
+    pair (~N^2/2^128).  q_simhash's h_hi/h_lo stay md5: its output
+    VALUE is derived from the hash bits."""
+    zipped, gram, complete = _word_windows(SPAN_W)
+    return (docs.select("doc_id", F.posexplode(zipped).alias("pos", "z"))
+            .filter(complete).select("doc_id", "pos", gram.alias("gram"))
+            .select("doc_id", "pos",
+                    F.xxhash64("gram").alias("h_hi"),
+                    F.xxhash64(F.lit(1), F.col("gram")).alias("h_lo"))
+            .localCheckpoint(eager=True))
 
 
 def q_repeated_spans(spark, sf_dir):
@@ -3816,27 +3801,14 @@ def q_repeated_spans(spark, sf_dir):
     remove-duplicate-substrings pass consumes.
 
     Scale shape: windows come from the shuffle-free positional n-gram
-    projection (_pos_ngrams); each window is keyed by the PORTABLE
+    projection (_span_window_keys); each window is keyed by a
     64-bit hash pair (h_hi, h_lo) of its text, so the count exchange
     and the match join carry (hash, doc_id, pos) only -- window TEXT
     never shuffles (at 50-word windows a text-keyed groupBy would shuffle ~50x
     the corpus).  The duplicated-gram table is corpus-sized in the
     worst case, so the match join is a plain hash join on the key pair,
     not a broadcast."""
-    docs = _t(spark, sf_dir, "documents")
-    g = _pos_ngrams(docs, SPAN_W)
-    # round 8: the window key is OUTPUT-INVISIBLE (only gram equality
-    # matters, and equal grams hash equal under any function), so the
-    # md5 + hex-substring + conv chain -- measured ~20% of this query's
-    # wall -- is swapped for two codegen'd xxhash64 calls.  The oracle
-    # keeps md5: outputs agree unless two DISTINCT grams collide on the
-    # full 128-bit pair (~N^2/2^128).  q_simhash's h_hi/h_lo stay md5 --
-    # its output VALUE is derived from the hash bits.
-    wk = g.select(
-        "doc_id", "pos",
-        F.xxhash64("gram").alias("h_hi"),
-        F.xxhash64(F.lit(1), F.col("gram")).alias("h_lo")) \
-        .localCheckpoint(eager=True)  # feeds the count agg AND the join
+    wk = _span_window_keys(_t(spark, sf_dir, "documents"))
     dup = (wk.groupBy("h_hi", "h_lo")
            .agg(F.countDistinct("doc_id").alias("n_docs"))
            .filter(F.col("n_docs") >= SPAN_MIN_DOCS))
@@ -3992,19 +3964,9 @@ def q_repeated_span_clean(spark, sf_dir):
     The index-filter lambda is the HOF slow path, but it evaluates only
     on rows whose interval list is non-null (the duplicated fraction)."""
     docs = _t(spark, sf_dir, "documents")
-    g = _pos_ngrams(docs, SPAN_W)
-    # round 8 (guide §2.4): wk feeds both the ownership agg and the loser
-    # match join; un-materialized, the positional n-gram explode + window
-    # hashing ran twice (6 document scans in the before plan).  The frame
-    # is (hash, doc_id, pos) ints only.  The window key is also swapped
-    # md5 -> two xxhash64 calls (same argument as q_repeated_spans: the
-    # key is output-invisible, equal grams stay equal, distinct grams
-    # collide only on a full 128-bit pair; measured ~20% of the wall).
-    wk = g.select(
-        "doc_id", "pos",
-        F.xxhash64("gram").alias("h_hi"),
-        F.xxhash64(F.lit(1), F.col("gram")).alias("h_lo")) \
-        .localCheckpoint(eager=True)
+    # (hash, doc_id, pos) ints only, feeding the ownership agg and the
+    # loser match join (guide §2.4)
+    wk = _span_window_keys(docs)
     dup = (wk.groupBy("h_hi", "h_lo")
            .agg(F.countDistinct("doc_id").alias("n_docs"),
                 F.min(F.struct("doc_id", "pos")).alias("own"))
@@ -4736,7 +4698,6 @@ def q_semantic_dedup(spark, sf_dir):
     import math
 
     import numpy as np
-    import pyarrow as pa
     emb = _t(spark, sf_dir, "embeddings")
     n = _embeddings_n_rows(emb, sf_dir)
     step = max(1, math.ceil(n / N_CELLS))
@@ -4753,26 +4714,22 @@ def q_semantic_dedup(spark, sf_dir):
     c_norm = np.sqrt(_np_seq_dot(c_mat, c_mat))
     bc = emb.sparkSession.sparkContext.broadcast((c_ids, c_mat, c_norm))
 
-    def assign(batches):
+    def assign(b):
         cids, cmat, cn = bc.value
-        for b in batches:
-            e = _np_embs(b.column("embedding"))
-            vn = np.sqrt(_np_seq_dot(e, e))
-            best = np.full(e.shape[0], np.iinfo(np.int64).min,
-                           dtype=np.int64)
-            cell = np.zeros(e.shape[0], dtype=np.int64)
-            for ci in range(len(cids)):  # ascending c_id: ties keep first
-                d = _np_seq_dot(e, np.broadcast_to(cmat[ci], e.shape))
-                micro = _round6_micro(d / (vn * cn[ci]))
-                upd = micro > best
-                best[upd] = micro[upd]
-                cell[upd] = cids[ci]
-            yield pa.RecordBatch.from_arrays(
-                [b.column("vec_id"), pa.array(cell, pa.int64())],
-                names=["vec_id", "cell"])
+        e = _np_embs(b.column("embedding"))
+        vn = np.sqrt(_np_seq_dot(e, e))
+        best = np.full(e.shape[0], np.iinfo(np.int64).min, dtype=np.int64)
+        cell = np.zeros(e.shape[0], dtype=np.int64)
+        for ci in range(len(cids)):  # ascending c_id: ties keep first
+            d = _np_seq_dot(e, np.broadcast_to(cmat[ci], e.shape))
+            micro = _round6_micro(d / (vn * cn[ci]))
+            upd = micro > best
+            best[upd] = micro[upd]
+            cell[upd] = cids[ci]
+        return None, [cell]
 
-    cells = emb.select("vec_id", "embedding").mapInArrow(
-        assign, "vec_id bigint, cell bigint").localCheckpoint(eager=True)
+    cells = doc_stage(emb, ("vec_id",), ["embedding"], "cell bigint",
+                      assign).localCheckpoint(eager=True)
     a = cells.select("cell", F.col("vec_id").alias("a_id"))
     bb = cells.select("cell", F.col("vec_id").alias("b_id"))
     pairs = (a.join(bb, "cell")
@@ -4814,7 +4771,7 @@ ORDER BY c.vec_id
 """
 
 
-# --- product quantization (round 7) -------------------------------------------
+# --- product quantization -----------------------------------------------------
 
 def _pq_subdist(x, c, j):
     """Expanded-form L2 distance between the subspace-j slices of x and c,
@@ -4832,10 +4789,10 @@ def _pq_codes(spark, sf_dir, local):
     convention, so DuckDB replays it bit for bit; `local` is
     _local_emb_table's result (see _emb_subset).
 
-    Round 8 (guide §4.2): the old shape crossJoined every vector with the
-    16-row codebook and evaluated PQ_M x 3 interpreted 8-dim folds PER PAIR
-    (384 boxed-lambda dot products per vector) under a groupBy argmin.
-    Now one numpy mapInArrow pass emits the raw |x|^2 - 2x.c + |c|^2
+    Guide §4.2: crossJoining every vector with the 16-row codebook
+    evaluates PQ_M x 3 interpreted 8-dim folds PER PAIR (384
+    boxed-lambda dot products per vector) under a groupBy argmin.
+    Instead one numpy pass emits the raw |x|^2 - 2x.c + |c|^2
     distances (same left-associated float64 fold order, so every double
     is bit-identical); the 6dp rounding, the (d, c_id) argmin -- an
     array_min over 16 structs, the same lexicographic min the groupBy
@@ -4856,35 +4813,31 @@ def _pq_codes(spark, sf_dir, local):
     c_ids, c_mat = _emb_subset(emb, local, lambda v: v % step == 0)
     nc = len(c_ids)
 
-    def fn(batches):
-        # |c_j|^2 per (centroid, subspace), sequential fold
-        cc = np.zeros((nc, m))
-        for j in range(m):
-            sl = c_mat[:, j * d_sub:(j + 1) * d_sub]
-            cc[:, j] = _np_seq_dot(sl, sl)
-        for b in batches:
-            e = _np_embs(b.column("embedding"))
-            n = e.shape[0]
-            dists = np.empty((n, m * nc))
-            for j in range(m):
-                xj = e[:, j * d_sub:(j + 1) * d_sub]
-                xx = _np_seq_dot(xj, xj)
-                for c in range(nc):
-                    xc = _np_seq_dot(
-                        xj, np.broadcast_to(c_mat[c, j * d_sub:
-                                                  (j + 1) * d_sub],
-                                            xj.shape))
-                    dists[:, j * nc + c] = (xx - 2 * xc) + cc[c, j]
-            off = np.arange(0, (n + 1) * m * nc, m * nc, dtype=np.int32)
-            yield pa.RecordBatch.from_arrays(
-                [b.column("vec_id"),
-                 pa.ListArray.from_arrays(
-                     pa.array(off, pa.int32()),
-                     pa.array(dists.reshape(-1), pa.float64()))],
-                names=["vec_id", "d"])
+    # |c_j|^2 per (centroid, subspace), sequential fold
+    cc = np.zeros((nc, m))
+    for j in range(m):
+        sl = c_mat[:, j * d_sub:(j + 1) * d_sub]
+        cc[:, j] = _np_seq_dot(sl, sl)
 
-    raw = emb.select("vec_id", "embedding").mapInArrow(
-        fn, "vec_id bigint, d array<double>")
+    def columns_of(b):
+        e = _np_embs(b.column("embedding"))
+        n = e.shape[0]
+        dists = np.empty((n, m * nc))
+        for j in range(m):
+            xj = e[:, j * d_sub:(j + 1) * d_sub]
+            xx = _np_seq_dot(xj, xj)
+            for c in range(nc):
+                xc = _np_seq_dot(
+                    xj, np.broadcast_to(c_mat[c, j * d_sub:(j + 1) * d_sub],
+                                        xj.shape))
+                dists[:, j * nc + c] = (xx - 2 * xc) + cc[c, j]
+        off = np.arange(0, (n + 1) * m * nc, m * nc, dtype=np.int32)
+        return None, [pa.ListArray.from_arrays(
+            pa.array(off, pa.int32()),
+            pa.array(dists.reshape(-1), pa.float64()))]
+
+    raw = doc_stage(emb, ("vec_id",), ["embedding"], "d array<double>",
+                    columns_of)
     mins = raw.select("vec_id", *[
         F.array_min(F.array(*[
             F.struct(
@@ -5005,7 +4958,7 @@ def _adc_topk(codes, book, emb, local):
     float64 matrix); the query side is cut from `local` (see
     _emb_subset).
 
-    Round 8: the LUTs (N_QUERIES x PQ_M x PQ_SUB_CENTS rounded distances --
+    The LUTs (N_QUERIES x PQ_M x PQ_SUB_CENTS rounded distances --
     KBs) are computed DRIVER-side from the two bounded tables (queries,
     codebook) with the same fold order and a bit-exact HALF_UP round
     (_java_round), and ride the scoring kernel's closure: the old
@@ -5014,7 +4967,6 @@ def _adc_topk(codes, book, emb, local):
     one numpy pass over the codes (guide §4.2).  The adist sum keeps the
     j-order left association; the 6dp round stays JVM-side."""
     import numpy as np
-    import pyarrow as pa
     m = PQ_M
     d_sub = _EMB_DIM // m
     q_ids, q_mat = _emb_subset(emb, local, lambda v: v < N_QUERIES)
@@ -5033,29 +4985,22 @@ def _adc_topk(codes, book, emb, local):
 
     code_cols = [f"code{j}" for j in range(m)]
 
-    def fn(batches):
-        for b in batches:
-            n = b.num_rows
-            vid = b.column("vec_id").to_numpy(zero_copy_only=False)
-            idx = [np.searchsorted(
-                c_ids, b.column(f"code{j}").to_numpy(zero_copy_only=False))
-                for j in range(m)]
-            out_q, out_v, out_d = [], [], []
-            for qi in range(nq):
-                acc = lut[qi, 0][idx[0]]
-                for j in range(1, m):
-                    acc = acc + lut[qi, j][idx[j]]
-                out_q.append(np.full(n, q_ids[qi], dtype=np.int64))
-                out_v.append(vid)
-                out_d.append(acc)
-            yield pa.RecordBatch.from_arrays(
-                [pa.array(np.concatenate(out_q), pa.int64()),
-                 pa.array(np.concatenate(out_v), pa.int64()),
-                 pa.array(np.concatenate(out_d), pa.float64())],
-                names=["q_id", "vec_id", "adist_raw"])
+    def columns_of(b):
+        n = b.num_rows
+        idx = [np.searchsorted(
+            c_ids, b.column(f"code{j}").to_numpy(zero_copy_only=False))
+            for j in range(m)]
+        out_d = []
+        for qi in range(nq):
+            acc = lut[qi, 0][idx[0]]
+            for j in range(1, m):
+                acc = acc + lut[qi, j][idx[j]]
+            out_d.append(acc)
+        return np.tile(np.arange(n), nq), [np.repeat(q_ids, n),
+                                           np.concatenate(out_d)]
 
-    scored = (codes.select("vec_id", *code_cols)
-              .mapInArrow(fn, "q_id bigint, vec_id bigint, adist_raw double")
+    scored = (doc_stage(codes, ("vec_id",), code_cols,
+                        "q_id bigint, adist_raw double", columns_of)
               .filter(F.col("vec_id") != F.col("q_id"))
               .select("q_id", "vec_id",
                       F.round(F.col("adist_raw"), 6).alias("adist")))
@@ -5152,7 +5097,7 @@ FROM ranked WHERE rnk <= {TOP_K} ORDER BY q_id, rnk
 ORACLE_ANN_PQ = _ann_pq_oracle_sql()
 
 
-# --- DSIR importance weights (round 7) ----------------------------------------
+# --- DSIR importance weights --------------------------------------------------
 
 def q_dsir_weights(spark, sf_dir):
     """Data Selection with Importance Resampling (Xie et al. 2023,
@@ -5187,9 +5132,9 @@ def q_dsir_weights(spark, sf_dir):
                 .cast("long") % n_buckets)
 
     a = float(DSIR_SMOOTHING)
-    # round 8 (guide §2.4): cnt feeds both the totals row and the model
+    # guide §2.4: cnt feeds both the totals row and the model
     # projection; un-materialized, the corpus-wide explode + per-word md5
-    # bucketing ran twice.  <= n_buckets rows.
+    # bucketing runs twice.  <= n_buckets rows.
     cnt = (base.select("lang", F.explode("ws").alias("w"))
            .select("lang", bucket(F.col("w")).alias("b"))
            .groupBy("b")
@@ -5260,7 +5205,7 @@ ORDER BY w.doc_id
 ORACLE_DSIR = _dsir_oracle_sql()
 
 
-# --- HyperLogLog cardinality sketch (round 7) ---------------------------------
+# --- HyperLogLog cardinality sketch -------------------------------------------
 
 def q_vocab_hll(spark, sf_dir):
     """Corpus vocabulary cardinality via a cross-engine-deterministic
@@ -5288,9 +5233,7 @@ def q_vocab_hll(spark, sf_dir):
     words = F.when(F.length(F.trim("text")) > 0,
                    F.split(F.lower(F.trim(F.col("text"))), r"\s+")
                    ).otherwise(F.array().cast("array<string>"))
-    md5 = F.md5(F.col("w"))
-    h_hi = F.conv(F.substring(md5, 1, 8), 16, 10).cast("long")
-    h_lo = F.conv(F.substring(md5, 9, 8), 16, 10).cast("long")
+    h_hi, h_lo = _md5_halves(F.col("w"))
     rho = F.when(h_hi == 0, F.lit(33)) \
         .otherwise(33 - F.length(F.bin(h_hi))).cast("int")
     regs = (docs.select(F.explode(words).alias("w"))
@@ -5355,7 +5298,7 @@ FROM agg
 ORACLE_VOCAB_HLL = _vocab_hll_oracle_sql()
 
 
-# --- train/valid/test split (round 7) -----------------------------------------
+# --- train/valid/test split ---------------------------------------------------
 
 def q_corpus_split(spark, sf_dir):
     """Deterministic stratified train/valid/test assignment: split =
@@ -5396,7 +5339,7 @@ GROUP BY 1, 2 ORDER BY lang, split
 """
 
 
-# --- count-min sketch heavy-hitter estimates (round 7) ------------------------
+# --- count-min sketch heavy-hitter estimates ----------------------------------
 
 def q_cms_word_freq(spark, sf_dir):
     """Count-min sketch word-frequency estimates (Cormode & Muthu 2005):
@@ -5483,7 +5426,7 @@ FROM probes p ORDER BY word
 ORACLE_CMS = _cms_oracle_sql()
 
 
-# --- IVFADC: coarse cells + compressed-domain scoring (round 7) ---------------
+# --- IVFADC: coarse cells + compressed-domain scoring -------------------------
 
 def q_ann_ivfadc_topk(spark, sf_dir):
     """IVFADC (Jegou et al. 2011 §IV): the full PQ serving system --
@@ -5592,7 +5535,7 @@ ORDER BY q_id, rnk
 ORACLE_ANN_IVFADC = _ann_ivfadc_oracle_sql()
 
 
-# --- deterministic quantile sketch (round 7) ----------------------------------
+# --- deterministic quantile sketch --------------------------------------------
 
 def q_token_quantiles(spark, sf_dir):
     """Per-doc token-count quantiles from a DETERMINISTIC HDR-style
@@ -5691,7 +5634,7 @@ ORDER BY q
 ORACLE_TOKEN_QUANTILES = _token_quantiles_oracle_sql()
 
 
-# --- RSS/Atom feed ingest (round 7) -------------------------------------------
+# --- RSS/Atom feed ingest -----------------------------------------------------
 
 def feed_entries(df):
     """Extract entries from the RSS 2.0 / Atom `feed` bodies -- the third
@@ -5784,7 +5727,7 @@ FROM documents ORDER BY host, url
 """
 
 
-# --- fuzzy decontamination (round 7) ------------------------------------------
+# --- fuzzy decontamination ----------------------------------------------------
 
 def q_decontaminate_fuzzy(spark, sf_dir):
     """Fuzzy train/eval decontamination: flag every TRAIN document whose

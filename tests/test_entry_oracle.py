@@ -118,6 +118,39 @@ def test_cc_paths_match_oracles(spark, ducks, monkeypatch, path, name):
     assert calls == {"star": 0, "driver": 0, path: 1}
 
 
+# every registered query that runs a numpy kernel of relational.py
+KERNEL_QUERIES = ["ann_cosine_topk", "embedding_neardup_lsh", "ann_lsh_topk",
+                  "ann_ivf_topk", "semantic_dedup", "pq_encode",
+                  "ann_pq_topk", "ann_ivfadc_topk"]
+
+
+@pytest.fixture
+def seven_row_batches(spark):
+    """Arrow batches of at most 7 rows for the test's duration: the
+    500-vector table reaches each kernel as ~72 batches, not one."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "7")
+    yield
+    spark.conf.set(key, old)
+
+
+@pytest.mark.parametrize("name,gate", [
+    *[(q, None) for q in KERNEL_QUERIES],
+    # past the broadcast gate the rerank runs _np_normed and _np_pair_dot
+    ("embedding_neardup_lsh", 0)])
+def test_kernels_match_oracles_across_batches(spark, ducks, monkeypatch,
+                                              seven_row_batches, name,
+                                              gate):
+    """Every numpy kernel yields the same rows when its input is split
+    into many Arrow batches: a kernel whose row indices or setup leaked
+    from one batch into the next would fail the oracle here."""
+    from closure_html_spark.spark import relational as R
+    if gate is not None:
+        monkeypatch.setattr(R, "_EMB_BCAST_MAX_BYTES", gate)
+    _assert_matches_oracle(spark, ducks, name)
+
+
 def test_entry_smoke(spark):
     df = entry_mod.entry(spark)
     rows = df.limit(5).collect()

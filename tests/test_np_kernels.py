@@ -1,6 +1,6 @@
-"""Round-8 numeric contracts: the numpy kernels that replaced the
-interpreted zip_with/aggregate folds must be BIT-identical to the JVM
-expressions they replaced (relational.py round-8 kernel note).  The
+"""Numeric contracts: the numpy kernels that stand in for the
+interpreted zip_with/aggregate folds must be BIT-identical to those JVM
+expressions (relational.py kernel note).  The
 query-level A/Bs and oracle replays pin whole results; these tests pin
 the three primitives directly so a future numpy/Spark upgrade that
 breaks exactness fails here with a readable diff."""

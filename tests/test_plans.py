@@ -53,10 +53,10 @@ def test_column_pruning_through_extraction(spark, tmp_path_factory):
 
 
 def test_ann_broadcasts_query_side(spark):
-    """Round 8: the bounded query side rides the _np_cent_sims kernel's
-    closure instead of a broadcast crossJoin -- the corpus streams
-    through ONE MapInArrow pass with no join of the embedding table at
-    all (the pre-r8 shape was BroadcastNestedLoopJoin)."""
+    """The bounded query side rides the _np_cent_sims kernel's closure
+    instead of a broadcast crossJoin -- the corpus streams through ONE
+    MapInArrow pass with no join of the embedding table at all (not a
+    BroadcastNestedLoopJoin)."""
     plan = plan_of(R.q_ann_cosine_topk(spark, SF))
     assert "MapInArrow" in plan
     assert "BroadcastNestedLoopJoin" not in plan
@@ -122,8 +122,8 @@ def test_minhash_est_pairs_plan(spark):
 def test_paragraph_clean_single_chunk_shuffle(spark):
     """q_paragraph_dedup_clean: exactly one window (the chunk-ownership
     min) and no Python -- and the ownership exchange is keyed on the
-    16-byte md5 hash with NO chunk-text column anywhere in the plan
-    (round-4 verdict wrong #4): text moves only on the docs side of the
+    16-byte md5 hash with NO chunk-text column anywhere in the plan:
+    text moves only on the docs side of the
     final doc_id join."""
     plan = plan_of(R.q_paragraph_dedup_clean(spark, SF))
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
@@ -134,8 +134,7 @@ def test_paragraph_clean_single_chunk_shuffle(spark):
 
 
 def test_corpus_clean_no_text_exchange(spark):
-    """corpus_clean_pipeline's dedup scale invariants (round-5 verdict
-    wrong #2 + round-6 ADVICE broadcast-OOM fix):
+    """corpus_clean_pipeline's dedup scale invariants:
 
     1. The ownership window exchange is keyed on the 16-byte md5 and
        carries ONLY (doc_id, h) -- main_text never rides the h-keyed

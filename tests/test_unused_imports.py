@@ -533,31 +533,21 @@ def test_package_binds_each_top_level_name_once():
     assert duplicate_top_level(_sources(ROOT), "closure_html_spark") == []
 
 
-# the one function of the package that may call mapInArrow: every
-# per-document Python stage runs through it
+# the one function of the package that may call mapInArrow or build a
+# RecordBatch: every Python stage, the numpy kernels included, runs
+# through it
 ARROW_STAGE = "spark.pipeline.doc_stage"
-# the other mapInArrow callers, each with its reason: numpy kernels that
-# build their columns from numpy vectors and matrices, not from
-# per-document Python values
-NUMPY_KERNELS = {
-    "spark.relational._np_pair_dot": "row-pair dots of two embedding "
-                                     "columns, one float64 vector out",
-    "spark.relational._np_pair_dot_bcast": "pair dots and norms gathered "
-                                           "from a broadcast matrix",
-    "spark.relational._np_cent_sims": "vector x centroid cosines, "
-                                      "flattened with np.repeat/np.tile",
-    "spark.relational._np_normed": "per-vector norms, the embedding "
-                                   "column passed through",
-    "spark.relational._rhp_bands_np": "hyperplane sign bits packed per "
-                                      "band, flattened with "
-                                      "np.repeat/np.tile",
-    "spark.relational.q_semantic_dedup": "nearest-centroid cell per "
-                                         "vector from numpy sims",
-    "spark.relational._pq_codes": "subspace distance matrix reshaped "
-                                  "into one list column",
-    "spark.relational._adc_topk": "lookup-table distances per query, "
-                                  "concatenated numpy vectors",
-}
+
+
+def _call_name(func) -> str:
+    """A called attribute's name, with `RecordBatch.` kept in front of
+    from_arrays so that ListArray.from_arrays and the like are not
+    counted as batch builds."""
+    recv = func.value
+    if func.attr == "from_arrays" and "RecordBatch" in (
+            getattr(recv, "attr", None), getattr(recv, "id", None)):
+        return "RecordBatch.from_arrays"
+    return func.attr
 
 
 def stage_calls(sources: dict[str, str], package: str,
@@ -565,9 +555,10 @@ def stage_calls(sources: dict[str, str], package: str,
     """How the top-level defs of the modules under `package/` in
     `sources` (relative path -> text) run Python over Arrow batches, as
     `module.f: ...` lines, module relative to the package: a def that
-    calls mapInPandas, a def outside `allowed` that calls mapInArrow, and
-    an `allowed` def that no longer calls it.  A call anywhere in a def's
-    body, nested functions included, counts."""
+    calls mapInPandas, a def outside `allowed` that calls mapInArrow or
+    RecordBatch.from_arrays, and an `allowed` def that no longer calls
+    mapInArrow.  A call anywhere in a def's body, nested functions
+    included, counts."""
     callers = collections.defaultdict(set)  # method -> qualified defs
     for rel, text in sources.items():
         module = _module_of(rel, package)
@@ -579,12 +570,13 @@ def stage_calls(sources: dict[str, str], package: str,
             for n in ast.walk(top):
                 if isinstance(n, ast.Call) \
                         and isinstance(n.func, ast.Attribute):
-                    callers[n.func.attr].add(
+                    callers[_call_name(n.func)].add(
                         f"{module}.{top.name}".lstrip("."))
     return sorted(
         [f"{f}: calls mapInPandas" for f in callers["mapInPandas"]]
-        + [f"{f}: calls mapInArrow" for f in callers["mapInArrow"]
-           - allowed]
+        + [f"{f}: calls {m}"
+           for m in ("mapInArrow", "RecordBatch.from_arrays")
+           for f in callers[m] - allowed]
         + [f"{f}: no longer calls mapInArrow"
            for f in allowed - callers["mapInArrow"]])
 
@@ -599,17 +591,28 @@ def test_stage_checker_flags_stray_arrow_stages():
                      "    return df.select('x').mapInArrow(fn, 'x int')\n"
                      "def pandas(df):\n"
                      "    return df.mapInPandas(lambda b: b, 'x int')\n"
-                     "def gone(df):\n    return df\n"),
+                     "def gone(df):\n    return df\n"
+                     "def batch(cols):\n"
+                     "    pa.ListArray.from_arrays(cols[0], cols[1])\n"
+                     "    return pa.RecordBatch.from_arrays(cols, ['x'])\n"
+                     "def bare(cols):\n"
+                     "    return RecordBatch.from_arrays(cols, ['x'])\n"
+                     "def lists(cols):\n"
+                     "    return pa.ListArray.from_arrays(*cols)\n"),
         "tool.py": "def f(df):\n    return df.mapInPandas(g, 'x int')\n",
     }
     assert stage_calls(sources, "pkg", {"run.stage", "a.gone"}) == [
+        "a.bare: calls RecordBatch.from_arrays",
+        "a.batch: calls RecordBatch.from_arrays",
         "a.gone: no longer calls mapInArrow",
         "a.pandas: calls mapInPandas",
         "a.shell: calls mapInArrow"]
     assert stage_calls(sources, "pkg", {"run.stage", "a.shell"}) == [
+        "a.bare: calls RecordBatch.from_arrays",
+        "a.batch: calls RecordBatch.from_arrays",
         "a.pandas: calls mapInPandas"]
 
 
 def test_python_stages_run_through_doc_stage():
     assert stage_calls(_sources(ROOT), "closure_html_spark",
-                       {ARROW_STAGE, *NUMPY_KERNELS}) == []
+                       {ARROW_STAGE}) == []
