@@ -82,14 +82,14 @@ def _warm_batches(batches):
     # rest to pay imports and the DTD load inside the timed window
     import time as _t
 
-    import pandas as _pd
+    import pyarrow as pa
 
     from closure_html_spark.dtd import load_dtd
     load_dtd()
     _t.sleep(1.5)
     for _ in batches:
         pass
-    yield _pd.DataFrame({"n": [1]})
+    yield pa.RecordBatch.from_pydict({"n": pa.array([1], pa.int32())})
 
 
 def _session(name: str, n_threads: int):
@@ -99,7 +99,7 @@ def _session(name: str, n_threads: int):
                       master=f"local[{n_threads}]",
                       shuffle_partitions=max(n_threads, 8))
     spark.range(n_threads).repartition(n_threads) \
-        .mapInPandas(_warm_batches, "n int").agg(F.count(F.lit(1))).collect()
+        .mapInArrow(_warm_batches, "n int").agg(F.count(F.lit(1))).collect()
     pages = pages_from_documents(spark, SF_DIR, tile=TILE, variants=4,
                                  heavy=HEAVY)
     return spark, pages
@@ -170,8 +170,9 @@ def run_skew_leg(n_threads: int) -> dict:
 
 def _subprocess(flag: str, n: int) -> dict:
     """Runs `bench.py <flag> <n>` in a fresh Python + JVM: reusing one
-    JVM across stop()/getOrCreate() cycles slows later mapInPandas legs
-    3-5x (accumulated heap/codegen state)."""
+    JVM across stop()/getOrCreate() cycles slowed later extract legs
+    3-5x (accumulated heap/codegen state; measured when the extract
+    stage was a mapInPandas)."""
     out = subprocess.run(
         [sys.executable, os.path.abspath(__file__), flag, str(n)],
         capture_output=True, text=True, timeout=580,

@@ -9,11 +9,14 @@ risks").
 
 Worker model: Spark forks each Python worker from one daemon process per
 executor.  The session names closure_html_spark.spark.daemon as that
-daemon, which imports pyarrow, pandas, the parse stage and the DTD once,
-freezes them out of the garbage collector, and then runs PySpark's own
-daemon loop.  A worker therefore starts with the parse stage's imports
-done, and shares their pages with the daemon and its sibling workers
-copy-on-write instead of holding a private copy each.
+daemon, which imports pyarrow, the parse stage and the DTD once, freezes
+them out of the garbage collector, and then runs PySpark's own daemon
+loop.  A worker therefore starts with the parse stage's imports done,
+and shares their pages with the daemon and its sibling workers
+copy-on-write instead of holding a private copy each.  No worker of this
+session can import pandas, which the daemon makes unimportable: every
+Python stage is a mapInArrow, and a mapInPandas or pandas UDF fails in
+the worker.  The driver's own pandas (toPandas) is not affected.
 """
 
 from __future__ import annotations
@@ -58,7 +61,8 @@ def get_spark(app: str, master: str,
     the builder: a later spark.conf.set would not reach that cache.
 
     Python workers fork from DAEMON_MODULE (spark.python.daemon.module),
-    which has already imported the parse stage and loaded the DTD.  A
+    which has already imported the parse stage and loaded the DTD, and
+    which keeps pandas out of every worker.  A
     worker puts the --py-files archives on its path only when a task
     arrives, after the fork, so the package must be importable from the
     daemon's working directory or PYTHONPATH: a daemon module found only

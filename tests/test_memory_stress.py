@@ -8,7 +8,7 @@ shape) through a small worker pool and asserts completion, oversize
 accounting, and that per-worker peak RSS obeys the sizing rule
 documented in SCALE.md:
 
-    worker_peak ~= interpreter base (~150 MB with Arrow)
+    worker_peak ~= interpreter base (~100 MB with Arrow, no pandas)
                  + A x MAX_DOC_BYTES   (ONE doc's DOM at a time;
                    A ~= 19 measured for tag-dense soup, ~2 for
                    pcdata floods)
@@ -75,7 +75,9 @@ def test_worker_peak_rss_obeys_sizing_rule(spark, monkeypatch):
     base + A x cap + B x byte cap + 2 x R with the measured A=19, B=25
     and 50% slack -- the SCALE.md rule scaled to this test's 2 MiB
     per-doc cap, the session's 1 MiB byte cap and R = 2 MiB pages
-    (217 MB, 326 MB with the slack).
+    (167 MB, 250 MB with the slack).  The probe is a mapInArrow and
+    imports nothing the worker does not already hold before it reads
+    its high-water mark.
     A doc whose DOM exceeded the rule (e.g. a per-batch leak, or all
     batch docs' DOMs alive at once) would blow well past it."""
     pages = _pages(spark, 16, CAP - 4096).repartition(4)
@@ -89,23 +91,23 @@ def test_worker_peak_rss_obeys_sizing_rule(spark, monkeypatch):
         import os
         import resource
 
-        import pandas as _pd
+        import pyarrow as pa
         for _ in batches:
             pass
-        yield _pd.DataFrame({
+        yield pa.RecordBatch.from_pydict({
             "pid": [os.getpid()],
             "rss_mb": [resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
                        / 1024.0]})
 
     peaks = (spark.range(4).repartition(4)
-             .mapInPandas(probe, "pid long, rss_mb double").collect())
+             .mapInArrow(probe, "pid long, rss_mb double").collect())
     warm = [r.rss_mb for r in peaks if r.rss_mb > 100.0]
     if not warm:
         pytest.skip("worker pool was recycled; no warm worker probed")
     mib = 1 << 20
     byte_cap = int(ARROW_BATCH_CAPS[
         "spark.sql.execution.arrow.maxBytesPerBatch"])
-    budget_mb = 150 + 19 * CAP / mib + 25 * byte_cap / mib + 2 * CAP / mib
+    budget_mb = 100 + 19 * CAP / mib + 25 * byte_cap / mib + 2 * CAP / mib
     assert max(warm) < budget_mb * 1.5, \
         f"worker peak {max(warm):.0f} MB exceeds sizing rule " \
         f"({budget_mb:.0f} MB + 50% slack)"
