@@ -1,7 +1,8 @@
 """Runtime DTD tables.
 
-Loads the compiled dtd.json artifact (produced by compiler.py from the
-HTML-4.0 Frameset DTD chain) into plain dicts.  One instance per Python
+Loads the compiled dtd.json artifact (produced by tools/dtd_compiler.py
+from the HTML-4.0 Frameset DTD chain; the compiler is build tooling and
+does not ship) into plain dicts.  One instance per Python
 worker process, cached at module level -- functionally equivalent to a
 Spark broadcast variable for this small static table, but simpler because
 the artifact ships inside the package (--py-files).

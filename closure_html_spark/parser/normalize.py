@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import re
 
-from ..dtd import PCDATA, TOP, Dtd
+from ..dtd import Dtd
 
 
 def find_slot_value_pair(dtd: Dtd, tag: str, value: str):
@@ -136,38 +136,3 @@ def build_start_hit(dtd: Dtd, m) -> tuple:
                     wlist.append((3, f"The '<{name}>' tag has no slot which "
                                      f"could take the '{aname}' keyword."))
     return (("S", name, mungled), tuple(wlist))
-
-
-def normalized_tokens(tokenizer, dtd: Dtd):
-    """Generator over normalized tokens, ending with ("E", "%top")."""
-    warn = tokenizer.warn
-    for tok in tokenizer.tokens():
-        kind = tok[0]
-        if kind == "pcdata":
-            yield ("S", PCDATA, tok[1])
-        elif kind == "start" or kind == "empty":
-            if kind == "empty":
-                # read-token* :empty-tag (sgml-parse.lisp:941)
-                warn(2, "Oops -- there is an empty tag; but this is only HTML?!")
-            name = tok[1]
-            if dtd.tag_exists(name):
-                yield ("S", name, mungle_attlist(dtd, name, tok[2], warn))
-            else:
-                warn(4, f"There is no such thing as <{name}> -- ignored.")
-        elif kind == "end":
-            name = tok[1]
-            if dtd.tag_exists(name):
-                yield ("E", name)
-            else:
-                warn(4, f"There is no such thing as </{name}> -- ignored.")
-        elif kind == "comment":
-            yield ("C", tok[1])
-        elif kind == "pi":
-            # read-token* :experimental-tag (sgml-parse.lisp:952)
-            warn(2, f"Ignoreing processing instruction tag: '{tok[1]}'")
-            continue
-        elif kind == "define":
-            continue
-        elif kind == "eof":
-            yield ("E", TOP)
-            return

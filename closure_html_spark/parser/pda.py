@@ -26,9 +26,9 @@ cyclic collector to walk.  The post-mortem keeps the order.
 One engine ships: sgml_parse's fused loop, which cuts the text into tag
 and text pieces with one C-side regex split per window, resolves tag
 pieces by a whole-piece per-DTD memo and runs the exact char machine
-only on pieces no fast form takes.  _sgml_parse_ref, the direct
-transcription of the reference loop over the char machine, is the twin
-the differential tests pin it against.
+only on pieces no fast form takes.  The differential tests pin it
+against _sgml_parse_ref in tests/references.py, the direct transcription
+of the reference loop over the char machine.
 """
 
 from __future__ import annotations
@@ -40,7 +40,6 @@ from .normalize import (
     build_end_hit,
     build_start_hit,
     mungle_attlist,
-    normalized_tokens,
 )
 from .tokenizer import (
     _FAST_END_TAG,
@@ -270,7 +269,7 @@ def sgml_parse(dtd: Dtd, text: str) -> Doc:
     else runs the exact char machine from the piece's offset until the
     cursor is back on a piece boundary.  The differential fuzz and golden
     piece-boundary cases pin it serialization- and warning-identical to
-    the reference loop, _sgml_parse_ref, which tests call directly."""
+    the reference loop, _sgml_parse_ref in tests/references.py."""
     tk = Tokenizer(text, dtd.entities)
     src = text
     n = len(src)
@@ -538,119 +537,6 @@ def sgml_parse(dtd: Dtd, text: str) -> Doc:
 
     while s >= 0:  # nodes still open at EOF or on a break
         d_end[s] = nn
-        s = d_parent[s]
-    doc.warnings = tk.warnings
-    doc.root = root
-    return doc
-
-
-def _sgml_parse_ref(dtd: Dtd, text: str, tokenizer: Tokenizer) -> Doc:
-    """Direct transcription of the reference main loop (sgml-parse.lisp:
-    1025-1106); kept as the differential-testing twin of the fused engine."""
-    toks = list(normalized_tokens(tokenizer, dtd))
-    tk = tokenizer
-    n_toks = len(toks)
-    ti = 0
-
-    doc = Doc()
-    root = doc.add("%root", None, None, -1)
-    s = root
-
-    # local bindings for the hot loop (doc.add inlined below)
-    d_name = doc.name
-    d_attrs = doc.attrs
-    d_text = doc.text
-    d_parent = doc.parent
-    d_end = doc.end
-
-    stack = [_stag(TOP)]
-    ein: list = []
-    include_map = dtd.include
-    roots = dtd.roots
-    empty = dtd.empty
-    resolve = dtd.resolve
-
-    # runaway guard: transitions that never consume input are bounded
-    budget = 10 * len(text) + _MAX_STEPS_SLACK
-
-    while True:
-        budget -= 1
-        if budget < 0:
-            tk.warn(5, "parser step budget exceeded -- document truncated")
-            break
-        while len(ein) < 2 and ti < n_toks:
-            ein.append(toks[ti])
-            ti += 1
-
-        # ---- transition (sgml-parse.lisp:1111-1172), applied inline ----
-        top = stack[-1] if stack else None
-        if top is not None and top[1] == PCDATA:
-            stack.pop()
-            d_end[s] = len(d_name)
-            s = d_parent[s]
-            continue
-        if not ein:
-            break  # accept (stack empty) or error; either way we are done
-        see = ein[0]
-        kind = see[0]
-        if kind == "C":
-            del ein[0]
-            if top is not None and top[1] in PRESERVES_COMMENTS:
-                d_name.append(PCDATA)
-                d_attrs.append(None)
-                d_text.append(see[1])
-                d_parent.append(s)
-                d_end.append(len(d_name))
-            continue
-        if kind == "E" and top is not None and top[1] == see[1]:
-            stack.pop()
-            del ein[0]
-            d_end[s] = len(d_name)
-            s = d_parent[s]
-            continue
-        top_inc = None
-        if top is not None:
-            tn = top[1]
-            top_inc = roots if tn == TOP else include_map[tn]
-        if kind == "S" and top is not None and see[1] in top_inc:
-            del ein[0]
-            nid = len(d_name)
-            if see[1] in empty:
-                if see[1] == PCDATA:
-                    d_name.append(PCDATA)
-                    d_attrs.append(None)
-                    d_text.append(see[2])
-                else:
-                    d_name.append(see[1])
-                    d_attrs.append(see[2])
-                    d_text.append(None)
-                d_parent.append(s)
-                d_end.append(nid + 1)
-            else:
-                stack.append(see)
-                d_name.append(see[1])
-                d_attrs.append(see[2])
-                d_text.append(None)
-                d_parent.append(s)
-                d_end.append(0)
-                s = nid
-            continue
-        if (kind == "S" and see[1] == PCDATA and top is not None
-                and see[2].strip(" \t\n\r\x0c") == ""
-                and PCDATA not in top_inc):
-            del ein[0]  # ignorable whitespace (:1157-1161)
-            continue
-        if not stack:
-            tk.warn(5, f"Oops empty stack in TRANSITION on {see!r}.")
-            break
-        x = resolve.get((top[1], kind, see[1]))
-        if x is not None:
-            ein.insert(0, _stag(x[1]) if x[0] == "S" else _etag(x[1]))
-            continue
-        ein = _heuristic(dtd, tk, top, ein)
-
-    while s >= 0:  # nodes still open at EOF or on a break
-        d_end[s] = len(d_name)
         s = d_parent[s]
     doc.warnings = tk.warnings
     doc.root = root

@@ -2695,9 +2695,9 @@ def q_winnow_fingerprint(spark, sf_dir):
     relational form explodes a row per character position and
     shuffled them through Window.partitionBy(doc_id), ~10^14 rows of
     shuffle at 100 TB of text.  That relational formulation survives as
-    the definition: q_winnow_fingerprint_expr (in-Spark SQL twin, diffed
-    in tests) and ORACLE_WINNOW (DuckDB) replay the identical portable
-    hash.  The trailing orderBy exists for the deterministic oracle
+    the definition: q_winnow_fingerprint_expr (the in-Spark SQL twin in
+    tests/references.py, diffed in tests/test_plans.py) and ORACLE_WINNOW
+    (DuckDB) replay the identical portable hash.  The trailing orderBy exists for the deterministic oracle
     compare; the fingerprint computation itself has no exchange."""
     from .winnow import winnow_fingerprints
     docs = _t(spark, sf_dir, "documents")
@@ -2713,30 +2713,6 @@ def _winnow_hash_expr(pos: str) -> str:
         expr = (f"(({expr}) * 257 + "
                 f"ascii(substring(text, {pos} + {j}, 1))) % 1000000007")
     return expr
-
-
-def q_winnow_fingerprint_expr(spark, sf_dir):
-    """The relational formulation of q_winnow_fingerprint (explode one row
-    per char position + window min): kept as the executable DEFINITION the
-    Arrow kernel is differentially tested against, not as the scale path."""
-    docs = _t(spark, sf_dir, "documents")
-    grams = (docs
-             .select("doc_id", "text",
-                     F.explode(F.sequence(F.lit(1),
-                                          F.length("text") - (WINNOW_K - 1)))
-                      .alias("pos"))
-             .filter(F.length("text") >= WINNOW_K)
-             .select("doc_id", "pos",
-                     F.expr(_winnow_hash_expr("pos")).alias("h")))
-    win = Window.partitionBy("doc_id").orderBy("pos") \
-                .rowsBetween(0, WINNOW_W - 1)
-    fps = (grams.withColumn("wmin", F.min("h").over(win))
-           .select("doc_id", F.col("wmin").alias("fp"))
-           .distinct())
-    return (fps.groupBy("doc_id")
-            .agg(F.count(F.lit(1)).alias("n_fps"),
-                 F.min("fp").alias("min_fp"))
-            .orderBy("doc_id"))
 
 
 def q_neardup_clusters(spark, sf_dir):

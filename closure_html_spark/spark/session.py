@@ -81,8 +81,8 @@ def get_spark(app: str, master: str,
         # stream per thread that means GC storms
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
         # G1's concurrent GC threads contend with the Python workers (one
-        # per thread) for cores and halve mapInPandas throughput at full
-        # occupancy (measured at local[32]);
+        # per thread) for cores and halved the Python stages' throughput
+        # at full occupancy (measured at local[32]);
         # throughput-oriented ParallelGC wins for this batch workload
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")

@@ -8,7 +8,7 @@ engine-side interchange (lineage.py); JSONL is the boundary format.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -32,17 +32,6 @@ def write_jsonl_sharded(df: DataFrame, path: str, n_shards: int,
     (df.select(shard.alias("shard"), payload.alias("value"))
      .repartition("shard")
      .write.mode("overwrite").partitionBy("shard").text(path))
-
-
-def read_jsonl_sharded(spark: SparkSession, path: str,
-                       schema: str) -> DataFrame:
-    """Read a write_jsonl_sharded layout back: shard from the directory
-    name, fields from the JSON lines."""
-    raw = spark.read.text(f"{path}/shard=*")
-    shard = F.regexp_extract(F.input_file_name(), r"shard=(\d+)", 1)
-    return (raw.select(F.from_json("value", schema).alias("r"),
-                       shard.cast("long").alias("shard"))
-            .select("r.*", "shard"))
 
 
 def write_wet_sharded(df: DataFrame, path: str, n_shards: int,

@@ -1,8 +1,8 @@
 """WARC ingest as a Spark stage + deterministic warc-record synthesis.
 
 warc_records_to_pages turns a `record binary` column (one WARC record per
-row -- what a .warc.gz member splitter or split_warc_file emits) into the
-standard pages shape (url, warc_ts, html, content_type), which feeds
+row -- what a .warc.gz member splitter emits) into the standard pages
+shape (url, warc_ts, html, content_type), which feeds
 pipeline.extract_pages directly; its existing `content_type` handling
 seeds the charset decoder from the HTTP header, so a latin-1 body with no
 <meta> tag decodes correctly end-to-end.

@@ -12,8 +12,8 @@ The hash is an engine-portable rolling polynomial over Unicode code points
 (h = fold (h*257 + cp) mod 1e9+7), so the relational formulation survives
 as two replays of the same definition: the DuckDB oracle
 (relational.ORACLE_WINNOW) and an in-Spark SQL twin
-(relational.q_winnow_fingerprint_expr) that the tests diff against this
-kernel row-for-row.
+(q_winnow_fingerprint_expr in tests/references.py) that the tests diff
+against this kernel row-for-row.
 """
 
 from __future__ import annotations

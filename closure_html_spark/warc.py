@@ -113,66 +113,3 @@ def parse_warc_record(record: bytes) -> dict:
         html = _dechunk(html)
     return {**out, "http_status": status,
             "content_type": hh.get("content-type"), "html": html}
-
-
-def _record_end_by_length(data: bytes, j: int) -> int | None:
-    """Exclusive end index of the payload of the record whose WARC/
-    magic sits at j, derived from its Content-Length header; None when
-    the headers are truncated or the length is absent/broken/past EOF
-    (the caller then falls back to magic resync)."""
-    m = _CRLF2.search(data, j)
-    if not m:
-        return None
-    head = data[j:m.start()]
-    first_nl = head.find(b"\n")
-    headers = _parse_headers(head[first_nl + 1:] if first_nl >= 0 else b"")
-    try:
-        clen = int(headers.get("content-length", ""))
-    except ValueError:
-        return None
-    end = m.end() + clen
-    if clen < 0 or end > len(data):
-        return None
-    return end
-
-
-def split_warc_file(data: bytes) -> list[bytes]:
-    """Split a (decompressed) .warc file into record slices.  Records
-    are walked by their Content-Length header first (ISO 28500's own
-    framing -- a payload containing blank lines or even an embedded
-    "WARC/" magic cannot break the split); magic resync on the next
-    blank-line + WARC/ boundary is the fallback when a length is
-    absent, corrupt, or does not land on a record boundary, so one bad
-    length cannot swallow the rest of the file."""
-    out = []
-    i = 0
-    n = len(data)
-    while i < n:
-        j = data.find(b"WARC/", i)
-        if j < 0:
-            break
-        end = _record_end_by_length(data, j)
-        if end is not None:
-            # consume the record-terminating blank lines (two CRLFs per
-            # ISO 28500; tolerate bare LFs and sink-added newlines)
-            k = end
-            while k < n and data[k] in (0x0D, 0x0A):
-                k += 1
-            if k == n or data.startswith(b"WARC/", k):
-                out.append(data[j:k])
-                i = k
-                continue
-            # length did not land on a record boundary: corrupt length,
-            # fall through to magic resync
-        k = data.find(b"\r\n\r\nWARC/", j)
-        if k < 0:
-            k2 = data.find(b"\n\nWARC/", j)
-            if k2 < 0:
-                out.append(data[j:])
-                break
-            out.append(data[j:k2 + 2])
-            i = k2 + 2
-            continue
-        out.append(data[j:k + 4])
-        i = k + 4
-    return out

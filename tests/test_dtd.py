@@ -7,7 +7,10 @@ Expected values read off the DTD sources:
   FORM -(FORM)
 plus resolve-table entries driving the classic implicit closures."""
 
-from closure_html_spark.dtd import load_dtd
+import hashlib
+from importlib.resources import files
+
+from closure_html_spark.dtd import DTD_CATALOG, load_dtd
 
 DTD = load_dtd()
 
@@ -74,3 +77,25 @@ def test_eqv_classes():
     assert not DTD.eqv_eq("P", "TABLE")
     # TH and TD have identical content model and parents
     assert DTD.eqv_eq("TH", "TD")
+
+
+# sha256 of the committed DTD artifacts, the runtime's only DTD source;
+# tools/dtd_compiler.py wrote them and tests/test_dtd_compiler.py
+# re-derives their tables
+DTD_SHA256 = {
+    "dtd.json":
+        "6f5a376a4b52ce0b0bde8ec5ce66c23885d60251743dd536090dad3e21318ca6",
+    "dtd_html40_strict.json":
+        "51548e7ff30503da3550470d2d449c47f2d73b82708fbb9965e7e74f55ba5ffc",
+    "dtd_html40_transitional.json":
+        "8b64ef6403cdcb9bd28cb6612dd78a5c41a9531d5decb57dbc639a51b56fac54",
+    "dtd_netscape_bookmark.json":
+        "99d70880e9ef3cb26b5df553182a1ff8bd27f1d04c9beb697a56eb2865bb2af1",
+}
+
+
+def test_dtd_artifacts_pinned():
+    assert sorted(DTD_CATALOG.values()) == sorted(DTD_SHA256)
+    pkg = files("closure_html_spark.dtd")
+    assert {f: hashlib.sha256(pkg.joinpath(f).read_bytes()).hexdigest()
+            for f in DTD_SHA256} == DTD_SHA256

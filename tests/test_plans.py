@@ -7,6 +7,7 @@ import pytest
 
 from closure_html_spark.spark import relational as R
 from closure_html_spark.spark.pipeline import extract_pages
+from references import q_winnow_fingerprint_expr
 
 SF = "/root/testdata/sf0.001"
 
@@ -207,8 +208,7 @@ def test_winnow_kernel_matches_relational_definition(spark):
     executable definition) row-for-row, truncated trailing windows and
     all."""
     fast = {tuple(r) for r in R.q_winnow_fingerprint(spark, SF).collect()}
-    ref = {tuple(r)
-           for r in R.q_winnow_fingerprint_expr(spark, SF).collect()}
+    ref = {tuple(r) for r in q_winnow_fingerprint_expr(spark, SF).collect()}
     assert fast == ref
 
 

@@ -7,8 +7,8 @@ import json
 from pyspark.sql import functions as F
 
 from closure_html_spark.spark import relational as R
-from closure_html_spark.spark.sinks import read_jsonl_sharded, \
-    write_jsonl_sharded
+from closure_html_spark.spark.sinks import write_jsonl_sharded
+from references import read_jsonl_sharded, split_warc_file
 
 SF = "/root/testdata/sf0.001"
 
@@ -78,7 +78,7 @@ def test_wet_sink_roundtrip(spark, tmp_path):
     exact utf-8 payload, and shard ownership is the shared md5 hash."""
     import glob
     from closure_html_spark.spark.sinks import write_wet_sharded
-    from closure_html_spark.warc import parse_warc_record, split_warc_file
+    from closure_html_spark.warc import parse_warc_record
     docs = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .selectExpr("doc_id",
                         "'https://wet.example/p' || doc_id AS url",

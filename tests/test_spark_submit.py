@@ -71,7 +71,8 @@ def test_spark_submit_pyfiles(tmp_path):
 
     # the WET export landed and re-parses through the repo's own grammar
     assert summary["exported_wet"] == str(tmp_path / "wet")
-    from closure_html_spark.warc import parse_warc_record, split_warc_file
+    from closure_html_spark.warc import parse_warc_record
+    from references import split_warc_file
     n_rec = 0
     for f in (tmp_path / "wet").glob("shard=*/part-*"):
         for rec in split_warc_file(f.read_bytes()):

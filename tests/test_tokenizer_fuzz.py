@@ -13,13 +13,13 @@ import pytest
 from closure_html_spark.dtd import Dtd, load_dtd
 from closure_html_spark.parser import pda
 from closure_html_spark.parser.pda import (
-    _sgml_parse_ref,
     parse_html,
     post_mortem_fix_top_level,
     sgml_parse,
 )
 from closure_html_spark.parser.tokenizer import Tokenizer
 from closure_html_spark.serialize import serialize_doc
+from references import _sgml_parse_ref
 
 DTD = load_dtd()
 

@@ -17,12 +17,16 @@ value belongs in a module constant (a test patches the constant) or the
 parameter is required.  The read check covers every top-level def, class
 and assigned name of the package, private ones included: code outside
 `tests/` must read it, or it is on the exemption list with a reason.
-Both checks match by name, which the one-binding-per-name check makes
+The read check resolves each read to the module it reads from (the
+module's own file, an import from it, or an attribute of a name bound
+to it), so a same-named name elsewhere keeps nothing alive.  The knob
+check matches by name, which the one-binding-per-name check makes
 unambiguous inside the package."""
 
 import ast
 import collections
 import pathlib
+import re
 
 import closure_html_spark
 
@@ -362,10 +366,10 @@ def test_knob_exemptions_are_still_knobs():
 
 # top-level names of the package that no code outside tests/ reads and
 # that stay, keyed by module path relative to the package, each with its
-# reason
+# reason.  Only one kind of reason holds: a closure-html API reproduction
+# that COVERAGE.md maps to a reference function.  A reference that tests
+# compare the program against lives in tests/references.py instead.
 UNREAD_EXEMPT = {
-    # closure-html API reproductions that COVERAGE.md maps to reference
-    # functions
     "serialize.doc_to_lhtml": "lhtml-builder and ppt; the golden tests' "
                               "format",
     "serialize.lhtml_to_doc": "serialize-lhtml's input direction, "
@@ -380,16 +384,16 @@ UNREAD_EXEMPT = {
     "parser.normalize.canon_value": "canon-value, which the reference "
                                     "defines and never calls",
     "parser.pda.check_saneness": "check-saneness",
-    # references that tests compare the program against
-    "parser.pda._sgml_parse_ref": "the char-machine twin of sgml_parse "
-                                  "that the tokenizer fuzz pin replays",
-    "spark.relational.q_winnow_fingerprint_expr": "the relational "
-        "definition q_winnow_fingerprint's numpy kernel is checked against",
-    "warc.split_warc_file": "the WARC reader that checks the WET sink and "
-                            "the --py-files job's output",
-    "spark.sinks.read_jsonl_sharded": "the reader that checks the JSONL "
-                                      "sink",
 }
+
+
+def test_unread_exemptions_are_coverage_mapped():
+    """An exemption is a reproduction of a closure-html function, so
+    COVERAGE.md, which maps each reference function to ours, names it."""
+    coverage = (ROOT / "COVERAGE.md").read_text()
+    assert [key for key in UNREAD_EXEMPT
+            if not re.search(r"(?<!\w)%s(?!\w)" % key.rsplit(".", 1)[1],
+                             coverage)] == []
 
 
 def _bound_names(top) -> list[str]:
@@ -408,45 +412,119 @@ def _bound_names(top) -> list[str]:
     return [n for n in names if not (n.startswith("__") and n.endswith("__"))]
 
 
+def _import_source(node: ast.ImportFrom, rel: str, package: str) -> str | None:
+    """The module, relative to `package`, that the `from ... import` in
+    file `rel` reads from: relative imports resolved against the file's
+    own package at any depth, absolute ones by prefix; None for a module
+    outside the package."""
+    if node.level == 0:
+        name = node.module or ""
+        if name != package and not name.startswith(package + "."):
+            return None
+        return name[len(package) + 1:]
+    module = _module_of(rel, package)
+    if module is None:
+        return None
+    parts = module.split(".") if module else []
+    if not rel.endswith("/__init__.py"):
+        parts = parts[:-1]  # a plain module's package is its parent
+    if node.level - 1 > len(parts):
+        return None
+    parts = parts[:len(parts) - (node.level - 1)]
+    return ".".join(parts + (node.module.split(".") if node.module else []))
+
+
+def _join(module: str, name: str) -> str:
+    return f"{module}.{name}".lstrip(".")
+
+
+def _bindings(tree, rel: str, package: str, modules: set[str]):
+    """What the imports of file `rel` bind, anywhere in the file: local
+    name -> set of ("module", m) for a module of the package, or
+    ("name", m, x) for the name x of module m (modules relative to the
+    package)."""
+    bound = collections.defaultdict(set)
+    for n in ast.walk(tree):
+        if isinstance(n, ast.Import):
+            for a in n.names:
+                if a.asname is None:
+                    if a.name.split(".")[0] == package:
+                        bound[package].add(("module", ""))
+                elif a.name == package or a.name.startswith(package + "."):
+                    bound[a.asname].add(("module", a.name[len(package) + 1:]))
+        elif isinstance(n, ast.ImportFrom):
+            m = _import_source(n, rel, package)
+            if m is None:
+                continue
+            for a in n.names:
+                sub = _join(m, a.name)
+                bound[a.asname or a.name].add(
+                    ("module", sub) if sub in modules else ("name", m, a.name))
+    return bound
+
+
 def unread_top_level(sources: dict[str, str], package: str,
                      roots=()) -> list[str]:
     """Top-level defs, classes and assigned names of the modules under
     `package/` in `sources` (relative path -> text) that nothing reads
     but their own statement or that of another such name, as
     `module.name (line N)` with the module relative to the package.
-    Names in `roots` count as read.  Reads match by name: a load of a
-    bare name or an attribute, or the original name of an aliased
-    `from ... import ... as`.  Dunder names are not counted."""
+    Names in `roots` count as read.  Dunder names are not counted.
+
+    Reads resolve by module: a load of `x` reads `m.x` only when the
+    loading file is module m and loads the bare name `x`, or loads a name
+    that the file's imports bind to `x` of m (`from m import x [as y]`,
+    relative imports resolved at any depth), or loads the attribute `x`
+    of a name bound to module m (`R.x` with `R` bound to m by `import
+    ... as R` or `from ... import m`, `pkg.m.x` after `import pkg.m`).
+    A same-named `x` of another module, or an attribute `x` of anything
+    else, reads nothing."""
+    modules = {_module_of(rel, package) for rel in sources} - {None}
     defs = {}
-    # name -> the key sets bound by the top-level statements reading it
+    # key -> the key sets bound by the top-level statements reading it
     reads = collections.defaultdict(list)
     for rel, text in sources.items():
         module = _module_of(rel, package)
-        for top in ast.parse(text).body:
+        tree = ast.parse(text)
+        bound = _bindings(tree, rel, package, modules)
+
+        def module_of(e):
+            """The package modules expression `e` may name."""
+            if isinstance(e, ast.Name):
+                return {b[1] for b in bound[e.id] if b[0] == "module"}
+            if isinstance(e, ast.Attribute):
+                return {_join(m, e.attr) for m in module_of(e.value)} \
+                    & modules
+            return set()
+
+        for top in tree.body:
             owner = set()
             if module is not None:
                 for name in _bound_names(top):
-                    key = f"{module}.{name}".lstrip(".")
+                    key = _join(module, name)
                     defs.setdefault(key, (name, module, top.lineno))
                     owner.add(key)
             for n in ast.walk(top):
-                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load):
-                    reads[n.id].append(owner)
-                elif isinstance(n, ast.Attribute) and isinstance(n.ctx,
-                                                                 ast.Load):
-                    reads[n.attr].append(owner)
-                elif isinstance(n, ast.ImportFrom):
-                    for a in n.names:
-                        if a.asname not in (None, a.name):
-                            reads[a.name].append(owner)
+                if not isinstance(getattr(n, "ctx", None), ast.Load):
+                    continue
+                keys = set()
+                if isinstance(n, ast.Name):
+                    if module is not None:
+                        keys.add(_join(module, n.id))
+                    keys |= {_join(b[1], b[2]) for b in bound[n.id]
+                             if b[0] == "name"}
+                elif isinstance(n, ast.Attribute):
+                    keys |= {_join(m, n.attr) for m in module_of(n.value)}
+                for key in keys:
+                    reads[key].append(owner)
     # a read counts when its statement binds no package name or binds
     # one already read: grow the read set from the roots to a fixed
     # point, so names that only read each other stay unread
     read = set(roots)
     while True:
-        now = read | {key for key, (name, _, _) in defs.items()
+        now = read | {key for key in defs
                       if any(key not in owner and (not owner or owner & read)
-                             for owner in reads[name])}
+                             for owner in reads[key])}
         if now == read:
             return [f"{key} (line {line})" for key, (_, _, line)
                     in sorted(defs.items(), key=lambda kv: kv[1][1:])
@@ -489,6 +567,27 @@ def test_unread_checker_flags_orphans_and_keeps_read():
         == ["a.gone"]
     sources["tool.py"] += "pkg.a.kept()\n"
     assert stale_exemptions(sources, "pkg", {"a.kept"}) == ["a.kept"]
+
+
+def test_unread_checker_resolves_reads_by_module():
+    sources = {
+        "pkg/a.py": ("def main():\n    return 1\n"
+                     "def run():\n    return 2\n"
+                     "K = 3\nQ = 4\n"),
+        "pkg/deep/er/c.py": ("from ...a import run as go\n"
+                             "def f():\n    return go()\n"),
+        "pkg/r.py": "def q_x():\n    return 0\ndef q_y():\n    return 0\n",
+        "tool.py": ("def main():\n    return 0\n"
+                    "from pkg.deep.er import c\nfrom pkg import r as R\n"
+                    "c.f()\nR.q_x()\nobj.q_y()\nprint(K)\n"
+                    "if __name__ == '__main__':\n    main()\n"),
+    }
+    # run is read through an aliased import three levels up, c.f through
+    # the module c, q_x through the module alias R.  tool.py's main() calls
+    # its own main, K is its own unbound name and obj is no module, so
+    # a.main, a.K and r.q_y stay unread; nothing reads a.Q
+    assert unread_top_level(sources, "pkg") == [
+        "a.main (line 1)", "a.K (line 5)", "a.Q (line 6)", "r.q_y (line 3)"]
 
 
 def test_package_has_no_unread_top_level_names():

@@ -1,7 +1,8 @@
 """WARC ingest: record grammar, HTTP extraction, chunked bodies, file
 splitting, and the Spark records->pages stage feeding the extractor."""
 
-from closure_html_spark.warc import parse_warc_record, split_warc_file
+from closure_html_spark.warc import parse_warc_record
+from references import split_warc_file
 
 
 def _mk(url=b"https://x.ex/p", wtype=b"response",

@@ -1,13 +1,14 @@
-"""Build-time SGML DTD compiler.
+"""Build-time SGML DTD compiler: the source of the package's DTD tables.
 
 Parses the HTML-4.0 Frameset DTD chain (the same resources closure-html
-compiles at load time, see /root/reference/src/parse/html-parser.lisp:34-56)
-into a plain JSON artifact that ships with the Spark job.  At runtime the
-tables are loaded once per executor and used as in-memory dicts -- the
-Spark-idiomatic equivalent of a broadcast variable for small static data.
+compiles at load time, src/parse/html-parser.lisp:34-56) into the plain
+JSON artifact closure_html_spark/dtd/dtd.json, which ships with the Spark
+job.  At runtime the tables are loaded once per executor and used as
+in-memory dicts -- the Spark-idiomatic equivalent of a broadcast variable
+for small static data.
 
 Semantics reimplemented from scratch after the reference:
-  - lexer:           /root/reference/src/parse/sgml-dtd.lisp:85-156
+  - lexer:           src/parse/sgml-dtd.lisp:85-156
   - grammar:         sgml-dtd.lisp:177-252
   - element/attlist: sgml-dtd.lisp:316-357
   - entity handling: sgml-dtd.lisp:75-83, 359-373
@@ -15,7 +16,14 @@ Semantics reimplemented from scratch after the reference:
   - surclusion:      sgml-dtd.lisp:531-541
   - eqv classes:     sgml-dtd.lisp:606-625
 
-This module is pure build tooling: run once, output committed as dtd.json.
+Build tooling, not part of the package: run once, output committed.
+
+    python tools/dtd_compiler.py RESOURCE_DIR OUT.json
+
+RESOURCE_DIR holds the DTD files under the names CATALOG gives them
+(closure-html's resources/dtd).  tests/test_dtd_compiler.py re-derives
+every committed artifact's tables and drives this command on a small
+chain.
 """
 
 from __future__ import annotations
@@ -630,11 +638,10 @@ def compile_dtd(resource_dir: str):
 
 
 def main():
-    resource_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/reference/resources/dtd"
-    out = sys.argv[2] if len(sys.argv) > 2 else str(
-        Path(__file__).parent / "dtd.json")
-    c = compile_dtd(resource_dir)
-    data = c.to_json()
+    if len(sys.argv) != 3:
+        sys.exit("usage: dtd_compiler.py RESOURCE_DIR OUT.json")
+    resource_dir, out = sys.argv[1:]
+    data = compile_dtd(resource_dir).to_json()
     with open(out, "w") as f:
         json.dump(data, f, separators=(",", ":"), sort_keys=True)
     print(f"elements={len(data['elements'])} entities={len(data['entities'])} "
